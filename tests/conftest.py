@@ -1,7 +1,12 @@
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import SparkSession
+
+from tree_sitter_codeviews_spark import driver_arm
+from tree_sitter_codeviews_spark.session import driver_memory
 
 
 @pytest.fixture(scope="session")
@@ -14,12 +19,27 @@ def spark() -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def distributed_arm(monkeypatch):
+    """Context manager that forces every size-adaptive operator called
+    inside it onto its distributed loop (the driver-arm probe finds every
+    input too large): ``with distributed_arm(): ...``."""
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(driver_arm, "collect_if_small", lambda df, cap: None)
+            yield
+
+    return forced
 
 
 SF_TINY = "/root/testdata/sf0.001"

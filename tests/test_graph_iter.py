@@ -221,7 +221,9 @@ def test_iterative_ops_handle_empty_inputs(spark):
     assert graph_iter.reaching_definitions(full_edges, d).count() == 0
 
 
-def test_components_driver_and_distributed_paths_agree(spark, sf_tiny):
+def test_components_driver_and_distributed_paths_agree(
+    spark, sf_tiny, distributed_arm
+):
     """The size-adaptive small-graph arm (driver union-find) must return
     exactly the distributed fixpoint's result."""
     from tree_sitter_codeviews_spark.queries import _broken_edges
@@ -229,19 +231,23 @@ def test_components_driver_and_distributed_paths_agree(spark, sf_tiny):
     e = _broken_edges(spark, sf_tiny)
     fast = {(r.node, r.component)
             for r in graph_iter.connected_components(e).collect()}
-    dist = {(r.node, r.component)
-            for r in graph_iter.connected_components(e, small_threshold=0).collect()}
+    with distributed_arm():
+        dist = {(r.node, r.component)
+                for r in graph_iter.connected_components(e).collect()}
     assert fast == dist and len(fast) > 0
 
 
-def test_closure_driver_and_distributed_paths_agree(spark, sf_tiny):
+def test_closure_driver_and_distributed_paths_agree(
+    spark, sf_tiny, distributed_arm
+):
     from tree_sitter_codeviews_spark.queries import _broken_edges
 
     e = _broken_edges(spark, sf_tiny)
     fast = {(r.src, r.dst)
             for r in graph_iter.transitive_closure(e).collect()}
-    dist = {(r.src, r.dst)
-            for r in graph_iter.transitive_closure(e, small_threshold=0).collect()}
+    with distributed_arm():
+        dist = {(r.src, r.dst)
+                for r in graph_iter.transitive_closure(e).collect()}
     assert fast == dist and len(fast) > 0
 
 

@@ -19,26 +19,27 @@ PAIRS = [(1, 2), (2, 4), (2, 4), (1, 3), (3, 5), (5, 4), (3, 1),
          (9, 9), (4, 6), (6, 7), (20, 21)]
 
 
-def test_reach_arms_equal(spark):
+def test_reach_arms_equal(spark, distributed_arm):
     e = _edges(spark, PAIRS)
     seeds = spark.createDataFrame([(1,), (9,)], "node long")
     driver = {(r.node, r.hops)
               for r in graph_iter.reach(e, seeds).collect()}
-    dist = {(r.node, r.hops)
-            for r in graph_iter.reach(e, seeds, small_threshold=0).collect()}
+    with distributed_arm():
+        dist = {(r.node, r.hops)
+                for r in graph_iter.reach(e, seeds).collect()}
     assert driver == dist
     assert driver  # non-vacuous
 
 
-def test_reach_arms_equal_under_max_iter_cut(spark):
+def test_reach_arms_equal_under_max_iter_cut(spark, distributed_arm):
     # chain 0->1->...->7; max_iter=3 truncates both arms identically
     e = _edges(spark, [(i, i + 1) for i in range(7)])
     seeds = spark.createDataFrame([(0,)], "node long")
     driver = {(r.node, r.hops)
               for r in graph_iter.reach(e, seeds, max_iter=3).collect()}
-    dist = {(r.node, r.hops)
-            for r in graph_iter.reach(e, seeds, max_iter=3,
-                                      small_threshold=0).collect()}
+    with distributed_arm():
+        dist = {(r.node, r.hops)
+                for r in graph_iter.reach(e, seeds, max_iter=3).collect()}
     assert driver == dist == {(0, 0), (1, 1), (2, 2), (3, 3)}
 
 
@@ -52,38 +53,42 @@ def _rda_fixture(spark):
     return e, defs
 
 
-def test_rda_arms_equal(spark):
+def test_rda_arms_equal(spark, distributed_arm):
     e, defs = _rda_fixture(spark)
     driver = {(r.node, r.var, r.def_node)
               for r in graph_iter.reaching_definitions(e, defs).collect()}
-    dist = {(r.node, r.var, r.def_node)
-            for r in graph_iter.reaching_definitions(
-                e, defs, small_threshold=0).collect()}
+    with distributed_arm():
+        dist = {(r.node, r.var, r.def_node)
+                for r in graph_iter.reaching_definitions(e, defs).collect()}
     assert driver == dist
     assert driver  # non-vacuous
     # the kill actually bites: def 1's var-0 fact must not pass node 4
     assert (6, 0, 1) not in driver and (6, 0, 4) in driver
 
 
-def test_rda_arms_equal_under_max_iter_cut(spark):
+def test_rda_arms_equal_under_max_iter_cut(spark, distributed_arm):
     # chain 0->1->...->9, one def at 0: max_iter=3 bounds fact depth at 4
     e = _edges(spark, [(i, i + 1) for i in range(9)])
     defs = spark.createDataFrame([(0, 0)], "node long, var long")
     driver = {(r.node, r.var, r.def_node)
               for r in graph_iter.reaching_definitions(
                   e, defs, max_iter=3).collect()}
-    dist = {(r.node, r.var, r.def_node)
-            for r in graph_iter.reaching_definitions(
-                e, defs, max_iter=3, small_threshold=0).collect()}
+    with distributed_arm():
+        dist = {(r.node, r.var, r.def_node)
+                for r in graph_iter.reaching_definitions(
+                    e, defs, max_iter=3).collect()}
     assert driver == dist == {(i, 0, 0) for i in range(1, 5)}
 
 
-def test_rda_fact_cap_falls_back_to_distributed(spark):
+def test_rda_fact_cap_falls_back_to_distributed(
+    spark, distributed_arm, monkeypatch
+):
     e, defs = _rda_fixture(spark)
-    capped = {(r.node, r.var, r.def_node)
-              for r in graph_iter.reaching_definitions(
-                  e, defs, driver_fact_cap=2).collect()}
-    dist = {(r.node, r.var, r.def_node)
-            for r in graph_iter.reaching_definitions(
-                e, defs, small_threshold=0).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(graph_iter, "DRIVER_FACT_CAP", 2)
+        capped = {(r.node, r.var, r.def_node)
+                  for r in graph_iter.reaching_definitions(e, defs).collect()}
+    with distributed_arm():
+        dist = {(r.node, r.var, r.def_node)
+                for r in graph_iter.reaching_definitions(e, defs).collect()}
     assert capped == dist

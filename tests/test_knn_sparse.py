@@ -96,7 +96,7 @@ def test_pq_degrades_gracefully_on_tiny_corpus(spark, sf_tiny):
     assert {r.query_id for r in out} == {0, 5}
 
 
-def test_knn_ring_driver_arm_equals_distributed(spark):
+def test_knn_ring_driver_arm_equals_distributed(spark, distributed_arm):
     """r6 size-adaptive arm: driver blocked-numpy kNN must be bit-identical
     (incl. dist_sq doubles and boundary ties) to the distributed ring loop."""
     from tree_sitter_codeviews_spark import layers
@@ -119,8 +119,8 @@ def test_knn_ring_driver_arm_equals_distributed(spark):
     )
     driver = {(r.doc_id, r.neighbor_id, r.rank, r.dist_sq)
               for r in knn.knn_ring(pts, spark, k=3, res=5).collect()}
-    dist = {(r.doc_id, r.neighbor_id, r.rank, r.dist_sq)
-            for r in knn.knn_ring(pts, spark, k=3, res=5,
-                                  small_threshold=0).collect()}
+    with distributed_arm():
+        dist = {(r.doc_id, r.neighbor_id, r.rank, r.dist_sq)
+                for r in knn.knn_ring(pts, spark, k=3, res=5).collect()}
     assert driver == dist
     assert driver

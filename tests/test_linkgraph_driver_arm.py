@@ -1,7 +1,7 @@
 """The size-adaptive driver arm of every iterative linkgraph operator must
 be BIT-EQUAL to the distributed loop (the connected_components discipline:
-small_threshold=0 forces the distributed arm; the default takes the driver
-arm on these dim-sized fixtures)."""
+the ``distributed_arm`` fixture forces the distributed arm; otherwise the
+driver arm runs on these dim-sized fixtures)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,63 +30,66 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_pagerank_arms_equal(spark, edges, nodes):
+def test_pagerank_arms_equal(spark, edges, nodes, distributed_arm):
     fast = linkgraph.pagerank_integer(edges, nodes, iterations=7)
-    slow = linkgraph.pagerank_integer(
-        edges, nodes, iterations=7, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.pagerank_integer(edges, nodes, iterations=7)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_hits_arms_equal(spark, edges, nodes):
+def test_hits_arms_equal(spark, edges, nodes, distributed_arm):
     fast = linkgraph.hits_integer(edges, nodes, iterations=4)
-    slow = linkgraph.hits_integer(
-        edges, nodes, iterations=4, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.hits_integer(edges, nodes, iterations=4)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_trustrank_arms_equal(spark, edges, nodes):
+def test_trustrank_arms_equal(spark, edges, nodes, distributed_arm):
     seeds = nodes.filter(F.col("host").isin("a", "e"))
     fast = linkgraph.trustrank_integer(edges, nodes, seeds, iterations=6)
-    slow = linkgraph.trustrank_integer(
-        edges, nodes, seeds, iterations=6, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.trustrank_integer(edges, nodes, seeds, iterations=6)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_kcore_arms_equal(spark, edges):
+def test_kcore_arms_equal(spark, edges, distributed_arm):
     fast = linkgraph.kcore(edges, k=2, rounds=3)
-    slow = linkgraph.kcore(edges, k=2, rounds=3, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.kcore(edges, k=2, rounds=3)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_bfs_depth_arms_equal(spark, edges, nodes):
+def test_bfs_depth_arms_equal(spark, edges, nodes, distributed_arm):
     seeds = nodes.filter(F.col("host") == "e")
     fast = linkgraph.bfs_depth(edges, seeds, rounds=3)
-    slow = linkgraph.bfs_depth(edges, seeds, rounds=3, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.bfs_depth(edges, seeds, rounds=3)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_cheapest_paths_arms_equal(spark, edges, nodes):
+def test_cheapest_paths_arms_equal(spark, edges, nodes, distributed_arm):
     seeds = nodes.filter(F.col("host") == "e")
     fast = linkgraph.cheapest_paths(edges, seeds, rounds=3)
-    slow = linkgraph.cheapest_paths(
-        edges, seeds, rounds=3, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.cheapest_paths(edges, seeds, rounds=3)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_bowtie_arms_equal(spark, edges, nodes):
+def test_bowtie_arms_equal(spark, edges, nodes, distributed_arm):
     fast = linkgraph.bowtie(edges, nodes, "a", rounds=4)
-    slow = linkgraph.bowtie(edges, nodes, "a", rounds=4, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.bowtie(edges, nodes, "a", rounds=4)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_label_propagation_arms_equal(spark, edges, nodes):
+def test_label_propagation_arms_equal(spark, edges, nodes, distributed_arm):
     fast = linkgraph.label_propagation(edges, nodes, iterations=3)
-    slow = linkgraph.label_propagation(
-        edges, nodes, iterations=3, small_threshold=0)
+    with distributed_arm():
+        slow = linkgraph.label_propagation(edges, nodes, iterations=3)
     assert _sorted(fast) == _sorted(slow)
 
 
-def test_bpe_train_arms_equal(spark):
+def test_bpe_train_arms_equal(spark, distributed_arm):
     from tree_sitter_codeviews_spark.operators import bpe
 
     docs = spark.createDataFrame(
@@ -94,5 +97,6 @@ def test_bpe_train_arms_equal(spark):
         "doc_id long, text string",
     )
     fast = bpe.bpe_train(docs, merges=6)
-    slow = bpe.bpe_train(docs, merges=6, small_threshold=0)
+    with distributed_arm():
+        slow = bpe.bpe_train(docs, merges=6)
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))

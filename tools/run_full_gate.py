@@ -1,16 +1,19 @@
 #!/usr/bin/env python
-"""Emit a repo-side artifact of the FULL registry gate results.
+"""Gate registry queries against their DuckDB oracles.
 
 The external driver's per-round CORRECTNESS_r{N}.json records only the
 first 50 registry entries, so with a 97-query registry its artifact is a
-rotating sample. This tool runs EVERY ``queries()`` entry against its
-DuckDB oracle (same comparison discipline as the driver: row count, schema
-width, order-insensitive values, plus the hardened int-vs-float
-representation check) and writes ``GATE_FULL_r{N}.json`` in the driver's
-row format — so any round's driver snapshot can be cross-checked against
-the same-round full sweep.
+rotating sample. This tool runs every ``queries()`` entry, or only the
+named ones, against its DuckDB oracle (same comparison discipline as the
+driver: row count, schema width, order-insensitive values, plus the
+hardened int-vs-float representation check). Queries without an oracle
+are run twice and must return the same row count. With ``--round`` (or
+``--out``) it writes ``GATE_FULL_r{N}.json`` in the driver's row format —
+so any round's driver snapshot can be cross-checked against the
+same-round full sweep. Exits nonzero if any gated query fails.
 
     python tools/run_full_gate.py --round 4 [--sf-dir /root/testdata/sf0.01]
+    python tools/run_full_gate.py q1 q2 ... [--sf-dir /root/testdata/sf0.01]
 """
 
 from __future__ import annotations
@@ -26,7 +29,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("names", nargs="*",
+                    help="queries to gate (default: the whole registry)")
+    ap.add_argument("--round", type=int, default=None,
+                    help="write GATE_FULL_r{N}.json for this round")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01",
                     help="gate scale (the driver gates at sf0.01)")
     ap.add_argument("--out", default=None)
@@ -42,7 +48,8 @@ def main() -> None:
     qmap, omap = entry.queries(), entry.oracle_sql()
 
     results: dict[str, dict] = {}
-    for name, fn in qmap.items():
+    for name in args.names or qmap:
+        fn = qmap[name]
         rec: dict = {"rows_match": None, "schema_match": None,
                      "hash_match": None, "spark_rows": None,
                      "oracle_rows": None, "err": None}
@@ -73,18 +80,21 @@ def main() -> None:
                   else "FAIL")
         print(f"{name}: {status}", flush=True)
 
-    out = args.out or os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        f"GATE_FULL_r{args.round:02d}.json",
-    )
-    with open(out, "w") as fh:
-        json.dump(results, fh, indent=1)
+    out = args.out
+    if out is None and args.round is not None:
+        out = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            f"GATE_FULL_r{args.round:02d}.json",
+        )
+    if out is not None:
+        with open(out, "w") as fh:
+            json.dump(results, fh, indent=1)
     n_pass = sum(1 for r in results.values() if r["hash_match"])
     n_ro = sum(1 for r in results.values()
                if r["hash_match"] is None and r["rows_match"])
     n_fail = len(results) - n_pass - n_ro
-    print(f"\n{out}: {n_pass} pass / {n_ro} rows-only / {n_fail} fail "
-          f"of {len(results)}")
+    print(f"\n{out or 'gate'}: {n_pass} pass / {n_ro} rows-only / "
+          f"{n_fail} fail of {len(results)}")
     spark.stop()
     sys.exit(1 if n_fail else 0)
 

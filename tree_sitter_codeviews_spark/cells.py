@@ -27,8 +27,6 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-MAX_RES = 15  # 2^15 x 2^15 ≈ 1.1 km x 0.6 km cells at the equator — plenty
-
 
 # ---------------------------------------------------------------------------
 # numpy reference implementation
@@ -85,18 +83,6 @@ def cell_center_lonlat(cell: np.ndarray, res: int):
     lon = -180.0 + 360.0 * (x + 0.5) / n
     lat = -90.0 + 180.0 * (y + 0.5) / n
     return lon, lat
-
-
-def cell_bounds(cell: int, res: int):
-    """(lon_min, lat_min, lon_max, lat_max) of one cell."""
-    x, y = morton_decode_np(np.asarray([cell], dtype=np.int64), res)
-    n = 1 << res
-    return (
-        -180.0 + 360.0 * x[0] / n,
-        -90.0 + 180.0 * y[0] / n,
-        -180.0 + 360.0 * (x[0] + 1) / n,
-        -90.0 + 180.0 * (y[0] + 1) / n,
-    )
 
 
 def ring_cells_np(x: np.ndarray, y: np.ndarray, res: int, t: int) -> np.ndarray:

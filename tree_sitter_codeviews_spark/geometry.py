@@ -46,16 +46,6 @@ def pip_mask(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     return inside
 
 
-def pip_crossing_sql(px: str, py: str, edges_rel: str) -> str:
-    """SQL fragment: correlated crossing-count condition against an edge
-    relation ``edges_rel(polygon_id, x1, y1, x2, y2)``. Used by oracles."""
-    return (
-        f"((({edges_rel}.y1 > {py}) <> ({edges_rel}.y2 > {py})) AND "
-        f"({px} < ({edges_rel}.x2 - {edges_rel}.x1) * ({py} - {edges_rel}.y1)"
-        f" / ({edges_rel}.y2 - {edges_rel}.y1) + {edges_rel}.x1))"
-    )
-
-
 def ring_bbox(ring) -> tuple[float, float, float, float]:
     r = np.asarray(ring, dtype=np.float64)
     return float(r[:, 0].min()), float(r[:, 1].min()), float(r[:, 0].max()), float(r[:, 1].max())

@@ -64,38 +64,13 @@ GAZ_GX_SQL = "(({i}) * 37 + 11) % 1024"
 GAZ_GY_SQL = "(({i}) * 73 + 29) % 1024"
 
 
-def lon_from_gx_np(gx: np.ndarray) -> np.ndarray:
-    """Cell-center longitude; exact (360/1024 = 45/128 is a binary float)."""
-    return -180.0 + 360.0 * (np.asarray(gx, dtype=np.float64) + 0.5) / GRID_N
-
-
-def lat_from_gy_np(gy: np.ndarray) -> np.ndarray:
-    return -90.0 + 180.0 * (np.asarray(gy, dtype=np.float64) + 0.5) / GRID_N
-
-
 LON_SQL = "(-180.0 + 360.0 * (({gx}) + 0.5) / 1024)"
 LAT_SQL = "(-90.0 + 180.0 * (({gy}) + 0.5) / 1024)"
 
 
 # gazetteer mention embedding: doc gets 1 + doc_id%3 mentions;
 # mention j references gazetteer entry (doc_id*7 + j*131) % N_GAZ
-def mentions_per_doc_np(doc_id: np.ndarray) -> np.ndarray:
-    return 1 + (np.asarray(doc_id, dtype=np.int64) % 3)
-
-
-def mention_gaz_idx_np(doc_id: np.ndarray, j: np.ndarray) -> np.ndarray:
-    return (np.asarray(doc_id, dtype=np.int64) * 7 + np.asarray(j, dtype=np.int64) * 131) % N_GAZ
-
-
-MENTIONS_SQL = "(1 + doc_id % 3)"
 MENTION_IDX_SQL = "((doc_id * 7 + ({j}) * 131) % 1000)"
-
-
-def gaz_surface(idx: int) -> str:
-    return f"GEO_{idx:05d}"
-
-
-GAZ_SURFACE_SQL = "printf('GEO_%05d', {i})"
 
 
 # ---------------------------------------------------------------------------
@@ -221,16 +196,6 @@ LINE_X0_SQL = "(((({j}) * 3 + 1) * 37 + 11) % 1024)"
 LINE_Y0_SQL = "(((({j}) * 3 + 1) * 73 + 29) % 1024)"
 LINE_X1_SQL = "((((({j}) * 17 + 3) % 1000) * 37 + 11) % 1024)"
 LINE_Y1_SQL = "((((({j}) * 17 + 3) % 1000) * 73 + 29) % 1024)"
-
-
-def line_endpoints_np(j: np.ndarray):
-    """Numpy twin of the LINE_*_SQL formulas."""
-    j = np.asarray(j, dtype=np.int64)
-    i1 = j * 3 + 1
-    i2 = (j * 17 + 3) % N_GAZ
-    x0, y0 = gaz_grid_xy_np(i1)
-    x1, y1 = gaz_grid_xy_np(i2)
-    return x0, y0, x1, y1
 
 
 # ---------------------------------------------------------------------------

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from .. import driver_arm
 from ..localdf import arrow_local_df
 
 from .dedup import tokens_df
@@ -99,9 +100,7 @@ def _merge_rounds_local(seqs: list, ns: list, merges: int) -> list:
     return rules
 
 
-def bpe_train(
-    docs: DataFrame, merges: int = 8, small_threshold: int = 500_000
-) -> DataFrame:
+def bpe_train(docs: DataFrame, merges: int = 8) -> DataFrame:
     """Learn the top-``merges`` BPE merge rules; returns (merge_rank,
     sym_a, sym_b, pair_count).
 
@@ -111,13 +110,12 @@ def bpe_train(
 
     The corpus-wide word-count pass stays distributed; the merge rounds
     run over the vocabulary dim, which is orders smaller than the corpus
-    — when it fits the driver collect bound (the linkgraph /
-    connected_components size-adaptive discipline) the ``merges`` rounds
-    run driver-side in pure Python (bit-equal: integer counts, identical
+    — when it fits ``driver_arm.ROW_CAP`` the ``merges`` rounds run
+    driver-side in pure Python (bit-equal: integer counts, identical
     tie-break, and Python ``str.replace`` is the same left-to-right
     non-overlapping merge as Spark ``replace`` on the bracket encoding —
     pinned by tests), saving 2 vocabulary-dim jobs + a localCheckpoint
-    per round. ``small_threshold=0`` forces the distributed rounds.
+    per round.
     """
     spark = docs.sparkSession
     counts = tokens_df(docs, by_doc=False).groupBy("tok").agg(
@@ -125,8 +123,8 @@ def bpe_train(
     vocab = counts.select(_encode(F.col("tok")).alias("seq"), "n")
     # the corpus pass is done; everything below runs on the vocab dim
     vocab = vocab.localCheckpoint()
-    if small_threshold and vocab.count() <= small_threshold:
-        pdf = vocab.toPandas()
+    pdf = driver_arm.collect_if_small(vocab, driver_arm.ROW_CAP)
+    if pdf is not None:
         rules = _merge_rounds_local(
             list(pdf["seq"]), [int(x) for x in pdf["n"]], merges)
     else:

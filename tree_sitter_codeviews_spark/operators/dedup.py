@@ -51,8 +51,11 @@ def tokens_df(docs: DataFrame, by_doc: bool = True) -> DataFrame:
     )
 
 
-def shingles_df(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (doc_id, shingle).
+def shingle_multiset_df(docs: DataFrame, n: int = 3) -> DataFrame:
+    """Positional word n-gram shingle MULTISET per doc: (doc_id, shingle),
+    one row per occurrence. Consumers that count occurrences (dup-ngram
+    fraction, the count-min calibration) use this; set consumers use
+    ``shingles_df``.
 
     Built array-side with NON-lambda native ops — ``arrays_zip`` of ``n``
     staggered ``slice``s of the token array, explode, ``concat_ws`` — so
@@ -80,29 +83,12 @@ def shingles_df(docs: DataFrame, n: int = 3) -> DataFrame:
                 " ", *[F.col("z").getField(f"t{i}") for i in range(n)]
             ).alias("shingle"),
         )
-        .distinct()
     )
 
 
-def shingle_multiset_df(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Positional shingle MULTISET per doc (one row per occurrence, no
-    distinct): the array-side build of ``shingles_df`` minus the final
-    dedup — consumers that count occurrences (dup-ngram fraction, the
-    count-min calibration) use this."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    w = F.split(F.col("text"), " ")
-    ln = F.greatest(F.size(w) - F.lit(n - 1), F.lit(0))
-    z = F.arrays_zip(*[F.slice(w, i + 1, ln).alias(f"t{i}") for i in range(n)])
-    return (
-        docs.repartition(n_part, "doc_id")
-        .select("doc_id", F.explode(z).alias("z"))
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ", *[F.col("z").getField(f"t{i}") for i in range(n)]
-            ).alias("shingle"),
-        )
-    )
+def shingles_df(docs: DataFrame, n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per doc: (doc_id, shingle)."""
+    return shingle_multiset_df(docs, n).distinct()
 
 
 def exact_dup_groups(docs: DataFrame) -> DataFrame:

@@ -29,27 +29,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import driver_arm
+from ..localdf import arrow_local_df
+
+# Closure's driver arm is a per-node BFS whose output can square the input,
+# so its edge cap is a fifth of ``driver_arm.ROW_CAP``.
+CLOSURE_ROW_CAP = 100_000
+# Escape from the RDA and closure driver arms back to the distributed loop
+# when their fact / pair set outgrows the driver (deep chains square).
+DRIVER_FACT_CAP = 5_000_000
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    small_threshold: int = 500_000,
 ) -> DataFrame:
     """(node, component) for the undirected graph of ``edges``;
     component = min node id in the component.
 
-    SIZE-ADAPTIVE (the broadcast-join-threshold discipline): the undirected
-    edge table is materialized once and counted; below ``small_threshold``
-    edges the components are solved by driver-side union-find on the
-    Arrow-collected pairs (a dedup pair graph is typically orders of
-    magnitude smaller than its corpus — at bench scale the distributed loop
-    spent ~3.4 s of per-round job overhead on a 244-edge graph the driver
-    solves in microseconds). The default bounds the driver transfer to
-    ~2 × 500k × 8 B = 8 MB of Arrow int64 columns (NOT Row objects — the
-    Row path was a plausible driver OOM near the old 2M default), well
-    inside any production driver heap. Above it, the distributed loop runs:
+    SIZE-ADAPTIVE (``driver_arm``): the undirected edge table is
+    materialized once and probed; up to ``driver_arm.ROW_CAP`` edges the
+    components are solved by driver-side union-find on the collected pairs
+    (a dedup pair graph is typically orders of magnitude smaller than its
+    corpus — at bench scale the distributed loop spent ~3.4 s of per-round
+    job overhead on a 244-edge graph the driver solves in microseconds).
+    Above it, the distributed loop runs:
 
     Min-label propagation + pointer jumping:
       1. label(v) <- min(label(v), min over neighbors' labels)   (1 join)
@@ -60,8 +66,7 @@ def connected_components(
     label chains so convergence is O(log diameter) rounds, not O(diameter).
     Both paths return identical results (pinned by test); nodes are derived
     from the edge set (isolated nodes: union them in afterwards, or seed
-    with a node table before calling). Pass ``small_threshold=0`` to force
-    the distributed path.
+    with a node table before calling).
     """
     # Mirror each edge with ONE pass over ``edges`` (explode of the two
     # orientations) instead of a self-union: Spark has no common-subplan
@@ -82,8 +87,9 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    if small_threshold and und.count() <= small_threshold:
-        return _components_driver(und)
+    pdf = driver_arm.collect_if_small(und, driver_arm.ROW_CAP)
+    if pdf is not None:
+        return _components_driver(und, pdf)
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()
@@ -125,14 +131,10 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def _components_driver(und: DataFrame) -> DataFrame:
-    """Union-find on an Arrow-collected (a, b) edge table — the small-graph
-    arm of ``connected_components``. Representative = min node id, identical
-    to the distributed loop's fixpoint. Collection goes through toPandas
-    (Arrow batches -> two flat columns), not collect() (per-edge Row
-    objects), so driver memory is bytes-of-ids, not ~100× that in Python
-    object overhead."""
-    pdf = und.toPandas()
+def _components_driver(und: DataFrame, pdf) -> DataFrame:
+    """Union-find on the collected (a, b) edge table ``pdf`` — the
+    small-graph arm of ``connected_components``. Representative = min node
+    id, identical to the distributed loop's fixpoint."""
     parent: dict = {}
 
     def find(x):
@@ -154,8 +156,6 @@ def _components_driver(und: DataFrame) -> DataFrame:
                 ra, rb = rb, ra
             parent[rb] = ra
     rows = [(n, find(n)) for n in parent]
-    from ..localdf import arrow_local_df
-
     t = und.schema["a"].dataType.simpleString()
     return arrow_local_df(und.sparkSession, rows, f"node {t}, component {t}")
 
@@ -167,27 +167,23 @@ def reach(
     dst: str = "dst",
     seed_col: str = "node",
     max_iter: int = 50,
-    small_threshold: int = 500_000,
 ) -> DataFrame:
     """(node, hops): min directed-BFS distance from any seed, seeds at 0.
 
-    SIZE-ADAPTIVE like ``connected_components``: the edge table is
-    materialized once and counted; below ``small_threshold`` edges the BFS
-    runs driver-side over the Arrow-collected adjacency (each frontier
-    round of the distributed loop costs 3-4 jobs of fixed overhead — on a
-    dim-sized graph the rounds are pure latency). Above it, frontier BFS:
+    SIZE-ADAPTIVE like ``connected_components``: up to
+    ``driver_arm.ROW_CAP`` edges the BFS runs driver-side over the
+    collected adjacency (each frontier round of the distributed loop costs
+    3-4 jobs of fixed overhead — on a dim-sized graph the rounds are pure
+    latency). Above it, frontier BFS:
     each round joins only the *frontier* (nodes first reached last round)
     against the edge table and anti-joins the visited set — work per round
     is proportional to the frontier, not the graph. Terminates when the
     frontier empties (or max_iter). Both arms return identical (node, hops)
-    sets (pinned by test); ``small_threshold=0`` forces the distributed
-    loop."""
+    sets (pinned by test)."""
     e = edges.select(F.col(src).alias("node"), F.col(dst).alias("nxt"))
-    if small_threshold:
-        # probe via limit+toPandas: one job, no eager checkpoint/count pair
-        pdf = e.limit(small_threshold + 1).toPandas()
-        if len(pdf) <= small_threshold:
-            return _reach_driver(e, pdf, seeds, seed_col, max_iter)
+    pdf = driver_arm.collect_if_small(e, driver_arm.ROW_CAP)
+    if pdf is not None:
+        return _reach_driver(e, pdf, seeds, seed_col, max_iter)
     visited = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
@@ -236,8 +232,6 @@ def _reach_driver(
             if m not in hops:
                 hops[m] = h
                 work.append(m)
-    from ..localdf import arrow_local_df
-
     t = e.schema["node"].dataType.simpleString()
     return arrow_local_df(
         e.sparkSession, [(n, h) for n, h in hops.items()],
@@ -253,8 +247,6 @@ def reaching_definitions(
     node_col: str = "node",
     var_col: str = "var",
     max_iter: int = 60,
-    small_threshold: int = 500_000,
-    driver_fact_cap: int = 5_000_000,
 ) -> DataFrame:
     """(node, var, def_node): definitions live at each node's entry — the
     reference's core analysis (``codeviews/DFG/DFG_RDA.py`` via
@@ -270,23 +262,21 @@ def reaching_definitions(
     visited set so each (node, var, def_node) is expanded once — termination
     in <= |V| rounds regardless of cycles.
 
-    SIZE-ADAPTIVE like ``connected_components``: below ``small_threshold``
-    edges the fixpoint is a driver-side worklist BFS over the collected
-    adjacency (each distributed round costs ~4 jobs of fixed overhead —
-    profiled ~2 s of sub-70 ms stages for graph_sdfg_interproc at sf0.1),
-    with a ``driver_fact_cap`` escape back to the distributed loop if the
-    fact set explodes. Identical fact sets (pinned by test), including the
-    max_iter depth bound; ``small_threshold=0`` forces distributed."""
+    SIZE-ADAPTIVE like ``connected_components``: up to
+    ``driver_arm.ROW_CAP`` edges the fixpoint is a driver-side worklist BFS
+    over the collected adjacency (each distributed round costs ~4 jobs of
+    fixed overhead — profiled ~2 s of sub-70 ms stages for
+    graph_sdfg_interproc at sf0.1), with a ``DRIVER_FACT_CAP`` escape back
+    to the distributed loop if the fact set explodes. Identical fact sets
+    (pinned by test), including the max_iter depth bound."""
     d = defs.select(F.col(node_col).alias("node"), F.col(var_col).alias("var")).distinct()
     e = edges.select(F.col(src).alias("node"), F.col(dst).alias("_dst"))
-    if small_threshold:
-        # probe via limit+toPandas: one job, no eager checkpoint/count pair
-        pdf = e.limit(small_threshold + 1).toPandas()
-        if len(pdf) <= small_threshold:
-            out = _rda_driver(e, pdf, d, max_iter, driver_fact_cap)
-            if out is not None:
-                return out
-        e = e.localCheckpoint()  # the distributed loop consumes e per round
+    pdf = driver_arm.collect_if_small(e, driver_arm.ROW_CAP)
+    if pdf is not None:
+        out = _rda_driver(e, pdf, d, max_iter)
+        if out is not None:
+            return out
+    e = e.localCheckpoint()  # the distributed loop consumes e per round
     visited = (
         d.withColumnRenamed("node", "_def_as_node")
         .join(e.withColumnRenamed("node", "_def_as_node"), "_def_as_node")
@@ -315,14 +305,14 @@ def reaching_definitions(
 
 
 def _rda_driver(
-    e: DataFrame, pdf, d: DataFrame, max_iter: int, fact_cap: int
+    e: DataFrame, pdf, d: DataFrame, max_iter: int
 ) -> DataFrame | None:
     """Driver-side gen/kill worklist BFS — the small-graph arm of
     ``reaching_definitions``. Facts are expanded breadth-first with the
     same depth bound as the distributed rounds (initial push = depth 1,
     then ``max_iter`` extensions), so the emitted (node, var, def_node)
-    set is identical. Returns None when the fact set exceeds ``fact_cap``
-    (caller falls back to the distributed loop)."""
+    set is identical. Returns None when the fact set exceeds
+    ``DRIVER_FACT_CAP`` (caller falls back to the distributed loop)."""
     from collections import defaultdict, deque
 
     adj = defaultdict(list)
@@ -343,12 +333,10 @@ def _rda_driver(
             continue
         for m in adj.get(node, ()):
             if (m, v, dn) not in facts:
-                if len(facts) >= fact_cap:
+                if len(facts) >= DRIVER_FACT_CAP:
                     return None
                 facts.add((m, v, dn))
                 work.append((m, v, dn, depth + 1))
-    from ..localdf import arrow_local_df
-
     tn = e.schema["node"].dataType.simpleString()
     tv = d.schema["var"].dataType.simpleString()
     return arrow_local_df(
@@ -362,8 +350,6 @@ def transitive_closure(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    small_threshold: int = 100_000,
-    driver_pair_cap: int = 5_000_000,
 ) -> DataFrame:
     """All (src, dst) pairs connected by a directed path: the reference's
     inheritance/overload closure (``codeviews/CFG/CFG_cpp.py:407-438``
@@ -374,15 +360,16 @@ def transitive_closure(
     right shape for deep hierarchies on a cluster. Output excludes the
     trivial (v, v) pairs unless the input has cycles through v.
 
-    SIZE-ADAPTIVE like ``connected_components``: below ``small_threshold``
-    edges the closure is a driver-side per-node BFS over the collected
-    adjacency (class hierarchies / overload registries are dim-sized), with
-    a hard ``driver_pair_cap`` escape back to the distributed loop if the
-    closure explodes (deep chains square). ``small_threshold=0`` forces the
-    distributed path; both return identical pair sets (pinned by test)."""
+    SIZE-ADAPTIVE like ``connected_components``: up to
+    ``CLOSURE_ROW_CAP`` edges the closure is a driver-side per-node BFS
+    over the collected adjacency (class hierarchies / overload registries
+    are dim-sized), with a hard ``DRIVER_FACT_CAP`` escape back to the
+    distributed loop if the closure explodes (deep chains square). Both
+    return identical pair sets (pinned by test)."""
     paths = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct().localCheckpoint()
-    if small_threshold and paths.count() <= small_threshold:
-        out = _closure_driver(paths, driver_pair_cap)
+    pdf = driver_arm.collect_if_small(paths, CLOSURE_ROW_CAP)
+    if pdf is not None:
+        out = _closure_driver(paths, pdf)
         if out is not None:
             return out.select(F.col("a").alias(src), F.col("b").alias(dst))
     for _ in range(max_iter):
@@ -398,14 +385,15 @@ def transitive_closure(
     return paths.select(F.col("a").alias(src), F.col("b").alias(dst))
 
 
-def _closure_driver(paths: DataFrame, pair_cap: int) -> DataFrame | None:
-    """Per-node BFS closure of a collected edge table; None if the pair
-    count would exceed ``pair_cap`` (caller falls back to distributed)."""
+def _closure_driver(paths: DataFrame, pdf) -> DataFrame | None:
+    """Per-node BFS closure of the collected edge table ``pdf``; None if
+    the pair count would exceed ``DRIVER_FACT_CAP`` (caller falls back to
+    distributed)."""
     from collections import defaultdict
 
     adj = defaultdict(list)
-    for r in paths.collect():
-        adj[r["a"]].append(r["b"])
+    for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+        adj[a].append(b)
     rows, total = [], 0
     for start in adj:
         seen, stack = set(), list(adj[start])
@@ -416,11 +404,9 @@ def _closure_driver(paths: DataFrame, pair_cap: int) -> DataFrame | None:
             seen.add(v)
             stack.extend(adj.get(v, ()))
         total += len(seen)
-        if total > pair_cap:
+        if total > DRIVER_FACT_CAP:
             return None
         rows.extend((start, v) for v in seen)
-    from ..localdf import arrow_local_df
-
     t = paths.schema["a"].dataType.simpleString()
     return arrow_local_df(paths.sparkSession, rows, f"a {t}, b {t}")
 

@@ -26,9 +26,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from ..localdf import arrow_local_df
 
-from .. import cells, layers
+from .. import cells, driver_arm, layers
 
 DEFAULT_SCHEDULE = (1, 2, 4, 8, 16)
+# Driver-arm cap in points: the arm is O(N²) (blocked distance matrices),
+# and 20k² double ops stay sub-second in numpy.
+DRIVER_POINTS_CAP = 20_000
 
 
 def _dist_sq(alon, alat, blon, blat):
@@ -54,22 +57,19 @@ def knn_ring(
     id_col: str = "doc_id",
     schedule: tuple[int, ...] = DEFAULT_SCHEDULE,
     grid_res: int = layers.GRID_RES,
-    small_threshold: int = 20_000,
 ) -> DataFrame:
     """points(id, gx, gy, lon, lat) -> (id, neighbor_id, rank, dist_sq).
 
     gx/gy are grid coords at ``grid_res``; the kNN index grid is ``res``.
 
-    SIZE-ADAPTIVE (the connected_components discipline, with a LOWER
-    threshold because the driver arm is O(N²)): under ``small_threshold``
-    points the exact kNN runs as blocked numpy distance matrices on the
-    driver — the ring loop costs ~5 fixed-overhead jobs per annulus
-    (profiled ~50 sub-300 ms stages at sf0.1) while 20k² double ops are
-    sub-second in numpy. The arm mirrors ``_dist_sq``'s exact IEEE
-    expression and the (dist_sq asc, nid asc) tie order, so rows are
-    bit-identical (pinned by test); above the threshold (e.g. the sf2
-    bench point) the ring loop below runs unchanged.
-    ``small_threshold=0`` forces the distributed path."""
+    SIZE-ADAPTIVE (``driver_arm``, with the lower ``DRIVER_POINTS_CAP``
+    because the driver arm is O(N²)): up to that many points the exact kNN
+    runs as blocked numpy distance matrices on the driver — the ring loop
+    costs ~5 fixed-overhead jobs per annulus (profiled ~50 sub-300 ms
+    stages at sf0.1). The arm mirrors ``_dist_sq``'s exact IEEE expression
+    and the (dist_sq asc, nid asc) tie order, so rows are bit-identical
+    (pinned by test); above the cap (e.g. the sf2 bench point) the ring
+    loop below runs unchanged."""
     shift = grid_res - res
     n = 1 << res
     min_cell_deg = 180.0 / n
@@ -81,14 +81,10 @@ def knn_ring(
         F.col("lon").alias("plon"),
         F.col("lat").alias("plat"),
     )
-    if small_threshold:
-        pdf = (
-            base.select("pid", "plon", "plat")
-            .limit(small_threshold + 1)
-            .toPandas()
-        )
-        if len(pdf) <= small_threshold:
-            return _knn_driver(spark, pdf, k, id_col)
+    pdf = driver_arm.collect_if_small(
+        base.select("pid", "plon", "plat"), DRIVER_POINTS_CAP)
+    if pdf is not None:
+        return _knn_driver(spark, pdf, k, id_col)
     idx = base.select(
         F.col("pid").alias("nid"),
         F.expr(cells.morton_sql("px", "py", res)).alias("cell"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import driver_arm
 from ..localdf import arrow_local_df
 
 # PageRank in micro-units: damping 0.85 as the exact rational 85/100,
@@ -24,41 +25,34 @@ from ..localdf import arrow_local_df
 RANK_SCALE = 1_000_000
 TELEPORT_MICRO = 150_000
 
-# Size-adaptive driver arm (the ``connected_components`` discipline, which
-# the r5 review verified path-equal): every iterative operator here runs
-# its fixpoint over the HOST-PAIR dim — orders smaller than the page/link
-# tables it is derived from. The corpus-scale work (aggregating page-level
-# links into weighted host->host edges) stays distributed; when the
-# aggregated edge dim is small enough to collect (~500k rows = tens of MB
-# of Arrow columns, the CC bound), the k fixpoint rounds run driver-side
-# in exact Python integers instead of paying k * (join + aggregate +
+# Size-adaptive driver arm (``driver_arm``, the ``connected_components``
+# discipline): every iterative operator here runs its fixpoint over the
+# HOST-PAIR dim — orders smaller than the page/link tables it is derived
+# from. The corpus-scale work (aggregating page-level links into weighted
+# host->host edges) stays distributed; when the aggregated edge dim fits
+# ``driver_arm.ROW_CAP``, the k fixpoint rounds run driver-side in exact
+# Python integers instead of paying k * (join + aggregate +
 # localCheckpoint) job rounds — measured ~50-100 ms of per-round fixed
 # cost on a 100-host graph, i.e. the whole wall for dim-sized graphs.
 # Python ``//`` on the nonnegative values used here equals BIGINT ``div``
 # truncation, and Python ints cannot wrap, so both arms are bit-exact
-# (pinned by tests/test_linkgraph_driver_arm.py). Pass
-# ``small_threshold=0`` to force the distributed loop.
-SMALL_GRAPH_THRESHOLD = 500_000
+# (pinned by tests/test_linkgraph_driver_arm.py).
 
 
 def _weighted_edges(edges: DataFrame) -> DataFrame:
     """(src, dst, n) multi-edge multiplicities — the host-pair dim every
     iterative operator consumes (multiplicity-preserving, so both arms see
-    identical semantics)."""
-    return edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n"))
+    identical semantics). Materialized once: the driver-arm probe and the
+    distributed loop both read the checkpoint."""
+    return (
+        edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
 
 
-def _collect_small(w: DataFrame, small_threshold: int):
-    """Materialize the weighted edge dim once; return the Arrow-collected
-    (src, dst, n) triples if it is driver-small, else None (caller runs
-    the distributed arm on the same materialized frame)."""
-    if not small_threshold:
-        return None, w
-    w = w.localCheckpoint()
-    if w.count() > small_threshold:
-        return None, w
-    pdf = w.toPandas()
-    return list(zip(pdf["src"], pdf["dst"], (int(x) for x in pdf["n"]))), w
+def _triples(pdf) -> list[tuple]:
+    """(src, dst, n) rows of a collected ``_weighted_edges`` frame."""
+    return list(zip(pdf["src"], pdf["dst"], (int(x) for x in pdf["n"])))
 
 
 def _pagerank_rounds(
@@ -103,7 +97,6 @@ def _pagerank_rounds(
 
 def pagerank_integer(
     edges: DataFrame, nodes: DataFrame, iterations: int = 10,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Deterministic integer PageRank over (src, dst) edges.
 
@@ -125,10 +118,12 @@ def pagerank_integer(
     Catalyst plans whole at k=10 — for much larger k, checkpoint every
     few rounds, the discipline ``graph_iter`` already applies.
     """
-    triples, w = _collect_small(_weighted_edges(edges), small_threshold)
-    if triples is not None:
+    w = _weighted_edges(edges)
+    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
+    if pdf is not None:
         rows = _pagerank_rounds(
-            triples, (r["host"] for r in nodes.collect()), None, iterations)
+            _triples(pdf), (r["host"] for r in nodes.collect()), None,
+            iterations)
         return arrow_local_df(nodes.sparkSession, 
             rows, "host string, rank_micro long")
     out_deg = w.groupBy("src").agg(F.sum("n").alias("out_deg"))
@@ -189,7 +184,6 @@ def _hits_rounds(triples, node_hosts, iterations: int) -> list[tuple]:
 
 def hits_integer(
     edges: DataFrame, nodes: DataFrame, iterations: int = 5,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Deterministic integer HITS (Kleinberg 1999) over (src, dst) edges:
     hub/authority power iterations with L-infinity normalization in exact
@@ -220,13 +214,13 @@ def hits_integer(
     than the edge table, and keeps every plan iteration-local."""
     if iterations < 1:
         raise ValueError("hits_integer: iterations must be >= 1")
-    triples, w = _collect_small(_weighted_edges(edges), small_threshold)
-    if triples is not None:
+    ed = _weighted_edges(edges)
+    pdf = driver_arm.collect_if_small(ed, driver_arm.ROW_CAP)
+    if pdf is not None:
         rows = _hits_rounds(
-            triples, (r["host"] for r in nodes.collect()), iterations)
+            _triples(pdf), (r["host"] for r in nodes.collect()), iterations)
         return arrow_local_df(nodes.sparkSession, 
             rows, "host string, hub_micro long, auth_micro long")
-    ed = w.select("src", "dst", "n").localCheckpoint()
     hubs = nodes.select(
         F.col("host").alias("node"), F.lit(RANK_SCALE).alias("hub_micro")
     )
@@ -309,7 +303,6 @@ def host_graph(
 
 def kcore(
     edges: DataFrame, k: int = 3, rounds: int = 4,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Deterministic synchronous k-core peeling over the SIMPLE undirected
     view of (src, dst) edges (multi-edges deduped, self-loops dropped) —
@@ -352,8 +345,8 @@ def kcore(
         .distinct()
         .localCheckpoint()
     )
-    if small_threshold and und.count() <= small_threshold:
-        pdf = und.toPandas()
+    pdf = driver_arm.collect_if_small(und, driver_arm.ROW_CAP)
+    if pdf is not None:
         pairs = list(zip(pdf["src"], pdf["dst"]))
         alive_s = {s for s, _ in pairs}
         deg: dict = {}
@@ -392,7 +385,6 @@ def kcore(
 def trustrank_integer(
     edges: DataFrame, nodes: DataFrame, seeds: DataFrame,
     iterations: int = 10,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Deterministic integer TrustRank (Gyöngyi, Garcia-Molina & Pedersen,
     VLDB 2004) over (src, dst) edges: PageRank with the teleport restricted
@@ -415,11 +407,12 @@ def trustrank_integer(
     host-dim-sized, each iteration one shuffle join + one aggregate, the
     edge+degree frame localCheckpointed once and consumed k times.
     """
-    triples, w = _collect_small(_weighted_edges(edges), small_threshold)
-    if triples is not None:
+    w = _weighted_edges(edges)
+    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
+    if pdf is not None:
         seed_set = {r["host"] for r in seeds.select("host").collect()}
         rows = _pagerank_rounds(
-            triples, (r["host"] for r in nodes.collect()), seed_set,
+            _triples(pdf), (r["host"] for r in nodes.collect()), seed_set,
             iterations)
         return arrow_local_df(nodes.sparkSession, 
             rows, "host string, rank_micro long")
@@ -479,7 +472,6 @@ def _bfs_rounds(pairs, seed_hosts, rounds: int, costs=None) -> dict:
 
 def bfs_depth(
     edges: DataFrame, seeds: DataFrame, rounds: int = 4,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Multi-source BFS hop distance from ``seeds`` over DIRECTED
     (src, dst) edges — crawl depth. A crawler's frontier expands hop by
@@ -516,13 +508,19 @@ def bfs_depth(
     small.
     """
     ed = edges.select("src", "dst").distinct().localCheckpoint()
-    if small_threshold and ed.count() <= small_threshold:
-        pdf = ed.toPandas()
+    pdf = driver_arm.collect_if_small(ed, driver_arm.ROW_CAP)
+    if pdf is not None:
         reached_d = _bfs_rounds(
             list(zip(pdf["src"], pdf["dst"])),
             (r["host"] for r in seeds.select("host").collect()), rounds)
         return arrow_local_df(edges.sparkSession, 
             sorted(reached_d.items()), "host string, depth long")
+    return _bfs_loop(ed, seeds, rounds)
+
+
+def _bfs_loop(ed: DataFrame, seeds: DataFrame, rounds: int) -> DataFrame:
+    """Distributed arm of ``bfs_depth`` over the materialized distinct
+    (src, dst) frame ``ed``."""
     reached = seeds.select(
         F.col("host"), F.lit(0).cast("long").alias("depth")
     )
@@ -542,7 +540,6 @@ def bfs_depth(
 
 def bowtie(
     edges: DataFrame, nodes: DataFrame, pivot: str, rounds: int = 6,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Bowtie decomposition of a directed host graph (Broder et al.,
     WWW 2000 — the canonical macro-structure measurement of the web):
@@ -565,13 +562,14 @@ def bowtie(
     whenever both BFS waves converge within ``rounds`` (verify round
     r == r+1 at the target scale, as the callers do on their fixtures).
 
-    Scale shape: two ``bfs_depth`` runs (each: one shuffle join + one
-    min-aggregate per round over a host-dim-sized reached table) plus
-    two broadcast-able host-dim left joins for the classification —
-    nothing here ever touches page-level row counts."""
+    Scale shape: two ``bfs_depth`` loops over the one distinct edge frame
+    (each: one shuffle join + one min-aggregate per round over a
+    host-dim-sized reached table) plus two broadcast-able host-dim left
+    joins for the classification — nothing here ever touches page-level
+    row counts."""
     ed = edges.select("src", "dst").distinct().localCheckpoint()
-    if small_threshold and ed.count() <= small_threshold:
-        pdf = ed.toPandas()
+    pdf = driver_arm.collect_if_small(ed, driver_arm.ROW_CAP)
+    if pdf is not None:
         pairs = list(zip(pdf["src"], pdf["dst"]))
         node_l = [r["host"] for r in nodes.collect()]
         seed = [pivot] if pivot in set(node_l) else []
@@ -589,12 +587,10 @@ def bowtie(
         ]
         return arrow_local_df(nodes.sparkSession, rows, "host string, cls string")
     pv = nodes.filter(F.col("host") == pivot)
-    fwd = bfs_depth(edges, pv, rounds, small_threshold=0).select(
-        "host", F.lit(1).alias("_f")
-    )
-    bwd = bfs_depth(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-        pv, rounds, small_threshold=0,
+    fwd = _bfs_loop(ed, pv, rounds).select("host", F.lit(1).alias("_f"))
+    bwd = _bfs_loop(
+        ed.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        pv, rounds,
     ).select("host", F.lit(1).alias("_b"))
     return (
         nodes.join(fwd, "host", "left")
@@ -670,7 +666,6 @@ def cocitation(edges: DataFrame, min_common: int = 2) -> DataFrame:
 
 def label_propagation(
     edges: DataFrame, nodes: DataFrame, iterations: int = 3,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al. 2007)
     over an undirected view of (src, dst) edges — the community-detection
@@ -701,10 +696,12 @@ def label_propagation(
     pre-aggregate multiplicities with a cap before calling if an input
     could violate it.
     """
-    triples, w = _collect_small(_weighted_edges(edges), small_threshold)
-    if triples is not None:
+    w = _weighted_edges(edges)
+    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
+    if pdf is not None:
         import hashlib
 
+        triples = _triples(pdf)
         node_l = [r["host"] for r in nodes.collect()]
         lbl_d = {
             v: int(hashlib.md5(v.encode()).hexdigest()[:7], 16)
@@ -757,7 +754,6 @@ def label_propagation(
 
 def cheapest_paths(
     edges: DataFrame, seeds: DataFrame, rounds: int = 4,
-    small_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """Multi-source CHEAPEST path cost within ``rounds`` edges — the
     weighted complement of ``bfs_depth``: edge cost is derived from link
@@ -784,8 +780,8 @@ def cheapest_paths(
         )
         .localCheckpoint()
     )
-    if small_threshold and w.count() <= small_threshold:
-        pdf = w.toPandas()
+    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
+    if pdf is not None:
         pairs = list(zip(pdf["src"], pdf["dst"]))
         costs = {
             (s, d): int(c)

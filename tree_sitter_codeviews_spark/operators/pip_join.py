@@ -43,23 +43,6 @@ _RINGS: dict[int, np.ndarray] = {
 }
 
 
-def polygons_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        (p["polygon_id"], p["admin_level"],
-         [(float(lon), float(lat)) for lon, lat in p["ring"]])
-        for p in layers.POLYGONS
-    ]
-    schema = T.StructType([
-        T.StructField("polygon_id", T.LongType()),
-        T.StructField("admin_level", T.IntegerType()),
-        T.StructField("ring", T.ArrayType(T.StructType([
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]))),
-    ])
-    return spark.createDataFrame(rows, schema)
-
-
 def cover_df(spark: SparkSession, res: int = COVER_RES) -> DataFrame:
     """Exploded (cover_cell, polygon_id, admin_level, full) prefilter dim.
 

@@ -251,9 +251,6 @@ FROM pts0 GROUP BY 1
 """
 
 
-_GRAPH_CTE = None  # built lazily below
-
-
 def _graph_ctes() -> str:
     """CTEs n (nodes) and e (chain edges) of the deterministic doc graph."""
     cell5 = cells.morton_sql("(gx >> 5)", "(gy >> 5)", 5)

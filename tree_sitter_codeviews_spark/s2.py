@@ -62,11 +62,6 @@ def hilbert_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     return d
 
 
-def hilbert_parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
-    """Hilbert is self-similar: parent = truncation, same as Morton."""
-    return np.asarray(cell, dtype=np.int64) >> (2 * steps)
-
-
 _M = 16          # internal coordinate width of the branchless transform
 _FULL = 0xFFFF
 

@@ -16,6 +16,26 @@ from pyspark.sql import SparkSession
 _SHIM_CACHE = "/tmp/tscv_fs_shim_classes"
 
 
+def driver_memory() -> str:
+    """Driver JVM heap: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    min(16g, 60% of the host's MemAvailable). The heap is pinned with
+    -Xms, so a fixed 16g cannot start on a host with less memory than
+    that; 60% leaves room for Python workers and the OS page cache."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    cap_mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    avail_mb = int(line.split()[1]) // 1024
+                    return f"{min(cap_mb, avail_mb * 6 // 10)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def _fs_shim_classpath() -> str | None:
     """Compile (once, cached on disk) the NIO-chmod local filesystem shim.
 
@@ -88,6 +108,7 @@ def get_spark(
         n = cores
     if shuffle_partitions is None:
         shuffle_partitions = max(n, 32)
+    mem = driver_memory()
 
     builder = (
         SparkSession.builder.master(master)
@@ -108,7 +129,7 @@ def get_spark(
         # stock 1 MB floor.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", mem)
         # -Xms pins the initial heap: incremental heap growth under load
         # causes full-GC storms with multi-x wall-clock variance in local
         # mode. -XX:-DontCompileHugeMethods lets HotSpot JIT whole-stage-
@@ -116,7 +137,7 @@ def get_spark(
         # generated predicates (e.g. the unrolled ray-cast refine) silently
         # run in the bytecode interpreter (measured 24x slower).
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} "
+                f"-Xms{mem} "
                 "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.sql.session.timeZone", "UTC")
@@ -149,11 +170,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def stop_spark() -> None:
-    """Fully stop any active session (needed to rebuild at a new core count)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    # clear cached builder state so a new master takes effect
-    SparkSession.builder._options = {}

@@ -18,8 +18,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # (path, mtime_ns, size) -> StructType. Schema inference reads the parquet
 # footer through a driver round trip (~150 ms) EVERY time a query plan is
