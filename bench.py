@@ -591,23 +591,106 @@ def ensure_scale2_dir(spark, base_dir: str, repl: int = REPL2) -> str:
 # child modes (each runs in its own fresh JVM)
 # --------------------------------------------------------------------------
 
-def _timed_count(fn, spark, sf_dir: str, reps: int) -> float:
+def _timed_count(fn, spark, sf_dir: str, reps: int,
+                 group: str) -> tuple[float, float, float, int]:
+    """Min-of-``reps`` wall of ``fn(spark, sf_dir).count()``. Returns the
+    fastest rep's (wall, build_s, exec_s, index); wall = build_s + exec_s,
+    and rep ``i``'s jobs run under the job group ``f"{group}-{i}"``."""
     import gc
 
     gc.collect()  # drop prior queries' localCheckpoint blocks before timing
-    dt = float("inf")
-    for _ in range(reps):
+    sc = spark.sparkContext
+    best = (float("inf"), 0.0, 0.0, -1)
+    for i in range(reps):
+        sc.setJobGroup(f"{group}-{i}", f"{group} rep {i}")
         t0 = time.monotonic()
-        fn(spark, sf_dir).count()
-        dt = min(dt, time.monotonic() - t0)
-    return dt
+        df = fn(spark, sf_dir)
+        t1 = time.monotonic()
+        df.count()
+        t2 = time.monotonic()
+        if t2 - t0 < best[0]:
+            best = (t2 - t0, t1 - t0, t2 - t1, i)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+    return best
 
 
-def child_queries(names: list[str], sf_dir: str, reps: int, out_path: str) -> None:
+def _layers(spark, group: str, build_s: float, exec_s: float) -> dict:
+    """Layer split of one timed rep, read from Spark's in-process status
+    store (no event log, which inflates multi-job walls): the jobs of job
+    group ``group``, their stages' JVM task CPU, the executor run time not
+    spent on JVM CPU (``py_gap_s``: Python workers and waits), shuffle
+    writes and spill. ``stages`` lists every submitted stage, slowest run
+    time first."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+    tracker = sc.statusTracker()
+    store = jsc.statusStore()
+    empty = sc._jvm.java.util.ArrayList()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = sorted({
+        sid for j in jobs if (info := tracker.getJobInfo(j)) is not None
+        for sid in info.stageIds
+    })
+    stages: list[dict] = []
+    tasks = cpu_ns = shuffle_b = spill_b = 0
+    for sid in stage_ids:
+        try:
+            attempts = store.stageData(sid, False, empty, False, no_quantiles)
+        except Py4JJavaError:  # evicted past spark.ui.retainedStages
+            continue
+        for k in range(attempts.size()):
+            sd = attempts.apply(k)
+            if sd.submissionTime().isEmpty():
+                continue  # skipped: its shuffle output was reused
+            tasks += sd.numCompleteTasks()
+            cpu_ns += sd.executorCpuTime()
+            shuffle_b += sd.shuffleWriteBytes()
+            spill_b += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
+            done = sd.completionTime()
+            stages.append({
+                "stage": sid,
+                "name": (sd.details() or "").split("\n")[0][:80]
+                or sd.name()[:80],
+                "callsite": sd.name()[:100],
+                "wall_ms": (done.get().getTime()
+                            - sd.submissionTime().get().getTime())
+                if done.isDefined() else None,
+                "n_tasks": sd.numTasks(),
+                "run_ms": sd.executorRunTime(),
+                "cpu_ms": sd.executorCpuTime() // 1_000_000,
+                "input_mb": round(sd.inputBytes() / 1e6, 2),
+                "sh_read_mb": round(sd.shuffleReadBytes() / 1e6, 2),
+                "sh_write_mb": round(sd.shuffleWriteBytes() / 1e6, 2),
+                "records": sd.shuffleWriteRecords(),
+            })
+    stages.sort(key=lambda s: -s["run_ms"])
+    run_s = sum(s["run_ms"] for s in stages) / 1e3
+    return {
+        "build_s": round(build_s, 6),
+        "exec_s": round(exec_s, 6),
+        "jobs": len(jobs),
+        "tasks": tasks,
+        "task_cpu_s": round(cpu_ns / 1e9, 3),
+        "py_gap_s": round(max(0.0, run_s - cpu_ns / 1e9), 3),
+        "shuffle_mb": round(shuffle_b / 1e6, 2),
+        "spill_mb": round(spill_b / 1e6, 2),
+        "stages": stages,
+    }
+
+
+def child_queries(names: list[str], sf_dir: str, reps: int, out_path: str,
+                  confs: dict | None = None) -> None:
     """Time a chunk of registry queries in THIS fresh JVM: warm each query
     once at sf0.001 (codegen/JIT/Arrow-worker spin-up amortizes to zero at
     production scale — steady-state is the quantity that matters), then
-    min-of-``reps`` at ``sf_dir``.
+    min-of-``reps`` at ``sf_dir``. ``confs`` are extra Spark settings
+    (echoed back under ``conf``); ``layers`` holds each query's
+    ``_layers`` split of its fastest rep.
 
     A SINGLETON chunk (the isolation pass) additionally warms at the
     target ``sf_dir`` itself: the sf0.001 warm-up leaves the target-scale
@@ -621,7 +704,7 @@ def child_queries(names: list[str], sf_dir: str, reps: int, out_path: str) -> No
     from tree_sitter_codeviews_spark.session import get_spark
 
     qmap = entry_mod.queries()
-    spark = get_spark("bench")
+    spark = get_spark("bench", extra_conf=confs or None)
     spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
     for name in names:
         if name in qmap:
@@ -638,13 +721,17 @@ def child_queries(names: list[str], sf_dir: str, reps: int, out_path: str) -> No
     time.sleep(1)
 
     times: dict[str, float] = {}
-    result: dict = {"times": times}
+    layers: dict[str, dict] = {}
+    result: dict = {"times": times, "layers": layers, "conf": {
+        k: spark.conf.get(k, None) for k in confs or {}}}
     for name in names:
         fn = qmap.get(name)
         if fn is None:
             continue
-        dt = _timed_count(fn, spark, sf_dir, reps)
+        group = f"bench-{name}"
+        dt, build_s, exec_s, best = _timed_count(fn, spark, sf_dir, reps, group)
         times[name] = round(dt, 3)
+        layers[name] = _layers(spark, f"{group}-{best}", build_s, exec_s)
         if name == "geo_pip_entities":
             n_pages = spark.read.parquet(
                 os.path.join(sf_dir, "documents.parquet")
@@ -689,8 +776,9 @@ def child_stage(qname: str, sname: str, sf_dir: str, reps: int,
     builder(spark, WARM_SF, only=sname)[sname].count()  # cheap first warm
     builder(spark, sf_dir, only=sname)[sname].count()   # target-scale warm
     dt = _timed_count(
-        lambda sp, d: builder(sp, d, only=sname)[sname], spark, sf_dir, reps
-    )
+        lambda sp, d: builder(sp, d, only=sname)[sname], spark, sf_dir, reps,
+        f"bench-{qname}.{sname}",
+    )[0]
     with open(out_path, "w") as fh:
         json.dump({"wall": round(dt, 3)}, fh)
     spark.stop()
@@ -829,10 +917,14 @@ def main() -> None:
     parser.add_argument("--sf-dir")
     parser.add_argument("--reps", type=int, default=REPS_HEADLINE)
     parser.add_argument("--out")
+    parser.add_argument("--conf", action="append", default=[], metavar="K=V",
+                        help="extra Spark setting for a queries child")
     args = parser.parse_args()
 
     if args.mode == "queries":
-        child_queries(args.names.split(","), args.sf_dir, args.reps, args.out)
+        confs = dict(kv.split("=", 1) for kv in args.conf)
+        child_queries(args.names.split(","), args.sf_dir, args.reps, args.out,
+                      confs)
         return
     if args.mode == "stage":
         child_stage(args.query, args.stage, args.sf_dir, args.reps, args.out)
@@ -933,8 +1025,9 @@ def fold_with_committed(full: dict) -> dict:
             prior = json.load(fh)
     except (OSError, ValueError):
         return full
-    if prior.get("sf") != full.get("sf"):
-        return full  # different scale point: minima are not comparable
+    if (prior.get("sf") != full.get("sf")
+            or str(prior.get("cores")) != str(full.get("cores"))):
+        return full  # other scale point or core count: minima not comparable
     for name, t in prior.get("queries", {}).items():
         if name in full["queries"]:
             full["queries"][name] = min(full["queries"][name], t)

@@ -64,9 +64,17 @@ def test_committed_record_covers_every_bench_list_name():
 
 
 def test_fold_refuses_cross_scale_records(tmp_path, monkeypatch):
+    """A record from another scale point or another core count (a
+    local[32] record must not set the minima of a local[4] run) is not
+    folded in."""
     m = _load_bench()
     art = tmp_path / "BENCH_LOCAL.json"
     monkeypatch.setattr(m, "FULL_ARTIFACT", str(art))
-    art.write_text(json.dumps({"sf": 0.001, "queries": {"a": 0.01}}))
-    fresh = {"sf": 0.1, "queries": {"a": 3.0}, "value": 3.0, "protocol": {}}
-    assert m.fold_with_committed(dict(fresh)) == fresh
+    fresh = {"sf": 0.1, "cores": "4", "queries": {"a": 3.0}, "value": 3.0,
+             "protocol": {}}
+    for prior in (
+        {"sf": 0.001, "cores": "4", "queries": {"a": 0.01}},
+        {"sf": 0.1, "cores": "32", "queries": {"a": 0.01}},
+    ):
+        art.write_text(json.dumps(prior))
+        assert m.fold_with_committed(dict(fresh)) == fresh, prior

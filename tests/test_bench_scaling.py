@@ -38,7 +38,9 @@ def test_scale2_cache_key_tracks_base_and_repl(sf_tiny):
 def test_bench_child_and_stage_modes_roundtrip(sf_tiny, tmp_path):
     """The fresh-JVM bench children (r5 evidence-channel fix): a queries
     chunk and the per-stage mode each run in a real subprocess and write
-    parseable JSON with the expected keys."""
+    parseable JSON with the expected keys. The queries child applies and
+    echoes ``--conf`` and splits each query's fastest rep into layers whose
+    build + exec time is the reported wall."""
     import json
     import os
     import subprocess
@@ -51,12 +53,19 @@ def test_bench_child_and_stage_modes_roundtrip(sf_tiny, tmp_path):
     subprocess.run(
         [sys.executable, bench.__file__, "--mode", "queries",
          "--names", "geo_cell_encode,dedup_exact", "--sf-dir", sf_tiny,
-         "--reps", "1", "--out", str(qout)],
+         "--reps", "1", "--conf", "spark.sql.shuffle.partitions=7",
+         "--out", str(qout)],
         check=True, env=env, timeout=600,
     )
     q = json.loads(qout.read_text())
     assert set(q["times"]) == {"geo_cell_encode", "dedup_exact"}
     assert all(t >= 0 for t in q["times"].values())
+    assert q["conf"] == {"spark.sql.shuffle.partitions": "7"}
+    assert set(q["layers"]) == set(q["times"])
+    for name, lay in q["layers"].items():
+        assert lay["jobs"] >= 1 and lay["tasks"] >= 1, (name, lay)
+        assert 0 <= lay["task_cpu_s"], (name, lay)
+        assert abs(lay["build_s"] + lay["exec_s"] - q["times"][name]) <= 0.001
 
     # one representative stage child per composite (one fresh JVM per
     # (query, stage) in the real run; the full plan is orchestrator glue

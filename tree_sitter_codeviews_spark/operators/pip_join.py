@@ -11,8 +11,8 @@ top-1 (there: ``longest_scope_match``, ``c_parser.py:134-140``; here: deepest
 Physical shape at 100 TB:
 - the polygon cover table is a small dim → **broadcast** equi-join (map-side,
   no shuffle of the 10^12-row points side);
-- the refine predicate is a single vectorized Arrow-batch pandas UDF applied
-  post-join (never a theta/cross join);
+- the refine predicate is one codegen'd JVM expression applied post-join
+  (never a theta/cross join, no Python on the hot path);
 - the prefilter key is the point's *parent* cell at cover resolution —
   computed from its fine cell by bit-truncation, no re-encode.
 """
@@ -43,7 +43,7 @@ _RINGS: dict[int, np.ndarray] = {
 }
 
 
-def cover_df(spark: SparkSession, res: int = COVER_RES) -> DataFrame:
+def cover_df(spark: SparkSession) -> DataFrame:
     """Exploded (cover_cell, polygon_id, admin_level, full) prefilter dim.
 
     ``full`` marks interior cells (whole cell ⊆ polygon): candidates landing
@@ -54,7 +54,7 @@ def cover_df(spark: SparkSession, res: int = COVER_RES) -> DataFrame:
     (``__init__.py:8-63``)."""
     rows = []
     for p in layers.POLYGONS:
-        cs, full = geometry.cover_cells_classified(p["ring"], res)
+        cs, full = geometry.cover_cells_classified(p["ring"], COVER_RES)
         for c, f in zip(cs, full):
             rows.append((int(c), p["polygon_id"], p["admin_level"], bool(f)))
     return arrow_local_df(
@@ -126,32 +126,24 @@ def pip_refine_expr(lon: str = "lon", lat: str = "lat",
 def pip_join(
     points: DataFrame,
     spark: SparkSession,
-    point_res: int = layers.GRID_RES,
-    cover_res: int = COVER_RES,
     keys: tuple[str, ...] = ("url",),
-    refine: str = "jvm",
 ) -> DataFrame:
     """points(keys..., lon, lat [, cell]) -> (keys..., cell_id, polygon_id).
 
-    ``cell_id`` is the point's cell at ``point_res``; the prefilter key is
-    its ancestor at ``cover_res`` via bit-truncation (parent_col).
-    ``refine``: "jvm" (codegen expression — the hot path for a literal
-    layer) or "udf" (Arrow-vectorized numpy — arbitrary ring tables).
-    Both are bit-identical to the oracle."""
+    ``cell_id`` is the point's cell at ``layers.GRID_RES``; the prefilter
+    key is its ancestor at ``COVER_RES`` via bit-truncation (parent_col).
+    The refine is ``pip_refine_expr``, bit-identical to the oracle."""
     if "cell" not in points.columns:
-        points = points.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", point_res)))
+        points = points.withColumn(
+            "cell", F.expr(cells.cell_sql("lon", "lat", layers.GRID_RES)))
     pts = points.withColumn(
-        "cover_cell", cells.parent_col(F.col("cell"), point_res - cover_res)
+        "cover_cell", cells.parent_col(F.col("cell"), layers.GRID_RES - COVER_RES)
     )
-    cov = cover_df(spark, cover_res)
-    cand = pts.join(F.broadcast(cov), "cover_cell", "inner")
-    refine_col = (
-        pip_refine_expr("lon", "lat", "polygon_id") if refine == "jvm"
-        else pip_refine_udf(F.col("lon"), F.col("lat"), F.col("polygon_id"))
-    )
+    cand = pts.join(F.broadcast(cover_df(spark)), "cover_cell", "inner")
     # interior cells short-circuit the exact test (cell ⊆ polygon); only
     # boundary candidates evaluate the ray-cast
-    refined = cand.filter(F.col("full") | refine_col)
+    refined = cand.filter(
+        F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
     return refined.select(
         *keys, F.col("cell").alias("cell_id"), "polygon_id", "admin_level"
     )

@@ -28,11 +28,7 @@ from .. import cells
 from .pip_join import COVER_RES, cover_df, pip_refine_udf
 
 
-def rasterize_polygons(
-    spark: SparkSession,
-    res: int = 7,
-    cover_res: int = COVER_RES,
-) -> DataFrame:
+def rasterize_polygons(spark: SparkSession, res: int = 7) -> DataFrame:
     """(res, cell_id, polygon_id) for every res-cell whose center is inside
     the polygon. Pixel centers are generated and decoded JVM-side; only the
     exact refine crosses into the (Arrow-batched) Python UDF."""
@@ -44,9 +40,9 @@ def rasterize_polygons(
         "cell_id",
         cells.lon_center_col(x, res).alias("lon"),
         cells.lat_center_col(y, res).alias("lat"),
-        cells.parent_col(F.col("cell_id"), res - cover_res).alias("cover_cell"),
+        cells.parent_col(F.col("cell_id"), res - COVER_RES).alias("cover_cell"),
     )
-    cand = pix.join(F.broadcast(cover_df(spark, cover_res)), "cover_cell", "inner")
+    cand = pix.join(F.broadcast(cover_df(spark)), "cover_cell", "inner")
     hit = cand.filter(
         F.col("full") | pip_refine_udf(F.col("lon"), F.col("lat"), F.col("polygon_id"))
     )

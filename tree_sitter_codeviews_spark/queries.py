@@ -112,7 +112,7 @@ def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hot = skew.hot_keys(pts, "cover_cell", threshold_frac=0.01)
     cand = skew.salted_join(
-        pts, cover_df(spark, COVER_RES), "cover_cell",
+        pts, cover_df(spark), "cover_cell",
         hot=hot, salt_col=F.xxhash64("doc_id"), n_salt=8,
     )
     refined = cand.filter(

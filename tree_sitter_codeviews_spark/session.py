@@ -89,7 +89,6 @@ def get_spark(
     app_name: str = "tree_sitter_codeviews_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    ui: bool = False,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
@@ -143,7 +142,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.ui.enabled", str(ui).lower())
+        .config("spark.ui.enabled", "false")
         # deterministic float formatting / parquet behavior
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
     )
