@@ -244,3 +244,25 @@ def test_r5_traj_similarity_plan_shapes(spark, sf_tiny):
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
     assert "Scan parquet" not in plan
+
+
+def test_geo_extraction_and_refine_are_jvm_only(spark, sf_tiny):
+    """Extraction and the PIP refine are native expressions: no Python
+    stage in any query built on them, and the entity regex runs once per
+    page (an ``explode`` of the entity array column would let the
+    optimizer push an inferred ``size(e) > 0`` filter, extraction
+    included, below the pages exchange and run it twice)."""
+    from tree_sitter_codeviews_spark import queries
+    from tree_sitter_codeviews_spark.operators import extract
+    from tree_sitter_codeviews_spark.sources.pages import gazetteer_df, pages_df
+
+    for fn in (queries.geo_entities, queries.geo_pip_entities,
+               queries.geo_extract_text, queries.geo_pip_salted,
+               queries.geo_vector_raster, queries.geo_overlay_stats):
+        assert "EvalPython" not in plans.explain_str(fn(spark, sf_tiny)), fn.__name__
+
+    ents = extract.page_entities(pages_df(spark, sf_tiny), gazetteer_df(spark))
+    qe = ents._jdf.queryExecution()
+    built = qe.analyzed().toString().count(extract._GEO_JAVA)
+    assert built == 2  # surfaces + split pieces
+    assert qe.executedPlan().toString().count(extract._GEO_JAVA) == built

@@ -4,48 +4,120 @@ to bound the pair space without touching informative pairs."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
+import pytest
 
 from tree_sitter_codeviews_spark.operators import dedup, extract, multimodal, textstats
 from tree_sitter_codeviews_spark.sources.testdata import load_table
+
+
+_GEO_RE = re.compile(r"GEO_\d{5}")
+
+# adversarial pages: each row pins one place where Java regex (the native
+# path) and Python ``re`` (the scalar reference) could disagree
+ADVERSARIAL_HTML = {
+    1: "<p>at GEO_٠١٢٣٤ and GEO_00012</p>".encode(),       # Arabic-Indic Nd digits
+    # astral-plane char before a mention; astral (mathematical) Nd digits
+    2: "<p>\U0001F600 x GEO_00001 GEO_\U0001D7CE\U0001D7CF\U0001D7D0\U0001D7D1\U0001D7D2</p>".encode(),
+    3: b"<div>a GEO_00002 <b>b</b></div> tail",               # no <p>: tag-strip fallback
+    4: b"<p>one GEO_00003</p><p>two GEO_00004</p>",            # first <p> only
+    5: b"<p>GEO_123456 GEO_1234 GEO_00005GEO_00006</p>",       # 6- and 4-digit runs, adjacent
+    6: b"<p></p> GEO_00007",                                   # empty <p>
+    7: b"<p>line\nGEO_00008\nend</p>",                         # newline inside <p>
+    8: None,                                                   # NULL html
+}
+INVALID_UTF8_HTML = b"<p>\xff\xfe GEO_00009</p>"
+
+
+def _pages(spark, html_by_id):
+    return spark.createDataFrame(
+        [(k, f"u{k}", None, "en", None if v is None else bytearray(v))
+         for k, v in html_by_id.items()],
+        "doc_id long, url string, warc_ts timestamp, lang string, html binary",
+    )
+
+
+def _entities_py(html):
+    """Scalar entity reference: (entity_id, surface, char_offset) over
+    ``extract_text_py``'s text, by ``re.finditer``."""
+    t = extract.extract_text_py(html)
+    if t is None:
+        return []
+    return [(i, m.group(0), m.start()) for i, m in enumerate(_GEO_RE.finditer(t))]
 
 
 def test_extract_text_vectorized_matches_scalar(spark, sf_tiny):
     from tree_sitter_codeviews_spark.sources.pages import pages_df
 
     pages = pages_df(spark, sf_tiny).limit(100)
-    rows = pages.select("html", extract.extract_text_udf("html").alias("out")).collect()
+    got = {r.doc_id: r.text_out for r in extract.extract_pages(pages).collect()}
+    rows = pages.select("doc_id", "html").collect()
+    assert len(got) == len(rows)
     for r in rows:
-        assert r.out == extract.extract_text_py(bytes(r.html))
+        assert got[r.doc_id] == extract.extract_text_py(bytes(r.html))
 
 
 def test_extract_text_fallback_and_null(spark):
-    df = spark.createDataFrame(
-        [(1, bytearray(b"<div>no p tag</div> tail")), (2, None)],
-        "id long, html binary",
-    )
-    got = {r.id: r.out for r in
-           df.select("id", extract.extract_text_udf("html").alias("out")).collect()}
+    df = _pages(spark, {1: b"<div>no p tag</div> tail", 2: None})
+    got = {r.doc_id: r.text_out for r in extract.extract_pages(df).collect()}
     assert got[1] == "no p tag tail"  # tag-strip fallback
     assert got[2] is None
 
 
-def test_fused_entities_equals_two_step(spark, sf_tiny):
-    # the single-round-trip UDF must produce exactly the two-step rows
-    from pyspark.sql import functions as F
-    from tree_sitter_codeviews_spark.sources.pages import pages_df
+def test_page_entities_native_matches_scalar(spark, sf_tiny):
+    # the native expression must produce exactly the scalar reference's rows
+    from tree_sitter_codeviews_spark.sources.pages import gazetteer_df, pages_df
 
     pages = pages_df(spark, sf_tiny).limit(200)
-    fused = pages.select(
-        "url", F.explode(extract.extract_entities_fused_udf("html")).alias("e")
-    ).select("url", "e.entity_id", "e.surface", "e.char_offset")
-    two_step = pages.select(
-        "url", extract.extract_text_udf("html").alias("t")
-    ).select(
-        "url", F.explode(extract.extract_entities_udf("t")).alias("e")
-    ).select("url", "e.entity_id", "e.surface", "e.char_offset")
-    assert {tuple(r) for r in fused.collect()} == {tuple(r) for r in two_step.collect()}
+    gaz = gazetteer_df(spark)
+    surfaces = {r.surface for r in gaz.select("surface").collect()}
+    got = {tuple(r) for r in extract.page_entities(pages, gaz).select(
+        "url", "entity_id", "surface", "char_offset").collect()}
+    want = {(r.url, *e) for r in pages.select("url", "html").collect()
+            for e in _entities_py(bytes(r.html)) if e[1] in surfaces}
+    assert want and got == want
+
+
+def test_extract_adversarial_rows_match_scalar(spark):
+    pages = _pages(spark, ADVERSARIAL_HTML)
+    texts = {r.doc_id: r.text_out for r in extract.extract_pages(pages).collect()}
+    assert texts == {k: extract.extract_text_py(v) for k, v in ADVERSARIAL_HTML.items()}
+    want = {(k, *e) for k, v in ADVERSARIAL_HTML.items() for e in _entities_py(v)}
+    gaz = spark.createDataFrame(
+        [(s, 0.0, 0.0, "city") for s in sorted({w[2] for w in want})],
+        "surface string, lon double, lat double, entity_kind string",
+    )
+    got = {(r.doc_id, r.entity_id, r.surface, r.char_offset)
+           for r in extract.page_entities(pages, gaz).collect()}
+    assert got == want
+    # the cases the fixture exists for are really exercised
+    assert (1, 0, "GEO_٠١٢٣٤", 3) in want
+    assert (2, 0, "GEO_00001", 4) in want
+    assert (2, 1, "GEO_\U0001D7CE\U0001D7CF\U0001D7D0\U0001D7D1\U0001D7D2", 14) in want
+    assert texts[3] == "a GEO_00002 b tail"
+    assert {w[2] for w in want if w[0] == 4} == {"GEO_00003"}
+    assert sorted(w[1:] for w in want if w[0] == 5) == [
+        (0, "GEO_12345", 0), (1, "GEO_00005", 20), (2, "GEO_00006", 29)]
+    assert texts[6] == "" and not any(w[0] in (6, 8) for w in want)
+    assert (7, 0, "GEO_00008", 5) in want
+    assert texts[8] is None
+
+
+def test_extract_invalid_utf8_raises(spark):
+    from pyspark.errors import SparkRuntimeException
+
+    from tree_sitter_codeviews_spark.sources.pages import gazetteer_df
+
+    with pytest.raises(UnicodeDecodeError):
+        extract.extract_text_py(INVALID_UTF8_HTML)
+    pages = _pages(spark, {1: INVALID_UTF8_HTML})
+    for out in (extract.extract_pages(pages),
+                extract.page_entities(pages, gazetteer_df(spark))):
+        with pytest.raises(SparkRuntimeException, match="MALFORMED_CHARACTER_CODING"):
+            out.collect()
 
 
 def test_langid_vectorized_matches_scalar(spark, sf_tiny):

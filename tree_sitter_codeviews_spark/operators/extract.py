@@ -1,36 +1,41 @@
-"""Deterministic per-page extraction (Arrow-batched pandas UDFs).
+r"""Deterministic per-page extraction as one native Spark expression.
 
 The engine analogue of the reference's preprocess + tokenize stage
 (``utils/preprocessor.py:6-68``, ``tree_parser/c_parser.py:142-278``):
 a pure function of the page bytes, byte-identical per url across reruns and
-parallelism levels. Per SURVEY.md §7.4(1) the invariant-bearing path uses
-Python ``re`` inside the UDF (never SQL regex) so the semantics are pinned to
-one engine.
+parallelism levels.
 
-All UDFs are scalar pandas UDFs (Arrow batches, vectorized pandas string ops
-where possible) — zero per-row Python round trips through the JVM boundary.
+Invariant: ONE regex engine. Text and entity extraction both run on Java
+regex inside the JVM (whole plan JVM-only, no Python worker on the path).
+Every entity pattern carries ``(?U)`` so Java's ``\d`` matches Unicode
+``Nd`` — what Python's ``\d`` matches on ``str``. The scalar reference
+(``extract_text_py`` plus a ``re.finditer`` scan) is pinned to this path by
+the adversarial fixture in ``tests/test_vectorized_kernels.py`` (non-ASCII
+digits, astral-plane text, the no-``<p>`` fallback, NULL and invalid UTF-8).
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # the page template is <title>url</title> ... <p>BODY</p>; extraction contract
 # is "text inside the first <p> element", tags stripped, no entity decoding.
+_P_JAVA = "(?s)<p>(.*?)</p>"
+_TAG_JAVA = "<[^>]+>"
+# a gazetteer surface: 9 code points ("GEO_" + five Nd digits)
+_GEO_JAVA = r"(?U)GEO_\d{5}"
+_GEO_LEN = 9
+
+# the same contract in Python ``re``, for the scalar reference
 _P_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
-_P_RE_STR = re.compile(r"<p>(.*?)</p>", re.DOTALL)
 _TAG_RE = re.compile(r"<[^>]+>")
-_GEO_RE = re.compile(r"GEO_\d{5}")
 
 
 def extract_text_py(b: bytes) -> str | None:
-    """Reference scalar extraction (tests pin the vectorized UDF to it)."""
+    """Reference scalar extraction (tests pin the native expression to it)."""
     if b is None:
         return None
     m = _P_RE.search(b)
@@ -40,90 +45,63 @@ def extract_text_py(b: bytes) -> str | None:
     return _TAG_RE.sub("", b.decode("utf-8"))
 
 
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """html binary -> extracted text. Byte-identical invariant bearer.
-
-    Vectorized pandas string kernels (decode -> str.extract -> fallback
-    str.replace) with the same pinned Python ``re`` patterns as the scalar
-    reference — the delimiters are ASCII, so searching the decoded string is
-    byte-equivalent to searching the UTF-8 bytes. No per-row Python dispatch
-    (round 1 used ``.map``; this was the flagship's cost center)."""
-    s = html.str.decode("utf-8")
-    extracted = s.str.extract(_P_RE_STR, expand=False)
-    fallback = s.str.replace(_TAG_RE, "", regex=True)
-    out = extracted.fillna(fallback)
-    return out.where(s.notna(), None)
-
-
-_ENTITY_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("entity_id", T.IntegerType()),
-            T.StructField("surface", T.StringType()),
-            T.StructField("char_offset", T.IntegerType()),
-        ]
+def _with_text(pages: DataFrame, keep: tuple[str, ...], out: str) -> DataFrame:
+    """pages -> (keep..., out): html decoded ONCE in its own projection
+    (Catalyst keeps a non-cheap column referenced more than once
+    materialised), then the first ``<p>`` body, else the tag-stripped page.
+    Malformed UTF-8 raises, as ``bytes.decode`` does."""
+    d = pages.select(*keep, F.decode("html", "UTF-8").alias("_d"))
+    return d.select(
+        *keep,
+        F.when(F.col("_d").rlike(_P_JAVA), F.regexp_extract("_d", _P_JAVA, 1))
+        .otherwise(F.regexp_replace("_d", _TAG_JAVA, ""))
+        .alias(out),
     )
-)
-
-
-@pandas_udf(_ENTITY_SCHEMA)
-def extract_entities_udf(text: pd.Series) -> pd.Series:
-    """Scan text for gazetteer surfaces; entity_id = ordinal of occurrence
-    within the page (content-derived surrogate key, cf. reference
-    ``custom_parser.py:45-57`` — NEVER monotonically_increasing_id)."""
-    def one(t: str):
-        if t is None:
-            return []
-        return [
-            (i, m.group(0), m.start())
-            for i, m in enumerate(_GEO_RE.finditer(t))
-        ]
-
-    return text.map(one)
-
-
-@pandas_udf(_ENTITY_SCHEMA)
-def extract_entities_fused_udf(html: pd.Series) -> pd.Series:
-    """html -> entities in ONE Arrow round-trip: chains the exact
-    extract_text + entity-scan logic inside a single UDF so the page text
-    crosses the JVM<->Python boundary once, not twice (measured ~35% off
-    the flagship's UDF stage at sf0.1). Byte-identical to the two-step
-    path (pinned by tests/test_vectorized_kernels.py)."""
-    s = html.str.decode("utf-8")
-    text = s.str.extract(_P_RE_STR, expand=False).fillna(
-        s.str.replace(_TAG_RE, "", regex=True)
-    )
-
-    def scan(t):
-        if t is None or (isinstance(t, float) and pd.isna(t)):
-            return []
-        return [(i, m.group(0), m.start()) for i, m in enumerate(_GEO_RE.finditer(t))]
-
-    return text.map(scan)
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages -> (doc_id, url, warc_ts, lang, text_out)."""
-    return pages.select(
-        "doc_id", "url", "warc_ts", "lang",
-        extract_text_udf(F.col("html")).alias("text_out"),
-    )
+    return _with_text(pages, ("doc_id", "url", "warc_ts", "lang"), "text_out")
 
 
 def page_entities(pages: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """pages ⋈ gazetteer -> (url, doc_id, entity_id, surface, char_offset,
     lon, lat, entity_kind).
 
-    Extraction is a UDF + explode (the UDTF pattern, SURVEY.md §2.10); the
-    lon/lat resolution is a **broadcast equi-join** against the tiny
-    gazetteer dim — the engine's version of use→declaration resolution
-    (``c_parser.py:227-249``) with the dim always broadcast.
+    entity_id = ordinal of occurrence within the page (content-derived
+    surrogate key, cf. reference ``custom_parser.py:45-57`` — NEVER
+    monotonically_increasing_id); char_offset = code-point offset in the
+    extracted text: the lengths of the text pieces before the match plus
+    ``_GEO_LEN`` per earlier match. Extraction is an array + explode (the
+    UDTF pattern, SURVEY.md §2.10); the lon/lat resolution is a **broadcast
+    equi-join** against the tiny gazetteer dim — the engine's version of
+    use→declaration resolution (``c_parser.py:227-249``).
+
+    ``explode_outer`` + a null filter rather than ``explode``: for an
+    ``explode`` of an array column the optimizer infers ``size(e) > 0`` and
+    pushes it, with the whole extraction inside, below the pages exchange,
+    so every page would be extracted twice (asserted in
+    tests/test_plans.py).
     """
-    exploded = pages.select(
+    t = _with_text(pages, ("url", "doc_id"), "t")
+    # surfaces and piece lengths in their own projection, so the lambda
+    # below reads the arrays instead of re-running the regexes per entity
+    parts = t.select(
         "url", "doc_id",
-        F.explode(extract_entities_fused_udf(F.col("html"))).alias("e"),
-    ).select("url", "doc_id", "e.entity_id", "e.surface", "e.char_offset")
+        F.regexp_extract_all("t", F.lit(_GEO_JAVA), 0).alias("surf"),
+        F.transform(F.split("t", _GEO_JAVA, -1), F.length).alias("lens"),
+    )
+    ents = F.transform("surf", lambda s, i: F.struct(
+        i.alias("entity_id"),
+        s.alias("surface"),
+        (F.aggregate(F.slice("lens", 1, i + 1), F.lit(0), lambda a, x: a + x)
+         + i * _GEO_LEN).alias("char_offset"),
+    ))
+    exploded = (
+        parts.select("url", "doc_id", F.explode_outer(ents).alias("e"))
+        .filter(F.col("e").isNotNull())
+        .select("url", "doc_id", "e.entity_id", "e.surface", "e.char_offset")
+    )
     return exploded.join(F.broadcast(gazetteer), "surface", "inner").select(
         "url", "doc_id", "entity_id", "surface", "char_offset",
         "lon", "lat", "entity_kind",

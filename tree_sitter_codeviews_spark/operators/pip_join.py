@@ -19,12 +19,8 @@ Physical shape at 100 TB:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 from ..localdf import arrow_local_df
 
 from .. import cells, geometry, layers
@@ -35,12 +31,6 @@ from .. import cells, geometry, layers
 # noise either way. The knob trades dim size vs refine work; res 6 is the
 # sweet spot for continent-scale polygons.
 COVER_RES = 6
-
-# rings keyed by polygon_id, shipped to executors via closure capture
-# (equivalent to a broadcast variable; the dim is constant and tiny)
-_RINGS: dict[int, np.ndarray] = {
-    p["polygon_id"]: np.asarray(p["ring"], dtype=np.float64) for p in layers.POLYGONS
-}
 
 
 def cover_df(spark: SparkSession) -> DataFrame:
@@ -61,21 +51,6 @@ def cover_df(spark: SparkSession) -> DataFrame:
         spark, rows,
         "cover_cell long, polygon_id long, admin_level int, full boolean",
     )
-
-
-@pandas_udf(T.BooleanType())
-def pip_refine_udf(lon: pd.Series, lat: pd.Series, polygon_id: pd.Series) -> pd.Series:
-    """Exact ray-cast refine, vectorized per polygon group within the Arrow
-    batch. The general-layer path: works for any ring table (including ones
-    too large to bake into an expression)."""
-    out = np.zeros(len(lon), dtype=bool)
-    px = lon.to_numpy(dtype=np.float64)
-    py = lat.to_numpy(dtype=np.float64)
-    pid = polygon_id.to_numpy(dtype=np.int64)
-    for p in np.unique(pid):
-        m = pid == p
-        out[m] = geometry.pip_mask(px[m], py[m], _RINGS[int(p)])
-    return pd.Series(out)
 
 
 def _d(x: float) -> str:

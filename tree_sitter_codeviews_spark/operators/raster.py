@@ -25,13 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cells
-from .pip_join import COVER_RES, cover_df, pip_refine_udf
+from .pip_join import COVER_RES, cover_df, pip_refine_expr
 
 
 def rasterize_polygons(spark: SparkSession, res: int = 7) -> DataFrame:
     """(res, cell_id, polygon_id) for every res-cell whose center is inside
-    the polygon. Pixel centers are generated and decoded JVM-side; only the
-    exact refine crosses into the (Arrow-batched) Python UDF."""
+    the polygon. Pixel centers, cover prefilter and exact refine all run
+    JVM-side."""
     n_cells = 1 << (2 * res)
     grid = spark.range(n_cells).select(F.col("id").alias("cell_id"))
     x = F.expr(cells.x_from_cell_sql("cell_id", res))
@@ -44,8 +44,7 @@ def rasterize_polygons(spark: SparkSession, res: int = 7) -> DataFrame:
     )
     cand = pix.join(F.broadcast(cover_df(spark)), "cover_cell", "inner")
     hit = cand.filter(
-        F.col("full") | pip_refine_udf(F.col("lon"), F.col("lat"), F.col("polygon_id"))
-    )
+        F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
     return hit.select(F.lit(res).alias("res"), "cell_id", "polygon_id")
 
 

@@ -103,7 +103,7 @@ def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-cover-cell pre-pass + salted broadcast candidate join (skew.py).
     Correctness gate proves salting is value-transparent."""
     from . import skew
-    from .operators.pip_join import COVER_RES, cover_df, pip_refine_udf
+    from .operators.pip_join import COVER_RES, cover_df, pip_refine_expr
 
     pts = pages_src.doc_points_df(spark, sf_dir).withColumn(
         "cell", F.expr(cells.morton_sql("gx", "gy", layers.GRID_RES))
@@ -116,8 +116,7 @@ def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         hot=hot, salt_col=F.xxhash64("doc_id"), n_salt=8,
     )
     refined = cand.filter(
-        F.col("full") | pip_refine_udf(F.col("lon"), F.col("lat"), F.col("polygon_id"))
-    )
+        F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
     return refined.select("doc_id", F.col("cell").alias("cell_id"), "polygon_id")
 
 
@@ -659,7 +658,7 @@ def geo_template_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_src.pages_df(spark, sf_dir)
     gaz = pages_src.gazetteer_df(spark)
     # the mention table feeds all four candidate legs AND the final keep-all
-    # join (5 consumers); materialize the Arrow-UDF extraction once — Spark
+    # join (5 consumers); materialize the extraction once — Spark
     # has no common-subplan reuse (at cluster scale: a checkpoint stage table)
     mentions = extract.page_entities(pages, gaz).select(
         "url", "entity_id", "surface", "entity_kind"

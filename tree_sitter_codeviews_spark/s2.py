@@ -15,9 +15,9 @@ is why it is also the engine's z-order *repartitioning* key (``skew.py``):
 with no long-range jumps.
 
 Three bit-identical implementations (same discipline as ``cells.py``):
-numpy (vectorized — the pandas-UDF hot path, per the north rule's
-"vectorized pandas/Arrow UDFs"), a pandas UDF wrapper, and a DuckDB SQL
-generator (an unrolled per-level CTE chain) for the correctness oracle.
+numpy (the reference the tests pin against), a JVM column expression
+(``with_hilbert_col``, the hot path), and a DuckDB SQL generator (an
+unrolled per-level CTE chain) for the correctness oracle.
 
 Algorithm: the standard iterative xy->d Hilbert transform (public domain,
 en.wikipedia.org/wiki/Hilbert_curve#Applications_and_mapping_algorithms),
@@ -27,11 +27,8 @@ MSB-first digit accumulation with quadrant rotation.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 S2_RES = 16           # finest level computed; coarser levels by truncation
 S2_LEVELS = (12, 13, 14, 15, 16)
@@ -124,10 +121,9 @@ def with_hilbert_col(
     a named column — Catalyst keeps multi-referenced non-cheap aliases
     materialized instead of inlining, bounding the expression tree).
 
-    Zero Python per row; whole-stage codegen end to end. Preferred over
-    ``hilbert_udf`` on the hot path: in local mode the Arrow-UDF pipeline
-    adds a Python worker per core (oversubscription), and on a real cluster
-    it adds serialization; this is pure columnar JVM work.
+    Zero Python per row; whole-stage codegen end to end: no Python worker
+    per core (oversubscription in local mode) and no Arrow serialization on
+    a cluster; this is pure columnar JVM work.
 
     Expressions assemble as SQL text (one F.expr per staged column — the
     per-operator Column-builder version measured ~2,800 py4j round trips =
@@ -196,21 +192,6 @@ def with_hilbert_col(
         "_hx", "_hy", "_a", "_b", "_c", "_d", "_A", "_B", "_C", "_D",
         "_ab", "_C3", "_D3", "_sa", "_sb", "_i0", "_i1", "_s0", "_s1",
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark surface: vectorized pandas UDF (Arrow-batched; zero per-row Python)
-# ---------------------------------------------------------------------------
-
-def hilbert_udf(res: int = S2_RES):
-    """pandas UDF (gx, gy at ``res``) -> hilbert cell id (long)."""
-
-    @pandas_udf(T.LongType())
-    def _h(gx: pd.Series, gy: pd.Series) -> pd.Series:
-        out = hilbert_np(gx.to_numpy(dtype=np.int64), gy.to_numpy(dtype=np.int64), res)
-        return pd.Series(out)
-
-    return _h
 
 
 def hilbert_at_level_col(h_finest: Column, level: int, finest: int = S2_RES) -> Column:

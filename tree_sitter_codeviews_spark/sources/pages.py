@@ -54,12 +54,11 @@ def warc_ts_col():
 
 def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sf parquet is a single row group (= one task); spread the NARROW
-    # source columns before synthesizing html so downstream Arrow-UDF
-    # extraction parallelizes. Capped at 16: in local mode each extra UDF
-    # partition costs a Python worker, and JVM-threads + workers > CPUs
-    # thrashes (measured 0.47s at 4-16 parts vs 1.6s at 32 on this suite's
-    # data). At production scale the table arrives already partitioned and
-    # this shuffle disappears.
+    # source columns before synthesizing html so downstream extraction
+    # parallelizes. Capped at 16 (measured 0.47s at 4-16 parts vs 1.6s at 32
+    # on this suite's data while extraction still ran in Python workers).
+    # At production scale the table arrives already partitioned and this
+    # shuffle disappears.
     n_parts = max(4, min(16, spark.sparkContext.defaultParallelism))
     docs = (
         load_table(spark, sf_dir, "documents")
