@@ -121,8 +121,8 @@ def run_child(cores: int, sf_dir: str, repl: int, reps: int = 4,
               job: str = "geo") -> None:
     from tree_sitter_codeviews_spark.session import get_spark
 
-    spark = get_spark(f"scaling-{cores}", cores=cores,
-                      shuffle_partitions=2 * cores)
+    spark = get_spark(f"scaling-{cores}", cores=cores, extra_conf={
+        "spark.sql.shuffle.partitions": str(2 * cores)})
     # AQE's per-stage re-planning is serial driver latency; on this job the
     # shuffles are tiny and fixed-shape, so it only adds constant overhead
     # that distorts the N-vs-4N comparison

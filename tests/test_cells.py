@@ -80,6 +80,7 @@ def test_compact_cells():
 
 
 def test_spark_matches_numpy(spark):
+    """cell_sql, the encoder pip_join runs, equals cell_from_lonlat_np."""
     rng = np.random.RandomState(11)
     lon = rng.uniform(-180, 180, 2000)
     lat = rng.uniform(-90, 90, 2000)
@@ -88,7 +89,7 @@ def test_spark_matches_numpy(spark):
     )
     for res in (4, 10):
         got = np.array(
-            pdf.select(cells.cell_col(F.col("lon"), F.col("lat"), res).alias("c"))
+            pdf.select(F.expr(cells.cell_sql("lon", "lat", res)).alias("c"))
             .toPandas()["c"]
         )
         want = cells.cell_from_lonlat_np(lon, lat, res)

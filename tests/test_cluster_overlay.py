@@ -186,7 +186,7 @@ def test_quadkey_is_base4_morton_and_prefix_parent(spark, sf_tiny):
         for r in queries.geo_quadkey(spark, sf_tiny).collect()
     }
     pts = pages_src.doc_points_df(spark, sf_tiny).withColumn(
-        "cell", cells.morton_col(F.col("gx"), F.col("gy"), layers.GRID_RES)
+        "cell", F.expr(cells.morton_sql("gx", "gy", layers.GRID_RES))
     )
     for r in pts.limit(200).collect():
         quadkey, qk4 = qk[r["doc_id"]]
@@ -260,11 +260,11 @@ def test_route_cells_contains_both_endpoints(spark, sf_tiny):
     }
     ev = load_table(spark, sf_tiny, "events").select(
         "user_id",
-        cells.morton_col(
-            F.shiftright(F.expr("(event_id * 48271 + 7) % 1024"), 5),
-            F.shiftright(F.expr("(event_id * 16807 + 12345) % 1024"), 5),
+        F.expr(cells.morton_sql(
+            "shiftright((event_id * 48271 + 7) % 1024, 5)",
+            "shiftright((event_id * 16807 + 12345) % 1024, 5)",
             5,
-        ).alias("cell_id"),
+        )).alias("cell_id"),
     )
     multi = {
         r["user_id"]

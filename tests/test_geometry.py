@@ -61,14 +61,3 @@ def test_cover_is_superset():
         inside = geometry.pip_mask(px, py, ring)
         cc = cells.cell_from_lonlat_np(px[inside], py[inside], 4)
         assert set(cc.tolist()) <= cover
-
-
-def test_sq_dist():
-    d = geometry.sq_dist(np.array([1.0]), np.array([2.0]), np.array([4.0]), np.array([6.0]))
-    assert d[0] == 25.0
-
-
-def test_haversine_sanity():
-    # 1 degree of latitude ≈ 111.2 km
-    d = geometry.haversine_m(np.array([0.0]), np.array([0.0]), np.array([0.0]), np.array([1.0]))
-    assert 110_000 < d[0] < 112_500

@@ -52,11 +52,11 @@ def test_morton_decode_roundtrip(spark):
     res = 5
     back = df.select(
         "cell_id",
-        cells.morton_col(
-            cells.x_from_cell_col(F.col("cell_id"), res),
-            cells.y_from_cell_col(F.col("cell_id"), res),
+        F.expr(cells.morton_sql(
+            cells.x_from_cell_sql("cell_id", res),
+            cells.y_from_cell_sql("cell_id", res),
             res,
-        ).alias("re"),
+        )).alias("re"),
     )
     assert back.filter(F.col("cell_id") != F.col("re")).count() == 0
     # numpy side agrees

@@ -248,7 +248,7 @@ def test_geohash_vs_scalar_reference(spark):
     })
     from pyspark.sql import functions as F
 
-    g = cells.morton_col(F.col("gy"), F.col("gx"), layers.GRID_RES).alias("g")
+    g = F.expr(cells.morton_sql("gy", "gx", layers.GRID_RES)).alias("g")
     chars = [F.expr(cells.geohash_char_sql("g", k)) for k in range(4)]
     got = (
         spark.createDataFrame(pdf)

@@ -14,7 +14,7 @@ from oracle_util import assert_matches
 
 def _pts_with_cell(spark, sf_dir):
     return pages_src.doc_points_df(spark, sf_dir).withColumn(
-        "cell", cells.morton_col(F.col("gx"), F.col("gy"), layers.GRID_RES)
+        "cell", F.expr(cells.morton_sql("gx", "gy", layers.GRID_RES))
     )
 
 

@@ -290,3 +290,34 @@ def test_graph_diff_consistent_with_full_graph(spark):
     for host, row in d.iterrows():
         assert row["n_lost"] + row["n_persisted"] == na.get(host, 0)
         assert row["n_gained"] + row["n_persisted"] == nb.get(host, 0)
+
+
+def test_event_points_match_numpy_and_epoch_arithmetic(spark, sf_tiny):
+    """event_points_df, the one event-point source: ex/ey equal
+    layers.evt_grid_xy_np (the streaming geofence's twin) on every row;
+    sec/day equal epoch arithmetic on the parquet's raw microseconds."""
+    import pyarrow.parquet as pq
+
+    from tree_sitter_codeviews_spark import layers
+    from tree_sitter_codeviews_spark.sources import pages as pages_src
+
+    got = (
+        pages_src.event_points_df(spark, sf_tiny)
+        .select("event_id", "ex", "ey", "sec", "day")
+        .toPandas()
+        .sort_values("event_id")
+    )
+    raw = (
+        pq.read_table(f"{sf_tiny}/events.parquet", columns=["event_id", "ts"])
+        .to_pandas()
+        .sort_values("event_id")
+    )
+    assert len(got) == len(raw) > 0
+    assert got["event_id"].tolist() == raw["event_id"].tolist()
+    gx, gy = layers.evt_grid_xy_np(raw["event_id"].to_numpy())
+    assert got["ex"].tolist() == gx.tolist()
+    assert got["ey"].tolist() == gy.tolist()
+    us = [t.value // 1000 for t in raw["ts"]]  # ns -> us since the epoch
+    sec = [u // 1_000_000 for u in us]
+    assert got["sec"].tolist() == sec
+    assert got["day"].tolist() == [s // 86400 for s in sec]

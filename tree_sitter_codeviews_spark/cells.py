@@ -15,10 +15,11 @@ Grid: at resolution r the world (lon in [-180,180), lat in [-90,90)) is a
 ``cell_id`` at res r is the 2r-bit Morton code of (x, y); res is carried in a
 separate column (like H3's resolution nibble, kept separate for cheap SQL).
 
-Three implementations, all bit-for-bit identical:
-- numpy (vectorized, for pandas-UDF paths and oracles),
-- Spark Column expressions (JVM-side, whole-stage-codegen'd — the hot path),
-- ANSI-SQL string generator (for the DuckDB correctness oracle).
+Two implementations, bit-for-bit identical:
+- numpy (vectorized, the reference the tests pin the SQL to),
+- SQL text run by Spark (via ``F.expr``, JVM-side and whole-stage-codegen'd
+  — the hot path) and by the DuckDB correctness oracle.
+A few Column helpers (parent truncation, cell centers) cover the rest.
 """
 
 from __future__ import annotations
@@ -140,96 +141,8 @@ def compact_cells_np(cells: np.ndarray, res: int) -> list[tuple[int, int]]:
 # Spark Column expressions (JVM-side — the hot path; no Python per row)
 # ---------------------------------------------------------------------------
 
-# --- SQL-text twins (plan-build latency) -----------------------------------
-#
-# Building these expression trees through the Column API costs 2-4 py4j
-# round trips per operator — ~80-160 per morton_col call, measured ~0.1-0.15s
-# of DRIVER time per call site per plan build (the simhash_df /
-# pip_refine_expr finding). The twins build the IDENTICAL operator tree as
-# one SQL string in pure Python (one py4j round trip at F.expr); double
-# literals carry the D suffix so Spark does not parse them as DECIMAL.
-# Args are SQL text (a column name or any SQL expression).
-
-def morton_sql(x: str, y: str, res: int) -> str:
-    terms = ["cast(0 as bigint)"]
-    for i in range(res):
-        terms.append(f"shiftleft((shiftright({x}, {i}) & 1), {2 * i})")
-        terms.append(f"shiftleft((shiftright({y}, {i}) & 1), {2 * i + 1})")
-    return "(" + " | ".join(terms) + ")"
-
-
-def x_sql(lon: str, res: int) -> str:
-    n = 1 << res
-    return (f"greatest(0, least({n - 1}, "
-            f"cast(floor((({lon}) + 180.0D) / 360.0D * {float(n)!r}D) as bigint)))")
-
-
-def y_sql(lat: str, res: int) -> str:
-    n = 1 << res
-    return (f"greatest(0, least({n - 1}, "
-            f"cast(floor((({lat}) + 90.0D) / 180.0D * {float(n)!r}D) as bigint)))")
-
-
-def cell_sql(lon: str, lat: str, res: int) -> str:
-    return morton_sql(x_sql(lon, res), y_sql(lat, res), res)
-
-
-def x_from_cell_sql(cell: str, res: int) -> str:
-    terms = ["cast(0 as bigint)"]
-    for i in range(res):
-        terms.append(f"shiftleft((shiftright({cell}, {2 * i}) & 1), {i})")
-    return "(" + " | ".join(terms) + ")"
-
-
-def y_from_cell_sql(cell: str, res: int) -> str:
-    terms = ["cast(0 as bigint)"]
-    for i in range(res):
-        terms.append(f"shiftleft((shiftright({cell}, {2 * i + 1}) & 1), {i})")
-    return "(" + " | ".join(terms) + ")"
-
-
-def x_col(lon: Column, res: int) -> Column:
-    n = 1 << res
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw))
-
-
-def y_col(lat: Column, res: int) -> Column:
-    n = 1 << res
-    raw = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw))
-
-
-def morton_col(x: Column, y: Column, res: int) -> Column:
-    """Morton interleave as a pure bit-op expression tree (codegen-friendly)."""
-    m = F.lit(0).cast("long")
-    for i in range(res):
-        m = m.bitwiseOR(F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i))
-        m = m.bitwiseOR(F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-    return m
-
-
-def cell_col(lon: Column, lat: Column, res: int) -> Column:
-    return morton_col(x_col(lon, res), y_col(lat, res), res)
-
-
 def parent_col(cell: Column, steps: int = 1) -> Column:
     return F.shiftright(cell, 2 * steps)
-
-
-def x_from_cell_col(cell: Column, res: int) -> Column:
-    """De-interleave even bits (inverse of morton_col; JVM-side bit ops)."""
-    x = F.lit(0).cast("long")
-    for i in range(res):
-        x = x.bitwiseOR(F.shiftleft(F.shiftright(cell, 2 * i).bitwiseAND(F.lit(1)), i))
-    return x
-
-
-def y_from_cell_col(cell: Column, res: int) -> Column:
-    y = F.lit(0).cast("long")
-    for i in range(res):
-        y = y.bitwiseOR(F.shiftleft(F.shiftright(cell, 2 * i + 1).bitwiseAND(F.lit(1)), i))
-    return y
 
 
 def lon_center_col(x: Column, res: int) -> Column:
@@ -243,11 +156,14 @@ def lat_center_col(y: Column, res: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# ANSI-SQL generator (DuckDB oracle side)
+# SQL text: the Morton encode/decode run identically by Spark (via F.expr)
+# and the DuckDB oracle; args are SQL text (a column name or any SQL
+# expression). One SQL string is one py4j round trip at F.expr, where the
+# same tree built through the Column API costs 2-4 per operator.
 # ---------------------------------------------------------------------------
 
 def morton_sql(x_expr: str, y_expr: str, res: int) -> str:
-    """SQL expression computing the same Morton code as morton_np/morton_col."""
+    """SQL expression computing the same Morton code as morton_np."""
     terms = []
     for i in range(res):
         terms.append(f"((({x_expr} >> {i}) & 1) << {2 * i})")
@@ -263,6 +179,26 @@ def x_from_cell_sql(cell_expr: str, res: int) -> str:
 def y_from_cell_sql(cell_expr: str, res: int) -> str:
     terms = [f"((({cell_expr} >> {2 * i + 1}) & 1) << {i})" for i in range(res)]
     return "(" + " | ".join(terms) + ")"
+
+
+# Spark-side only: the D suffix keeps Spark from parsing the double literals
+# as DECIMAL.
+
+def x_sql(lon: str, res: int) -> str:
+    n = 1 << res
+    return (f"greatest(0, least({n - 1}, "
+            f"cast(floor((({lon}) + 180.0D) / 360.0D * {float(n)!r}D) as bigint)))")
+
+
+def y_sql(lat: str, res: int) -> str:
+    n = 1 << res
+    return (f"greatest(0, least({n - 1}, "
+            f"cast(floor((({lat}) + 90.0D) / 180.0D * {float(n)!r}D) as bigint)))")
+
+
+def cell_sql(lon: str, lat: str, res: int) -> str:
+    """Spark SQL twin of cell_from_lonlat_np (clamped grid coords, Morton)."""
+    return morton_sql(x_sql(lon, res), y_sql(lat, res), res)
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Vectorized planar geometry: ray-casting point-in-polygon, covers, distance.
+"""Vectorized planar geometry: ray-casting point-in-polygon, covers, segments, hulls.
 
 The exact-refine stage of the two-phase containment join (SURVEY.md §2.3 row 1;
 the analogue of the reference's ``scope_check``, ``codeviews/SDFG/SDFG_c.py:53-68``).
@@ -125,27 +125,6 @@ def cover_cells_classified(ring, res: int):
         edge_hits |= _segment_intersects_rects(x1, y1, x2, y2, X0, Y0, X1, Y1)
 
     return cells_, corners_inside & ~edge_hits
-
-
-def sq_dist(ax: np.ndarray, ay: np.ndarray, bx: np.ndarray, by: np.ndarray) -> np.ndarray:
-    """Squared planar degree distance — deterministic (only *,+,-; no trig),
-    used for kNN ordering so the DuckDB oracle reproduces it bit-for-bit.
-    (Haversine is provided separately for real-world use; its trig is
-    platform-ULP-sensitive so it is not part of the correctness contract.)"""
-    dx = ax - bx
-    dy = ay - by
-    return dx * dx + dy * dy
-
-
-def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Great-circle metres (numpy). For production ranking at real scale."""
-    r = 6371000.0
-    p1 = np.radians(np.asarray(lat1, dtype=np.float64))
-    p2 = np.radians(np.asarray(lat2, dtype=np.float64))
-    dp = p2 - p1
-    dl = np.radians(np.asarray(lon2, dtype=np.float64) - np.asarray(lon1, dtype=np.float64))
-    a = np.sin(dp / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2) ** 2
-    return 2 * r * np.arcsin(np.sqrt(a))
 
 
 # ---------------------------------------------------------------------------

@@ -54,12 +54,6 @@ DOC_GY_SQL = (
 )
 
 
-def gaz_grid_xy_np(idx: np.ndarray):
-    """Deterministic res-10 grid coords of gazetteer entry ``idx``."""
-    idx = np.asarray(idx, dtype=np.int64)
-    return (idx * 37 + 11) % GRID_N, (idx * 73 + 29) % GRID_N
-
-
 GAZ_GX_SQL = "(({i}) * 37 + 11) % 1024"
 GAZ_GY_SQL = "(({i}) * 73 + 29) % 1024"
 

@@ -5,10 +5,10 @@ aggregation into compacted cell hierarchies"):
 
 - **vector -> raster** (``rasterize_polygons``): burn the polygon layer onto
   the cell grid at a resolution — every cell whose center lies inside the
-  polygon gets a (res, cell_id, polygon_id) row. Same two-phase shape as the
-  containment join (cover-cell prefilter -> exact ray-cast refine); the
-  "points" are synthetic pixel centers generated JVM-side from
-  ``spark.range`` (no data read at all; embarrassingly parallel).
+  polygon gets a (res, cell_id, polygon_id) row. The pixel centers are
+  synthetic points generated JVM-side from ``spark.range`` (no data read at
+  all; embarrassingly parallel) and go through the containment join
+  (``pip_join.pip_join``) like any other point set.
 - **raster -> vector** (``tiles.compact_tiles``): aggregate per-pixel counts
   at the finest resolution, then fold complete 4-sibling sets into parents
   recursively — the compacted hierarchy is the vector representation of the
@@ -25,27 +25,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cells
-from .pip_join import COVER_RES, cover_df, pip_refine_expr
+from .pip_join import pip_join
 
 
 def rasterize_polygons(spark: SparkSession, res: int = 7) -> DataFrame:
     """(res, cell_id, polygon_id) for every res-cell whose center is inside
-    the polygon. Pixel centers, cover prefilter and exact refine all run
-    JVM-side."""
+    the polygon. The pixel centers go through ``pip_join`` as points keyed
+    by ``pix`` (``pip_join`` emits its own res-10 ``cell_id``)."""
     n_cells = 1 << (2 * res)
-    grid = spark.range(n_cells).select(F.col("id").alias("cell_id"))
-    x = F.expr(cells.x_from_cell_sql("cell_id", res))
-    y = F.expr(cells.y_from_cell_sql("cell_id", res))
-    pix = grid.select(
-        "cell_id",
+    grid = spark.range(n_cells).select(F.col("id").alias("pix"))
+    x = F.expr(cells.x_from_cell_sql("pix", res))
+    y = F.expr(cells.y_from_cell_sql("pix", res))
+    pts = grid.select(
+        "pix",
         cells.lon_center_col(x, res).alias("lon"),
         cells.lat_center_col(y, res).alias("lat"),
-        cells.parent_col(F.col("cell_id"), res - COVER_RES).alias("cover_cell"),
     )
-    cand = pix.join(F.broadcast(cover_df(spark)), "cover_cell", "inner")
-    hit = cand.filter(
-        F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
-    return hit.select(F.lit(res).alias("res"), "cell_id", "polygon_id")
+    hit = pip_join(pts, spark, keys=("pix",))
+    return hit.select(
+        F.lit(res).alias("res"), F.col("pix").alias("cell_id"), "polygon_id"
+    )
 
 
 def overlay_stats(spark: SparkSession, res: int = 7) -> DataFrame:

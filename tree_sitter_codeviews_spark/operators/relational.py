@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.pages import event_points_df
 from ..sources.testdata import load_table
 
 
@@ -403,17 +404,11 @@ def events_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user trajectory rollup — the geospatial sessionization shape
     (sort a user's pings by time, lag to the previous position, accumulate
     movement): (user_id, n_points, path_len, n_stops, max_step) with
-    positions on the integer res-10 grid (layers.EVT_*_SQL — exact, no
-    trig; L1 step length keeps everything BIGINT). The window partitions
-    by user (uniform key) and orders by (ts, event_id) so ties are
-    deterministic; one window pass + one per-user aggregate."""
-    from .. import layers
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    )
+    positions on the integer res-10 grid (sources.pages.event_points_df —
+    exact, no trig; L1 step length keeps everything BIGINT). The window
+    partitions by user (uniform key) and orders by (ts, event_id) so ties
+    are deterministic; one window pass + one per-user aggregate."""
+    ev = event_points_df(spark, sf_dir).select("user_id", "ts", "event_id", "ex", "ey")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     step = (
         F.abs(F.col("ex") - F.lag("ex").over(w))
@@ -468,9 +463,7 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per (cohort_day, offset_days) with the distinct returning users —
     day arithmetic in exact integer epoch-days so both engines agree. Two
     aggregates on the uniform user key, one distinct-count rollup."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.expr("CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT)").alias("day")
-    )
+    ev = event_points_df(spark, sf_dir).select("user_id", "day")
     cohort = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
     return (
         ev.join(cohort, "user_id")
@@ -487,9 +480,7 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer ppm — the ops-monitoring deviation feed (a day whose
     share_ppm sits far from expect_ppm is a spike or an outage). Two
     keyed aggregates + one broadcast of the per-type totals dim."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT)").alias("day")
-    )
+    ev = event_points_df(spark, sf_dir).select("event_type", "day")
     daily = ev.groupBy("event_type", "day").agg(F.count(F.lit(1)).alias("n"))
     tot = daily.groupBy("event_type").agg(
         F.sum("n").alias("total"), F.count(F.lit(1)).alias("n_days")

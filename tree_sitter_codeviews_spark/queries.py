@@ -8,7 +8,7 @@ sides (the driver's compare sorts columns by name before hashing).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .localdf import arrow_local_df
 
@@ -1781,7 +1781,7 @@ def webtext_geo_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a deterministic res-7 grid cell (x = host*13 % 128, y = host*29 %
     128 — a geo-IP dim in fixture form), pages aggregate per cell, and
     the res-5 parent supports the coarse rollup. Pure integer Morton
-    encode (cells.morton_col) + one aggregate — the webtext x geospatial
+    encode (cells.morton_sql) + one aggregate — the webtext x geospatial
     composition, no floats anywhere."""
     from . import cells
 
@@ -2565,12 +2565,8 @@ def geo_route_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on the uniform (user, cell) key."""
     from . import cells as cells_mod
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "ex", "ey",
     )
     from pyspark.sql import Window
 
@@ -2836,14 +2832,10 @@ def geo_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the four-determinant integer refine — the same SQL text the oracle
     runs quadratically (operators/segments.py)."""
     from .operators import segments
-    from .sources.testdata import load_table
-
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seg = (
@@ -2943,12 +2935,9 @@ def geo_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus side maps its own cell key and never shuffles before the
     final per-ping argmin (operators/segments.py:snap_to_lines)."""
     from .operators import segments
-    from .sources.testdata import load_table
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "event_id", "ex", "ey",
     )
     lines = spark.range(layers.N_LINES).select(
         F.col("id").alias("line_id"),
@@ -2981,12 +2970,8 @@ def geo_traj_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's window CTE."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t = (
@@ -3024,15 +3009,13 @@ def events_colocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the group-size cut above bounding any key's pair contribution at
     C(50,2). One distinct + one count + one equi-join + one pair
     aggregate; all exact integer, zero Python."""
-    from .sources.testdata import load_table
-
     ev = (
-        load_table(spark, sf_dir, "events")
+        pages_src.event_points_df(spark, sf_dir)
         .select(
             "user_id",
-            F.expr("CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT)").alias("day"),
-            F.shiftright(F.expr(layers.EVT_GX_SQL), 6).alias("cx"),
-            F.shiftright(F.expr(layers.EVT_GY_SQL), 6).alias("cy"),
+            "day",
+            F.shiftright("ex", 6).alias("cx"),
+            F.shiftright("ey", 6).alias("cy"),
         )
         .distinct()
         # ev feeds the hot-key count AND both pair sides — without the
@@ -3067,13 +3050,11 @@ def geo_od_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     one flow rollup; the OD table is grid-bounded (<= 64^2 rows)."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
+    ev = pages_src.event_points_df(spark, sf_dir).select(
         "user_id", "ts", "event_id",
-        F.expr("CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT)").alias("day"),
-        F.shiftright(F.expr(layers.EVT_GX_SQL), 7).alias("tx"),
-        F.shiftright(F.expr(layers.EVT_GY_SQL), 7).alias("ty"),
+        "day",
+        F.shiftright("ex", 7).alias("tx"),
+        F.shiftright("ey", 7).alias("ty"),
     )
     w = Window.partitionBy("user_id", "day").orderBy("ts", "event_id")
     wd = Window.partitionBy("user_id", "day").orderBy(
@@ -3155,13 +3136,8 @@ def events_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer, zero Python."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.withColumn(
@@ -3215,12 +3191,10 @@ def geo_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats. Reference parity: the per-scope aggregate family
     (SDFG_c.py's per-scope def counts) lifted to a per-tile time series.
     """
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.shiftright(F.expr(layers.EVT_GX_SQL), HOTSPOT_SHIFT).alias("tx"),
-        F.shiftright(F.expr(layers.EVT_GY_SQL), HOTSPOT_SHIFT).alias("ty"),
-        F.expr("CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT)").alias("day"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        F.shiftright("ex", HOTSPOT_SHIFT).alias("tx"),
+        F.shiftright("ey", HOTSPOT_SHIFT).alias("ty"),
+        "day",
     )
     # the single corpus-wide shuffle: observed (tile, day) counts. Every
     # downstream input (day span, tile list, zero-filled cube, n_pings)
@@ -3284,18 +3258,16 @@ def events_traj_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     size join. All exact integer, zero Python."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
     # the only corpus-wide pass: distinct (user, cell). Four downstream
     # branches (sizes, hot-cell cut, both join sides) reference it, so
     # localCheckpoint materializes the distinct result once — its size is
     # sum over users of |cells visited|, orders below the raw ping count.
     cells = (
-        load_table(spark, sf_dir, "events")
+        pages_src.event_points_df(spark, sf_dir)
         .select(
             "user_id",
-            F.shiftright(F.expr(layers.EVT_GX_SQL), TRAJSIM_SHIFT).alias("cx"),
-            F.shiftright(F.expr(layers.EVT_GY_SQL), TRAJSIM_SHIFT).alias("cy"),
+            F.shiftright("ex", TRAJSIM_SHIFT).alias("cx"),
+            F.shiftright("ey", TRAJSIM_SHIFT).alias("cy"),
         )
         .distinct()
         .localCheckpoint(eager=False)
@@ -3381,6 +3353,47 @@ def _fence_cover(spark: SparkSession) -> DataFrame:
     )
 
 
+def _in_fence() -> Column:
+    """Exact containment: the ping (ex, ey) lies in the fence's box."""
+    return (F.abs(F.col("ex") - F.col("fx")) <= FENCE_R) & (
+        F.abs(F.col("ey") - F.col("fy")) <= FENCE_R
+    )
+
+
+def _fence_hits(spark: SparkSession, ev: DataFrame) -> DataFrame:
+    """ev (with ex, ey) x every fence containing the ping, one row per
+    (ping, fence) with the fence's columns added. Two-phase containment
+    (operators/pip_join.py discipline): each ping computes its own cover
+    cell and equi-joins the broadcast cover map-side, then the exact box
+    test filters the cell-level candidates."""
+    ev = ev.withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
+        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
+    )
+    return ev.join(F.broadcast(_fence_cover(spark)), ["ccx", "ccy"]).filter(
+        _in_fence()
+    )
+
+
+def _fence_state(
+    spark: SparkSession, ev: DataFrame, keys: list[str], name: str
+) -> DataFrame:
+    """(keys..., name): each ping's state, the MIN fence_id containing it
+    (overlapping fences tie-break deterministically), -1 outside every
+    fence. ``keys`` must identify the ping. The broadcast cover left join
+    keeps outside-every-fence pings; candidates failing the box test
+    contribute NULL to min(), so ONE aggregate on the ping key yields the
+    state."""
+    ev = ev.withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
+        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
+    )
+    matched = F.when(_in_fence(), F.col("fence_id"))
+    return (
+        ev.join(F.broadcast(_fence_cover(spark)), ["ccx", "ccy"], "left")
+        .groupBy(*keys)
+        .agg(F.coalesce(F.min(matched), F.lit(-1)).alias(name))
+    )
+
+
 def events_geofence_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geofence dwell rollup — per (user, fence): ping count, dwell seconds,
     first entering event. The fence dim (100 gazetteer-derived Chebyshev
@@ -3390,22 +3403,10 @@ def events_geofence_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline — the join is map-side, the per-(user,fence) aggregate is
     the single shuffle). Reference parity: scope-containment rollup
     (c_parser.py:134-140) lifted to spatial fences."""
-    from .sources.testdata import load_table
-
-    cover = _fence_cover(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    ).withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
-        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "event_id", "sec", "ex", "ey"
     )
-    hits = ev.join(F.broadcast(cover), ["ccx", "ccy"]).filter(
-        (F.abs(F.col("ex") - F.col("fx")) <= FENCE_R)
-        & (F.abs(F.col("ey") - F.col("fy")) <= FENCE_R)
-    )
-    return hits.groupBy("user_id", "fence_id").agg(
+    return _fence_hits(spark, ev).groupBy("user_id", "fence_id").agg(
         F.count(F.lit(1)).alias("n_pings"),
         (F.max("sec") - F.min("sec")).alias("dwell_sec"),
         F.min("event_id").alias("first_event_id"),
@@ -3425,29 +3426,10 @@ def events_geofence_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SDFG_c.py last-writer tracking) over a spatial state variable."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    cover = _fence_cover(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    ).withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
-        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey"
     )
-    # left join keeps outside-every-fence pings; non-matching candidates
-    # contribute NULL to min() so one aggregate yields the per-ping state
-    matched = F.when(
-        (F.abs(F.col("ex") - F.col("fx")) <= FENCE_R)
-        & (F.abs(F.col("ey") - F.col("fy")) <= FENCE_R),
-        F.col("fence_id"),
-    )
-    pinged = (
-        ev.join(F.broadcast(cover), ["ccx", "ccy"], "left")
-        .groupBy("user_id", "ts", "event_id", "sec")
-        .agg(F.coalesce(F.min(matched), F.lit(-1)).alias("fence"))
-    )
+    pinged = _fence_state(spark, ev, ["user_id", "ts", "event_id", "sec"], "fence")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("fence").over(w)
     return (
@@ -3495,13 +3477,8 @@ def events_traj_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate on the edge."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     hops = ev.select(
@@ -3530,13 +3507,8 @@ def events_traj_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode — per-hop factor ceil(dt/STEP), no corpus-wide state."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     hops = ev.select(
@@ -3572,26 +3544,14 @@ def events_geofence_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-fence hourly occupancy — distinct users and raw pings inside
     each fence per UTC hour, the live-ops dashboard rollup behind every
     'how busy is this place right now' product. Reuses the broadcast
-    cover-cell containment join (events_geofence_dwell), then one
+    cover-cell containment join (_fence_hits), then one
     (fence, hour) aggregate with an exact distinct count; the key space
     is fences x hours (bounded by the dim and the time span), so the
     final shuffle is dimension-sized no matter how many pings flow in."""
-    from .sources.testdata import load_table
-
-    cover = _fence_cover(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("unix_timestamp(ts) div 3600").alias("hour"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    ).withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
-        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", F.expr("sec div 3600").alias("hour"), "ex", "ey"
     )
-    hits = ev.join(F.broadcast(cover), ["ccx", "ccy"]).filter(
-        (F.abs(F.col("ex") - F.col("fx")) <= FENCE_R)
-        & (F.abs(F.col("ey") - F.col("fy")) <= FENCE_R)
-    )
-    return hits.groupBy("fence_id", "hour").agg(
+    return _fence_hits(spark, ev).groupBy("fence_id", "hour").agg(
         F.count_distinct("user_id").alias("n_users"),
         F.count(F.lit(1)).alias("n_pings"),
     )
@@ -3612,17 +3572,11 @@ def events_mobility_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     term is hhi_ppm's sum(c^2) * 1e6, which overflows first when visits
     concentrate in one cell (c ~ n), at n ~ 3e6 pings/user. Beyond that,
     widen the squared terms to decimal(38)."""
-    from .sources.testdata import load_table
-
     # one pass, two chained aggregates, ZERO joins: the (user, cell) rollup
     # carries partial sums/extrema alongside the cell count, and the user
     # rollup combines them — 2 exchanges total vs the naive
     # base-JOIN-cells shape (4 exchanges + a join on the user key)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    )
+    ev = pages_src.event_points_df(spark, sf_dir).select("user_id", "ex", "ey")
     per_cell = ev.groupBy(
         "user_id",
         F.shiftright("ex", TRAJSIM_SHIFT).alias("cx"),
@@ -3667,12 +3621,10 @@ def geo_tile_rhythms(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact epoch arithmetic ((epoch div 86400 + 4) mod 7; 1970-01-01 was a
     Thursday) so both engines agree without timezone/locale functions.
     One aggregate; the key space is tiles x 7 x 24, dimension-bounded."""
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.shiftright(F.expr(layers.EVT_GX_SQL), HOTSPOT_SHIFT).alias("tx"),
-        F.shiftright(F.expr(layers.EVT_GY_SQL), HOTSPOT_SHIFT).alias("ty"),
-        F.expr("unix_timestamp(ts)").alias("sec"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        F.shiftright("ex", HOTSPOT_SHIFT).alias("tx"),
+        F.shiftright("ey", HOTSPOT_SHIFT).alias("ty"),
+        "sec",
     )
     return (
         ev.select(
@@ -3695,13 +3647,8 @@ def events_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, all partitioned by the uniform user key."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.withColumn(
@@ -3796,18 +3743,16 @@ def geo_idw_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     the projection (transform -> filter -> aggregate, all JVM codegen);
     the ONLY shuffle is the distinct over observed cells — the corpus
     never joins anything. Output: (cx, cy, n_stations, est)."""
-    from .sources.testdata import load_table
-
     # localCheckpoint after the distinct: the station HOF below is a ~4000
     # -node literal expression, and without the lineage cut it rides in
     # EVERY task closure / AQE replan of the corpus scan+distinct stages
     # (measured 7.3 s -> 2.2 s at sf0.1). The grid caps the materialized
     # table at 1024 rows, so the cut is free at any corpus size.
     cells = (
-        load_table(spark, sf_dir, "events")
+        pages_src.event_points_df(spark, sf_dir)
         .select(
-            F.shiftright(F.expr(layers.EVT_GX_SQL), TRAJSIM_SHIFT).alias("cx"),
-            F.shiftright(F.expr(layers.EVT_GY_SQL), TRAJSIM_SHIFT).alias("cy"),
+            F.shiftright("ex", TRAJSIM_SHIFT).alias("cx"),
+            F.shiftright("ey", TRAJSIM_SHIFT).alias("cy"),
         )
         .distinct()
         .localCheckpoint()
@@ -3849,12 +3794,7 @@ def geo_nearest_facility(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen; the catchment rollup on the 50-key station column
     is the only shuffle. Reference parity: the scope argmax family
     (SDFG_c.py per-scope modal pick) with a spatial cost key."""
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    )
+    ev = pages_src.event_points_df(spark, sf_dir).select("ex", "ey")
     # pack = d2 * 64 + (sid div STATION_MOD); unpack after the min. The
     # argmin is an UNROLLED least() over the 50 per-station distance
     # expressions: semantically the same fold as a HOF ``aggregate`` over
@@ -3897,15 +3837,9 @@ def events_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's distinct points."""
     import pandas as pd
 
-    from .sources.testdata import load_table
-
     ev = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr(layers.EVT_GX_SQL).alias("ex"),
-            F.expr(layers.EVT_GY_SQL).alias("ey"),
-        )
+        pages_src.event_points_df(spark, sf_dir)
+        .select("user_id", "ex", "ey")
         .distinct()
     )
 
@@ -4001,12 +3935,10 @@ def events_popular_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count shuffle is dimension-sized regardless of corpus size."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
+    ev = pages_src.event_points_df(spark, sf_dir).select(
         "user_id", "ts", "event_id",
-        F.shiftright(F.expr(layers.EVT_GX_SQL), TRAJSIM_SHIFT).alias("cx"),
-        F.shiftright(F.expr(layers.EVT_GY_SQL), TRAJSIM_SHIFT).alias("cy"),
+        F.shiftright("ex", TRAJSIM_SHIFT).alias("cx"),
+        F.shiftright("ey", TRAJSIM_SHIFT).alias("cy"),
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = ev.select(
@@ -4043,13 +3975,11 @@ def geo_tile_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform tile aggregate; everything after is dimension-sized."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
     tiles = (
-        load_table(spark, sf_dir, "events")
+        pages_src.event_points_df(spark, sf_dir)
         .select(
-            F.shiftright(F.expr(layers.EVT_GX_SQL), FENCE_SHIFT).alias("tx"),
-            F.shiftright(F.expr(layers.EVT_GY_SQL), FENCE_SHIFT).alias("ty"),
+            F.shiftright("ex", FENCE_SHIFT).alias("tx"),
+            F.shiftright("ey", FENCE_SHIFT).alias("ty"),
             "user_id",
         )
         .groupBy("tx", "ty")
@@ -4082,13 +4012,11 @@ def geo_choropleth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     tile rows in one aggregate before the single tiny rank window."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
     tiles = (
-        load_table(spark, sf_dir, "events")
+        pages_src.event_points_df(spark, sf_dir)
         .select(
-            F.shiftright(F.expr(layers.EVT_GX_SQL), HOTSPOT_SHIFT).alias("tx"),
-            F.shiftright(F.expr(layers.EVT_GY_SQL), HOTSPOT_SHIFT).alias("ty"),
+            F.shiftright("ex", HOTSPOT_SHIFT).alias("tx"),
+            F.shiftright("ey", HOTSPOT_SHIFT).alias("ty"),
         )
         .groupBy("tx", "ty")
         .agg(F.count(F.lit(1)).alias("n_pings"))
@@ -4169,13 +4097,8 @@ def events_stay_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/relational.py) lifted to derived intervals."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.withColumn(
@@ -4241,12 +4164,8 @@ def events_heading_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tile, octant) aggregate — the key space is 64 tiles x 8."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "ex", "ey",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     hops = ev.select(
@@ -4322,11 +4241,8 @@ def events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     user key."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec",
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -4365,27 +4281,10 @@ def events_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SDFG_c.py) materialized as a versioned dimension."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
-    cover = _fence_cover(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    ).withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
-        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey"
     )
-    matched = F.when(
-        (F.abs(F.col("ex") - F.col("fx")) <= FENCE_R)
-        & (F.abs(F.col("ey") - F.col("fy")) <= FENCE_R),
-        F.col("fence_id"),
-    )
-    pinged = (
-        ev.join(F.broadcast(cover), ["ccx", "ccy"], "left")
-        .groupBy("user_id", "ts", "event_id", "sec")
-        .agg(F.coalesce(F.min(matched), F.lit(-1)).alias("state"))
-    )
+    pinged = _fence_state(spark, ev, ["user_id", "ts", "event_id", "sec"], "state")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     runs = pinged.withColumn(
         "chg",
@@ -4425,12 +4324,10 @@ def geo_tile_day_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     are anchored at the corpus min day (broadcast scalar); spans beyond
     63 days would need a mask ARRAY — the overflow guard filters and the
     docstring contract documents it."""
-    from .sources.testdata import load_table
-
-    days = load_table(spark, sf_dir, "events").select(
-        F.shiftright(F.expr(layers.EVT_GX_SQL), HOTSPOT_SHIFT).alias("tx"),
-        F.shiftright(F.expr(layers.EVT_GY_SQL), HOTSPOT_SHIFT).alias("ty"),
-        F.expr("CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT)").alias("day"),
+    days = pages_src.event_points_df(spark, sf_dir).select(
+        F.shiftright("ex", HOTSPOT_SHIFT).alias("tx"),
+        F.shiftright("ey", HOTSPOT_SHIFT).alias("ty"),
+        "day",
     )
     d0 = days.agg(F.min("day").alias("d0"))
     masks = (
@@ -4514,12 +4411,7 @@ def events_hopping_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant) and aggregating per (window_start, event_type). This is
     exactly Spark's window(ts, '2 hours', '1 hour') semantics expressed
     in exact epoch integers so DuckDB mirrors it without interval types."""
-    from .sources.testdata import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-    )
+    ev = pages_src.event_points_df(spark, sf_dir).select("event_type", "sec")
     # windows covering sec: starts at slide-aligned k*S with
     # sec - W < k*S <= sec  =>  k in ((sec - W) div S, sec div S]
     k0 = F.expr(f"(sec - {HOP_WINDOW_S}) div {HOP_SLIDE_S} + 1")
@@ -4552,22 +4444,9 @@ def geo_fence_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode is constant-bounded per user; the final key space is fence
     pairs. Pairs with fewer than AFFINITY_MIN_BOTH co-visitors are
     noise-cut, mirrored in the oracle."""
-    from .sources.testdata import load_table
-
-    cover = _fence_cover(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    ).withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
-        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
-    )
+    ev = pages_src.event_points_df(spark, sf_dir).select("user_id", "ex", "ey")
     visits = (
-        ev.join(F.broadcast(cover), ["ccx", "ccy"])
-        .filter(
-            (F.abs(F.col("ex") - F.col("fx")) <= FENCE_R)
-            & (F.abs(F.col("ey") - F.col("fy")) <= FENCE_R)
-        )
+        _fence_hits(spark, ev)
         .select("user_id", "fence_id")
         .distinct()
         .localCheckpoint(eager=False)
@@ -4614,14 +4493,12 @@ def geo_tile_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     level jumped)."""
     from pyspark.sql import Window
 
-    from .sources.testdata import load_table
-
     daily = (
-        load_table(spark, sf_dir, "events")
+        pages_src.event_points_df(spark, sf_dir)
         .select(
-            F.shiftright(F.expr(layers.EVT_GX_SQL), HOTSPOT_SHIFT).alias("tx"),
-            F.shiftright(F.expr(layers.EVT_GY_SQL), HOTSPOT_SHIFT).alias("ty"),
-            F.expr("CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT)").alias("day"),
+            F.shiftright("ex", HOTSPOT_SHIFT).alias("tx"),
+            F.shiftright("ey", HOTSPOT_SHIFT).alias("ty"),
+            "day",
         )
         .groupBy("tx", "ty", "day")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -4716,31 +4593,15 @@ def events_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     need the user's LAST KNOWN state instead of their own position are
     the as-of family (operators/relational.events_asof) composed with the
     SCD-2 history (events_state_history)."""
-    from .sources.testdata import load_table
-
-    cover = _fence_cover(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value",
-        F.expr("unix_timestamp(ts)").alias("sec"),
-        F.expr(layers.EVT_GX_SQL).alias("ex"),
-        F.expr(layers.EVT_GY_SQL).alias("ey"),
-    ).withColumn("ccx", F.shiftright(F.col("ex"), FENCE_SHIFT)).withColumn(
-        "ccy", F.shiftright(F.col("ey"), FENCE_SHIFT)
-    )
-    matched = F.when(
-        (F.abs(F.col("ex") - F.col("fx")) <= FENCE_R)
-        & (F.abs(F.col("ey") - F.col("fy")) <= FENCE_R),
-        F.col("fence_id"),
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "event_type", "value", "sec", "ex", "ey"
     )
     # every ping resolves its state; purchases are ALSO pings here (the
     # events table is one stream), so the running state at a purchase row
     # includes the purchase's own position — "where was the user when
     # they bought", not "where were they last seen before"
-    pinged = (
-        ev.join(F.broadcast(cover), ["ccx", "ccy"], "left")
-        .groupBy("user_id", "ts", "event_id", "sec", "event_type", "value")
-        .agg(F.coalesce(F.min(matched), F.lit(-1)).alias("state"))
-    )
+    keys = ["user_id", "ts", "event_id", "sec", "event_type", "value"]
+    pinged = _fence_state(spark, ev, keys, "state")
     return (
         pinged.filter(F.col("event_type") == "purchase")
         .groupBy(F.col("state").alias("fence_id"))
@@ -4819,15 +4680,13 @@ def geo_route_friction(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64), max_cell_density."""
     from . import cells as cells_mod
 
-    from .sources.testdata import load_table
-
     route = geo_route_cells(spark, sf_dir)
     density = (
-        load_table(spark, sf_dir, "events")
+        pages_src.event_points_df(spark, sf_dir)
         .select(
             F.expr(cells_mod.morton_sql(
-                f"shiftright({layers.EVT_GX_SQL}, {TRAJSIM_SHIFT})",
-                f"shiftright({layers.EVT_GY_SQL}, {TRAJSIM_SHIFT})",
+                f"shiftright(ex, {TRAJSIM_SHIFT})",
+                f"shiftright(ey, {TRAJSIM_SHIFT})",
                 5,
             )).alias("cell_id")
         )

@@ -88,15 +88,15 @@ def _fs_shim_classpath() -> str | None:
 def get_spark(
     app_name: str = "tree_sitter_codeviews_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     cores: local parallelism (defaults to $SPARK_GRAFT_CPUS or '*').
-    shuffle_partitions: defaults to max(cores, 32) — sized so a shuffle
+    Shuffle partitions default to max(cores, 32), sized so a shuffle
     partition at bench scale stays well under executor memory; AQE
-    coalesces small ones back down at runtime.
+    coalesces small ones back down at runtime. extra_conf overrides any
+    conf set here.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -105,14 +105,12 @@ def get_spark(
     else:
         master = f"local[{cores}]"
         n = cores
-    if shuffle_partitions is None:
-        shuffle_partitions = max(n, 32)
     mem = driver_memory()
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(n, 32)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -124,10 +122,9 @@ def get_spark(
         # 32-core box. Lowering the coalesce floor keeps such stages
         # parallel; at production scale stages carry >> cores x 1 MB, so
         # the knob is inert there (coalescing only merges small
-        # partitions). Env-parameterised for deployments that prefer the
-        # stock 1 MB floor.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+        # partitions). A deployment that prefers the stock 1 MB floor
+        # passes it through extra_conf.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.driver.memory", mem)
         # -Xms pins the initial heap: incremental heap growth under load
         # causes full-GC storms with multi-x wall-clock variance in local

@@ -106,6 +106,22 @@ def doc_points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return points_from_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
 
 
+def event_points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table plus each ping's point and time keys, native ops.
+
+    Adds ``ex``/``ey`` (res-10 grid, ``layers.EVT_GX_SQL``/``EVT_GY_SQL``),
+    ``sec`` (epoch seconds) and ``day`` (epoch day). Callers select what
+    they use; column pruning drops the rest before the scan. Built as SQL
+    text for the same plan-build reason as ``points_from_ids``."""
+    return load_table(spark, sf_dir, "events").selectExpr(
+        "*",
+        f"{layers.EVT_GX_SQL} as ex",
+        f"{layers.EVT_GY_SQL} as ey",
+        "unix_timestamp(ts) as sec",
+        "CAST(floor(unix_timestamp(ts) / 86400.0) AS BIGINT) as day",
+    )
+
+
 def points_from_ids(docs: DataFrame) -> DataFrame:
     """Derive deterministic skewed points from any (doc_id) set — same
     formulas as ``layers.doc_grid_xy_np`` / the DuckDB oracle CTEs.
