@@ -1,8 +1,9 @@
 """Arms-equality pins for the size-adaptive driver arms of reach and
 reaching_definitions (graph_iter.py) — same discipline as
 tests/test_linkgraph_driver_arm.py: the driver arm and the distributed
-loop must return bit-identical row sets on fixtures exercising cycles,
-kills, multi-edges and unreachable nodes."""
+loop must return bit-identical row sets and equal schemas on fixtures
+exercising cycles, kills, multi-edges, edgeless seeds and unreachable
+nodes."""
 
 from __future__ import annotations
 
@@ -19,14 +20,22 @@ PAIRS = [(1, 2), (2, 4), (2, 4), (1, 3), (3, 5), (5, 4), (3, 1),
          (9, 9), (4, 6), (6, 7), (20, 21)]
 
 
+def _arms(distributed_arm, run, cols):
+    """``run()`` on the driver arm and on the distributed arm: assert both
+    schemas are equal and return both row sets as tuples of ``cols``."""
+    fast = run()
+    with distributed_arm():
+        slow = run()
+    assert fast.schema.simpleString() == slow.schema.simpleString()
+    return ({tuple(r[c] for c in cols) for r in fast.collect()},
+            {tuple(r[c] for c in cols) for r in slow.collect()})
+
+
 def test_reach_arms_equal(spark, distributed_arm):
     e = _edges(spark, PAIRS)
     seeds = spark.createDataFrame([(1,), (9,)], "node long")
-    driver = {(r.node, r.hops)
-              for r in graph_iter.reach(e, seeds).collect()}
-    with distributed_arm():
-        dist = {(r.node, r.hops)
-                for r in graph_iter.reach(e, seeds).collect()}
+    driver, dist = _arms(distributed_arm, lambda: graph_iter.reach(e, seeds),
+                         ("node", "hops"))
     assert driver == dist
     assert driver  # non-vacuous
 
@@ -35,12 +44,19 @@ def test_reach_arms_equal_under_max_iter_cut(spark, distributed_arm):
     # chain 0->1->...->7; max_iter=3 truncates both arms identically
     e = _edges(spark, [(i, i + 1) for i in range(7)])
     seeds = spark.createDataFrame([(0,)], "node long")
-    driver = {(r.node, r.hops)
-              for r in graph_iter.reach(e, seeds, max_iter=3).collect()}
-    with distributed_arm():
-        dist = {(r.node, r.hops)
-                for r in graph_iter.reach(e, seeds, max_iter=3).collect()}
+    driver, dist = _arms(distributed_arm,
+                         lambda: graph_iter.reach(e, seeds, max_iter=3),
+                         ("node", "hops"))
     assert driver == dist == {(0, 0), (1, 1), (2, 2), (3, 3)}
+
+
+def test_reach_edgeless_seed_arms_equal(spark, distributed_arm):
+    # seed 99 has no edges: reached at 0, reaches nothing, on both arms
+    e = _edges(spark, PAIRS)
+    seeds = spark.createDataFrame([(20,), (99,)], "node long")
+    driver, dist = _arms(distributed_arm, lambda: graph_iter.reach(e, seeds),
+                         ("node", "hops"))
+    assert driver == dist == {(20, 0), (21, 1), (99, 0)}
 
 
 def _rda_fixture(spark):
@@ -55,11 +71,9 @@ def _rda_fixture(spark):
 
 def test_rda_arms_equal(spark, distributed_arm):
     e, defs = _rda_fixture(spark)
-    driver = {(r.node, r.var, r.def_node)
-              for r in graph_iter.reaching_definitions(e, defs).collect()}
-    with distributed_arm():
-        dist = {(r.node, r.var, r.def_node)
-                for r in graph_iter.reaching_definitions(e, defs).collect()}
+    driver, dist = _arms(distributed_arm,
+                         lambda: graph_iter.reaching_definitions(e, defs),
+                         ("node", "var", "def_node"))
     assert driver == dist
     assert driver  # non-vacuous
     # the kill actually bites: def 1's var-0 fact must not pass node 4
@@ -70,13 +84,10 @@ def test_rda_arms_equal_under_max_iter_cut(spark, distributed_arm):
     # chain 0->1->...->9, one def at 0: max_iter=3 bounds fact depth at 4
     e = _edges(spark, [(i, i + 1) for i in range(9)])
     defs = spark.createDataFrame([(0, 0)], "node long, var long")
-    driver = {(r.node, r.var, r.def_node)
-              for r in graph_iter.reaching_definitions(
-                  e, defs, max_iter=3).collect()}
-    with distributed_arm():
-        dist = {(r.node, r.var, r.def_node)
-                for r in graph_iter.reaching_definitions(
-                    e, defs, max_iter=3).collect()}
+    driver, dist = _arms(
+        distributed_arm,
+        lambda: graph_iter.reaching_definitions(e, defs, max_iter=3),
+        ("node", "var", "def_node"))
     assert driver == dist == {(i, 0, 0) for i in range(1, 5)}
 
 

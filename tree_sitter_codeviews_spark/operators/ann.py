@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import quantize_col
+from .dedup import quantize_col, sq_norm_col
 
 
 def _query_set(embs: DataFrame, every: int = 50) -> DataFrame:
@@ -236,11 +236,7 @@ def topk_cosine_pandas(embs: DataFrame, k: int = 10, every: int = 50) -> DataFra
 
 
 def _with_norm(q: DataFrame) -> DataFrame:
-    return q.withColumn(
-        "norm",
-        F.aggregate(F.transform("qv", lambda x: x * x), F.lit(0).cast("long"),
-                    lambda acc, v: acc + v),
-    )
+    return q.withColumn("norm", sq_norm_col("qv"))
 
 
 def _ivf_route(
@@ -424,11 +420,7 @@ def lsh_bucketed_topk(
     bucketize = embedding_bucket_udf(dim, N_PLANES)
     qn = (
         embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
-        .withColumn(
-            "norm",
-            F.aggregate(F.transform("qv", lambda x: x * x),
-                        F.lit(0).cast("long"), lambda a, v: a + v),
-        )
+        .withColumn("norm", sq_norm_col("qv"))
         .withColumn("bucket", bucketize(F.col("qv")))
     )
     corpus = qn.select(

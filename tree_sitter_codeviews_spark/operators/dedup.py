@@ -401,6 +401,13 @@ def quantize_col(emb: F.Column) -> F.Column:
     return F.transform(emb, lambda x: F.round(x.cast("double") * 1000, 0).cast("long"))
 
 
+def sq_norm_col(q) -> F.Column:
+    """array<long> quantized embedding (a ``quantize_col`` output, as a
+    Column or column name) -> its exact int64 squared L2 norm."""
+    return F.aggregate(F.transform(q, lambda x: x * x), F.lit(0).cast("long"),
+                       lambda acc, v: acc + v)
+
+
 # --- bucketed embedding near-dup (the 10^12-row path) -----------------------
 #
 # Deterministic integer hyperplanes shared with the DuckDB oracle:
@@ -484,11 +491,8 @@ def embedding_lsh_dups(
     unlike recall-probabilistic LSH. One equi-join shuffle, no crossJoin."""
     qn = embs.select(
         "vec_id", quantize_col(F.col("embedding")).alias("q")
-    ).withColumn(
-        "norm",
-        F.aggregate(F.transform("q", lambda x: x * x), F.lit(0).cast("long"),
-                    lambda acc, v: acc + v),
-    ).withColumn("bucket", embedding_bucket_udf(dim, n_planes)(F.col("q")))
+    ).withColumn("norm", sq_norm_col("q")).withColumn(
+        "bucket", embedding_bucket_udf(dim, n_planes)(F.col("q")))
     # the bucketed table feeds the probe sides AND two array-fetch joins;
     # materialize once (at cluster scale: a checkpoint stage table). The
     # repartition fixes the materialized frame's parallelism: off a
@@ -537,9 +541,7 @@ def embedding_near_dups(embs: DataFrame, threshold: float = 0.95) -> DataFrame:
     Brute-force pair generation here (correctness baseline); the scale path
     is the hyperplane-LSH variant in ann.py."""
     q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("q"))
-    qn = q.withColumn(
-        "norm", F.aggregate(F.transform("q", lambda x: x * x), F.lit(0).cast("long"), lambda acc, v: acc + v)
-    )
+    qn = q.withColumn("norm", sq_norm_col("q"))
     a = qn.select(F.col("vec_id").alias("vec_id_a"), F.col("q").alias("qa"), F.col("norm").alias("norm_a"))
     b = qn.select(F.col("vec_id").alias("vec_id_b"), F.col("q").alias("qb"), F.col("norm").alias("norm_b"))
     dot = F.aggregate(

@@ -40,6 +40,24 @@ CLOSURE_ROW_CAP = 100_000
 DRIVER_FACT_CAP = 5_000_000
 
 
+def mirror_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """(a, b): both orientations of every edge, from ONE pass over
+    ``edges`` (explode of the two orientations) instead of a self-union:
+    Spark has no common-subplan reuse, so union(edges, edges.reversed)
+    executes the caller's edge pipeline twice — for CC consumers whose
+    edge table IS an expensive pair generator (exact-Jaccard in
+    train_set/dedup_groups, the LSH verify in dedup_groups_embedding)
+    that doubled the dominant stage."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+            )
+        ).alias("e")
+    ).select("e.a", "e.b")
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -68,25 +86,7 @@ def connected_components(
     from the edge set (isolated nodes: union them in afterwards, or seed
     with a node table before calling).
     """
-    # Mirror each edge with ONE pass over ``edges`` (explode of the two
-    # orientations) instead of a self-union: Spark has no common-subplan
-    # reuse, so union(edges, edges.reversed) executes the caller's edge
-    # pipeline twice — for CC consumers whose edge table IS an expensive
-    # pair generator (exact-Jaccard in train_set/dedup_groups, the LSH
-    # verify in dedup_groups_embedding) that doubled the dominant stage.
-    und = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .distinct()
-        .localCheckpoint()
-    )
+    und = mirror_edges(edges, src, dst).distinct().localCheckpoint()
     pdf = driver_arm.collect_if_small(und, driver_arm.ROW_CAP)
     if pdf is not None:
         return _components_driver(und, pdf)
@@ -168,28 +168,61 @@ def reach(
     seed_col: str = "node",
     max_iter: int = 50,
 ) -> DataFrame:
-    """(node, hops): min directed-BFS distance from any seed, seeds at 0.
+    """(node, hops): min directed-BFS distance from any seed, seeds at 0,
+    up to ``max_iter`` hops.
 
     SIZE-ADAPTIVE like ``connected_components``: up to
     ``driver_arm.ROW_CAP`` edges the BFS runs driver-side over the
-    collected adjacency (each frontier round of the distributed loop costs
-    3-4 jobs of fixed overhead — on a dim-sized graph the rounds are pure
-    latency). Above it, frontier BFS:
-    each round joins only the *frontier* (nodes first reached last round)
-    against the edge table and anti-joins the visited set — work per round
-    is proportional to the frontier, not the graph. Terminates when the
-    frontier empties (or max_iter). Both arms return identical (node, hops)
-    sets (pinned by test)."""
+    collected adjacency (``reach_driver``; each frontier round of the
+    distributed loop costs 3-4 jobs of fixed overhead — on a dim-sized
+    graph the rounds are pure latency). Above it, ``reach_loop`` over the
+    materialized edge frame. Both arms return identical (node, hops) sets
+    (pinned by test). The two arms are this module's one BFS: linkgraph's
+    crawl depth and bowtie waves call them too."""
     e = edges.select(F.col(src).alias("node"), F.col(dst).alias("nxt"))
+    s = seeds.select(F.col(seed_col).alias("node"))
     pdf = driver_arm.collect_if_small(e, driver_arm.ROW_CAP)
-    if pdf is not None:
-        return _reach_driver(e, pdf, seeds, seed_col, max_iter)
-    visited = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint()
-    )
+    if pdf is None:
+        # the loop consumes e every round
+        return reach_loop(e.localCheckpoint(), s, max_iter)
+    hops = reach_driver(
+        zip(pdf["node"].tolist(), pdf["nxt"].tolist()),
+        (r["node"] for r in s.distinct().collect()), max_iter)
+    t = e.schema["node"].dataType.simpleString()
+    return arrow_local_df(
+        e.sparkSession, list(hops.items()), f"node {t}, hops int")
+
+
+def reach_driver(pairs, seeds, max_iter: int) -> dict:
+    """Driver arm of ``reach``: {node: hops} by a worklist BFS from the
+    ``seeds`` values over the collected (node, nxt) ``pairs``."""
+    from collections import defaultdict, deque
+
+    adj = defaultdict(list)
+    for a, b in pairs:
+        adj[a].append(b)
+    hops = {v: 0 for v in seeds}
+    work = deque(hops)
+    while work:
+        v = work.popleft()
+        h = hops[v] + 1
+        if h > max_iter:
+            continue
+        for m in adj.get(v, ()):
+            if m not in hops:
+                hops[m] = h
+                work.append(m)
+    return hops
+
+
+def reach_loop(e: DataFrame, seeds: DataFrame, max_iter: int) -> DataFrame:
+    """Distributed arm of ``reach`` over a materialized (node, nxt) frame
+    ``e`` from the (node) frame ``seeds``: each round joins only the
+    *frontier* (nodes first reached last round) against ``e`` and
+    anti-joins the visited set — work per round is proportional to the
+    frontier, not the graph. Stops when the frontier empties (or at
+    ``max_iter``)."""
+    visited = seeds.distinct().withColumn("hops", F.lit(0)).localCheckpoint()
     frontier = visited
     for h in range(1, max_iter + 1):
         nxt = (
@@ -205,38 +238,6 @@ def reach(
         visited = visited.unionByName(nxt).localCheckpoint()
         frontier = nxt
     return visited
-
-
-def _reach_driver(
-    e: DataFrame, pdf, seeds: DataFrame, seed_col: str, max_iter: int
-) -> DataFrame:
-    """Driver-side multi-source BFS over the Arrow-collected edge list —
-    the small-graph arm of ``reach``. Same min-hop semantics, same
-    max_iter bound."""
-    from collections import defaultdict, deque
-
-    adj = defaultdict(list)
-    for a, b in zip(pdf["node"].tolist(), pdf["nxt"].tolist()):
-        adj[a].append(b)
-    hops = {
-        r[seed_col]: 0
-        for r in seeds.select(seed_col).distinct().collect()
-    }
-    work = deque(hops)
-    while work:
-        v = work.popleft()
-        h = hops[v] + 1
-        if h > max_iter:
-            continue
-        for m in adj.get(v, ()):
-            if m not in hops:
-                hops[m] = h
-                work.append(m)
-    t = e.schema["node"].dataType.simpleString()
-    return arrow_local_df(
-        e.sparkSession, [(n, h) for n, h in hops.items()],
-        f"node {t}, hops int",
-    )
 
 
 def reaching_definitions(

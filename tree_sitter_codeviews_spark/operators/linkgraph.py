@@ -7,8 +7,10 @@ integer arithmetic (gate-hashable — no float drift between engines).
 Engine shape: the rank table is (host, rank) — ORDERS smaller than the
 page/link tables. Each power iteration is one join (edges x ranks on src)
 plus one aggregate (sum per dst): the canonical iterative Spark workload.
-Nothing collects to the driver; the iteration count is fixed (k=10), so
-the plan is a static 10-stage pipeline Catalyst sees whole.
+The iteration counts are fixed so the oracle unrolls the same layers.
+Every fixpoint is size-adaptive (below); the BFS operators (``bfs_depth``,
+``bowtie``) run on ``graph_iter.reach``'s two arms, and PageRank and
+TrustRank share one recurrence (``_teleport_rank``).
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 
 from .. import driver_arm
 from ..localdf import arrow_local_df
+from . import graph_iter
 
 # PageRank in micro-units: damping 0.85 as the exact rational 85/100,
 # teleport mass 0.15 * 1e6 = 150000. All divisions are integer `div` with
@@ -55,25 +58,22 @@ def _triples(pdf) -> list[tuple]:
     return list(zip(pdf["src"], pdf["dst"], (int(x) for x in pdf["n"])))
 
 
-def _pagerank_rounds(
+def _rank_rounds(
     triples, node_hosts, seed_set, iterations: int
 ) -> list[tuple]:
-    """Driver-side PageRank/TrustRank fixpoint over collected host-pair
-    triples — exact mirror of the distributed loop's integer semantics:
-    out_deg counts EVERY out-edge of src (any dst); only src in the node
-    dim contribute (their rank is defined); inbound mass to dst outside
-    the node dim is discarded by the node-dim join. ``seed_set=None``
-    means plain PageRank (every node teleports); else the TrustRank
-    variant (teleport only at seeds, rank_0 = 1e6 at seeds, 0 elsewhere)."""
+    """Driver arm of ``_teleport_rank`` over collected host-pair triples —
+    exact mirror of the distributed loop's integer semantics: out_deg
+    counts EVERY out-edge of src (any dst); only src in the node dim
+    contribute (their rank is defined); inbound mass to dst outside the
+    node dim is discarded by the node-dim join. ``seed_set=None`` means
+    every node is a seed."""
     out_deg: dict = {}
     for s, _d, n in triples:
         out_deg[s] = out_deg.get(s, 0) + n
     nodes_l = list(node_hosts)
     node_set = set(nodes_l)
-    if seed_set is None:
-        rank = {v: RANK_SCALE for v in nodes_l}
-    else:
-        rank = {v: (RANK_SCALE if v in seed_set else 0) for v in nodes_l}
+    is_seed = {v: int(seed_set is None or v in seed_set) for v in nodes_l}
+    rank = {v: RANK_SCALE * is_seed[v] for v in nodes_l}
     for _ in range(iterations):
         inbound: dict = {}
         for s, d, n in triples:
@@ -81,18 +81,71 @@ def _pagerank_rounds(
             if r is None or d not in node_set:
                 continue
             inbound[d] = inbound.get(d, 0) + n * (r // out_deg[s])
-        if seed_set is None:
-            rank = {
-                v: TELEPORT_MICRO + 85 * inbound.get(v, 0) // 100
-                for v in nodes_l
-            }
-        else:
-            rank = {
-                v: (TELEPORT_MICRO if v in seed_set else 0)
-                + 85 * inbound.get(v, 0) // 100
-                for v in nodes_l
-            }
+        rank = {
+            v: TELEPORT_MICRO * is_seed[v] + 85 * inbound.get(v, 0) // 100
+            for v in nodes_l
+        }
     return [(v, rank[v]) for v in nodes_l]
+
+
+def _teleport_rank(
+    edges: DataFrame, nodes: DataFrame, seeds: DataFrame | None,
+    iterations: int,
+) -> DataFrame:
+    """The one rank recurrence behind ``pagerank_integer`` and
+    ``trustrank_integer``: rank_0 = 1e6 micro at seeds, 0 elsewhere; each
+    iteration every node sends ``rank div out_degree`` along each out-edge
+    and ``rank_{k+1} = (seed ? 150000 : 0) + 85 * inbound_sum div 100``.
+    ``seeds=None`` makes every node a seed (PageRank) with no seed collect
+    and no seed join.
+
+    Scale: each iteration shuffles once on src (join) and once on dst
+    (aggregate). The edge+degree frame is localCheckpointed once (it is
+    consumed k times); the ranks lineage is a static k-deep DAG that
+    Catalyst plans whole at k=10 — for much larger k, checkpoint every
+    few rounds, the discipline ``graph_iter`` already applies."""
+    w = _weighted_edges(edges)
+    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
+    if pdf is not None:
+        seed_set = None if seeds is None else {
+            r["host"] for r in seeds.select("host").collect()}
+        rows = _rank_rounds(
+            _triples(pdf), (r["host"] for r in nodes.collect()), seed_set,
+            iterations)
+        return arrow_local_df(nodes.sparkSession,
+            rows, "host string, rank_micro long")
+    out_deg = w.groupBy("src").agg(F.sum("n").alias("out_deg"))
+    ed = w.join(out_deg, "src").select("src", "dst", "n", "out_deg")
+    ed = ed.localCheckpoint()  # reused k times; cut the rebuild lineage
+    base = nodes.select(F.col("host").alias("node"))
+    if seeds is None:
+        rank0, teleport = F.lit(RANK_SCALE), F.lit(TELEPORT_MICRO)
+    else:
+        base = (
+            base.join(seeds.select(F.col("host").alias("node"),
+                                   F.lit(1).alias("is_seed")), "node", "left")
+            .select("node", F.coalesce(F.col("is_seed"), F.lit(0)).alias("is_seed"))
+            .localCheckpoint()  # consumed every iteration
+        )
+        rank0 = (F.col("is_seed") * RANK_SCALE).cast("long")
+        teleport = F.col("is_seed") * TELEPORT_MICRO
+    ranks = base.select("node", rank0.alias("rank_micro"))
+    for _ in range(iterations):
+        contribs = (
+            ed.join(ranks, ed["src"] == ranks["node"])
+            .select(
+                F.col("dst").alias("node"),
+                F.expr("n * (rank_micro div out_deg)").alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("inbound"))
+        )
+        ranks = base.join(contribs, "node", "left").select(
+            "node",
+            (teleport + F.expr("85 * coalesce(inbound, 0) div 100"))
+            .cast("long").alias("rank_micro"),
+        )
+    return ranks.select(F.col("node").alias("host"), "rank_micro")
 
 
 def pagerank_integer(
@@ -111,49 +164,10 @@ def pagerank_integer(
     Dangling nodes (no out-edges) simply don't emit — their mass retires
     to the teleport term, one of the standard dangling conventions.
 
-    Scale: ``edges`` is host-to-host (already aggregated below page
-    level); each iteration shuffles once on src (join) and once on dst
-    (aggregate). The edge+degree frame is localCheckpointed once (it is
-    consumed k times); the ranks lineage is a static k-deep DAG that
-    Catalyst plans whole at k=10 — for much larger k, checkpoint every
-    few rounds, the discipline ``graph_iter`` already applies.
+    ``edges`` is host-to-host (already aggregated below page level); the
+    recurrence is ``_teleport_rank`` with every node a seed.
     """
-    w = _weighted_edges(edges)
-    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
-    if pdf is not None:
-        rows = _pagerank_rounds(
-            _triples(pdf), (r["host"] for r in nodes.collect()), None,
-            iterations)
-        return arrow_local_df(nodes.sparkSession, 
-            rows, "host string, rank_micro long")
-    out_deg = w.groupBy("src").agg(F.sum("n").alias("out_deg"))
-    ed = w.join(out_deg, "src").select("src", "dst", "n", "out_deg")
-    ed = ed.localCheckpoint()  # reused k times; cut the rebuild lineage
-    ranks = nodes.select(
-        F.col("host").alias("node"), F.lit(RANK_SCALE).alias("rank_micro")
-    )
-    for _ in range(iterations):
-        contribs = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("n * (rank_micro div out_deg)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inbound"))
-        )
-        ranks = (
-            nodes.select(F.col("host").alias("node"))
-            .join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(TELEPORT_MICRO)
-                    + F.expr("85 * coalesce(inbound, 0) div 100")
-                ).alias("rank_micro"),
-            )
-        )
-    return ranks.select(F.col("node").alias("host"), "rank_micro")
+    return _teleport_rank(edges, nodes, None, iterations)
 
 
 def _hits_rounds(triples, node_hosts, iterations: int) -> list[tuple]:
@@ -162,23 +176,21 @@ def _hits_rounds(triples, node_hosts, iterations: int) -> list[tuple]:
     contribution table BEFORE the node-dim join (an edge endpoint outside
     the node dim still participates in the max)."""
     nodes_l = list(node_hosts)
+    rev = [(d, s, n) for s, d, n in triples]
+
+    def half_step(pairs, score: dict) -> dict:
+        raw: dict = {}
+        for a, b, n in pairs:
+            x = score.get(a)
+            if x is not None:
+                raw[b] = raw.get(b, 0) + n * x
+        mx = max(max(raw.values(), default=1), 1)
+        return {v: raw.get(v, 0) * RANK_SCALE // mx for v in nodes_l}
+
     hubs = {v: RANK_SCALE for v in nodes_l}
-    auths: dict = {}
     for _ in range(iterations):
-        araw: dict = {}
-        for s, d, n in triples:
-            h = hubs.get(s)
-            if h is not None:
-                araw[d] = araw.get(d, 0) + n * h
-        amax = max(max(araw.values(), default=1), 1)
-        auths = {v: araw.get(v, 0) * RANK_SCALE // amax for v in nodes_l}
-        hraw: dict = {}
-        for s, d, n in triples:
-            a = auths.get(d)
-            if a is not None:
-                hraw[s] = hraw.get(s, 0) + n * a
-        hmax = max(max(hraw.values(), default=1), 1)
-        hubs = {v: hraw.get(v, 0) * RANK_SCALE // hmax for v in nodes_l}
+        auths = half_step(triples, hubs)
+        hubs = half_step(rev, auths)
     return [(v, hubs[v], auths[v]) for v in nodes_l]
 
 
@@ -201,17 +213,18 @@ def hits_integer(
     same vector). All divisions are BIGINT ``div`` with identical
     truncation in DuckDB, so k iterations are bit-exact across engines.
 
-    Scale shape: each iteration is two (join + aggregate) passes on the
-    host-level edge table plus one SCALAR max aggregate that Spark plans
-    as a 1-row broadcast into the renormalization — no window over the
-    rank table, nothing on the driver. The edge frame is localCheckpointed
-    once (consumed 2k times). Each raw-contribution frame is ALSO
-    localCheckpointed: unlike PageRank's linear recurrence, HITS consumes
-    every contribution frame TWICE (the max aggregate and the renorm
-    join), so an unbroken lineage quadruples per iteration (~4^k plan
-    nodes — measured: plan stringification alone OOMs the driver at k=5).
-    The checkpoint materializes only node-dim rank tables, orders smaller
-    than the edge table, and keeps every plan iteration-local."""
+    Scale shape of the distributed arm: each iteration is two half-steps,
+    each one (join + aggregate) pass on the host-level edge table plus one
+    SCALAR max aggregate that Spark plans as a 1-row broadcast into the
+    renormalization — no window over the rank table. The edge frame is
+    localCheckpointed once (consumed 2k times). Each half-step's raw
+    contribution frame is ALSO localCheckpointed (load-bearing): unlike
+    PageRank's linear recurrence, HITS consumes every contribution frame
+    TWICE (the max aggregate and the renorm join), so an unbroken lineage
+    quadruples per iteration (~4^k plan nodes — measured: plan
+    stringification alone OOMs the driver at k=5). The checkpoint
+    materializes only node-dim rank tables, orders smaller than the edge
+    table, and keeps every plan iteration-local."""
     if iterations < 1:
         raise ValueError("hits_integer: iterations must be >= 1")
     ed = _weighted_edges(edges)
@@ -219,51 +232,36 @@ def hits_integer(
     if pdf is not None:
         rows = _hits_rounds(
             _triples(pdf), (r["host"] for r in nodes.collect()), iterations)
-        return arrow_local_df(nodes.sparkSession, 
+        return arrow_local_df(nodes.sparkSession,
             rows, "host string, hub_micro long, auth_micro long")
+
+    def half_step(score: DataFrame, frm: str, to: str, out: str) -> DataFrame:
+        # score (node, value) pushed along frm -> to edges, then
+        # L-inf renormed into column ``out``
+        raw = (
+            ed.join(score, ed[frm] == score["node"])
+            .groupBy(ed[to].alias("node"))
+            .agg(F.sum(F.col("n") * F.col(score.columns[1])).alias("raw"))
+        ).localCheckpoint()
+        mx = raw.agg(
+            F.greatest(F.coalesce(F.max("raw"), F.lit(1)), F.lit(1)).alias("mx")
+        )
+        return (
+            nodes.select(F.col("host").alias("node"))
+            .join(raw, "node", "left")
+            .crossJoin(F.broadcast(mx))
+            .select(
+                "node",
+                F.expr(f"coalesce(raw, 0) * {RANK_SCALE} div mx").alias(out),
+            )
+        )
+
     hubs = nodes.select(
         F.col("host").alias("node"), F.lit(RANK_SCALE).alias("hub_micro")
     )
-    auths = None
     for _ in range(iterations):
-        araw = (
-            ed.join(hubs, ed["src"] == hubs["node"])
-            .groupBy(ed["dst"].alias("node"))
-            .agg(F.sum(F.col("n") * F.col("hub_micro")).alias("raw"))
-        ).localCheckpoint()
-        amax = araw.agg(
-            F.greatest(F.coalesce(F.max("raw"), F.lit(1)), F.lit(1)).alias("mx")
-        )
-        auths = (
-            nodes.select(F.col("host").alias("node"))
-            .join(araw, "node", "left")
-            .crossJoin(F.broadcast(amax))
-            .select(
-                "node",
-                F.expr(
-                    f"coalesce(raw, 0) * {RANK_SCALE} div mx"
-                ).alias("auth_micro"),
-            )
-        )
-        hraw = (
-            ed.join(auths, ed["dst"] == auths["node"])
-            .groupBy(ed["src"].alias("node"))
-            .agg(F.sum(F.col("n") * F.col("auth_micro")).alias("raw"))
-        ).localCheckpoint()
-        hmax = hraw.agg(
-            F.greatest(F.coalesce(F.max("raw"), F.lit(1)), F.lit(1)).alias("mx")
-        )
-        hubs = (
-            nodes.select(F.col("host").alias("node"))
-            .join(hraw, "node", "left")
-            .crossJoin(F.broadcast(hmax))
-            .select(
-                "node",
-                F.expr(
-                    f"coalesce(raw, 0) * {RANK_SCALE} div mx"
-                ).alias("hub_micro"),
-            )
-        )
+        auths = half_step(hubs, "src", "dst", "auth_micro")
+        hubs = half_step(auths, "dst", "src", "hub_micro")
     return (
         hubs.join(auths, "node")
         .select(F.col("node").alias("host"), "hub_micro", "auth_micro")
@@ -326,8 +324,9 @@ def kcore(
     induced subgraph (degree may read < k only if the last round still
     peeled — same contract as the unrolled oracle by construction).
 
-    Scale shape: the undirected simple edge frame is built once
-    (one distinct = one shuffle) and localCheckpointed; each round is two
+    Scale shape: the undirected simple edge frame is built once (one
+    pass over ``edges`` with ``graph_iter.mirror_edges``, one distinct =
+    one shuffle) and localCheckpointed; each round is two
     broadcast-or-hash semi-joins against the (host-dim-sized) alive set +
     one partial-aggregated degree count — no window, no all-pairs. The
     alive set is localCheckpointed per round: it feeds BOTH endpoint
@@ -336,39 +335,31 @@ def kcore(
     ~4^k lineage-growth rationale as ``pagerank_integer``).
     """
     und = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-        )
+        graph_iter.mirror_edges(edges)
+        .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
     )
     pdf = driver_arm.collect_if_small(und, driver_arm.ROW_CAP)
     if pdf is not None:
-        pairs = list(zip(pdf["src"], pdf["dst"]))
-        alive_s = {s for s, _ in pairs}
-        deg: dict = {}
-        for _ in range(rounds):
-            deg = {}
-            for s, d in pairs:
-                if s in alive_s and d in alive_s:
-                    deg[s] = deg.get(s, 0) + 1
-            alive_s = {v for v, dg in deg.items() if dg >= k}
-        deg = {}
-        for s, d in pairs:
-            if s in alive_s and d in alive_s:
-                deg[s] = deg.get(s, 0) + 1
-        return arrow_local_df(edges.sparkSession, 
+        pairs = list(zip(pdf["a"], pdf["b"]))
+        alive = {a for a, _ in pairs}
+        # round ``rounds`` + 1 only counts the final induced degrees
+        for _ in range(rounds + 1):
+            deg: dict = {}
+            for a, b in pairs:
+                if a in alive and b in alive:
+                    deg[a] = deg.get(a, 0) + 1
+            alive = {v for v, dg in deg.items() if dg >= k}
+        return arrow_local_df(edges.sparkSession,
             sorted(deg.items()), "host string, degree long")
-    alive = und.select(F.col("src").alias("host")).distinct()
+    alive = und.select(F.col("a").alias("host")).distinct()
 
     def _induced_deg(alive_hosts: DataFrame) -> DataFrame:
         return (
-            und.join(alive_hosts.withColumnRenamed("host", "src"), "src")
-            .join(alive_hosts.withColumnRenamed("host", "dst"), "dst")
-            .groupBy("src")
+            und.join(alive_hosts.withColumnRenamed("host", "a"), "a")
+            .join(alive_hosts.withColumnRenamed("host", "b"), "b")
+            .groupBy("a")
             .agg(F.count(F.lit(1)).alias("degree"))
         )
 
@@ -376,10 +367,10 @@ def kcore(
         alive = (
             _induced_deg(alive)
             .filter(F.col("degree") >= k)
-            .select(F.col("src").alias("host"))
+            .select(F.col("a").alias("host"))
             .localCheckpoint()
         )
-    return _induced_deg(alive).select(F.col("src").alias("host"), "degree")
+    return _induced_deg(alive).select(F.col("a").alias("host"), "degree")
 
 
 def trustrank_integer(
@@ -403,71 +394,9 @@ def trustrank_integer(
     a shared scale factor does not disturb). Bit-exact across engines —
     the DuckDB oracle unrolls the same k layers.
 
-    Scale shape: identical to ``pagerank_integer`` — the trust table is
-    host-dim-sized, each iteration one shuffle join + one aggregate, the
-    edge+degree frame localCheckpointed once and consumed k times.
+    The recurrence is ``_teleport_rank`` with the given seeds.
     """
-    w = _weighted_edges(edges)
-    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
-    if pdf is not None:
-        seed_set = {r["host"] for r in seeds.select("host").collect()}
-        rows = _pagerank_rounds(
-            _triples(pdf), (r["host"] for r in nodes.collect()), seed_set,
-            iterations)
-        return arrow_local_df(nodes.sparkSession, 
-            rows, "host string, rank_micro long")
-    out_deg = w.groupBy("src").agg(F.sum("n").alias("out_deg"))
-    ed = w.join(out_deg, "src").select("src", "dst", "n", "out_deg")
-    ed = ed.localCheckpoint()  # reused k times; cut the rebuild lineage
-    seed_flag = (
-        nodes.select(F.col("host").alias("node"))
-        .join(seeds.select(F.col("host").alias("node"), F.lit(1).alias("is_seed")),
-              "node", "left")
-        .select("node", F.coalesce(F.col("is_seed"), F.lit(0)).alias("is_seed"))
-        .localCheckpoint()  # consumed every iteration
-    )
-    ranks = seed_flag.select(
-        "node", (F.col("is_seed") * RANK_SCALE).cast("long").alias("rank_micro")
-    )
-    for _ in range(iterations):
-        contribs = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("n * (rank_micro div out_deg)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inbound"))
-        )
-        ranks = (
-            seed_flag.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("is_seed") * TELEPORT_MICRO
-                    + F.expr("85 * coalesce(inbound, 0) div 100")
-                ).cast("long").alias("rank_micro"),
-            )
-        )
-    return ranks.select(F.col("node").alias("host"), "rank_micro")
-
-
-def _bfs_rounds(pairs, seed_hosts, rounds: int, costs=None) -> dict:
-    """Driver-side synchronous min-relaxation over collected (src, dst)
-    pairs: BFS hop depth when ``costs`` is None, else Bellman-Ford with
-    ``costs[(src, dst)]`` edge weights — exact mirrors of the distributed
-    loops (each round relaxes from the PREVIOUS round's snapshot)."""
-    reached = {v: 0 for v in seed_hosts}
-    for _ in range(rounds):
-        snap = dict(reached)
-        for s, d in pairs:
-            c = snap.get(s)
-            if c is None:
-                continue
-            step = c + (1 if costs is None else costs[(s, d)])
-            if d not in reached or step < reached[d]:
-                reached[d] = step
-    return reached
+    return _teleport_rank(edges, nodes, seeds, iterations)
 
 
 def bfs_depth(
@@ -481,61 +410,26 @@ def bfs_depth(
     hub/navigation-heavy, deep pages are where both long-tail content and
     crawler traps live.
 
-    Semantics: depth(seed) = 0; each synchronous round relaxes
-    ``depth(dst) = min(depth(dst), depth(src) + 1)`` across every edge.
-    All-integer, no tie-breaking needed (min is order-free), so the result
-    is bit-reproducible and the DuckDB oracle unrolls the identical
-    ``rounds`` layers. ``rounds`` is FIXED for the oracle mirror; the
-    returned depths are the exact BFS distances whenever round ``rounds``
-    discovered nothing new (converged) — at corpus scale run the same
-    loop to convergence, stopping when the reached-set count is stable.
+    Semantics: depth(seed) = 0; depth(v) = the fewest hops from any seed,
+    for hosts within ``rounds`` hops. All-integer and order-free, so the
+    result is bit-reproducible and the DuckDB oracle unrolls ``rounds``
+    synchronous min-relax layers (``depth(dst) = min(depth(dst),
+    depth(src) + 1)``), which compute the same set. Hosts further than
+    ``rounds`` hops are cut; the result is the whole BFS whenever the
+    frontier empties within ``rounds``.
 
     Returns (host, depth) for REACHED hosts only; unreached hosts are
     absent (their depth is not representable, and downstream joins want
     the miss, not a sentinel).
 
-    Scale shape: the reached table is host-dimension-sized (orders below
-    the page/link tables); each round is one shuffle join on src + one
-    min-aggregate on dst. Multi-edges are deduped once up front (distinct
-    = one shuffle) — multiplicity cannot change a min-depth. The reached
-    set is localCheckpointed per round: it feeds both the propagate join
-    and the min-merge union, so without the cut the plan doubles every
-    round (the ~4^k lineage-growth rationale of ``kcore`` /
-    ``pagerank_integer``). For graphs where only the newest frontier
-    matters (very deep BFS), subtract the visited set and expand the
-    frontier alone — same plan per round, smaller probe side; at host-dim
-    sizes the min-merge form is simpler and the probe side is already
-    small.
+    This is ``graph_iter.reach`` over the distinct (src, dst) pairs
+    (multiplicity cannot change a min-depth, and the distinct keeps the
+    driver-arm probe at host-pair size), renamed, with hops as bigint.
     """
-    ed = edges.select("src", "dst").distinct().localCheckpoint()
-    pdf = driver_arm.collect_if_small(ed, driver_arm.ROW_CAP)
-    if pdf is not None:
-        reached_d = _bfs_rounds(
-            list(zip(pdf["src"], pdf["dst"])),
-            (r["host"] for r in seeds.select("host").collect()), rounds)
-        return arrow_local_df(edges.sparkSession, 
-            sorted(reached_d.items()), "host string, depth long")
-    return _bfs_loop(ed, seeds, rounds)
-
-
-def _bfs_loop(ed: DataFrame, seeds: DataFrame, rounds: int) -> DataFrame:
-    """Distributed arm of ``bfs_depth`` over the materialized distinct
-    (src, dst) frame ``ed``."""
-    reached = seeds.select(
-        F.col("host"), F.lit(0).cast("long").alias("depth")
-    )
-    for _ in range(rounds):
-        step = (
-            ed.join(reached, ed["src"] == reached["host"])
-            .select(F.col("dst").alias("host"), (F.col("depth") + 1).alias("depth"))
-        )
-        reached = (
-            reached.unionAll(step)
-            .groupBy("host")
-            .agg(F.min("depth").alias("depth"))
-            .localCheckpoint()
-        )
-    return reached
+    return graph_iter.reach(
+        edges.select("src", "dst").distinct(), seeds,
+        seed_col="host", max_iter=rounds,
+    ).select(F.col("node").alias("host"), F.col("hops").cast("long").alias("depth"))
 
 
 def bowtie(
@@ -556,25 +450,30 @@ def bowtie(
     cannot split further; Broder et al. lump them the same way without
     extra BFS waves).
 
-    Determinism: pure reachability (min-relax BFS, order-free), so the
-    result is bit-reproducible and the oracle unrolls the same layers.
-    ``rounds`` is fixed for the oracle mirror; the classes are exact
-    whenever both BFS waves converge within ``rounds`` (verify round
-    r == r+1 at the target scale, as the callers do on their fixtures).
+    Determinism: pure reachability (order-free), so the result is
+    bit-reproducible and the oracle unrolls the same layers. ``rounds``
+    is fixed for the oracle mirror; the classes are exact whenever both
+    BFS waves converge within ``rounds`` (verify round r == r+1 at the
+    target scale, as the callers do on their fixtures).
 
-    Scale shape: two ``bfs_depth`` loops over the one distinct edge frame
-    (each: one shuffle join + one min-aggregate per round over a
-    host-dim-sized reached table) plus two broadcast-able host-dim left
-    joins for the classification — nothing here ever touches page-level
-    row counts."""
-    ed = edges.select("src", "dst").distinct().localCheckpoint()
+    Scale shape: the distinct edge frame is materialized and probed once;
+    both waves run through the same arm of ``graph_iter.reach``
+    (``reach_driver`` on the collected pairs, or two ``reach_loop``s over
+    the materialized frame and its reverse), plus two broadcast-able
+    host-dim left joins for the classification — nothing here ever
+    touches page-level row counts."""
+    ed = (
+        edges.select(F.col("src").alias("node"), F.col("dst").alias("nxt"))
+        .distinct()
+        .localCheckpoint()
+    )
     pdf = driver_arm.collect_if_small(ed, driver_arm.ROW_CAP)
     if pdf is not None:
-        pairs = list(zip(pdf["src"], pdf["dst"]))
+        pairs = list(zip(pdf["node"], pdf["nxt"]))
         node_l = [r["host"] for r in nodes.collect()]
         seed = [pivot] if pivot in set(node_l) else []
-        fwd_d = _bfs_rounds(pairs, seed, rounds)
-        bwd_d = _bfs_rounds([(d, s) for s, d in pairs], seed, rounds)
+        fwd_d = graph_iter.reach_driver(pairs, seed, rounds)
+        bwd_d = graph_iter.reach_driver([(d, s) for s, d in pairs], seed, rounds)
         rows = [
             (
                 v,
@@ -586,12 +485,13 @@ def bowtie(
             for v in node_l
         ]
         return arrow_local_df(nodes.sparkSession, rows, "host string, cls string")
-    pv = nodes.filter(F.col("host") == pivot)
-    fwd = _bfs_loop(ed, pv, rounds).select("host", F.lit(1).alias("_f"))
-    bwd = _bfs_loop(
-        ed.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+    pv = nodes.filter(F.col("host") == pivot).select(F.col("host").alias("node"))
+    fwd = graph_iter.reach_loop(ed, pv, rounds).select(
+        F.col("node").alias("host"), F.lit(1).alias("_f"))
+    bwd = graph_iter.reach_loop(
+        ed.select(F.col("nxt").alias("node"), F.col("node").alias("nxt")),
         pv, rounds,
-    ).select("host", F.lit(1).alias("_b"))
+    ).select(F.col("node").alias("host"), F.lit(1).alias("_b"))
     return (
         nodes.join(fwd, "host", "left")
         .join(bwd, "host", "left")
@@ -768,9 +668,14 @@ def cheapest_paths(
     convergence (unlike BFS, a cheaper longer route may still exist
     beyond the horizon; at corpus scale iterate to a fixpoint instead).
     All-integer min-relaxation: order-free, bit-reproducible, oracle
-    unrolls identical rounds. Scale shape: identical to bfs_depth — the
-    weighted edge view is host-dim-bounded and localCheckpointed once;
-    each round is one join + one min-aggregate."""
+    unrolls identical rounds. Scale shape: the weighted edge view is
+    host-dim-bounded and localCheckpointed once; each distributed round
+    is one join + one min-aggregate into the reached table, which is
+    localCheckpointed per round (it feeds both the relax join and the
+    min-merge union, so an unbroken lineage doubles every round). BFS
+    (``bfs_depth``) is the unit-cost case, but runs the frontier loop of
+    ``graph_iter.reach`` instead: with unit costs the first hop that
+    reaches a host is final, so it never re-relaxes the visited set."""
     w = (
         edges.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n_links"))
@@ -782,15 +687,14 @@ def cheapest_paths(
     )
     pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
     if pdf is not None:
-        pairs = list(zip(pdf["src"], pdf["dst"]))
-        costs = {
-            (s, d): int(c)
-            for s, d, c in zip(pdf["src"], pdf["dst"], pdf["edge_cost"])
-        }
-        reached_d = _bfs_rounds(
-            pairs, (r["host"] for r in seeds.select("host").collect()),
-            rounds, costs=costs)
-        return arrow_local_df(edges.sparkSession, 
+        triples = list(zip(pdf["src"], pdf["dst"], (int(c) for c in pdf["edge_cost"])))
+        reached_d = {r["host"]: 0 for r in seeds.select("host").collect()}
+        for _ in range(rounds):
+            snap = dict(reached_d)  # relax from the PREVIOUS round, as the loop does
+            for s, d, c in triples:
+                if s in snap and (d not in reached_d or snap[s] + c < reached_d[d]):
+                    reached_d[d] = snap[s] + c
+        return arrow_local_df(edges.sparkSession,
             sorted(reached_d.items()), "host string, cost long")
     reached = seeds.select(F.col("host"), F.lit(0).cast("long").alias("cost"))
     for _ in range(rounds):
