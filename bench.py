@@ -595,19 +595,23 @@ def _timed_count(fn, spark, sf_dir: str, reps: int,
                  group: str) -> tuple[float, float, float, int]:
     """Min-of-``reps`` wall of ``fn(spark, sf_dir).count()``. Returns the
     fastest rep's (wall, build_s, exec_s, index); wall = build_s + exec_s,
-    and rep ``i``'s jobs run under the job group ``f"{group}-{i}"``."""
+    and rep ``i``'s jobs run under the job group ``f"{group}-{i}"`` and
+    carry the job tag of that name, which the streams it starts inherit."""
     import gc
 
     gc.collect()  # drop prior queries' localCheckpoint blocks before timing
     sc = spark.sparkContext
     best = (float("inf"), 0.0, 0.0, -1)
     for i in range(reps):
-        sc.setJobGroup(f"{group}-{i}", f"{group} rep {i}")
+        rep = f"{group}-{i}"
+        sc.setJobGroup(rep, f"{group} rep {i}")
+        sc.addJobTag(rep)
         t0 = time.monotonic()
         df = fn(spark, sf_dir)
         t1 = time.monotonic()
         df.count()
         t2 = time.monotonic()
+        sc.removeJobTag(rep)
         if t2 - t0 < best[0]:
             best = (t2 - t0, t1 - t0, t2 - t1, i)
     sc.setLocalProperty("spark.jobGroup.id", None)
@@ -618,7 +622,9 @@ def _timed_count(fn, spark, sf_dir: str, reps: int,
 def _layers(spark, group: str, build_s: float, exec_s: float) -> dict:
     """Layer split of one timed rep, read from Spark's in-process status
     store (no event log, which inflates multi-job walls): the jobs of job
-    group ``group``, their stages' JVM task CPU, the executor run time not
+    group ``group`` plus those of the streams the rep started (a stream
+    runs its jobs under its own group, its run id, but keeps the rep's job
+    tag ``group``), their stages' JVM task CPU, the executor run time not
     spent on JVM CPU (``py_gap_s``: Python workers and waits), shuffle
     writes and spill. ``stages`` lists every submitted stage, slowest run
     time first."""
@@ -631,7 +637,8 @@ def _layers(spark, group: str, build_s: float, exec_s: float) -> dict:
     store = jsc.statusStore()
     empty = sc._jvm.java.util.ArrayList()
     no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
-    jobs = tracker.getJobIdsForGroup(group)
+    jobs = set(tracker.getJobIdsForGroup(group))
+    jobs.update(jsc.statusTracker().getJobIdsForTag(group))
     stage_ids = sorted({
         sid for j in jobs if (info := tracker.getJobInfo(j)) is not None
         for sid in info.stageIds

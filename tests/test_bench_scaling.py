@@ -85,6 +85,24 @@ def test_bench_child_and_stage_modes_roundtrip(sf_tiny, tmp_path):
         assert s["wall"] >= 0
 
 
+def test_layers_count_the_jobs_of_the_streams_a_rep_starts(spark, sf_tiny):
+    """A drained stream runs its jobs under its own job group; the rep's
+    layer record still counts them, its stateful stage included."""
+    import bench
+    from tree_sitter_codeviews_spark import queries
+
+    group = "layers-stream"
+    _, build_s, exec_s, best = bench._timed_count(
+        queries.events_stream_windows, spark, sf_tiny, 1, group)
+    lay = bench._layers(spark, f"{group}-{best}", build_s, exec_s)
+    tracker = spark.sparkContext.statusTracker()
+    assert lay["jobs"] > len(tracker.getJobIdsForGroup(f"{group}-{best}"))
+    # the stateful stage: one task per state partition, one per core
+    cores = spark.sparkContext.defaultParallelism
+    assert any("DataStreamWriter.start" in s["name"] and s["n_tasks"] == cores
+               for s in lay["stages"]), lay
+
+
 def test_stage_plan_delta_derivation(monkeypatch):
     """_run_stage_plan spawns one child per (query, stage) and derives
     cumulative deltas for web_ingest only."""

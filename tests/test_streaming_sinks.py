@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import json
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from tree_sitter_codeviews_spark import streaming
 from tree_sitter_codeviews_spark.operators.relational import events_sessions
@@ -47,6 +50,60 @@ def test_stream_sessionize_matches_batch(spark, sf_tiny):
         ).collect()
     }
     assert got == want
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def test_drain_runs_one_state_partition_per_core(spark, sf_tiny, monkeypatch):
+    """The drain's stateful operator gets one state partition per core,
+    and the caller's shuffle-partition setting survives the call."""
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        q = real_start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get(SHUFFLE)
+    assert int(before) != cores  # else the check below proves nothing
+    streaming.run_available_now(
+        streaming.windowed_event_counts(streaming.stream_events(spark, sf_tiny))
+    )
+    assert spark.conf.get(SHUFFLE) == before
+    (q,) = started
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == cores
+
+
+def test_drain_restores_conf_when_start_raises(spark, sf_tiny):
+    before = spark.conf.get(SHUFFLE)
+    # complete mode needs a streaming aggregation; dropDuplicates is not one
+    with pytest.raises(AnalysisException):
+        streaming.run_available_now(
+            streaming.stream_dedup_hashes(
+                streaming.stream_documents(spark, sf_tiny)),
+            mode="complete",
+        )
+    assert spark.conf.get(SHUFFLE) == before
+
+
+def test_stream_sources_infer_schema_once(spark, sf_tiny):
+    streaming.stream_events(spark, sf_tiny)
+    streaming.stream_documents(spark, sf_tiny)
+    sc = spark.sparkContext
+    group = "test-stream-sources-schema-once"
+    sc.setJobGroup(group, "second stream source calls")
+    try:
+        streaming.stream_events(spark, sf_tiny)
+        streaming.stream_documents(spark, sf_tiny)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def _tiny_graph(spark):

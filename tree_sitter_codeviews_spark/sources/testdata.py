@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -27,18 +28,24 @@ TABLES = (
 _SCHEMA_CACHE: dict = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """Schema of table ``name``, inferred once per file state."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
     except OSError:
-        return spark.read.parquet(path)
+        return spark.read.parquet(path).schema  # not a local file: no key
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
         _SCHEMA_CACHE[key] = schema
-    return spark.read.schema(schema).parquet(path)
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.schema(table_schema(spark, sf_dir, name)).parquet(
+        os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -22,7 +22,9 @@ Scale notes: the windowed aggregation shuffles on (window, event_type) with
 map-side partial aggregation; the watermark bounds state size (windows
 older than watermark are evicted). The stateful sessionizer partitions by
 user_id — state per key is O(1) (last ts + counter), the shape that holds
-at 10^9 users.
+at 10^9 users. A drain keeps one state partition per core (see
+``run_available_now``): at gate scale the per-partition state-store open
+and commit, not the rows, sets a drain's wall.
 """
 
 from __future__ import annotations
@@ -32,19 +34,21 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources.testdata import table_schema
+
 _sink_counter = itertools.count()
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over the events parquet (file source)."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # the file source needs a directory basePath: glob the single parquet
     # (at production this is the ingest drop directory and the glob is moot)
     path = f"{sf_dir}/events.parquet*"
     # watermarks require TIMESTAMP (LTZ); the table stores NTZ. Session TZ
     # is pinned UTC (session.py), so the cast is wall-clock identity.
     return (
-        spark.readStream.schema(schema).parquet(path)
+        spark.readStream.schema(table_schema(spark, sf_dir, "events"))
+        .parquet(path)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
 
@@ -89,23 +93,46 @@ def run_available_now(df: DataFrame, mode: str = "complete") -> DataFrame:
     gate query and nothing else. A production continuous job writes
     append/update mode to a table sink (parquet/Kafka/Delta-style) with a
     checkpointLocation; never let this memory-sink pattern migrate into
-    ``jobs/``."""
+    ``jobs/``.
+
+    STATE PARTITIONS = CORES: ``start()`` runs with
+    ``spark.sql.shuffle.partitions`` set to ``defaultParallelism``, and the
+    caller's value is restored as soon as it returns. The stream clones the
+    session at ``start()``, and batch 0 records the count in its offset log
+    as the number of state partitions; AQE is off for stateful streams, so
+    nothing coalesces them. Every state partition opens and commits its own
+    state store, which at gate scale costs far more than its few thousand
+    rows: the sf0.01 windows drain on 4 cores sums 1.0-1.2 s of commit time
+    at 32 partitions and 0.1-0.15 s at 4. A drain always starts from a fresh
+    temporary checkpoint, so no recorded count conflicts with it. A
+    checkpointed job in ``jobs/`` must not copy this: its offset log pins
+    the count at the first run, and its state is sized by the data, not by
+    one host's cores.
+    """
+    spark = df.sparkSession
     name = f"tscv_stream_sink_{next(_sink_counter)}"
-    q = (
+    writer = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
         .trigger(availableNow=True)
-        .start()
     )
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(key, prior)
     q.awaitTermination()
-    return df.sparkSession.table(name)
+    return spark.table(name)
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over the documents parquet (file source)."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return spark.readStream.schema(schema).parquet(f"{sf_dir}/documents.parquet*")
+    return spark.readStream.schema(
+        table_schema(spark, sf_dir, "documents")
+    ).parquet(f"{sf_dir}/documents.parquet*")
 
 
 def stream_dedup_hashes(docs: DataFrame) -> DataFrame:
@@ -183,10 +210,12 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per microbatch — measured 5.77 s vs 6.33 s (min-of-3, sf0.1,
     local[32]) against the two-source form, identical 775-row output.
     Each leg is watermarked 1 hour; the join condition carries the
-    event-time range (required for state expiry in a real run). The
-    remaining ~5.5 s at sf0.1 is per-microbatch FIXED cost (state-store
-    setup + drain, AQE off in stateful streaming), not data volume — see
-    BASELINE.md. On bounded availableNow input the inner join emits a
+    event-time range (required for state expiry in a real run). The join
+    keeps four state stores per state partition, so store commits are a
+    large share of its drain: with ``run_available_now``'s one partition
+    per core, sf0.01 on 4 cores opens 16 store instances per batch instead
+    of 128, and the drain's summed commit time falls from 6.6-7.6 s to
+    0.7-0.9 s. On bounded availableNow input the inner join emits a
     deterministic row set, so the oracle is the batch self-join with the
     identical predicate.
     """
