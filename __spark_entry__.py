@@ -307,7 +307,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geo_raster_compact": q.geo_raster_compact,
         "geo_overlay_stats": q.geo_overlay_stats,
         "dedup_embedding": q.dedup_embedding,  # baseline-only (all-pairs correctness ref for dedup_embedding_lsh)
-        "ann_cosine_topk": q.ann_cosine_topk,  # baseline-only (brute-force recall GT); rows-only (float ULP)
+        "ann_cosine_topk": q.ann_cosine_topk,  # baseline-only (brute-force recall GT)
         "text_tokens": q.text_tokens,
         "text_tokens_bpe": q.text_tokens_bpe,
         "text_sample_stratified": q.text_sample_stratified,
@@ -588,6 +588,7 @@ def oracle_sql() -> dict[str, str]:
         "ann_pq_topk": oracle.ann_pq_sql(),
         "ann_ivfpq_topk": oracle.ann_ivfpq_sql(),
         "ann_ivfpq_residual": oracle.ann_ivfpq_residual_sql(),
+        "ann_cosine_topk": oracle.ann_cosine_topk_sql(),
         "webtext_kcore": oracle.webtext_kcore_sql(k=10, rounds=4),
         "webtext_crawl_depth": oracle.webtext_crawl_depth_sql(rounds=4),
         "dedup_split_leakage": oracle.dedup_split_leakage_sql(),
@@ -632,5 +633,5 @@ def oracle_sql() -> dict[str, str]:
         "customers_no_orders": oracle.customers_no_orders_sql(),
         # intentionally no oracle (driver records rows-only):
         # dedup_minhash_lsh + dedup_groups_lsh (LSH recall),
-        # ann_cosine_topk (float ULP), geo_tiles_approx (HLL estimate)
+        # geo_tiles_approx (HLL estimate)
     }

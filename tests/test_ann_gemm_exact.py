@@ -70,6 +70,37 @@ def test_topk_quantized_tie_break_across_batches(spark, small_batches):
         assert neigh == want, (qid, neigh)
 
 
+@pytest.mark.parametrize("fn, match", [
+    (ann.topk_quantized, "query set exceeds 1 "),
+    (ann.cosine_topk, "query set exceeds 1 "),
+    (ann.exact_cosine_gt_candidates, "query set exceeds 1 "),
+    (ann.ivf_topk, "centroid set exceeds 1;"),
+])
+def test_driver_caps_raise(spark, sf_tiny, monkeypatch, fn, match):
+    monkeypatch.setattr(ann, "QUERY_CAP", 1)
+    monkeypatch.setattr(ann, "CENTROID_CAP", 1)
+    with pytest.raises(ValueError, match=match):
+        fn(load_table(spark, sf_tiny, "embeddings"))
+
+
+def test_pq_d2_batch_exact_inside_contract_and_loud_outside():
+    """The float64 ADC GEMM equals the int64 subtract-and-square up to
+    |coordinate| = 2^20 - 1, and refuses any input at or above 2^20."""
+    rng = np.random.default_rng(7)
+    top = (1 << 20) - 1
+    x = rng.integers(-top, top + 1, size=(9, ann.PQ_M * ann.PQ_DSUB), dtype=np.int64)
+    cb = rng.integers(-top, top + 1, size=(ann.PQ_M, 5, ann.PQ_DSUB), dtype=np.int64)
+    x[0, 0], cb[0, 0, 0] = top, -top
+    sub = x.reshape(len(x), ann.PQ_M, 1, ann.PQ_DSUB)
+    assert np.array_equal(ann._pq_d2_batch(x, cb), ((sub - cb[None]) ** 2).sum(-1))
+    bad_x, bad_cb = x.copy(), cb.copy()
+    bad_x[1, 2], bad_cb[2, 1, 0] = -(1 << 20), 1 << 20
+    with pytest.raises(ValueError, match=r"2\^20"):
+        ann._pq_d2_batch(bad_x, cb)
+    with pytest.raises(ValueError, match=r"2\^20"):
+        ann._pq_d2_batch(x, bad_cb)
+
+
 def test_gt_candidates_cover_global_topk_multibatch(spark, sf_tiny, small_batches):
     embs = load_table(spark, sf_tiny, "embeddings").repartition(7)
     cand = ann.exact_cosine_gt_candidates(embs, k=10, every=50)

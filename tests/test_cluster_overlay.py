@@ -23,7 +23,7 @@ def test_kmeans_assignment_is_exact_argmin(spark, sf_tiny):
     cmat = cluster.kmeans_fit(embs, k=8, iters=2)
     got = cluster.kmeans_assign(embs, k=8, iters=2).orderBy("vec_id").collect()
     q = np.array(
-        [r["qv"] for r in cluster._quantized(embs).orderBy("vec_id").collect()],
+        [r["qv"] for r in dedup.quantized_df(embs).orderBy("vec_id").collect()],
         dtype=np.int64,
     )
     d = ((q[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
@@ -40,7 +40,7 @@ def test_kmeans_centroids_move_and_stay_bounded(spark, sf_tiny):
     assert c0.shape == c2.shape == (8, 64)
     assert (c0 != c2).any()  # Lloyd updates actually moved the centroids
     assert np.abs(c2).max() <= np.abs(
-        np.array([r["qv"] for r in cluster._quantized(embs).collect()])
+        np.array([r["qv"] for r in dedup.quantized_df(embs).collect()])
     ).max()  # means stay inside the data's coordinate range
 
 

@@ -75,28 +75,6 @@ def test_fingerprint_matches_python(spark, sf_tiny):
     assert fps[1] != fps[2]
 
 
-def test_ann_cosine_pandas_vs_numpy(spark, sf_tiny):
-    embs = load_table(spark, sf_tiny, "embeddings")
-    got = ann.topk_cosine_pandas(embs, k=5, every=100).collect()
-    rows = embs.collect()
-    ids = np.array([r.vec_id for r in rows])
-    m = np.array([r.embedding for r in rows], dtype=np.float64)
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cos))
-    qids = ids[ids % 100 == 0]
-    assert set(by_q) == set(qids.tolist())
-    for qid in qids:
-        sims = m @ m[ids == qid][0]
-        order = sorted(
-            [(round(-s, 6), i) for s, i in zip(sims, ids) if i != qid]
-        )[:5]
-        want = [i for _, i in order]
-        gotlist = [nid for _, nid, _ in sorted(by_q[qid])]
-        assert gotlist == want, f"query {qid}"
-
-
 def test_lsh_bucketed_topk_runs(spark, sf_tiny):
     embs = load_table(spark, sf_tiny, "embeddings")
     out = ann.lsh_bucketed_topk(embs, k=5, every=100)
@@ -253,8 +231,9 @@ def test_ann_recall_eval_bounds_and_consistency(spark, sf_tiny):
 
 
 def _exact_gt_pairs(spark, sf_dir, k=10, every=50):
-    """Exact quantized-cosine top-k ground truth (same arithmetic as
-    ann_recall_eval's GT arm): offline eval on the query sample only."""
+    """(query_id, neighbor_id, rank, cos_q): exact quantized-cosine top-k
+    ground truth as an all-pairs crossJoin (same arithmetic as
+    ``ann.cosine_topk``): offline eval on the query sample only."""
     from pyspark.sql import Window
 
     from tree_sitter_codeviews_spark.operators.dedup import quantize_col
@@ -285,18 +264,25 @@ def _exact_gt_pairs(spark, sf_dir, k=10, every=50):
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_q").desc(), F.col("neighbor_id").asc()
     )
-    return {
-        (r["query_id"], r["neighbor_id"])
-        for r in (
-            a.crossJoin(b)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("dot", dot)
-            .withColumn("cos_q", cos)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id")
-        ).collect()
-    }
+    return (
+        a.crossJoin(b)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("dot", dot)
+        .withColumn("cos_q", cos)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cos_q")
+    )
+
+
+def test_cosine_topk_equals_crossjoin_reference(spark, sf_tiny):
+    """The GEMM candidate cut plus the shared ranker select exactly the
+    all-pairs crossJoin's rows — rank and the round-6 cosine included."""
+    embs = load_table(spark, sf_tiny, "embeddings")
+    got = {tuple(r) for r in ann.cosine_topk(embs, k=5, every=100).collect()}
+    want = {tuple(r) for r in _exact_gt_pairs(spark, sf_tiny, k=5, every=100).collect()}
+    assert got == want
+    assert got
 
 
 def test_ann_recall_floors_at_gate_scale(spark, sf_small):
@@ -306,7 +292,8 @@ def test_ann_recall_floors_at_gate_scale(spark, sf_small):
     routing, is IVFPQ's recall ceiling on this near-uniform corpus, so
     no monotone-in-nprobe assertion for it)."""
     embs = load_table(spark, sf_small, "embeddings")
-    gt = _exact_gt_pairs(spark, sf_small)
+    gt = {(r["query_id"], r["neighbor_id"])
+          for r in _exact_gt_pairs(spark, sf_small).collect()}
     assert len(gt) == 100  # 10 queries x k=10
 
     def recall(df):

@@ -18,6 +18,12 @@ def test_oracle_keys_subset_of_queries():
     assert set(_ORACLES) <= set(_QUERIES)
 
 
+def test_rows_only_set_is_pinned():
+    # deleting an oracle must fail here, not move its query into the
+    # rows-only test below, which would stay green
+    assert _ROWS_ONLY == ["dedup_groups_lsh", "dedup_minhash_lsh", "geo_tiles_approx"]
+
+
 @pytest.mark.parametrize("name", _WITH_ORACLE)
 def test_query_vs_oracle(spark, sf_tiny, name):
     assert_matches(_QUERIES[name](spark, sf_tiny), sf_tiny, _ORACLES[name], name)

@@ -6,7 +6,9 @@ driver arm that collects the operator's (small) input and solves it in
 Python, and a distributed Spark loop. On a dim-sized input each round of
 the loop is pure per-job latency, so the driver arm wins; above the cap
 the loop is the only path. This module is the one place that choice is
-made.
+made. The ANN operators collect their query and centroid matrices
+through the same probe as a hard guard: they have no distributed arm,
+so above their cap they raise.
 
 Discipline:
 

@@ -1,12 +1,18 @@
-"""Similarity search over embedding columns — five families:
+"""Similarity search over embedding columns — five families.
 
-- ``topk_quantized``: exact top-k by integer-quantized dot product — fully
-  native (zip_with/aggregate, JVM codegen), bit-reproducible vs the SQL
-  oracle. The correctness baseline.
-- ``topk_cosine_pandas``: float cosine top-k with an Arrow-batched pandas UDF
-  doing one numpy matmul per batch against a broadcast query matrix — the
-  measured fast path at scale (BLAS beats codegen'd per-element loops on
-  64-dim vectors).
+Every family follows the quantized-similarity contract written once in
+``dedup``: ``quantized_df`` (round(1000x) int64 vectors), exact int64
+dots and norms (``int_dot_col`` / ``sq_norm_col``), the round-6 cosine
+``cos_q_col``, and one per-query ranker here, ``_rank_per_query``, whose
+total order is (score, neighbor_id asc). Query and centroid matrices
+reach the driver through ``driver_arm.collect_if_small`` under
+``QUERY_CAP`` / ``CENTROID_CAP``; above a cap the operator raises.
+
+- Exact: ``topk_quantized`` ranks by integer dot and ``cosine_topk`` by
+  the round-6 quantized cosine, each one int64 numpy GEMM per Arrow batch
+  against the collected query matrix. Bit-reproducible vs the SQL
+  oracle; ``cosine_topk`` is the recall ground truth of the families
+  below.
 - ``lsh_bucketed_topk``: random-hyperplane LSH pre-bucketing so each query
   only scores its bucket's candidates — the 10^12-row path; recall<1 by
   contract, rescued by multi-probe (neighbor buckets at hamming 1).
@@ -15,9 +21,9 @@
 - ``pq_topk``: product quantization + asymmetric-distance (ADC) scoring —
   the memory-bound family (one packed long per corpus vector in the join);
   oracle-mirrored exactly.
-- ``ivfpq_topk``: IVF routing × PQ/ADC scoring — the faiss-IVFPQ production
-  composition (sub-linear in vectors touched AND bytes per touch);
-  oracle-mirrored exactly.
+- ``ivfpq_topk`` / ``ivfpq_residual_topk``: IVF routing × PQ/ADC scoring —
+  the faiss-IVFPQ production composition (sub-linear in vectors touched
+  AND bytes per touch), on raw or residual codes; oracle-mirrored exactly.
 """
 
 from __future__ import annotations
@@ -30,37 +36,73 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import quantize_col, sq_norm_col
+from .. import driver_arm
+from .dedup import cos_q_col, int_dot_col, quantized_df, sq_norm_col
+
+# Driver caps of the collected matrices: QUERY_CAP query vectors of
+# int64[64] is ~100 MB; |C| ~ sqrt(N) centroids on a real corpus.
+QUERY_CAP = 200_000
+CENTROID_CAP = 100_000
 
 
 def _query_set(embs: DataFrame, every: int = 50) -> DataFrame:
     return embs.filter(F.col("vec_id") % every == 0)
 
 
+def _id_matrix(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, int64 vector matrix) of a pandas ``(vec_id, qv)`` batch."""
+    return (
+        pdf["vec_id"].to_numpy(dtype=np.int64),
+        np.stack(pdf["qv"].to_numpy()).astype(np.int64),
+    )
+
+
+def _driver_matrix(
+    q: DataFrame, cap: int, too_big: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``_id_matrix`` of a bounded ``(vec_id, qv)`` frame, collected as
+    Arrow columns by the driver-arm probe; ``ValueError(too_big)`` when it
+    has more than ``cap`` rows."""
+    pdf = driver_arm.collect_if_small(q.select("vec_id", "qv"), cap)
+    if pdf is None:
+        raise ValueError(too_big)
+    return _id_matrix(pdf)
+
+
+def _rank_per_query(
+    pairs: DataFrame, k: int, score: str, desc: bool = True,
+) -> DataFrame:
+    """(query_id, neighbor_id, rank, <score>): each query's k best pairs in
+    the one total order every ANN top-k publishes — ``score`` (descending
+    for similarities, ascending for distances), then neighbor_id asc."""
+    key = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(key, F.col("neighbor_id").asc())
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
+    )
+
+
 def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
     """(query_id, neighbor_id, rank, dot_q): exact top-k by integer dot.
 
     The query side is tiny (1/every of the corpus — collected once under
-    the same 200k cap as ``topk_cosine_pandas`` and captured in the UDF
-    closure); the corpus streams map-side through ONE int64 numpy GEMM per
-    Arrow batch, with an exact per-batch local top-k by the FINAL total
-    order (dot desc, neighbor_id asc — lexsort, so int64 ties break
-    identically). Local top-k by the final order is a proven superset of
-    the global top-k (if k batch rows beat a row locally they beat it
-    globally), so the closing window over ~k·|queries| rows per batch is
-    bit-identical to the former crossJoin + interpreted 64-element HOF
-    fold, which evaluated per pair (measured: the fold dominated the
-    stage)."""
-    q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
-    max_queries = 200_000
-    qrows = _query_set(q, every).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"topk_quantized: query set exceeds {max_queries} rows; "
-            "use the bucketed ANN family for dense query sides"
-        )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.int64)
+    ``QUERY_CAP`` and captured in the UDF closure); the corpus streams
+    map-side through ONE int64 numpy GEMM per Arrow batch, with an exact
+    per-batch local top-k by the FINAL total order (dot desc, neighbor_id
+    asc — lexsort, so int64 ties break identically). Local top-k by the
+    final order is a proven superset of the global top-k (if k batch rows
+    beat a row locally they beat it globally), so the closing window over
+    ~k·|queries| rows per batch is bit-identical to the former crossJoin +
+    interpreted 64-element HOF fold, which evaluated per pair (measured:
+    the fold dominated the stage)."""
+    q = quantized_df(embs)
+    qids, qmat = _driver_matrix(
+        _query_set(q, every), QUERY_CAP,
+        f"topk_quantized: query set exceeds {QUERY_CAP} rows; "
+        "use the bucketed ANN family for dense query sides",
+    )
 
     out_schema = T.StructType([
         T.StructField("query_id", T.LongType()),
@@ -72,8 +114,7 @@ def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
+            ids, m = _id_matrix(pdf)
             dots = qmat @ m.T  # (Q, B) exact int64
             out_q, out_n, out_d = [], [], []
             for qi in range(len(qids)):
@@ -89,13 +130,7 @@ def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
                 "dot_q": np.concatenate(out_d),
             })
 
-    w = Window.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col("neighbor_id").asc())
-    return (
-        q.select("vec_id", "qv").mapInPandas(score, out_schema)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot_q")
-    )
+    return _rank_per_query(q.mapInPandas(score, out_schema), k, "dot_q")
 
 
 def exact_cosine_gt_candidates(
@@ -103,12 +138,11 @@ def exact_cosine_gt_candidates(
 ) -> DataFrame:
     """(query_id, neighbor_id, dot, norm_a, norm_b): a PROVEN superset of
     each query's top-k by the final order ``round(cos, 6) desc,
-    neighbor_id asc`` — the ground-truth leg of the recall eval, computed
-    as one int64 numpy GEMM per Arrow batch instead of a crossJoin with an
-    interpreted per-pair HOF fold. dot/norms are exact int64 (identical to
-    the SQL aggregates); the caller re-derives cos_q with the SAME Spark
-    SQL round/divide and runs the exact global window, so the final rows
-    are bit-identical.
+    neighbor_id asc`` — computed as one int64 numpy GEMM per Arrow batch
+    instead of a crossJoin with an interpreted per-pair HOF fold. dot/norms
+    are exact int64 (identical to the SQL aggregates); ``cosine_topk``
+    derives cos with ``cos_q_col`` and runs the exact global window, so
+    the final rows are bit-identical.
 
     Safety of the local cut: per batch and query, with c_k = the k-th
     largest unrounded cos, rows with cos < c_k − 2e-6 are dropped. For any
@@ -118,16 +152,12 @@ def exact_cosine_gt_candidates(
     cannot be in the batch's, hence the global, top-k. NaN cos (zero-norm
     vectors; Spark sorts NaN above every double in a descending order) is
     treated as +inf for selection, so such rows are always kept."""
-    q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
-    max_queries = 200_000
-    qrows = _query_set(q, every).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"exact_cosine_gt_candidates: query set exceeds {max_queries} "
-            "rows; the GT leg is an offline eval on a bounded query sample"
-        )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.int64)
+    q = quantized_df(embs)
+    qids, qmat = _driver_matrix(
+        _query_set(q, every), QUERY_CAP,
+        f"exact_cosine_gt_candidates: query set exceeds {QUERY_CAP} "
+        "rows; the GT leg is an offline eval on a bounded query sample",
+    )
     qnorm = (qmat * qmat).sum(axis=1)
 
     out_schema = T.StructType([
@@ -142,8 +172,7 @@ def exact_cosine_gt_candidates(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
+            ids, m = _id_matrix(pdf)
             bnorm = (m * m).sum(axis=1)
             dots = qmat @ m.T  # (Q, B) exact int64
             with np.errstate(invalid="ignore", divide="ignore"):
@@ -173,65 +202,19 @@ def exact_cosine_gt_candidates(
                 for col in ("query_id", "neighbor_id", "dot", "norm_a", "norm_b")
             })
 
-    return q.select("vec_id", "qv").mapInPandas(score, out_schema)
+    return q.mapInPandas(score, out_schema)
 
 
-def topk_cosine_pandas(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
-    """Float cosine top-k; one numpy GEMM per Arrow batch (the fast path).
-
-    Queries are collected once (tiny), L2-normalized, and captured in the
-    UDF closure (broadcast-equivalent). Per batch: normalize rows, matmul,
-    argpartition local top-k; the global top-k is a final window.
-
-    Driver-safety guard (round-1 finding): the collect is bounded only by
-    the ``every`` sampling contract, so an explicit cap fails fast if a
-    caller reuses this with a dense query set — switch to lsh_bucketed_topk
-    (bucketed join, no driver materialization) for large query sides."""
-    max_queries = 200_000  # ~100 MB of float64[64] on the driver
-    qrows = (
-        _query_set(embs, every)
-        .select("vec_id", "embedding")
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"topk_cosine_pandas: query set exceeds {max_queries} rows; "
-            "use lsh_bucketed_topk for dense query sides"
-        )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
-
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.stack(pdf["embedding"].to_numpy())
-            m = m.astype(np.float64)
-            m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            sims = qmat @ m.T  # (Q, B)
-            kk = min(k + 1, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            rows = {
-                "query_id": np.repeat(qids, kk),
-                "neighbor_id": ids[part.ravel()],
-                "cos": np.take_along_axis(sims, part, axis=1).ravel(),
-            }
-            yield pd.DataFrame(rows)
-
-    scored = embs.select("vec_id", "embedding").mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round(F.col("cos"), 6).alias("cos"))
+def cosine_topk(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos): exact top-k by the round-6
+    quantized cosine — the recall ground truth of the bucketed families
+    (lsh/ivf/pq) and the baseline they are measured against, not a
+    corpus-scale plan. ``exact_cosine_gt_candidates`` keeps a proven
+    superset of each query's top-k; ``cos_q_col`` and the shared ranker
+    then select exactly the rows a crossJoin over every pair would."""
+    cand = exact_cosine_gt_candidates(embs, k=k, every=every)
+    return _rank_per_query(
+        cand.withColumn("cos", cos_q_col("dot", "norm_a", "norm_b")), k, "cos"
     )
 
 
@@ -253,18 +236,11 @@ def _ivf_route(
     # cut cross-joined a broadcast centroid DF and folded the dot with an
     # interpreted zip_with/aggregate lambda — correct, but ~100k
     # interpreted 64-dim folds at sf0.1; the GEMM is the production shape.)
-    max_cents = 100_000  # |C| ~ sqrt(N) on a real corpus; hard driver guard
-    crows = (
-        qn.filter(F.col("vec_id") % centroid_every == 0)
-        .select("vec_id", "qv").limit(max_cents + 1).collect()
+    cent_ids, cmat = _driver_matrix(
+        qn.filter(F.col("vec_id") % centroid_every == 0), CENTROID_CAP,
+        f"ivf_topk: centroid set exceeds {CENTROID_CAP}; swap the sampled "
+        "centroids for trained fixed-size ones at this scale",
     )
-    if len(crows) > max_cents:
-        raise ValueError(
-            f"ivf_topk: centroid set exceeds {max_cents}; swap the sampled "
-            "centroids for trained fixed-size ones at this scale"
-        )
-    cent_ids = np.array([r["vec_id"] for r in crows], dtype=np.int64)
-    cmat = np.array([r["qv"] for r in crows], dtype=np.int64)
     cnorms = (cmat * cmat).sum(axis=1)
 
     score_schema = T.StructType([
@@ -280,8 +256,7 @@ def _ivf_route(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
+            ids, m = _id_matrix(pdf)
             dots = m @ cmat.T  # (B, C), exact int64
             norms = pdf["norm"].to_numpy(dtype=np.int64)
             # emit only a PROVEN superset of each vector's winners instead
@@ -317,11 +292,7 @@ def _ivf_route(
 
     scored = (
         qn.select("vec_id", "qv", "norm").mapInPandas(_score, score_schema)
-        .withColumn(
-            "cosc",
-            F.round(F.col("dotc").cast("double")
-                    / F.sqrt(F.col("norm").cast("double") * F.col("cnorm").cast("double")), 6),
-        )
+        .withColumn("cosc", cos_q_col("dotc", "norm", "cnorm"))
         .select("vec_id", "cent_id", "cosc")
     )
     # nearest centroid per vector; ties broken to the smallest cent_id
@@ -362,8 +333,7 @@ def ivf_topk(
     sampled centroids for trained ones (fixed |C| ~ sqrt(N)) and the same
     plan holds; nothing else changes shape.
     """
-    q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
-    qn = _with_norm(q)
+    qn = _with_norm(quantized_df(embs))
     assign, qprobe = _ivf_route(qn, every, centroid_every, nprobe)
     nbrs = assign.join(qn, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), "cent_id",
@@ -373,24 +343,13 @@ def ivf_topk(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"),
         F.col("norm").alias("norm_a"),
     )
-    dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda acc, v: acc + v,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_q").desc(), F.col("neighbor_id").asc())
-    return (
+    pairs = (
         F.broadcast(qprobe.join(qvecs, "query_id")).join(nbrs, "cent_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("dot", dot)
-        .withColumn(
-            "cos_q",
-            F.round(F.col("dot").cast("double")
-                    / F.sqrt(F.col("norm_a").cast("double") * F.col("norm_b").cast("double")), 6),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_q")
+        .withColumn("dot", int_dot_col("qa", "qb"))
+        .withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
     )
+    return _rank_per_query(pairs, k, "cos_q")
 
 
 N_PLANES = 12  # 4096 buckets
@@ -419,8 +378,7 @@ def lsh_bucketed_topk(
 
     bucketize = embedding_bucket_udf(dim, N_PLANES)
     qn = (
-        embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
-        .withColumn("norm", sq_norm_col("qv"))
+        _with_norm(quantized_df(embs))
         .withColumn("bucket", bucketize(F.col("qv")))
     )
     corpus = qn.select(
@@ -438,23 +396,13 @@ def lsh_bucketed_topk(
     qprobed = queries.select(
         "query_id", "qa", "na", F.explode(probes).alias("bucket")
     )
-    cos = F.round(
-        F.col("dot").cast("double")
-        / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
+    pairs = (
         qprobed.join(corpus, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("dot", int_dot_udf(F.col("qa"), F.col("qb")))
-        .withColumn("cos_q", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_q")
+        .withColumn("cos_q", cos_q_col("dot", "na", "nb"))
     )
+    return _rank_per_query(pairs, k, "cos_q")
 
 
 # --- product quantization (PQ / ADC) ----------------------------------------
@@ -471,6 +419,7 @@ def lsh_bucketed_topk(
 
 PQ_M, PQ_DSUB, PQ_K = 8, 8, 64  # M * DSUB == dim; 8x6-bit codes pack in a long
 PQ_SAMPLE_MOD = 3               # codebook sample: vec_id % MOD == 1, first K
+_PQ_EXACT = 1 << 20             # |coordinate| bound of the exact float64 GEMM
 
 
 def _pq_codebook_from(sample: np.ndarray) -> np.ndarray:
@@ -493,12 +442,20 @@ def _pq_d2_batch(x: np.ndarray, cb: np.ndarray) -> np.ndarray:
     """(B, 64) int64 vectors -> (B, M, K) exact squared subdistances.
 
     ||x - c||^2 expanded as ||x||^2 + ||c||^2 - 2 x.c with the cross term
-    as one float64 BLAS GEMM per subspace: quantized coordinates are
-    |v| <= ~2^13 (round(1000x) of unit-ish floats), so every product and
-    every DSUB-term sum stays far below 2^53 — float64 is EXACT here, and
-    the cast back to int64 is lossless. (The former broadcast-subtract
+    as one float64 BLAS GEMM per subspace. Exact only while every
+    coordinate is below ``_PQ_EXACT`` in magnitude: then each product is
+    < 2^40 and each DSUB-term sum < 2^45, far below 2^53, so float64 is
+    EXACT and the cast back to int64 is lossless. Quantized coordinates
+    are |v| <= ~2^13 (round(1000x) of unit-ish floats); larger inputs
+    raise instead of silently rounding. (The former broadcast-subtract
     formulation allocated B x K x DSUB temporaries — memory traffic, not
     arithmetic, dominated its cost.)"""
+    top = max(int(np.abs(x).max(initial=0)), int(np.abs(cb).max(initial=0)))
+    if top >= _PQ_EXACT:
+        raise ValueError(
+            f"pq: coordinate magnitude {top} >= 2^20; the float64 ADC "
+            "GEMM is exact only below it"
+        )
     b = x.shape[0]
     sub = x.reshape(b, PQ_M, PQ_DSUB).astype(np.float64)     # (B, M, D)
     c = cb.astype(np.float64)                                # (M, K, D)
@@ -519,62 +476,27 @@ def _pq_pack(d2: np.ndarray) -> np.ndarray:
     return packed
 
 
-def pq_encode_udf(cb: np.ndarray):
+def pq_udf(cb: np.ndarray, lut: bool):
+    """The one Arrow kernel of the PQ family, called on ``qv`` or on
+    ``(qv, cv)``: stack the vectors, subtract the centroid column when
+    given (the residual legs — exact int64, fused here instead of a
+    zip_with projection, whose lambda is interpreted expression-eval),
+    take the exact subdistances, then pack the 8 codes into a long
+    (encode) or flatten the (M*K) table (``lut``, the ADC lookup table)."""
 
-    @F.pandas_udf(T.LongType())
-    def encode(qv: pd.Series) -> pd.Series:
+    def batch(qv: pd.Series, *cv: pd.Series) -> pd.Series:
         if len(qv) == 0:
-            return pd.Series([], dtype="int64")
+            return pd.Series([], dtype="object" if lut else "int64")
         x = np.stack(qv.to_numpy()).astype(np.int64)  # (B, 64)
-        return pd.Series(_pq_pack(_pq_d2_batch(x, cb)), dtype="int64")
+        if cv:
+            x = x - np.stack(cv[0].to_numpy()).astype(np.int64)
+        d2 = _pq_d2_batch(x, cb)
+        if lut:
+            return pd.Series(list(d2.reshape(len(x), PQ_M * cb.shape[1])))
+        return pd.Series(_pq_pack(d2), dtype="int64")
 
-    return encode
-
-
-def pq_encode_res_udf(cb: np.ndarray):
-    """Residual encode fused into the Arrow kernel: codes of (qv - cv).
-    Replaces a zip_with(qv, cv, -) projection feeding ``pq_encode_udf`` —
-    higher-order-function lambdas are interpreted expression-eval, and the
-    subtraction is exact int64 either way."""
-
-    @F.pandas_udf(T.LongType())
-    def encode(qv: pd.Series, cv: pd.Series) -> pd.Series:
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        x = (np.stack(qv.to_numpy()).astype(np.int64)
-             - np.stack(cv.to_numpy()).astype(np.int64))
-        return pd.Series(_pq_pack(_pq_d2_batch(x, cb)), dtype="int64")
-
-    return encode
-
-
-def pq_lut_udf(cb: np.ndarray):
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def lut(qv: pd.Series) -> pd.Series:
-        if len(qv) == 0:
-            return pd.Series([], dtype="object")
-        x = np.stack(qv.to_numpy()).astype(np.int64)
-        d2 = _pq_d2_batch(x, cb).reshape(len(x), PQ_M * cb.shape[1])
-        return pd.Series(list(d2))
-
-    return lut
-
-
-def pq_lut_res_udf(cb: np.ndarray):
-    """Per-cell residual LUT fused into the Arrow kernel: LUT of
-    (qv - cv) — see ``pq_encode_res_udf``."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def lut(qv: pd.Series, cv: pd.Series) -> pd.Series:
-        if len(qv) == 0:
-            return pd.Series([], dtype="object")
-        x = (np.stack(qv.to_numpy()).astype(np.int64)
-             - np.stack(cv.to_numpy()).astype(np.int64))
-        d2 = _pq_d2_batch(x, cb).reshape(len(x), PQ_M * cb.shape[1])
-        return pd.Series(list(d2))
-
-    return lut
+    batch.__name__ = "lut" if lut else "encode"  # the UDF's name in plans
+    return F.pandas_udf(batch, T.ArrayType(T.LongType()) if lut else T.LongType())
 
 
 def _adc_expr(n_codes: int):
@@ -597,26 +519,22 @@ def pq_topk(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
     scoring is a pure JVM expression — 8 array lookups + adds per pair, no
     Python and no arrays on the corpus side of the join. At 10^12 rows this
     is the memory-bound shape PQ exists for: 8 bytes/vector instead of 512."""
-    q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
+    q = quantized_df(embs)
     cb = _pq_codebook_from(_pq_sample(q))
-    n_codes = cb.shape[1]
     corpus = q.select(
         F.col("vec_id").alias("neighbor_id"),
-        pq_encode_udf(cb)(F.col("qv")).alias("pqcode"),
+        pq_udf(cb, lut=False)(F.col("qv")).alias("pqcode"),
     )
     queries = _query_set(q, every).select(
         F.col("vec_id").alias("query_id"),
-        pq_lut_udf(cb)(F.col("qv")).alias("lut"),
+        pq_udf(cb, lut=True)(F.col("qv")).alias("lut"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id").asc())
-    return (
+    pairs = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adist", _adc_expr(n_codes))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist")
+        .withColumn("adist", _adc_expr(cb.shape[1]))
     )
+    return _rank_per_query(pairs, k, "adist", desc=False)
 
 
 def ivfpq_topk(
@@ -644,31 +562,26 @@ def ivfpq_topk(
     ``ivf_topk``) and code quantization (as ``pq_topk``) — both measured by
     the companion recall eval; the output itself is fully deterministic.
     """
-    q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
+    q = quantized_df(embs)
     assign, qprobe = _ivf_route(_with_norm(q), every, centroid_every, nprobe)
     cb = _pq_codebook_from(_pq_sample(q))
     corpus = q.select(
         F.col("vec_id").alias("neighbor_id"),
-        pq_encode_udf(cb)(F.col("qv")).alias("pqcode"),
+        pq_udf(cb, lut=False)(F.col("qv")).alias("pqcode"),
     ).join(assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
     queries = _query_set(q, every).select(
         F.col("vec_id").alias("query_id"),
-        pq_lut_udf(cb)(F.col("qv")).alias("lut"),
+        pq_udf(cb, lut=True)(F.col("qv")).alias("lut"),
     )
     # qprobe×queries is (|Q| * nprobe) rows — broadcast; the corpus side
     # streams through the equi-join on cent_id, so each corpus code is read
     # once and only probed cells produce pairs (never all-pairs).
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
+    pairs = (
         F.broadcast(qprobe.join(queries, "query_id")).join(corpus, "cent_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("adist", _adc_expr(cb.shape[1]))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist")
     )
+    return _rank_per_query(pairs, k, "adist", desc=False)
 
 
 def ivfpq_residual_topk(
@@ -694,7 +607,7 @@ def ivfpq_residual_topk(
     corpus codes are still one packed long per vector, queries still carry
     nprobe LUT rows, pairs still form only inside probed cells.
     """
-    q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
+    q = quantized_df(embs)
     qn = _with_norm(q)
     assign, qprobe = _ivf_route(qn, every, centroid_every, nprobe)
     cents = qn.filter(F.col("vec_id") % centroid_every == 0).select(
@@ -703,16 +616,16 @@ def ivfpq_residual_topk(
     assigned = q.join(assign, "vec_id").join(F.broadcast(cents), "cent_id")
     # the codebook sample leg still evaluates the residual as a projection
     # (only the ~PQ_K sampled rows reach it); the corpus/query encodes
-    # subtract INSIDE the Arrow kernels instead (pq_encode_res_udf /
-    # pq_lut_res_udf) — the zip_with lambda is interpreted expression-eval
-    # and was evaluated once per corpus row
+    # subtract INSIDE the Arrow kernel instead (``pq_udf`` on (qv, cv)) —
+    # the zip_with lambda is interpreted expression-eval and was evaluated
+    # once per corpus row
     res = assigned.withColumn(
         "rv", F.zip_with("qv", "cv", lambda a, b: a - b)
     ).select("vec_id", "cent_id", "rv")
     cb = _pq_codebook_from(_pq_sample(res, col="rv"))
     corpus = assigned.select(
         F.col("vec_id").alias("neighbor_id"), "cent_id",
-        pq_encode_res_udf(cb)(F.col("qv"), F.col("cv")).alias("pqcode"),
+        pq_udf(cb, lut=False)(F.col("qv"), F.col("cv")).alias("pqcode"),
     )
     qres = (
         qprobe.join(
@@ -722,17 +635,12 @@ def ivfpq_residual_topk(
         .join(F.broadcast(cents), "cent_id")
         .select(
             "query_id", "cent_id",
-            pq_lut_res_udf(cb)(F.col("qa"), F.col("cv")).alias("lut"),
+            pq_udf(cb, lut=True)(F.col("qa"), F.col("cv")).alias("lut"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
+    pairs = (
         F.broadcast(qres).join(corpus, "cent_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("adist", _adc_expr(cb.shape[1]))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist")
     )
+    return _rank_per_query(pairs, k, "adist", desc=False)

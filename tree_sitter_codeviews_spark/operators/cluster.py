@@ -34,10 +34,10 @@ the quantizer's balance instead of corpus-quadratic. Pair generation
 runs as ONE grouped int64 GEMM per cluster (each vector crosses the
 Arrow boundary once per cluster, not once per candidate pair), with a
 conservative unrounded prefilter ``cos ≥ threshold - 1e-6``; the exact
-published value ``cos_q = round(dot/sqrt(norm_a·norm_b), 6)`` and the
-final ``≥ threshold`` cut are computed by the SAME Spark SQL expressions
-as before, so the emitted pair set is bit-identical (rounding moves cos
-by ≤ 5e-7 < 1e-6, so the prefilter is a strict superset of survivors).
+published value ``cos_q = round(dot/sqrt(norm_a·norm_b), 6)``
+(``dedup.cos_q_col``) and the final ``≥ threshold`` cut run in Spark
+SQL, so the emitted pair set is bit-identical (rounding moves cos by
+≤ 5e-7 < 1e-6, so the prefilter is a strict superset of survivors).
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import quantize_col
+from .dedup import cos_q_col, quantized_df
 
 __all__ = ["kmeans_fit", "kmeans_assign", "semantic_dups"]
 
@@ -64,22 +64,13 @@ def _trunc_div(s: np.ndarray, n: int) -> np.ndarray:
     return np.sign(s) * (np.abs(s) // np.int64(n))
 
 
-def _quantized(embs: DataFrame) -> DataFrame:
-    """Quantize for the checkpointed base frame. No forced repartition: at
-    bench scale each mapInPandas task pays a ~150-200 ms Python round-trip
-    floor regardless of rows, so fanning a 1.2 MB single-row-group corpus
-    to 32 tasks ADDS a shuffle + 32x task overhead without lowering any
-    stage's wall (A/B measured emb_kmeans 1.47 -> 2.05 s with the fan-out);
-    at production scale the scan arrives in many partitions and every pass
-    parallelizes naturally."""
-    return embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
-
-
-def _argmin_cluster(m: np.ndarray, cmat: np.ndarray, cnorm: np.ndarray) -> np.ndarray:
-    """Per-row nearest-centroid id via the shared packed-argmin rule."""
+def _packed_min(m: np.ndarray, cmat: np.ndarray, cnorm: np.ndarray) -> np.ndarray:
+    """Per-row minimum of the packed key ``dist*_PACK + cluster``: ``% _PACK``
+    is the nearest centroid (ties to the lowest id), ``// _PACK`` its exact
+    int64 squared distance."""
     d = (m * m).sum(axis=1)[:, None] - 2 * (m @ cmat.T) + cnorm[None, :]
     packed = d * np.int64(_PACK) + np.arange(len(cmat), dtype=np.int64)
-    return packed.min(axis=1) % _PACK
+    return packed.min(axis=1)
 
 
 def _assign(q: DataFrame, cmat: np.ndarray) -> DataFrame:
@@ -98,9 +89,7 @@ def _assign(q: DataFrame, cmat: np.ndarray) -> DataFrame:
             if len(pdf) == 0:
                 continue
             m = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
-            d = (m * m).sum(axis=1)[:, None] - 2 * (m @ cmat.T) + cnorm[None, :]
-            packed = d * np.int64(_PACK) + np.arange(len(cmat), dtype=np.int64)
-            best = packed.min(axis=1)
+            best = _packed_min(m, cmat, cnorm)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
                 "cluster": best % _PACK,
@@ -130,7 +119,7 @@ def _partial_sums(q: DataFrame, cmat: np.ndarray) -> DataFrame:
             if len(pdf) == 0:
                 continue
             m = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
-            cl = _argmin_cluster(m, cmat, cnorm)
+            cl = _packed_min(m, cmat, cnorm) % _PACK
             out_cl: list[int] = []
             out_n: list[int] = []
             out_s: list[np.ndarray] = []
@@ -178,7 +167,7 @@ def kmeans_fit(embs: DataFrame, k: int = 8, iters: int = 2) -> np.ndarray:
     """Train k centroids with ``iters`` Lloyd updates; returns the k×d int64
     centroid matrix. Init = quantized vectors of the k smallest vec_ids
     (deterministic, oracle-reproducible)."""
-    return _fit(_quantized(embs).localCheckpoint(), k, iters)
+    return _fit(quantized_df(embs).localCheckpoint(), k, iters)
 
 
 def kmeans_assign(embs: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
@@ -186,7 +175,7 @@ def kmeans_assign(embs: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
     centroids. ``dist_q`` is the exact int64 squared quantized distance.
     The quantized frame is materialized once and reused by training AND
     the final assignment pass."""
-    q = _quantized(embs).localCheckpoint()
+    q = quantized_df(embs).localCheckpoint()
     return _assign(q, _fit(q, k, iters))
 
 
@@ -245,7 +234,7 @@ def _pair_partials(q: DataFrame, cmat: np.ndarray, margin: float) -> DataFrame:
             m = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                "cluster": _argmin_cluster(m, cmat, cnorm),
+                "cluster": _packed_min(m, cmat, cnorm) % _PACK,
                 "qv": pdf["qv"],
             })
 
@@ -264,13 +253,10 @@ def semantic_dups(
     vs the brute pair scan is the SemDeDup contract (cross-cluster
     near-dups are forfeit by design); the output itself is deterministic,
     so the gate oracle mirrors it exactly."""
-    q = _quantized(embs).localCheckpoint()  # one scan: fit + tag + GEMM
+    q = quantized_df(embs).localCheckpoint()  # one scan: fit + tag + GEMM
     pairs = _pair_partials(q, _fit(q, k, iters), threshold - 1e-6)
-    cos = F.col("dot").cast("double") / F.sqrt(
-        F.col("norm_a").cast("double") * F.col("norm_b").cast("double")
-    )
     return (
-        pairs.withColumn("cos_q", F.round(cos, 6))
+        pairs.withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
         .filter(F.col("cos_q") >= threshold)
         .select("vec_id_a", "vec_id_b", "cluster", "cos_q")
     )

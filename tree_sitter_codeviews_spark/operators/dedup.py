@@ -401,11 +401,44 @@ def quantize_col(emb: F.Column) -> F.Column:
     return F.transform(emb, lambda x: F.round(x.cast("double") * 1000, 0).cast("long"))
 
 
+def quantized_df(embs: DataFrame) -> DataFrame:
+    """(vec_id, qv): the quantized embeddings every similarity operator
+    starts from, in the scan's partitioning. No forced repartition here
+    (an operator that needs one adds it): at bench scale each mapInPandas
+    task pays a ~150-200 ms Python round-trip floor regardless of rows, so
+    fanning a 1.2 MB single-row-group corpus to 32 tasks ADDS a shuffle +
+    32x task overhead without lowering any stage's wall (A/B measured
+    emb_kmeans 1.47 -> 2.05 s with the fan-out); at production scale the
+    scan arrives in many partitions and every pass parallelizes
+    naturally."""
+    return embs.select("vec_id", quantize_col(F.col("embedding")).alias("qv"))
+
+
 def sq_norm_col(q) -> F.Column:
     """array<long> quantized embedding (a ``quantize_col`` output, as a
     Column or column name) -> its exact int64 squared L2 norm."""
     return F.aggregate(F.transform(q, lambda x: x * x), F.lit(0).cast("long"),
                        lambda acc, v: acc + v)
+
+
+def int_dot_col(a, b) -> F.Column:
+    """Exact int64 dot of two quantized-embedding columns (Columns or
+    names) as a native zip_with/aggregate fold; ``int_dot_udf`` is its
+    Arrow twin for candidate sets too large for an interpreted fold."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0).cast("long"), lambda acc, v: acc + v)
+
+
+def cos_q_col(dot: str, na: str, nb: str) -> F.Column:
+    """The published quantized cosine ``round(dot / sqrt(na * nb), 6)`` of
+    an exact int64 dot and two int64 squared norms (column names). Every
+    value before the last two float ops is an exact integer, so Spark and
+    the DuckDB oracles round the same double; a zero norm gives NaN."""
+    return F.round(
+        F.col(dot).cast("double")
+        / F.sqrt(F.col(na).cast("double") * F.col(nb).cast("double")),
+        6,
+    )
 
 
 # --- bucketed embedding near-dup (the 10^12-row path) -----------------------
@@ -467,7 +500,7 @@ def embedding_bucket_udf(dim: int, n_planes: int = EMB_PLANES):
 @pandas_udf(T.LongType())
 def int_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Exact int64 dot of two quantized-embedding columns — one numpy matmul
-    per Arrow batch. Bit-identical to the interpreted ``zip_with`` fold
+    per Arrow batch. Bit-identical to the interpreted ``int_dot_col`` fold
     (integer arithmetic), ~50x faster on the candidate-verify hot path
     (quantized values |q| <= ~10^4, dim 64 => |dot| < 2^40, no overflow)."""
     if len(a) == 0:
@@ -489,10 +522,8 @@ def embedding_lsh_dups(
     ``embedding_near_dups`` restricted to bucket-hamming <= max_hamming
     candidates — deterministic (fixed integer planes), so oracle-checkable,
     unlike recall-probabilistic LSH. One equi-join shuffle, no crossJoin."""
-    qn = embs.select(
-        "vec_id", quantize_col(F.col("embedding")).alias("q")
-    ).withColumn("norm", sq_norm_col("q")).withColumn(
-        "bucket", embedding_bucket_udf(dim, n_planes)(F.col("q")))
+    qn = quantized_df(embs).withColumn("norm", sq_norm_col("qv")).withColumn(
+        "bucket", embedding_bucket_udf(dim, n_planes)(F.col("qv")))
     # the bucketed table feeds the probe sides AND two array-fetch joins;
     # materialize once (at cluster scale: a checkpoint stage table). The
     # repartition fixes the materialized frame's parallelism: off a
@@ -517,17 +548,14 @@ def embedding_lsh_dups(
     cand = a.join(b, "probe").filter(F.col("vec_id_a") < F.col("vec_id_b")).select(
         "vec_id_a", "vec_id_b"
     )
-    va = qn.select(F.col("vec_id").alias("vec_id_a"), F.col("q").alias("qa"),
+    va = qn.select(F.col("vec_id").alias("vec_id_a"), F.col("qv").alias("qa"),
                    F.col("norm").alias("norm_a"))
-    vb = qn.select(F.col("vec_id").alias("vec_id_b"), F.col("q").alias("qb"),
+    vb = qn.select(F.col("vec_id").alias("vec_id_b"), F.col("qv").alias("qb"),
                    F.col("norm").alias("norm_b"))
-    cos = F.col("dot").cast("double") / F.sqrt(
-        F.col("norm_a").cast("double") * F.col("norm_b").cast("double")
-    )
     return (
         cand.join(va, "vec_id_a").join(vb, "vec_id_b")
         .withColumn("dot", int_dot_udf(F.col("qa"), F.col("qb")))
-        .withColumn("cos_q", F.round(cos, 6))
+        .withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
         .filter(F.col("cos_q") >= threshold)
         .select("vec_id_a", "vec_id_b", "cos_q")
     )
@@ -539,20 +567,15 @@ def embedding_near_dups(embs: DataFrame, threshold: float = 0.95) -> DataFrame:
     cos_q = int-dot / sqrt(int-norm_a * int-norm_b), rounded to 6 — exact and
     order-independent up to the final two float ops, reproducible in SQL.
     Brute-force pair generation here (correctness baseline); the scale path
-    is the hyperplane-LSH variant in ann.py."""
-    q = embs.select("vec_id", quantize_col(F.col("embedding")).alias("q"))
-    qn = q.withColumn("norm", sq_norm_col("q"))
-    a = qn.select(F.col("vec_id").alias("vec_id_a"), F.col("q").alias("qa"), F.col("norm").alias("norm_a"))
-    b = qn.select(F.col("vec_id").alias("vec_id_b"), F.col("q").alias("qb"), F.col("norm").alias("norm_b"))
-    dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, v: acc + v
-    )
-    cos = F.col("dot").cast("double") / F.sqrt(F.col("norm_a").cast("double") * F.col("norm_b").cast("double"))
+    is the hyperplane-LSH variant ``embedding_lsh_dups``."""
+    qn = quantized_df(embs).withColumn("norm", sq_norm_col("qv"))
+    a = qn.select(F.col("vec_id").alias("vec_id_a"), F.col("qv").alias("qa"), F.col("norm").alias("norm_a"))
+    b = qn.select(F.col("vec_id").alias("vec_id_b"), F.col("qv").alias("qb"), F.col("norm").alias("norm_b"))
     return (
         a.crossJoin(b)
         .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-        .withColumn("dot", dot)
-        .withColumn("cos_q", F.round(cos, 6))
+        .withColumn("dot", int_dot_col("qa", "qb"))
+        .withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
         .filter(F.col("cos_q") >= threshold)
         .select("vec_id_a", "vec_id_b", "cos_q")
     )

@@ -748,6 +748,29 @@ SELECT query_id, neighbor_id, rank, dot_q FROM (
 """
 
 
+def _cosine_topk_select(k: int, every: int) -> str:
+    """Exact round-6-cosine top-k over ``qn`` (id tie-break) — the one
+    ground-truth text behind ann_cosine_topk_sql and ann_recall_eval_sql."""
+    return f"""
+SELECT query_id, neighbor_id, rank, cos FROM (
+  SELECT a.vec_id AS query_id, bb.vec_id AS neighbor_id,
+         round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
+               / sqrt(a.norm * bb.norm), 6) AS cos,
+         row_number() OVER (
+           PARTITION BY a.vec_id
+           ORDER BY round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
+                          / sqrt(a.norm * bb.norm), 6) DESC, bb.vec_id ASC
+         ) AS rank
+  FROM qn a JOIN qn bb ON bb.vec_id <> a.vec_id
+  WHERE a.vec_id % {every} = 0
+) WHERE rank <= {k}
+"""
+
+
+def ann_cosine_topk_sql(k: int = 10, every: int = 50) -> str:
+    return f"WITH {_QUANT_CTE}{_cosine_topk_select(k, every)}"
+
+
 def ann_ivf_sql(
     k: int = 10, every: int = 50, centroid_every: int = 40, nprobe: int = 4,
 ) -> str:
@@ -4379,16 +4402,7 @@ lsh AS (
   ) WHERE rank <= {k}
 ),
 gt AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT a.vec_id AS query_id, bb.vec_id AS neighbor_id,
-           row_number() OVER (
-             PARTITION BY a.vec_id
-             ORDER BY round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-                            / sqrt(a.norm * bb.norm), 6) DESC, bb.vec_id ASC
-           ) AS rank
-    FROM qn a JOIN qn bb ON bb.vec_id <> a.vec_id
-    WHERE a.vec_id % {every} = 0
-  ) WHERE rank <= {k}
+  SELECT query_id, neighbor_id FROM ({_cosine_topk_select(k, every)})
 )
 SELECT g.query_id, count(*) AS k_eval,
        CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,

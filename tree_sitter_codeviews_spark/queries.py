@@ -992,12 +992,12 @@ def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """baseline-only: brute-force exact-cosine top-k (float path) — the
+    """baseline-only: exact top-k by the round-6 quantized cosine — the
     recall ground truth for the bucketed ANN family (lsh/ivf/pq), not the
-    corpus-scale plan."""
+    corpus-scale plan; oracle-mirrored exactly like the other ANN legs."""
     from .operators import ann
 
-    return ann.topk_cosine_pandas(_embs(spark, sf_dir), k=10, every=50)
+    return ann.cosine_topk(_embs(spark, sf_dir), k=10, every=50)
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1021,7 +1021,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ/ADC ANN: 4-bit product-quantization codes, asymmetric-distance
+    """PQ/ADC ANN: 6-bit product-quantization codes, asymmetric-distance
     lookup-table scoring — the memory-bound ANN family (8 bytes/vector on
     the corpus side of the join)."""
     from .operators import ann
@@ -2785,26 +2785,8 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = ann.lsh_bucketed_topk(_embs(spark, sf_dir), k=k, every=every).select(
         "query_id", "neighbor_id"
     )
-    # GT candidates come from one int64 GEMM pass (a proven superset of the
-    # final top-k — see exact_cosine_gt_candidates); cos_q and the global
-    # ranking below are the SAME SQL expressions as the former crossJoin
-    # formulation, so the selected GT rows are bit-identical.
-    cos = F.round(
-        F.col("dot").cast("double")
-        / F.sqrt(F.col("norm_a").cast("double") * F.col("norm_b").cast("double")),
-        6,
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_q").desc(), F.col("neighbor_id").asc()
-    )
-    gt = (
-        ann.exact_cosine_gt_candidates(_embs(spark, sf_dir), k=k, every=every)
-        .withColumn("cos_q", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
+    gt = ann.cosine_topk(_embs(spark, sf_dir), k=k, every=every).select(
+        "query_id", "neighbor_id"
     )
     return (
         gt.join(lsh.withColumn("hit", F.lit(1)), ["query_id", "neighbor_id"], "left")
