@@ -9,7 +9,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tree_sitter_codeviews_spark.operators import ann
+from tests.oracle_util import assert_matches
+from tree_sitter_codeviews_spark import oracle
+from tree_sitter_codeviews_spark.operators import ann, dedup
 from tree_sitter_codeviews_spark.sources.testdata import load_table
 
 
@@ -75,6 +77,7 @@ def test_topk_quantized_tie_break_across_batches(spark, small_batches):
     (ann.cosine_topk, "query set exceeds 1 "),
     (ann.exact_cosine_gt_candidates, "query set exceeds 1 "),
     (ann.ivf_topk, "centroid set exceeds 1;"),
+    (dedup.embedding_near_dups, "corpus exceeds 1 "),
 ])
 def test_driver_caps_raise(spark, sf_tiny, monkeypatch, fn, match):
     monkeypatch.setattr(ann, "QUERY_CAP", 1)
@@ -99,6 +102,40 @@ def test_pq_d2_batch_exact_inside_contract_and_loud_outside():
         ann._pq_d2_batch(bad_x, cb)
     with pytest.raises(ValueError, match=r"2\^20"):
         ann._pq_d2_batch(x, bad_cb)
+
+
+def test_exact_gemm_exact_inside_contract_and_loud_outside():
+    """The float64 GEMM equals the int64 product for signed coordinates up
+    to 2^20 - 1 at the largest inner dimension, and refuses a coordinate of
+    exactly +-2^20 in either operand."""
+    rng = np.random.default_rng(11)
+    top = (1 << 20) - 1
+    a = rng.integers(-top, top + 1, size=(6, dedup.GEMM_DIM), dtype=np.int64)
+    b = rng.integers(-top, top + 1, size=(dedup.GEMM_DIM, 5), dtype=np.int64)
+    a[0], b[:, 0] = top, top  # one dot at the bound: 4096 * (2^20 - 1)^2
+    a[1], b[:, 1] = -top, top
+    assert np.array_equal(dedup.exact_gemm(a, b), a @ b)
+    for edge in (1 << 20, -(1 << 20)):
+        bad_a, bad_b = a.copy(), b.copy()
+        bad_a[2, 3], bad_b[4, 2] = edge, edge
+        with pytest.raises(ValueError, match=r"2\^20"):
+            dedup.exact_gemm(bad_a, b)
+        with pytest.raises(ValueError, match=r"2\^20"):
+            dedup.exact_gemm(a, bad_b)
+
+
+def test_embedding_near_dups_multibatch_equals_oracle(spark, sf_tiny, small_batches):
+    """Pairs whose two rows sit in different Arrow batches and partitions
+    are each found once, by the batch holding the smaller id."""
+    embs = load_table(spark, sf_tiny, "embeddings").repartition(7)
+    got = dedup.embedding_near_dups(embs, threshold=0.4)
+    assert_matches(got, sf_tiny, oracle.dedup_embedding_sql(0.4), "near_dups")
+    assert got.count() > 0
+
+
+def test_embedding_near_dups_empty_corpus(spark):
+    embs = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    assert dedup.embedding_near_dups(embs, threshold=0.4).count() == 0
 
 
 def test_gt_candidates_cover_global_topk_multibatch(spark, sf_tiny, small_batches):

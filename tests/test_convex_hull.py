@@ -1,4 +1,5 @@
-"""Convex hull: the monotone chain against a brute-force edge-definition
+"""Convex hull: ``geometry.hull_area2`` (the monotone chain
+``events_convex_hull`` ships) against a brute-force edge-definition
 reference on adversarial configurations (collinear tracks, duplicates,
 squares with interior/boundary points) via hypothesis."""
 
@@ -7,35 +8,16 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tree_sitter_codeviews_spark.geometry import hull_area2
+
 
 def _cross(o, a, b):
     return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
 
 
-def chain_area2(pts_in):
-    """The exact algorithm events_convex_hull ships (duplicated here so the
-    property test needs no Spark session)."""
-    pts = sorted(set(pts_in))
-    if len(pts) < 3:
-        return 0
-    lower: list = []
-    for p in pts:
-        while len(lower) >= 2 and _cross(lower[-2], lower[-1], p) <= 0:
-            lower.pop()
-        lower.append(p)
-    upper: list = []
-    for p in reversed(pts):
-        while len(upper) >= 2 and _cross(upper[-2], upper[-1], p) <= 0:
-            upper.pop()
-        upper.append(p)
-    hull = lower[:-1] + upper[:-1]
-    return abs(
-        sum(
-            hull[i][0] * hull[(i + 1) % len(hull)][1]
-            - hull[(i + 1) % len(hull)][0] * hull[i][1]
-            for i in range(len(hull))
-        )
-    )
+def shipped_area2(pts):
+    """``geometry.hull_area2`` on a list of (x, y) tuples."""
+    return hull_area2([p[0] for p in pts], [p[1] for p in pts])
 
 
 def edge_area2(pts_in):
@@ -73,16 +55,16 @@ def edge_area2(pts_in):
     )
 )
 def test_chain_matches_edge_definition(pts):
-    assert chain_area2(pts) == edge_area2(pts)
+    assert shipped_area2(pts) == edge_area2(pts)
 
 
 def test_known_shapes():
     # unit square with center + boundary-midpoint: area2 = 2 * 4 = 8
     sq = [(0, 0), (2, 0), (2, 2), (0, 2), (1, 1), (1, 0)]
-    assert chain_area2(sq) == edge_area2(sq) == 8
+    assert shipped_area2(sq) == edge_area2(sq) == 8
     # collinear track
     line = [(0, 0), (3, 3), (7, 7), (2, 2)]
-    assert chain_area2(line) == edge_area2(line) == 0
+    assert shipped_area2(line) == edge_area2(line) == 0
     # triangle with a duplicate vertex
     tri = [(0, 0), (4, 0), (0, 4), (0, 0)]
-    assert chain_area2(tri) == edge_area2(tri) == 16
+    assert shipped_area2(tri) == edge_area2(tri) == 16

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from tree_sitter_codeviews_spark.operators import ann, dedup, textstats
@@ -475,3 +476,37 @@ def test_cdc_unique_and_short_docs(spark):
     assert all(r.n_dup_chunks == 0 and r.dup_chunk_ppm == 0
                for r in rows.values())
     assert rows[3].n_chunks == 1
+
+
+@pytest.fixture(scope="module")
+def sf_zero_norm(sf_tiny, tmp_path_factory):
+    """``sf_tiny``'s embeddings plus one all-zero vector at vec_id 600: a
+    query (600 % 50 == 0) and an IVF centroid (600 % 40 == 0), so its
+    0/0 cosine reaches every leg as a query, a neighbor and a centroid."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_tiny}/embeddings.parquet")
+    zero = pa.table({
+        "vec_id": pa.array([600], t.schema.field("vec_id").type),
+        "embedding": pa.array([[0.0] * 64], t.schema.field("embedding").type),
+        "label": pa.array([0], t.schema.field("label").type),
+    })
+    out = tmp_path_factory.mktemp("sf_zero_norm")
+    pq.write_table(pa.concat_tables([t.replace_schema_metadata(None), zero]),
+                   out / "embeddings.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("name", [
+    "dedup_embedding", "dedup_embedding_lsh", "ann_cosine_topk",
+    "ann_ivf_topk", "ann_lsh_topk", "dedup_semantic",
+])
+def test_zero_norm_cosine_matches_oracle(spark, sf_zero_norm, name):
+    """A zero-norm vector's cosine is 0/0: NULL on both engines (ordered
+    last, dropped by a threshold) instead of an ANSI DIVIDE_BY_ZERO."""
+    import __spark_entry__ as entrymod
+    from tests.oracle_util import assert_matches
+
+    query = entrymod.queries()[name](spark, sf_zero_norm)
+    assert_matches(query, sf_zero_norm, entrymod.oracle_sql()[name], name)

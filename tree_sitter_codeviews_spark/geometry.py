@@ -253,6 +253,17 @@ def hull_np(xs: np.ndarray, ys: np.ndarray):
     return hx, hy
 
 
+def hull_area2(xs: np.ndarray, ys: np.ndarray) -> int:
+    """Twice the convex-hull area of an integer point set: the shoelace sum
+    over ``hull_np``'s vertices in python ints (exact). Fewer than three
+    distinct points, or a collinear set, give 0."""
+    hx, hy = (h.tolist() for h in hull_np(xs, ys))
+    n = len(hx)
+    return abs(sum(
+        hx[i] * hy[(i + 1) % n] - hx[(i + 1) % n] * hy[i] for i in range(n)
+    ))
+
+
 def diameter_sq_np(xs: np.ndarray, ys: np.ndarray) -> int:
     """Exact max squared euclidean distance over a point set: hull first
     (the diameter's endpoints are hull vertices), then brute force over

@@ -2,22 +2,23 @@
 
 Every family follows the quantized-similarity contract written once in
 ``dedup``: ``quantized_df`` (round(1000x) int64 vectors), exact int64
-dots and norms (``int_dot_col`` / ``sq_norm_col``), the round-6 cosine
-``cos_q_col``, and one per-query ranker here, ``_rank_per_query``, whose
+products (``exact_gemm``; the pair-dots ``int_dot_col``/``int_dot_udf``;
+``sq_norm_col``), the round-6 cosine ``cos_q_col`` with its numpy cut
+``cos_cut``, and one per-query ranker here, ``_rank_per_query``, whose
 total order is (score, neighbor_id asc). Query and centroid matrices
 reach the driver through ``driver_arm.collect_if_small`` under
 ``QUERY_CAP`` / ``CENTROID_CAP``; above a cap the operator raises.
 
 - Exact: ``topk_quantized`` ranks by integer dot and ``cosine_topk`` by
-  the round-6 quantized cosine, each one int64 numpy GEMM per Arrow batch
-  against the collected query matrix. Bit-reproducible vs the SQL
+  the round-6 quantized cosine, each one ``dedup.exact_gemm`` per Arrow
+  batch against the collected query matrix. Bit-reproducible vs the SQL
   oracle; ``cosine_topk`` is the recall ground truth of the families
   below.
 - ``lsh_bucketed_topk``: random-hyperplane LSH pre-bucketing so each query
   only scores its bucket's candidates — the 10^12-row path; recall<1 by
   contract, rescued by multi-probe (neighbor buckets at hamming 1).
-- ``ivf_topk``: inverted-file ANN — sampled-centroid coarse quantizer, GEMM
-  build, nprobe cell probing; oracle-mirrored exactly.
+- ``ivf_topk``: inverted-file ANN — sampled-centroid coarse quantizer,
+  ``exact_gemm`` build, nprobe cell probing; oracle-mirrored exactly.
 - ``pq_topk``: product quantization + asymmetric-distance (ADC) scoring —
   the memory-bound family (one packed long per corpus vector in the join);
   oracle-mirrored exactly.
@@ -36,8 +37,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import driver_arm
-from .dedup import cos_q_col, int_dot_col, quantized_df, sq_norm_col
+from .dedup import (
+    _driver_matrix, _id_matrix, cos_cut, cos_np, cos_q_col, embedding_bucket_udf,
+    exact_gemm, int_dot_col, int_dot_udf, quantized_df, sq_norm_col,
+)
 
 # Driver caps of the collected matrices: QUERY_CAP query vectors of
 # int64[64] is ~100 MB; |C| ~ sqrt(N) centroids on a real corpus.
@@ -47,26 +50,6 @@ CENTROID_CAP = 100_000
 
 def _query_set(embs: DataFrame, every: int = 50) -> DataFrame:
     return embs.filter(F.col("vec_id") % every == 0)
-
-
-def _id_matrix(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, int64 vector matrix) of a pandas ``(vec_id, qv)`` batch."""
-    return (
-        pdf["vec_id"].to_numpy(dtype=np.int64),
-        np.stack(pdf["qv"].to_numpy()).astype(np.int64),
-    )
-
-
-def _driver_matrix(
-    q: DataFrame, cap: int, too_big: str,
-) -> tuple[np.ndarray, np.ndarray]:
-    """``_id_matrix`` of a bounded ``(vec_id, qv)`` frame, collected as
-    Arrow columns by the driver-arm probe; ``ValueError(too_big)`` when it
-    has more than ``cap`` rows."""
-    pdf = driver_arm.collect_if_small(q.select("vec_id", "qv"), cap)
-    if pdf is None:
-        raise ValueError(too_big)
-    return _id_matrix(pdf)
 
 
 def _rank_per_query(
@@ -89,14 +72,13 @@ def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
 
     The query side is tiny (1/every of the corpus — collected once under
     ``QUERY_CAP`` and captured in the UDF closure); the corpus streams
-    map-side through ONE int64 numpy GEMM per Arrow batch, with an exact
+    map-side through ONE ``exact_gemm`` per Arrow batch, with an exact
     per-batch local top-k by the FINAL total order (dot desc, neighbor_id
     asc — lexsort, so int64 ties break identically). Local top-k by the
     final order is a proven superset of the global top-k (if k batch rows
     beat a row locally they beat it globally), so the closing window over
-    ~k·|queries| rows per batch is bit-identical to the former crossJoin +
-    interpreted 64-element HOF fold, which evaluated per pair (measured:
-    the fold dominated the stage)."""
+    ~k·|queries| rows per batch is bit-identical to a window over every
+    pair."""
     q = quantized_df(embs)
     qids, qmat = _driver_matrix(
         _query_set(q, every), QUERY_CAP,
@@ -115,7 +97,7 @@ def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
             if len(pdf) == 0:
                 continue
             ids, m = _id_matrix(pdf)
-            dots = qmat @ m.T  # (Q, B) exact int64
+            dots = exact_gemm(qmat, m.T)  # (Q, B)
             out_q, out_n, out_d = [], [], []
             for qi in range(len(qids)):
                 keep = ids != qids[qi]
@@ -138,20 +120,12 @@ def exact_cosine_gt_candidates(
 ) -> DataFrame:
     """(query_id, neighbor_id, dot, norm_a, norm_b): a PROVEN superset of
     each query's top-k by the final order ``round(cos, 6) desc,
-    neighbor_id asc`` — computed as one int64 numpy GEMM per Arrow batch
-    instead of a crossJoin with an interpreted per-pair HOF fold. dot/norms
-    are exact int64 (identical to the SQL aggregates); ``cosine_topk``
-    derives cos with ``cos_q_col`` and runs the exact global window, so
-    the final rows are bit-identical.
-
-    Safety of the local cut: per batch and query, with c_k = the k-th
-    largest unrounded cos, rows with cos < c_k − 2e-6 are dropped. For any
-    such row, round(cos,6) < round(c_k − …) by at least one 1e-6 step
-    below every kept-row's rounded value (round moves a value by ≤ 5e-7),
-    so ≥ k same-batch rows strictly beat it on rounded cos alone — it
-    cannot be in the batch's, hence the global, top-k. NaN cos (zero-norm
-    vectors; Spark sorts NaN above every double in a descending order) is
-    treated as +inf for selection, so such rows are always kept."""
+    neighbor_id asc`` — one ``exact_gemm`` per Arrow batch against the
+    collected query matrix, cut per query by ``cos_cut`` (the query itself
+    excluded first). A batch's top-k covers its share of the global top-k,
+    so the cut is lossless. dot/norms are exact int64 (identical to the
+    SQL aggregates); ``cosine_topk`` derives cos with ``cos_q_col`` and
+    runs the exact global window, so the final rows are bit-identical."""
     q = quantized_df(embs)
     qids, qmat = _driver_matrix(
         _query_set(q, every), QUERY_CAP,
@@ -174,32 +148,14 @@ def exact_cosine_gt_candidates(
                 continue
             ids, m = _id_matrix(pdf)
             bnorm = (m * m).sum(axis=1)
-            dots = qmat @ m.T  # (Q, B) exact int64
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = dots / np.sqrt(
-                    qnorm.astype(np.float64)[:, None]
-                    * bnorm.astype(np.float64)[None, :]
-                )
-            cos = np.where(np.isnan(cos), np.inf, cos)
-            out: list[dict] = []
-            for qi in range(len(qids)):
-                keep = ids != qids[qi]
-                c = cos[qi][keep]
-                if len(c) > k:
-                    c_k = np.partition(c, -k)[-k]
-                    sel = c >= c_k - 2e-6
-                else:
-                    sel = np.ones(len(c), dtype=bool)
-                out.append({
-                    "query_id": np.full(int(sel.sum()), qids[qi], dtype=np.int64),
-                    "neighbor_id": ids[keep][sel],
-                    "dot": dots[qi][keep][sel],
-                    "norm_a": np.full(int(sel.sum()), qnorm[qi], dtype=np.int64),
-                    "norm_b": bnorm[keep][sel],
-                })
+            dots = exact_gemm(qmat, m.T)  # (Q, B)
+            cos = cos_np(dots, qnorm, bnorm)
+            self_pair = qids[:, None] == ids[None, :]
+            cos[self_pair] = -np.inf  # never a neighbor, never a cut rank
+            qi, j = np.nonzero(cos_cut(cos, k) & ~self_pair)
             yield pd.DataFrame({
-                col: np.concatenate([o[col] for o in out])
-                for col in ("query_id", "neighbor_id", "dot", "norm_a", "norm_b")
+                "query_id": qids[qi], "neighbor_id": ids[j], "dot": dots[qi, j],
+                "norm_a": qnorm[qi], "norm_b": bnorm[j],
             })
 
     return q.mapInPandas(score, out_schema)
@@ -211,7 +167,7 @@ def cosine_topk(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
     (lsh/ivf/pq) and the baseline they are measured against, not a
     corpus-scale plan. ``exact_cosine_gt_candidates`` keeps a proven
     superset of each query's top-k; ``cos_q_col`` and the shared ranker
-    then select exactly the rows a crossJoin over every pair would."""
+    then select exactly the rows a window over every pair would."""
     cand = exact_cosine_gt_candidates(embs, k=k, every=every)
     return _rank_per_query(
         cand.withColumn("cos", cos_q_col("dot", "norm_a", "norm_b")), k, "cos"
@@ -230,12 +186,11 @@ def _ivf_route(
     (``vec_id, cent_id``) and the ``nprobe`` probed cells of every query
     (``query_id, cent_id``)."""
     # centroid scoring: collect the (bounded) centroid table once and run
-    # one int64 numpy GEMM per Arrow batch — the faiss-style IVF build.
-    # Dots stay exact integers; cos + round happen Spark-side so the
-    # rounding mode matches every other oracle-checked query. (The first
-    # cut cross-joined a broadcast centroid DF and folded the dot with an
-    # interpreted zip_with/aggregate lambda — correct, but ~100k
-    # interpreted 64-dim folds at sf0.1; the GEMM is the production shape.)
+    # one ``exact_gemm`` per Arrow batch — the faiss-style IVF build. Each
+    # vector emits only ``cos_cut``'s superset of its winners (its nprobe
+    # best cells for a query, its best cell otherwise); cos + round happen
+    # Spark-side so the rounding mode matches every other oracle-checked
+    # query, and the max_by/window below make the exact selection.
     cent_ids, cmat = _driver_matrix(
         qn.filter(F.col("vec_id") % centroid_every == 0), CENTROID_CAP,
         f"ivf_topk: centroid set exceeds {CENTROID_CAP}; swap the sampled "
@@ -252,36 +207,14 @@ def _ivf_route(
     ])
 
     def _score(batches):
-        n_c = len(cent_ids)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ids, m = _id_matrix(pdf)
-            dots = m @ cmat.T  # (B, C), exact int64
+            dots = exact_gemm(m, cmat.T)  # (B, C)
             norms = pdf["norm"].to_numpy(dtype=np.int64)
-            # emit only a PROVEN superset of each vector's winners instead
-            # of all B x C pairs (the Spark-side round/max_by/window below
-            # is unchanged and does the exact selection): with c_t = the
-            # t-th largest unrounded cos (t = nprobe for query vectors,
-            # 1 otherwise), rows with cos < c_t - 2e-6 satisfy
-            # round(cos) < round(c_t) (round moves a value <= 5e-7), so
-            # >= t rows strictly beat them on the ROUNDED key and they
-            # cannot be selected even via ties; rounded ties of the t-th
-            # value itself all survive the cut. NaN cos (zero-norm
-            # vectors) sorts highest in Spark — treated as +inf, always
-            # kept. Same guard-band discipline as
-            # ``exact_cosine_gt_candidates``.
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = dots / np.sqrt(
-                    norms.astype(np.float64)[:, None]
-                    * cnorms.astype(np.float64)[None, :]
-                )
-            cos = np.where(np.isnan(cos), np.inf, cos)
-            t = np.where(ids % every == 0, min(nprobe, n_c), 1)
-            cuts = sorted({n_c - int(v) for v in np.unique(t)})
-            part = np.partition(cos, cuts, axis=1)
-            kth = np.take_along_axis(part, (n_c - t)[:, None], axis=1)[:, 0]
-            row, col = np.nonzero(cos >= (kth - 2e-6)[:, None])
+            t = np.where(ids % every == 0, nprobe, 1)
+            row, col = np.nonzero(cos_cut(cos_np(dots, norms, cnorms), t))
             yield pd.DataFrame({
                 "vec_id": ids[row],
                 "cent_id": cent_ids[col],
@@ -374,8 +307,6 @@ def lsh_bucketed_topk(
     int norms, round 6) over candidates only. A (query, neighbor) pair
     matches via exactly one probe (mask = xor of buckets), so no dedup
     pass is needed."""
-    from .dedup import embedding_bucket_udf, int_dot_udf
-
     bucketize = embedding_bucket_udf(dim, N_PLANES)
     qn = (
         _with_norm(quantized_df(embs))
@@ -419,7 +350,6 @@ def lsh_bucketed_topk(
 
 PQ_M, PQ_DSUB, PQ_K = 8, 8, 64  # M * DSUB == dim; 8x6-bit codes pack in a long
 PQ_SAMPLE_MOD = 3               # codebook sample: vec_id % MOD == 1, first K
-_PQ_EXACT = 1 << 20             # |coordinate| bound of the exact float64 GEMM
 
 
 def _pq_codebook_from(sample: np.ndarray) -> np.ndarray:
@@ -442,27 +372,17 @@ def _pq_d2_batch(x: np.ndarray, cb: np.ndarray) -> np.ndarray:
     """(B, 64) int64 vectors -> (B, M, K) exact squared subdistances.
 
     ||x - c||^2 expanded as ||x||^2 + ||c||^2 - 2 x.c with the cross term
-    as one float64 BLAS GEMM per subspace. Exact only while every
-    coordinate is below ``_PQ_EXACT`` in magnitude: then each product is
-    < 2^40 and each DSUB-term sum < 2^45, far below 2^53, so float64 is
-    EXACT and the cast back to int64 is lossless. Quantized coordinates
-    are |v| <= ~2^13 (round(1000x) of unit-ish floats); larger inputs
-    raise instead of silently rounding. (The former broadcast-subtract
-    formulation allocated B x K x DSUB temporaries — memory traffic, not
-    arithmetic, dominated its cost.)"""
-    top = max(int(np.abs(x).max(initial=0)), int(np.abs(cb).max(initial=0)))
-    if top >= _PQ_EXACT:
-        raise ValueError(
-            f"pq: coordinate magnitude {top} >= 2^20; the float64 ADC "
-            "GEMM is exact only below it"
-        )
-    b = x.shape[0]
-    sub = x.reshape(b, PQ_M, PQ_DSUB).astype(np.float64)     # (B, M, D)
-    c = cb.astype(np.float64)                                # (M, K, D)
-    cross = np.einsum("bmd,mkd->bmk", sub, c)                # BLAS per m
+    one ``exact_gemm`` per subspace, so a coordinate at or above 2^20
+    raises instead of rounding. (The former broadcast-subtract formulation
+    allocated B x K x DSUB temporaries — memory traffic, not arithmetic,
+    dominated its cost.)"""
+    sub = x.reshape(len(x), PQ_M, PQ_DSUB)                   # (B, M, D)
+    cross = np.stack(
+        [exact_gemm(sub[:, m], cb[m].T) for m in range(PQ_M)], axis=1
+    )                                                        # (B, M, K)
     xn = (sub * sub).sum(-1)                                 # (B, M)
-    cn = (c * c).sum(-1)                                     # (M, K)
-    return (xn[:, :, None] + cn[None, :, :] - 2.0 * cross).astype(np.int64)
+    cn = (cb * cb).sum(-1)                                   # (M, K)
+    return xn[:, :, None] + cn[None, :, :] - 2 * cross
 
 
 def _pq_pack(d2: np.ndarray) -> np.ndarray:
@@ -529,11 +449,9 @@ def pq_topk(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         pq_udf(cb, lut=True)(F.col("qv")).alias("lut"),
     )
-    pairs = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adist", _adc_expr(cb.shape[1]))
-    )
+    pairs = corpus.join(
+        F.broadcast(queries), F.col("query_id") != F.col("neighbor_id")
+    ).withColumn("adist", _adc_expr(cb.shape[1]))
     return _rank_per_query(pairs, k, "adist", desc=False)
 
 

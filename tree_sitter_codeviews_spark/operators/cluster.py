@@ -31,13 +31,13 @@ parquet scan does not serialize every pass.
 SemDeDup (Abbas et al. 2023, arXiv:2303.09540): near-duplicate pairs
 restricted to SAME-CLUSTER — the pair space is Σ|cluster|², bounded by
 the quantizer's balance instead of corpus-quadratic. Pair generation
-runs as ONE grouped int64 GEMM per cluster (each vector crosses the
-Arrow boundary once per cluster, not once per candidate pair), with a
-conservative unrounded prefilter ``cos ≥ threshold - 1e-6``; the exact
+runs as ONE grouped ``dedup.exact_gemm`` per cluster (each vector
+crosses the Arrow boundary once per cluster, not once per candidate
+pair), with the unrounded prefilter ``cos ≥ threshold - 1e-6`` that
+``dedup.cos_cut`` proves a superset of the survivors; the exact
 published value ``cos_q = round(dot/sqrt(norm_a·norm_b), 6)``
 (``dedup.cos_q_col``) and the final ``≥ threshold`` cut run in Spark
-SQL, so the emitted pair set is bit-identical (rounding moves cos by
-≤ 5e-7 < 1e-6, so the prefilter is a strict superset of survivors).
+SQL, so the emitted pair set is bit-identical.
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import cos_q_col, quantized_df
+from .dedup import _id_matrix, cos_np, cos_q_col, exact_gemm, quantized_df
 
 __all__ = ["kmeans_fit", "kmeans_assign", "semantic_dups"]
 
@@ -68,14 +68,15 @@ def _packed_min(m: np.ndarray, cmat: np.ndarray, cnorm: np.ndarray) -> np.ndarra
     """Per-row minimum of the packed key ``dist*_PACK + cluster``: ``% _PACK``
     is the nearest centroid (ties to the lowest id), ``// _PACK`` its exact
     int64 squared distance."""
-    d = (m * m).sum(axis=1)[:, None] - 2 * (m @ cmat.T) + cnorm[None, :]
+    d = (m * m).sum(axis=1)[:, None] - 2 * exact_gemm(m, cmat.T) + cnorm[None, :]
     packed = d * np.int64(_PACK) + np.arange(len(cmat), dtype=np.int64)
     return packed.min(axis=1)
 
 
 def _assign(q: DataFrame, cmat: np.ndarray) -> DataFrame:
-    """(vec_id, cluster, dist_q): nearest centroid per vector, one exact
-    int64 GEMM per Arrow batch against the broadcast k×d centroid matrix."""
+    """(vec_id, cluster, dist_q): nearest centroid per vector, one
+    ``exact_gemm`` per Arrow batch against the broadcast k×d centroid
+    matrix."""
     cmat = np.asarray(cmat, dtype=np.int64)
     cnorm = (cmat * cmat).sum(axis=1)  # (k,)
     schema = T.StructType([
@@ -180,14 +181,13 @@ def kmeans_assign(embs: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
 
 
 def _pair_partials(q: DataFrame, cmat: np.ndarray, margin: float) -> DataFrame:
-    """Same-cluster candidate pairs via one int64 GEMM per cluster group:
-    (vec_id_a < vec_id_b, cluster, exact dot/norm_a/norm_b), prefiltered at
-    the conservative unrounded ``cos ≥ margin``. The exact published cosine
-    is computed downstream in Spark SQL, so this stage only needs a SAFE
-    SUPERSET — numpy float64 division is the same IEEE arithmetic, and the
-    1e-6 slack dwarfs any conceivable ulp difference. Zero-norm vectors
-    produce 0/0 = NaN, dropped by the ≥ comparison exactly as the SQL
-    filter drops them."""
+    """Same-cluster candidate pairs via one ``exact_gemm`` per cluster
+    group: (vec_id_a < vec_id_b, cluster, exact dot/norm_a/norm_b),
+    prefiltered at the unrounded ``cos_np >= margin`` (``margin`` =
+    threshold - 1e-6, safe by ``dedup.cos_cut``'s argument). The exact
+    published cosine is computed downstream in Spark SQL. Zero-norm
+    vectors give NaN, dropped by the comparison as the SQL filter drops
+    their NULL."""
     cmat = np.asarray(cmat, dtype=np.int64)
     cnorm = (cmat * cmat).sum(axis=1)
     schema = T.StructType([
@@ -200,23 +200,19 @@ def _pair_partials(q: DataFrame, cmat: np.ndarray, margin: float) -> DataFrame:
     ])
 
     def _go(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        m = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
-        g = m @ m.T  # exact: |dot| <= 64*(2e4)^2 ~ 2.6e10 << 2^63
-        norms = np.diagonal(g).astype(np.float64)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = g / np.sqrt(norms[:, None] * norms[None, :])
-        iu = np.triu_indices(len(ids), k=1)
-        keep = cos[iu] >= margin
-        ii, jj = iu[0][keep], iu[1][keep]
+        ids, m = _id_matrix(pdf)
+        g = exact_gemm(m, m.T)
+        norms = np.diagonal(g)
+        ii, jj = np.nonzero(
+            (ids[:, None] < ids[None, :]) & (cos_np(g, norms, norms) >= margin)
+        )
         return pd.DataFrame({
             "vec_id_a": ids[ii],
             "vec_id_b": ids[jj],
             "cluster": np.full(len(ii), pdf["cluster"].iloc[0], dtype=np.int64),
             "dot": g[ii, jj],
-            "norm_a": np.diagonal(g)[ii],
-            "norm_b": np.diagonal(g)[jj],
+            "norm_a": norms[ii],
+            "norm_b": norms[jj],
         })
 
     # assign inline (one more GEMM over the checkpointed corpus) so the
@@ -248,7 +244,7 @@ def semantic_dups(
     """SemDeDup: (vec_id_a, vec_id_b, cluster, cos_q) near-dup pairs WITHIN
     k-means clusters — the cluster equi-grouping bounds the candidate space
     at Σ|cluster|² (pick k ~ N/1000 at corpus scale for ~constant cluster
-    size), generated by one exact-int64 GEMM per cluster, then the exact
+    size), generated by one ``exact_gemm`` per cluster, then the exact
     quantized cosine (Spark SQL round/divide, unchanged) publishes. Recall
     vs the brute pair scan is the SemDeDup contract (cross-cluster
     near-dups are forfeit by design); the output itself is deterministic,

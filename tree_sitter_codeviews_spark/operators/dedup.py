@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .. import driver_arm
+
 # deterministic minhash "permutations": slot i uses the salted hash
 # xxhash64(i, shingle) — an independent hash per slot, all JVM-side.
 # (Monotone affine maps without wraparound would collapse every slot to a
@@ -423,8 +425,10 @@ def sq_norm_col(q) -> F.Column:
 
 def int_dot_col(a, b) -> F.Column:
     """Exact int64 dot of two quantized-embedding columns (Columns or
-    names) as a native zip_with/aggregate fold; ``int_dot_udf`` is its
-    Arrow twin for candidate sets too large for an interpreted fold."""
+    names) as a native zip_with/aggregate fold. Of the two pair-dots it is
+    the faster where each pair is cheap to fold but costly to ship to
+    Python: ``embedding_lsh_dups`` (221k candidates at sf0.1, 4 cores)
+    measured 2.3-3.2 s with it against 4.2-5.3 s with ``int_dot_udf``."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0).cast("long"), lambda acc, v: acc + v)
 
@@ -433,12 +437,94 @@ def cos_q_col(dot: str, na: str, nb: str) -> F.Column:
     """The published quantized cosine ``round(dot / sqrt(na * nb), 6)`` of
     an exact int64 dot and two int64 squared norms (column names). Every
     value before the last two float ops is an exact integer, so Spark and
-    the DuckDB oracles round the same double; a zero norm gives NaN."""
+    the DuckDB oracles round the same double; a zero norm gives NULL (0/0
+    through ``try_divide``, as DuckDB's ``/``), which sorts last in a
+    descending order and fails every ``>=`` threshold."""
     return F.round(
-        F.col(dot).cast("double")
-        / F.sqrt(F.col(na).cast("double") * F.col(nb).cast("double")),
+        F.try_divide(
+            F.col(dot).cast("double"),
+            F.sqrt(F.col(na).cast("double") * F.col(nb).cast("double")),
+        ),
         6,
     )
+
+
+GEMM_EXACT, GEMM_DIM = 1 << 20, 4096  # exact_gemm's coordinate / depth bound
+GEMM_CELLS = 1 << 22  # result cells of one exact_gemm in a row-chunked scan
+
+
+def exact_gemm(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """The int64 product of the int64 matrices ``a`` and ``b``, the one
+    integer product of every embedding kernel. numpy has no integer BLAS
+    (its int64 product is a scalar loop: a 5000x64 self-product measured
+    2.4 s against 0.36 s in float64), so it runs as one float64 GEMM under
+    a bound that keeps it exact: with every |coordinate| < 2^20 and an
+    inner dimension <= 4096, each term is < 2^40 and each partial sum
+    < 2^52, so every float64 partial sum is an integer and the cast back
+    is lossless. Outside the bound it raises ``ValueError``."""
+    top = max(int(np.abs(a).max(initial=0)), int(np.abs(b).max(initial=0)))
+    if top >= GEMM_EXACT or a.shape[-1] > GEMM_DIM:
+        raise ValueError(
+            f"exact_gemm: coordinate magnitude {top} (bound 2^20) or inner "
+            f"dimension {a.shape[-1]} (bound {GEMM_DIM}) out of range; the "
+            "float64 GEMM is exact only inside both"
+        )
+    return (a.astype(np.float64) @ b.astype(np.float64)).astype(np.int64)
+
+
+def cos_np(dots: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """The unrounded cosine of ``cos_q_col`` in numpy: an exact (R, C) int64
+    dot matrix over its row and column int64 squared norms. A zero norm
+    gives NaN, the missing cosine ``cos_q_col`` publishes as NULL."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return dots / np.sqrt(
+            na.astype(np.float64)[:, None] * nb.astype(np.float64)[None, :]
+        )
+
+
+def cos_cut(cos: np.ndarray, t) -> np.ndarray:
+    """Keep mask of a ``cos_np`` matrix: a PROVEN superset of each row's
+    ``t`` best columns (``t`` an int or one int per row) in the published
+    order, ``round(cos, 6)`` descending with a missing cosine last.
+
+    With c_t the row's t-th largest present cosine, the cut keeps every
+    missing cosine and every cos >= c_t - 2e-6. A dropped row has
+    cos < c_t - 2e-6; rounding moves a value by at most 5e-7, so its
+    rounded cosine is below the rounded cosine of each of the >= t rows at
+    or above c_t (the band dwarfs any ulp between numpy and Spark). Those
+    rows beat it strictly, ties included, so it is in no top-t. The pair
+    scans' publish threshold is the same argument with c_t = threshold:
+    cos < threshold - 1e-6 rounds below the threshold."""
+    n = cos.shape[1]
+    t = np.minimum(np.broadcast_to(np.asarray(t, dtype=np.int64), (len(cos),)), n)
+    missing = np.isnan(cos)
+    ranked = np.where(missing, -np.inf, cos)
+    cuts = sorted({n - int(v) for v in np.unique(t)})
+    part = np.partition(ranked, cuts, axis=1)
+    c_t = np.take_along_axis(part, (n - t)[:, None], axis=1)
+    return missing | (cos >= c_t - 2e-6)
+
+
+def _id_matrix(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, int64 vector matrix) of a pandas ``(vec_id, qv)`` batch; an
+    empty batch gives a (0, 0) matrix (``np.stack`` refuses zero arrays)."""
+    qv = pdf["qv"].to_numpy()
+    return (
+        pdf["vec_id"].to_numpy(dtype=np.int64),
+        np.stack(qv).astype(np.int64) if len(qv) else np.zeros((0, 0), np.int64),
+    )
+
+
+def _driver_matrix(
+    q: DataFrame, cap: int, too_big: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``_id_matrix`` of a bounded ``(vec_id, qv)`` frame, collected as
+    Arrow columns by the driver-arm probe; ``ValueError(too_big)`` when it
+    has more than ``cap`` rows."""
+    pdf = driver_arm.collect_if_small(q.select("vec_id", "qv"), cap)
+    if pdf is None:
+        raise ValueError(too_big)
+    return _id_matrix(pdf)
 
 
 # --- bucketed embedding near-dup (the 10^12-row path) -----------------------
@@ -476,7 +562,7 @@ def embedding_bucket_col(q: F.Column, dim: int, n_planes: int = EMB_PLANES) -> F
 
 
 def embedding_bucket_udf(dim: int, n_planes: int = EMB_PLANES):
-    """Arrow-batched twin of ``embedding_bucket_col``: one int64 numpy GEMM
+    """Arrow-batched twin of ``embedding_bucket_col``: one ``exact_gemm``
     per batch against the fixed integer plane matrix — bit-identical (exact
     integer arithmetic both ways; equality asserted in tests/test_dedup_ann)
     and ~100x faster than the interpreted per-plane HOF fold."""
@@ -491,7 +577,7 @@ def embedding_bucket_udf(dim: int, n_planes: int = EMB_PLANES):
         if len(q) == 0:
             return pd.Series([], dtype="int64")
         m = np.stack(q.to_numpy()).astype(np.int64)
-        bits = (m @ planes.T) >= 0
+        bits = exact_gemm(m, planes.T) >= 0
         return pd.Series(bits @ weights, dtype="int64")
 
     return _bucket
@@ -499,10 +585,11 @@ def embedding_bucket_udf(dim: int, n_planes: int = EMB_PLANES):
 
 @pandas_udf(T.LongType())
 def int_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact int64 dot of two quantized-embedding columns — one numpy matmul
-    per Arrow batch. Bit-identical to the interpreted ``int_dot_col`` fold
-    (integer arithmetic), ~50x faster on the candidate-verify hot path
-    (quantized values |q| <= ~10^4, dim 64 => |dot| < 2^40, no overflow)."""
+    """Exact int64 dot of two quantized-embedding columns — one row-wise
+    numpy product per Arrow batch, bit-identical to ``int_dot_col``
+    (quantized values |q| <= ~10^4, dim 64 => |dot| < 2^40, no overflow).
+    Kept for ``ann.lsh_bucketed_topk``, which measured 1.3-1.7 s at sf0.1
+    on 4 cores with it against 1.8 s with ``int_dot_col``."""
     if len(a) == 0:
         return pd.Series([], dtype="int64")
     ma = np.stack(a.to_numpy()).astype(np.int64)
@@ -521,7 +608,8 @@ def embedding_lsh_dups(
     exact quantized-cosine verify. Same output contract as
     ``embedding_near_dups`` restricted to bucket-hamming <= max_hamming
     candidates — deterministic (fixed integer planes), so oracle-checkable,
-    unlike recall-probabilistic LSH. One equi-join shuffle, no crossJoin."""
+    unlike recall-probabilistic LSH. One equi-join shuffle, never all
+    pairs."""
     qn = quantized_df(embs).withColumn("norm", sq_norm_col("qv")).withColumn(
         "bucket", embedding_bucket_udf(dim, n_planes)(F.col("qv")))
     # the bucketed table feeds the probe sides AND two array-fetch joins;
@@ -554,7 +642,7 @@ def embedding_lsh_dups(
                    F.col("norm").alias("norm_b"))
     return (
         cand.join(va, "vec_id_a").join(vb, "vec_id_b")
-        .withColumn("dot", int_dot_udf(F.col("qa"), F.col("qb")))
+        .withColumn("dot", int_dot_col("qa", "qb"))
         .withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
         .filter(F.col("cos_q") >= threshold)
         .select("vec_id_a", "vec_id_b", "cos_q")
@@ -564,17 +652,45 @@ def embedding_lsh_dups(
 def embedding_near_dups(embs: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Pairs with quantized-cosine >= threshold: (vec_id_a, vec_id_b, cos_q).
 
-    cos_q = int-dot / sqrt(int-norm_a * int-norm_b), rounded to 6 — exact and
-    order-independent up to the final two float ops, reproducible in SQL.
-    Brute-force pair generation here (correctness baseline); the scale path
-    is the hyperplane-LSH variant ``embedding_lsh_dups``."""
-    qn = quantized_df(embs).withColumn("norm", sq_norm_col("qv"))
-    a = qn.select(F.col("vec_id").alias("vec_id_a"), F.col("qv").alias("qa"), F.col("norm").alias("norm_a"))
-    b = qn.select(F.col("vec_id").alias("vec_id_b"), F.col("qv").alias("qb"), F.col("norm").alias("norm_b"))
+    Brute-force pair generation (the correctness baseline; the scale path
+    is the hyperplane-LSH variant ``embedding_lsh_dups``): the quantized
+    corpus is collected once under ``ann.QUERY_CAP``, and each Arrow batch
+    is multiplied against it with ``exact_gemm`` in row chunks of at most
+    ``GEMM_CELLS`` products. A batch row keeps its pairs with a larger id
+    that pass the unrounded prefilter ``cos_cut`` proves safe;
+    ``cos_q_col`` and the ``>= threshold`` filter then publish."""
+    from . import ann  # the driver caps of the embedding family
+
+    q = quantized_df(embs)
+    ids, mat = _driver_matrix(
+        q, ann.QUERY_CAP,
+        f"embedding_near_dups: corpus exceeds {ann.QUERY_CAP} rows; "
+        "use embedding_lsh_dups at this scale",
+    )
+    norms = (mat * mat).sum(axis=1)
+    step = max(1, GEMM_CELLS // max(len(ids), 1))
+    schema = T.StructType([
+        T.StructField(c, T.LongType())
+        for c in ("vec_id_a", "vec_id_b", "dot", "norm_a", "norm_b")
+    ])
+
+    def scan(batches):
+        for pdf in batches:
+            for lo in range(0, len(pdf), step):
+                a_ids, m = _id_matrix(pdf.iloc[lo:lo + step])
+                a_norms = (m * m).sum(axis=1)
+                dots = exact_gemm(m, mat.T)
+                cos = cos_np(dots, a_norms, norms)
+                i, j = np.nonzero(
+                    (a_ids[:, None] < ids[None, :]) & (cos >= threshold - 1e-6)
+                )
+                yield pd.DataFrame({
+                    "vec_id_a": a_ids[i], "vec_id_b": ids[j], "dot": dots[i, j],
+                    "norm_a": a_norms[i], "norm_b": norms[j],
+                })
+
     return (
-        a.crossJoin(b)
-        .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-        .withColumn("dot", int_dot_col("qa", "qb"))
+        q.mapInPandas(scan, schema)
         .withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
         .filter(F.col("cos_q") >= threshold)
         .select("vec_id_a", "vec_id_b", "cos_q")

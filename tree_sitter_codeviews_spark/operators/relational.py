@@ -9,6 +9,8 @@ last ULP; rounding far above that noise floor makes value hashes stable.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -210,18 +212,18 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def events_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom aggregate (UDAF surface): geometric mean of |value|+1 per
-    event type via a GROUPED_AGG pandas UDF — the Arrow-batched custom-
-    aggregate shape (SURVEY §2.10). exp(mean(log1p(|v|))) is computed in
-    float64 on both engines and rounded far above summation-order ULP."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    event type via a grouped-aggregate pandas UDF — the Arrow-batched
+    custom-aggregate shape (SURVEY §2.10). Its ``pd.Series -> scalar`` type
+    hints pick the eval type, so ``pd`` must resolve at module level.
+    exp(mean(log1p(|v|))) is computed in float64 on both engines and
+    rounded far above summation-order ULP."""
+    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
+    @pandas_udf("double")
     def geomean(v: pd.Series) -> float:
         return float(np.exp(np.log1p(np.abs(v.to_numpy())).mean()))
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
+    @pandas_udf("long")
     def n_rows(v: pd.Series) -> int:
         # grouped-agg UDFs can't mix with built-in aggregates in one agg()
         return int(len(v))

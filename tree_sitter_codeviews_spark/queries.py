@@ -964,9 +964,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """baseline-only: exact all-pairs (crossJoin) correctness reference for
-    the production path ``dedup_embedding_lsh`` — quadratic by design, never
-    the plan to run at corpus scale."""
+    """baseline-only: exact all-pairs correctness reference for the
+    production path ``dedup_embedding_lsh`` (each Arrow batch multiplied
+    against the collected corpus) — quadratic by design, never the plan to
+    run at corpus scale."""
     # threshold 0.45: the synthetic embeddings' max pairwise cosine is ~0.51
     # at sf0.01 / ~0.48 at sf0.001, so 0.95 made this gate row pass vacuously
     # on 0 rows; 0.45 keeps ~10 pairs flowing through the operator.
@@ -3108,6 +3109,29 @@ STAY_RADIUS = 128
 STAY_MIN_PINGS = 2
 
 
+def _stay_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The gaps-and-islands pass every stay query starts from: each user's
+    event points (user_id, ts, event_id, sec, ex, ey) in (ts, event_id)
+    order, with ``brk`` = 1 on every hop whose Chebyshev length exceeds
+    STAY_RADIUS (and on the first ping, whose lag is NULL) and ``island``
+    = the running sum of ``brk``."""
+    from pyspark.sql import Window
+
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "sec", "ex", "ey",
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    hop = F.greatest(
+        F.abs(F.col("ex") - F.lag("ex").over(w)),
+        F.abs(F.col("ey") - F.lag("ey").over(w)),
+    )
+    return ev.withColumn(
+        "brk", F.when(hop <= STAY_RADIUS, F.lit(0)).otherwise(F.lit(1)),
+    ).withColumn(
+        "island", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+
+
 def events_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stay-point detection (Li et al. 2008 shape): split each user's
     ordered ping stream into islands at every hop whose Chebyshev length
@@ -3116,24 +3140,7 @@ def events_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds (truncated epoch), integer centroid (sum div n). Two window
     passes + one aggregate on the SAME (user) partitioning; all exact
     integer, zero Python."""
-    from pyspark.sql import Window
-
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "brk",
-        F.when(
-            F.greatest(
-                F.abs(F.col("ex") - F.lag("ex").over(w)),
-                F.abs(F.col("ey") - F.lag("ey").over(w)),
-            ) <= STAY_RADIUS,
-            F.lit(0),
-        ).otherwise(F.lit(1)),  # first ping has NULL lag -> otherwise() -> 1
-    ).withColumn(
-        "island", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    flagged = _stay_islands(spark, sf_dir)
     return (
         flagged.groupBy("user_id", "island")
         .agg(
@@ -3629,22 +3636,7 @@ def events_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, all partitioned by the uniform user key."""
     from pyspark.sql import Window
 
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "brk",
-        F.when(
-            F.greatest(
-                F.abs(F.col("ex") - F.lag("ex").over(w)),
-                F.abs(F.col("ey") - F.lag("ey").over(w)),
-            ) <= STAY_RADIUS,
-            F.lit(0),
-        ).otherwise(F.lit(1)),
-    ).withColumn(
-        "island", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    flagged = _stay_islands(spark, sf_dir)
     stays = (
         flagged.groupBy("user_id", "island")
         .agg(
@@ -3819,6 +3811,8 @@ def events_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's distinct points."""
     import pandas as pd
 
+    from .geometry import hull_area2
+
     ev = (
         pages_src.event_points_df(spark, sf_dir)
         .select("user_id", "ex", "ey")
@@ -3826,40 +3820,12 @@ def events_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        pts = sorted({(int(x), int(y)) for x, y in zip(pdf["ex"], pdf["ey"])})
-        n = len(pts)
-
-        def cross(o, a, b):
-            return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
-
-        if n < 3:
-            area2 = 0
-        else:
-            lower: list = []
-            for p in pts:
-                while len(lower) >= 2 and cross(lower[-2], lower[-1], p) <= 0:
-                    lower.pop()
-                lower.append(p)
-            upper: list = []
-            for p in reversed(pts):
-                while len(upper) >= 2 and cross(upper[-2], upper[-1], p) <= 0:
-                    upper.pop()
-                upper.append(p)
-            hull = lower[:-1] + upper[:-1]
-            area2 = abs(
-                sum(
-                    hull[i][0] * hull[(i + 1) % len(hull)][1]
-                    - hull[(i + 1) % len(hull)][0] * hull[i][1]
-                    for i in range(len(hull))
-                )
-            )
-        return pd.DataFrame(
-            {
-                "user_id": [int(pdf["user_id"].iloc[0])],
-                "n_points": [n],
-                "hull_area2": [area2],
-            }
-        )
+        # the rows are one user's distinct (ex, ey) points
+        return pd.DataFrame({
+            "user_id": [int(pdf["user_id"].iloc[0])],
+            "n_points": [len(pdf)],
+            "hull_area2": [hull_area2(pdf["ex"], pdf["ey"])],
+        })
 
     # pin grouped-map parallelism (the segments.tile_diameter discipline):
     # AQE coalesces the ~1 MB distinct shuffle to one partition, funneling
@@ -4077,24 +4043,7 @@ def events_stay_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_a, user_b, cx, cy, n_overlaps) per ordered pair and cell.
     Reference parity: the interval-overlap family (as-of/range joins,
     operators/relational.py) lifted to derived intervals."""
-    from pyspark.sql import Window
-
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "brk",
-        F.when(
-            F.greatest(
-                F.abs(F.col("ex") - F.lag("ex").over(w)),
-                F.abs(F.col("ey") - F.lag("ey").over(w)),
-            ) <= STAY_RADIUS,
-            F.lit(0),
-        ).otherwise(F.lit(1)),
-    ).withColumn(
-        "island", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    flagged = _stay_islands(spark, sf_dir)
     stays = (
         flagged.groupBy("user_id", "island")
         .agg(
