@@ -510,3 +510,32 @@ def test_zero_norm_cosine_matches_oracle(spark, sf_zero_norm, name):
 
     query = entrymod.queries()[name](spark, sf_zero_norm)
     assert_matches(query, sf_zero_norm, entrymod.oracle_sql()[name], name)
+
+
+@pytest.fixture(scope="module")
+def sf_no_queries(sf_tiny, tmp_path_factory):
+    """``sf_tiny``'s embeddings without a single query vector (every
+    ``vec_id % 50 == 0`` row dropped)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_tiny}/embeddings.parquet")
+    kept = t.filter(t["vec_id"].to_numpy() % 50 != 0)
+    out = tmp_path_factory.mktemp("sf_no_queries")
+    pq.write_table(kept.replace_schema_metadata(None), out / "embeddings.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("leg", [ann.topk_quantized, ann.cosine_topk])
+def test_exact_topk_of_no_queries_is_empty(spark, sf_tiny, sf_no_queries, leg):
+    """An empty query set gives zero rows, not a numpy shape error in the
+    worker, and the schema of the non-empty run."""
+    got = leg(load_table(spark, sf_no_queries, "embeddings"))
+    assert got.count() == 0
+    assert got.schema == leg(load_table(spark, sf_tiny, "embeddings")).schema
+
+
+def test_ivf_topk_without_centroids_is_empty(spark, sf_tiny):
+    """No centroid (no ``vec_id % 40 == 0`` row) routes nothing: zero rows,
+    not a numpy shape error in the centroid-scoring worker."""
+    embs = load_table(spark, sf_tiny, "embeddings").filter("vec_id % 40 != 0")
+    assert ann.ivf_topk(embs, k=10, every=50).count() == 0

@@ -28,7 +28,10 @@ def test_doc_points_scan_prunes_to_doc_id(spark, sf_tiny):
 
 
 def test_tiles_scan_prunes_document_payload(spark, sf_tiny):
-    for s in plans.scan_read_schemas(geo_tiles(spark, sf_tiny)):
+    schemas = plans.scan_read_schemas(geo_tiles(spark, sf_tiny))
+    assert schemas, "expected the documents scan in the tiles plan"
+    for s in schemas:
+        assert "doc_id" in s
         assert "text" not in s, f"tile rollup reads document text: {s}"
 
 
@@ -266,3 +269,45 @@ def test_geo_extraction_and_refine_are_jvm_only(spark, sf_tiny):
     built = qe.analyzed().toString().count(extract._GEO_JAVA)
     assert built == 2  # surfaces + split pieces
     assert qe.executedPlan().toString().count(extract._GEO_JAVA) == built
+
+
+# py4j round trips of the same build (the second of two, in this suite's
+# session) when every projection was built through the Column API and
+# tile_counts ran its eager localCheckpoint rollup: 2363-2405 over three
+# runs, the lowest kept. The SQL-text build reads about 445.
+COLUMN_API_BUILD_CALLS = 2363
+
+
+def test_geo_pass_plan_build_py4j_budget(spark, sf_tiny, monkeypatch):
+    """Building one geo_join pass's plans (pages_df -> page_entities ->
+    pip_join, plus tile_counts over the same pages' points) costs at most
+    half the py4j round trips of the Column-API build."""
+    import py4j.clientserver
+
+    from tree_sitter_codeviews_spark import layers
+    from tree_sitter_codeviews_spark.operators import extract, pip_join, tiles
+    from tree_sitter_codeviews_spark.sources.pages import (
+        gazetteer_df, pages_df, points_from_ids,
+    )
+
+    def build():
+        pages = pages_df(spark, sf_tiny)
+        ents = extract.page_entities(pages, gazetteer_df(spark))
+        pip_join.pip_join(ents, spark, keys=("url",))
+        tiles.tile_counts(points_from_ids(pages.select("doc_id")),
+                          res_lo=7, res_hi=10, grid_res=layers.GRID_RES)
+
+    build()  # first build: one-time schema reads and driver-side caches
+    calls = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection,
+                        "send_command", counted)
+    build()
+    print(f"geo pass plan build: {calls[0]} py4j round trips "
+          f"(Column API: {COLUMN_API_BUILD_CALLS})")
+    assert calls[0] <= COLUMN_API_BUILD_CALLS // 2, calls[0]

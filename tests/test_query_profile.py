@@ -49,11 +49,17 @@ def test_time_conf_alternates_ab_and_reports_min_per_side(monkeypatch, capsys):
     assert '"q1": {"A": 2.0, "B": 2.5}' in capsys.readouterr().out
 
 
-def test_time_without_conf_runs_one_child_per_query(monkeypatch):
+def test_time_without_conf_runs_two_interleaved_children_per_query(monkeypatch, capsys):
     tool = _load_tool()
     calls: list = []
-    monkeypatch.setattr(bench, "_run_child", _fake_child(calls, [0.5, 0.7]))
+    # q1, q2, q1, q2
+    walls = [0.5, 0.9, 0.6, 0.7]
+    monkeypatch.setattr(bench, "_run_child", _fake_child(calls, walls))
     out = tool.time_queries(["q1", "q2"], "/data", [])
-    assert len(calls) == 2 and not any("--conf" in c for c in calls)
-    assert out["q1"]["wall"] == 0.5 and out["q2"]["wall"] == 0.7
+    assert [c[c.index("--names") + 1] for c in calls] == ["q1", "q2", "q1", "q2"]
+    assert not any("--conf" in c for c in calls)
+    assert out["q1"]["wall"] == 0.5 and out["q1"]["wall_max"] == 0.6
+    assert out["q2"]["wall"] == 0.7 and out["q2"]["wall_max"] == 0.9
     assert out["q1"]["py_gap_s"] == 0
+    printed = capsys.readouterr().out
+    assert "q1 min=0.5 max=0.6" in printed and "q2 min=0.7 max=0.9" in printed

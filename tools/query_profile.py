@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Per-query wall and layer split, through bench.py's own timing child.
 
-``time`` spawns one fresh ``bench.py --mode queries`` child per query (the
-bench protocol: sf0.001 warm, target warm, min-of-reps ``.count()``) and
-prints its wall, its layer split (plan build, execution, JVM task CPU, the
+``time`` spawns fresh ``bench.py --mode queries`` children (the bench
+protocol: sf0.001 warm, target warm, min-of-reps ``.count()``), two per
+query, interleaved across the queries (q1, q2, q1, q2) so that host drift
+hits every query alike. Per query it prints the min and max wall, the
+fastest child's layer split (plan build, execution, JVM task CPU, the
 run-minus-CPU Python gap, shuffle, spill) and its slowest stages, all read
 from Spark's in-process status store, then one JSON line. With ``--conf``
 it runs A (no conf) and B (the conf) alternately, twice each, per query
@@ -29,6 +31,8 @@ import bench  # noqa: E402
 LAYER_KEYS = ("build_s", "exec_s", "jobs", "tasks", "task_cpu_s", "py_gap_s",
               "shuffle_mb", "spill_mb")
 TOP_STAGES = 8
+# children per query (and per side of a --conf A/B)
+REPEATS = 2
 
 
 def _time_one(name: str, sf_dir: str, confs: list[str]) -> dict:
@@ -52,23 +56,30 @@ def _print_run(label: str, run: dict) -> None:
 
 def time_queries(names: list[str], sf_dir: str, confs: list[str]) -> dict:
     results = {}
-    for name in names:
-        if not confs:
-            run = _time_one(name, sf_dir, [])
-            _print_run(name, run)
-            results[name] = {k: run[k] for k in ("wall", *LAYER_KEYS)}
-            continue
-        # A,B,A,B so host drift hits both sides alike
-        runs: dict[str, list[dict]] = {"A": [], "B": []}
-        for _ in range(2):
-            for side, side_confs in (("A", []), ("B", confs)):
-                runs[side].append(_time_one(name, sf_dir, side_confs))
-        results[name] = {}
-        for side, side_runs in runs.items():
-            best = min(side_runs, key=lambda r: r["wall"])
-            _print_run(f"{name} {side} {best['conf'] or '(base)'} "
-                       f"walls={[r['wall'] for r in side_runs]}", best)
-            results[name][side] = best["wall"]
+    if not confs:
+        runs: dict[str, list[dict]] = {name: [] for name in names}
+        for _ in range(REPEATS):
+            for name in names:
+                runs[name].append(_time_one(name, sf_dir, []))
+        for name, name_runs in runs.items():
+            best = min(name_runs, key=lambda r: r["wall"])
+            walls = [r["wall"] for r in name_runs]
+            _print_run(f"{name} min={min(walls)} max={max(walls)}", best)
+            results[name] = {"wall": best["wall"], "wall_max": max(walls),
+                             **{k: best[k] for k in LAYER_KEYS}}
+    else:
+        for name in names:
+            # A,B,A,B so host drift hits both sides alike
+            runs = {"A": [], "B": []}
+            for _ in range(REPEATS):
+                for side, side_confs in (("A", []), ("B", confs)):
+                    runs[side].append(_time_one(name, sf_dir, side_confs))
+            results[name] = {}
+            for side, side_runs in runs.items():
+                best = min(side_runs, key=lambda r: r["wall"])
+                _print_run(f"{name} {side} {best['conf'] or '(base)'} "
+                           f"walls={[r['wall'] for r in side_runs]}", best)
+                results[name][side] = best["wall"]
     print(json.dumps(results), flush=True)
     return results
 

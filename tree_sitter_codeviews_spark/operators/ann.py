@@ -94,7 +94,7 @@ def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or len(qids) == 0:  # no queries: no rows
                 continue
             ids, m = _id_matrix(pdf)
             dots = exact_gemm(qmat, m.T)  # (Q, B)
@@ -144,7 +144,7 @@ def exact_cosine_gt_candidates(
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or len(qids) == 0:  # no queries: no rows
                 continue
             ids, m = _id_matrix(pdf)
             bnorm = (m * m).sum(axis=1)
@@ -208,7 +208,7 @@ def _ivf_route(
 
     def _score(batches):
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or len(cent_ids) == 0:  # no cells: no routes
                 continue
             ids, m = _id_matrix(pdf)
             dots = exact_gemm(m, cmat.T)  # (B, C)

@@ -49,13 +49,14 @@ def _with_text(pages: DataFrame, keep: tuple[str, ...], out: str) -> DataFrame:
     """pages -> (keep..., out): html decoded ONCE in its own projection
     (Catalyst keeps a non-cheap column referenced more than once
     materialised), then the first ``<p>`` body, else the tag-stripped page.
-    Malformed UTF-8 raises, as ``bytes.decode`` does."""
-    d = pages.select(*keep, F.decode("html", "UTF-8").alias("_d"))
-    return d.select(
+    Malformed UTF-8 raises, as ``bytes.decode`` does. Each projection is
+    one SQL text ``selectExpr`` (one py4j round trip, where the Column API
+    pays several per operator)."""
+    d = pages.selectExpr(*keep, "decode(html, 'UTF-8') as _d")
+    return d.selectExpr(
         *keep,
-        F.when(F.col("_d").rlike(_P_JAVA), F.regexp_extract("_d", _P_JAVA, 1))
-        .otherwise(F.regexp_replace("_d", _TAG_JAVA, ""))
-        .alias(out),
+        f"CASE WHEN _d RLIKE '{_P_JAVA}' THEN regexp_extract(_d, '{_P_JAVA}', 1) "
+        f"ELSE regexp_replace(_d, '{_TAG_JAVA}', '') END as {out}",
     )
 
 
@@ -86,23 +87,24 @@ def page_entities(pages: DataFrame, gazetteer: DataFrame) -> DataFrame:
     t = _with_text(pages, ("url", "doc_id"), "t")
     # surfaces and piece lengths in their own projection, so the lambda
     # below reads the arrays instead of re-running the regexes per entity
-    parts = t.select(
+    # (r'' literals: the pattern's backslash reaches the regex unescaped)
+    parts = t.selectExpr(
         "url", "doc_id",
-        F.regexp_extract_all("t", F.lit(_GEO_JAVA), 0).alias("surf"),
-        F.transform(F.split("t", _GEO_JAVA, -1), F.length).alias("lens"),
+        f"regexp_extract_all(t, r'{_GEO_JAVA}', 0) as surf",
+        f"transform(split(t, r'{_GEO_JAVA}', -1), x -> length(x)) as lens",
     )
-    ents = F.transform("surf", lambda s, i: F.struct(
-        i.alias("entity_id"),
-        s.alias("surface"),
-        (F.aggregate(F.slice("lens", 1, i + 1), F.lit(0), lambda a, x: a + x)
-         + i * _GEO_LEN).alias("char_offset"),
-    ))
     exploded = (
-        parts.select("url", "doc_id", F.explode_outer(ents).alias("e"))
-        .filter(F.col("e").isNotNull())
-        .select("url", "doc_id", "e.entity_id", "e.surface", "e.char_offset")
+        parts.selectExpr(
+            "url", "doc_id",
+            "explode_outer(transform(surf, (s, i) -> struct("
+            "i AS entity_id, s AS surface, "
+            "aggregate(slice(lens, 1, i + 1), 0, (a, n) -> a + n) "
+            f"+ i * {_GEO_LEN} AS char_offset))) as e",
+        )
+        .filter("e IS NOT NULL")
+        .selectExpr("url", "doc_id", "e.entity_id", "e.surface", "e.char_offset")
     )
-    return exploded.join(F.broadcast(gazetteer), "surface", "inner").select(
+    return exploded.join(F.broadcast(gazetteer), "surface", "inner").selectExpr(
         "url", "doc_id", "entity_id", "surface", "char_offset",
         "lon", "lat", "entity_kind",
     )

@@ -19,6 +19,8 @@ Physical shape at 100 TB:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..localdf import arrow_local_df
@@ -33,6 +35,18 @@ from .. import cells, geometry, layers
 COVER_RES = 6
 
 
+@functools.cache
+def _cover_rows() -> tuple[tuple[int, int, int, bool], ...]:
+    """The cover dim's rows, computed once per process: a pure function of
+    ``layers.POLYGONS`` and ``COVER_RES``."""
+    rows = []
+    for p in layers.POLYGONS:
+        cs, full = geometry.cover_cells_classified(p["ring"], COVER_RES)
+        for c, f in zip(cs, full):
+            rows.append((int(c), p["polygon_id"], p["admin_level"], bool(f)))
+    return tuple(rows)
+
+
 def cover_df(spark: SparkSession) -> DataFrame:
     """Exploded (cover_cell, polygon_id, admin_level, full) prefilter dim.
 
@@ -42,13 +56,8 @@ def cover_df(spark: SparkSession) -> DataFrame:
     dim is tiny); at production scale this is a precomputed broadcast
     artifact, like the reference's grammar bundle shipped to workers
     (``__init__.py:8-63``)."""
-    rows = []
-    for p in layers.POLYGONS:
-        cs, full = geometry.cover_cells_classified(p["ring"], COVER_RES)
-        for c, f in zip(cs, full):
-            rows.append((int(c), p["polygon_id"], p["admin_level"], bool(f)))
     return arrow_local_df(
-        spark, rows,
+        spark, _cover_rows(),
         "cover_cell long, polygon_id long, admin_level int, full boolean",
     )
 
@@ -59,10 +68,12 @@ def _d(x: float) -> str:
     return f"{x!r}D"
 
 
-def pip_refine_expr(lon: str = "lon", lat: str = "lat",
-                    polygon_id: str = "polygon_id"):
-    """Exact ray-cast refine as a PURE JVM expression (whole-stage codegen,
-    zero Python on the hot path).
+@functools.cache
+def pip_refine_sql(lon: str = "lon", lat: str = "lat",
+                   polygon_id: str = "polygon_id") -> str:
+    """Exact ray-cast refine as the SQL text of a PURE JVM expression
+    (whole-stage codegen, zero Python on the hot path), built once per
+    argument tuple.
 
     The polygon layer is small and literal, so the crossing parity unrolls
     into a CASE over polygon_id of XOR-chained (boolean !=) edge tests with
@@ -75,7 +86,7 @@ def pip_refine_expr(lon: str = "lon", lat: str = "lat",
     mode at high thread counts (JVM task threads + Python workers > CPUs);
     the expression path stays inside codegen and scales with cores.
 
-    Built as ONE SQL text expression (F.expr) instead of per-edge Column
+    Built as ONE SQL text expression instead of per-edge Column
     operators: the Column-builder construction was ~6,300 py4j round trips
     = ~1.1 s of DRIVER time per plan build (profiled via cProfile on
     geo_region_centroids — the same finding as simhash_df's SQL-text
@@ -95,7 +106,7 @@ def pip_refine_expr(lon: str = "lon", lat: str = "lat",
             parity = cross if parity is None else f"({parity} != {cross})"
         result = (f"CASE WHEN ({polygon_id} = {p['polygon_id']}L) "
                   f"THEN {parity} ELSE {result} END")
-    return F.expr(result)
+    return result
 
 
 def pip_join(
@@ -106,22 +117,19 @@ def pip_join(
     """points(keys..., lon, lat [, cell]) -> (keys..., cell_id, polygon_id).
 
     ``cell_id`` is the point's cell at ``layers.GRID_RES``; the prefilter
-    key is its ancestor at ``COVER_RES`` via bit-truncation (parent_col).
-    The refine is ``pip_refine_expr``, bit-identical to the oracle."""
+    key is its ancestor at ``COVER_RES`` via bit-truncation. The refine is
+    ``pip_refine_sql``, bit-identical to the oracle. Each projection and
+    the filter are one SQL text call each."""
     if "cell" not in points.columns:
-        points = points.withColumn(
-            "cell", F.expr(cells.cell_sql("lon", "lat", layers.GRID_RES)))
-    pts = points.withColumn(
-        "cover_cell", cells.parent_col(F.col("cell"), layers.GRID_RES - COVER_RES)
-    )
+        points = points.selectExpr(
+            "*", f"{cells.cell_sql('lon', 'lat', layers.GRID_RES)} as cell")
+    pts = points.selectExpr(
+        "*", f"shiftright(cell, {2 * (layers.GRID_RES - COVER_RES)}) as cover_cell")
     cand = pts.join(F.broadcast(cover_df(spark)), "cover_cell", "inner")
     # interior cells short-circuit the exact test (cell ⊆ polygon); only
     # boundary candidates evaluate the ray-cast
-    refined = cand.filter(
-        F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
-    return refined.select(
-        *keys, F.col("cell").alias("cell_id"), "polygon_id", "admin_level"
-    )
+    refined = cand.filter(f"full OR {pip_refine_sql('lon', 'lat', 'polygon_id')}")
+    return refined.selectExpr(*keys, "cell as cell_id", "polygon_id", "admin_level")
 
 
 def pip_best(joined: DataFrame, keys: tuple[str, ...] = ("url",)) -> DataFrame:

@@ -1,21 +1,27 @@
 """Tile aggregation over the cell hierarchy (raster<->vector path).
 
-``tile_counts`` scans the raw table ONCE: a single map-side-combined groupBy
-at the finest resolution, whose output (bounded by live cells, never by row
-count) is materialized via ``localCheckpoint``; coarser levels are then
-rolled up *from the aggregates* (parent = ``cell >> 2``) — each level
-shuffles only tile rows.
+``tile_counts`` is one lazy plan with two aggregates and one consumer:
 
-Two rejected plans, both measured on 5M rows:
-- roll up from the same lazy subplan per level: Spark has no common-subplan
-  reuse, so every level re-scans and re-shuffles the raw points (4 full
-  passes; 26 s vs 4 s at local[32]);
-- one-pass explode of per-level (res, cell) pairs: generators break
-  whole-stage codegen in this build (11-14 s vs 2 s at local[8]).
-The materialize-tiny-then-rollup plan is also the 100 TB-safe one: the
-checkpointed finest table is O(cells), and at that scale it becomes a real
-checkpoint-table stage (``checkpoint.Pipeline.stage``), which is where the
-resume boundary belongs anyway.
+1. a map-side-combined groupBy of the raw points by their finest cell
+   (one scan, one shuffle; output bounded by live cells, never by rows);
+2. one GROUPING SETS aggregate over that O(cells) table, with one level
+   column per resolution (parent = ``cell >> 2`` per level, so level r is
+   ``shiftright(c, 2·(res_hi − r))``). Its Expand multiplies only the
+   finest aggregate's rows by the number of levels; ``grouping()`` names
+   each output row's level and ``coalesce`` of the level columns gives its
+   cell.
+
+Two plans rejected earlier, both measured on 5M rows, and why this is
+neither:
+- roll up from the same lazy subplan per level and union the levels:
+  Spark has no common-subplan reuse, so every level re-scans and
+  re-shuffles the raw points (4 full passes; 26 s vs 4 s at local[32]).
+  Here the finest aggregate has exactly one consumer, the Expand, so
+  nothing is recomputed and nothing needs a ``localCheckpoint``;
+- one-pass explode of per-level (res, cell) pairs over the raw points:
+  generators break whole-stage codegen in this build (11-14 s vs 2 s at
+  local[8]). Here the per-level copies are made by an Expand, and only of
+  the finest aggregate's rows.
 
 Compaction (H3 ``compact`` analogue) folds complete sibling sets into their
 parent, the storage-side dual of the rollup.
@@ -40,44 +46,25 @@ def tile_counts(
 ) -> DataFrame:
     """points(gx, gy at grid_res) -> (res, cell_id, n_docs) for res_lo..res_hi.
 
-    One scan + one shuffle of the raw points (finest-level groupBy); the
-    small finest tile table is materialized (localCheckpoint), then coarser
-    levels are re-aggregated from it. NOTE: eager (runs a job on call)."""
-    base_cell = F.expr(cells.morton_sql(
-        f"shiftright(gx, {grid_res - res_hi})" if grid_res != res_hi else "gx",
-        f"shiftright(gy, {grid_res - res_hi})" if grid_res != res_hi else "gy",
-        res_hi,
-    ))
+    Lazy: two aggregates, two shuffles, no job until the result is forced
+    (module docstring). Plan build is SQL text, a handful of py4j calls."""
+    k = grid_res - res_hi
+    x, y = (f"shiftright(gx, {k})", f"shiftright(gy, {k})") if k else ("gx", "gy")
+    levels = [f"c{r}" for r in range(res_hi, res_lo - 1, -1)]
     finest = (
-        points.select(base_cell.alias("cell_id"))
-        .groupBy("cell_id")
-        .agg(F.count("*").alias(count_col))
-        .localCheckpoint()
+        points.selectExpr(f"{cells.morton_sql(x, y, res_hi)} as {levels[0]}")
+        .groupBy(levels[0])
+        .agg(F.expr("count(*) as n"))
+        .selectExpr(*(f"shiftright({levels[0]}, {2 * i}) as {c}"
+                      for i, c in enumerate(levels)), "n")
     )
-    return tile_rollup(finest, res_hi, res_lo, count_col)
-
-
-def tile_rollup(
-    finest: DataFrame,
-    res_hi: int,
-    res_lo: int,
-    count_col: str = "n_docs",
-) -> DataFrame:
-    """Roll an ALREADY-MATERIALIZED finest tile table (cell_id, n) up the
-    hierarchy by re-aggregating aggregates. Only correct-cost when ``finest``
-    is a checkpointed/persisted table — when handed a lazy subplan Spark
-    would recompute it once per level (no common-subplan reuse)."""
-    cur = finest.select("cell_id", count_col).withColumn("res", F.lit(res_hi))
-    levels = [cur]
-    for r in range(res_hi - 1, res_lo - 1, -1):
-        cur = (
-            cur.select(cells.parent_col(F.col("cell_id")).alias("cell_id"), count_col)
-            .groupBy("cell_id")
-            .agg(F.sum(count_col).alias(count_col))
-            .withColumn("res", F.lit(r))
-        )
-        levels.append(cur)
-    return reduce(lambda a, b: a.unionByName(b), levels).select("res", "cell_id", count_col)
+    res = " ".join(f"WHEN grouping({c}) = 0 THEN {res_hi - i}"
+                   for i, c in enumerate(levels))
+    return finest.groupingSets([[c] for c in levels], *levels).agg(
+        F.expr(f"CASE {res} END as res"),
+        F.expr(f"coalesce({', '.join(levels)}) as cell_id"),
+        F.expr(f"sum(n) as {count_col}"),
+    ).select("res", "cell_id", count_col)
 
 
 def compact_tiles(tiles_at_res: DataFrame, res: int, min_res: int = 0) -> DataFrame:

@@ -103,7 +103,7 @@ def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-cover-cell pre-pass + salted broadcast candidate join (skew.py).
     Correctness gate proves salting is value-transparent."""
     from . import skew
-    from .operators.pip_join import COVER_RES, cover_df, pip_refine_expr
+    from .operators.pip_join import COVER_RES, cover_df, pip_refine_sql
 
     pts = pages_src.doc_points_df(spark, sf_dir).withColumn(
         "cell", F.expr(cells.morton_sql("gx", "gy", layers.GRID_RES))
@@ -116,7 +116,7 @@ def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         hot=hot, salt_col=F.xxhash64("doc_id"), n_salt=8,
     )
     refined = cand.filter(
-        F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
+        F.col("full") | F.expr(pip_refine_sql("lon", "lat", "polygon_id")))
     return refined.select("doc_id", F.col("cell").alias("cell_id"), "polygon_id")
 
 

@@ -140,6 +140,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
+        # DataFrame call-site capture off. While on (pyspark's default),
+        # every pyspark.sql.functions call and Column operator goes through
+        # pyspark's _with_origin wrapper: about five extra py4j round trips
+        # per call (active session, JVM lookup, conf read, origin set and
+        # clear). The cost: an error no longer names the Python file:line
+        # of the DataFrame call that built the failing expression. pyspark
+        # reads it once per process, so debug with "true" in extra_conf in
+        # a fresh process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # deterministic float formatting / parquet behavior
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
     )

@@ -18,7 +18,6 @@ the whole point being that extraction must reproduce them byte-for-byte.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import layers
 from .testdata import load_table
@@ -27,75 +26,63 @@ HTML_PRE = "<html><head><title>"
 HTML_MID = "</title></head><body><p>"
 HTML_POST = "</p></body></html>"
 
+# The projections below are SQL text, one ``selectExpr`` each: built
+# through the Column API, the same trees cost about 1,570 py4j round trips
+# per pages + gazetteer build against about 130, and every geo query
+# builds them.
 
-def _mention_piece(j: int):
-    """Column: '' or ' GEO_#####' depending on mentions-per-doc (1 + doc_id%3)."""
-    idx = (F.col("doc_id") * 7 + F.lit(j * 131)) % layers.N_GAZ
-    piece = F.concat(F.lit(" GEO_"), F.format_string("%05d", idx))
-    return F.when(F.lit(j) < 1 + F.col("doc_id") % 3, piece).otherwise(F.lit(""))
-
-
-def page_text_col():
-    """text || embedded mentions — the byte-identical extraction target."""
-    return F.concat(F.col("text"), _mention_piece(0), _mention_piece(1), _mention_piece(2))
-
-
-def url_col():
-    return F.format_string("https://host%04d.example/doc/%d",
-                           F.col("doc_id") % 100, F.col("doc_id"))
-
-
-def warc_ts_col():
-    # seeded timestamp in a fixed 30-day window (FIXTURES.md §1)
-    return F.expr(
-        "timestamp'2026-01-01 00:00:00' + make_interval(0,0,0,0,0,0, (doc_id * 97) % 2592000)"
-    )
+# mention j: ' GEO_#####' when j < mentions-per-doc (1 + doc_id % 3), else ''
+_MENTIONS = [
+    f"CASE WHEN {j} < 1 + doc_id % 3 THEN concat(' GEO_', format_string('%05d', "
+    f"(doc_id * 7 + {j * 131}) % {layers.N_GAZ})) ELSE '' END"
+    for j in range(3)
+]
+# text || embedded mentions: the byte-identical extraction target
+PAGE_TEXT_SQL = f"concat(text, {', '.join(_MENTIONS)})"
+URL_SQL = "format_string('https://host%04d.example/doc/%d', doc_id % 100, doc_id)"
+# seeded timestamp in a fixed 30-day window (FIXTURES.md §1)
+WARC_TS_SQL = ("timestamp'2026-01-01 00:00:00' + "
+               "make_interval(0,0,0,0,0,0, (doc_id * 97) % 2592000)")
 
 
 def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sf parquet is a single row group (= one task); spread the NARROW
     # source columns before synthesizing html so downstream extraction
-    # parallelizes. Capped at 16 (measured 0.47s at 4-16 parts vs 1.6s at 32
-    # on this suite's data while extraction still ran in Python workers).
-    # At production scale the table arrives already partitioned and this
-    # shuffle disappears.
+    # parallelizes. Capped at 16: measured 0.47s at 4-16 parts vs 1.6s at
+    # 32 on this suite's data when extraction still ran in Python workers.
+    # Extraction has been one JVM expression since, and the cap has not
+    # been re-measured (it only binds above 16 cores). At production scale
+    # the table arrives already partitioned and this shuffle disappears.
     n_parts = max(4, min(16, spark.sparkContext.defaultParallelism))
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text", "lang")
         .repartition(n_parts, "doc_id")
     )
-    body = page_text_col()
-    url = url_col()
-    html = F.encode(
-        F.concat(F.lit(HTML_PRE), url, F.lit(HTML_MID), body, F.lit(HTML_POST)),
-        "UTF-8",
-    )
-    return docs.select(
-        F.col("doc_id"),
-        url.alias("url"),
-        warc_ts_col().alias("warc_ts"),
-        html.alias("html"),
-        body.alias("text"),
-        F.col("lang"),
+    return docs.selectExpr(
+        "doc_id",
+        f"{URL_SQL} as url",
+        f"{WARC_TS_SQL} as warc_ts",
+        f"encode(concat('{HTML_PRE}', {URL_SQL}, '{HTML_MID}', {PAGE_TEXT_SQL}, "
+        f"'{HTML_POST}'), 'UTF-8') as html",
+        f"{PAGE_TEXT_SQL} as text",
+        "lang",
     )
 
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
     """Broadcast dim: (gaz_idx, surface, lon, lat, entity_kind). Tiny (1000
     rows) — built natively from range(); always broadcast at join sites."""
-    g = spark.range(layers.N_GAZ).withColumnRenamed("id", "gaz_idx")
-    gx = (F.col("gaz_idx") * 37 + 11) % layers.GRID_N
-    gy = (F.col("gaz_idx") * 73 + 29) % layers.GRID_N
-    return g.select(
+    gx = layers.GAZ_GX_SQL.format(i="gaz_idx")
+    gy = layers.GAZ_GY_SQL.format(i="gaz_idx")
+    n = layers.GRID_N
+    return spark.range(layers.N_GAZ).withColumnRenamed("id", "gaz_idx").selectExpr(
         "gaz_idx",
-        F.format_string("GEO_%05d", F.col("gaz_idx")).alias("surface"),
-        (F.lit(-180.0) + F.lit(360.0) * (gx.cast("double") + 0.5) / layers.GRID_N).alias("lon"),
-        (F.lit(-90.0) + F.lit(180.0) * (gy.cast("double") + 0.5) / layers.GRID_N).alias("lat"),
-        F.element_at(
-            F.array(F.lit("city"), F.lit("poi"), F.lit("region")),
-            (F.col("gaz_idx") % 3 + 1).cast("int"),
-        ).alias("entity_kind"),
+        "format_string('GEO_%05d', gaz_idx) as surface",
+        f"-180.0D + 360.0D * (cast({gx} as double) + 0.5D) / {n} as lon",
+        f"-90.0D + 180.0D * (cast({gy} as double) + 0.5D) / {n} as lat",
+        "element_at(array('city', 'poi', 'region'), cast(gaz_idx % 3 + 1 as int))"
+        " as entity_kind",
     )
 
 
