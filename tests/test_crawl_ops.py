@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tree_sitter_codeviews_spark import plans
+import plan_util as plans
 from tree_sitter_codeviews_spark.operators import (
     curation,
     dedup,

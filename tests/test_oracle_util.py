@@ -51,3 +51,50 @@ def test_comparator_rejects_sixth_decimal_drift(spark, sf_tiny):
     df = spark.sql("SELECT 0.123456 AS a")
     with pytest.raises(AssertionError):
         assert_matches(df, sf_tiny, "SELECT 0.123457 AS a", "ulp")
+
+
+# The engine helpers the oracle may call: SQL text generated from constants
+# (cell bit-interleave, segment determinants, the Hilbert CTE chain).
+ORACLE_ENGINE_HELPERS = {
+    "cells.morton_sql", "cells.x_from_cell_sql", "cells.y_from_cell_sql",
+    "cells.geohash_char_sql", "geometry.seg_intersect_pred_sql",
+    "geometry.seg_cross_exprs", "s2.hilbert_cte_chain_sql", "s2.S2_RES",
+}
+
+
+def test_oracle_shares_only_engine_constants():
+    """Independence: the DuckDB oracle may use the engine's constants
+    (UPPER_CASE names, anything in ``layers``) and the pinned SQL-text
+    helpers above, never an engine operator, DataFrame builder or SQL
+    builder — a bug in a shared builder would pass on both sides."""
+    import ast
+    import pathlib
+
+    from tree_sitter_codeviews_spark import oracle
+
+    pkg = "tree_sitter_codeviews_spark"
+    tree = ast.parse(pathlib.Path(oracle.__file__).read_text())
+    modules = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            assert not any(a.name.split(".")[0] == pkg for a in node.names), (
+                f"oracle.py:{node.lineno} imports an engine module")
+        if not isinstance(node, ast.ImportFrom):
+            continue
+        if node.level == 0 and (node.module or "").split(".")[0] != pkg:
+            continue  # __future__ and third-party
+        module = node.module or ""
+        if node.level == 0:
+            module = module[len(pkg) + 1:]
+        if not module:
+            modules |= {a.name for a in node.names}
+        elif module != "layers":
+            engine = [a.name for a in node.names if not a.name.lstrip("_").isupper()]
+            assert not engine, f"oracle.py:{node.lineno} imports {engine} from {module}"
+    assert modules <= {"cells", "geometry", "layers", "s2"}, modules
+    used = {
+        f"{n.value.id}.{n.attr}" for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
+        and n.value.id in ("cells", "geometry", "s2")
+    }
+    assert used <= ORACLE_ENGINE_HELPERS, sorted(used - ORACLE_ENGINE_HELPERS)

@@ -7,7 +7,7 @@ next scale-up.
 
 from __future__ import annotations
 
-from tree_sitter_codeviews_spark import plans
+import plan_util as plans
 from tree_sitter_codeviews_spark.operators.relational import q1_pricing, q5_region_revenue
 from tree_sitter_codeviews_spark.queries import geo_pip_docs, geo_tiles
 from tree_sitter_codeviews_spark.sources.pages import doc_points_df
@@ -311,3 +311,5 @@ def test_geo_pass_plan_build_py4j_budget(spark, sf_tiny, monkeypatch):
     print(f"geo pass plan build: {calls[0]} py4j round trips "
           f"(Column API: {COLUMN_API_BUILD_CALLS})")
     assert calls[0] <= COLUMN_API_BUILD_CALLS // 2, calls[0]
+    # the broadcast cover dim is one relation per session, not one per build
+    assert pip_join.cover_df(spark) is pip_join.cover_df(spark)

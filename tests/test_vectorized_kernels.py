@@ -177,7 +177,7 @@ def test_fingerprint_native_matches_scalar_handcases(spark):
 
 
 def test_embedding_lsh_subset_of_exact_and_no_crossjoin(spark, sf_tiny):
-    from tree_sitter_codeviews_spark import plans
+    import plan_util as plans
 
     embs = load_table(spark, sf_tiny, "embeddings")
     lsh = dedup.embedding_lsh_dups(embs, threshold=0.4)

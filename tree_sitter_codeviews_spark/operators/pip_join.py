@@ -47,8 +47,12 @@ def _cover_rows() -> tuple[tuple[int, int, int, bool], ...]:
     return tuple(rows)
 
 
+@functools.lru_cache(maxsize=1)
 def cover_df(spark: SparkSession) -> DataFrame:
-    """Exploded (cover_cell, polygon_id, admin_level, full) prefilter dim.
+    """Exploded (cover_cell, polygon_id, admin_level, full) prefilter dim,
+    built once for the current session (the pandas -> Arrow -> JVM
+    relation costs ~30 ms of driver time per build; a new session evicts
+    the old one's frame).
 
     ``full`` marks interior cells (whole cell ⊆ polygon): candidates landing
     there skip the exact refine — only boundary cells (O(perimeter)) pay for

@@ -5,30 +5,92 @@ the corresponding Spark query in ``__spark_entry__.queries()``, over the
 pre-registered views (documents, lineitem, ...). Formulas are generated from
 the same constants in ``layers.py`` / ``cells.py`` — single source of truth,
 exact integer arithmetic, so value hashes match bit-for-bit.
+
+Independence rule: the oracle shares the engine's *constants* (``layers``,
+the numeric and regex constants of ``queries`` and ``operators``, and the
+cell/segment SQL-text helpers of ``cells``, ``geometry`` and ``s2``), never
+an engine operator, DataFrame builder or engine SQL builder — a bug in a
+shared builder would pass on both sides. ``tests/test_oracle_util.py``
+pins the rule.
+
+Each recurring SQL idea is one private fragment below, and the oracles
+compose them:
+
+- doc points and cells: ``_pts0_only``, ``_pts_cte``, ``_cell_sql``, the
+  ray-cast parity ``_pip`` over ``_edges_cte``, the raster ``_pix_cte``;
+- page mentions: ``_mentions_cte``, ``_DOC_URL``;
+- the doc graph: ``_graph_ctes``, ``_BROKEN_EDGES``, the reaching
+  definitions ``_rda_ctes`` and the min-label ``_components_cte``;
+- text: ``_TOKS``, the word n-grams ``_shingles_cte`` /
+  ``_POS_SHINGLES_CTE`` / ``_TOKEN_POS_CTE``, the 3-gram pair overlap
+  ``_OVERLAP_CTE`` and the Jaccard groups ``_jaccard_groups_cte``, the
+  2-gram repetition ``_bigram_repetition``, the packing ``_pack_sql`` and
+  the PII-scrub ``_SCRUB_HASH``;
+- embeddings: ``_QUANT_CTE``, the cosine ``_cos`` and its top-k
+  ``_cos_topk``, near-dup pairs ``_near_dups``, the LSH
+  ``_lsh_buckets_cte`` / ``_lsh_pairs``, the IVF ``_ivf_route_ctes``, the
+  squared distance ``_D2`` and the PQ ``_pq_encode_ctes`` / ``_adc_topk``;
+- the host link graph: ``_host_edges_cte``, ``_host_nodes``, the unrolled
+  fixpoints ``_rounds`` / ``_teleport_rank_sql`` / ``_min_relax_sql``, the
+  BPE round ``_bpe_round``;
+- event points: ``_event_points_cte``, the track window ``_TRACK``, the
+  stay islands ``_stays_cte``, the fence join ``_fences_cte`` /
+  ``_IN_FENCE`` / ``_fence_state_cte``, the DDA ``_route_points_cte``, the
+  transit lines ``_LINES_CTE`` and the grid distance ``_sq_dist``.
+
+Fixtures of one query family (the crawl canonicalizer, the HTML and
+outlink extraction, the WARC blobs) sit next to that family.
 """
 
 from __future__ import annotations
 
-from . import cells, geometry, layers
+from . import cells, geometry, layers, s2
+from .operators.ann import PQ_DSUB, PQ_K, PQ_M, PQ_SAMPLE_MOD
+from .operators.curation import EMAIL_RE, LONG_DIGITS_RE
+from .operators.relational import EVENT_TYPES
+from .operators.textstats import (
+    _PROFILES, _U_MAX, HOLDOUT_FRAC, SAMPLE_DEFAULT_RATE, SAMPLE_RATES,
+)
+from .queries import (
+    AFFINITY_MIN_BOTH, CHORO_BINS, COLOC_MAX_USERS_PER_KEY, FENCE_MOD,
+    FENCE_R, FENCE_SHIFT, HOP_SLIDE_S, HOP_WINDOW_S, HOTSPOT_SHIFT, IDW_R2,
+    IDW_WSCALE, RESAMPLE_STEP, ROUTE_TOPK, STATION_MOD, STAY_MIN_PINGS,
+    STAY_RADIUS, TRAJ_MAX_PX_PER_DAY, TRAJ_SIMPLIFY_AREA2,
+    TRAJSIM_MAX_USERS_PER_CELL, TRAJSIM_MIN_SHARED, TRAJSIM_SHIFT,
+    TRAJSIM_TOPK,
+)
+
+# ---------------------------------------------------------------------------
+# fragments: doc points, cells and polygons
+# ---------------------------------------------------------------------------
 
 
-def _pts_cte(res: int = layers.GRID_RES) -> str:
-    """CTE 'pts': deterministic doc points with skew + res-10 cell id."""
+def _cell_sql(res: int) -> str:
+    """Morton cell id at resolution ``res`` of the res-GRID_RES (gx, gy)."""
     shift = layers.GRID_RES - res
-    gx = f"(gx >> {shift})" if shift else "gx"
-    gy = f"(gy >> {shift})" if shift else "gy"
+    if not shift:
+        return cells.morton_sql("gx", "gy", res)
+    return cells.morton_sql(f"(gx >> {shift})", f"(gy >> {shift})", res)
+
+
+def _pts0_only() -> str:
     return f"""
 pts0 AS (
   SELECT doc_id,
          {layers.DOC_GX_SQL} AS gx,
          {layers.DOC_GY_SQL} AS gy
   FROM documents
-),
+)"""
+
+
+def _pts_cte(res: int = layers.GRID_RES) -> str:
+    """CTEs 'pts0' and 'pts': deterministic doc points with skew + cell id."""
+    return f"""{_pts0_only()},
 pts AS (
   SELECT doc_id, gx, gy,
          {layers.LON_SQL.format(gx='gx')} AS lon,
          {layers.LAT_SQL.format(gy='gy')} AS lat,
-         {cells.morton_sql(gx, gy, res)} AS cell_id
+         {_cell_sql(res)} AS cell_id
   FROM pts0
 )"""
 
@@ -47,33 +109,612 @@ _CROSSING = (
 )
 
 
-def _pts0_only() -> str:
-    return f"""
-pts0 AS (
-  SELECT doc_id,
-         {layers.DOC_GX_SQL} AS gx,
-         {layers.DOC_GY_SQL} AS gy
-  FROM documents
+def _pip(src: str, keys: str) -> str:
+    """Ray-cast parity: ``keys`` + polygon_id for every polygon of ``edges``
+    that contains a (lon, lat) point of ``src`` (odd crossing count)."""
+    pk = ", ".join(f"p.{k.strip()}" for k in keys.split(","))
+    return f"""SELECT {keys}, polygon_id FROM (
+  SELECT {pk}, e.polygon_id, count(*) AS c
+  FROM {src} p JOIN edges e ON ({_CROSSING})
+  GROUP BY ALL
+) WHERE c % 2 = 1"""
+
+
+def _pix_cte(res: int) -> str:
+    """CTEs 'g' and 'pix': the center (lon, lat) of every res-``res`` cell."""
+    xs = cells.x_from_cell_sql("cell_id", res)
+    ys = cells.y_from_cell_sql("cell_id", res)
+    n = 1 << res
+    return f"""g AS (SELECT range AS cell_id FROM range({1 << (2 * res)})),
+pix AS (
+  SELECT cell_id,
+         -180.0 + 360.0 * ({xs} + 0.5) / {n} AS lon,
+         -90.0 + 180.0 * ({ys} + 0.5) / {n} AS lat
+  FROM g
 )"""
 
 
+# ---------------------------------------------------------------------------
+# fragments: page mentions and the doc graph
+# ---------------------------------------------------------------------------
+
+_DOC_URL = "printf('https://host%04d.example/doc/%d', (doc_id % 100)::int, doc_id)"
+
+
+def _mentions_cte() -> str:
+    """CTE 'ment': one row per mention embedded in a page — doc_id, the
+    page text length ``tlen``, mention index ``j`` (and ``entity_id``), the
+    gazetteer index ``gi``, the page ``url`` and the ``surface``."""
+    gi = layers.MENTION_IDX_SQL.format(j="j")
+    return f"""
+ment AS (
+  SELECT doc_id, tlen, j, j::int AS entity_id, gi, {_DOC_URL} AS url,
+         printf('GEO_%05d', gi) AS surface
+  FROM (SELECT *, {gi} AS gi FROM (
+    SELECT doc_id, length(text) AS tlen,
+           unnest(generate_series(0, doc_id % 3)) AS j
+    FROM documents))
+)"""
+
+
+def _graph_ctes() -> str:
+    """CTEs n (nodes) and e (chain edges) of the deterministic doc graph."""
+    cell5 = cells.morton_sql("(gx >> 5)", "(gy >> 5)", 5)
+    return f"""{_pts0_only()},
+n AS (
+  SELECT doc_id % 100 AS graph_id, doc_id AS node_id, {cell5} AS label,
+         CASE doc_id % 3 WHEN 0 THEN 'city' WHEN 1 THEN 'poi' ELSE 'region' END AS node_type
+  FROM pts0
+),
+e0 AS (
+  SELECT graph_id, node_id AS src,
+         lead(node_id) OVER (PARTITION BY graph_id ORDER BY node_id) AS dst
+  FROM n
+),
+e AS (SELECT graph_id, src, dst, 'next' AS edge_type FROM e0 WHERE dst IS NOT NULL)"""
+
+
+_BROKEN_EDGES = "be AS (SELECT graph_id, src, dst FROM e WHERE src % 7 <> 3)"
+
+
+def _rda_ctes() -> str:
+    """The doc graph, its broken chain ``be``, the defs/uses fixture and
+    the reaching-definitions recursion ``r(node, var, def_node)``: facts
+    propagate along ``be``, blocked at nodes that redefine the var
+    (left-join kill check in the recursive term). Needs WITH RECURSIVE."""
+    return f"""{_graph_ctes()},
+{_BROKEN_EDGES},
+defs AS (SELECT node_id AS d, node_id % 3 AS var FROM n WHERE node_id % 4 = 1),
+uses AS (SELECT node_id AS node, node_id % 3 AS var FROM n WHERE node_id % 5 = 2),
+r(node, var, def_node) AS (
+  SELECT be.dst, defs.var, defs.d FROM defs JOIN be ON be.src = defs.d
+  UNION
+  SELECT be.dst, r.var, r.def_node
+  FROM r JOIN be ON be.src = r.node
+  LEFT JOIN defs k ON k.d = r.node AND k.var = r.var
+  WHERE k.d IS NULL
+)"""
+
+
+def _components_cte(pairs: str, a: str, b: str) -> str:
+    """CTE 'comp(node, component)': undirected connected components of the
+    edges (``a``, ``b``) of ``pairs`` by recursive-CTE closure, component =
+    min reachable node id. Nodes without an edge are absent. Needs WITH
+    RECURSIVE."""
+    return f"""u AS (SELECT {a} AS a, {b} AS b FROM {pairs}
+      UNION SELECT {b}, {a} FROM {pairs}),
+nn AS (SELECT DISTINCT a AS node FROM u),
+r(node, comp) AS (
+  SELECT node, node FROM nn
+  UNION
+  SELECT u.b, r.comp FROM r JOIN u ON u.a = r.node
+),
+comp AS (SELECT node, min(comp) AS component FROM r GROUP BY 1)"""
+
+
+# ---------------------------------------------------------------------------
+# fragments: word n-grams and shingle overlap
+# ---------------------------------------------------------------------------
+
+_TOKS = "toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)"
+
+
+def _gram(n: int) -> str:
+    """The word n-gram of token list ``w`` starting at 0-based index i."""
+    return " || ' ' || ".join(f"w[i + {k}]" for k in range(1, n + 1))
+
+
+def _shingles_cte(n: int = 3, toks: str = "toks", name: str = "sh") -> str:
+    """CTE ``name``(doc_id, shingle): the distinct word n-grams of ``toks``."""
+    return f"""{name} AS (
+  SELECT DISTINCT doc_id, {_gram(n)} AS shingle
+  FROM {toks}, unnest(range(len(w) - {n - 1})) AS t(i)
+  WHERE len(w) >= {n}
+)"""
+
+
+_SHINGLES_CTE = f"""
+{_TOKS},
+{_shingles_cte()},
+cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1)"""
+
+# every doc pair sharing a 3-gram: |A ∩ B| = inter, |A| = na, |B| = nb
+_OVERLAP_CTE = f"""{_SHINGLES_CTE},
+ov AS (
+  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS inter
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+),
+ovn AS (
+  SELECT ov.*, ca.n AS na, cb.n AS nb FROM ov
+  JOIN cnt ca ON doc_id_a = ca.doc_id
+  JOIN cnt cb ON doc_id_b = cb.doc_id
+)"""
+_JACCARD = "round(inter * 1.0 / (na + nb - inter), 6)"
+_JACCARD_PPM = "inter * 1000000 // (na + nb - inter)"
+
+
+def _jaccard_groups_cte(threshold: float) -> str:
+    """CTE 'grp(doc_id, group_id)': components over the exact-Jaccard pair
+    graph, singletons keep their own id. Needs WITH RECURSIVE."""
+    return f"""{_OVERLAP_CTE},
+pairs AS (SELECT doc_id_a, doc_id_b FROM ovn WHERE {_JACCARD} >= {threshold}),
+{_components_cte("pairs", "doc_id_a", "doc_id_b")},
+grp AS (
+  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_id
+  FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
+)"""
+
+
+# positional (multiplicity-keeping) 3-grams of ``toks``, start index spos
+_POS_SHINGLES_CTE = f"""ps AS (
+  SELECT doc_id, i AS spos, {_gram(3)} AS shingle
+  FROM toks, unnest(range(len(w) - 2)) AS t(i)
+  WHERE len(w) >= 3
+)"""
+
+# one row per token of ``toks`` with its 0-based position
+_TOKEN_POS_CTE = """tok AS (
+  SELECT doc_id, i AS pos, w[i + 1] AS tok
+  FROM toks, unnest(range(len(w))) AS t(i)
+)"""
+
+
+def _bigram_repetition(src: str) -> str:
+    """Per doc of ``src(doc_id, ws)``: word-2-gram count, the top 2-gram's
+    share and the duplicated share, in integer ppm."""
+    return f"""SELECT doc_id,
+       CAST(sum(cnt) AS BIGINT) AS n_grams,
+       CAST(max(cnt) * 1000000 // sum(cnt) AS BIGINT) AS top_gram_ppm,
+       CAST((sum(cnt) - count(*)) * 1000000 // sum(cnt) AS BIGINT) AS dup_gram_ppm
+FROM (
+  SELECT doc_id, gram, count(*) AS cnt
+  FROM (SELECT doc_id, ws[i] || ' ' || ws[i + 1] AS gram
+        FROM {src}, unnest(generate_series(1, len(ws) - 1)) AS t(i))
+  GROUP BY 1, 2
+) GROUP BY 1"""
+
+
+def _pack_sql(src: str, budget: int, extra: str = "") -> str:
+    """Global prefix-sum packing of ``src(doc_id, n_tokens, ...)`` into
+    ``budget``-token bins, in doc_id order, plus the ``extra`` columns."""
+    return f"""SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+       CAST(cb // {budget} AS BIGINT) AS bin_id,
+       CAST(cb % {budget} AS BIGINT) AS offset_in_bin{extra}
+FROM (
+  SELECT *, coalesce(sum(n_tokens) OVER (
+           ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+  FROM {src}
+)"""
+
+
+# md5 of a text after the PII scrub (emails, then long digit runs)
+_SCRUB_HASH = (f"md5(regexp_replace(regexp_replace(text, '{EMAIL_RE}', '<EMAIL>', 'g'),\n"
+               f"                          '{LONG_DIGITS_RE}', '<NUM>', 'g'))")
+
+
+# ---------------------------------------------------------------------------
+# fragments: quantized embeddings
+# ---------------------------------------------------------------------------
+
+_QUANT_CTE = """
+q AS (
+  SELECT vec_id,
+         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
+  FROM embeddings
+),
+qn AS (
+  SELECT vec_id, qv,
+         list_dot_product(qv::DOUBLE[], qv::DOUBLE[]) AS norm
+  FROM q
+)"""
+
+# exact squared distance of two int lists (DOUBLE dots of ints < 2^53)
+_D2 = ("list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]) "
+       "- 2 * list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) "
+       "+ list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])")
+
+
+def _cos(a: str = "a", b: str = "bb") -> str:
+    """The round-6 quantized cosine of ``qn`` rows ``a`` and ``b``."""
+    return (f"round(list_dot_product({a}.qv::DOUBLE[], {b}.qv::DOUBLE[])"
+            f" / sqrt({a}.norm * {b}.norm), 6)")
+
+
+def _cos_topk(k: int, src: str, col: str = "cos_q") -> str:
+    """Per query row ``a`` of the FROM clause ``src``, its top-k rows
+    ``bb`` by quantized cosine (neighbour id tie-break)."""
+    return f"""
+SELECT query_id, neighbor_id, rank, {col} FROM (
+  SELECT a.vec_id AS query_id, bb.vec_id AS neighbor_id, {_cos()} AS {col},
+         row_number() OVER (
+           PARTITION BY a.vec_id ORDER BY {_cos()} DESC, bb.vec_id ASC
+         ) AS rank
+  {src}
+) WHERE rank <= {k}
+"""
+
+
+def _near_dups(src: str, threshold: float, extra: str = "") -> str:
+    """Pairs (vec_id_a, vec_id_b, cos_q) of the rows ``a``, ``bb`` of the
+    FROM clause ``src`` at quantized cosine >= ``threshold``."""
+    return f"""
+SELECT * FROM (
+  SELECT a.vec_id AS vec_id_a, bb.vec_id AS vec_id_b{extra}, {_cos()} AS cos_q
+  {src}
+) WHERE cos_q >= {threshold}
+"""
+
+
+def _lsh_buckets_cte(dim: int, n_planes: int) -> str:
+    """CTEs 'planes' and 'b(vec_id, bucket)': the integer-hyperplane LSH
+    signature of every ``qn`` row (exact arithmetic)."""
+    return f"""planes AS (
+  SELECT p, list_transform(range({dim}),
+                           d -> ((p * {dim} + d) * 48271) % 1021 - 510) AS pl
+  FROM range({n_planes}) t(p)
+),
+b AS (
+  SELECT vec_id,
+         CAST(sum(CASE WHEN list_dot_product(qn.qv::DOUBLE[], pl::DOUBLE[]) >= 0
+                       THEN (1 << p) ELSE 0 END) AS BIGINT) AS bucket
+  FROM qn, planes GROUP BY vec_id
+)"""
+
+
+def _lsh_pairs(pair: str, max_hamming: int) -> str:
+    """FROM clause: ``qn`` rows ``a``, ``bb`` related by ``pair`` whose LSH
+    buckets differ in at most ``max_hamming`` bits (the multi-probe rule)."""
+    return f"""FROM qn a JOIN b ba ON a.vec_id = ba.vec_id
+  JOIN qn bb ON {pair}
+  JOIN b bbb ON bb.vec_id = bbb.vec_id
+  WHERE bit_count(xor(ba.bucket, bbb.bucket)) <= {max_hamming}"""
+
+
+def _ivf_route_ctes(every: int, centroid_every: int, nprobe: int) -> str:
+    """IVF routing over ``qn``: sampled centroids 'cents', round-6 cosines
+    'scored', each vector's cell 'assign(vec_id, cent_id)' and each query's
+    ``nprobe`` cells 'qprobe(query_id, cent_id)' — cosine desc, smallest
+    cent_id on ties."""
+    rank = "row_number() OVER (PARTITION BY vec_id ORDER BY cosc DESC, cent_id ASC) AS rn"
+    return f"""cents AS (
+  SELECT vec_id AS cent_id, qv AS cv, norm AS cnorm FROM qn
+  WHERE vec_id % {centroid_every} = 0
+),
+scored AS (
+  SELECT qn.vec_id, cent_id,
+         round(list_dot_product(qv::DOUBLE[], cv::DOUBLE[])
+               / sqrt(norm * cnorm), 6) AS cosc
+  FROM qn, cents
+),
+assign AS (
+  SELECT vec_id, cent_id FROM (SELECT vec_id, cent_id, {rank} FROM scored)
+  WHERE rn = 1
+),
+qprobe AS (
+  SELECT vec_id AS query_id, cent_id FROM (
+    SELECT vec_id, cent_id, {rank} FROM scored WHERE vec_id % {every} = 0
+  ) WHERE rn <= {nprobe}
+)"""
+
+
+def _pq_sub(v: str) -> str:
+    """Subvector m of the int list ``v``."""
+    return f"list_slice({v}, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB})"
+
+
+def _pq_encode_ctes(src: str, v: str) -> str:
+    """PQ over ``src(vec_id, v)``: the codebook 'cb(m, k, cv)' from the
+    subvectors of the first PQ_K rows with vec_id % PQ_SAMPLE_MOD == 1,
+    the subvectors 'subs(vec_id, m, sub)' and the argmin codes
+    'enc(vec_id, m, code)', smallest code on ties."""
+    return f"""cbv AS (
+  SELECT {v}, vec_id FROM {src} WHERE vec_id % {PQ_SAMPLE_MOD} = 1
+  ORDER BY vec_id LIMIT {PQ_K}
+),
+cbk AS (SELECT {v}, row_number() OVER (ORDER BY vec_id) - 1 AS k FROM cbv),
+cb AS (SELECT m, k, {_pq_sub(v)} AS cv FROM cbk, range({PQ_M}) t(m)),
+subs AS (SELECT vec_id, m, {_pq_sub(v)} AS sub FROM {src}, range({PQ_M}) t(m)),
+enc AS (
+  SELECT vec_id, m, k AS code FROM (
+    SELECT s.vec_id, s.m, cb.k,
+           row_number() OVER (
+             PARTITION BY s.vec_id, s.m
+             ORDER BY {_D2.format(a='s.sub', b='cb.cv')} ASC, cb.k ASC) AS rn
+    FROM subs s JOIN cb ON s.m = cb.m
+  ) WHERE rn = 1
+)"""
+
+
+# the ADC distance of a query's subvectors 'qs' to a coded row's centroids
+_ADC = f"CAST(sum({_D2.format(a='qs.sub', b='cb.cv')}) AS BIGINT) AS adist"
+
+
+def _adc_topk(k: int) -> str:
+    """Per query the top-k of 'pair(query_id, neighbor_id, adist)' by
+    adist asc, neighbor id asc."""
+    return f"""
+SELECT query_id, neighbor_id, rank, adist FROM (
+  SELECT query_id, neighbor_id, adist,
+         row_number() OVER (
+           PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS rank
+  FROM pair
+) WHERE rank <= {k}
+"""
+
+
+# ---------------------------------------------------------------------------
+# fragments: the crawl host link graph and unrolled fixpoints
+# ---------------------------------------------------------------------------
+
+# the crawl host of a page (pages are grouped three to a host)
+_DOC_HOST = "printf('host%04d.example', (doc_id // 3) % 100)"
+
+
+def _host_of(url: str) -> str:
+    return f"regexp_extract({url}, '^https?://([^/]+)', 1)"
+
+
+def _host_nodes() -> str:
+    """The 100 crawl hosts as a subquery (i, host)."""
+    return "(SELECT i, printf('host%04d.example', i) AS host FROM range(100) t(i))"
+
+
+def _host_edges_cte(name: str, where: str = "") -> str:
+    """CTE ``name(src, dst)``: the two-arm host link graph of the crawl
+    fixture (each page links its host to two hosts), over the pages that
+    match ``where``."""
+    cond = f" WHERE {where}" if where else ""
+    return f"""{name} AS (
+  SELECT {_DOC_HOST} AS src,
+         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
+  FROM documents{cond}
+  UNION ALL
+  SELECT {_DOC_HOST}, printf('host%04d.example', (doc_id * 13 + 2) % 100)
+  FROM documents{cond}
+)"""
+
+
+def _rounds(head: str, n: int, layer, final: str) -> str:
+    """A fixpoint unrolled as one CTE chain: ``head``, the CTE layers
+    ``layer(k)`` for k = 1..n, then the ``final`` query."""
+    return head + "," + ",".join(layer(k) for k in range(1, n + 1)) + "\n" + final
+
+
+def _teleport_rank_sql(iterations: int, seed: str) -> str:
+    """The integer teleport-rank power iterations over the host link graph,
+    unrolled (linkgraph.pagerank_integer / trustrank_integer): rank_0 = 1e6
+    on seeds and 0 elsewhere, then per layer seed * 150000 + 85 * (sum of
+    rank // out_deg per dst) // 100 — the same integer truncation, so every
+    iteration is bit-exact across engines. ``seed`` is the 0/1 seed flag as
+    SQL over the host number i."""
+    head = f"""
+WITH {_host_edges_cte("edges")},
+nodes AS (SELECT host, {seed} AS is_seed FROM {_host_nodes()}),
+deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY 1),
+ed AS (SELECT e.src, e.dst, d.out_deg FROM edges e JOIN deg d USING (src)),
+r0 AS (SELECT host AS node, CAST(is_seed * 1000000 AS BIGINT) AS rank_micro
+       FROM nodes)"""
+    return _rounds(head, iterations, lambda k: f"""
+c{k} AS (
+  SELECT ed.dst AS node, sum(r.rank_micro // ed.out_deg) AS inbound
+  FROM ed JOIN r{k - 1} r ON ed.src = r.node GROUP BY 1
+),
+r{k} AS (
+  SELECT n.host AS node,
+         CAST(n.is_seed * 150000 + 85 * coalesce(c.inbound, 0) // 100
+              AS BIGINT) AS rank_micro
+  FROM nodes n LEFT JOIN c{k} c ON n.host = c.node
+)""", f"SELECT node AS host, rank_micro FROM r{iterations}\n")
+
+
+def _min_relax_sql(head: str, rounds: int, col: str, step: str) -> str:
+    """``head`` ending in the seed layer d0(host, ``col``), then ``rounds``
+    synchronous min-relax layers over ``ed(src, dst, ...)`` adding
+    ``step`` per hop (the unrolled BFS / Bellman-Ford of linkgraph)."""
+    return _rounds(head, rounds, lambda r: f"""
+d{r} AS (
+  SELECT host, min({col}) AS {col} FROM (
+    SELECT host, {col} FROM d{r - 1}
+    UNION ALL
+    SELECT ed.dst AS host, p.{col} + {step} AS {col}
+    FROM d{r - 1} p JOIN ed ON p.host = ed.src
+  ) GROUP BY 1
+)""", f"SELECT host, CAST({col} AS BIGINT) AS {col} FROM d{rounds}")
+
+
+def _bpe_enc(tok: str) -> str:
+    """A token as its bracketed symbol sequence (chr(1) sym chr(2) each)."""
+    clean = f"replace(replace({tok}, chr(1), ''), chr(2), '')"
+    return (f"chr(1) || array_to_string(string_split({clean}, ''),\n"
+            f"           chr(2) || chr(1)) || chr(2)")
+
+
+def _bpe_merge(seq: str) -> str:
+    """``seq`` with every bracketed pair (b.sym_a, b.sym_b) merged."""
+    return (f"replace({seq},\n"
+            f"          chr(1) || b.sym_a || chr(2) || chr(1) || b.sym_b || chr(2),\n"
+            f"          chr(1) || b.sym_a || b.sym_b || chr(2))")
+
+
+# the corpus word-frequency table as symbol sequences v0(seq, n)
+_BPE_WORDS = f"""
+WITH wc AS (
+  SELECT tok, count(*) AS n
+  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
+  GROUP BY 1
+),
+v0 AS (SELECT {_bpe_enc("tok")} AS seq, n FROM wc)"""
+
+
+def _bpe_round(k: int) -> str:
+    """BPE training round k: the weighted adjacent-pair counts p{k} of
+    v{k-1}, the (count desc, pair asc) argmax b{k}, and its merge v{k} —
+    the greedy disjoint merge semantics of operators/bpe.py."""
+    return f"""
+p{k} AS (
+  SELECT s[i] AS sym_a, s[i + 1] AS sym_b, CAST(sum(n) AS BIGINT) AS pair_count
+  FROM (SELECT string_split(substring(seq, 2, length(seq) - 2),
+                            chr(2) || chr(1)) AS s, n
+        FROM v{k - 1}),
+       unnest(generate_series(1, len(s) - 1)) AS t(i)
+  WHERE len(s) >= 2
+  GROUP BY 1, 2
+),
+b{k} AS (
+  SELECT sym_a, sym_b, pair_count FROM p{k}
+  ORDER BY pair_count DESC, sym_a, sym_b LIMIT 1
+),
+v{k} AS (
+  SELECT {_bpe_merge("v.seq")} AS seq, v.n
+  FROM v{k - 1} v CROSS JOIN b{k} b
+)"""
+
+
+# ---------------------------------------------------------------------------
+# fragments: event points
+# ---------------------------------------------------------------------------
+
+
+def _event_points_cte() -> str:
+    """CTE 'ev': the events table plus each ping's grid point ``ex``/``ey``
+    and time keys ``sec``/``day`` (the rule of sources.pages.event_points_df,
+    written independently)."""
+    return f"""ev AS (
+  SELECT *, {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey,
+         CAST(floor(epoch(ts)) AS BIGINT) AS sec,
+         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day
+  FROM events
+)"""
+
+
+# every user's pings in track order
+_TRACK = "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
+
+
+def _stays_cte() -> str:
+    """CTEs 'flagged', 'isl' and 'stays' over 'ev': a new island starts at
+    a Chebyshev step above STAY_RADIUS, and an island of at least
+    STAY_MIN_PINGS pings is a stay (user_id, island, first_event_id,
+    n_pings, arrive_sec, depart_sec, centroid cx/cy)."""
+    return f"""flagged AS (
+  SELECT *,
+         CASE WHEN greatest(abs(ex - lag(ex) OVER w), abs(ey - lag(ey) OVER w))
+                   <= {STAY_RADIUS}
+              THEN 0 ELSE 1 END AS brk
+  FROM ev {_TRACK}
+),
+isl AS (
+  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                           ROWS UNBOUNDED PRECEDING) AS island
+  FROM flagged
+),
+stays AS (
+  SELECT user_id, island, min(event_id) AS first_event_id,
+         CAST(count(*) AS BIGINT) AS n_pings,
+         min(sec) AS arrive_sec, max(sec) AS depart_sec,
+         CAST(sum(ex) // count(*) AS BIGINT) AS cx,
+         CAST(sum(ey) // count(*) AS BIGINT) AS cy
+  FROM isl GROUP BY 1, 2
+  HAVING count(*) >= {STAY_MIN_PINGS}
+)"""
+
+
+def _fences_cte() -> str:
+    return f"""fences AS (
+  SELECT i AS fence_id, (i * 37 + 11) % 1024 AS fx, (i * 73 + 29) % 1024 AS fy
+  FROM range(0, {layers.N_GAZ}, {FENCE_MOD}) t(i)
+)"""
+
+
+# ping e lies in fence f's box
+_IN_FENCE = f"abs(e.ex - f.fx) <= {FENCE_R} AND abs(e.ey - f.fy) <= {FENCE_R}"
+
+
+def _fence_state_cte(keys: str) -> str:
+    """CTE 'pinged': per ping (``keys`` of ev e) its ``state`` = smallest
+    fence_id whose box holds it, -1 outside every fence."""
+    return f"""pinged AS (
+  SELECT {keys}, coalesce(min(f.fence_id), -1) AS state
+  FROM ev e LEFT JOIN fences f ON {_IN_FENCE}
+  GROUP BY ALL
+)"""
+
+
+def _route_points_cte() -> str:
+    """CTEs 'seg', 's2' and 'pts' over 'ev': every consecutive-ping hop
+    and its exact-integer DDA raster, L = Chebyshev steps and
+    xt = x0 + (dx * t) // L (DuckDB ``//`` truncates toward zero, same as
+    the engine's ``div``)."""
+    return f"""seg AS (
+  SELECT user_id,
+         lag(ex) OVER w AS x0, lag(ey) OVER w AS y0,
+         ex AS x1, ey AS y1
+  FROM ev {_TRACK}
+),
+s2 AS (
+  SELECT *, greatest(abs(x1 - x0), abs(y1 - y0), 1) AS L
+  FROM seg WHERE x0 IS NOT NULL
+),
+pts AS (
+  SELECT user_id,
+         x0 + ((x1 - x0) * t) // L AS xt,
+         y0 + ((y1 - y0) * t) // L AS yt
+  FROM s2, unnest(generate_series(0, L)) AS g(t)
+)"""
+
+
+def _sq_dist(x0: str, y0: str, x1: str, y1: str) -> str:
+    """Squared euclidean distance of two grid points (exact integers)."""
+    return f"({x0} - {x1}) * ({x0} - {x1}) + ({y0} - {y1}) * ({y0} - {y1})"
+
+
+_LINES_CTE = f"""lines AS (
+  SELECT CAST(j AS BIGINT) AS line_id,
+         {layers.LINE_X0_SQL.format(j="j")} AS bx0,
+         {layers.LINE_Y0_SQL.format(j="j")} AS by0,
+         {layers.LINE_X1_SQL.format(j="j")} AS bx1,
+         {layers.LINE_Y1_SQL.format(j="j")} AS by1
+  FROM unnest(generate_series(0, {layers.N_LINES - 1})) AS g(j)
+)"""
+
+
+# ---------------------------------------------------------------------------
+# geo oracles
+# ---------------------------------------------------------------------------
+
+
 def cell_encode_sql(res_lo: int = 7, res_hi: int = 10) -> str:
-    parts = []
-    for r in range(res_lo, res_hi + 1):
-        shift = layers.GRID_RES - r
-        gx = f"(gx >> {shift})" if shift else "gx"
-        gy = f"(gy >> {shift})" if shift else "gy"
-        parts.append(
-            f"SELECT doc_id, {r} AS res, {cells.morton_sql(gx, gy, r)} AS cell_id FROM pts0"
-        )
+    parts = [
+        f"SELECT doc_id, {r} AS res, {_cell_sql(r)} AS cell_id FROM pts0"
+        for r in range(res_lo, res_hi + 1)
+    ]
     return f"WITH {_pts0_only()} " + " UNION ALL ".join(parts)
 
 
 def s2_encode_sql(levels: tuple[int, ...] = (12, 13, 14, 15, 16)) -> str:
     """Hilbert (S2-style) encode at levels 12..16, via the unrolled CTE chain
     (same bit algorithm as ``s2.hilbert_np`` — see s2.py)."""
-    from . import s2
-
     src = f"""
 src AS (
   SELECT doc_id,
@@ -95,11 +736,7 @@ def pip_docs_sql() -> str:
     """(doc_id, cell_id, polygon_id): every polygon containing each doc point."""
     return f"""
 WITH {_pts_cte()}, {_edges_cte()}
-SELECT doc_id, cell_id, polygon_id FROM (
-  SELECT p.doc_id, p.cell_id, e.polygon_id, count(*) AS c
-  FROM pts p JOIN edges e ON ({_CROSSING})
-  GROUP BY 1, 2, 3
-) WHERE c % 2 = 1
+{_pip("pts", "doc_id, cell_id")}
 """
 
 
@@ -107,13 +744,7 @@ def pip_best_sql() -> str:
     """Deepest-admin-level winner per (doc_id, cell_id) — longest_scope_match."""
     return f"""
 WITH {_pts_cte()}, {_edges_cte()}, {_admin_cte()},
-hits AS (
-  SELECT doc_id, cell_id, polygon_id FROM (
-    SELECT p.doc_id, p.cell_id, e.polygon_id, count(*) AS c
-    FROM pts p JOIN edges e ON ({_CROSSING})
-    GROUP BY 1, 2, 3
-  ) WHERE c % 2 = 1
-)
+hits AS ({_pip("pts", "doc_id, cell_id")})
 SELECT h.doc_id, h.cell_id, h.polygon_id, a.admin_level
 FROM hits h JOIN admin a USING (polygon_id)
 QUALIFY row_number() OVER (
@@ -123,94 +754,49 @@ QUALIFY row_number() OVER (
 """
 
 
-def _entities_cte() -> str:
-    """CTE 'ent': deterministic reconstruction of the embedded mentions."""
-    gi = layers.MENTION_IDX_SQL.format(j="j")
-    return f"""
-ment AS (
-  SELECT doc_id, length(text) AS tlen,
-         unnest(generate_series(0, doc_id % 3)) AS j
-  FROM documents
-),
-ent AS (
-  SELECT
-    printf('https://host%04d.example/doc/%d', (doc_id % 100)::int, doc_id) AS url,
-    doc_id,
-    j::int AS entity_id,
-    printf('GEO_%05d', {gi}) AS surface,
-    (tlen + 1 + j * 10)::int AS char_offset,
-    {layers.LON_SQL.format(gx=layers.GAZ_GX_SQL.format(i=gi))} AS lon,
-    {layers.LAT_SQL.format(gy=layers.GAZ_GY_SQL.format(i=gi))} AS lat
-  FROM ment
-)"""
-
-
 def entities_sql() -> str:
-    return f"WITH {_entities_cte()} SELECT url, entity_id, surface, char_offset, lon, lat FROM ent"
+    gx = layers.GAZ_GX_SQL.format(i="gi")
+    gy = layers.GAZ_GY_SQL.format(i="gi")
+    return f"""
+WITH {_mentions_cte()}
+SELECT url, entity_id, surface, (tlen + 1 + j * 10)::int AS char_offset,
+       {layers.LON_SQL.format(gx=gx)} AS lon, {layers.LAT_SQL.format(gy=gy)} AS lat
+FROM ment
+"""
 
 
 def pip_entities_sql(res: int = layers.GRID_RES) -> str:
     """The flagship triple set: distinct (url, cell_id, polygon_id) over
     extracted page entities."""
-    gi = layers.MENTION_IDX_SQL.format(j="j")
-    gx = layers.GAZ_GX_SQL.format(i=gi)
-    gy = layers.GAZ_GY_SQL.format(i=gi)
-    shift = layers.GRID_RES - res
-    gxr = f"(({gx}) >> {shift})" if shift else f"({gx})"
-    gyr = f"(({gy}) >> {shift})" if shift else f"({gy})"
     return f"""
-WITH ment AS (
-  SELECT doc_id, unnest(generate_series(0, doc_id % 3)) AS j FROM documents
-),
-p AS (
-  SELECT
-    printf('https://host%04d.example/doc/%d', (doc_id % 100)::int, doc_id) AS url,
-    {layers.LON_SQL.format(gx=gx)} AS lon,
-    {layers.LAT_SQL.format(gy=gy)} AS lat,
-    {cells.morton_sql(gxr, gyr, res)} AS cell_id
-  FROM ment
+WITH {_mentions_cte()},
+pts AS (
+  SELECT url,
+         {layers.LON_SQL.format(gx="gx")} AS lon,
+         {layers.LAT_SQL.format(gy="gy")} AS lat,
+         {_cell_sql(res)} AS cell_id
+  FROM (SELECT url, {layers.GAZ_GX_SQL.format(i="gi")} AS gx,
+               {layers.GAZ_GY_SQL.format(i="gi")} AS gy FROM ment)
 ),
 {_edges_cte()}
-SELECT DISTINCT url, cell_id, polygon_id FROM (
-  SELECT p.url, p.cell_id, e.polygon_id, count(*) AS c
-  FROM p JOIN edges e ON ({_CROSSING})
-  GROUP BY 1, 2, 3
-) WHERE c % 2 = 1
+SELECT DISTINCT * FROM ({_pip("pts", "url, cell_id")})
 """
 
 
 def tiles_sql(res_lo: int = 7, res_hi: int = 10) -> str:
-    parts = []
-    for r in range(res_lo, res_hi + 1):
-        shift = layers.GRID_RES - r
-        gx = f"(gx >> {shift})" if shift else "gx"
-        gy = f"(gy >> {shift})" if shift else "gy"
-        parts.append(
-            f"SELECT {r} AS res, {cells.morton_sql(gx, gy, r)} AS cell_id, "
-            f"count(*) AS n_docs FROM pts0 GROUP BY 1, 2"
-        )
+    parts = [
+        f"SELECT {r} AS res, {_cell_sql(r)} AS cell_id, "
+        f"count(*) AS n_docs FROM pts0 GROUP BY 1, 2"
+        for r in range(res_lo, res_hi + 1)
+    ]
     return f"WITH {_pts0_only()} " + " UNION ALL ".join(parts)
 
 
 def vector_raster_sql(res: int = 7) -> str:
     """Rasterized polygon layer: every res-cell whose center is inside."""
-    xs = cells.x_from_cell_sql("cell_id", res)
-    ys = cells.y_from_cell_sql("cell_id", res)
-    n = 1 << res
     return f"""
-WITH g AS (SELECT range AS cell_id FROM range({1 << (2 * res)})),
-pix AS (
-  SELECT cell_id,
-         -180.0 + 360.0 * ({xs} + 0.5) / {n} AS lon,
-         -90.0 + 180.0 * ({ys} + 0.5) / {n} AS lat
-  FROM g
-),
-{_edges_cte()}
-SELECT res, cell_id, polygon_id FROM (
-  SELECT {res} AS res, p.cell_id, e.polygon_id, count(*) AS c
-  FROM pix p JOIN edges e ON ({_CROSSING})
-  GROUP BY 1, 2, 3
-) WHERE c % 2 = 1
+WITH {_pix_cte(res)}, {_edges_cte()}
+SELECT {res} AS res, cell_id, polygon_id FROM ({_pip("pix", "cell_id")})
 """
 
 
@@ -251,23 +837,6 @@ FROM pts0 GROUP BY 1
 """
 
 
-def _graph_ctes() -> str:
-    """CTEs n (nodes) and e (chain edges) of the deterministic doc graph."""
-    cell5 = cells.morton_sql("(gx >> 5)", "(gy >> 5)", 5)
-    return f"""{_pts0_only()},
-n AS (
-  SELECT doc_id % 100 AS graph_id, doc_id AS node_id, {cell5} AS label,
-         CASE doc_id % 3 WHEN 0 THEN 'city' WHEN 1 THEN 'poi' ELSE 'region' END AS node_type
-  FROM pts0
-),
-e0 AS (
-  SELECT graph_id, node_id AS src,
-         lead(node_id) OVER (PARTITION BY graph_id ORDER BY node_id) AS dst
-  FROM n
-),
-e AS (SELECT graph_id, src, dst, 'next' AS edge_type FROM e0 WHERE dst IS NOT NULL)"""
-
-
 def graph_collapse_sql() -> str:
     return f"""
 WITH {_graph_ctes()},
@@ -301,23 +870,14 @@ SELECT DISTINCT graph_id, src, dst, edge_type FROM (
 """
 
 
-_BROKEN_EDGES = "be AS (SELECT graph_id, src, dst FROM e WHERE src % 7 <> 3)"
-
-
 def graph_components_sql() -> str:
     """Undirected connected components over the broken chain edges —
     recursive-CTE closure, component = min reachable node id."""
     return f"""
 WITH RECURSIVE {_graph_ctes()},
 {_BROKEN_EDGES},
-u AS (SELECT src AS a, dst AS b FROM be UNION SELECT dst, src FROM be),
-nn AS (SELECT DISTINCT a AS node FROM u),
-r(node, comp) AS (
-  SELECT node, node FROM nn
-  UNION
-  SELECT u.b, r.comp FROM r JOIN u ON u.a = r.node
-)
-SELECT node AS node_id, min(comp) AS component FROM r GROUP BY 1
+{_components_cte("be", "src", "dst")}
+SELECT node AS node_id, component FROM comp
 """
 
 
@@ -342,17 +902,7 @@ def graph_rda_sql() -> str:
     facts along the broken chain, blocked at nodes that redefine the var
     (left-join kill check in the recursive term)."""
     return f"""
-WITH RECURSIVE {_graph_ctes()},
-{_BROKEN_EDGES},
-defs AS (SELECT node_id AS d, node_id % 3 AS var FROM n WHERE node_id % 4 = 1),
-r(node, var, def_node) AS (
-  SELECT be.dst, defs.var, defs.d FROM defs JOIN be ON be.src = defs.d
-  UNION
-  SELECT be.dst, r.var, r.def_node
-  FROM r JOIN be ON be.src = r.node
-  LEFT JOIN defs k ON k.d = r.node AND k.var = r.var
-  WHERE k.d IS NULL
-)
+WITH RECURSIVE {_rda_ctes()}
 SELECT node AS node_id, var, def_node FROM r
 """
 
@@ -373,17 +923,11 @@ SELECT a AS ancestor, b AS descendant FROM r
 
 def entities_typed_sql() -> str:
     """Typed entity rows: kind = gaz_idx % 3 cycle, data_type from kind."""
-    gi = layers.MENTION_IDX_SQL.format(j="j")
     return f"""
-WITH ment AS (
-  SELECT doc_id, unnest(generate_series(0, doc_id % 3)) AS j FROM documents
-)
-SELECT
-  printf('https://host%04d.example/doc/%d', (doc_id % 100)::int, doc_id) AS url,
-  j::int AS entity_id,
-  printf('GEO_%05d', {gi}) AS surface,
-  CASE ({gi}) % 3 WHEN 0 THEN 'city' WHEN 1 THEN 'poi' ELSE 'region' END AS entity_kind,
-  CASE ({gi}) % 3 WHEN 2 THEN 'polygon' ELSE 'point' END AS data_type
+WITH {_mentions_cte()}
+SELECT url, entity_id, surface,
+  CASE gi % 3 WHEN 0 THEN 'city' WHEN 1 THEN 'poi' ELSE 'region' END AS entity_kind,
+  CASE gi % 3 WHEN 2 THEN 'polygon' ELSE 'point' END AS data_type
 FROM ment
 """
 
@@ -391,31 +935,7 @@ FROM ment
 def dedup_groups_sql(threshold: float = 0.5) -> str:
     """Components over the exact-Jaccard pair graph; singletons keep their
     own id."""
-    return f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-pairs0 AS (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_id_a, doc_id_b FROM pairs0
-  JOIN cnt ca ON doc_id_a = ca.doc_id
-  JOIN cnt cb ON doc_id_b = cb.doc_id
-  WHERE round(inter * 1.0 / (ca.n + cb.n - inter), 6) >= {threshold}
-),
-u AS (SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-nn AS (SELECT DISTINCT a AS node FROM u),
-r(node, comp) AS (
-  SELECT node, node FROM nn
-  UNION
-  SELECT u.b, r.comp FROM r JOIN u ON u.a = r.node
-),
-comp AS (SELECT node, min(comp) AS component FROM r GROUP BY 1)
-SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_id
-FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-"""
+    return f"WITH RECURSIVE {_jaccard_groups_cte(threshold)}\nSELECT * FROM grp"
 
 
 def alias_resolve_sql(n_gaz: int = layers.N_GAZ) -> str:
@@ -439,17 +959,9 @@ WHERE target NOT IN (SELECT alias FROM m)
 
 def cascade_resolve_sql(n_gaz: int = layers.N_GAZ) -> str:
     """Exact-surface -> prefix-bucket -> unresolved fallback cascade."""
-    gi = layers.MENTION_IDX_SQL.format(j="j")
     return f"""
-WITH ment AS (
-  SELECT doc_id, unnest(generate_series(0, doc_id % 3)) AS j FROM documents
-),
-m2 AS (
-  SELECT printf('https://host%04d.example/doc/%d', (doc_id % 100)::int, doc_id) AS url,
-         j::int AS entity_id,
-         printf('GEO_%05d', {gi}) AS surface
-  FROM ment
-),
+WITH {_mentions_cte()},
+m2 AS (SELECT url, entity_id, surface FROM ment),
 ex AS (SELECT printf('GEO_%05d', i) AS surface, i AS exact_id
        FROM range({n_gaz}) t(i) WHERE i % 2 = 0),
 pfx AS (SELECT substr(printf('GEO_%05d', i), 1, 8) AS prefix, min(i) AS prefix_id
@@ -543,13 +1055,12 @@ FROM s GROUP BY user_id
 
 
 def events_sessions_sql() -> str:
-    return """
+    return f"""
 WITH s AS (
   SELECT event_id, user_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
                 OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM events {_TRACK}
 ),
 s2 AS (
   SELECT event_id, user_id,
@@ -588,26 +1099,12 @@ def extract_text_sql() -> str:
             f"CASE WHEN {j} < 1 + doc_id % 3 THEN ' GEO_' || printf('%05d', {gi}) ELSE '' END"
         )
     concat = " || ".join(pieces)
-    return f"""
-SELECT printf('https://host%04d.example/doc/%d', (doc_id % 100)::int, doc_id) AS url,
-       text || {concat} AS text_out
-FROM documents
-"""
+    return f"SELECT {_DOC_URL} AS url, text || {concat} AS text_out FROM documents"
 
 
 # ---------------------------------------------------------------------------
 # web-text / training-data pipeline oracles
 # ---------------------------------------------------------------------------
-
-_SHINGLES_CTE = """
-toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] AS shingle
-  FROM toks, unnest(range(len(w) - 2)) AS t(i)
-  WHERE len(w) >= 3
-),
-cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1)"""
-
 
 def dedup_exact_sql() -> str:
     return """
@@ -618,44 +1115,15 @@ FROM documents GROUP BY 1
 
 def dedup_jaccard_sql(threshold: float = 0.5) -> str:
     return f"""
-WITH {_SHINGLES_CTE},
-pairs AS (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_id_a, doc_id_b,
-       round(inter * 1.0 / (ca.n + cb.n - inter), 6) AS jaccard
-FROM pairs
-JOIN cnt ca ON doc_id_a = ca.doc_id
-JOIN cnt cb ON doc_id_b = cb.doc_id
-WHERE round(inter * 1.0 / (ca.n + cb.n - inter), 6) >= {threshold}
+WITH {_OVERLAP_CTE}
+SELECT doc_id_a, doc_id_b, {_JACCARD} AS jaccard
+FROM ovn WHERE {_JACCARD} >= {threshold}
 """
-
-
-_QUANT_CTE = """
-q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-  FROM embeddings
-),
-qn AS (
-  SELECT vec_id, qv,
-         list_dot_product(qv::DOUBLE[], qv::DOUBLE[]) AS norm
-  FROM q
-)"""
 
 
 def dedup_embedding_sql(threshold: float = 0.95) -> str:
-    return f"""
-WITH {_QUANT_CTE}
-SELECT vec_id_a, vec_id_b, cos_q FROM (
-  SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-         round(list_dot_product(a.qv::DOUBLE[], b.qv::DOUBLE[])
-               / sqrt(a.norm * b.norm), 6) AS cos_q
-  FROM qn a JOIN qn b ON a.vec_id < b.vec_id
-) WHERE cos_q >= {threshold}
-"""
+    pairs = "FROM qn a JOIN qn bb ON a.vec_id < bb.vec_id"
+    return f"WITH {_QUANT_CTE}{_near_dups(pairs, threshold)}"
 
 
 def dedup_embedding_lsh_sql(
@@ -665,29 +1133,9 @@ def dedup_embedding_lsh_sql(
     """Naive quadratic mirror of the multi-probe hyperplane LSH near-dup:
     identical integer planes/buckets (exact arithmetic), candidate predicate
     bit_count(xor(buckets)) <= max_hamming, identical cosine verify."""
-    return f"""
-WITH {_QUANT_CTE},
-planes AS (
-  SELECT p, list_transform(range({dim}),
-                           d -> ((p * {dim} + d) * 48271) % 1021 - 510) AS pl
-  FROM range({n_planes}) t(p)
-),
-b AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN list_dot_product(qn.qv::DOUBLE[], pl::DOUBLE[]) >= 0
-                       THEN (1 << p) ELSE 0 END) AS BIGINT) AS bucket
-  FROM qn, planes GROUP BY vec_id
-)
-SELECT vec_id_a, vec_id_b, cos_q FROM (
-  SELECT a.vec_id AS vec_id_a, bb.vec_id AS vec_id_b,
-         round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-               / sqrt(a.norm * bb.norm), 6) AS cos_q
-  FROM qn a JOIN b ba ON a.vec_id = ba.vec_id
-  JOIN qn bb ON a.vec_id < bb.vec_id
-  JOIN b bbb ON bb.vec_id = bbb.vec_id
-  WHERE bit_count(xor(ba.bucket, bbb.bucket)) <= {max_hamming}
-) WHERE cos_q >= {threshold}
-"""
+    pairs = _lsh_pairs("a.vec_id < bb.vec_id", max_hamming)
+    return (f"WITH {_QUANT_CTE}, {_lsh_buckets_cte(dim, n_planes)}"
+            f"{_near_dups(pairs, threshold)}")
 
 
 def ann_lsh_sql(
@@ -700,36 +1148,9 @@ def ann_lsh_sql(
     quantized-cosine ranking inside candidates only. The oracle mirrors the
     LSH candidate rule — not exact kNN — so the gate checks the bucketed
     plan itself, recall contract included."""
-    return f"""
-WITH {_QUANT_CTE},
-planes AS (
-  SELECT p, list_transform(range({dim}),
-                           d -> ((p * {dim} + d) * 48271) % 1021 - 510) AS pl
-  FROM range({n_planes}) t(p)
-),
-b AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN list_dot_product(qn.qv::DOUBLE[], pl::DOUBLE[]) >= 0
-                       THEN (1 << p) ELSE 0 END) AS BIGINT) AS bucket
-  FROM qn, planes GROUP BY vec_id
-)
-SELECT query_id, neighbor_id, rank, cos_q FROM (
-  SELECT a.vec_id AS query_id, bb.vec_id AS neighbor_id,
-         round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-               / sqrt(a.norm * bb.norm), 6) AS cos_q,
-         row_number() OVER (
-           PARTITION BY a.vec_id
-           ORDER BY round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-                          / sqrt(a.norm * bb.norm), 6) DESC, bb.vec_id ASC
-         ) AS rank
-  FROM qn a
-  JOIN b ba ON a.vec_id = ba.vec_id
-  JOIN qn bb ON bb.vec_id <> a.vec_id
-  JOIN b bbb ON bb.vec_id = bbb.vec_id
-  WHERE a.vec_id % {every} = 0
-    AND bit_count(xor(ba.bucket, bbb.bucket)) <= {max_hamming}
-) WHERE rank <= {k}
-"""
+    cand = _lsh_pairs("bb.vec_id <> a.vec_id", max_hamming)
+    return (f"WITH {_QUANT_CTE}, {_lsh_buckets_cte(dim, n_planes)}"
+            f"{_cos_topk(k, f'{cand} AND a.vec_id % {every} = 0')}")
 
 
 def ann_topk_quantized_sql(k: int = 10, every: int = 50) -> str:
@@ -751,20 +1172,8 @@ SELECT query_id, neighbor_id, rank, dot_q FROM (
 def _cosine_topk_select(k: int, every: int) -> str:
     """Exact round-6-cosine top-k over ``qn`` (id tie-break) — the one
     ground-truth text behind ann_cosine_topk_sql and ann_recall_eval_sql."""
-    return f"""
-SELECT query_id, neighbor_id, rank, cos FROM (
-  SELECT a.vec_id AS query_id, bb.vec_id AS neighbor_id,
-         round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-               / sqrt(a.norm * bb.norm), 6) AS cos,
-         row_number() OVER (
-           PARTITION BY a.vec_id
-           ORDER BY round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-                          / sqrt(a.norm * bb.norm), 6) DESC, bb.vec_id ASC
-         ) AS rank
-  FROM qn a JOIN qn bb ON bb.vec_id <> a.vec_id
-  WHERE a.vec_id % {every} = 0
-) WHERE rank <= {k}
-"""
+    return _cos_topk(k, "FROM qn a JOIN qn bb ON bb.vec_id <> a.vec_id "
+                        f"WHERE a.vec_id % {every} = 0", "cos")
 
 
 def ann_cosine_topk_sql(k: int = 10, every: int = 50) -> str:
@@ -779,49 +1188,13 @@ def ann_ivf_sql(
     the probed cells only."""
     return f"""
 WITH {_QUANT_CTE},
-cents AS (
-  SELECT vec_id AS cent_id, qv AS cv, norm AS cnorm FROM qn
-  WHERE vec_id % {centroid_every} = 0
-),
-scored AS (
-  SELECT qn.vec_id, cent_id,
-         round(list_dot_product(qv::DOUBLE[], cv::DOUBLE[])
-               / sqrt(norm * cnorm), 6) AS cosc
-  FROM qn, cents
-),
-assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cosc DESC, cent_id ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cosc DESC, cent_id ASC) AS rn
-    FROM scored WHERE vec_id % {every} = 0
-  ) WHERE rn <= {nprobe}
-),
+{_ivf_route_ctes(every, centroid_every, nprobe)},
 cand AS (
   SELECT qprobe.query_id, assign.vec_id AS neighbor_id
   FROM qprobe JOIN assign USING (cent_id)
   WHERE assign.vec_id <> qprobe.query_id
-)
-SELECT query_id, neighbor_id, rank, cos_q FROM (
-  SELECT c.query_id, c.neighbor_id,
-         round(list_dot_product(a.qv::DOUBLE[], b.qv::DOUBLE[])
-               / sqrt(a.norm * b.norm), 6) AS cos_q,
-         row_number() OVER (
-           PARTITION BY c.query_id
-           ORDER BY round(list_dot_product(a.qv::DOUBLE[], b.qv::DOUBLE[])
-                          / sqrt(a.norm * b.norm), 6) DESC, c.neighbor_id ASC
-         ) AS rank
-  FROM cand c
-  JOIN qn a ON a.vec_id = c.query_id
-  JOIN qn b ON b.vec_id = c.neighbor_id
-) WHERE rank <= {k}
-"""
+){_cos_topk(k, "FROM cand c JOIN qn a ON a.vec_id = c.query_id "
+               "JOIN qn bb ON bb.vec_id = c.neighbor_id")}"""
 
 
 def ann_pq_sql(k: int = 10, every: int = 50) -> str:
@@ -830,52 +1203,18 @@ def ann_pq_sql(k: int = 10, every: int = 50) -> str:
     argmin encode with smallest-code tie-break, per-subspace LUT distances
     summed. All distances are exact integers (DOUBLE list_dot_product of int
     lists is exact below 2^53), so ranks match bit-for-bit."""
-    from .operators.ann import PQ_DSUB, PQ_K, PQ_M, PQ_SAMPLE_MOD
-
-    d2 = ("list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]) "
-          "- 2 * list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) "
-          "+ list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])")
     return f"""
 WITH {_QUANT_CTE},
-cbv AS (
-  SELECT qv, vec_id FROM q WHERE vec_id % {PQ_SAMPLE_MOD} = 1
-  ORDER BY vec_id LIMIT {PQ_K}
-),
-cbk AS (SELECT qv, row_number() OVER (ORDER BY vec_id) - 1 AS k FROM cbv),
-cb AS (
-  SELECT m, k, list_slice(qv, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB}) AS cv
-  FROM cbk, range({PQ_M}) t(m)
-),
-subs AS (
-  SELECT vec_id, m, list_slice(qv, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB}) AS sub
-  FROM q, range({PQ_M}) t(m)
-),
-enc AS (
-  SELECT vec_id, m, k AS code FROM (
-    SELECT s.vec_id, s.m, cb.k,
-           row_number() OVER (
-             PARTITION BY s.vec_id, s.m
-             ORDER BY {d2.format(a='s.sub', b='cb.cv')} ASC, cb.k ASC) AS rn
-    FROM subs s JOIN cb ON s.m = cb.m
-  ) WHERE rn = 1
-),
+{_pq_encode_ctes("q", "qv")},
 qsubs AS (SELECT vec_id AS query_id, m, sub FROM subs WHERE vec_id % {every} = 0),
 pair AS (
-  SELECT qs.query_id, e.vec_id AS neighbor_id,
-         CAST(sum({d2.format(a='qs.sub', b='cb.cv')}) AS BIGINT) AS adist
+  SELECT qs.query_id, e.vec_id AS neighbor_id, {_ADC}
   FROM qsubs qs
   JOIN enc e ON e.m = qs.m
   JOIN cb ON cb.m = e.m AND cb.k = e.code
   WHERE e.vec_id <> qs.query_id
   GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, rank, adist FROM (
-  SELECT query_id, neighbor_id, adist,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS rank
-  FROM pair
-) WHERE rank <= {k}
-"""
+){_adc_topk(k)}"""
 
 
 def ann_ivfpq_sql(
@@ -885,59 +1224,10 @@ def ann_ivfpq_sql(
     (``ann_ivf_sql``'s cents/scored/assign/qprobe, verbatim semantics)
     feeding the PQ ADC scoring CTEs (``ann_pq_sql``'s codebook/encode/LUT),
     with pairs restricted to the probed cells. All-integer, bit-for-bit."""
-    from .operators.ann import PQ_DSUB, PQ_K, PQ_M, PQ_SAMPLE_MOD
-
-    d2 = ("list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]) "
-          "- 2 * list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) "
-          "+ list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])")
     return f"""
 WITH {_QUANT_CTE},
-cents AS (
-  SELECT vec_id AS cent_id, qv AS cv, norm AS cnorm FROM qn
-  WHERE vec_id % {centroid_every} = 0
-),
-scored AS (
-  SELECT qn.vec_id, cent_id,
-         round(list_dot_product(qv::DOUBLE[], cv::DOUBLE[])
-               / sqrt(norm * cnorm), 6) AS cosc
-  FROM qn, cents
-),
-assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cosc DESC, cent_id ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cosc DESC, cent_id ASC) AS rn
-    FROM scored WHERE vec_id % {every} = 0
-  ) WHERE rn <= {nprobe}
-),
-cbv AS (
-  SELECT qv, vec_id FROM q WHERE vec_id % {PQ_SAMPLE_MOD} = 1
-  ORDER BY vec_id LIMIT {PQ_K}
-),
-cbk AS (SELECT qv, row_number() OVER (ORDER BY vec_id) - 1 AS k FROM cbv),
-cb AS (
-  SELECT m, k, list_slice(qv, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB}) AS cv
-  FROM cbk, range({PQ_M}) t(m)
-),
-subs AS (
-  SELECT vec_id, m, list_slice(qv, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB}) AS sub
-  FROM q, range({PQ_M}) t(m)
-),
-enc AS (
-  SELECT vec_id, m, k AS code FROM (
-    SELECT s.vec_id, s.m, cb.k,
-           row_number() OVER (
-             PARTITION BY s.vec_id, s.m
-             ORDER BY {d2.format(a='s.sub', b='cb.cv')} ASC, cb.k ASC) AS rn
-    FROM subs s JOIN cb ON s.m = cb.m
-  ) WHERE rn = 1
-),
+{_ivf_route_ctes(every, centroid_every, nprobe)},
+{_pq_encode_ctes("q", "qv")},
 qsubs AS (SELECT vec_id AS query_id, m, sub FROM subs WHERE vec_id % {every} = 0),
 cand AS (
   SELECT qp.query_id, a.vec_id AS neighbor_id
@@ -945,21 +1235,13 @@ cand AS (
   WHERE a.vec_id <> qp.query_id
 ),
 pair AS (
-  SELECT c.query_id, c.neighbor_id,
-         CAST(sum({d2.format(a='qs.sub', b='cb.cv')}) AS BIGINT) AS adist
+  SELECT c.query_id, c.neighbor_id, {_ADC}
   FROM cand c
   JOIN qsubs qs ON qs.query_id = c.query_id
   JOIN enc e ON e.vec_id = c.neighbor_id AND e.m = qs.m
   JOIN cb ON cb.m = e.m AND cb.k = e.code
   GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, rank, adist FROM (
-  SELECT query_id, neighbor_id, adist,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS rank
-  FROM pair
-) WHERE rank <= {k}
-"""
+){_adc_topk(k)}"""
 
 
 def ann_ivfpq_residual_sql(
@@ -970,92 +1252,33 @@ def ann_ivfpq_residual_sql(
     elementwise subtraction), codebook sampled from the residuals, one ADC
     LUT per (query, probed cell) from the query's residual vs that cell's
     centroid. Bit-for-bit."""
-    from .operators.ann import PQ_DSUB, PQ_K, PQ_M, PQ_SAMPLE_MOD
-
-    d2 = ("list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]) "
-          "- 2 * list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) "
-          "+ list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])")
     return f"""
 WITH {_QUANT_CTE},
-cents AS (
-  SELECT vec_id AS cent_id, qv AS cv, norm AS cnorm FROM qn
-  WHERE vec_id % {centroid_every} = 0
-),
-scored AS (
-  SELECT qn.vec_id, cent_id,
-         round(list_dot_product(qv::DOUBLE[], cv::DOUBLE[])
-               / sqrt(norm * cnorm), 6) AS cosc
-  FROM qn, cents
-),
-assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cosc DESC, cent_id ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cosc DESC, cent_id ASC) AS rn
-    FROM scored WHERE vec_id % {every} = 0
-  ) WHERE rn <= {nprobe}
-),
+{_ivf_route_ctes(every, centroid_every, nprobe)},
 res AS (
   SELECT q.vec_id, a.cent_id,
          list_transform(list_zip(q.qv, c.cv), x -> x[1] - x[2]) AS rv
   FROM q JOIN assign a USING (vec_id) JOIN cents c USING (cent_id)
 ),
-cbv AS (
-  SELECT rv, vec_id FROM res WHERE vec_id % {PQ_SAMPLE_MOD} = 1
-  ORDER BY vec_id LIMIT {PQ_K}
-),
-cbk AS (SELECT rv, row_number() OVER (ORDER BY vec_id) - 1 AS k FROM cbv),
-cb AS (
-  SELECT m, k, list_slice(rv, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB}) AS cv
-  FROM cbk, range({PQ_M}) t(m)
-),
-subs AS (
-  SELECT vec_id, cent_id, m,
-         list_slice(rv, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB}) AS sub
-  FROM res, range({PQ_M}) t(m)
-),
-enc AS (
-  SELECT vec_id, m, k AS code FROM (
-    SELECT s.vec_id, s.m, cb.k,
-           row_number() OVER (
-             PARTITION BY s.vec_id, s.m
-             ORDER BY {d2.format(a='s.sub', b='cb.cv')} ASC, cb.k ASC) AS rn
-    FROM subs s JOIN cb ON s.m = cb.m
-  ) WHERE rn = 1
-),
+{_pq_encode_ctes("res", "rv")},
 qres AS (
   SELECT qp.query_id, qp.cent_id,
          list_transform(list_zip(q.qv, c.cv), x -> x[1] - x[2]) AS rq
   FROM qprobe qp JOIN q ON q.vec_id = qp.query_id JOIN cents c USING (cent_id)
 ),
 qsubs AS (
-  SELECT query_id, cent_id, m,
-         list_slice(rq, m * {PQ_DSUB} + 1, (m + 1) * {PQ_DSUB}) AS sub
+  SELECT query_id, cent_id, m, {_pq_sub("rq")} AS sub
   FROM qres, range({PQ_M}) t(m)
 ),
 pair AS (
-  SELECT qs.query_id, e.vec_id AS neighbor_id,
-         CAST(sum({d2.format(a='qs.sub', b='cb.cv')}) AS BIGINT) AS adist
+  SELECT qs.query_id, e.vec_id AS neighbor_id, {_ADC}
   FROM qsubs qs
   JOIN assign a ON a.cent_id = qs.cent_id
   JOIN enc e ON e.vec_id = a.vec_id AND e.m = qs.m
   JOIN cb ON cb.m = e.m AND cb.k = e.code
   WHERE e.vec_id <> qs.query_id
   GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, rank, adist FROM (
-  SELECT query_id, neighbor_id, adist,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS rank
-  FROM pair
-) WHERE rank <= {k}
-"""
+){_adc_topk(k)}"""
 
 
 def text_langid_sql() -> str:
@@ -1064,8 +1287,6 @@ def text_langid_sql() -> str:
     drift. Counting: non-overlapping occurrences — Python ``str.count`` and
     the replace-length trick agree (both greedy left-to-right). Tie-break:
     (score DESC, lang DESC); empty text overrides CJK overrides scores."""
-    from .operators.textstats import _PROFILES
-
     def cnt(g: str) -> str:
         esc = g.replace("'", "''")
         return f"(length(text) - length(replace(text, '{esc}', ''))) / {len(g)}"
@@ -1160,10 +1381,6 @@ def text_sample_sql() -> str:
     """Mirror of the deterministic stratified sample, generated from the
     SAME rate constants (operators/textstats) — thresholds computed with
     identical double->int truncation on both sides."""
-    from .operators.textstats import (
-        HOLDOUT_FRAC, SAMPLE_DEFAULT_RATE, SAMPLE_RATES, _U_MAX,
-    )
-
     def u(salt: str) -> str:
         return (f"('0x' || substr(md5('{salt}' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT")
 
@@ -1298,14 +1515,13 @@ GROUP BY 1, 2
 
 
 def events_running_sql() -> str:
-    return """
+    return f"""
 SELECT event_id, user_id,
        row_number() OVER w AS rn,
        round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
          AS running_value
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+FROM events {_TRACK}
 """
 
 
@@ -1433,8 +1649,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 
 
 def events_pivot_sql() -> str:
-    from .operators.relational import EVENT_TYPES
-
     cols = ",\n       ".join(
         f"CAST(count(*) FILTER (event_type = '{t}') AS BIGINT) AS n_{t}"
         for t in EVENT_TYPES
@@ -1468,25 +1682,9 @@ FROM events GROUP BY event_type
 def overlay_stats_sql(res: int = 7) -> str:
     """Raster-overlay pair statistics: self-join of the rasterized layer."""
     cell_area = (360.0 / (1 << res)) * (180.0 / (1 << res))
-    xs = cells.x_from_cell_sql("cell_id", res)
-    ys = cells.y_from_cell_sql("cell_id", res)
-    n = 1 << res
     return f"""
-WITH g AS (SELECT range AS cell_id FROM range({1 << (2 * res)})),
-pix AS (
-  SELECT cell_id,
-         -180.0 + 360.0 * ({xs} + 0.5) / {n} AS lon,
-         -90.0 + 180.0 * ({ys} + 0.5) / {n} AS lat
-  FROM g
-),
-{_edges_cte()},
-r AS (
-  SELECT cell_id, polygon_id FROM (
-    SELECT p.cell_id, e.polygon_id, count(*) AS c
-    FROM pix p JOIN edges e ON ({_CROSSING})
-    GROUP BY 1, 2
-  ) WHERE c % 2 = 1
-)
+WITH {_pix_cte(res)}, {_edges_cte()},
+r AS ({_pip("pix", "cell_id")})
 SELECT a.polygon_id AS polygon_a, b.polygon_id AS polygon_b,
        count(*) AS n_shared_cells,
        round(count(*) * {cell_area!r}, 6) AS overlap_deg2
@@ -1496,13 +1694,12 @@ GROUP BY 1, 2
 
 
 def events_window_funcs_sql() -> str:
-    return """
+    return f"""
 SELECT event_id, user_id,
        ntile(4) OVER w AS quartile,
        round(percent_rank() OVER w, 6) AS pct_rank,
        round(cume_dist() OVER w, 6) AS cume
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+FROM events {_TRACK}
 """
 
 
@@ -1524,18 +1721,7 @@ def graph_sdfg_sql() -> str:
     """Combined CFG+DFG: chain edges UNION def->use pairs from the
     recursive reaching-definitions closure."""
     return f"""
-WITH RECURSIVE {_graph_ctes()},
-{_BROKEN_EDGES},
-defs AS (SELECT node_id AS d, node_id % 3 AS var FROM n WHERE node_id % 4 = 1),
-r(node, var, def_node) AS (
-  SELECT be.dst, defs.var, defs.d FROM defs JOIN be ON be.src = defs.d
-  UNION
-  SELECT be.dst, r.var, r.def_node
-  FROM r JOIN be ON be.src = r.node
-  LEFT JOIN defs k ON k.d = r.node AND k.var = r.var
-  WHERE k.d IS NULL
-),
-uses AS (SELECT node_id AS node, node_id % 3 AS var FROM n WHERE node_id % 5 = 2)
+WITH RECURSIVE {_rda_ctes()}
 SELECT DISTINCT src, dst, edge_type FROM (
   SELECT src, dst, 'cfg' AS edge_type FROM be
   UNION ALL
@@ -1549,16 +1735,9 @@ def repetition_sql() -> str:
     """Word-2-gram repetition signals; integer-ppm via exact // division.
     Docs with <2 words vanish (empty generate_series), matching Spark's
     size>=2 filter."""
-    return """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-i AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM w),
-g AS (SELECT doc_id, ws[i] || ' ' || ws[i + 1] AS gram FROM i),
-c AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2)
-SELECT doc_id,
-       CAST(sum(cnt) AS BIGINT) AS n_grams,
-       CAST(max(cnt) * 1000000 // sum(cnt) AS BIGINT) AS top_gram_ppm,
-       CAST((sum(cnt) - count(*)) * 1000000 // sum(cnt) AS BIGINT) AS dup_gram_ppm
-FROM c GROUP BY 1
+    return f"""
+WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
+{_bigram_repetition("w")}
 """
 
 
@@ -1586,6 +1765,16 @@ c4 AS (SELECT doc_id,
 canon AS (SELECT doc_id, regexp_replace(u, '/+$', '', 'g') AS canonical_url FROM c4)
 """
 
+# per crawl host of ``canon``: pages, distinct canonical urls, dup share
+_HOST_DUP_CTE = f"""agg AS (
+  SELECT {_host_of("canonical_url")} AS host,
+         CAST(count(*) AS BIGINT) AS n_pages,
+         CAST(count(DISTINCT canonical_url) AS BIGINT) AS n_urls,
+         CAST((count(*) - count(DISTINCT canonical_url)) * 1000000
+              // count(*) AS BIGINT) AS dup_ppm
+  FROM canon GROUP BY 1
+)"""
+
 
 def url_canonical_dedup_sql() -> str:
     """The shared crawl fixture/canonicalizer CTEs, then the one-aggregate
@@ -1599,27 +1788,11 @@ FROM canon GROUP BY 1
 
 def domain_stats_sql() -> str:
     """Per-host page/url counts + dup ppm over the shared crawl fixture,
-    blocklist = host number % 7 == 3 (independent generate_series dim)."""
+    blocklist = host number % 7 == 3 (independent host dim)."""
     return f"""
 WITH {_CRAWL_CANON_CTES},
-hosts AS (
-  SELECT regexp_extract(canonical_url, '^https?://([^/]+)', 1) AS host,
-         canonical_url
-  FROM canon
-),
-agg AS (
-  SELECT host,
-         CAST(count(*) AS BIGINT) AS n_pages,
-         CAST(count(DISTINCT canonical_url) AS BIGINT) AS n_urls,
-         CAST((count(*) - count(DISTINCT canonical_url)) * 1000000
-              // count(*) AS BIGINT) AS dup_ppm
-  FROM hosts GROUP BY 1
-),
-bl AS (
-  SELECT printf('host%04d.example', i) AS host
-  FROM (SELECT unnest(generate_series(0, 99)) AS i)
-  WHERE i % 7 = 3
-)
+{_HOST_DUP_CTE},
+bl AS (SELECT host FROM {_host_nodes()} WHERE i % 7 = 3)
 SELECT a.host, a.n_pages, a.n_urls, a.dup_ppm,
        (bl.host IS NOT NULL) AS blocked
 FROM agg a LEFT JOIN bl ON a.host = bl.host
@@ -1691,15 +1864,7 @@ def web_ingest_sql() -> str:
 WITH {_HTML_EXTRACT_CTES},
 {_CRAWL_CANON_CTES.lstrip()},
 bw AS (SELECT doc_id, title, body, string_split(body, ' ') AS ws FROM ext),
-gi AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM bw),
-g AS (SELECT doc_id, ws[i] || ' ' || ws[i + 1] AS gram FROM gi),
-gc AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
-rep AS (
-  SELECT doc_id,
-         CAST(sum(cnt) AS BIGINT) AS n_grams,
-         CAST(max(cnt) * 1000000 // sum(cnt) AS BIGINT) AS top_gram_ppm
-  FROM gc GROUP BY 1
-),
+rep AS ({_bigram_repetition("bw")}),
 q AS (
   SELECT bw.doc_id, bw.title, length(bw.body) AS body_chars,
          rep.n_grams, rep.top_gram_ppm
@@ -1717,12 +1882,9 @@ GROUP BY 1
 """
 
 
-def warc_records_sql() -> str:
-    """Independent rebuild of the WARC chunk fixture (string_agg ordered by
-    doc_id — vs Spark's array_sort-of-structs build) and the record split
-    (string_split + generate_series index vs split+posexplode)."""
-    return """
-WITH rec AS (
+# the WARC chunk fixture: records rec(doc_id, blob_id, r) concatenated by
+# doc_id into blob(blob_id, n_records, payload)
+_WARC_BLOBS_CTE = """rec AS (
   SELECT doc_id, doc_id // 5 AS blob_id,
     'WARC/1.0' || chr(10)
     || printf('WARC-Target-URI: https://host%04d.example/doc/%d', doc_id % 100, doc_id) || chr(10)
@@ -1731,9 +1893,18 @@ WITH rec AS (
   FROM documents
 ),
 blob AS (
-  SELECT blob_id, string_agg(r, '' ORDER BY doc_id) AS payload
+  SELECT blob_id, count(*) AS n_records,
+         string_agg(r, '' ORDER BY doc_id) AS payload
   FROM rec GROUP BY 1
-),
+)"""
+
+
+def warc_records_sql() -> str:
+    """Independent rebuild of the WARC chunk fixture (string_agg ordered by
+    doc_id — vs Spark's array_sort-of-structs build) and the record split
+    (string_split + generate_series index vs split+posexplode)."""
+    return f"""
+WITH {_WARC_BLOBS_CTE},
 parts AS (
   SELECT blob_id,
          string_split(payload, 'WARC/1.0' || chr(10)) AS arr
@@ -1787,14 +1958,8 @@ def decontaminate_score_sql(
 ) -> str:
     """Fractional contamination ppm: distinct word n-gram hit share vs the
     benchmark slice, integer // arithmetic."""
-    parts = " || ' ' || ".join(f"w[i+{k}]" for k in range(1, n + 1))
     return f"""
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, {parts} AS shingle
-  FROM toks, unnest(range(len(w) - {n - 1})) AS t(i)
-  WHERE len(w) >= {n}
-),
+WITH {_TOKS}, {_shingles_cte(n)},
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {bench_mod} = {bench_rem}),
 train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % {bench_mod} <> {bench_rem}),
 tot AS (SELECT doc_id, count(*) AS n_shingles FROM train GROUP BY 1),
@@ -1839,18 +2004,7 @@ def graph_sdfg_interproc_sql() -> str:
     (returned var x call-site-defined var) from the same deterministic
     call/param/return fixture relations."""
     return f"""
-WITH RECURSIVE {_graph_ctes()},
-{_BROKEN_EDGES},
-defs AS (SELECT node_id AS d, node_id % 3 AS var FROM n WHERE node_id % 4 = 1),
-r(node, var, def_node) AS (
-  SELECT be.dst, defs.var, defs.d FROM defs JOIN be ON be.src = defs.d
-  UNION
-  SELECT be.dst, r.var, r.def_node
-  FROM r JOIN be ON be.src = r.node
-  LEFT JOIN defs k ON k.d = r.node AND k.var = r.var
-  WHERE k.d IS NULL
-),
-uses AS (SELECT node_id AS node, node_id % 3 AS var FROM n WHERE node_id % 5 = 2),
+WITH RECURSIVE {_rda_ctes()},
 calls AS (
   SELECT graph_id, node_id AS call_node, node_id % 4 AS fn_id
   FROM n WHERE node_id % 7 = 3
@@ -1917,16 +2071,11 @@ def template_resolve_sql(n_gaz: int = layers.N_GAZ) -> str:
     """Mirror of the specialization-priority resolution: candidates from all
     four tiers UNION ALL'd, winner = row_number 1 over (tier, template_id) —
     the same ordering as the engine's priority window."""
-    gi = layers.MENTION_IDX_SQL.format(j="j")
     return f"""
-WITH ment AS (
-  SELECT doc_id, unnest(generate_series(0, doc_id % 3)) AS j FROM documents
-),
+WITH {_mentions_cte()},
 m2 AS (
-  SELECT printf('https://host%04d.example/doc/%d', (doc_id % 100)::int, doc_id) AS url,
-         j::int AS entity_id,
-         printf('GEO_%05d', {gi}) AS surface,
-         CASE ({gi}) % 3 WHEN 0 THEN 'city' WHEN 1 THEN 'poi' ELSE 'region' END AS kind
+  SELECT url, entity_id, surface,
+         CASE gi % 3 WHEN 0 THEN 'city' WHEN 1 THEN 'poi' ELSE 'region' END AS kind
   FROM ment
 ),
 cand AS (
@@ -2027,39 +2176,11 @@ def dedup_groups_embedding_sql(
     """Components over the deterministic embedding-LSH pair graph (the same
     quadratic candidate mirror as ``dedup_embedding_lsh_sql``, then the same
     recursive-CTE min-label components as ``dedup_groups_sql``)."""
+    cand = _lsh_pairs("a.vec_id < bb.vec_id", max_hamming)
     return f"""
-WITH RECURSIVE {_QUANT_CTE},
-planes AS (
-  SELECT p, list_transform(range({dim}),
-                           d -> ((p * {dim} + d) * 48271) % 1021 - 510) AS pl
-  FROM range({n_planes}) t(p)
-),
-bk AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN list_dot_product(qn.qv::DOUBLE[], pl::DOUBLE[]) >= 0
-                       THEN (1 << p) ELSE 0 END) AS BIGINT) AS bucket
-  FROM qn, planes GROUP BY vec_id
-),
-pairs AS (
-  SELECT vec_id_a, vec_id_b FROM (
-    SELECT a.vec_id AS vec_id_a, bb.vec_id AS vec_id_b,
-           round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-                 / sqrt(a.norm * bb.norm), 6) AS cos_q
-    FROM qn a JOIN bk ba ON a.vec_id = ba.vec_id
-    JOIN qn bb ON a.vec_id < bb.vec_id
-    JOIN bk bbb ON bb.vec_id = bbb.vec_id
-    WHERE bit_count(xor(ba.bucket, bbb.bucket)) <= {max_hamming}
-  ) WHERE cos_q >= {threshold}
-),
-u AS (SELECT vec_id_a AS ua, vec_id_b AS ub FROM pairs
-      UNION SELECT vec_id_b, vec_id_a FROM pairs),
-nn AS (SELECT DISTINCT ua AS node FROM u),
-r(node, comp) AS (
-  SELECT node, node FROM nn
-  UNION
-  SELECT u.ub, r.comp FROM r JOIN u ON u.ua = r.node
-),
-comp AS (SELECT node, min(comp) AS component FROM r GROUP BY 1)
+WITH RECURSIVE {_QUANT_CTE}, {_lsh_buckets_cte(dim, n_planes)},
+pairs AS ({_near_dups(cand, threshold)}),
+{_components_cte("pairs", "vec_id_a", "vec_id_b")}
 SELECT e.vec_id, coalesce(c.component, e.vec_id) AS group_id
 FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.node
 """
@@ -2067,14 +2188,8 @@ FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.node
 
 def decontaminate_sql(n: int = 4, bench_mod: int = 50, bench_rem: int = 7) -> str:
     """n-gram overlap between train docs and the benchmark slice."""
-    parts = " || ' ' || ".join(f"w[i+{k}]" for k in range(1, n + 1))
     return f"""
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, {parts} AS shingle
-  FROM toks, unnest(range(len(w) - {n - 1})) AS t(i)
-  WHERE len(w) >= {n}
-),
+WITH {_TOKS}, {_shingles_cte(n)},
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {bench_mod} = {bench_rem}),
 hits AS (
   SELECT doc_id, count(*) AS n_hits FROM sh
@@ -2093,24 +2208,13 @@ def pack_sequences_sql(budget: int = 512) -> str:
     """Global prefix-sum packing mirror (DuckDB runs the single-node window
     the engine deliberately avoids)."""
     return f"""
-WITH t AS (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens FROM documents),
-c AS (
-  SELECT doc_id, n_tokens,
-         coalesce(sum(n_tokens) OVER (
-           ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-  FROM t
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(cb // {budget} AS BIGINT) AS bin_id,
-       CAST(cb % {budget} AS BIGINT) AS offset_in_bin
-FROM c
+WITH t AS (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens FROM documents)
+{_pack_sql("t", budget)}
 """
 
 
 def pii_scrub_sql() -> str:
     """Same injection, same RE2-compatible patterns, same replacement order."""
-    from .operators.curation import EMAIL_RE, LONG_DIGITS_RE
-
     return f"""
 WITH inj AS (
   SELECT doc_id,
@@ -2124,8 +2228,7 @@ WITH inj AS (
 SELECT doc_id,
        CAST(len(regexp_extract_all(text, '{EMAIL_RE}')) AS BIGINT) AS n_emails,
        CAST(len(regexp_extract_all(text, '{LONG_DIGITS_RE}')) AS BIGINT) AS n_long_digits,
-       md5(regexp_replace(regexp_replace(text, '{EMAIL_RE}', '<EMAIL>', 'g'),
-                          '{LONG_DIGITS_RE}', '<NUM>', 'g')) AS clean_hash
+       {_SCRUB_HASH} AS clean_hash
 FROM inj
 """
 
@@ -2250,69 +2353,31 @@ def train_set_sql(
     bench_mod: int = 50, bench_rem: int = 7, budget: int = 512,
 ) -> str:
     """Composed mirror of the stage-7 train-set pipeline: the
-    ``dedup_groups_sql`` component CTEs -> representatives -> 4-gram
+    ``dedup_groups_sql`` groups -> representatives -> 4-gram
     decontamination (benchmark docs dropped) -> global prefix-sum packing
     -> PII-scrub hash."""
-    from .operators.curation import EMAIL_RE, LONG_DIGITS_RE
-
-    g4 = " || ' ' || ".join(f"w[i+{k}]" for k in range(1, n_decon + 1))
+    scrub = f",\n       {_SCRUB_HASH} AS clean_hash"
     return f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-pairs0 AS (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
+WITH RECURSIVE {_jaccard_groups_cte(threshold)},
+surv AS (
+  SELECT d.doc_id, d.text FROM documents d JOIN grp USING (doc_id)
+  WHERE grp.group_id = d.doc_id
 ),
-pairs AS (
-  SELECT doc_id_a, doc_id_b FROM pairs0
-  JOIN cnt ca ON doc_id_a = ca.doc_id
-  JOIN cnt cb ON doc_id_b = cb.doc_id
-  WHERE round(inter * 1.0 / (ca.n + cb.n - inter), 6) >= {threshold}
-),
-u AS (SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-nn AS (SELECT DISTINCT a AS node FROM u),
-r(node, comp) AS (
-  SELECT node, node FROM nn
-  UNION
-  SELECT u.b, r.comp FROM r JOIN u ON u.a = r.node
-),
-comp AS (SELECT node, min(comp) AS component FROM r GROUP BY 1),
-reps AS (
-  SELECT d.doc_id FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-  WHERE coalesce(c.component, d.doc_id) = d.doc_id
-),
-surv AS (SELECT d.doc_id, d.text FROM documents d JOIN reps USING (doc_id)),
 toks4 AS (SELECT doc_id, string_split(text, ' ') AS w FROM surv),
-sh4 AS (
-  SELECT DISTINCT doc_id, {g4} AS shingle4
-  FROM toks4, unnest(range(len(w) - {n_decon - 1})) t(i)
-  WHERE len(w) >= {n_decon}
-),
-bench4 AS (SELECT DISTINCT shingle4 FROM sh4 WHERE doc_id % {bench_mod} = {bench_rem}),
+{_shingles_cte(n_decon, "toks4", "sh4")},
+bench4 AS (SELECT DISTINCT shingle FROM sh4 WHERE doc_id % {bench_mod} = {bench_rem}),
 contaminated AS (
   SELECT DISTINCT doc_id FROM sh4
   WHERE doc_id % {bench_mod} <> {bench_rem}
-    AND shingle4 IN (SELECT shingle4 FROM bench4)
+    AND shingle IN (SELECT shingle FROM bench4)
 ),
 clean AS (
   SELECT doc_id, text FROM surv
   WHERE doc_id % {bench_mod} <> {bench_rem}
     AND doc_id NOT IN (SELECT doc_id FROM contaminated)
 ),
-t AS (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens, text FROM clean),
-c2 AS (
-  SELECT doc_id, n_tokens, text,
-         coalesce(sum(n_tokens) OVER (
-           ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-  FROM t
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(cb // {budget} AS BIGINT) AS bin_id,
-       CAST(cb % {budget} AS BIGINT) AS offset_in_bin,
-       md5(regexp_replace(regexp_replace(text, '{EMAIL_RE}', '<EMAIL>', 'g'),
-                          '{LONG_DIGITS_RE}', '<NUM>', 'g')) AS clean_hash
-FROM c2
+t AS (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens, text FROM clean)
+{_pack_sql("t", budget, scrub)}
 """
 
 
@@ -2341,17 +2406,14 @@ def robots_filter_sql() -> str:
     return f"""
 WITH {_CRAWL_CANON_CTES},
 parts AS (
-  SELECT doc_id, canonical_url,
-         regexp_extract(canonical_url, '^https?://([^/]+)', 1) AS host,
+  SELECT doc_id, canonical_url, {_host_of("canonical_url")} AS host,
          regexp_replace(canonical_url, '^https?://[^/]+', '', 'g') AS path
   FROM canon
 ),
 rules AS (
-  SELECT printf('host%04d.example', i) AS host, '/doc/1' AS path_prefix
-  FROM (SELECT unnest(generate_series(0, 99)) AS i) WHERE i % 5 = 2
+  SELECT host, '/doc/1' AS path_prefix FROM {_host_nodes()} WHERE i % 5 = 2
   UNION ALL
-  SELECT printf('host%04d.example', i), '/doc/2'
-  FROM (SELECT unnest(generate_series(0, 99)) AS i) WHERE i % 3 = 0
+  SELECT host, '/doc/2' FROM {_host_nodes()} WHERE i % 3 = 0
 )
 SELECT p.doc_id, p.canonical_url, p.host, p.path
 FROM parts p
@@ -2374,99 +2436,23 @@ def dedup_containment_sql(threshold_ppm: int = 500_000) -> str:
     """Exact containment pairs: |A∩B| * 1e6 // min(|A|,|B|) over the same
     shared-shingle pair space as the Jaccard oracle."""
     return f"""
-WITH {_SHINGLES_CTE},
-pairs AS (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+WITH {_OVERLAP_CTE}
 SELECT doc_id_a, doc_id_b,
-       CAST(inter * 1000000 // least(ca.n, cb.n) AS BIGINT) AS containment_ppm
-FROM pairs
-JOIN cnt ca ON doc_id_a = ca.doc_id
-JOIN cnt cb ON doc_id_b = cb.doc_id
-WHERE inter * 1000000 // least(ca.n, cb.n) >= {threshold_ppm}
+       CAST(inter * 1000000 // least(na, nb) AS BIGINT) AS containment_ppm
+FROM ovn WHERE inter * 1000000 // least(na, nb) >= {threshold_ppm}
 """
 
 
 def domain_rank_sql(iterations: int = 10) -> str:
-    """The 10 power iterations UNROLLED as CTE layers — same integer
-    truncation semantics as linkgraph.pagerank_integer (sum of
-    rank//out_deg per dst, then 150000 + 85*inbound//100), so every
-    iteration is bit-exact across engines."""
-    head = """
-WITH edges AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100),
-         printf('host%04d.example', (doc_id * 13 + 2) % 100)
-  FROM documents
-),
-nodes AS (SELECT printf('host%04d.example', i) AS host
-          FROM (SELECT unnest(generate_series(0, 99)) AS i)),
-deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY 1),
-ed AS (SELECT e.src, e.dst, d.out_deg FROM edges e JOIN deg d USING (src)),
-r0 AS (SELECT host AS node, CAST(1000000 AS BIGINT) AS rank_micro FROM nodes)"""
-    layers = []
-    for k in range(1, iterations + 1):
-        layers.append(f"""
-c{k} AS (
-  SELECT ed.dst AS node, sum(r.rank_micro // ed.out_deg) AS inbound
-  FROM ed JOIN r{k - 1} r ON ed.src = r.node GROUP BY 1
-),
-r{k} AS (
-  SELECT n.host AS node,
-         CAST(150000 + 85 * coalesce(c.inbound, 0) // 100 AS BIGINT)
-           AS rank_micro
-  FROM nodes n LEFT JOIN c{k} c ON n.host = c.node
-)""")
-    return (
-        head + "," + ",".join(layers)
-        + f"\nSELECT node AS host, rank_micro FROM r{iterations}\n"
-    )
+    """PageRank: the teleport-rank iterations with every host a seed."""
+    return _teleport_rank_sql(iterations, "1")
 
 
 def webtext_trustrank_sql(iterations: int = 10) -> str:
-    """Mirror of linkgraph.trustrank_integer: domain_rank_sql's unrolled
-    power iterations with the teleport term gated on the seed set (every
-    10th host, the crawl-seed fixture) — rank_0 = 1e6 for seeds / 0
-    elsewhere, then (seed ? 150000 : 0) + 85*inbound//100 per layer."""
-    head = """
-WITH edges AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100),
-         printf('host%04d.example', (doc_id * 13 + 2) % 100)
-  FROM documents
-),
-nodes AS (SELECT printf('host%04d.example', i) AS host,
-                 CASE WHEN i % 10 = 0 THEN 1 ELSE 0 END AS is_seed
-          FROM (SELECT unnest(generate_series(0, 99)) AS i)),
-deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY 1),
-ed AS (SELECT e.src, e.dst, d.out_deg FROM edges e JOIN deg d USING (src)),
-r0 AS (SELECT host AS node, CAST(is_seed * 1000000 AS BIGINT) AS rank_micro
-       FROM nodes)"""
-    layers = []
-    for k in range(1, iterations + 1):
-        layers.append(f"""
-c{k} AS (
-  SELECT ed.dst AS node, sum(r.rank_micro // ed.out_deg) AS inbound
-  FROM ed JOIN r{k - 1} r ON ed.src = r.node GROUP BY 1
-),
-r{k} AS (
-  SELECT n.host AS node,
-         CAST(n.is_seed * 150000 + 85 * coalesce(c.inbound, 0) // 100
-              AS BIGINT) AS rank_micro
-  FROM nodes n LEFT JOIN c{k} c ON n.host = c.node
-)""")
-    return (
-        head + "," + ",".join(layers)
-        + f"\nSELECT node AS host, rank_micro FROM r{iterations}\n"
-    )
+    """Mirror of linkgraph.trustrank_integer: the teleport-rank iterations
+    with the teleport term gated on the seed set (every 10th host, the
+    crawl-seed fixture)."""
+    return _teleport_rank_sql(iterations, "CASE WHEN i % 10 = 0 THEN 1 ELSE 0 END")
 
 
 def bpe_train_sql(merges: int = 8) -> str:
@@ -2474,46 +2460,11 @@ def bpe_train_sql(merges: int = 8) -> str:
     per round a weighted adjacent-pair count, a (count desc, pair asc)
     argmax, and the bracket-delimited replace — the same greedy disjoint
     merge semantics as operators/bpe.py (see its encoding note)."""
-    head = """
-WITH wc AS (
-  SELECT tok, count(*) AS n
-  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-  GROUP BY 1
-),
-v0 AS (
-  SELECT chr(1) || array_to_string(
-           string_split(replace(replace(tok, chr(1), ''), chr(2), ''), ''),
-           chr(2) || chr(1)) || chr(2) AS seq, n
-  FROM wc
-)"""
-    layers = []
-    finals = []
-    for k in range(1, merges + 1):
-        layers.append(f"""
-p{k} AS (
-  SELECT s[i] AS sym_a, s[i + 1] AS sym_b, CAST(sum(n) AS BIGINT) AS pair_count
-  FROM (SELECT string_split(substring(seq, 2, length(seq) - 2),
-                            chr(2) || chr(1)) AS s, n
-        FROM v{k - 1}),
-       unnest(generate_series(1, len(s) - 1)) AS t(i)
-  WHERE len(s) >= 2
-  GROUP BY 1, 2
-),
-b{k} AS (
-  SELECT sym_a, sym_b, pair_count FROM p{k}
-  ORDER BY pair_count DESC, sym_a, sym_b LIMIT 1
-),
-v{k} AS (
-  SELECT replace(v.seq,
-                 chr(1) || b.sym_a || chr(2) || chr(1) || b.sym_b || chr(2),
-                 chr(1) || b.sym_a || b.sym_b || chr(2)) AS seq, v.n
-  FROM v{k - 1} v CROSS JOIN b{k} b
-)""")
-        finals.append(
-            f"SELECT CAST({k} AS INT) AS merge_rank, sym_a, sym_b,"
-            f" pair_count FROM b{k}"
-        )
-    return head + "," + ",".join(layers) + "\n" + "\nUNION ALL\n".join(finals)
+    finals = "\nUNION ALL\n".join(
+        f"SELECT CAST({k} AS INT) AS merge_rank, sym_a, sym_b, pair_count FROM b{k}"
+        for k in range(1, merges + 1)
+    )
+    return _rounds(_BPE_WORDS, merges, _bpe_round, finals)
 
 
 # the linked-page fixture + the outlink extraction (element pull,
@@ -2577,10 +2528,10 @@ def host_graph_sql() -> str:
     return f"""
 WITH {_OUTLINKS_CTES}
 SELECT src_host,
-       regexp_extract(dst_url, '^https?://([^/]+)', 1) AS dst_host,
+       {_host_of("dst_url")} AS dst_host,
        CAST(count(*) AS BIGINT) AS n_links
 FROM links
-WHERE src_host != regexp_extract(dst_url, '^https?://([^/]+)', 1)
+WHERE src_host != {_host_of("dst_url")}
 GROUP BY 1, 2
 """
 
@@ -2669,22 +2620,11 @@ def hits_sql(iterations: int = 5) -> str:
     hangs at k=5 (the same double-consumption that forces the engine's
     per-iteration localCheckpoint). Materialization keeps both engines
     linear in k."""
-    head = """
-WITH edges AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100),
-         printf('host%04d.example', (doc_id * 13 + 2) % 100)
-  FROM documents
-),
-nodes AS (SELECT printf('host%04d.example', i) AS host
-          FROM (SELECT unnest(generate_series(0, 99)) AS i)),
+    head = f"""
+WITH {_host_edges_cte("edges")},
+nodes AS (SELECT host FROM {_host_nodes()}),
 h0 AS (SELECT host AS node, CAST(1000000 AS BIGINT) AS hub FROM nodes)"""
-    layers = []
-    for k in range(1, iterations + 1):
-        layers.append(f"""
+    return _rounds(head, iterations, lambda k: f"""
 ar{k} AS MATERIALIZED (
   SELECT e.dst AS node, sum(h.hub) AS raw
   FROM edges e JOIN h{k - 1} h ON e.src = h.node GROUP BY 1
@@ -2704,20 +2644,15 @@ h{k} AS MATERIALIZED (
   SELECT n.host AS node,
          CAST(coalesce(r.raw, 0) * 1000000 // m.mx AS BIGINT) AS hub
   FROM nodes n LEFT JOIN hr{k} r ON n.host = r.node CROSS JOIN hm{k} m
-)""")
-    return (
-        head + "," + ",".join(layers)
-        + f"""
-SELECT h.node AS host, h.hub AS hub_micro, a.auth AS auth_micro
+)""", f"""SELECT h.node AS host, h.hub AS hub_micro, a.auth AS auth_micro
 FROM h{iterations} h JOIN a{iterations} a ON h.node = a.node
-"""
-    )
+""")
 
 
 def snapshot_diff_sql() -> str:
     """Independent rebuild of both crawl snapshots + the full-outer
     classification + the host rollup."""
-    return """
+    return f"""
 WITH u AS (
   SELECT doc_id,
     printf('https://host%04d.example/page/%d', (doc_id // 3) % 100, doc_id)
@@ -2740,7 +2675,7 @@ d AS (
          ELSE 'changed' END AS status
   FROM olds FULL OUTER JOIN news ON olds.url = news.url
 )
-SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host, status,
+SELECT {_host_of("url")} AS host, status,
        CAST(count(*) AS BIGINT) AS n_urls
 FROM d GROUP BY 1, 2
 """
@@ -2749,13 +2684,8 @@ FROM d GROUP BY 1, 2
 def dup_ngrams_sql() -> str:
     """Positional (multiplicity-preserving) 3-gram counts, shingle
     document frequency, per-doc duplicated share in integer ppm."""
-    return """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-ps AS (
-  SELECT doc_id, w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3] AS shingle
-  FROM toks, unnest(range(len(w) - 2)) AS t(i)
-  WHERE len(w) >= 3
-),
+    return f"""
+WITH {_TOKS}, {_POS_SHINGLES_CTE},
 pd AS (SELECT doc_id, shingle, count(*) AS cnt FROM ps GROUP BY 1, 2),
 dfq AS (SELECT shingle, count(*) AS df FROM pd GROUP BY 1)
 SELECT doc_id,
@@ -2772,21 +2702,12 @@ def dup_span_scrub_sql() -> str:
     """Mirror of dedup.dup_span_scrub: duplicated-shingle dim (df >= 2),
     start-position flags, n-window coverage via the same ROWS BETWEEN
     2 PRECEDING frame, ordered reassembly of surviving tokens."""
-    return """
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-ps AS (
-  SELECT doc_id, i AS spos,
-         w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3] AS shingle
-  FROM d, unnest(range(len(w) - 2)) AS t(i)
-  WHERE len(w) >= 3
-),
+    return f"""
+WITH {_TOKS}, {_POS_SHINGLES_CTE},
 pd AS (SELECT doc_id, shingle FROM ps GROUP BY 1, 2),
 dupsh AS (SELECT shingle FROM pd GROUP BY 1 HAVING count(*) >= 2),
 ds AS (SELECT DISTINCT ps.doc_id, ps.spos FROM ps JOIN dupsh USING (shingle)),
-tok AS (
-  SELECT doc_id, i AS pos, w[i + 1] AS tok
-  FROM d, unnest(range(len(w))) AS t(i)
-),
+{_TOKEN_POS_CTE},
 flg AS (
   SELECT tok.doc_id, tok.pos, tok.tok,
          CASE WHEN ds.spos IS NULL THEN 0 ELSE 1 END AS flag
@@ -2815,11 +2736,7 @@ def cdc_chunk_stats_sql(w: int = 3, mod: int = 16) -> str:
         [f"lag(tok, {w - 1 - j}) OVER w1" for j in range(w - 1)] + ["tok"]
     )
     return f"""
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-tok AS (
-  SELECT doc_id, i AS pos, w[i + 1] AS tok
-  FROM d, unnest(range(len(w))) AS t(i)
-),
+WITH {_TOKS}, {_TOKEN_POS_CTE},
 flg AS (
   SELECT doc_id, pos, tok,
     CASE WHEN pos >= {w - 1} AND
@@ -2861,12 +2778,7 @@ def countmin_calibration_sql(
                 f" 1, 7))::BIGINT % {w}")
 
     return f"""
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-ps AS (
-  SELECT doc_id, w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3] AS shingle
-  FROM toks, unnest(range(len(w) - 2)) AS t(i)
-  WHERE len(w) >= 3
-),
+WITH {_TOKS}, {_POS_SHINGLES_CTE},
 cnts AS (SELECT shingle, count(*) AS exact_cnt FROM ps GROUP BY 1),
 iv AS (SELECT unnest(range({d})) AS i),
 grid AS (
@@ -2967,13 +2879,13 @@ WITH fr AS (
   FROM documents
 ),
 w AS (
-  SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
+  SELECT {_host_of("url")} AS host,
          url, priority,
          max(coalesce(delay_ms, {base_delay_ms})) OVER (
-           PARTITION BY regexp_extract(url, '^https?://([^/]+)', 1)
+           PARTITION BY {_host_of("url")}
          ) AS delay,
          row_number() OVER (
-           PARTITION BY regexp_extract(url, '^https?://([^/]+)', 1)
+           PARTITION BY {_host_of("url")}
            ORDER BY priority DESC, url) AS rnk
   FROM fr
 )
@@ -3032,7 +2944,7 @@ WITH pg AS (
   FROM documents
 ),
 sent AS (
-  SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host, url,
+  SELECT {_host_of("url")} AS host, url,
          unnest(string_split_regex(text, '\\. ')) AS s
   FROM pg
 ),
@@ -3042,7 +2954,7 @@ per AS (
   FROM sent WHERE s != '' GROUP BY 1, 2
 ),
 hp AS (
-  SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
+  SELECT {_host_of("url")} AS host,
          count(DISTINCT url) AS n_pages
   FROM pg GROUP BY 1
 ),
@@ -3164,21 +3076,8 @@ def wet_export_sql() -> str:
     (string_agg ordered by doc_id) and digests it — never splits or
     re-exports, so a matching md5 proves warc_split -> wet_export is
     byte-lossless."""
-    return """
-WITH rec AS (
-  SELECT doc_id, doc_id // 5 AS blob_id,
-    'WARC/1.0' || chr(10)
-    || printf('WARC-Target-URI: https://host%04d.example/doc/%d',
-              doc_id % 100, doc_id) || chr(10)
-    || printf('Content-Length: %d', length(text)) || chr(10) || chr(10)
-    || text || chr(10) || chr(10) AS r
-  FROM documents
-),
-blob AS (
-  SELECT blob_id, count(*) AS n_records,
-         string_agg(r, '' ORDER BY doc_id) AS payload
-  FROM rec GROUP BY 1
-)
+    return f"""
+WITH {_WARC_BLOBS_CTE}
 SELECT blob_id, CAST(n_records AS BIGINT) AS n_records,
        CAST(length(payload) AS BIGINT) AS payload_chars,
        md5(payload) AS payload_md5
@@ -3239,23 +3138,16 @@ FROM links GROUP BY 1
 def site_clusters_sql() -> str:
     """Undirected components of the deterministic host permutation graph
     (h -> (7h+4) mod 96) via recursive-CTE closure + size rollup."""
-    return """
+    return f"""
 WITH RECURSIVE e AS (
   SELECT DISTINCT ((doc_id // 3) % 100) AS src,
          (((doc_id // 3) % 100) * 7 + 4) % 96 AS dst
   FROM documents WHERE ((doc_id // 3) % 100) < 96
 ),
-u AS (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e),
-nn AS (SELECT DISTINCT a AS node FROM u),
-r(node, comp) AS (
-  SELECT node, node FROM nn
-  UNION
-  SELECT u.b, r.comp FROM r JOIN u ON u.a = r.node
-),
-cc AS (SELECT node, min(comp) AS component FROM r GROUP BY 1)
+{_components_cte("e", "src", "dst")}
 SELECT CAST(component AS BIGINT) AS component,
        CAST(count(*) AS BIGINT) AS n_hosts
-FROM cc GROUP BY 1
+FROM comp GROUP BY 1
 """
 
 
@@ -3323,7 +3215,7 @@ def token_budget_sql(budget: int = 1_000_000) -> str:
     integer quotas, sum(alloc) == budget by construction."""
     return f"""
 WITH w AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS host,
+  SELECT {_DOC_HOST} AS host,
          sum(len(string_split(text, ' '))) AS n_tokens
   FROM documents GROUP BY 1
 ),
@@ -3355,7 +3247,7 @@ def domain_lang_sql() -> str:
     return f"""
 WITH lid AS ({text_langid_sql()}),
 per AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS host,
+  SELECT {_DOC_HOST} AS host,
          pred_lang, count(*) AS cnt
   FROM lid GROUP BY 1, 2
 ),
@@ -3470,24 +3362,14 @@ def domain_reputation_sql() -> str:
 WITH pr AS ({domain_rank_sql()}),
 hh AS ({hits_sql()}),
 {_CRAWL_CANON_CTES.lstrip()},
-hosts2 AS (
-  SELECT regexp_extract(canonical_url, '^https?://([^/]+)', 1) AS host,
-         canonical_url
-  FROM canon
-),
-dup AS (
-  SELECT host,
-         CAST((count(*) - count(DISTINCT canonical_url)) * 1000000
-              // count(*) AS BIGINT) AS dup_ppm
-  FROM hosts2 GROUP BY 1
-)
+{_HOST_DUP_CTE}
 SELECT pr.host, pr.rank_micro, hh.auth_micro, hh.hub_micro,
        CAST(coalesce(dup.dup_ppm, 0) AS BIGINT) AS dup_ppm,
        CAST((5 * pr.rank_micro + 3 * hh.auth_micro + 2 * hh.hub_micro)
             // 10 - coalesce(dup.dup_ppm, 0) // 10 AS BIGINT)
          AS reputation_micro
 FROM pr JOIN hh ON pr.host = hh.host
-LEFT JOIN dup ON pr.host = dup.host
+LEFT JOIN agg dup ON pr.host = dup.host
 """
 
 
@@ -3503,13 +3385,7 @@ def geo_regions_sql() -> str:
     )
     return f"""
 WITH {host_pts}, {_edges_cte()}, {_admin_cte()},
-hits AS (
-  SELECT doc_id, polygon_id FROM (
-    SELECT p.doc_id, e.polygon_id, count(*) AS c
-    FROM pts p JOIN edges e ON ({_CROSSING})
-    GROUP BY 1, 2
-  ) WHERE c % 2 = 1
-),
+hits AS ({_pip("pts", "doc_id")}),
 pg AS (
   SELECT (doc_id // 3) % 100 AS h, count(*) AS n_pages
   FROM documents GROUP BY 1
@@ -3536,11 +3412,7 @@ def _kmeans_cte(k: int = 8, iters: int = 2, dim: int = 64) -> tuple[str, str]:
     toward-zero division), empty clusters keeping the previous centroid.
     Returns (cte_body, final_assignment_name)."""
     parts = [
-        """q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-  FROM embeddings
-)""",
+        _QUANT_CTE.strip(),
         f"""c0 AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, qv AS cv
   FROM (SELECT vec_id, qv FROM q ORDER BY vec_id LIMIT {k})
@@ -3549,9 +3421,7 @@ def _kmeans_cte(k: int = 8, iters: int = 2, dim: int = 64) -> tuple[str, str]:
     for i in range(iters + 1):
         parts.append(f"""a{i} AS (
   SELECT vec_id,
-         min(CAST(list_dot_product(qv::DOUBLE[], qv::DOUBLE[])
-             - 2 * list_dot_product(qv::DOUBLE[], cv::DOUBLE[])
-             + list_dot_product(cv::DOUBLE[], cv::DOUBLE[]) AS BIGINT) * 100 + cluster) AS m
+         min(CAST({_D2.format(a="qv", b="cv")} AS BIGINT) * 100 + cluster) AS m
   FROM q CROSS JOIN c{i}
   GROUP BY vec_id
 )""")
@@ -3586,19 +3456,9 @@ def dedup_semantic_sql(k: int = 8, iters: int = 2, threshold: float = 0.4) -> st
     return f"""
 WITH {cte},
 asg AS (SELECT vec_id, CAST(m % 100 AS BIGINT) AS cluster FROM {final}),
-qna AS (
-  SELECT q.vec_id, q.qv,
-         list_dot_product(q.qv::DOUBLE[], q.qv::DOUBLE[]) AS norm,
-         asg.cluster
-  FROM q JOIN asg USING (vec_id)
-)
-SELECT vec_id_a, vec_id_b, cluster, cos_q FROM (
-  SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b, a.cluster AS cluster,
-         round(list_dot_product(a.qv::DOUBLE[], b.qv::DOUBLE[])
-               / sqrt(a.norm * b.norm), 6) AS cos_q
-  FROM qna a JOIN qna b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-) WHERE cos_q >= {threshold}
-"""
+qna AS (SELECT qn.*, asg.cluster FROM qn JOIN asg USING (vec_id))
+{_near_dups("FROM qna a JOIN qna bb ON a.cluster = bb.cluster AND a.vec_id < bb.vec_id",
+            threshold, ", a.cluster AS cluster")}"""
 
 
 def text_dsir_weights_sql(target_lang: str = "en", buckets: int = 1024) -> str:
@@ -3662,15 +3522,11 @@ WHERE least(ax1, bx1) > greatest(ax0, bx0)
 
 def events_trajectory_sql() -> str:
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 st AS (
   SELECT user_id,
          abs(ex - lag(ex) OVER w) + abs(ey - lag(ey) OVER w) AS step
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM ev {_TRACK}
 )
 SELECT user_id, count(*) AS n_points,
        CAST(coalesce(sum(step), 0) AS BIGINT) AS path_len,
@@ -3711,24 +3567,14 @@ def webtext_communities_sql(iterations: int = 3) -> str:
     """Synchronous LPA unrolled: same md5-28-bit init labels, same packed
     modal argmax (cnt * 2^29 + (2^28-1 - label), max), same
     isolated-node coalesce as linkgraph.label_propagation."""
-    head = """
-WITH e AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-  FROM documents
-),
+    head = f"""
+WITH {_host_edges_cte("e")},
 und AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-nodes AS (SELECT printf('host%04d.example', i) AS host FROM range(100) t(i)),
 l0 AS (
-  SELECT host, ('0x' || substr(md5(host), 1, 7))::BIGINT AS lbl FROM nodes
+  SELECT host, ('0x' || substr(md5(host), 1, 7))::BIGINT AS lbl
+  FROM {_host_nodes()}
 )"""
-    layers = []
-    for k in range(1, iterations + 1):
-        layers.append(f"""
+    return _rounds(head, iterations, lambda k: f"""
 c{k} AS (
   SELECT u.dst AS host, l.lbl AS lbl, count(*) AS cnt
   FROM und u JOIN l{k - 1} l ON u.src = l.host
@@ -3742,9 +3588,7 @@ m{k} AS (
 l{k} AS (
   SELECT p.host, coalesce(m.lbl, p.lbl) AS lbl
   FROM l{k - 1} p LEFT JOIN m{k} m USING (host)
-)""")
-        final = f"SELECT host, CAST(lbl AS BIGINT) AS community FROM l{iterations}"
-    return head + "," + ",".join(layers) + "\n" + final
+)""", f"SELECT host, CAST(lbl AS BIGINT) AS community FROM l{iterations}")
 
 
 def webtext_kcore_sql(k: int = 3, rounds: int = 4) -> str:
@@ -3752,15 +3596,7 @@ def webtext_kcore_sql(k: int = 3, rounds: int = 4) -> str:
     simple undirected view, same synchronous peeling unrolled ``rounds``
     layers, same final induced-subgraph degree."""
     head = f"""
-WITH e AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-  FROM documents
-),
+WITH {_host_edges_cte("e")},
 s AS (SELECT src, dst FROM e WHERE src <> dst),
 und AS (
   SELECT DISTINCT src, dst FROM (
@@ -3768,24 +3604,18 @@ und AS (
   )
 ),
 a0 AS (SELECT DISTINCT src AS host FROM und)"""
-    layers = []
-    for r in range(1, rounds + 1):
-        layers.append(f"""
-d{r} AS (
-  SELECT u.src AS host, count(*) AS degree
+
+    def degree(r: int) -> str:
+        """Each host's degree in the subgraph induced by a{r}."""
+        return f"""SELECT u.src AS host, count(*) AS degree
   FROM und u
-  JOIN a{r - 1} x ON u.src = x.host
-  JOIN a{r - 1} y ON u.dst = y.host
-  GROUP BY 1
-),
-a{r} AS (SELECT host FROM d{r} WHERE degree >= {k})""")
-    final = f"""
-SELECT u.src AS host, CAST(count(*) AS BIGINT) AS degree
-FROM und u
-JOIN a{rounds} x ON u.src = x.host
-JOIN a{rounds} y ON u.dst = y.host
-GROUP BY 1"""
-    return head + "," + ",".join(layers) + final
+  JOIN a{r} x ON u.src = x.host
+  JOIN a{r} y ON u.dst = y.host
+  GROUP BY 1"""
+    return _rounds(head, rounds, lambda r: f"""
+d{r} AS ({degree(r - 1)}),
+a{r} AS (SELECT host FROM d{r} WHERE degree >= {k})""",
+                   f"SELECT host, CAST(degree AS BIGINT) AS degree FROM ({degree(rounds)})")
 
 
 def dedup_split_leakage_sql(
@@ -3797,19 +3627,8 @@ def dedup_split_leakage_sql(
     same crawl-host fixture key."""
     thr = (16 ** 7 * val_pct) // 100
     return f"""
-WITH {_SHINGLES_CTE},
-pr AS (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-nd AS (
-  SELECT doc_id_a, doc_id_b
-  FROM pr
-  JOIN cnt ca ON doc_id_a = ca.doc_id
-  JOIN cnt cb ON doc_id_b = cb.doc_id
-  WHERE inter * 1000000 // (ca.n + cb.n - inter) >= {threshold_ppm}
-),
+WITH {_OVERLAP_CTE},
+nd AS (SELECT doc_id_a, doc_id_b FROM ovn WHERE {_JACCARD_PPM} >= {threshold_ppm}),
 fl AS (
   SELECT
     CASE WHEN (('0x' || substr(md5('split:' || CAST(doc_id_a AS VARCHAR)), 1, 7))::BIGINT < {thr})
@@ -3838,36 +3657,11 @@ def webtext_crawl_depth_sql(rounds: int = 4) -> str:
     """Mirror of linkgraph.bfs_depth over the shared host-edge fixture:
     same directed deduped edge view, same seed list (every 10th host),
     same synchronous min-relax rounds unrolled as CTE layers."""
-    head = """
-WITH e AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-  FROM documents
-),
+    head = f"""
+WITH {_host_edges_cte("e")},
 ed AS (SELECT DISTINCT src, dst FROM e),
-d0 AS (
-  SELECT printf('host%04d.example', i) AS host, 0 AS depth
-  FROM range(100) t(i) WHERE i % 10 = 0
-)"""
-    layers = []
-    for r in range(1, rounds + 1):
-        layers.append(f"""
-d{r} AS (
-  SELECT host, min(depth) AS depth FROM (
-    SELECT host, depth FROM d{r - 1}
-    UNION ALL
-    SELECT ed.dst AS host, p.depth + 1 AS depth
-    FROM d{r - 1} p JOIN ed ON p.host = ed.src
-  ) GROUP BY 1
-)""")
-    final = (
-        f"SELECT host, CAST(depth AS BIGINT) AS depth FROM d{rounds}"
-    )
-    return head + "," + ",".join(layers) + "\n" + final
+d0 AS (SELECT host, 0 AS depth FROM {_host_nodes()} WHERE i % 10 = 0)"""
+    return _min_relax_sql(head, rounds, "depth", "1")
 
 
 def webtext_cocitation_sql(min_common: int = 2) -> str:
@@ -3875,15 +3669,7 @@ def webtext_cocitation_sql(min_common: int = 2) -> str:
     deduped edges, shared-dst self-join with src< ordering, out-degree
     joins, integer cosine-squared ppm."""
     return f"""
-WITH e AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-  FROM documents
-),
+WITH {_host_edges_cte("e")},
 ed AS (SELECT DISTINCT src, dst FROM e),
 deg AS (SELECT src, count(*) AS deg FROM ed GROUP BY 1),
 pairs AS (
@@ -3930,10 +3716,7 @@ ed AS (SELECT DISTINCT src, dst FROM e),
 rv AS (SELECT dst AS src, src AS dst FROM ed),
 f0 AS (SELECT 'host0025.example' AS host),
 b0 AS (SELECT 'host0025.example' AS host)"""
-    layers = []
-    for r in range(1, rounds + 1):
-        for pre, tbl in (("f", "ed"), ("b", "rv")):
-            layers.append(f"""
+    return _rounds(head, rounds, lambda r: ",".join(f"""
 {pre}{r} AS (
   SELECT DISTINCT host FROM (
     SELECT host FROM {pre}{r - 1}
@@ -3941,79 +3724,35 @@ b0 AS (SELECT 'host0025.example' AS host)"""
     SELECT {tbl}.dst AS host
     FROM {pre}{r - 1} p JOIN {tbl} ON p.host = {tbl}.src
   )
-)""")
-    final = f"""
-SELECT n.host,
+)""" for pre, tbl in (("f", "ed"), ("b", "rv"))), f"""SELECT n.host,
   CASE WHEN f.host IS NOT NULL AND b.host IS NOT NULL THEN 'core'
        WHEN b.host IS NOT NULL THEN 'in'
        WHEN f.host IS NOT NULL THEN 'out'
        ELSE 'other' END AS cls
-FROM (SELECT printf('host%04d.example', i) AS host FROM range(100) t(i)) n
+FROM {_host_nodes()} n
 LEFT JOIN f{rounds} f ON n.host = f.host
 LEFT JOIN b{rounds} b ON n.host = b.host
-"""
-    return head + "," + ",".join(layers) + final
+""")
 
 
 def text_bpe_apply_sql(merges: int = 8) -> str:
     """bpe_train's unrolled rounds re-learn the merge table, then the
     corpus token table runs through the same replace chain, one CTE layer
     per rule."""
-    head = """
-WITH wc AS (
-  SELECT tok, count(*) AS n
-  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-  GROUP BY 1
-),
-v0 AS (
-  SELECT chr(1) || array_to_string(
-           string_split(replace(replace(tok, chr(1), ''), chr(2), ''), ''),
-           chr(2) || chr(1)) || chr(2) AS seq, n
-  FROM wc
-),
+    head = f"""{_BPE_WORDS},
 t0 AS (
-  SELECT doc_id,
-         chr(1) || array_to_string(
-           string_split(replace(replace(tok, chr(1), ''), chr(2), ''), ''),
-           chr(2) || chr(1)) || chr(2) AS enc,
+  SELECT doc_id, {_bpe_enc("tok")} AS enc,
          length(replace(replace(tok, chr(1), ''), chr(2), '')) AS nc
   FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
 )"""
-    layers = []
-    for k in range(1, merges + 1):
-        layers.append(f"""
-p{k} AS (
-  SELECT s[i] AS sym_a, s[i + 1] AS sym_b, CAST(sum(n) AS BIGINT) AS pair_count
-  FROM (SELECT string_split(substring(seq, 2, length(seq) - 2),
-                            chr(2) || chr(1)) AS s, n
-        FROM v{k - 1}),
-       unnest(generate_series(1, len(s) - 1)) AS t(i)
-  WHERE len(s) >= 2
-  GROUP BY 1, 2
-),
-b{k} AS (
-  SELECT sym_a, sym_b FROM p{k}
-  ORDER BY pair_count DESC, sym_a, sym_b LIMIT 1
-),
-v{k} AS (
-  SELECT replace(v.seq,
-                 chr(1) || b.sym_a || chr(2) || chr(1) || b.sym_b || chr(2),
-                 chr(1) || b.sym_a || b.sym_b || chr(2)) AS seq, v.n
-  FROM v{k - 1} v CROSS JOIN b{k} b
-),
+    return _rounds(head, merges, lambda k: _bpe_round(k) + f""",
 t{k} AS (
-  SELECT t.doc_id,
-         replace(t.enc,
-                 chr(1) || b.sym_a || chr(2) || chr(1) || b.sym_b || chr(2),
-                 chr(1) || b.sym_a || b.sym_b || chr(2)) AS enc, t.nc
+  SELECT t.doc_id, {_bpe_merge("t.enc")} AS enc, t.nc
   FROM t{k - 1} t CROSS JOIN b{k} b
-)""")
-    final = f"""
-SELECT doc_id, count(*) AS n_words,
+)""", f"""SELECT doc_id, count(*) AS n_words,
        CAST(sum(length(enc) - length(replace(enc, chr(1), ''))) AS BIGINT) AS n_tokens,
        CAST(sum(nc) AS BIGINT) AS n_chars
-FROM t{merges} GROUP BY 1"""
-    return head + "," + ",".join(layers) + final
+FROM t{merges} GROUP BY 1""")
 
 
 def text_novelty_sql() -> str:
@@ -4051,31 +3790,11 @@ FROM r GROUP BY 1
 # ---------------------------------------------------------------------------
 
 def geo_route_cells_sql() -> str:
-    """Same exact-integer DDA: L = Chebyshev steps, xt = x0 + (dx*t)//L
-    (DuckDB ``//`` truncates toward zero, same as the engine's ``div``)."""
+    """Same exact-integer DDA as the engine, over every consecutive-ping
+    hop (see ``_route_points_cte``)."""
     cell = cells.morton_sql("(xt >> 5)", "(yt >> 5)", 5)
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-seg AS (
-  SELECT user_id,
-         lag(ex) OVER w AS x0, lag(ey) OVER w AS y0,
-         ex AS x1, ey AS y1
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s2 AS (
-  SELECT *, greatest(abs(x1 - x0), abs(y1 - y0), 1) AS L
-  FROM seg WHERE x0 IS NOT NULL
-),
-pts AS (
-  SELECT user_id,
-         x0 + ((x1 - x0) * t) // L AS xt,
-         y0 + ((y1 - y0) * t) // L AS yt
-  FROM s2, unnest(generate_series(0, L)) AS g(t)
-)
+WITH {_event_points_cte()}, {_route_points_cte()}
 SELECT DISTINCT user_id, CAST({cell} AS BIGINT) AS cell_id FROM pts
 """
 
@@ -4179,34 +3898,21 @@ core AS (
   HAVING count(*) >= {minpts}
 ),
 cid AS (SELECT tx, ty, CAST({cell} AS BIGINT) AS cell_id, n_docs FROM core),
-u AS (
+adj AS (
   SELECT a.cell_id AS src, b.cell_id AS dst
   FROM cid a JOIN cid b
     ON abs(a.tx - b.tx) <= 1 AND abs(a.ty - b.ty) <= 1
    AND (a.tx <> b.tx OR a.ty <> b.ty)
 ),
-r(node, comp) AS (
-  SELECT cell_id, cell_id FROM cid
-  UNION
-  SELECT u.dst, r.comp FROM r JOIN u ON u.src = r.node
-)
-SELECT cid.cell_id, min(r.comp) AS cluster, cid.n_docs
-FROM cid JOIN r ON r.node = cid.cell_id
-GROUP BY cid.cell_id, cid.n_docs
+{_components_cte("adj", "src", "dst")}
+SELECT cid.cell_id, coalesce(c.component, cid.cell_id) AS cluster, cid.n_docs
+FROM cid LEFT JOIN comp c ON c.node = cid.cell_id
 """
 
 
 def webtext_triangles_sql() -> str:
-    return """
-WITH raw AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-  FROM documents
-),
+    return f"""
+WITH {_host_edges_cte("raw")},
 e AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
   FROM raw WHERE src <> dst
@@ -4230,13 +3936,7 @@ GROUP BY 1
 def geo_region_centroids_sql() -> str:
     return f"""
 WITH {_pts_cte()}, {_edges_cte()},
-hits AS (
-  SELECT doc_id, gx, gy, polygon_id FROM (
-    SELECT p.doc_id, p.gx, p.gy, e.polygon_id, count(*) AS c
-    FROM pts p JOIN edges e ON ({_CROSSING})
-    GROUP BY 1, 2, 3, 4
-  ) WHERE c % 2 = 1
-)
+hits AS ({_pip("pts", "doc_id, gx, gy")})
 SELECT polygon_id, count(*) AS n_docs,
        CAST(sum(gx) // count(*) AS BIGINT) AS cx_grid,
        CAST(sum(gy) // count(*) AS BIGINT) AS cy_grid
@@ -4265,18 +3965,10 @@ def dedup_minhash_calibration_sql(threshold_ppm: int = 300_000) -> str:
     """Same salted-md5 64-permutation MinHash and exact integer Jaccard as
     dedup.minhash_md5_calibration."""
     return f"""
-WITH {_SHINGLES_CTE},
+WITH {_OVERLAP_CTE},
 cand AS (
-  SELECT doc_id_a, doc_id_b,
-         CAST(inter * 1000000 // (ca.n + cb.n - inter) AS BIGINT) AS jaccard_ppm
-  FROM (
-    SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS inter
-    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  )
-  JOIN cnt ca ON doc_id_a = ca.doc_id
-  JOIN cnt cb ON doc_id_b = cb.doc_id
-  WHERE inter * 1000000 // (ca.n + cb.n - inter) >= {threshold_ppm}
+  SELECT doc_id_a, doc_id_b, CAST({_JACCARD_PPM} AS BIGINT) AS jaccard_ppm
+  FROM ovn WHERE {_JACCARD_PPM} >= {threshold_ppm}
 ),
 sig AS (
   SELECT doc_id, i,
@@ -4372,34 +4064,12 @@ def ann_recall_eval_sql(
     """Ground truth = exact round-6-cosine top-k (id tie-break); LSH arm =
     the identical plane/bucket pipeline as ann_lsh_sql; recall joins the
     two — all arithmetic exact so the ppm value is bit-stable."""
+    cand = _lsh_pairs("bb.vec_id <> a.vec_id", max_hamming)
     return f"""
-WITH {_QUANT_CTE},
-planes AS (
-  SELECT p, list_transform(range({dim}),
-                           d -> ((p * {dim} + d) * 48271) % 1021 - 510) AS pl
-  FROM range({n_planes}) t(p)
-),
-b AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN list_dot_product(qn.qv::DOUBLE[], pl::DOUBLE[]) >= 0
-                       THEN (1 << p) ELSE 0 END) AS BIGINT) AS bucket
-  FROM qn, planes GROUP BY vec_id
-),
+WITH {_QUANT_CTE}, {_lsh_buckets_cte(dim, n_planes)},
 lsh AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT a.vec_id AS query_id, bb.vec_id AS neighbor_id,
-           row_number() OVER (
-             PARTITION BY a.vec_id
-             ORDER BY round(list_dot_product(a.qv::DOUBLE[], bb.qv::DOUBLE[])
-                            / sqrt(a.norm * bb.norm), 6) DESC, bb.vec_id ASC
-           ) AS rank
-    FROM qn a
-    JOIN b ba ON a.vec_id = ba.vec_id
-    JOIN qn bb ON bb.vec_id <> a.vec_id
-    JOIN b bbb ON bb.vec_id = bbb.vec_id
-    WHERE a.vec_id % {every} = 0
-      AND bit_count(xor(ba.bucket, bbb.bucket)) <= {max_hamming}
-  ) WHERE rank <= {k}
+  SELECT query_id, neighbor_id
+  FROM ({_cos_topk(k, f"{cand} AND a.vec_id % {every} = 0")})
 ),
 gt AS (
   SELECT query_id, neighbor_id FROM ({_cosine_topk_select(k, every)})
@@ -4618,29 +4288,18 @@ def geo_segment_join_sql() -> str:
     d = geometry.seg_cross_exprs()
     det = ",\n         ".join(f"{v} AS {k}" for k, v in d.items())
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 seg AS (
   SELECT user_id, event_id AS seg_id,
          lag(ex) OVER w AS ax0, lag(ey) OVER w AS ay0,
          ex AS ax1, ey AS ay1
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM ev {_TRACK}
 ),
 probes AS (
   SELECT * FROM seg
   WHERE ax0 IS NOT NULL AND greatest(abs(ax1 - ax0), abs(ay1 - ay0)) <= 128
 ),
-lines AS (
-  SELECT CAST(j AS BIGINT) AS line_id,
-         {layers.LINE_X0_SQL.format(j="j")} AS bx0,
-         {layers.LINE_Y0_SQL.format(j="j")} AS by0,
-         {layers.LINE_X1_SQL.format(j="j")} AS bx1,
-         {layers.LINE_Y1_SQL.format(j="j")} AS by1
-  FROM unnest(generate_series(0, {layers.N_LINES - 1})) AS g(j)
-),
+{_LINES_CTE},
 pairs AS (
   SELECT probes.*, lines.*,
          {det}
@@ -4713,14 +4372,7 @@ def _lines_raster_cte() -> str:
     """Shared CTE text: the transit-line dim + its exact-integer DDA
     raster (same truncated-division rule as geo_route_cells_sql)."""
     return f"""
-lines AS (
-  SELECT CAST(j AS BIGINT) AS line_id,
-         {layers.LINE_X0_SQL.format(j="j")} AS bx0,
-         {layers.LINE_Y0_SQL.format(j="j")} AS by0,
-         {layers.LINE_X1_SQL.format(j="j")} AS bx1,
-         {layers.LINE_Y1_SQL.format(j="j")} AS by1
-  FROM unnest(generate_series(0, {layers.N_LINES - 1})) AS g(j)
-),
+{_LINES_CTE},
 ln AS (
   SELECT *, greatest(abs(bx1 - bx0), abs(by1 - by0), 1) AS L FROM lines
 ),
@@ -4736,11 +4388,7 @@ def geo_map_match_sql() -> str:
     """Quadratic oracle: every ping x every raster point (no cell-ring
     prefilter), same radius cut and packed argmin as the engine."""
     return f"""
-WITH ev AS (
-  SELECT user_id, event_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 {_lines_raster_cte().lstrip()},
 cand AS (
   SELECT ev.user_id, ev.event_id, raster.line_id,
@@ -4760,19 +4408,13 @@ FROM best
 
 
 def geo_traj_simplify_sql() -> str:
-    from .queries import TRAJ_SIMPLIFY_AREA2
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 t AS (
   SELECT user_id, event_id, ex, ey,
          lag(ex) OVER w AS px, lag(ey) OVER w AS py,
          lead(ex) OVER w AS nx, lead(ey) OVER w AS ny
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM ev {_TRACK}
 )
 SELECT user_id, event_id, ex, ey
 FROM t
@@ -4782,22 +4424,15 @@ WHERE px IS NULL OR nx IS NULL
 
 
 def events_colocation_sql() -> str:
-    from .queries import COLOC_MAX_USERS_PER_KEY
-
     return f"""
-WITH ev AS (
-  SELECT DISTINCT user_id,
-         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-         ({layers.EVT_GX_SQL}) >> 6 AS cx,
-         ({layers.EVT_GY_SQL}) >> 6 AS cy
-  FROM events
-),
+WITH {_event_points_cte()},
+uc AS (SELECT DISTINCT user_id, day, ex >> 6 AS cx, ey >> 6 AS cy FROM ev),
 small AS (
-  SELECT day, cx, cy FROM ev
+  SELECT day, cx, cy FROM uc
   GROUP BY 1, 2, 3
   HAVING count(*) <= {COLOC_MAX_USERS_PER_KEY}
 ),
-e AS (SELECT ev.* FROM ev JOIN small USING (day, cx, cy))
+e AS (SELECT uc.* FROM uc JOIN small USING (day, cx, cy))
 SELECT a.user_id AS user_a, b.user_id AS user_b,
        CAST(count(*) AS BIGINT) AS n_meetings
 FROM e a JOIN e b USING (day, cx, cy)
@@ -4808,15 +4443,9 @@ GROUP BY 1, 2
 
 def geo_od_flows_sql() -> str:
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-         ({layers.EVT_GX_SQL}) >> 7 AS tx,
-         ({layers.EVT_GY_SQL}) >> 7 AS ty
-  FROM events
-),
+WITH {_event_points_cte()},
 r AS (
-  SELECT *,
+  SELECT user_id, day, ex >> 7 AS tx, ey >> 7 AS ty,
          row_number() OVER (PARTITION BY user_id, day ORDER BY ts, event_id) AS rn,
          row_number() OVER (PARTITION BY user_id, day ORDER BY ts DESC, event_id DESC) AS rd
   FROM ev
@@ -4857,49 +4486,20 @@ GROUP BY 1
 
 
 def events_stay_points_sql() -> str:
-    from .queries import STAY_MIN_PINGS, STAY_RADIUS
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-flagged AS (
-  SELECT *,
-         CASE WHEN greatest(abs(ex - lag(ex) OVER w), abs(ey - lag(ey) OVER w))
-                   <= {STAY_RADIUS}
-              THEN 0 ELSE 1 END AS brk
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-isl AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS island
-  FROM flagged
-)
-SELECT user_id, min(event_id) AS first_event_id,
-       CAST(count(*) AS BIGINT) AS n_pings,
-       max(sec) - min(sec) AS dwell_sec,
-       CAST(sum(ex) // count(*) AS BIGINT) AS cx,
-       CAST(sum(ey) // count(*) AS BIGINT) AS cy
-FROM isl GROUP BY user_id, island
-HAVING count(*) >= {STAY_MIN_PINGS}
+WITH {_event_points_cte()}, {_stays_cte()}
+SELECT user_id, first_event_id, n_pings, depart_sec - arrive_sec AS dwell_sec, cx, cy
+FROM stays
 """
 
 
 def geo_emerging_hotspots_sql() -> str:
-    from .queries import HOTSPOT_SHIFT
-
     return f"""
-WITH ev AS (
-  SELECT ({layers.EVT_GX_SQL}) >> {HOTSPOT_SHIFT} AS tx,
-         ({layers.EVT_GY_SQL}) >> {HOTSPOT_SHIFT} AS ty,
-         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day
-  FROM events
-),
+WITH {_event_points_cte()},
 counts AS (
-  SELECT tx, ty, day, CAST(count(*) AS BIGINT) AS cnt FROM ev GROUP BY 1, 2, 3
+  SELECT ex >> {HOTSPOT_SHIFT} AS tx, ey >> {HOTSPOT_SHIFT} AS ty, day,
+         CAST(count(*) AS BIGINT) AS cnt
+  FROM ev GROUP BY 1, 2, 3
 ),
 span AS (SELECT min(day) AS dmin, max(day) AS dmax FROM ev),
 tiles AS (SELECT DISTINCT tx, ty FROM counts),
@@ -4927,19 +4527,11 @@ FROM mk JOIN tot ON mk.tx = tot.tx AND mk.ty = tot.ty
 
 
 def events_traj_similarity_sql() -> str:
-    from .queries import (
-        TRAJSIM_MAX_USERS_PER_CELL,
-        TRAJSIM_MIN_SHARED,
-        TRAJSIM_SHIFT,
-        TRAJSIM_TOPK,
-    )
-
     return f"""
-WITH cells AS (
-  SELECT DISTINCT user_id,
-         ({layers.EVT_GX_SQL}) >> {TRAJSIM_SHIFT} AS cx,
-         ({layers.EVT_GY_SQL}) >> {TRAJSIM_SHIFT} AS cy
-  FROM events
+WITH {_event_points_cte()},
+cells AS (
+  SELECT DISTINCT user_id, ex >> {TRAJSIM_SHIFT} AS cx, ey >> {TRAJSIM_SHIFT} AS cy
+  FROM ev
 ),
 sizes AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_cells FROM cells GROUP BY 1),
 small AS (
@@ -4974,83 +4566,42 @@ FROM ranked WHERE rank <= {TRAJSIM_TOPK}
 """
 
 
-def _fences_cte() -> str:
-    from .queries import FENCE_MOD
-
-    return f"""fences AS (
-  SELECT i AS fence_id, (i * 37 + 11) % 1024 AS fx, (i * 73 + 29) % 1024 AS fy
-  FROM range(0, {layers.N_GAZ}, {FENCE_MOD}) t(i)
-)"""
-
-
 def events_geofence_dwell_sql() -> str:
-    from .queries import FENCE_R
-
     return f"""
-WITH {_fences_cte()},
-ev AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-)
+WITH {_fences_cte()}, {_event_points_cte()}
 SELECT e.user_id, f.fence_id,
        CAST(count(*) AS BIGINT) AS n_pings,
        max(e.sec) - min(e.sec) AS dwell_sec,
        min(e.event_id) AS first_event_id
-FROM ev e JOIN fences f
-  ON abs(e.ex - f.fx) <= {FENCE_R} AND abs(e.ey - f.fy) <= {FENCE_R}
+FROM ev e JOIN fences f ON {_IN_FENCE}
 GROUP BY 1, 2
 """
 
 
 def events_geofence_transitions_sql() -> str:
-    from .queries import FENCE_R
-
     return f"""
-WITH {_fences_cte()},
-ev AS (
-  SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-pinged AS (
-  SELECT e.user_id, e.ts, e.event_id, e.sec,
-         coalesce(min(CASE WHEN abs(e.ex - f.fx) <= {FENCE_R}
-                            AND abs(e.ey - f.fy) <= {FENCE_R}
-                           THEN f.fence_id END), -1) AS fence
-  FROM ev e LEFT JOIN fences f
-    ON abs(e.ex - f.fx) <= {FENCE_R} AND abs(e.ey - f.fy) <= {FENCE_R}
-  GROUP BY 1, 2, 3, 4
-),
-lagged AS (
-  SELECT *, lag(fence) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM pinged
-)
+WITH {_fences_cte()}, {_event_points_cte()},
+{_fence_state_cte("e.user_id, e.ts, e.event_id, e.sec")},
+lagged AS (SELECT *, lag(state) OVER w AS prev FROM pinged {_TRACK})
 SELECT user_id, event_id, sec,
        coalesce(prev, -1) AS from_fence,
-       fence AS to_fence,
-       CASE WHEN fence = -1 THEN 'exit'
+       state AS to_fence,
+       CASE WHEN state = -1 THEN 'exit'
             WHEN prev IS NULL OR prev = -1 THEN 'enter'
             ELSE 'switch' END AS kind
 FROM lagged
-WHERE (prev IS NULL AND fence <> -1) OR (prev IS NOT NULL AND prev <> fence)
+WHERE (prev IS NULL AND state <> -1) OR (prev IS NOT NULL AND prev <> state)
 """
 
 
 def events_traj_outliers_sql() -> str:
-    from .queries import TRAJ_MAX_PX_PER_DAY
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 hops AS (
   SELECT user_id, event_id, sec,
          abs(ex - lag(ex) OVER w) + abs(ey - lag(ey) OVER w) AS dist,
          sec - lag(sec) OVER w AS dt
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM ev {_TRACK}
 )
 SELECT user_id, event_id, sec, dist, dt
 FROM hops
@@ -5059,18 +4610,12 @@ WHERE dist IS NOT NULL AND dist * 86400 > {TRAJ_MAX_PX_PER_DAY} * dt
 
 
 def events_traj_resample_sql() -> str:
-    from .queries import RESAMPLE_STEP
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 hops AS (
   SELECT user_id, sec AS s0, ex AS x0, ey AS y0,
          lead(sec) OVER w AS s1, lead(ex) OVER w AS x1, lead(ey) OVER w AS y1
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM ev {_TRACK}
 ),
 pts AS (
   SELECT h.user_id, h.s0, h.x0, h.y0, h.s1, h.x1, h.y1,
@@ -5090,33 +4635,19 @@ FROM pts
 
 
 def events_geofence_occupancy_sql() -> str:
-    from .queries import FENCE_R
-
     return f"""
-WITH {_fences_cte()},
-ev AS (
-  SELECT user_id,
-         CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hour,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-)
-SELECT f.fence_id, e.hour,
+WITH {_fences_cte()}, {_event_points_cte()}
+SELECT f.fence_id, e.sec // 3600 AS hour,
        CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users,
        CAST(count(*) AS BIGINT) AS n_pings
-FROM ev e JOIN fences f
-  ON abs(e.ex - f.fx) <= {FENCE_R} AND abs(e.ey - f.fy) <= {FENCE_R}
+FROM ev e JOIN fences f ON {_IN_FENCE}
 GROUP BY 1, 2
 """
 
 
 def events_mobility_profile_sql() -> str:
-    from .queries import TRAJSIM_SHIFT
-
     return f"""
-WITH ev AS (
-  SELECT user_id, {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 base AS (
   SELECT user_id, CAST(count(*) AS BIGINT) AS n_pings,
          sum(ex) AS sx, sum(ey) AS sy, sum(ex*ex + ey*ey) AS sq,
@@ -5142,16 +4673,9 @@ FROM base b JOIN cells c USING (user_id)
 
 
 def geo_tile_rhythms_sql() -> str:
-    from .queries import HOTSPOT_SHIFT
-
     return f"""
-WITH ev AS (
-  SELECT ({layers.EVT_GX_SQL}) >> {HOTSPOT_SHIFT} AS tx,
-         ({layers.EVT_GY_SQL}) >> {HOTSPOT_SHIFT} AS ty,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec
-  FROM events
-)
-SELECT tx, ty,
+WITH {_event_points_cte()}
+SELECT ex >> {HOTSPOT_SHIFT} AS tx, ey >> {HOTSPOT_SHIFT} AS ty,
        (sec // 86400 + 4) % 7 AS dow,
        (sec % 86400) // 3600 AS hour,
        CAST(count(*) AS BIGINT) AS n_pings
@@ -5160,36 +4684,8 @@ FROM ev GROUP BY 1, 2, 3, 4
 
 
 def events_trips_sql() -> str:
-    from .queries import STAY_MIN_PINGS, STAY_RADIUS
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-flagged AS (
-  SELECT *,
-         CASE WHEN greatest(abs(ex - lag(ex) OVER w), abs(ey - lag(ey) OVER w))
-                   <= {STAY_RADIUS}
-              THEN 0 ELSE 1 END AS brk
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-isl AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS island
-  FROM flagged
-),
-stays AS (
-  SELECT user_id, island,
-         CAST(count(*) AS BIGINT) AS n_pings,
-         min(sec) AS arrive_sec, max(sec) AS depart_sec,
-         CAST(sum(ex) // count(*) AS BIGINT) AS cx,
-         CAST(sum(ey) // count(*) AS BIGINT) AS cy
-  FROM isl GROUP BY 1, 2
-  HAVING count(*) >= {STAY_MIN_PINGS}
-),
+WITH {_event_points_cte()}, {_stays_cte()},
 hop AS (
   SELECT user_id, cx AS from_x, cy AS from_y, depart_sec,
          lead(cx) OVER ws AS to_x, lead(cy) OVER ws AS to_y,
@@ -5203,8 +4699,6 @@ FROM hop WHERE to_x IS NOT NULL
 
 
 def _stations_cte() -> str:
-    from .queries import STATION_MOD
-
     return f"""stations AS (
   SELECT i AS sid, (i * 37 + 11) % 1024 AS fx, (i * 73 + 29) % 1024 AS fy,
          (i * 97 + 13) % 1000 AS v
@@ -5213,25 +4707,19 @@ def _stations_cte() -> str:
 
 
 def geo_idw_surface_sql() -> str:
-    from .queries import IDW_R2, IDW_WSCALE, TRAJSIM_SHIFT
-
     side = 1 << TRAJSIM_SHIFT
     half = side // 2
     return f"""
-WITH {_stations_cte()},
+WITH {_stations_cte()}, {_event_points_cte()},
 cells AS (
-  SELECT DISTINCT ({layers.EVT_GX_SQL}) >> {TRAJSIM_SHIFT} AS cx,
-                  ({layers.EVT_GY_SQL}) >> {TRAJSIM_SHIFT} AS cy
-  FROM events
+  SELECT cx, cy, cx * {side} + {half} AS px, cy * {side} + {half} AS py
+  FROM (SELECT DISTINCT ex >> {TRAJSIM_SHIFT} AS cx, ey >> {TRAJSIM_SHIFT} AS cy FROM ev)
 ),
 near AS (
-  SELECT c.cx, c.cy, s.v,
-         (c.cx * {side} + {half} - s.fx) * (c.cx * {side} + {half} - s.fx)
-       + (c.cy * {side} + {half} - s.fy) * (c.cy * {side} + {half} - s.fy) AS d2
-  FROM cells c JOIN stations s
-    ON (c.cx * {side} + {half} - s.fx) * (c.cx * {side} + {half} - s.fx)
-     + (c.cy * {side} + {half} - s.fy) * (c.cy * {side} + {half} - s.fy)
-       <= {IDW_R2}
+  SELECT * FROM (
+    SELECT c.cx, c.cy, s.v, {_sq_dist("c.px", "c.py", "s.fx", "s.fy")} AS d2
+    FROM cells c CROSS JOIN stations s
+  ) WHERE d2 <= {IDW_R2}
 )
 SELECT cx, cy, CAST(count(*) AS BIGINT) AS n_stations,
        CAST(sum(v * ({IDW_WSCALE} // greatest(d2, 1)))
@@ -5241,18 +4729,11 @@ FROM near GROUP BY 1, 2
 
 
 def geo_nearest_facility_sql() -> str:
-    from .queries import STATION_MOD
-
     return f"""
-WITH {_stations_cte()},
-ev AS (
-  SELECT event_id, {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_stations_cte()}, {_event_points_cte()},
 packed AS (
   SELECT e.event_id,
-         min(((e.ex - s.fx) * (e.ex - s.fx) + (e.ey - s.fy) * (e.ey - s.fy))
-             * 64 + s.sid // {STATION_MOD}) AS p
+         min(({_sq_dist("e.ex", "e.ey", "s.fx", "s.fy")}) * 64 + s.sid // {STATION_MOD}) AS p
   FROM ev e CROSS JOIN stations s
   GROUP BY 1
 )
@@ -5266,23 +4747,20 @@ FROM packed GROUP BY 1
 
 def events_convex_hull_sql() -> str:
     return f"""
-WITH ev AS (
-  SELECT DISTINCT user_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-npts AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_points FROM ev GROUP BY 1),
+WITH {_event_points_cte()},
+pt AS (SELECT DISTINCT user_id, ex, ey FROM ev),
+npts AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_points FROM pt GROUP BY 1),
 edges AS (
   -- (a, b) is a CCW hull edge iff every point is left-of-or-on the
   -- directed line a->b and none lies strictly between a and b
   SELECT a.user_id, a.ex AS ax, a.ey AS ay, b.ex AS bx, b.ey AS by
-  FROM ev a JOIN ev b USING (user_id)
+  FROM pt a JOIN pt b USING (user_id)
   WHERE (a.ex <> b.ex OR a.ey <> b.ey)
     AND NOT EXISTS (
-      SELECT 1 FROM ev c WHERE c.user_id = a.user_id
+      SELECT 1 FROM pt c WHERE c.user_id = a.user_id
         AND (b.ex - a.ex) * (c.ey - a.ey) - (b.ey - a.ey) * (c.ex - a.ex) < 0)
     AND NOT EXISTS (
-      SELECT 1 FROM ev c WHERE c.user_id = a.user_id
+      SELECT 1 FROM pt c WHERE c.user_id = a.user_id
         AND (b.ex - a.ex) * (c.ey - a.ey) - (b.ey - a.ey) * (c.ex - a.ex) = 0
         AND (c.ex - a.ex) * (b.ex - a.ex) + (c.ey - a.ey) * (b.ey - a.ey) > 0
         AND (c.ex - a.ex) * (b.ex - a.ex) + (c.ey - a.ey) * (b.ey - a.ey)
@@ -5297,17 +4775,9 @@ GROUP BY 1, 2
 
 
 def geo_uncovered_docs_sql() -> str:
-    from .queries import HOTSPOT_SHIFT
-
     return f"""
 WITH {_pts_cte()}, {_edges_cte()},
-hits AS (
-  SELECT DISTINCT doc_id FROM (
-    SELECT p.doc_id, e.polygon_id, count(*) AS c
-    FROM pts p JOIN edges e ON ({_CROSSING})
-    GROUP BY 1, 2
-  ) WHERE c % 2 = 1
-)
+hits AS (SELECT DISTINCT doc_id FROM ({_pip("pts", "doc_id")}))
 SELECT p.gx >> {HOTSPOT_SHIFT} AS tx, p.gy >> {HOTSPOT_SHIFT} AS ty,
        CAST(count(*) AS BIGINT) AS n_docs,
        min(p.doc_id) AS min_doc_id
@@ -5318,18 +4788,12 @@ GROUP BY 1, 2
 
 
 def events_popular_routes_sql() -> str:
-    from .queries import ROUTE_TOPK, TRAJSIM_SHIFT
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         ({layers.EVT_GX_SQL}) >> {TRAJSIM_SHIFT} AS cx,
-         ({layers.EVT_GY_SQL}) >> {TRAJSIM_SHIFT} AS cy
-  FROM events
-),
+WITH {_event_points_cte()},
 steps AS (
   SELECT lag(cx) OVER w AS fx, lag(cy) OVER w AS fy, cx AS tx, cy AS ty
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM (SELECT *, ex >> {TRAJSIM_SHIFT} AS cx, ey >> {TRAJSIM_SHIFT} AS cy FROM ev)
+  {_TRACK}
 ),
 counts AS (
   SELECT fx, fy, tx, ty, CAST(count(*) AS BIGINT) AS n_trips
@@ -5349,15 +4813,13 @@ FROM ranked WHERE rank <= {ROUTE_TOPK}
 
 
 def geo_tile_skyline_sql() -> str:
-    from .queries import FENCE_SHIFT
-
     return f"""
-WITH tiles AS (
-  SELECT ({layers.EVT_GX_SQL}) >> {FENCE_SHIFT} AS tx,
-         ({layers.EVT_GY_SQL}) >> {FENCE_SHIFT} AS ty,
+WITH {_event_points_cte()},
+tiles AS (
+  SELECT ex >> {FENCE_SHIFT} AS tx, ey >> {FENCE_SHIFT} AS ty,
          CAST(count(*) AS BIGINT) AS n_pings,
          CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-  FROM events GROUP BY 1, 2
+  FROM ev GROUP BY 1, 2
 )
 SELECT a.tx, a.ty, a.n_pings, a.n_users
 FROM tiles a
@@ -5370,14 +4832,12 @@ WHERE NOT EXISTS (
 
 
 def geo_choropleth_bins_sql() -> str:
-    from .queries import CHORO_BINS, HOTSPOT_SHIFT
-
     return f"""
-WITH tiles AS (
-  SELECT ({layers.EVT_GX_SQL}) >> {HOTSPOT_SHIFT} AS tx,
-         ({layers.EVT_GY_SQL}) >> {HOTSPOT_SHIFT} AS ty,
+WITH {_event_points_cte()},
+tiles AS (
+  SELECT ex >> {HOTSPOT_SHIFT} AS tx, ey >> {HOTSPOT_SHIFT} AS ty,
          CAST(count(*) AS BIGINT) AS n_pings
-  FROM events GROUP BY 1, 2
+  FROM ev GROUP BY 1, 2
 )
 SELECT tx, ty, n_pings,
        CAST(ntile({CHORO_BINS}) OVER (ORDER BY n_pings, tx, ty) AS BIGINT)
@@ -5386,31 +4846,22 @@ FROM tiles
 """
 
 
+def _drop_char(s: str, p: str) -> str:
+    """``s`` without its (0-based) character ``p``: a one-deletion typo."""
+    return f"substr({s}, 1, CAST({p} AS INT)) || substr({s}, CAST({p} + 2 AS INT))"
+
+
 def text_fuzzy_link_sql() -> str:
-    gi = layers.MENTION_IDX_SQL.format(j="j")
     return f"""
-WITH ment0 AS (
-  SELECT doc_id, unnest(generate_series(0, doc_id % 3)) AS j
-  FROM documents
-),
-ment AS (
-  SELECT doc_id,
-         printf('GEO_%05d', {gi}) AS surface,
-         (doc_id + j) % 9 AS p
-  FROM ment0
-),
+WITH {_mentions_cte()},
 typos AS (
-  SELECT doc_id,
-         substr(surface, 1, CAST(p AS INT)) || substr(surface, CAST(p + 2 AS INT))
-           AS typo
-  FROM ment
+  SELECT doc_id, {_drop_char("surface", "p")} AS typo
+  FROM (SELECT doc_id, surface, (doc_id + j) % 9 AS p FROM ment)
 ),
 variants AS (
-  SELECT DISTINCT g.i AS gaz_idx, printf('GEO_%05d', g.i) AS surface,
-         substr(printf('GEO_%05d', g.i), 1, CAST(d.p AS INT))
-           || substr(printf('GEO_%05d', g.i), CAST(d.p + 2 AS INT)) AS typo
-  FROM range({layers.N_GAZ}) g(i)
-  CROSS JOIN range(0, 9) d(p)
+  SELECT DISTINCT gaz_idx, surface, {_drop_char("surface", "p")} AS typo
+  FROM (SELECT g.i AS gaz_idx, printf('GEO_%05d', g.i) AS surface, d.p
+        FROM range({layers.N_GAZ}) g(i) CROSS JOIN range(0, 9) d(p))
 ),
 cand AS (
   SELECT DISTINCT t.doc_id, v.gaz_idx
@@ -5423,38 +4874,17 @@ FROM cand GROUP BY 1
 
 
 def events_stay_overlaps_sql() -> str:
-    from .queries import HOTSPOT_SHIFT, STAY_MIN_PINGS, STAY_RADIUS
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-flagged AS (
-  SELECT *,
-         CASE WHEN greatest(abs(ex - lag(ex) OVER w), abs(ey - lag(ey) OVER w))
-                   <= {STAY_RADIUS}
-              THEN 0 ELSE 1 END AS brk
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-isl AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS island
-  FROM flagged
-),
-stays AS (
-  SELECT user_id, island, min(sec) AS t0, max(sec) AS t1,
-         CAST((sum(ex) // count(*)) >> {HOTSPOT_SHIFT} AS BIGINT) AS cx,
-         CAST((sum(ey) // count(*)) >> {HOTSPOT_SHIFT} AS BIGINT) AS cy
-  FROM isl GROUP BY 1, 2
-  HAVING count(*) >= {STAY_MIN_PINGS}
+WITH {_event_points_cte()}, {_stays_cte()},
+st AS (
+  SELECT user_id, island, arrive_sec AS t0, depart_sec AS t1,
+         cx >> {HOTSPOT_SHIFT} AS cx, cy >> {HOTSPOT_SHIFT} AS cy
+  FROM stays
 ),
 pairs AS (
   SELECT DISTINCT a.user_id AS user_a, b.user_id AS user_b,
          a.cx, a.cy, a.island AS ia, b.island AS ib
-  FROM stays a JOIN stays b
+  FROM st a JOIN st b
     ON a.cx = b.cx AND a.cy = b.cy
    AND a.user_id < b.user_id
    AND a.t0 <= b.t1 AND b.t0 <= a.t1
@@ -5465,18 +4895,12 @@ FROM pairs GROUP BY 1, 2, 3, 4
 
 
 def events_heading_hist_sql() -> str:
-    from .queries import HOTSPOT_SHIFT
-
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
+WITH {_event_points_cte()},
 hops AS (
   SELECT lag(ex) OVER w AS x0, lag(ey) OVER w AS y0,
          ex - lag(ex) OVER w AS dx, ey - lag(ey) OVER w AS dy
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM ev {_TRACK}
 )
 SELECT x0 >> {HOTSPOT_SHIFT} AS tx, y0 >> {HOTSPOT_SHIFT} AS ty,
        CAST(CASE
@@ -5498,37 +4922,14 @@ def webtext_crawl_cost_sql(rounds: int = 4) -> str:
     """Mirror of linkgraph.cheapest_paths over the shared host-edge
     fixture: multiplicity-derived edge costs, same seeds, same unrolled
     Bellman-Ford min-relax rounds."""
-    head = """
-WITH e AS (
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-  FROM documents
-  UNION ALL
-  SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-         printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-  FROM documents
-),
-w AS (
+    head = f"""
+WITH {_host_edges_cte("e")},
+ed AS (
   SELECT src, dst, 1000000 // (1 + count(*)) AS edge_cost
   FROM e GROUP BY 1, 2
 ),
-c0 AS (
-  SELECT printf('host%04d.example', i) AS host, 0 AS cost
-  FROM range(100) t(i) WHERE i % 10 = 0
-)"""
-    layers_sql = []
-    for r in range(1, rounds + 1):
-        layers_sql.append(f"""
-c{r} AS (
-  SELECT host, min(cost) AS cost FROM (
-    SELECT host, cost FROM c{r - 1}
-    UNION ALL
-    SELECT w.dst AS host, p.cost + w.edge_cost AS cost
-    FROM c{r - 1} p JOIN w ON p.host = w.src
-  ) GROUP BY 1
-)""")
-    final = f"SELECT host, CAST(cost AS BIGINT) AS cost FROM c{rounds}"
-    return head + "," + ",".join(layers_sql) + "\n" + final
+d0 AS (SELECT host, 0 AS cost FROM {_host_nodes()} WHERE i % 10 = 0)"""
+    return _min_relax_sql(head, rounds, "cost", "ed.edge_cost")
 
 
 def geo_tile_closest_pair_sql(shift: int = 5) -> str:
@@ -5555,13 +4956,10 @@ GROUP BY 1, 2
 
 def events_gap_stats_sql() -> str:
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-  FROM events
-),
+WITH {_event_points_cte()},
 gaps AS (
   SELECT user_id, event_id, sec - lag(sec) OVER w AS gap
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM ev {_TRACK}
 ),
 g AS (SELECT * FROM gaps WHERE gap IS NOT NULL),
 agg AS (
@@ -5582,28 +4980,13 @@ FROM agg a JOIN med m USING (user_id)
 
 
 def events_state_history_sql() -> str:
-    from .queries import FENCE_R
-
     return f"""
-WITH {_fences_cte()},
-ev AS (
-  SELECT user_id, ts, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-pinged AS (
-  SELECT e.user_id, e.ts, e.event_id, e.sec,
-         coalesce(min(CASE WHEN abs(e.ex - f.fx) <= {FENCE_R}
-                            AND abs(e.ey - f.fy) <= {FENCE_R}
-                           THEN f.fence_id END), -1) AS state
-  FROM ev e LEFT JOIN fences f
-    ON abs(e.ex - f.fx) <= {FENCE_R} AND abs(e.ey - f.fy) <= {FENCE_R}
-  GROUP BY 1, 2, 3, 4
-),
+WITH {_fences_cte()}, {_event_points_cte()},
+{_fence_state_cte("e.user_id, e.ts, e.event_id, e.sec")},
 flagged AS (
   SELECT *, CASE WHEN lag(state) OVER w IS NULL
                    OR lag(state) OVER w <> state THEN 1 ELSE 0 END AS chg
-  FROM pinged WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM pinged {_TRACK}
 ),
 runs AS (
   SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -5623,19 +5006,13 @@ FROM hist
 
 
 def geo_tile_day_bitmask_sql() -> str:
-    from .queries import HOTSPOT_SHIFT
-
     return f"""
-WITH days AS (
-  SELECT ({layers.EVT_GX_SQL}) >> {HOTSPOT_SHIFT} AS tx,
-         ({layers.EVT_GY_SQL}) >> {HOTSPOT_SHIFT} AS ty,
-         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day
-  FROM events
-),
-d0 AS (SELECT min(day) AS d0 FROM days),
+WITH {_event_points_cte()},
+d0 AS (SELECT min(day) AS d0 FROM ev),
 masks AS (
-  SELECT tx, ty, bit_or(CAST(1 AS BIGINT) << CAST(day - d0.d0 AS INT)) AS mask
-  FROM days CROSS JOIN d0
+  SELECT ex >> {HOTSPOT_SHIFT} AS tx, ey >> {HOTSPOT_SHIFT} AS ty,
+         bit_or(CAST(1 AS BIGINT) << CAST(day - d0.d0 AS INT)) AS mask
+  FROM ev CROSS JOIN d0
   WHERE day - d0.d0 < 63
   GROUP BY 1, 2
 )
@@ -5651,29 +5028,11 @@ WHERE bit_count(a.mask & b.mask) > 0
 
 
 def webtext_graph_diff_sql() -> str:
-    return """
-WITH ea AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-           printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-    FROM documents WHERE doc_id % 10 <> 7
-    UNION ALL
-    SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-           printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-    FROM documents WHERE doc_id % 10 <> 7
-  )
-),
-eb AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-           printf('host%04d.example', (doc_id * 7 + 1) % 100) AS dst
-    FROM documents WHERE doc_id % 10 <> 3
-    UNION ALL
-    SELECT printf('host%04d.example', (doc_id // 3) % 100) AS src,
-           printf('host%04d.example', (doc_id * 13 + 2) % 100) AS dst
-    FROM documents WHERE doc_id % 10 <> 3
-  )
-),
+    return f"""
+WITH {_host_edges_cte("ea0", "doc_id % 10 <> 7")},
+{_host_edges_cte("eb0", "doc_id % 10 <> 3")},
+ea AS (SELECT DISTINCT src, dst FROM ea0),
+eb AS (SELECT DISTINCT src, dst FROM eb0),
 j AS (
   SELECT coalesce(ea.src, eb.src) AS src,
          CASE WHEN ea.src IS NULL THEN 'gained'
@@ -5690,12 +5049,8 @@ FROM j GROUP BY 1
 
 
 def events_hopping_windows_sql() -> str:
-    from .queries import HOP_SLIDE_S, HOP_WINDOW_S
-
     return f"""
-WITH ev AS (
-  SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events
-),
+WITH {_event_points_cte()},
 hops AS (
   SELECT event_type, k.k * {HOP_SLIDE_S} AS window_start
   FROM ev
@@ -5710,19 +5065,9 @@ FROM hops GROUP BY 1, 2
 
 
 def geo_fence_affinity_sql() -> str:
-    from .queries import AFFINITY_MIN_BOTH, FENCE_R
-
     return f"""
-WITH {_fences_cte()},
-ev AS (
-  SELECT user_id, {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-visits AS (
-  SELECT DISTINCT e.user_id, f.fence_id
-  FROM ev e JOIN fences f
-    ON abs(e.ex - f.fx) <= {FENCE_R} AND abs(e.ey - f.fy) <= {FENCE_R}
-),
+WITH {_fences_cte()}, {_event_points_cte()},
+visits AS (SELECT DISTINCT e.user_id, f.fence_id FROM ev e JOIN fences f ON {_IN_FENCE}),
 u AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users FROM visits),
 pf AS (
   SELECT fence_id, CAST(count(*) AS BIGINT) AS n_visitors
@@ -5748,15 +5093,12 @@ CROSS JOIN u
 
 
 def geo_tile_changepoint_sql() -> str:
-    from .queries import HOTSPOT_SHIFT
-
     return f"""
-WITH daily AS (
-  SELECT ({layers.EVT_GX_SQL}) >> {HOTSPOT_SHIFT} AS tx,
-         ({layers.EVT_GY_SQL}) >> {HOTSPOT_SHIFT} AS ty,
-         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
+WITH {_event_points_cte()},
+daily AS (
+  SELECT ex >> {HOTSPOT_SHIFT} AS tx, ey >> {HOTSPOT_SHIFT} AS ty, day,
          CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1, 2, 3
+  FROM ev GROUP BY 1, 2, 3
 ),
 scored AS (
   SELECT tx, ty, day,
@@ -5782,8 +5124,6 @@ FROM dk WHERE rn = 1
 
 
 def events_unpivot_sql() -> str:
-    from .operators.relational import EVENT_TYPES
-
     branches = " UNION ALL ".join(
         f"SELECT user_id, '{t}' AS event_type, n_{t} AS n FROM wide"
         for t in EVENT_TYPES
@@ -5816,24 +5156,9 @@ FROM per_user
 
 
 def events_purchase_attribution_sql() -> str:
-    from .queries import FENCE_R
-
     return f"""
-WITH {_fences_cte()},
-ev AS (
-  SELECT user_id, event_id, event_type, value,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-pinged AS (
-  SELECT e.user_id, e.event_id, e.event_type, e.value,
-         coalesce(min(CASE WHEN abs(e.ex - f.fx) <= {FENCE_R}
-                            AND abs(e.ey - f.fy) <= {FENCE_R}
-                           THEN f.fence_id END), -1) AS state
-  FROM ev e LEFT JOIN fences f
-    ON abs(e.ex - f.fx) <= {FENCE_R} AND abs(e.ey - f.fy) <= {FENCE_R}
-  GROUP BY 1, 2, 3, 4
-)
+WITH {_fences_cte()}, {_event_points_cte()},
+{_fence_state_cte("e.user_id, e.event_id, e.event_type, e.value")}
 SELECT state AS fence_id,
        CAST(count(*) AS BIGINT) AS n_purchases,
        CAST(count(DISTINCT user_id) AS BIGINT) AS n_buyers,
@@ -5844,8 +5169,6 @@ GROUP BY 1
 
 
 def geo_voronoi_edges_sql() -> str:
-    from .queries import STATION_MOD, TRAJSIM_SHIFT
-
     side = 1 << TRAJSIM_SHIFT
     half = side // 2
     return f"""
@@ -5874,40 +5197,14 @@ WHERE (e.station_id IS NOT NULL AND e.station_id <> o.station_id)
 
 
 def geo_route_friction_sql() -> str:
-    from .queries import TRAJSIM_SHIFT
-
     cell = cells.morton_sql("(xt >> 5)", "(yt >> 5)", 5)
-    dcell = cells.morton_sql(
-        f"(({layers.EVT_GX_SQL}) >> {TRAJSIM_SHIFT})",
-        f"(({layers.EVT_GY_SQL}) >> {TRAJSIM_SHIFT})",
-        5,
-    )
+    dcell = cells.morton_sql(f"(ex >> {TRAJSIM_SHIFT})", f"(ey >> {TRAJSIM_SHIFT})", 5)
     return f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id,
-         {layers.EVT_GX_SQL} AS ex, {layers.EVT_GY_SQL} AS ey
-  FROM events
-),
-seg AS (
-  SELECT user_id,
-         lag(ex) OVER w AS x0, lag(ey) OVER w AS y0,
-         ex AS x1, ey AS y1
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s2 AS (
-  SELECT *, greatest(abs(x1 - x0), abs(y1 - y0), 1) AS L
-  FROM seg WHERE x0 IS NOT NULL
-),
-pts AS (
-  SELECT user_id,
-         x0 + ((x1 - x0) * t) // L AS xt,
-         y0 + ((y1 - y0) * t) // L AS yt
-  FROM s2, unnest(generate_series(0, L)) AS g(t)
-),
+WITH {_event_points_cte()}, {_route_points_cte()},
 route AS (SELECT DISTINCT user_id, CAST({cell} AS BIGINT) AS cell_id FROM pts),
 density AS (
   SELECT CAST({dcell} AS BIGINT) AS cell_id, CAST(count(*) AS BIGINT) AS density
-  FROM events GROUP BY 1
+  FROM ev GROUP BY 1
 )
 SELECT r.user_id, CAST(count(*) AS BIGINT) AS n_cells,
        CAST(sum(d.density) AS BIGINT) AS friction,
