@@ -6,20 +6,25 @@
         --job-id demo1
 
 Stages (each checkpointed with per-partition lineage + metrics; rerunning
-the same job-id resumes, recomputing only missing stages/chunks):
+the same job-id resumes, recomputing only missing stages/chunks). Stages
+3 and 5-7 call the same ``queries`` functions as the registry queries
+named after the arrow, so the job's outputs are the oracle-checked ones:
   1. pages      — synthesize/load the Common-Crawl-shaped pages table,
                   z-order (Hilbert) repartitioned.
   2. entities   — byte-identical text extraction -> geo-entity rows.
-  3. triples    — two-phase cell-cover + ray-cast PIP join -> (url, cell_id,
+  3. triples    — ``queries.page_triples`` (-> geo_pip_entities): two-phase
+                  cell-cover + ray-cast PIP join -> (url, cell_id,
                   polygon_id), chunked by coarse Hilbert range.
   4. tiles      — per-tile counts rolled up the hierarchy res 10 -> 7.
-  5. dedup_groups — near-dup group formation over the page text: Jaccard
-                  pair graph (stop-shingle cut) -> connected components ->
-                  (doc_id, group_id) survivors.
-  6. emb_dedup_groups — the embedding twin of stage 5 (multi-probe LSH).
-  7. train_set   — final curation: dedup representatives -> benchmark
-                  decontamination -> PII scrub -> 512-token sequence
-                  packing -> (doc_id, bin_id, offset, clean_hash) shards.
+  5. dedup_groups — ``queries.doc_groups`` (-> dedup_groups): exact
+                  3-gram Jaccard pair graph over the page text -> connected
+                  components -> (doc_id, group_id); no stop-shingle cut.
+  6. emb_dedup_groups — ``queries.emb_groups`` (-> dedup_groups_embedding):
+                  the embedding twin of stage 5 (multi-probe LSH).
+  7. train_set   — ``queries.train_set_from`` (-> train_set): dedup
+                  representatives -> benchmark decontamination -> PII
+                  scrub -> 512-token sequence packing -> (doc_id, bin_id,
+                  offset, clean_hash) shards.
 
 Build the --py-files zip with:  python -m zipfile -c tscv_spark.zip tree_sitter_codeviews_spark
 """
@@ -34,11 +39,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from tree_sitter_codeviews_spark import layers, s2, skew
+from tree_sitter_codeviews_spark import layers, queries, s2, skew
 from tree_sitter_codeviews_spark.checkpoint import Pipeline
-from tree_sitter_codeviews_spark.operators import extract, pip_join, tiles
+from tree_sitter_codeviews_spark.operators import extract, tiles
 from tree_sitter_codeviews_spark.session import get_spark
 from tree_sitter_codeviews_spark.sources import pages as pages_src
+from tree_sitter_codeviews_spark.sources.testdata import load_table
 
 N_CHUNKS = 4  # coarse Hilbert ranges for the chunked join stage
 
@@ -64,9 +70,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         # resolution errors) but execute nothing
         pages = pages_src.pages_df(spark, args.sf_dir)
         ents = extract.page_entities(pages, pages_src.gazetteer_df(spark))
-        plan = pip_join.pip_join(ents, spark, keys=("url",)).select(
-            "url", "cell_id", "polygon_id"
-        ).distinct()
+        plan = queries.page_triples(ents, spark)
         plan.explain("formatted")
         print(f"dry-run OK: schema={plan.schema.simpleString()}")
         if owns_session:
@@ -105,9 +109,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             res=2,
         )
         part = entities.filter(F.pmod(h2, F.lit(N_CHUNKS)) == lo)
-        return pip_join.pip_join(part, spark, keys=("url",)).select(
-            "url", "cell_id", "polygon_id"
-        ).distinct()
+        return queries.page_triples(part, spark)
 
     triples = pipe.chunked_stage(
         "triples", [str(i) for i in range(N_CHUNKS)], triples_chunk
@@ -120,62 +122,13 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         ),
     )
 
-    # stage 5: near-dup group formation over the extracted page text —
-    # Jaccard pair graph (stop-shingle cut) -> connected components ->
-    # (doc_id, group_id) survivor table (the training-data dedup step)
-    def dedup_stage():
-        from tree_sitter_codeviews_spark.operators import dedup, graph_iter
-
-        docs = pages.select("doc_id", F.col("text"))
-        pairs = dedup.jaccard_pairs_exact(docs, n=3, threshold=0.5, max_df=1000)
-        comp = graph_iter.connected_components(
-            pairs, src="doc_id_a", dst="doc_id_b"
-        ).select(F.col("node").alias("doc_id"), "component")
-        return docs.select("doc_id").join(comp, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id")).alias("group_id"),
-        )
-
-    groups = pipe.stage("dedup_groups", dedup_stage)
-
-    # stage 6: embedding near-dup groups — multi-probe hyperplane LSH pairs
-    # over the embeddings table -> connected components -> (vec_id, group_id).
-    # The cross-modal leg of the training-data job: text dedup (stage 5) and
-    # embedding dedup share the identical pairs -> components -> survivors
-    # composition.
-    def emb_dedup_stage():
-        from tree_sitter_codeviews_spark.operators import dedup, graph_iter
-        from tree_sitter_codeviews_spark.sources.testdata import load_table
-
-        embs = load_table(spark, args.sf_dir, "embeddings")
-        pairs = dedup.embedding_lsh_dups(embs, threshold=0.4)
-        comp = graph_iter.connected_components(
-            pairs, src="vec_id_a", dst="vec_id_b"
-        ).select(F.col("node").alias("vec_id"), "component")
-        return embs.select("vec_id").join(comp, "vec_id", "left").select(
-            "vec_id",
-            F.coalesce(F.col("component"), F.col("vec_id")).alias("group_id"),
-        )
-
-    emb_groups = pipe.stage("emb_dedup_groups", emb_dedup_stage)
-
-    # stage 7: train-set materialization — what actually ships to training.
-    # Dedup group representatives -> drop benchmark-contaminated docs ->
-    # PII scrub -> distributed-prefix-sum packing into 512-token bins.
-    def train_set_stage():
-        from tree_sitter_codeviews_spark.operators import curation
-
-        docs = pages.select("doc_id", "text")
-        reps = groups.filter(F.col("doc_id") == F.col("group_id")).select("doc_id")
-        survivors = docs.join(reps, "doc_id")
-        decon = curation.decontaminate(survivors, n=4)
-        keep = decon.filter(~F.col("contaminated")).select("doc_id")
-        clean = survivors.join(keep, "doc_id")
-        packed = curation.pack_sequences(clean, budget=512)
-        scrub = curation.pii_scrub(clean)
-        return packed.join(scrub.select("doc_id", "clean_hash"), "doc_id")
-
-    train_set = pipe.stage("train_set", train_set_stage)
+    docs = pages.select("doc_id", "text")
+    groups = pipe.stage("dedup_groups", lambda: queries.doc_groups(docs))
+    emb_groups = pipe.stage(
+        "emb_dedup_groups",
+        lambda: queries.emb_groups(load_table(spark, args.sf_dir, "embeddings")),
+    )
+    train_set = pipe.stage("train_set", lambda: queries.train_set_from(docs, groups))
 
     print(
         f"job={args.job_id} pages={pages.count()} entities={entities.count()} "

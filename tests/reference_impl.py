@@ -1,0 +1,209 @@
+"""Reference implementations the tests pin the engine's native paths to.
+
+Scalar Python and numpy twins of the multimedia hashes, the text language
+ID and fingerprint, the segment-crossing predicate, the cell hierarchy,
+the brute-force kNN and the S2 grid upscale. The engine never calls them,
+so they live with the tests; each reads the engine's constants, so a
+changed constant shows up as a test failure.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
+from tree_sitter_codeviews_spark.cells import morton_decode_np, morton_np
+from tree_sitter_codeviews_spark.operators import multimodal, textstats
+from tree_sitter_codeviews_spark.operators.knn import _dist_sq
+
+
+def frame_hash_py(win: bytes) -> int:
+    """Reference scalar hash of one window (tests + oracle parity)."""
+    h = 0
+    for v in win:
+        h = (h * 131 + v) % multimodal._FRAME_MOD
+    return h
+
+
+def ahash_py(b: bytes) -> tuple[int, int]:
+    """Reference scalar average-hash: 64 byte-blocks, bit j set iff block
+    mean > global mean, compared via exact integer cross-multiplication
+    (block_sum * n > total_sum * block_len — no float division anywhere).
+    Returned as (hi32, lo32) halves so neither engine touches the int64
+    sign bit. Empty blocks (n < 64) contribute 0 bits."""
+    n = len(b)
+    if n == 0:
+        return 0, 0
+    total = sum(b)
+    hi = lo = 0
+    for j in range(64):
+        s = (j * n) // 64
+        e = ((j + 1) * n) // 64
+        if e > s:
+            blk = sum(b[s:e])
+            if blk * n > total * (e - s):
+                if j < 32:
+                    lo |= 1 << j
+                else:
+                    hi |= 1 << (j - 32)
+    return hi, lo
+
+
+def langid_py(t: str) -> str:
+    """Reference scalar implementation (tests pin the vectorized UDF to it)."""
+    if t is None or not t:
+        return "und"
+    if any("一" <= ch <= "鿿" for ch in t[:200]):
+        return "zh"
+    scores = {
+        lang: sum(t.count(g) for g in grams)
+        for lang, grams in textstats._PROFILES.items()
+        if grams
+    }
+    best = max(scores, key=lambda k: (scores[k], k))
+    return best if scores[best] > 0 else "und"
+
+
+def fingerprint_py(text: str) -> int:
+    """Reference scalar implementation (tests pin the native column to it)."""
+    import hashlib
+
+    fp = 0
+    for tok in text.split(" "):
+        th = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:7], 16)
+        fp = (fp * textstats._FP_BASE + th) % textstats._FP_MOD
+    return fp
+
+
+def segments_intersect_np(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Vectorized numpy twin of seg_intersect_pred_sql for property tests:
+    a, b are (N, 4) int64 arrays of (x0, y0, x1, y1) row pairs."""
+    a = np.asarray(a, dtype=np.int64)
+    b = np.asarray(b, dtype=np.int64)
+
+    def cross(ox, oy, px, py, qx, qy):
+        return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
+
+    d1 = cross(b[:, 0], b[:, 1], b[:, 2], b[:, 3], a[:, 0], a[:, 1])
+    d2 = cross(b[:, 0], b[:, 1], b[:, 2], b[:, 3], a[:, 2], a[:, 3])
+    d3 = cross(a[:, 0], a[:, 1], a[:, 2], a[:, 3], b[:, 0], b[:, 1])
+    d4 = cross(a[:, 0], a[:, 1], a[:, 2], a[:, 3], b[:, 2], b[:, 3])
+    gen = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
+        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
+    )
+
+    def onseg(s, px, py):
+        return (
+            (np.minimum(s[:, 0], s[:, 2]) <= px) & (px <= np.maximum(s[:, 0], s[:, 2]))
+            & (np.minimum(s[:, 1], s[:, 3]) <= py) & (py <= np.maximum(s[:, 1], s[:, 3]))
+        )
+
+    touch = (
+        ((d1 == 0) & onseg(b, a[:, 0], a[:, 1]))
+        | ((d2 == 0) & onseg(b, a[:, 2], a[:, 3]))
+        | ((d3 == 0) & onseg(a, b[:, 0], b[:, 1]))
+        | ((d4 == 0) & onseg(a, b[:, 2], b[:, 3]))
+    )
+    return gen | touch
+
+
+def parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
+    """Parent cell ``steps`` resolutions coarser — pure truncation."""
+    return cell >> (2 * steps)
+
+
+def children_np(cell: int, res_from: int, res_to: int) -> np.ndarray:
+    """All descendant cells of ``cell`` (at res_from) at finer res_to."""
+    k = 2 * (res_to - res_from)
+    base = np.int64(cell) << k
+    return base + np.arange(1 << k, dtype=np.int64)
+
+
+def cell_center_lonlat(cell: np.ndarray, res: int):
+    x, y = morton_decode_np(np.asarray(cell, dtype=np.int64), res)
+    n = 1 << res
+    lon = -180.0 + 360.0 * (x + 0.5) / n
+    lat = -90.0 + 180.0 * (y + 0.5) / n
+    return lon, lat
+
+
+def ring_cells_np(x: np.ndarray, y: np.ndarray, res: int, t: int) -> np.ndarray:
+    """For each (x,y): Morton ids of the ring at Chebyshev distance exactly t.
+
+    Returns shape (len(x), 8t) for t>0, (len(x), 1) for t==0. Cells off the
+    grid edge are returned as -1 (callers filter).
+    ``kRing(t)`` (H3 vocabulary) = union of rings 0..t.
+    """
+    n = 1 << res
+    if t == 0:
+        offs = [(0, 0)]
+    else:
+        offs = []
+        for dx in range(-t, t + 1):
+            for dy in (-t, t):
+                offs.append((dx, dy))
+        for dy in range(-t + 1, t):
+            for dx in (-t, t):
+                offs.append((dx, dy))
+    out = np.empty((len(x), len(offs)), dtype=np.int64)
+    for j, (dx, dy) in enumerate(offs):
+        xx = x + dx
+        yy = y + dy
+        ok = (xx >= 0) & (xx < n) & (yy >= 0) & (yy < n)
+        m = morton_np(np.clip(xx, 0, n - 1), np.clip(yy, 0, n - 1), res)
+        out[:, j] = np.where(ok, m, -1)
+    return out
+
+
+def compact_cells_np(cells: np.ndarray, res: int) -> list[tuple[int, int]]:
+    """H3-`compact`-style: replace any 4 complete siblings by their parent,
+    recursively. Input: unique res-r cells. Output: list of (res, cell)."""
+    out: list[tuple[int, int]] = []
+    cur = np.unique(np.asarray(cells, dtype=np.int64))
+    r = res
+    while r > 0 and len(cur):
+        parents, counts = np.unique(cur >> 2, return_counts=True)
+        full = parents[counts == 4]
+        if len(full) == 0:
+            out.extend((r, int(c)) for c in cur)
+            break
+        full_set = set(full.tolist())
+        keep = cur[~np.isin(cur >> 2, full)]
+        out.extend((r, int(c)) for c in keep)
+        cur = np.fromiter(full_set, dtype=np.int64, count=len(full_set))
+        cur.sort()
+        r -= 1
+    else:
+        out.extend((r, int(c)) for c in cur)
+    return out
+
+
+def knn_brute(points: DataFrame, k: int = 5, id_col: str = "doc_id") -> DataFrame:
+    """O(n^2) reference implementation (tests / tiny scales only)."""
+    a = points.select(
+        F.col(id_col).alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
+    )
+    b = points.select(
+        F.col(id_col).alias("nid"), F.col("lon").alias("nlon"), F.col("lat").alias("nlat")
+    )
+    w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(), F.col("nid").asc())
+    return (
+        a.crossJoin(b)
+        .filter(F.col("qid") != F.col("nid"))
+        .select(
+            "qid", "nid",
+            _dist_sq(F.col("qlon"), F.col("qlat"), F.col("nlon"), F.col("nlat")).alias("dist_sq"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias(id_col), F.col("nid").alias("neighbor_id"), "rank", "dist_sq"
+        )
+    )
+
+
+def upscale_grid_np(g: np.ndarray, from_res: int, to_res: int) -> np.ndarray:
+    k = to_res - from_res
+    g = np.asarray(g, dtype=np.int64)
+    return (g << k) + (1 << (k - 1)) if k > 0 else g

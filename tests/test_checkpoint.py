@@ -73,19 +73,40 @@ def test_chunked_stage_resumes_only_pending_chunks(spark, tmp_path):
 
 
 def test_pipeline_job_end_to_end_and_resume(spark, tmp_path, sf_tiny):
-    """The spark-submit entry point, driven in-process: full run then a
-    resume run that recomputes nothing and returns identical counts."""
+    """The spark-submit entry point, driven in-process: full run, the
+    dedup and train-set stages checked against their DuckDB oracles over
+    the job's own inputs, then a resume run that recomputes nothing and
+    returns identical counts."""
     import jobs.run_pipeline as rp
+    from tests.oracle_util import assert_matches
+    from tree_sitter_codeviews_spark import oracle
 
-    argv = ["--sf-dir", sf_tiny, "--checkpoint-root", str(tmp_path), "--job-id", "e2e"]
+    root = tmp_path / "ckpt"
+    argv = ["--sf-dir", sf_tiny, "--checkpoint-root", str(root), "--job-id", "e2e"]
     rp.main(argv, spark=spark)
 
-    p = Pipeline(spark, str(tmp_path), "e2e")
+    p = Pipeline(spark, str(root), "e2e")
     stages = {r["stage"] for r in p.lineage().select("stage").distinct().collect()}
     assert stages == {"pages", "entities", "triples", "tiles", "dedup_groups",
                       "emb_dedup_groups", "train_set"}
 
+    # the oracles read the job's page text as `documents`
+    def stage(name):
+        return spark.read.parquet(str(root / "e2e" / "stages" / name))
+
+    tables = tmp_path / "tables"
+    tables.mkdir()
+    stage("pages").select("doc_id", "text").toPandas().to_parquet(
+        tables / "documents.parquet", index=False)
+    shutil.copy(os.path.join(sf_tiny, "embeddings.parquet"), tables)
+    groups = stage("dedup_groups")
+    assert_matches(groups, str(tables), oracle.dedup_groups_sql(), "dedup_groups")
+    assert_matches(stage("emb_dedup_groups"), str(tables),
+                   oracle.dedup_groups_embedding_sql(), "emb_dedup_groups")
+    assert_matches(stage("train_set"), str(tables), oracle.train_set_sql(), "train_set")
+    assert groups.filter(F.col("doc_id") != F.col("group_id")).count() > 0
+
     # resume: no stage dirs are recomputed (metrics row count unchanged)
     n_metrics_before = p.metrics().count()
     rp.main(argv, spark=spark)
-    assert Pipeline(spark, str(tmp_path), "e2e").metrics().count() == n_metrics_before
+    assert Pipeline(spark, str(root), "e2e").metrics().count() == n_metrics_before

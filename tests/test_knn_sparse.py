@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from tree_sitter_codeviews_spark import layers
 from tree_sitter_codeviews_spark.operators import knn
+from tests import reference_impl
 
 
 def _sparse_points(spark):
@@ -36,7 +37,7 @@ def test_knn_ring_sparse_matches_brute(spark):
     }
     want = {
         (r.doc_id, r.rank): (r.neighbor_id, r.dist_sq)
-        for r in knn.knn_brute(pts, k=3).collect()
+        for r in reference_impl.knn_brute(pts, k=3).collect()
     }
     assert got == want
 

@@ -98,3 +98,57 @@ def test_oracle_shares_only_engine_constants():
         and n.value.id in ("cells", "geometry", "s2")
     }
     assert used <= ORACLE_ENGINE_HELPERS, sorted(used - ORACLE_ENGINE_HELPERS)
+
+
+def test_package_names_only_existing_oracle_fragments():
+    """Every ``oracle._name`` the package's source mentions (docstrings
+    included) is an attribute of ``oracle``: a renamed fragment leaves no
+    dangling pointer for a reader to chase."""
+    import pathlib
+    import re
+
+    from tree_sitter_codeviews_spark import oracle
+
+    pkg = pathlib.Path(oracle.__file__).parent
+    refs = {
+        m for f in pkg.rglob("*.py")
+        for m in re.findall(r"\boracle\.(_\w+)", f.read_text())
+    }
+    assert refs
+    assert not sorted(r for r in refs if not hasattr(oracle, r))
+
+
+def _repeated_block_lines(path, window=5, min_chars=60) -> int:
+    """Lines that sit in a window of ``window`` consecutive non-blank,
+    non-comment lines (whitespace-collapsed, at least ``min_chars``
+    characters together) that occurs at least twice in the file."""
+    import re
+    from collections import defaultdict
+
+    lines = [
+        (no, re.sub(r"\s+", " ", text.strip()))
+        for no, text in enumerate(path.read_text().splitlines())
+        if text.strip() and not text.strip().startswith("#")
+    ]
+    starts = defaultdict(list)
+    for k in range(len(lines) - window + 1):
+        win = tuple(t for _, t in lines[k:k + window])
+        if sum(map(len, win)) >= min_chars:
+            starts[win].append(k)
+    hit = {
+        lines[j][0] for ks in starts.values() if len(ks) > 1
+        for k in ks for j in range(k, k + window)
+    }
+    return len(hit)
+
+
+def test_queries_and_oracle_write_each_block_once():
+    """Each recurring composition in the engine's query surface and in its
+    DuckDB oracle is one helper, not a pasted block."""
+    import pathlib
+
+    from tree_sitter_codeviews_spark import oracle, queries
+
+    for mod in (queries, oracle):
+        path = pathlib.Path(mod.__file__)
+        assert _repeated_block_lines(path) == 0, path.name

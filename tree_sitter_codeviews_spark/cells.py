@@ -66,77 +66,6 @@ def cell_from_lonlat_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarra
     return morton_np(x, y, res)
 
 
-def parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
-    """Parent cell ``steps`` resolutions coarser — pure truncation."""
-    return cell >> (2 * steps)
-
-
-def children_np(cell: int, res_from: int, res_to: int) -> np.ndarray:
-    """All descendant cells of ``cell`` (at res_from) at finer res_to."""
-    k = 2 * (res_to - res_from)
-    base = np.int64(cell) << k
-    return base + np.arange(1 << k, dtype=np.int64)
-
-
-def cell_center_lonlat(cell: np.ndarray, res: int):
-    x, y = morton_decode_np(np.asarray(cell, dtype=np.int64), res)
-    n = 1 << res
-    lon = -180.0 + 360.0 * (x + 0.5) / n
-    lat = -90.0 + 180.0 * (y + 0.5) / n
-    return lon, lat
-
-
-def ring_cells_np(x: np.ndarray, y: np.ndarray, res: int, t: int) -> np.ndarray:
-    """For each (x,y): Morton ids of the ring at Chebyshev distance exactly t.
-
-    Returns shape (len(x), 8t) for t>0, (len(x), 1) for t==0. Cells off the
-    grid edge are returned as -1 (callers filter).
-    ``kRing(t)`` (H3 vocabulary) = union of rings 0..t.
-    """
-    n = 1 << res
-    if t == 0:
-        offs = [(0, 0)]
-    else:
-        offs = []
-        for dx in range(-t, t + 1):
-            for dy in (-t, t):
-                offs.append((dx, dy))
-        for dy in range(-t + 1, t):
-            for dx in (-t, t):
-                offs.append((dx, dy))
-    out = np.empty((len(x), len(offs)), dtype=np.int64)
-    for j, (dx, dy) in enumerate(offs):
-        xx = x + dx
-        yy = y + dy
-        ok = (xx >= 0) & (xx < n) & (yy >= 0) & (yy < n)
-        m = morton_np(np.clip(xx, 0, n - 1), np.clip(yy, 0, n - 1), res)
-        out[:, j] = np.where(ok, m, -1)
-    return out
-
-
-def compact_cells_np(cells: np.ndarray, res: int) -> list[tuple[int, int]]:
-    """H3-`compact`-style: replace any 4 complete siblings by their parent,
-    recursively. Input: unique res-r cells. Output: list of (res, cell)."""
-    out: list[tuple[int, int]] = []
-    cur = np.unique(np.asarray(cells, dtype=np.int64))
-    r = res
-    while r > 0 and len(cur):
-        parents, counts = np.unique(cur >> 2, return_counts=True)
-        full = parents[counts == 4]
-        if len(full) == 0:
-            out.extend((r, int(c)) for c in cur)
-            break
-        full_set = set(full.tolist())
-        keep = cur[~np.isin(cur >> 2, full)]
-        out.extend((r, int(c)) for c in keep)
-        cur = np.fromiter(full_set, dtype=np.int64, count=len(full_set))
-        cur.sort()
-        r -= 1
-    else:
-        out.extend((r, int(c)) for c in cur)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Spark Column expressions (JVM-side — the hot path; no Python per row)
 # ---------------------------------------------------------------------------

@@ -186,38 +186,6 @@ def seg_intersect_pred_sql(
     return f"({general} OR {touch})"
 
 
-def segments_intersect_np(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Vectorized numpy twin of seg_intersect_pred_sql for property tests:
-    a, b are (N, 4) int64 arrays of (x0, y0, x1, y1) row pairs."""
-    a = np.asarray(a, dtype=np.int64)
-    b = np.asarray(b, dtype=np.int64)
-
-    def cross(ox, oy, px, py, qx, qy):
-        return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
-
-    d1 = cross(b[:, 0], b[:, 1], b[:, 2], b[:, 3], a[:, 0], a[:, 1])
-    d2 = cross(b[:, 0], b[:, 1], b[:, 2], b[:, 3], a[:, 2], a[:, 3])
-    d3 = cross(a[:, 0], a[:, 1], a[:, 2], a[:, 3], b[:, 0], b[:, 1])
-    d4 = cross(a[:, 0], a[:, 1], a[:, 2], a[:, 3], b[:, 2], b[:, 3])
-    gen = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
-        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
-    )
-
-    def onseg(s, px, py):
-        return (
-            (np.minimum(s[:, 0], s[:, 2]) <= px) & (px <= np.maximum(s[:, 0], s[:, 2]))
-            & (np.minimum(s[:, 1], s[:, 3]) <= py) & (py <= np.maximum(s[:, 1], s[:, 3]))
-        )
-
-    touch = (
-        ((d1 == 0) & onseg(b, a[:, 0], a[:, 1]))
-        | ((d2 == 0) & onseg(b, a[:, 2], a[:, 3]))
-        | ((d3 == 0) & onseg(a, b[:, 0], b[:, 1]))
-        | ((d4 == 0) & onseg(a, b[:, 2], b[:, 3]))
-    )
-    return gen | touch
-
-
 # ---------------------------------------------------------------------------
 # convex hull (Andrew monotone chain, exact python-int cross products)
 # ---------------------------------------------------------------------------

@@ -247,30 +247,6 @@ def _knn_driver(
     )
 
 
-def knn_brute(points: DataFrame, k: int = 5, id_col: str = "doc_id") -> DataFrame:
-    """O(n^2) reference implementation (tests / tiny scales only)."""
-    a = points.select(
-        F.col(id_col).alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
-    )
-    b = points.select(
-        F.col(id_col).alias("nid"), F.col("lon").alias("nlon"), F.col("lat").alias("nlat")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(), F.col("nid").asc())
-    return (
-        a.crossJoin(b)
-        .filter(F.col("qid") != F.col("nid"))
-        .select(
-            "qid", "nid",
-            _dist_sq(F.col("qlon"), F.col("qlat"), F.col("nlon"), F.col("nlat")).alias("dist_sq"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col), F.col("nid").alias("neighbor_id"), "rank", "dist_sq"
-        )
-    )
-
-
 def distance_join(
     points: DataFrame,
     eps: float = 2.0,

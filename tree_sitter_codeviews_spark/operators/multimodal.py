@@ -77,14 +77,6 @@ FRAME_SCHEMA = T.StructType([
 _FRAME_MOD = (1 << 31) - 1  # 131 * 2^31 + 255 < 2^39: int64-safe vectorization
 
 
-def frame_hash_py(win: bytes) -> int:
-    """Reference scalar hash of one window (tests + oracle parity)."""
-    h = 0
-    for v in win:
-        h = (h * 131 + v) % _FRAME_MOD
-    return h
-
-
 def _hash_windows_np(wins: list[bytes]) -> np.ndarray:
     """Vectorized Horner fold over up-to-64-byte windows: one numpy op per
     byte *position* (64 total), masked past each window's length — no
@@ -206,30 +198,6 @@ AHASH_SCHEMA = T.StructType([
     T.StructField("ahash_hi", T.LongType()),
     T.StructField("ahash_lo", T.LongType()),
 ])
-
-
-def ahash_py(b: bytes) -> tuple[int, int]:
-    """Reference scalar average-hash: 64 byte-blocks, bit j set iff block
-    mean > global mean, compared via exact integer cross-multiplication
-    (block_sum * n > total_sum * block_len — no float division anywhere).
-    Returned as (hi32, lo32) halves so neither engine touches the int64
-    sign bit. Empty blocks (n < 64) contribute 0 bits."""
-    n = len(b)
-    if n == 0:
-        return 0, 0
-    total = sum(b)
-    hi = lo = 0
-    for j in range(64):
-        s = (j * n) // 64
-        e = ((j + 1) * n) // 64
-        if e > s:
-            blk = sum(b[s:e])
-            if blk * n > total * (e - s):
-                if j < 32:
-                    lo |= 1 << j
-                else:
-                    hi |= 1 << (j - 32)
-    return hi, lo
 
 
 def ahash(payloads: DataFrame) -> DataFrame:

@@ -83,21 +83,6 @@ _PROFILES = {
 }
 
 
-def langid_py(t: str) -> str:
-    """Reference scalar implementation (tests pin the vectorized UDF to it)."""
-    if t is None or not t:
-        return "und"
-    if any("一" <= ch <= "鿿" for ch in t[:200]):
-        return "zh"
-    scores = {
-        lang: sum(t.count(g) for g in grams)
-        for lang, grams in _PROFILES.items()
-        if grams
-    }
-    best = max(scores, key=lambda k: (scores[k], k))
-    return best if scores[best] > 0 else "und"
-
-
 @pandas_udf(T.StringType())
 def langid_udf(text: pd.Series) -> pd.Series:
     """Vectorized: one ``str.count`` pass per marker trigram (C regex loop),
@@ -136,17 +121,6 @@ def langid(docs: DataFrame) -> DataFrame:
 
 _FP_BASE = 1000003
 _FP_MOD = (1 << 31) - 1
-
-
-def fingerprint_py(text: str) -> int:
-    """Reference scalar implementation (tests pin the native column to it)."""
-    import hashlib
-
-    fp = 0
-    for tok in text.split(" "):
-        th = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:7], 16)
-        fp = (fp * _FP_BASE + th) % _FP_MOD
-    return fp
 
 
 def fingerprint_col(text: F.Column) -> F.Column:

@@ -4385,15 +4385,18 @@ raster AS (
 
 
 def geo_map_match_sql() -> str:
-    """Quadratic oracle: every ping x every raster point (no cell-ring
-    prefilter), same radius cut and packed argmin as the engine."""
+    """Every ping x every raster point inside its 16-px radius box, i.e.
+    abs(ex - px) <= 16 AND abs(ey - py) <= 16 (a band join, no cell-ring
+    prefilter; d2 <= 256 implies the box), same radius cut and packed
+    argmin as the engine."""
     return f"""
 WITH {_event_points_cte()},
 {_lines_raster_cte().lstrip()},
 cand AS (
   SELECT ev.user_id, ev.event_id, raster.line_id,
          (ex - px) * (ex - px) + (ey - py) * (ey - py) AS d2
-  FROM ev CROSS JOIN raster
+  FROM ev JOIN raster
+    ON px BETWEEN ex - 16 AND ex + 16 AND py BETWEEN ey - 16 AND ey + 16
 ),
 best AS (
   SELECT user_id, event_id, min(d2 * 1024 + line_id) AS pack

@@ -21,6 +21,14 @@ from .sources import pages as pages_src
 # geo suite
 # ---------------------------------------------------------------------------
 
+def _grid_cell(res: int) -> Column:
+    """The res-``res`` Morton cell of a point's (gx, gy) grid coordinates."""
+    shift = layers.GRID_RES - res
+    return F.expr(cells.morton_sql(
+        f"shiftright(gx, {shift})", f"shiftright(gy, {shift})", res
+    ))
+
+
 def geo_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, res, cell_id) at res 7..10 — one scan, parents by truncation."""
     pts = pages_src.doc_points_df(spark, sf_dir)
@@ -89,13 +97,18 @@ def geo_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def page_triples(ents: DataFrame, spark: SparkSession) -> DataFrame:
+    """Flagship stage 3: entity rows -> two-phase PIP -> distinct (url,
+    cell_id, polygon_id) triples."""
+    joined = pip_join.pip_join(ents, spark, keys=("url",))
+    return joined.select("url", "cell_id", "polygon_id").distinct()
+
+
 def geo_pip_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: pages -> extract -> encode -> two-phase PIP -> triples."""
     pages = pages_src.pages_df(spark, sf_dir)
     gaz = pages_src.gazetteer_df(spark)
-    ents = extract.page_entities(pages, gaz)
-    joined = pip_join.pip_join(ents, spark, keys=("url",))
-    return joined.select("url", "cell_id", "polygon_id").distinct()
+    return page_triples(extract.page_entities(pages, gaz), spark)
 
 
 def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,11 +194,7 @@ def geo_tiles_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked path; ``geo_tiles_approx`` is the approx variant."""
     pts = pages_src.doc_points_df(spark, sf_dir)
     host = (F.col("doc_id") % 100).alias("host_id")
-    cell7 = F.expr(cells.morton_sql(
-        f"shiftright(gx, {layers.GRID_RES - 7})",
-        f"shiftright(gy, {layers.GRID_RES - 7})",
-        7,
-    ))
+    cell7 = _grid_cell(7)
     return (
         pts.select(cell7.alias("cell_id"), host)
         .groupBy("cell_id")
@@ -201,11 +210,7 @@ def geo_tiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct would shuffle every (cell, host) pair. Rows-only check (HLL
     estimates are engine-specific by design)."""
     pts = pages_src.doc_points_df(spark, sf_dir)
-    cell7 = F.expr(cells.morton_sql(
-        f"shiftright(gx, {layers.GRID_RES - 7})",
-        f"shiftright(gy, {layers.GRID_RES - 7})",
-        7,
-    ))
+    cell7 = _grid_cell(7)
     return (
         pts.select(cell7.alias("cell_id"), (F.col("doc_id") % 100).alias("host_id"))
         .groupBy("cell_id")
@@ -288,11 +293,7 @@ def _doc_graph(spark: SparkSession, sf_dir: str):
     from pyspark.sql import Window
 
     pts = pages_src.doc_points_df(spark, sf_dir)
-    cell5 = F.expr(cells.morton_sql(
-        f"shiftright(gx, {layers.GRID_RES - 5})",
-        f"shiftright(gy, {layers.GRID_RES - 5})",
-        5,
-    ))
+    cell5 = _grid_cell(5)
     ntype = F.element_at(
         F.array(F.lit("city"), F.lit("poi"), F.lit("region")),
         (F.col("doc_id") % 3 + 1).cast("int"),
@@ -350,6 +351,14 @@ def graph_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _var_nodes(nodes: DataFrame, mod: int, rem: int) -> DataFrame:
+    """(node, var = node_id % 3) for the doc-chain nodes with node_id % mod
+    == rem: the fixture's definitions are (4, 1), its uses (5, 2)."""
+    return nodes.filter(F.col("node_id") % mod == rem).select(
+        F.col("node_id").alias("node"), (F.col("node_id") % 3).alias("var")
+    )
+
+
 def graph_rda(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reaching-definitions over the broken doc chain — the reference's
     central dataflow analysis (DFG_RDA / SDFG gen-kill propagation) as a
@@ -360,9 +369,7 @@ def graph_rda(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nodes, _ = _doc_graph(spark, sf_dir)
     edges = _broken_edges(spark, sf_dir)
-    defs = nodes.filter(F.col("node_id") % 4 == 1).select(
-        F.col("node_id").alias("node"), (F.col("node_id") % 3).alias("var")
-    )
+    defs = _var_nodes(nodes, 4, 1)
     return graph_iter.reaching_definitions(edges, defs).select(
         F.col("node").alias("node_id"), "var", "def_node"
     )
@@ -380,13 +387,9 @@ def graph_sdfg(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes, _ = _doc_graph(spark, sf_dir)
     edges = _broken_edges(spark, sf_dir)
     cfg = edges.select("src", "dst").withColumn("edge_type", F.lit("cfg"))
-    defs = nodes.filter(F.col("node_id") % 4 == 1).select(
-        F.col("node_id").alias("node"), (F.col("node_id") % 3).alias("var")
-    )
+    defs = _var_nodes(nodes, 4, 1)
     rda = graph_iter.reaching_definitions(edges, defs)
-    uses = nodes.filter(F.col("node_id") % 5 == 2).select(
-        F.col("node_id").alias("node"), (F.col("node_id") % 3).alias("var")
-    )
+    uses = _var_nodes(nodes, 5, 2)
     dfg = (
         rda.join(uses, ["node", "var"])
         .select(F.col("def_node").alias("src"), F.col("node").alias("dst"))
@@ -466,13 +469,9 @@ def graph_sdfg_interproc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src", "dst", F.lit("cfg").alias("edge_type"),
         dash.alias("var_out"), dash.alias("var_in"),
     )
-    defs = nodes.filter(F.col("node_id") % 4 == 1).select(
-        F.col("node_id").alias("node"), (F.col("node_id") % 3).alias("var")
-    )
+    defs = _var_nodes(nodes, 4, 1)
     rda = graph_iter.reaching_definitions(edges, defs)
-    uses = nodes.filter(F.col("node_id") % 5 == 2).select(
-        F.col("node_id").alias("node"), (F.col("node_id") % 3).alias("var")
-    )
+    uses = _var_nodes(nodes, 5, 2)
     var_s = F.col("var").cast("string")
     dfg = rda.join(uses, ["node", "var"]).select(
         F.col("def_node").alias("src"), F.col("node").alias("dst"),
@@ -551,22 +550,44 @@ def geo_entities_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def component_groups(ids: DataFrame, pairs: DataFrame, key: str) -> DataFrame:
+    """(key, group_id) for every row of ``ids``: connected components over
+    the (key_a, key_b) pair graph, group_id = the component's min key; a
+    row in no pair is its own group."""
+    from .operators import graph_iter
+
+    comp = graph_iter.connected_components(
+        pairs, src=f"{key}_a", dst=f"{key}_b"
+    ).select(F.col("node").alias(key), "component")
+    return ids.select(key).join(comp, key, "left").select(
+        key, F.coalesce(F.col("component"), F.col(key)).alias("group_id")
+    )
+
+
+def doc_groups(docs: DataFrame) -> DataFrame:
+    """Flagship stage 5: (doc_id, group_id) over (doc_id, text) rows from
+    the exact 3-gram Jaccard >= 0.5 pair graph."""
+    from .operators import dedup
+
+    pairs = dedup.jaccard_pairs_exact(docs, n=3, threshold=0.5)
+    return component_groups(docs, pairs, "doc_id")
+
+
+def emb_groups(embs: DataFrame) -> DataFrame:
+    """Flagship stage 6: (vec_id, group_id) from the deterministic
+    multi-probe hyperplane-LSH cosine >= 0.4 pair graph."""
+    from .operators import dedup
+
+    return component_groups(embs, dedup.embedding_lsh_dups(embs, threshold=0.4), "vec_id")
+
+
 def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup group formation: connected components over the exact-Jaccard
     pair graph; every doc gets a group (singletons map to themselves) and
     keep_doc_id = group representative = min doc_id. The step every real
     dedup pipeline needs after pair generation (the LSH path composes with
     the identical component call)."""
-    from .operators import dedup, graph_iter
-
-    docs = _docs(spark, sf_dir)
-    pairs = dedup.jaccard_pairs_exact(docs, n=3, threshold=0.5)
-    comp = graph_iter.connected_components(
-        pairs, src="doc_id_a", dst="doc_id_b"
-    ).select(F.col("node").alias("doc_id"), "component")
-    return docs.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("component"), F.col("doc_id")).alias("group_id")
-    )
+    return doc_groups(_docs(spark, sf_dir))
 
 
 def dedup_groups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,16 +595,11 @@ def dedup_groups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut — the composition an actual 100 TB dedup pipeline runs (candidates
     are probabilistic, so rows-only; the exact-pair variant ``dedup_groups``
     is the oracle-green twin)."""
-    from .operators import dedup, graph_iter
+    from .operators import dedup
 
     docs = _docs(spark, sf_dir)
     pairs = dedup.minhash_lsh_dups(docs, n=3, threshold=0.5, max_df=200)
-    comp = graph_iter.connected_components(
-        pairs, src="doc_id_a", dst="doc_id_b"
-    ).select(F.col("node").alias("doc_id"), "component")
-    return docs.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("component"), F.col("doc_id")).alias("group_id")
-    )
+    return component_groups(docs, pairs, "doc_id")
 
 
 def alias_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -802,36 +818,16 @@ def dedup_groups_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flagship pipeline, jobs/run_pipeline.py) — every vector gets a
     group, singletons map to themselves. Oracle-green end to end because
     the LSH pair generator itself is deterministic (integer planes)."""
-    from .operators import dedup, graph_iter
-
-    embs = _embs(spark, sf_dir)
-    pairs = dedup.embedding_lsh_dups(embs, threshold=0.4)
-    comp = graph_iter.connected_components(
-        pairs, src="vec_id_a", dst="vec_id_b"
-    ).select(F.col("node").alias("vec_id"), "component")
-    return embs.select("vec_id").join(comp, "vec_id", "left").select(
-        "vec_id", F.coalesce(F.col("component"), F.col("vec_id")).alias("group_id")
-    )
+    return emb_groups(_embs(spark, sf_dir))
 
 
-def train_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship pipeline's stage 7 END-TO-END as one oracle-backed
-    query: exact-Jaccard dedup groups -> group representatives ->
-    benchmark decontamination (4-grams; benchmark docs dropped entirely) ->
-    512-token sequence packing (distributed prefix sum) -> PII scrub hash.
-    The composed (doc_id, n_tokens, bin_id, offset_in_bin, clean_hash)
-    shard table is what ships to training — value-checked against the
-    composed DuckDB mirror."""
-    from .operators import curation, dedup, graph_iter
+def train_set_from(docs: DataFrame, groups: DataFrame) -> DataFrame:
+    """Flagship stage 7 over (doc_id, text) rows and their (doc_id,
+    group_id) dedup groups: group representatives -> benchmark
+    decontamination (4-grams; benchmark docs dropped entirely) -> 512-token
+    sequence packing (distributed prefix sum) -> PII scrub hash."""
+    from .operators import curation
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    pairs = dedup.jaccard_pairs_exact(docs, n=3, threshold=0.5)
-    comp = graph_iter.connected_components(
-        pairs, src="doc_id_a", dst="doc_id_b"
-    ).select(F.col("node").alias("doc_id"), "component")
-    groups = docs.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("component"), F.col("doc_id")).alias("group_id")
-    )
     reps = groups.filter(F.col("doc_id") == F.col("group_id")).select("doc_id")
     # surv feeds FOUR subplans (decontaminate's bench/train shingle legs +
     # its base keep-list + the clean join): checkpoint so the docs scan +
@@ -848,6 +844,16 @@ def train_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = curation.pack_sequences(clean, budget=512)
     scrub = curation.pii_scrub(clean)
     return packed.join(scrub.select("doc_id", "clean_hash"), "doc_id")
+
+
+def train_set(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship pipeline's stage 7 END-TO-END as one oracle-backed
+    query: exact-Jaccard dedup groups, then ``train_set_from``. The
+    composed (doc_id, n_tokens, bin_id, offset_in_bin, clean_hash) shard
+    table is what ships to training — value-checked against the composed
+    DuckDB mirror."""
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    return train_set_from(docs, doc_groups(docs))
 
 
 def graph_grouped_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1148,7 +1154,7 @@ def _crawl_pages(docs: DataFrame) -> DataFrame:
     id = doc_id div 3, same host per group), with tracking params
     (doc_id%4==1), fragments (%4==2), trailing slashes (%4==3), and
     UPPERCASE scheme+host (doc_id%5==0) layered on. Mirrored independently
-    by ``oracle._CRAWL_URLS_CTE``."""
+    by ``oracle._CRAWL_CANON_CTES``."""
     gid = F.expr("doc_id div 3")
     base_lo = F.format_string(
         "https://host%04d.example/doc/%d", gid % 100, gid
@@ -1291,7 +1297,7 @@ def _html_pages(docs: DataFrame) -> DataFrame:
     block, a <script> block containing '<' noise, entity-escaped markup
     inside the body ('&lt;b&gt;note&amp;1&lt;/b&gt;'), and a nav <div> —
     the markup zoo the extractor must strip/decode. Mirrored independently
-    by ``oracle._HTML_PAGE_CTE``."""
+    by ``oracle._HTML_EXTRACT_CTES``."""
     html = F.format_string(
         "<html><head><title>Doc %d &amp; co</title>"
         "<style>body{color:#%d}</style></head>"
@@ -1416,21 +1422,7 @@ def web_ingest_stages(
         "WARC/1.0\nWARC-Target-URI: %s\nContent-Length: %d\n\n%s\n\n",
         F.col("url"), F.length("html"), F.col("html"),
     )
-    blobs = (
-        pages.select(
-            F.expr("doc_id div 5").alias("blob_id"),
-            F.struct(F.col("doc_id"), rec.alias("rec")).alias("s"),
-        )
-        .groupBy("blob_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("s")), lambda s: s["rec"]
-                ),
-                "",
-            ).alias("payload")
-        )
-    )
+    blobs = _blob_payloads(pages, rec)
     # ---- the engine pipeline proper: sees only (blob_id, payload) ------
     recs = webtext.warc_split(blobs)
     ext = webtext.html_extract(
@@ -1835,19 +1827,12 @@ def text_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.gopher_filter(docs.select("doc_id", text.alias("text")))
 
 
-def _warc_blobs(docs: DataFrame) -> DataFrame:
-    """The WARC chunk fixture shared by webtext_warc_records and
-    webtext_wet_export: five docs per chunk, concatenated in doc_id order
-    via array_sort on (doc_id, record) structs. Mirrored independently by
-    the oracles' string_agg-ordered build."""
-    rec = F.format_string(
-        "WARC/1.0\nWARC-Target-URI: https://host%04d.example/doc/%d\n"
-        "Content-Length: %d\n\n%s\n\n",
-        F.col("doc_id") % 100, F.col("doc_id"),
-        F.length("text"), F.col("text"),
-    )
+def _blob_payloads(rows: DataFrame, rec: Column) -> DataFrame:
+    """(blob_id, payload) chunks of five rows (blob_id = doc_id div 5):
+    each row's ``rec`` string concatenated in doc_id order via array_sort
+    on (doc_id, rec) structs."""
     return (
-        docs.select(
+        rows.select(
             F.expr("doc_id div 5").alias("blob_id"),
             F.struct(F.col("doc_id"), rec.alias("rec")).alias("s"),
         )
@@ -1861,6 +1846,19 @@ def _warc_blobs(docs: DataFrame) -> DataFrame:
             ).alias("payload")
         )
     )
+
+
+def _warc_blobs(docs: DataFrame) -> DataFrame:
+    """The WARC chunk fixture shared by webtext_warc_records and
+    webtext_wet_export: ``_blob_payloads`` over one WARC record per doc.
+    Mirrored independently by the oracles' string_agg-ordered build."""
+    rec = F.format_string(
+        "WARC/1.0\nWARC-Target-URI: https://host%04d.example/doc/%d\n"
+        "Content-Length: %d\n\n%s\n\n",
+        F.col("doc_id") % 100, F.col("doc_id"),
+        F.length("text"), F.col("text"),
+    )
+    return _blob_payloads(docs, rec)
 
 
 def webtext_wet_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2566,12 +2564,7 @@ def geo_route_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on the uniform (user, cell) key."""
     from . import cells as cells_mod
 
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "ex", "ey",
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "ex", "ey")
     seg = ev.select(
         "user_id",
         F.lag("ex").over(w).alias("x0"), F.lag("ey").over(w).alias("y0"),
@@ -2597,6 +2590,21 @@ def geo_route_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
+def _neighbours8(spark: SparkSession, tiles: DataFrame, *cols) -> DataFrame:
+    """Each (tx, ty) tile row once per 8-neighbour offset (dx, dy), keyed
+    by the shifted (tx + dx, ty + dy) and carrying ``cols``."""
+    offsets = arrow_local_df(
+        spark,
+        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)],
+        "dx long, dy long",
+    )
+    return tiles.crossJoin(F.broadcast(offsets)).select(
+        (F.col("tx") + F.col("dx")).alias("tx"),
+        (F.col("ty") + F.col("dy")).alias("ty"),
+        *cols,
+    )
+
+
 def geo_tile_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial autocorrelation components of the res-5 doc-density grid (32x32 - dense enough for adjacency at gate scale):
     for each of the 8 neighbor offsets, the pair count and the exact
@@ -2608,16 +2616,7 @@ def geo_tile_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.shiftright("gx", 5).alias("tx"), F.shiftright("gy", 5).alias("ty")
     )
     c = pts.groupBy("tx", "ty").agg(F.count(F.lit(1)).alias("n"))
-    offsets = arrow_local_df(
-        spark,
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)],
-        "dx long, dy long",
-    )
-    shifted = c.crossJoin(F.broadcast(offsets)).select(
-        (F.col("tx") + F.col("dx")).alias("tx"),
-        (F.col("ty") + F.col("dy")).alias("ty"),
-        "dx", "dy", F.col("n").alias("n_nbr"),
-    )
+    shifted = _neighbours8(spark, c, "dx", "dy", F.col("n").alias("n_nbr"))
     return (
         c.join(shifted, ["tx", "ty"])
         .groupBy("dx", "dy")
@@ -2636,13 +2635,8 @@ def geo_tiles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives by (counts are a commutative monoid: merge = re-sum). The oracle
     is the FULL single-pass recompute, so oracle equality proves the
     incremental merge is lossless."""
-    from . import cells as cells_mod
-
     pts = pages_src.doc_points_df(spark, sf_dir).select(
-        "doc_id",
-        F.expr(cells_mod.morton_sql(
-            "shiftright(gx, 3)", "shiftright(gy, 3)", 7
-        )).alias("cell_id"),
+        "doc_id", _grid_cell(7).alias("cell_id")
     )
     base = (
         pts.filter(F.col("doc_id") % 2 == 0)
@@ -2684,16 +2678,7 @@ def geo_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cell_id", F.expr(cells_mod.morton_sql("tx", "ty", 5)))
         .localCheckpoint()  # consumed three times (two join sides + final union)
     )
-    offsets = arrow_local_df(
-        spark,
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)],
-        "dx long, dy long",
-    )
-    nbr = core.crossJoin(F.broadcast(offsets)).select(
-        (F.col("tx") + F.col("dx")).alias("tx"),
-        (F.col("ty") + F.col("dy")).alias("ty"),
-        F.col("cell_id").alias("src"),
-    )
+    nbr = _neighbours8(spark, core, F.col("cell_id").alias("src"))
     edges = nbr.join(core.select("tx", "ty", F.col("cell_id").alias("dst")), ["tx", "ty"]).select("src", "dst")
     cc = graph_iter.connected_components(edges).withColumnRenamed("node", "cell_id")
     return (
@@ -2805,6 +2790,28 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tile pyramid, geohash encode)
 # ---------------------------------------------------------------------------
 
+def _track(spark: SparkSession, sf_dir: str, *cols):
+    """Each user's event points as (user_id, ts, event_id, *cols), and the
+    window that orders a user's track by (ts, event_id)."""
+    from pyspark.sql import Window
+
+    ev = pages_src.event_points_df(spark, sf_dir).select(
+        "user_id", "ts", "event_id", *cols
+    )
+    return ev, Window.partitionBy("user_id").orderBy("ts", "event_id")
+
+
+def _transit_lines(spark: SparkSession) -> DataFrame:
+    """The gazetteer's transit-line dim: (line_id, bx0, by0, bx1, by1)."""
+    return spark.range(layers.N_LINES).select(
+        F.col("id").alias("line_id"),
+        F.expr(layers.LINE_X0_SQL.format(j="id")).alias("bx0"),
+        F.expr(layers.LINE_Y0_SQL.format(j="id")).alias("by0"),
+        F.expr(layers.LINE_X1_SQL.format(j="id")).alias("bx1"),
+        F.expr(layers.LINE_Y1_SQL.format(j="id")).alias("by1"),
+    )
+
+
 def geo_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trajectory-hop x transit-line crossing join: every user's
     consecutive-ping segments (Chebyshev length <= 128 — longer hops are
@@ -2815,12 +2822,8 @@ def geo_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the four-determinant integer refine — the same SQL text the oracle
     runs quadratically (operators/segments.py)."""
     from .operators import segments
-    from pyspark.sql import Window
 
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "ex", "ey")
     seg = (
         ev.select(
             "user_id", F.col("event_id").alias("seg_id"),
@@ -2835,13 +2838,7 @@ def geo_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) <= 128
         )
     )
-    lines = spark.range(layers.N_LINES).select(
-        F.col("id").alias("line_id"),
-        F.expr(layers.LINE_X0_SQL.format(j="id")).alias("bx0"),
-        F.expr(layers.LINE_Y0_SQL.format(j="id")).alias("by0"),
-        F.expr(layers.LINE_X1_SQL.format(j="id")).alias("bx1"),
-        F.expr(layers.LINE_Y1_SQL.format(j="id")).alias("by1"),
-    )
+    lines = _transit_lines(spark)
     return segments.segment_crossing_join(
         seg, lines, id_cols=["user_id", "seg_id"], shift=6
     )
@@ -2922,13 +2919,7 @@ def geo_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = pages_src.event_points_df(spark, sf_dir).select(
         "user_id", "event_id", "ex", "ey",
     )
-    lines = spark.range(layers.N_LINES).select(
-        F.col("id").alias("line_id"),
-        F.expr(layers.LINE_X0_SQL.format(j="id")).alias("bx0"),
-        F.expr(layers.LINE_Y0_SQL.format(j="id")).alias("by0"),
-        F.expr(layers.LINE_X1_SQL.format(j="id")).alias("bx1"),
-        F.expr(layers.LINE_Y1_SQL.format(j="id")).alias("by1"),
-    )
+    lines = _transit_lines(spark)
     raster = segments.rasterize_segments(lines)
     return segments.snap_to_lines(
         ev, raster, id_cols=["user_id", "event_id"], radius=16
@@ -2951,12 +2942,7 @@ def geo_traj_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRAJ_SIMPLIFY_AREA2. Pure window + exact integer cross product —
     zero Python, one shuffle on the user key, the same SQL text as the
     oracle's window CTE."""
-    from pyspark.sql import Window
-
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "ex", "ey")
     t = (
         ev.withColumns({
             "px": F.lag("ex").over(w), "py": F.lag("ey").over(w),
@@ -3117,10 +3103,7 @@ def _stay_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     = the running sum of ``brk``."""
     from pyspark.sql import Window
 
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "sec", "ex", "ey")
     hop = F.greatest(
         F.abs(F.col("ex") - F.lag("ex").over(w)),
         F.abs(F.col("ey") - F.lag("ey").over(w)),
@@ -3413,13 +3396,8 @@ def events_geofence_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     user — two shuffles total, both on uniform keys, no corpus-wide window.
     Reference parity: the def->use edge family's state-change detection
     (SDFG_c.py last-writer tracking) over a spatial state variable."""
-    from pyspark.sql import Window
-
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey"
-    )
+    ev, w = _track(spark, sf_dir, "sec", "ex", "ey")
     pinged = _fence_state(spark, ev, ["user_id", "ts", "event_id", "sec"], "fence")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("fence").over(w)
     return (
         pinged.withColumn("prev", prev)
@@ -3464,12 +3442,7 @@ def events_traj_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     are not hops and never flag. Reference parity: the lead-next edge
     family (CFG_c.py next-statement links) with a physical-plausibility
     predicate on the edge."""
-    from pyspark.sql import Window
-
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "sec", "ex", "ey")
     hops = ev.select(
         "user_id", "event_id", "sec",
         (
@@ -3494,12 +3467,7 @@ def events_traj_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor(sec0/STEP)+1 .. floor(sec1/STEP)), empty when a hop crosses no
     boundary, never a divide-by-zero. One window pass + one bounded
     explode — per-hop factor ceil(dt/STEP), no corpus-wide state."""
-    from pyspark.sql import Window
-
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "sec", "ex", "ey")
     hops = ev.select(
         "user_id",
         F.col("sec").alias("s0"),
@@ -3626,6 +3594,27 @@ def geo_tile_rhythms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stays(
+    spark: SparkSession, sf_dir: str, t0: str, t1: str,
+    centroid: str = "sum({}) div count(*)",
+) -> DataFrame:
+    """One row per stay: a ``_stay_islands`` island of at least
+    STAY_MIN_PINGS pings, with its first and last second as ``t0`` and
+    ``t1`` and its centroid (cx, cy) from the ``centroid`` SQL template
+    over ex and ey."""
+    return (
+        _stay_islands(spark, sf_dir).groupBy("user_id", "island")
+        .agg(
+            F.count(F.lit(1)).alias("n_pings"),
+            F.min("sec").alias(t0),
+            F.max("sec").alias(t1),
+            F.expr(centroid.format("ex")).alias("cx"),
+            F.expr(centroid.format("ey")).alias("cy"),
+        )
+        .filter(F.col("n_pings") >= STAY_MIN_PINGS)
+    )
+
+
 def events_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trip extraction — the stay-to-stay OD segments a mobility pipeline
     feeds to demand models: reuse the stay-point islands (gaps-and-islands
@@ -3636,18 +3625,7 @@ def events_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, all partitioned by the uniform user key."""
     from pyspark.sql import Window
 
-    flagged = _stay_islands(spark, sf_dir)
-    stays = (
-        flagged.groupBy("user_id", "island")
-        .agg(
-            F.count(F.lit(1)).alias("n_pings"),
-            F.min("sec").alias("arrive_sec"),
-            F.max("sec").alias("depart_sec"),
-            F.expr("sum(ex) div count(*)").alias("cx"),
-            F.expr("sum(ey) div count(*)").alias("cy"),
-        )
-        .filter(F.col("n_pings") >= STAY_MIN_PINGS)
-    )
+    stays = _stays(spark, sf_dir, "arrive_sec", "depart_sec")
     ws = Window.partitionBy("user_id").orderBy("island")
     return (
         stays.select(
@@ -3883,12 +3861,11 @@ def events_popular_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count shuffle is dimension-sized regardless of corpus size."""
     from pyspark.sql import Window
 
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id",
+    ev, w = _track(
+        spark, sf_dir,
         F.shiftright("ex", TRAJSIM_SHIFT).alias("cx"),
         F.shiftright("ey", TRAJSIM_SHIFT).alias("cy"),
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = ev.select(
         F.lag("cx").over(w).alias("fx"),
         F.lag("cy").over(w).alias("fy"),
@@ -4043,19 +4020,9 @@ def events_stay_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_a, user_b, cx, cy, n_overlaps) per ordered pair and cell.
     Reference parity: the interval-overlap family (as-of/range joins,
     operators/relational.py) lifted to derived intervals."""
-    flagged = _stay_islands(spark, sf_dir)
-    stays = (
-        flagged.groupBy("user_id", "island")
-        .agg(
-            F.count(F.lit(1)).alias("n_pings"),
-            F.min("sec").alias("t0"),
-            F.max("sec").alias("t1"),
-            F.expr(f"(sum(ex) div count(*)) >> {HOTSPOT_SHIFT}").alias("cx"),
-            F.expr(f"(sum(ey) div count(*)) >> {HOTSPOT_SHIFT}").alias("cy"),
-        )
-        .filter(F.col("n_pings") >= STAY_MIN_PINGS)
-        .select("user_id", "island", "t0", "t1", "cx", "cy")
-    )
+    stays = _stays(
+        spark, sf_dir, "t0", "t1", f"(sum({{}}) div count(*)) >> {HOTSPOT_SHIFT}"
+    ).select("user_id", "island", "t0", "t1", "cx", "cy")
     daily = stays.withColumn(
         "day", F.explode(F.sequence(F.expr("t0 div 86400"), F.expr("t1 div 86400")))
     )
@@ -4093,12 +4060,7 @@ def events_heading_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagonal sectors (r6 doc correction; engine and oracle share the
     formula, so the gate is unaffected). One window pass + one
     (tile, octant) aggregate — the key space is 64 tiles x 8."""
-    from pyspark.sql import Window
-
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "ex", "ey",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "ex", "ey")
     hops = ev.select(
         F.lag("ex").over(w).alias("x0"),
         F.lag("ey").over(w).alias("y0"),
@@ -4172,10 +4134,7 @@ def events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     user key."""
     from pyspark.sql import Window
 
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev, w = _track(spark, sf_dir, "sec")
     gaps = ev.select(
         "user_id", "event_id",
         (F.col("sec") - F.lag("sec").over(w)).alias("gap"),
@@ -4212,11 +4171,8 @@ def events_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SDFG_c.py) materialized as a versioned dimension."""
     from pyspark.sql import Window
 
-    ev = pages_src.event_points_df(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "sec", "ex", "ey"
-    )
+    ev, w = _track(spark, sf_dir, "sec", "ex", "ey")
     pinged = _fence_state(spark, ev, ["user_id", "ts", "event_id", "sec"], "state")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     runs = pinged.withColumn(
         "chg",
         F.when(

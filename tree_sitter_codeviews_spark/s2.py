@@ -238,12 +238,6 @@ def upscale_grid_col(g: Column, from_res: int, to_res: int) -> Column:
     return F.shiftleft(g, k) + F.lit(1 << (k - 1)) if k > 0 else g
 
 
-def upscale_grid_np(g: np.ndarray, from_res: int, to_res: int) -> np.ndarray:
-    k = to_res - from_res
-    g = np.asarray(g, dtype=np.int64)
-    return (g << k) + (1 << (k - 1)) if k > 0 else g
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle SQL: unrolled per-level CTE chain
 # ---------------------------------------------------------------------------
