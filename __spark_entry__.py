@@ -357,7 +357,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh_topk": q.ann_lsh_topk,
         "dedup_minhash_lsh": q.dedup_minhash_lsh,  # rows-only (LSH recall)
         "dedup_simhash": q.dedup_simhash,
-        "geo_pip_salted": q.geo_pip_salted,
         "geo_pip_entities": q.geo_pip_entities,
         "geo_knn": q.geo_knn,
         "geo_s2_encode": q.geo_s2_encode,
@@ -411,7 +410,6 @@ def oracle_sql() -> dict[str, str]:
         "geo_pip_entities": oracle.pip_entities_sql(),
         "geo_tiles": oracle.tiles_sql(),
         "sql_geo_tiles": oracle.tiles_sql(),
-        "geo_pip_salted": oracle.pip_docs_sql(),
         "geo_tiles_salted": oracle.tiles_sql(res_lo=10, res_hi=10),
         "geo_tiles_stream": oracle.tiles_sql(res_lo=10, res_hi=10),
         "geo_knn": oracle.knn_sql(),

@@ -39,7 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from tree_sitter_codeviews_spark import layers, queries, s2, skew
+from tree_sitter_codeviews_spark import layers, queries, s2
 from tree_sitter_codeviews_spark.checkpoint import Pipeline
 from tree_sitter_codeviews_spark.operators import extract, tiles
 from tree_sitter_codeviews_spark.session import get_spark
@@ -81,7 +81,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
     pages = pipe.stage(
         "pages",
-        lambda: skew.zorder_repartition(
+        lambda: s2.zorder_repartition(
             pages_src.pages_df(spark, args.sf_dir).join(
                 pages_src.doc_points_df(spark, args.sf_dir).select("doc_id", "gx", "gy"),
                 "doc_id",

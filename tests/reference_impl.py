@@ -1,13 +1,17 @@
 """Reference implementations the tests pin the engine's native paths to.
 
 Scalar Python and numpy twins of the multimedia hashes, the text language
-ID and fingerprint, the segment-crossing predicate, the cell hierarchy,
-the brute-force kNN and the S2 grid upscale. The engine never calls them,
-so they live with the tests; each reads the engine's constants, so a
-changed constant shows up as a test failure.
+ID and fingerprint, the segment-crossing predicate, the cell hierarchy
+and lon/lat encode, the brute-force kNN, the S2 grid upscale and Hilbert
+encodes, and the page-text extraction; the per-plane embedding bucket
+fold, the stop-shingle prune and the k-means fit entry point. The engine
+never calls them, so they live with the tests; each reads the engine's
+constants, so a changed constant shows up as a test failure.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -15,7 +19,10 @@ from pyspark.sql import functions as F
 
 from tree_sitter_codeviews_spark.cells import morton_decode_np, morton_np
 from tree_sitter_codeviews_spark.operators import multimodal, textstats
+from tree_sitter_codeviews_spark.operators.cluster import _fit
+from tree_sitter_codeviews_spark.operators.dedup import EMB_PLANES, _plane_coeff, quantized_df
 from tree_sitter_codeviews_spark.operators.knn import _dist_sq
+from tree_sitter_codeviews_spark.s2 import _FULL, _M
 
 
 def frame_hash_py(win: bytes) -> int:
@@ -207,3 +214,136 @@ def upscale_grid_np(g: np.ndarray, from_res: int, to_res: int) -> np.ndarray:
     k = to_res - from_res
     g = np.asarray(g, dtype=np.int64)
     return (g << k) + (1 << (k - 1)) if k > 0 else g
+
+
+def xy_from_lonlat(lon: np.ndarray, lat: np.ndarray, res: int):
+    """Integer grid coords at resolution ``res``. Clamped to the grid."""
+    n = 1 << res
+    x = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
+    y = np.floor((lat + 90.0) / 180.0 * n).astype(np.int64)
+    np.clip(x, 0, n - 1, out=x)
+    np.clip(y, 0, n - 1, out=y)
+    return x, y
+
+
+def cell_from_lonlat_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
+    x, y = xy_from_lonlat(np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64), res)
+    return morton_np(x, y, res)
+
+
+def hilbert_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
+    """Hilbert curve index of grid cells (x, y) on the 2^res x 2^res grid."""
+    x = np.asarray(x, dtype=np.int64).copy()
+    y = np.asarray(y, dtype=np.int64).copy()
+    n = np.int64(1) << res
+    d = np.zeros_like(x)
+    s = n >> 1
+    while s > 0:
+        rx = ((x & s) > 0).astype(np.int64)
+        ry = ((y & s) > 0).astype(np.int64)
+        d += s * s * ((3 * rx) ^ ry)
+        # rotate quadrant so the sub-curve is oriented canonically
+        flip = (ry == 0) & (rx == 1)
+        xf = np.where(flip, n - 1 - x, x)
+        yf = np.where(flip, n - 1 - y, y)
+        swap = ry == 0
+        x, y = np.where(swap, yf, xf), np.where(swap, xf, yf)
+        s >>= 1
+    return d
+
+
+def hilbert_fast_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
+    """Branchless Hilbert xy->d: O(log res) bit-parallel rounds, no loop over
+    resolutions. Port of the public-domain ``HilbertXYToIndex`` from
+    github.com/rawrunprotected/hilbert_curves (prefix-scan formulation).
+    Bit-identical to ``hilbert_np`` (tested exhaustively at res<=8 and
+    randomly at 16) — and, unlike it, expressible as a bounded chain of
+    int64 column expressions, which is what makes the JVM-side encode
+    (``s2.with_hilbert_col``) possible."""
+    x = (np.asarray(x, dtype=np.int64) << (_M - res)) & _FULL
+    y = (np.asarray(y, dtype=np.int64) << (_M - res)) & _FULL
+
+    a = x ^ y
+    b = _FULL ^ a
+    c = _FULL ^ (x | y)
+    d = x & (y ^ _FULL)
+    A = a | (b >> 1)
+    B = (a >> 1) ^ a
+    C = ((c >> 1) ^ (b & (d >> 1))) ^ c
+    D = ((a & (c >> 1)) ^ (d >> 1)) ^ d
+
+    for sh in (2, 4):
+        a, b, c, d = A, B, C, D
+        A = (a & (a >> sh)) ^ (b & (b >> sh))
+        B = (a & (b >> sh)) ^ (b & ((a ^ b) >> sh))
+        C = c ^ ((a & (c >> sh)) ^ (b & (d >> sh)))
+        D = d ^ ((b & (c >> sh)) ^ ((a ^ b) & (d >> sh)))
+    a, b, c, d = A, B, C, D
+    C = c ^ ((a & (c >> 8)) ^ (b & (d >> 8)))
+    D = d ^ ((b & (c >> 8)) ^ ((a ^ b) & (d >> 8)))
+
+    a = C ^ (C >> 1)
+    b = D ^ (D >> 1)
+    i0 = x ^ y
+    i1 = b | (_FULL ^ (i0 | a))
+
+    def spread(v):
+        v = (v | (v << 8)) & 0x00FF00FF
+        v = (v | (v << 4)) & 0x0F0F0F0F
+        v = (v | (v << 2)) & 0x33333333
+        v = (v | (v << 1)) & 0x55555555
+        return v
+
+    idx = (spread(i1) << 1) | spread(i0)
+    return idx >> (2 * (_M - res))
+
+
+# the extraction contract (``extract._P_JAVA``/``_TAG_JAVA``) in Python ``re``
+_P_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
+_TAG_RE = re.compile(r"<[^>]+>")
+
+
+def extract_text_py(b: bytes) -> str | None:
+    """Reference scalar extraction (tests pin the native expression to it)."""
+    if b is None:
+        return None
+    m = _P_RE.search(b)
+    if m is not None:
+        return m.group(1).decode("utf-8")
+    # fallback: strip all tags (still deterministic)
+    return _TAG_RE.sub("", b.decode("utf-8"))
+
+
+def embedding_bucket_col(q: F.Column, dim: int, n_planes: int = EMB_PLANES) -> F.Column:
+    """array<long> quantized embedding -> int64 hyperplane sign bucket."""
+    bucket = F.lit(0).cast("long")
+    for p in range(n_planes):
+        plane = F.array(*[F.lit(_plane_coeff(p, d, dim)) for d in range(dim)])
+        dot = F.aggregate(
+            F.zip_with(q, plane, lambda x, y: x * y),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        )
+        bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
+    return bucket
+
+
+def prune_stop_shingles(sh: DataFrame, max_df: int) -> DataFrame:
+    """Drop shingles whose document frequency exceeds ``max_df``.
+
+    The load-bearing cut at web scale: a stop-shingle present in f docs
+    contributes O(f^2) rows to the inverted-index self-join while carrying
+    ~zero similarity signal. Pruning BEFORE the join bounds the pair space
+    by max_df^2 per shingle. Jaccard is then computed over the informative
+    shingle sets (both intersection and per-doc counts exclude pruned
+    shingles — the standard stop-shingle-removal semantic)."""
+    df_cnt = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
+    keep = df_cnt.filter(F.col("_df") <= max_df).select("shingle")
+    return sh.join(keep, "shingle", "left_semi")
+
+
+def kmeans_fit(embs: DataFrame, k: int = 8, iters: int = 2) -> np.ndarray:
+    """Train k centroids with ``iters`` Lloyd updates; returns the k×d int64
+    centroid matrix. Init = quantized vectors of the k smallest vec_ids
+    (deterministic, oracle-reproducible)."""
+    return _fit(quantized_df(embs).localCheckpoint(), k, iters)

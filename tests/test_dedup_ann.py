@@ -134,7 +134,7 @@ def test_embedding_bucket_udf_equals_column_expr(spark, sf_tiny):
     q = embs.select("vec_id", dedup.quantize_col(F.col("embedding")).alias("q"))
     both = q.select(
         "vec_id",
-        dedup.embedding_bucket_col(F.col("q"), 64).alias("b_expr"),
+        reference_impl.embedding_bucket_col(F.col("q"), 64).alias("b_expr"),
         dedup.embedding_bucket_udf(64)(F.col("q")).alias("b_udf"),
     )
     assert both.filter(F.col("b_expr") != F.col("b_udf")).count() == 0

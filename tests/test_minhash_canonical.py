@@ -21,9 +21,9 @@ from tree_sitter_codeviews_spark.operators import dedup
 from tree_sitter_codeviews_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures_from,
-    prune_stop_shingles,
     shingles_df,
 )
+from tests.reference_impl import prune_stop_shingles
 
 
 def _reference_lsh_dups(

@@ -152,3 +152,55 @@ def test_queries_and_oracle_write_each_block_once():
     for mod in (queries, oracle):
         path = pathlib.Path(mod.__file__)
         assert _repeated_block_lines(path) == 0, path.name
+
+
+# Package definitions that no non-test code uses, each with its reason.
+UNCALLED_ALLOWED = {
+    "sources/sinks.py:graph_to_dot": "exports the reference CLI's DOT output format",
+    "sources/sinks.py:graph_to_json": "exports the reference CLI's JSON output format",
+}
+
+
+def test_every_package_definition_has_a_non_test_user():
+    """Every top-level function, class and assignment in the package is
+    named by some non-test ``.py`` file of the repository (the package,
+    ``jobs/``, ``tools/``, ``perfbench/``, the entry points): as a ``Name``
+    or an ``Attribute`` node, f-string expressions included, or as an
+    imported alias. A definition only tests use belongs in
+    ``tests/reference_impl.py``; one nothing uses is deleted."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "tree_sitter_codeviews_spark"
+    used: set[str] = set()
+    defined: list[tuple[str, str]] = []
+    for f in root.rglob("*.py"):
+        parts = f.relative_to(root).parts
+        if parts[0] == "tests" or any(p.startswith(".") for p in parts):
+            continue
+        tree = ast.parse(f.read_text(), str(f))
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                used.add(n.attr)
+            elif isinstance(n, ast.alias):
+                used.add(n.name.rsplit(".", 1)[-1])
+        if f.is_relative_to(pkg):
+            for n in tree.body:
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    names = [n.name]
+                elif isinstance(n, ast.Assign):
+                    names = [t.id for t in n.targets if isinstance(t, ast.Name)]
+                elif isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name):
+                    names = [n.target.id]
+                else:
+                    names = []
+                defined += [(f"{f.relative_to(pkg).as_posix()}:{name}", name)
+                            for name in names]
+    unused = sorted(
+        key for key, name in defined
+        if name not in used and not name.startswith("__")
+    )
+    assert unused == sorted(UNCALLED_ALLOWED), unused

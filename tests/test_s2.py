@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import functions as F
 
-from tree_sitter_codeviews_spark import s2
+from tree_sitter_codeviews_spark import layers, s2
 from tree_sitter_codeviews_spark.queries import geo_s2_encode
 from tree_sitter_codeviews_spark.oracle import s2_encode_sql
+from tree_sitter_codeviews_spark.sources import pages as pages_src
 
 from oracle_util import assert_matches
 from tests import reference_impl
@@ -16,7 +18,7 @@ def test_hilbert_bijective_small_grid():
     res = 4
     n = 1 << res
     xs, ys = np.meshgrid(np.arange(n), np.arange(n))
-    d = s2.hilbert_np(xs.ravel(), ys.ravel(), res)
+    d = reference_impl.hilbert_np(xs.ravel(), ys.ravel(), res)
     assert sorted(d.tolist()) == list(range(n * n))
 
 
@@ -28,7 +30,7 @@ def test_hilbert_consecutive_ids_are_adjacent():
     xs, ys = np.meshgrid(np.arange(n), np.arange(n))
     x = xs.ravel()
     y = ys.ravel()
-    d = s2.hilbert_np(x, y, res)
+    d = reference_impl.hilbert_np(x, y, res)
     order = np.argsort(d)
     dx = np.abs(np.diff(x[order]))
     dy = np.abs(np.diff(y[order]))
@@ -41,8 +43,8 @@ def test_hilbert_parent_is_truncation():
     for res in (8, 12, 16):
         x = rng.integers(0, 1 << res, size=500)
         y = rng.integers(0, 1 << res, size=500)
-        fine = s2.hilbert_np(x, y, res)
-        coarse = s2.hilbert_np(x >> 1, y >> 1, res - 1)
+        fine = reference_impl.hilbert_np(x, y, res)
+        coarse = reference_impl.hilbert_np(x >> 1, y >> 1, res - 1)
         np.testing.assert_array_equal(fine >> 2, coarse)
 
 
@@ -74,7 +76,7 @@ def test_hilbert_coarse_col_matches_numpy_and_truncation(spark):
         df.withColumn("d", s2.hilbert_coarse_col(F.col("x"), F.col("y"), res))
         .orderBy("x", "y").select("x", "y", "d").toPandas()
     )
-    want = s2.hilbert_np(
+    want = reference_impl.hilbert_np(
         got["x"].to_numpy(), got["y"].to_numpy(), res
     )
     np.testing.assert_array_equal(got["d"].to_numpy(), want)
@@ -89,3 +91,22 @@ def test_hilbert_coarse_col_matches_numpy_and_truncation(spark):
         .orderBy("x", "y").select("d2").toPandas()["d2"].to_numpy()
     )
     np.testing.assert_array_equal(trunc, want)
+
+
+def test_zorder_repartition_partitions_are_contiguous(spark, sf_tiny):
+    """Each output partition covers a contiguous, non-overlapping Hilbert
+    range (spatial tiles) — the point of z-order layout."""
+    pts = pages_src.doc_points_df(spark, sf_tiny)
+    parts = s2.zorder_repartition(
+        pts, grid_res=layers.GRID_RES, num_partitions=8, keep_key=True
+    )
+    ranges = (
+        parts.withColumn("pid", F.spark_partition_id())
+        .groupBy("pid")
+        .agg(F.min("_hilbert").alias("lo"), F.max("_hilbert").alias("hi"))
+        .collect()
+    )
+    spans = sorted((r["lo"], r["hi"]) for r in ranges)
+    assert len(spans) >= 2
+    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
+        assert lo1 <= hi1 < lo2  # disjoint, ordered ranges

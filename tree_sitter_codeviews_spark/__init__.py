@@ -16,8 +16,7 @@ Spark-first over Common-Crawl-style web-page tables:
   fixed point, ``codeviews/SDFG/SDFG_c.py:1200-1261``, done with
   delta-convergent DataFrame loops instead of deepcopy+DeepDiff),
 - tile aggregation with cell-hierarchy rollup/compaction,
-- explicit skew handling (hot-cell salting) and space-filling-curve
-  (Hilbert) layout,
+- space-filling-curve (Hilbert) layout (``s2.zorder_repartition``),
 - batch checkpoint/lineage tables for mid-job resume.
 
 Everything here is public-API PySpark: DataFrame/SQL + Arrow-batched

@@ -33,16 +33,6 @@ from pyspark.sql import functions as F
 # numpy reference implementation
 # ---------------------------------------------------------------------------
 
-def xy_from_lonlat(lon: np.ndarray, lat: np.ndarray, res: int):
-    """Integer grid coords at resolution ``res``. Clamped to the grid."""
-    n = 1 << res
-    x = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
-    y = np.floor((lat + 90.0) / 180.0 * n).astype(np.int64)
-    np.clip(x, 0, n - 1, out=x)
-    np.clip(y, 0, n - 1, out=y)
-    return x, y
-
-
 def morton_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     """Interleave bits: x -> even bit positions, y -> odd."""
     m = np.zeros_like(x, dtype=np.int64)
@@ -59,11 +49,6 @@ def morton_decode_np(cell: np.ndarray, res: int):
         x |= ((cell >> (2 * i)) & 1) << i
         y |= ((cell >> (2 * i + 1)) & 1) << i
     return x, y
-
-
-def cell_from_lonlat_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
-    x, y = xy_from_lonlat(np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64), res)
-    return morton_np(x, y, res)
 
 
 # ---------------------------------------------------------------------------
@@ -126,7 +111,8 @@ def y_sql(lat: str, res: int) -> str:
 
 
 def cell_sql(lon: str, lat: str, res: int) -> str:
-    """Spark SQL twin of cell_from_lonlat_np (clamped grid coords, Morton)."""
+    """Spark SQL twin of the tests' ``cell_from_lonlat_np`` (clamped grid
+    coords, Morton)."""
     return morton_sql(x_sql(lon, res), y_sql(lat, res), res)
 
 

@@ -18,11 +18,6 @@ import numpy as np
 GRID_RES = 10          # derivation grid: points sit at res-10 cell centers
 GRID_N = 1 << GRID_RES # 1024
 
-# hot cells: ~20% of docs concentrate into 3 cells to exercise salting
-# (FIXTURES.md §1 "skew tier"; the analogue of the reference's global-name
-# fallback join hot keys, SDFG_c.py:1344-1358)
-HOT_XY = [(100, 200), (500, 511), (900, 300)]
-
 N_GAZ = 1000  # gazetteer size
 
 
@@ -30,20 +25,10 @@ N_GAZ = 1000  # gazetteer size
 # point derivation (exact integer LCGs)
 # ---------------------------------------------------------------------------
 
-def doc_grid_xy_np(doc_id: np.ndarray):
-    """Deterministic res-10 grid coords for a doc point, with hot-cell skew."""
-    doc_id = np.asarray(doc_id, dtype=np.int64)
-    gx = (doc_id * 48271) % GRID_N
-    gy = (doc_id * 16807 + 12345) % GRID_N
-    hot = doc_id % 5 == 0
-    hidx = (doc_id % 3).astype(np.int64)
-    hx = np.array([h[0] for h in HOT_XY], dtype=np.int64)
-    hy = np.array([h[1] for h in HOT_XY], dtype=np.int64)
-    gx = np.where(hot, hx[hidx], gx)
-    gy = np.where(hot, hy[hidx], gy)
-    return gx, gy
-
-
+# doc points: plain LCG grid coords, except that every 5th doc sits in one
+# of 3 hot cells, (100, 200), (500, 511) and (900, 300), by doc_id % 3: ~20%
+# of docs in 3 cells (FIXTURES.md §1 "skew tier"; the analogue of the
+# reference's global-name fallback join hot keys, SDFG_c.py:1344-1358)
 DOC_GX_SQL = (
     "CASE WHEN doc_id % 5 = 0 THEN CASE doc_id % 3 WHEN 0 THEN 100 WHEN 1 THEN 500 ELSE 900 END "
     "ELSE (doc_id * 48271) % 1024 END"

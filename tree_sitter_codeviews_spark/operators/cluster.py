@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 
 from .dedup import _id_matrix, cos_np, cos_q_col, exact_gemm, quantized_df
 
-__all__ = ["kmeans_fit", "kmeans_assign", "semantic_dups"]
+__all__ = ["kmeans_assign", "semantic_dups"]
 
 _PACK = 100  # dist*_PACK + cluster argmin packing; requires k <= _PACK
 
@@ -136,15 +136,17 @@ def _partial_sums(q: DataFrame, cmat: np.ndarray) -> DataFrame:
 
 def _fit(q: DataFrame, k: int, iters: int) -> np.ndarray:
     """Lloyd training over a pre-quantized (and ideally checkpointed)
-    frame — shared by fit/assign/semantic_dups so the corpus is quantized
-    and materialized ONCE per pipeline, not once per stage."""
+    frame — shared by assign/semantic_dups so the corpus is quantized
+    and materialized ONCE per pipeline, not once per stage. Returns the
+    k×d int64 centroid matrix after ``iters`` updates; init = quantized
+    vectors of the k smallest vec_ids (deterministic, oracle-reproducible)."""
     if k > _PACK:
-        raise ValueError(f"kmeans_fit: k={k} exceeds argmin packing bound {_PACK}")
+        raise ValueError(f"k-means: k={k} exceeds argmin packing bound {_PACK}")
     init = q.orderBy("vec_id").limit(k).collect()
     if not init:
         # fail cleanly (matches apportion_budget/hits_integer's empty-input
         # hardening) instead of an IndexError off a 0-d numpy array below
-        raise ValueError("kmeans_fit: empty embeddings input")
+        raise ValueError("k-means: empty embeddings input")
     cmat = np.array([r["qv"] for r in init], dtype=np.int64)
     dim = cmat.shape[1]
     sum_cols = [F.sum(F.element_at("sums", d + 1)).alias(f"s{d}")
@@ -162,13 +164,6 @@ def _fit(q: DataFrame, k: int, iters: int) -> np.ndarray:
             nxt[r["cluster"]] = _trunc_div(sums, r["n"])
         cmat = nxt
     return cmat
-
-
-def kmeans_fit(embs: DataFrame, k: int = 8, iters: int = 2) -> np.ndarray:
-    """Train k centroids with ``iters`` Lloyd updates; returns the k×d int64
-    centroid matrix. Init = quantized vectors of the k smallest vec_ids
-    (deterministic, oracle-reproducible)."""
-    return _fit(quantized_df(embs).localCheckpoint(), k, iters)
 
 
 def kmeans_assign(embs: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:

@@ -67,9 +67,10 @@ def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
 
     The naive formulation is ``sum().over(Window.orderBy("doc_id"))`` — an
     unpartitioned window, i.e. the whole corpus through ONE reducer (the
-    exact anti-pattern fixed in ``skew.hot_keys`` round 3). This is instead
-    the textbook two-phase scan: range-partition by doc_id (partition i
-    holds strictly smaller ids than i+1 — a repartitionByRange guarantee),
+    same funnel as a total taken by ``sum over Window.partitionBy()``).
+    This is instead the textbook two-phase scan: range-partition by doc_id
+    (partition i holds strictly smaller ids than i+1 — a repartitionByRange
+    guarantee),
     per-partition prefix sums, then one tiny driver collect of the
     per-partition totals (numPartitions rows) broadcast back as offsets.
     The assignment is partitioning-INDEPENDENT (cum_before is a pure
@@ -140,8 +141,8 @@ def strip_boilerplate(
 
     Segmentation is pure projection (``slice`` over the split array — no
     shuffle, no Python); the corpus-frequency table is one groupBy on the
-    segment string (the same inverted-index discipline as
-    ``dedup.prune_stop_shingles``); reassembly is one groupBy(doc_id) with
+    segment string (the same inverted-index discipline as the stop-shingle
+    cut of ``dedup.minhash_lsh_dups``); reassembly is one groupBy(doc_id) with
     an ``array_sort``-of-structs ordered join of the surviving segments
     (collect_list order is partition-dependent — sorting by seg_idx inside
     the aggregate restores the deterministic document order).
@@ -255,8 +256,8 @@ def url_canonical_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
     to content dedup_exact but on the URL key, which at crawl scale runs
     FIRST (it needs no text bytes, so it prunes fetch/storage before any
     content pass). One shuffle on the canonical key; hot keys are bounded
-    by per-site crawl frequency, the same boundedness argument as
-    dedup.prune_stop_shingles."""
+    by per-site crawl frequency, the same boundedness argument as the
+    stop-shingle cut of dedup.minhash_lsh_dups."""
     return (
         pages.select(
             canonicalize_url(F.col(url_col)).alias("canonical_url"), "doc_id"

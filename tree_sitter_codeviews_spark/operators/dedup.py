@@ -103,20 +103,6 @@ def exact_dup_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def prune_stop_shingles(sh: DataFrame, max_df: int) -> DataFrame:
-    """Drop shingles whose document frequency exceeds ``max_df``.
-
-    The load-bearing cut at web scale: a stop-shingle present in f docs
-    contributes O(f^2) rows to the inverted-index self-join while carrying
-    ~zero similarity signal. Pruning BEFORE the join bounds the pair space
-    by max_df^2 per shingle. Jaccard is then computed over the informative
-    shingle sets (both intersection and per-doc counts exclude pruned
-    shingles — the standard stop-shingle-removal semantic)."""
-    df_cnt = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-    keep = df_cnt.filter(F.col("_df") <= max_df).select("shingle")
-    return sh.join(keep, "shingle", "left_semi")
-
-
 def pair_candidates(sh: DataFrame) -> DataFrame:
     """(doc_id_a, doc_id_b, inter, na, nb) for every doc pair sharing at
     least one shingle — the inverted-index candidate core shared by the
@@ -140,17 +126,14 @@ def pair_candidates(sh: DataFrame) -> DataFrame:
 
 def jaccard_pairs_exact(
     docs: DataFrame, n: int = 3, threshold: float = 0.5,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing >= 1 shingle.
 
     Inverted-index self-join (shingle as join key) -> per-pair intersection
-    count -> |A∪B| = |A|+|B|-|A∩B|. At web scale pass ``max_df`` to prune
-    stop-shingles before the join (see ``prune_stop_shingles``); the default
-    of no cut keeps exact textbook Jaccard for the oracle gate."""
+    count -> |A∪B| = |A|+|B|-|A∩B|. No stop-shingle cut: exact textbook
+    Jaccard, the value the oracle gate checks. The pair space is
+    Σ df(shingle)²; ``minhash_lsh_dups`` is the path with a ``max_df`` cut."""
     sh = shingles_df(docs, n)
-    if max_df is not None:
-        sh = prune_stop_shingles(sh, max_df)
     j = (F.col("inter") * F.lit(1.0)) / (F.col("na") + F.col("nb") - F.col("inter"))
     return (
         pair_candidates(sh.localCheckpoint())
@@ -158,15 +141,6 @@ def jaccard_pairs_exact(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id_a", "doc_id_b", "jaccard")
     )
-
-
-def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, sig_0..sig_63): 64 minhash values, one shuffle, all native.
-
-    Shingles hashed JVM-side with per-slot-salted xxhash64; 64 ``min``
-    aggregates in a single groupBy — one shuffle, Catalyst fuses them into
-    one hash-aggregate pass."""
-    return minhash_signatures_from(shingles_df(docs, n))
 
 
 def minhash_signatures_from(sh: DataFrame, with_count: bool = False) -> DataFrame:
@@ -547,23 +521,10 @@ def _plane_coeff(p: int, d: int, dim: int) -> int:
     return ((p * dim + d) * 48271) % 1021 - 510
 
 
-def embedding_bucket_col(q: F.Column, dim: int, n_planes: int = EMB_PLANES) -> F.Column:
-    """array<long> quantized embedding -> int64 hyperplane sign bucket."""
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(_plane_coeff(p, d, dim)) for d in range(dim)])
-        dot = F.aggregate(
-            F.zip_with(q, plane, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
-    return bucket
-
-
 def embedding_bucket_udf(dim: int, n_planes: int = EMB_PLANES):
-    """Arrow-batched twin of ``embedding_bucket_col``: one ``exact_gemm``
-    per batch against the fixed integer plane matrix — bit-identical (exact
+    """Arrow-batched twin of the tests' ``embedding_bucket_col`` (the
+    per-plane higher-order-function fold): one ``exact_gemm`` per batch
+    against the fixed integer plane matrix — bit-identical (exact
     integer arithmetic both ways; equality asserted in tests/test_dedup_ann)
     and ~100x faster than the interpreted per-plane HOF fold."""
     planes = np.array(
@@ -699,7 +660,6 @@ def embedding_near_dups(embs: DataFrame, threshold: float = 0.95) -> DataFrame:
 
 def containment_pairs_exact(
     docs: DataFrame, n: int = 3, threshold_ppm: int = 500_000,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT over candidate pairs sharing >= 1 shingle:
     ``containment(A,B) = |A∩B| / min(|A|,|B|)`` in exact integer ppm.
@@ -713,13 +673,11 @@ def containment_pairs_exact(
     catching either direction of embedding.
 
     Same engine shape and scale story as Jaccard: inverted-index self-join
-    on the shingle key (pair space bounded by ``max_df`` stop-shingle
-    pruning at web scale), one per-pair intersection aggregate, broadcast-
-    size per-doc count dim joins. Integer ppm via ``* 1e6 div`` — no float
-    division, so the gate hash is order-exact."""
+    on the shingle key (pair space Σ df(shingle)², no stop-shingle cut),
+    one per-pair intersection aggregate, broadcast-size per-doc count dim
+    joins. Integer ppm via ``* 1e6 div`` — no float division, so the gate
+    hash is order-exact."""
     sh = shingles_df(docs, n)
-    if max_df is not None:
-        sh = prune_stop_shingles(sh, max_df)
     return (
         pair_candidates(sh.localCheckpoint())
         .withColumn(
@@ -749,7 +707,7 @@ def dup_ngram_stats(docs: DataFrame, n: int = 3) -> DataFrame:
          so ``df = count(*)`` per shingle: one aggregate, no distinct;
       3. join df back on the shingle key (standard inverted-index
          equi-join; at web scale hot shingles are exactly the stop-shingle
-         set ``jaccard_pairs_exact`` already bounds with ``max_df`` —
+         set ``minhash_lsh_dups`` bounds with ``max_df`` —
          here they stay one aggregate row each, no pair explosion ever);
       4. per-doc rollup: dup positions = sum(cnt) where df >= 2.
 
@@ -1162,7 +1120,7 @@ def minhash_md5_calibration(
 
     Hasher is the md5-28..60-bit salted prefix so DuckDB mirrors it
     bit-for-bit (same twin discipline as dedup_simhash's md5 leg);
-    production signatures stay on xxhash64 (``minhash_signatures``).
+    production signatures stay on xxhash64 (``minhash_signatures_from``).
     est_ppm = matching coordinates * 15625 (= 1e6/64, exact).
     Scale: candidate pairs come from the shingle inverted index (never
     all-pairs); signatures are one min-aggregate per doc."""
@@ -1222,8 +1180,8 @@ def split_leakage_audit(
     different straddle counts.
 
     Scale shape: the pair population comes from the shingle inverted
-    index (never all-pairs; pass the corpus through ``prune_stop_shingles``
-    upstream at web scale, as ``jaccard_pairs_exact`` documents); the
+    index (never all-pairs; at web scale a stop-shingle cut like
+    ``minhash_lsh_dups``' ``max_df`` bounds it upstream); the
     straddle flags are pure per-row hash arithmetic on the pair table and
     the result is one global aggregate — no extra shuffle beyond the pair
     computation itself.

@@ -9,14 +9,13 @@ Invariant: ONE regex engine. Text and entity extraction both run on Java
 regex inside the JVM (whole plan JVM-only, no Python worker on the path).
 Every entity pattern carries ``(?U)`` so Java's ``\d`` matches Unicode
 ``Nd`` — what Python's ``\d`` matches on ``str``. The scalar reference
-(``extract_text_py`` plus a ``re.finditer`` scan) is pinned to this path by
-the adversarial fixture in ``tests/test_vectorized_kernels.py`` (non-ASCII
-digits, astral-plane text, the no-``<p>`` fallback, NULL and invalid UTF-8).
+(``tests/reference_impl.extract_text_py`` plus a ``re.finditer`` scan) is
+pinned to this path by the adversarial fixture in
+``tests/test_vectorized_kernels.py`` (non-ASCII digits, astral-plane text,
+the no-``<p>`` fallback, NULL and invalid UTF-8).
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -28,22 +27,6 @@ _TAG_JAVA = "<[^>]+>"
 # a gazetteer surface: 9 code points ("GEO_" + five Nd digits)
 _GEO_JAVA = r"(?U)GEO_\d{5}"
 _GEO_LEN = 9
-
-# the same contract in Python ``re``, for the scalar reference
-_P_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
-_TAG_RE = re.compile(r"<[^>]+>")
-
-
-def extract_text_py(b: bytes) -> str | None:
-    """Reference scalar extraction (tests pin the native expression to it)."""
-    if b is None:
-        return None
-    m = _P_RE.search(b)
-    if m is not None:
-        return m.group(1).decode("utf-8")
-    # fallback: strip all tags (still deterministic)
-    return _TAG_RE.sub("", b.decode("utf-8"))
-
 
 def _with_text(pages: DataFrame, keep: tuple[str, ...], out: str) -> DataFrame:
     """pages -> (keep..., out): html decoded ONCE in its own projection

@@ -525,9 +525,9 @@ def cocitation(edges: DataFrame, min_common: int = 2) -> DataFrame:
     two broadcast joins against the host-dim out-degree table. Pair
     space is Σ in_deg(dst)² — on a host graph that's dim-bounded; at
     corpus scale hot universal targets are pruned by a max in-degree cut
-    first (the ``prune_stop_shingles`` discipline: a target half the web
-    links to carries no similarity information), keeping the join
-    df-bounded rather than quadratic. ``min_common`` drops the common=1
+    first (the stop-shingle cut of ``dedup.minhash_lsh_dups``: a target
+    half the web links to carries no similarity information), keeping the
+    join df-bounded rather than quadratic. ``min_common`` drops the common=1
     noise floor before the degree joins."""
     from pyspark.sql.functions import broadcast
 

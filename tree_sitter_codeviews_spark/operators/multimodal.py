@@ -2,10 +2,10 @@
 
 Images/audio/video ride as ``binary`` columns with struct metadata; decode /
 feature-extract / frame-sample are ``mapInPandas`` stages. The decode step is
-STUBBED (no codec libraries in this container — FIXTURES/driver contract):
-``_decode_real`` raises NotImplementedError unless PIL/soundfile import, and
-the pipeline uses a deterministic fake decode instead. The Spark-side
-plumbing — schema, batch iteration, partition shape — is real and tested.
+STUBBED (no codec libraries ship with the engine — FIXTURES/driver
+contract): the pipeline uses a deterministic fake decode, ``decode_meta``.
+The Spark-side plumbing — schema, batch iteration, partition shape — is
+real and tested.
 """
 
 from __future__ import annotations
@@ -27,16 +27,6 @@ def payloads_df(docs: DataFrame) -> DataFrame:
         F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.lit("text/plain").alias("mime"),
     )
-
-
-def _decode_real(payload: bytes):
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - container has no PIL
-        raise NotImplementedError(
-            "real media decode requires PIL/soundfile; not available in this "
-            "container — use decode_meta (deterministic fake) instead"
-        ) from exc
 
 
 META_SCHEMA = T.StructType([

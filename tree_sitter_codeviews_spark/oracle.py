@@ -714,7 +714,8 @@ def cell_encode_sql(res_lo: int = 7, res_hi: int = 10) -> str:
 
 def s2_encode_sql(levels: tuple[int, ...] = (12, 13, 14, 15, 16)) -> str:
     """Hilbert (S2-style) encode at levels 12..16, via the unrolled CTE chain
-    (same bit algorithm as ``s2.hilbert_np`` — see s2.py)."""
+    (``s2.hilbert_cte_chain_sql``, the iterative form of the algorithm
+    ``s2.with_hilbert_col`` runs — see s2.py)."""
     src = f"""
 src AS (
   SELECT doc_id,
@@ -3404,7 +3405,7 @@ GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 def _kmeans_cte(k: int = 8, iters: int = 2, dim: int = 64) -> tuple[str, str]:
-    """CTE chain unrolling ``cluster.kmeans_fit``'s Lloyd iterations:
+    """CTE chain unrolling ``cluster._fit``'s Lloyd iterations:
     assignment a{i} against centroids c{i} (exact int64 distances via
     DOUBLE dots of ×1000-quantized vectors — integral and < 2^53, so
     exact; argmin packed as dist*100+cluster), update c{i+1} by

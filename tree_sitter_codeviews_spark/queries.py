@@ -111,52 +111,21 @@ def geo_pip_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return page_triples(extract.page_entities(pages, gaz), spark)
 
 
-def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result set as geo_pip_docs, through the explicit skew path:
-    hot-cover-cell pre-pass + salted broadcast candidate join (skew.py).
-    Correctness gate proves salting is value-transparent."""
-    from . import skew
-    from .operators.pip_join import COVER_RES, cover_df, pip_refine_sql
-
-    pts = pages_src.doc_points_df(spark, sf_dir).withColumn(
-        "cell", F.expr(cells.morton_sql("gx", "gy", layers.GRID_RES))
-    ).withColumn(
-        "cover_cell", cells.parent_col(F.col("cell"), layers.GRID_RES - COVER_RES)
-    )
-    hot = skew.hot_keys(pts, "cover_cell", threshold_frac=0.01)
-    cand = skew.salted_join(
-        pts, cover_df(spark), "cover_cell",
-        hot=hot, salt_col=F.xxhash64("doc_id"), n_salt=8,
-    )
-    refined = cand.filter(
-        F.col("full") | F.expr(pip_refine_sql("lon", "lat", "polygon_id")))
-    return refined.select("doc_id", F.col("cell").alias("cell_id"), "polygon_id")
-
-
 def geo_tiles_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result set as geo_tiles at the finest res, through the two-stage
-    salted aggregation (skew.py) — no reducer owns a whole hot cell."""
-    from . import skew
-
+    """``geo_tiles`` at the finest res only: the batch twin of
+    ``geo_tiles_stream``. The name is kept from when the count was salted.
+    A hot cell needs no salt: the count's partial aggregate runs map-side,
+    so the shuffle carries at most one row per cell per map task."""
     pts = pages_src.doc_points_df(spark, sf_dir)
-    finest = skew.salted_count(
-        pts.withColumn(
-            "cell_id", F.expr(cells.morton_sql("gx", "gy", layers.GRID_RES))
-        ),
-        keys=["cell_id"],
-        salt_col=F.xxhash64("doc_id"),
-    )
-    return finest.select(
-        F.lit(layers.GRID_RES).alias("res"), "cell_id", "n_docs"
-    )
+    return tiles.tile_counts(pts, res_lo=10, res_hi=10, grid_res=layers.GRID_RES)
 
 
 def geo_tiles_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming continuous tile aggregate: the document stream is encoded
     (deterministic point derivation + Morton, all pure projections — fully
     streamable) and rolled up per finest-res cell in complete mode, drained
-    with availableNow. The streaming twin of ``geo_tiles_salted``: same
-    result set, maintained incrementally as pages arrive — the hypertable-
+    with availableNow. The streaming twin of ``geo_tiles_salted`` (the
+    finest-res ``geo_tiles``): same result set, maintained incrementally as pages arrive — the hypertable-
     rollup shape for a live ingest."""
     from . import streaming
 

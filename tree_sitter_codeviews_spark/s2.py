@@ -10,14 +10,16 @@ Like the reference's scope stacks (``tree_parser/c_parser.py:127-140``), the
 index is hierarchical-by-prefix: the level-(l-1) parent of a level-l cell is
 ``cell >> 2`` (the Hilbert curve is self-similar, so truncation == parent).
 Unlike Morton, consecutive Hilbert ids are always spatially adjacent, which
-is why it is also the engine's z-order *repartitioning* key (``skew.py``):
-``repartitionByRange(hilbert)`` gives contiguous spatial tiles per partition
-with no long-range jumps.
+is why it is also the engine's z-order *repartitioning* key
+(``zorder_repartition``): ``repartitionByRange(hilbert)`` gives contiguous
+spatial tiles per partition with no long-range jumps.
 
-Three bit-identical implementations (same discipline as ``cells.py``):
-numpy (the reference the tests pin against), a JVM column expression
-(``with_hilbert_col``, the hot path), and a DuckDB SQL generator (an
-unrolled per-level CTE chain) for the correctness oracle.
+Two bit-identical implementations here (same discipline as ``cells.py``):
+a JVM column expression (``with_hilbert_col``, the hot path) and a DuckDB
+SQL generator (an unrolled per-level CTE chain) for the correctness
+oracle. The numpy twins the tests pin both against (``hilbert_np``, the
+loop, and ``hilbert_fast_np``, the branchless rounds) live in
+``tests/reference_impl.py``.
 
 Algorithm: the standard iterative xy->d Hilbert transform (public domain,
 en.wikipedia.org/wiki/Hilbert_curve#Applications_and_mapping_algorithms),
@@ -26,8 +28,7 @@ MSB-first digit accumulation with quadrant rotation.
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 S2_RES = 16           # finest level computed; coarser levels by truncation
@@ -35,78 +36,11 @@ S2_LEVELS = (12, 13, 14, 15, 16)
 
 
 # ---------------------------------------------------------------------------
-# numpy (vectorized reference + UDF kernel)
+# JVM column expressions
 # ---------------------------------------------------------------------------
-
-def hilbert_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
-    """Hilbert curve index of grid cells (x, y) on the 2^res x 2^res grid."""
-    x = np.asarray(x, dtype=np.int64).copy()
-    y = np.asarray(y, dtype=np.int64).copy()
-    n = np.int64(1) << res
-    d = np.zeros_like(x)
-    s = n >> 1
-    while s > 0:
-        rx = ((x & s) > 0).astype(np.int64)
-        ry = ((y & s) > 0).astype(np.int64)
-        d += s * s * ((3 * rx) ^ ry)
-        # rotate quadrant so the sub-curve is oriented canonically
-        flip = (ry == 0) & (rx == 1)
-        xf = np.where(flip, n - 1 - x, x)
-        yf = np.where(flip, n - 1 - y, y)
-        swap = ry == 0
-        x, y = np.where(swap, yf, xf), np.where(swap, xf, yf)
-        s >>= 1
-    return d
-
 
 _M = 16          # internal coordinate width of the branchless transform
 _FULL = 0xFFFF
-
-
-def hilbert_fast_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
-    """Branchless Hilbert xy->d: O(log res) bit-parallel rounds, no loop over
-    resolutions. Port of the public-domain ``HilbertXYToIndex`` from
-    github.com/rawrunprotected/hilbert_curves (prefix-scan formulation).
-    Bit-identical to ``hilbert_np`` (tested exhaustively at res<=8 and
-    randomly at 16) — and, unlike it, expressible as a bounded chain of
-    int64 column expressions, which is what makes the JVM-side encode
-    (``with_hilbert_col``) possible."""
-    x = (np.asarray(x, dtype=np.int64) << (_M - res)) & _FULL
-    y = (np.asarray(y, dtype=np.int64) << (_M - res)) & _FULL
-
-    a = x ^ y
-    b = _FULL ^ a
-    c = _FULL ^ (x | y)
-    d = x & (y ^ _FULL)
-    A = a | (b >> 1)
-    B = (a >> 1) ^ a
-    C = ((c >> 1) ^ (b & (d >> 1))) ^ c
-    D = ((a & (c >> 1)) ^ (d >> 1)) ^ d
-
-    for sh in (2, 4):
-        a, b, c, d = A, B, C, D
-        A = (a & (a >> sh)) ^ (b & (b >> sh))
-        B = (a & (b >> sh)) ^ (b & ((a ^ b) >> sh))
-        C = c ^ ((a & (c >> sh)) ^ (b & (d >> sh)))
-        D = d ^ ((b & (c >> sh)) ^ ((a ^ b) & (d >> sh)))
-    a, b, c, d = A, B, C, D
-    C = c ^ ((a & (c >> 8)) ^ (b & (d >> 8)))
-    D = d ^ ((b & (c >> 8)) ^ ((a ^ b) & (d >> 8)))
-
-    a = C ^ (C >> 1)
-    b = D ^ (D >> 1)
-    i0 = x ^ y
-    i1 = b | (_FULL ^ (i0 | a))
-
-    def spread(v):
-        v = (v | (v << 8)) & 0x00FF00FF
-        v = (v | (v << 4)) & 0x0F0F0F0F
-        v = (v | (v << 2)) & 0x33333333
-        v = (v | (v << 1)) & 0x55555555
-        return v
-
-    idx = (spread(i1) << 1) | spread(i0)
-    return idx >> (2 * (_M - res))
 
 
 def with_hilbert_col(
@@ -116,8 +50,9 @@ def with_hilbert_col(
     res: int = S2_RES,
     out: str = "hilbert",
 ):
-    """JVM-side Hilbert encode: the ``hilbert_fast_np`` bit-parallel rounds
-    as chained projections (one ``withColumns`` per round, so every alias is
+    """JVM-side Hilbert encode: the branchless bit-parallel rounds (the
+    ``hilbert_fast_np`` port of the public-domain ``HilbertXYToIndex``,
+    github.com/rawrunprotected/hilbert_curves) as chained projections (one ``withColumns`` per round, so every alias is
     a named column — Catalyst keeps multi-referenced non-cheap aliases
     materialized instead of inlining, bounding the expression tree).
 
@@ -238,6 +173,33 @@ def upscale_grid_col(g: Column, from_res: int, to_res: int) -> Column:
     return F.shiftleft(g, k) + F.lit(1 << (k - 1)) if k > 0 else g
 
 
+def zorder_repartition(
+    df: DataFrame,
+    gx_col: str = "gx",
+    gy_col: str = "gy",
+    grid_res: int = 10,
+    num_partitions: int | None = None,
+    keep_key: bool = False,
+) -> DataFrame:
+    """Hilbert (z-order) range repartitioning of a points/pages table.
+
+    The north rule's layout step: after this, each partition covers a
+    contiguous stretch of the Hilbert curve — a compact spatial tile.
+    The key is computed by the branchless JVM transform (no Python).
+    """
+    keyed = df.withColumns({
+        "_zx": upscale_grid_col(F.col(gx_col), grid_res, S2_RES),
+        "_zy": upscale_grid_col(F.col(gy_col), grid_res, S2_RES),
+    })
+    keyed = with_hilbert_col(keyed, "_zx", "_zy", S2_RES, out="_hilbert").drop("_zx", "_zy")
+    out = (
+        keyed.repartitionByRange(num_partitions, "_hilbert")
+        if num_partitions
+        else keyed.repartitionByRange("_hilbert")
+    )
+    return out if keep_key else out.drop("_hilbert")
+
+
 # ---------------------------------------------------------------------------
 # DuckDB oracle SQL: unrolled per-level CTE chain
 # ---------------------------------------------------------------------------
@@ -250,7 +212,8 @@ def hilbert_cte_chain_sql(
     res: int,
     out_cte: str = "hfin",
 ) -> str:
-    """CTE chain computing the same Hilbert index as ``hilbert_np``.
+    """CTE chain computing the same Hilbert index as ``with_hilbert_col``,
+    by the iterative transform (the tests' ``hilbert_np``).
 
     ``src_cte`` must expose ``key_cols`` plus expressions ``x_expr``/``y_expr``
     (grid coords at ``res``). The final CTE ``out_cte`` has (key_cols, d).

@@ -111,7 +111,7 @@ def event_points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def points_from_ids(docs: DataFrame) -> DataFrame:
     """Derive deterministic skewed points from any (doc_id) set — same
-    formulas as ``layers.doc_grid_xy_np`` / the DuckDB oracle CTEs.
+    formulas (``layers.DOC_GX_SQL``/``DOC_GY_SQL``) as the DuckDB oracle CTEs.
 
     Built as SQL text (the DOC_GX_SQL constants + D-suffixed double
     literals so nothing parses as DECIMAL): the Column-builder version of
