@@ -58,6 +58,32 @@ def _fetched_pages(spark, sf_dir: str):
     return _linked_pages(docs)
 
 
+def _rank(hg, iterations: int):
+    """Integer PageRank over the host graph's endpoints."""
+    nodes = (
+        hg.select(F.col("src_host").alias("host"))
+        .unionByName(hg.select(F.col("dst_host").alias("host")))
+        .distinct()
+    )
+    return linkgraph.pagerank_integer(
+        hg.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst")),
+        nodes, iterations=iterations,
+    )
+
+
+def _schedule(outlinks, pr, budget: int):
+    """The next round's frontier: discovered URLs prioritized by their
+    target host's rank, politeness-scheduled."""
+    frontier = (
+        outlinks.select(F.col("dst_url").alias("url"))
+        .distinct()
+        .withColumn("dst_host", F.regexp_extract("url", "^https?://([^/]+)", 1))
+        .join(F.broadcast(pr), F.col("dst_host") == pr["host"], "left")
+        .select("url", F.coalesce("rank_micro", F.lit(0)).cast("long").alias("priority"))
+    )
+    return webtext.crawl_schedule(frontier, budget=budget)
+
+
 def main(argv: list[str] | None = None, spark=None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -75,27 +101,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         spark = get_spark("tscv-crawl")
 
     if args.dry_run:
-        pages = _fetched_pages(spark, args.sf_dir)
-        links = webtext.outlink_extract(pages, with_src_host=True)
-        hg = linkgraph.host_graph(links)
-        nodes = hg.select(F.col("src_host").alias("host")).unionByName(
-            hg.select(F.col("dst_host").alias("host"))
-        ).distinct()
-        pr = linkgraph.pagerank_integer(
-            hg.select(F.col("src_host").alias("src"),
-                      F.col("dst_host").alias("dst")),
-            nodes, iterations=2,
-        )
-        frontier = (
-            links.select(F.col("dst_url").alias("url"))
-            .distinct()
-            .withColumn(
-                "dst_host", F.regexp_extract("url", "^https?://([^/]+)", 1)
-            )
-            .join(pr, F.col("dst_host") == pr["host"], "left")
-            .select("url", F.coalesce("rank_micro", F.lit(0)).alias("priority"))
-        )
-        plan = webtext.crawl_schedule(frontier, budget=args.budget)
+        links = webtext.outlink_extract(_fetched_pages(spark, args.sf_dir), with_src_host=True)
+        plan = _schedule(links, _rank(linkgraph.host_graph(links), 2), args.budget)
         plan.explain("formatted")
         print(f"dry-run OK: schema={plan.schema.simpleString()}")
         if owns_session:
@@ -140,7 +147,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         ),
     )
 
-    quality = pipe.stage(
+    pipe.stage(
         "quality",
         lambda: extracted.join(
             curation.gopher_filter(
@@ -158,45 +165,13 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
     hg = pipe.stage("host_graph", lambda: linkgraph.host_graph(outlinks))
 
-    def rank_stage():
-        nodes = (
-            hg.select(F.col("src_host").alias("host"))
-            .unionByName(hg.select(F.col("dst_host").alias("host")))
-            .distinct()
-        )
-        return linkgraph.pagerank_integer(
-            hg.select(F.col("src_host").alias("src"),
-                      F.col("dst_host").alias("dst")),
-            nodes, iterations=10,
-        )
+    pr = pipe.stage("rank", lambda: _rank(hg, 10))
+    pipe.stage("schedule", lambda: _schedule(outlinks, pr, args.budget))
 
-    pr = pipe.stage("rank", rank_stage)
-
-    def schedule_stage():
-        frontier = (
-            outlinks.select(F.col("dst_url").alias("url"))
-            .distinct()
-            .withColumn(
-                "dst_host", F.regexp_extract("url", "^https?://([^/]+)", 1)
-            )
-            .join(
-                F.broadcast(pr), F.col("dst_host") == pr["host"], "left"
-            )
-            .select(
-                "url",
-                F.coalesce("rank_micro", F.lit(0)).cast("long")
-                .alias("priority"),
-            )
-        )
-        return webtext.crawl_schedule(frontier, budget=args.budget)
-
-    sched = pipe.stage("schedule", schedule_stage)
-
-    n_kept = quality.count()
-    n_sched = sched.count()
+    n = pipe.stage_rows()
     print(
-        f"crawl round done: {pages.count()} fetched, {n_kept} kept, "
-        f"{hg.count()} host edges, {n_sched} scheduled for next round"
+        f"crawl round done: {n['pages']} fetched, {n['quality']} kept, "
+        f"{n['host_graph']} host edges, {n['schedule']} scheduled for next round"
     )
     if owns_session:
         spark.stop()

@@ -47,6 +47,8 @@ from tree_sitter_codeviews_spark.sources import pages as pages_src
 from tree_sitter_codeviews_spark.sources.testdata import load_table
 
 N_CHUNKS = 4  # coarse Hilbert ranges for the chunked join stage
+STAGES = ("pages", "entities", "triples", "tiles", "dedup_groups", "emb_dedup_groups",
+          "train_set")
 
 
 def main(argv: list[str] | None = None, spark=None) -> None:
@@ -111,11 +113,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         part = entities.filter(F.pmod(h2, F.lit(N_CHUNKS)) == lo)
         return queries.page_triples(part, spark)
 
-    triples = pipe.chunked_stage(
-        "triples", [str(i) for i in range(N_CHUNKS)], triples_chunk
-    )
-
-    tile_out = pipe.stage(
+    pipe.chunked_stage("triples", [str(i) for i in range(N_CHUNKS)], triples_chunk)
+    pipe.stage(
         "tiles",
         lambda: tiles.tile_counts(
             pages, res_lo=7, res_hi=10, grid_res=layers.GRID_RES
@@ -124,19 +123,15 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
     docs = pages.select("doc_id", "text")
     groups = pipe.stage("dedup_groups", lambda: queries.doc_groups(docs))
-    emb_groups = pipe.stage(
+    pipe.stage(
         "emb_dedup_groups",
         lambda: queries.emb_groups(load_table(spark, args.sf_dir, "embeddings")),
     )
-    train_set = pipe.stage("train_set", lambda: queries.train_set_from(docs, groups))
+    pipe.stage("train_set", lambda: queries.train_set_from(docs, groups))
 
-    print(
-        f"job={args.job_id} pages={pages.count()} entities={entities.count()} "
-        f"triples={triples.count()} tiles={tile_out.count()} "
-        f"dedup_groups={groups.count()} emb_dedup_groups={emb_groups.count()} "
-        f"train_set={train_set.count()} "
-        f"recomputed={pipe.recomputed or ['<none — full resume>']}"
-    )
+    n = pipe.stage_rows()
+    print(f"job={args.job_id} " + "".join(f"{s}={n[s]} " for s in STAGES)
+          + f"recomputed={pipe.recomputed or ['<none — full resume>']}")
     if owns_session:
         spark.stop()
 

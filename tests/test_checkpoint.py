@@ -47,6 +47,44 @@ def test_lineage_rows_cover_every_file_and_sum_to_total(spark, tmp_path):
     met = p.metrics().collect()
     assert len(met) == 1 and met[0]["n_rows"] == 1000 and met[0]["wall_s"] > 0
 
+    # invalidate and recompute: lineage describes only the files on disk
+    shutil.rmtree(os.path.join(str(tmp_path), "j1", "stages", "s1"))
+    p2 = _mk(spark, tmp_path)
+    p2.stage("s1", lambda: spark.range(1000).repartition(4))
+    lin = p2.lineage().collect()
+    assert sum(r["n_rows"] for r in lin) == 1000
+    assert all(os.path.exists(r["file"]) for r in lin)
+    assert sorted(r["n_rows"] for r in p2.metrics().collect()) == [1000, 1000]
+
+
+def test_bookkeeping_starts_no_spark_job(spark, tmp_path):
+    """The metrics row and the lineage view come from the driver and the
+    parquet footers: neither ``_record`` nor ``lineage()`` runs a job."""
+    p = _mk(spark, tmp_path)
+    out = p._stage_dir("s")  # a committed stage written outside ``stage``
+    spark.range(100).repartition(3).write.parquet(out)
+    sc = spark.sparkContext
+    group = "test-checkpoint-bookkeeping"
+    sc.setJobGroup(group, "checkpoint bookkeeping")
+    try:
+        p._record("s", "", out, 0.5)
+        lin = p.lineage()
+        rows = lin.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sum(r["n_rows"] for r in rows) == 100
+    assert {(r["job_id"], r["stage"], r["chunk"]) for r in rows} == {("j1", "s", "")}
+    assert lin.schema.simpleString() == (
+        "struct<job_id:string,stage:string,chunk:string,file:string,n_rows:bigint>")
+    met = p.metrics()
+    assert met.schema.simpleString() == (
+        "struct<job_id:string,stage:string,chunk:string,n_rows:bigint,"
+        "wall_s:double,recorded_at:double>")
+    assert [(r["stage"], r["n_rows"]) for r in met.collect()] == [("s", 100)]
+
 
 def test_chunked_stage_resumes_only_pending_chunks(spark, tmp_path):
     calls: list[str] = []

@@ -77,3 +77,10 @@ def test_tile_counts_plan_is_one_expand_no_union(spark, sf_tiny):
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Expand [") == 1, plan
     assert "Union" not in plan and "ExistingRDD" not in plan, plan
+
+
+def test_tile_counts_single_level_is_one_aggregate(spark, sf_tiny):
+    """One level needs no rollup: the finest count is the answer."""
+    plan = tiles.tile_counts(doc_points_df(spark, sf_tiny), res_lo=10, res_hi=10) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1 and "Expand" not in plan, plan

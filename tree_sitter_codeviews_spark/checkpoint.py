@@ -1,4 +1,4 @@
-"""Stage checkpointing: per-partition lineage + metrics, resume-without-recompute.
+"""Stage checkpointing: per-file lineage + metrics, resume-without-recompute.
 
 Design recorded in SURVEY.md §2.9/§7.2-stage-5: the reference re-parses every
 document once per view (``AST_driver.py:17``, ``CFG_driver.py:17``,
@@ -11,32 +11,48 @@ back, never recomputed; a chunked stage recomputes only its pending chunks
 
 In the sandbox the checkpoint "table" is a parquet directory tree; on a real
 cluster the same layout maps 1:1 onto an Iceberg table partitioned by
-(job_id, stage) — ``append`` here == ``writeTo(...).append()`` there, and
-the ``_SUCCESS`` marker's role is played by the snapshot commit.
+(job_id, stage) — the ``_SUCCESS`` marker's role is played by the snapshot
+commit, and the lineage view by the snapshot's manifest.
 
 Layout:
     {root}/{job_id}/stages/{stage}/            stage output parquet
     {root}/{job_id}/stages/{stage}/chunk={c}/  chunked stage output
-    {root}/{job_id}/lineage/                   (stage, chunk, file, n_rows, ...)
-    {root}/{job_id}/metrics/                   (stage, n_rows, n_files, wall_s, ...)
+    {root}/{job_id}/metrics/                   one file per stage/chunk run:
+                                               (job_id, stage, chunk, n_rows,
+                                               wall_s, recorded_at)
 
-Lineage is harvested from the *written* files (one metadata-cheap scan of the
-fresh output grouped by ``input_file_name``), never by re-running the stage
-plan — the written bytes are the ground truth a resume will read.
+The bookkeeping runs no Spark job. Lineage is a view, not a table: one
+(stage, chunk, file, n_rows) row per parquet file of every committed stage
+or chunk directory, with ``n_rows`` read from the file's footer. It always
+describes the bytes a resume will read, so a recomputed stage cannot leave
+stale rows behind. Each metrics row is a one-row parquet file written by
+the driver under a hidden name and renamed into place, so a crash never
+leaves a partial file for ``metrics()`` to read.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import time
-from collections.abc import Callable, Sequence
+import uuid
+from collections.abc import Callable, Iterator, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from tree_sitter_codeviews_spark.localdf import arrow_local_df
 
 
 def _complete(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def _footer_rows(out_dir: str) -> list[tuple[str, int]]:
+    """(file, n_rows) of each parquet file of an output directory."""
+    return [(f, pq.read_metadata(f).num_rows)
+            for f in sorted(glob.glob(os.path.join(glob.escape(out_dir), "*.parquet")))]
 
 
 class Pipeline:
@@ -54,29 +70,28 @@ class Pipeline:
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.base, "stages", stage)
 
-    def _append(self, table: str, df: DataFrame) -> None:
-        df.write.mode("append").parquet(os.path.join(self.base, table))
+    def _files(self) -> Iterator[tuple[str, str, str, int]]:
+        """(stage, chunk, file, n_rows) of each parquet file in every
+        committed stage or chunk directory, ``n_rows`` from its footer."""
+        stages = os.path.join(self.base, "stages")
+        pat = os.path.join(glob.escape(stages), "*")
+        markers = glob.glob(f"{pat}/_SUCCESS") + glob.glob(f"{pat}/chunk=*/_SUCCESS")
+        for out in sorted(map(os.path.dirname, markers)):
+            stage, _, chunk = os.path.relpath(out, stages).partition("/chunk=")
+            for f, n in _footer_rows(out):
+                yield stage, chunk, f, n
 
     def _record(self, stage: str, chunk: str, out_dir: str, wall_s: float) -> None:
-        written = self.spark.read.parquet(out_dir)
-        lineage = (
-            written.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count("*").alias("n_rows"))
-            .select(
-                F.lit(self.job_id).alias("job_id"),
-                F.lit(stage).alias("stage"),
-                F.lit(chunk).alias("chunk"),
-                "file",
-                "n_rows",
-            )
-        )
-        self._append("lineage", lineage)
-        m = written.agg(F.count("*").alias("n_rows")).collect()[0]
-        metrics = self.spark.createDataFrame(
-            [(self.job_id, stage, chunk, int(m["n_rows"]), float(wall_s), time.time())],
-            "job_id string, stage string, chunk string, n_rows long, wall_s double, recorded_at double",
-        )
-        self._append("metrics", metrics)
+        row = pa.table({  # string x3, int64, double x2: the metrics schema
+            "job_id": [self.job_id], "stage": [stage], "chunk": [chunk],
+            "n_rows": [sum(n for _, n in _footer_rows(out_dir))],
+            "wall_s": [float(wall_s)], "recorded_at": [time.time()],
+        })
+        metrics = os.path.join(self.base, "metrics")
+        os.makedirs(metrics, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(row, os.path.join(metrics, f".{name}"))  # hidden from readers
+        os.replace(os.path.join(metrics, f".{name}"), os.path.join(metrics, name))
 
     # -- public ------------------------------------------------------------
 
@@ -113,7 +128,18 @@ class Pipeline:
         )
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.base, "lineage"))
+        """(job_id, stage, chunk, file, n_rows) per committed parquet file:
+        a driver-local frame built from the footers."""
+        return arrow_local_df(
+            self.spark, [(self.job_id, *r) for r in self._files()],
+            "job_id string, stage string, chunk string, file string, n_rows long")
+
+    def stage_rows(self) -> dict[str, int]:
+        """Committed rows per stage (chunks summed): the lineage view summed."""
+        n: dict[str, int] = {}
+        for stage, _, _, k in self._files():
+            n[stage] = n.get(stage, 0) + k
+        return n
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.base, "metrics"))

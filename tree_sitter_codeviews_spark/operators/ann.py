@@ -359,7 +359,7 @@ def _pq_codebook_from(sample: np.ndarray) -> np.ndarray:
 
 
 def _pq_sample(q: DataFrame, col: str = "qv") -> np.ndarray:
-    rows = (
+    rows = (  # bound: PQ_K rows (the limit)
         q.filter(F.col("vec_id") % PQ_SAMPLE_MOD == 1)
         .orderBy("vec_id").limit(PQ_K).select("vec_id", col).collect()
     )

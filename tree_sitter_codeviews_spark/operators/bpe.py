@@ -137,7 +137,7 @@ def bpe_train(docs: DataFrame, merges: int = 8) -> DataFrame:
                     F.col("sym_a").asc(),
                     F.col("sym_b").asc(),
                 )
-                .first()
+                .first()  # bound: one row
             )
             if best is None:
                 break
@@ -166,6 +166,7 @@ def bpe_apply(docs: DataFrame, merges: int = 8) -> DataFrame:
     the token scan: zero Python, zero extra shuffles beyond the final
     per-doc aggregate. The bracket encoding makes each replace exactly
     BPE's greedy disjoint merge (see the module note)."""
+    # bound: ``merges`` rows, one per merge rule
     rules = bpe_train(docs, merges).orderBy("merge_rank").collect()
     enc = _encode(F.col("tok"))
     for r in rules:

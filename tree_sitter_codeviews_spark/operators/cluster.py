@@ -142,7 +142,7 @@ def _fit(q: DataFrame, k: int, iters: int) -> np.ndarray:
     vectors of the k smallest vec_ids (deterministic, oracle-reproducible)."""
     if k > _PACK:
         raise ValueError(f"k-means: k={k} exceeds argmin packing bound {_PACK}")
-    init = q.orderBy("vec_id").limit(k).collect()
+    init = q.orderBy("vec_id").limit(k).collect()  # bound: k rows (the limit)
     if not init:
         # fail cleanly (matches apportion_budget/hits_integer's empty-input
         # hardening) instead of an IndexError off a 0-d numpy array below
@@ -156,7 +156,7 @@ def _fit(q: DataFrame, k: int, iters: int) -> np.ndarray:
             _partial_sums(q, cmat)
             .groupBy("cluster")
             .agg(F.sum("n").alias("n"), *sum_cols)
-            .collect()  # <= k rows by construction
+            .collect()  # bound: <= k rows, one per cluster
         )
         nxt = cmat.copy()  # empty clusters keep their previous centroid
         for r in rows:

@@ -92,7 +92,7 @@ def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
     totals = (
         ranged.groupBy("_pid").agg(F.sum("n_tokens").alias("_tot"))
         .orderBy("_pid")
-        .collect()
+        .collect()  # bound: one row per range partition
     )
     offsets, acc = {}, 0
     for r in totals:
@@ -466,7 +466,7 @@ def apportion_budget(
     broadcast back): at web scale the "dim" is tens of millions of
     registered domains, so the rank must be distributed.
     """
-    raw_total = weights.agg(F.sum(weight_col).cast("long")).first()[0]
+    raw_total = weights.agg(F.sum(weight_col).cast("long")).first()[0]  # bound: one row
     if raw_total is None or raw_total <= 0:
         # empty frontier / all-zero weights: nothing to apportion — return
         # an empty zero-alloc frame with the contract schema instead of
@@ -491,7 +491,7 @@ def apportion_budget(
         .cast("long")
         .alias("rem"),
     ).localCheckpoint()  # three consumers (leftover agg, counts, final)
-    leftover = budget - int(j.agg(F.sum("base_quota")).first()[0])
+    leftover = budget - int(j.agg(F.sum("base_quota")).first()[0])  # bound: one row
     ranged = (
         j.repartitionByRange(F.col("rem").desc(), F.col("key").asc())
         .withColumn("_pid", F.spark_partition_id())
@@ -502,7 +502,7 @@ def apportion_budget(
     )
     counts = ranged.groupBy("_pid").agg(F.count("*").alias("_n")).orderBy(
         "_pid"
-    ).collect()
+    ).collect()  # bound: one row per range partition
     offsets, acc = {}, 0
     for r in counts:
         offsets[r["_pid"]] = acc

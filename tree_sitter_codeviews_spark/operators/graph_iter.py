@@ -182,12 +182,14 @@ def reach(
     e = edges.select(F.col(src).alias("node"), F.col(dst).alias("nxt"))
     s = seeds.select(F.col(seed_col).alias("node"))
     pdf = driver_arm.collect_if_small(e, driver_arm.ROW_CAP)
-    if pdf is None:
+    seed_pdf = None if pdf is None else driver_arm.collect_if_small(
+        s.distinct(), driver_arm.ROW_CAP)  # the edge probe does not bound the seeds
+    if seed_pdf is None:
         # the loop consumes e every round
         return reach_loop(e.localCheckpoint(), s, max_iter)
     hops = reach_driver(
         zip(pdf["node"].tolist(), pdf["nxt"].tolist()),
-        (r["node"] for r in s.distinct().collect()), max_iter)
+        seed_pdf["node"].tolist(), max_iter)
     t = e.schema["node"].dataType.simpleString()
     return arrow_local_df(
         e.sparkSession, list(hops.items()), f"node {t}, hops int")
@@ -312,15 +314,19 @@ def _rda_driver(
     ``reaching_definitions``. Facts are expanded breadth-first with the
     same depth bound as the distributed rounds (initial push = depth 1,
     then ``max_iter`` extensions), so the emitted (node, var, def_node)
-    set is identical. Returns None when the fact set exceeds
-    ``DRIVER_FACT_CAP`` (caller falls back to the distributed loop)."""
+    set is identical. Returns None when the defs exceed
+    ``driver_arm.ROW_CAP`` (the edge probe does not bound them) or the fact
+    set exceeds ``DRIVER_FACT_CAP`` (caller falls back to the distributed
+    loop)."""
     from collections import defaultdict, deque
 
+    def_pdf = driver_arm.collect_if_small(d, driver_arm.ROW_CAP)
+    if def_pdf is None:
+        return None
     adj = defaultdict(list)
     for a, b in zip(pdf["node"].tolist(), pdf["_dst"].tolist()):
         adj[a].append(b)
-    def_rows = d.collect()
-    defset = {(r["node"], r["var"]) for r in def_rows}
+    defset = set(zip(def_pdf["node"].tolist(), def_pdf["var"].tolist()))
     facts: set = set()
     work: deque = deque()
     for n, v in defset:

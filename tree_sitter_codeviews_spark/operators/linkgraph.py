@@ -58,6 +58,17 @@ def _triples(pdf) -> list[tuple]:
     return list(zip(pdf["src"], pdf["dst"], (int(x) for x in pdf["n"])))
 
 
+def _driver_graph(edges: DataFrame, hosts: DataFrame) -> tuple:
+    """The driver arm's inputs: ``edges`` as pandas and the ``host`` column
+    of ``hosts`` (the nodes or the seeds) as a list; (None, None) when
+    either exceeds ``driver_arm.ROW_CAP`` (the edge probe does not bound
+    the host table), and the caller runs its distributed loop."""
+    pdf = driver_arm.collect_if_small(edges, driver_arm.ROW_CAP)
+    hpdf = None if pdf is None else driver_arm.collect_if_small(
+        hosts.select("host"), driver_arm.ROW_CAP)
+    return (None, None) if hpdf is None else (pdf, hpdf["host"].tolist())
+
+
 def _rank_rounds(
     triples, node_hosts, seed_set, iterations: int
 ) -> list[tuple]:
@@ -107,10 +118,12 @@ def _teleport_rank(
     w = _weighted_edges(edges)
     pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
     if pdf is not None:
+        # bound: one row per host of the caller's host tables, unprobed
+        # (every caller passes a host dim or the edges' endpoints)
         seed_set = None if seeds is None else {
             r["host"] for r in seeds.select("host").collect()}
         rows = _rank_rounds(
-            _triples(pdf), (r["host"] for r in nodes.collect()), seed_set,
+            _triples(pdf), (r["host"] for r in nodes.collect()), seed_set,  # bound: as above
             iterations)
         return arrow_local_df(nodes.sparkSession,
             rows, "host string, rank_micro long")
@@ -228,10 +241,9 @@ def hits_integer(
     if iterations < 1:
         raise ValueError("hits_integer: iterations must be >= 1")
     ed = _weighted_edges(edges)
-    pdf = driver_arm.collect_if_small(ed, driver_arm.ROW_CAP)
+    pdf, node_l = _driver_graph(ed, nodes)
     if pdf is not None:
-        rows = _hits_rounds(
-            _triples(pdf), (r["host"] for r in nodes.collect()), iterations)
+        rows = _hits_rounds(_triples(pdf), node_l, iterations)
         return arrow_local_df(nodes.sparkSession,
             rows, "host string, hub_micro long, auth_micro long")
 
@@ -467,10 +479,9 @@ def bowtie(
         .distinct()
         .localCheckpoint()
     )
-    pdf = driver_arm.collect_if_small(ed, driver_arm.ROW_CAP)
+    pdf, node_l = _driver_graph(ed, nodes)
     if pdf is not None:
         pairs = list(zip(pdf["node"], pdf["nxt"]))
-        node_l = [r["host"] for r in nodes.collect()]
         seed = [pivot] if pivot in set(node_l) else []
         fwd_d = graph_iter.reach_driver(pairs, seed, rounds)
         bwd_d = graph_iter.reach_driver([(d, s) for s, d in pairs], seed, rounds)
@@ -597,12 +608,11 @@ def label_propagation(
     could violate it.
     """
     w = _weighted_edges(edges)
-    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
+    pdf, node_l = _driver_graph(w, nodes)
     if pdf is not None:
         import hashlib
 
         triples = _triples(pdf)
-        node_l = [r["host"] for r in nodes.collect()]
         lbl_d = {
             v: int(hashlib.md5(v.encode()).hexdigest()[:7], 16)
             for v in node_l
@@ -685,10 +695,10 @@ def cheapest_paths(
         )
         .localCheckpoint()
     )
-    pdf = driver_arm.collect_if_small(w, driver_arm.ROW_CAP)
+    pdf, seed_l = _driver_graph(w, seeds)
     if pdf is not None:
         triples = list(zip(pdf["src"], pdf["dst"], (int(c) for c in pdf["edge_cost"])))
-        reached_d = {r["host"]: 0 for r in seeds.select("host").collect()}
+        reached_d = {h: 0 for h in seed_l}
         for _ in range(rounds):
             snap = dict(reached_d)  # relax from the PREVIOUS round, as the loop does
             for s, d, c in triples:

@@ -47,17 +47,21 @@ def tile_counts(
     """points(gx, gy at grid_res) -> (res, cell_id, n_docs) for res_lo..res_hi.
 
     Lazy: two aggregates, two shuffles, no job until the result is forced
-    (module docstring). Plan build is SQL text, a handful of py4j calls."""
+    (module docstring); one of each for a single level. Plan build is SQL
+    text, a handful of py4j calls."""
     k = grid_res - res_hi
     x, y = (f"shiftright(gx, {k})", f"shiftright(gy, {k})") if k else ("gx", "gy")
     levels = [f"c{r}" for r in range(res_hi, res_lo - 1, -1)]
-    finest = (
+    agg = (
         points.selectExpr(f"{cells.morton_sql(x, y, res_hi)} as {levels[0]}")
         .groupBy(levels[0])
         .agg(F.expr("count(*) as n"))
-        .selectExpr(*(f"shiftright({levels[0]}, {2 * i}) as {c}"
-                      for i, c in enumerate(levels)), "n")
     )
+    if res_lo == res_hi:  # the finest aggregate is the whole answer
+        return agg.selectExpr(f"{res_hi} as res", f"{levels[0]} as cell_id",
+                              f"n as {count_col}")
+    finest = agg.selectExpr(*(f"shiftright({levels[0]}, {2 * i}) as {c}"
+                              for i, c in enumerate(levels)), "n")
     res = " ".join(f"WHEN grouping({c}) = 0 THEN {res_hi - i}"
                    for i, c in enumerate(levels))
     return finest.groupingSets([[c] for c in levels], *levels).agg(
