@@ -42,6 +42,28 @@ def distributed_arm(monkeypatch):
     return forced
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """Context manager that lists the Spark jobs started inside it:
+    ``with spark_jobs() as ids: ...``, then ``assert ids == []``."""
+
+    @contextlib.contextmanager
+    def started():
+        sc = spark.sparkContext
+        group = f"test-jobs-{id(started)}"
+        ids: list[int] = []
+        sc.setJobGroup(group, "jobs started by the test block")
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return started
+
+
 SF_TINY = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
 

@@ -1,8 +1,8 @@
 """Reference implementations the tests pin the engine's native paths to.
 
 Scalar Python and numpy twins of the multimedia hashes, the text language
-ID and fingerprint, the segment-crossing predicate, the cell hierarchy
-and lon/lat encode, the brute-force kNN, the S2 grid upscale and Hilbert
+ID and fingerprint, the token and word-n-gram build, the segment-crossing
+predicate, the cell hierarchy and lon/lat encode, the brute-force kNN, the S2 grid upscale and Hilbert
 encodes, and the page-text extraction; the per-plane embedding bucket
 fold, the stop-shingle prune and the k-means fit entry point. The engine
 never calls them, so they live with the tests; each reads the engine's
@@ -81,6 +81,20 @@ def fingerprint_py(text: str) -> int:
         th = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:7], 16)
         fp = (fp * textstats._FP_BASE + th) % textstats._FP_MOD
     return fp
+
+
+def tokens_py(text: str | None, n: int = 1) -> list[tuple[int, str, str | None]]:
+    """Reference for ``dedup.tokens_df``: (pos, tok, shingle) per token of
+    ``text.split(" ")``; ``shingle`` joins the ``n`` tokens starting at
+    ``pos`` with one space, or is None when fewer than ``n`` remain. A
+    None text has no tokens."""
+    if text is None:
+        return []
+    w = text.split(" ")
+    return [
+        (i, t, " ".join(w[i:i + n]) if i + n <= len(w) else None)
+        for i, t in enumerate(w)
+    ]
 
 
 def segments_intersect_np(a: np.ndarray, b: np.ndarray) -> np.ndarray:

@@ -57,24 +57,17 @@ def test_lineage_rows_cover_every_file_and_sum_to_total(spark, tmp_path):
     assert sorted(r["n_rows"] for r in p2.metrics().collect()) == [1000, 1000]
 
 
-def test_bookkeeping_starts_no_spark_job(spark, tmp_path):
+def test_bookkeeping_starts_no_spark_job(spark, spark_jobs, tmp_path):
     """The metrics row and the lineage view come from the driver and the
     parquet footers: neither ``_record`` nor ``lineage()`` runs a job."""
     p = _mk(spark, tmp_path)
     out = p._stage_dir("s")  # a committed stage written outside ``stage``
     spark.range(100).repartition(3).write.parquet(out)
-    sc = spark.sparkContext
-    group = "test-checkpoint-bookkeeping"
-    sc.setJobGroup(group, "checkpoint bookkeeping")
-    try:
+    with spark_jobs() as ids:
         p._record("s", "", out, 0.5)
         lin = p.lineage()
         rows = lin.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert ids == []
     assert sum(r["n_rows"] for r in rows) == 100
     assert {(r["job_id"], r["stage"], r["chunk"]) for r in rows} == {("j1", "s", "")}
     assert lin.schema.simpleString() == (
@@ -110,11 +103,12 @@ def test_chunked_stage_resumes_only_pending_chunks(spark, tmp_path):
     assert sorted(r["id"] for r in out2.collect()) == list(range(300))
 
 
-def test_pipeline_job_end_to_end_and_resume(spark, tmp_path, sf_tiny):
+def test_pipeline_job_end_to_end_and_resume(spark, spark_jobs, tmp_path, sf_tiny):
     """The spark-submit entry point, driven in-process: full run, the
     dedup and train-set stages checked against their DuckDB oracles over
-    the job's own inputs, then a resume run that recomputes nothing and
-    returns identical counts."""
+    the job's own inputs, then a resume run that recomputes nothing,
+    starts no Spark job (each stage is read back with the schema its
+    footers recorded at commit) and returns identical counts."""
     import jobs.run_pipeline as rp
     from tests.oracle_util import assert_matches
     from tree_sitter_codeviews_spark import oracle
@@ -146,5 +140,7 @@ def test_pipeline_job_end_to_end_and_resume(spark, tmp_path, sf_tiny):
 
     # resume: no stage dirs are recomputed (metrics row count unchanged)
     n_metrics_before = p.metrics().count()
-    rp.main(argv, spark=spark)
+    with spark_jobs() as ids:
+        rp.main(argv, spark=spark)
+    assert ids == []
     assert Pipeline(spark, str(root), "e2e").metrics().count() == n_metrics_before

@@ -77,6 +77,26 @@ def test_fingerprint_matches_python(spark, sf_tiny):
     assert fps[1] != fps[2]
 
 
+@pytest.mark.parametrize("by_doc", [True, False])
+def test_tokens_df_matches_reference(spark, by_doc):
+    """The one token and n-gram build against its Python reference for
+    n = 1..4: shingles padded to NULL at the doc's end, an empty token, an
+    empty text and a NULL text; the other columns of ``docs`` ride along."""
+    texts = ["", "a", "a b", "a  b", "a b c d e f", None]
+    df = spark.createDataFrame(
+        [(i, t, f"x{i}") for i, t in enumerate(texts)],
+        "doc_id long, text string, tag string",
+    )
+    for n in range(1, 5):
+        built = dedup.tokens_df(df, n, by_doc=by_doc)
+        assert built.columns == ["doc_id", "tag", "pos", "tok", "shingle"]
+        want = sorted(
+            (i, f"x{i}", *row)
+            for i, t in enumerate(texts) for row in reference_impl.tokens_py(t, n)
+        )
+        assert sorted(tuple(r) for r in built.collect()) == want, n
+
+
 def test_lsh_bucketed_topk_runs(spark, sf_tiny):
     embs = load_table(spark, sf_tiny, "embeddings")
     out = ann.lsh_bucketed_topk(embs, k=5, every=100)

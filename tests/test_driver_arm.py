@@ -17,6 +17,21 @@ def test_distributed_arm_fixture_forces_none(spark, distributed_arm):
     assert driver_arm.collect_if_small(spark.range(1), 10) is not None
 
 
+def test_arrow_local_df_starts_no_job(spark, spark_jobs):
+    """A driver-built frame is a local relation at every row count, so
+    collecting it starts no Spark job, empty or not."""
+    from tree_sitter_codeviews_spark.localdf import arrow_local_df
+
+    schema = "a int, b string, c double, d boolean"
+    rows = [(1, "x", 0.5, True), (2, None, None, None)]
+    with spark_jobs() as ids:
+        got = [arrow_local_df(spark, r, schema).collect() for r in ([], rows)]
+    assert ids == []
+    assert got == [[], [tuple(r) for r in rows]]
+    assert arrow_local_df(spark, [], schema).schema.simpleString() == (
+        "struct<a:int,b:string,c:double,d:boolean>")
+
+
 # Every zero-argument ``.collect()``, ``.first()`` and ``.toPandas()`` in
 # the package outside driver_arm, counted per (module, function). Each site
 # states its size bound in a ``# bound:`` comment; an input with no bound

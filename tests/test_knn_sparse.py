@@ -5,6 +5,7 @@ exact brute-force answer."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tree_sitter_codeviews_spark import layers
@@ -51,6 +52,13 @@ def test_knn_ring_corpus_smaller_than_k(spark):
         per_q.setdefault(r.doc_id, []).append(r.rank)
     assert set(per_q) == {0, 1, 2}
     assert all(sorted(v) == [1, 2] for v in per_q.values())
+
+
+def test_knn_ring_refuses_grid_wider_than_ring_cap(spark):
+    # the doubling rings reach RING_CAP = 128 cells: res 7 (128 cells
+    # across) is the finest grid they cover, res 8 is refused up front
+    with pytest.raises(ValueError, match="res 8"):
+        knn.knn_ring(_sparse_points(spark), spark, k=3, res=8)
 
 
 def test_distance_join_hand_graph_and_lossless_blocking(spark):

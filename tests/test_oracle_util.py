@@ -154,6 +154,58 @@ def test_queries_and_oracle_write_each_block_once():
         assert _repeated_block_lines(path) == 0, path.name
 
 
+def test_text_family_writes_ngram_build_and_md5_hash_once():
+    """The package has one word-n-gram build, ``dedup.tokens_df`` (the only
+    ``arrays_zip`` call), no window ``lead``/``lag`` chain over ``tok``,
+    and one 28-bit md5-uniform hash, ``dedup.md5_uniform`` (the only
+    ``substring(md5(..), 1, 7)``). The oracle's SQL text is not a call."""
+    import ast
+    import pathlib
+
+    from tree_sitter_codeviews_spark import queries
+
+    pkg = pathlib.Path(queries.__file__).parent
+
+    def called(node) -> str | None:
+        f = node.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    def is_tok(arg) -> bool:
+        if isinstance(arg, ast.Call) and called(arg) == "col" and arg.args:
+            arg = arg.args[0]
+        return isinstance(arg, ast.Constant) and arg.value == "tok"
+
+    def is_md5_prefix(node) -> bool:
+        a = node.args
+        return (len(a) == 3 and isinstance(a[0], ast.Call) and called(a[0]) == "md5"
+                and [getattr(x, "value", None) for x in a[1:]] == [1, 7])
+
+    sites: dict[str, list[str]] = {"arrays_zip": [], "tok window": [], "md5 prefix": []}
+    for path in sorted(pkg.rglob("*.py")):
+        module = path.relative_to(pkg).as_posix()
+
+        def visit(node, func):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            if isinstance(node, ast.Call):
+                name = called(node)
+                if name == "arrays_zip":
+                    sites["arrays_zip"].append(f"{module}:{func}")
+                if name in ("lead", "lag") and node.args and is_tok(node.args[0]):
+                    sites["tok window"].append(f"{module}:{func}")
+                if name == "substring" and is_md5_prefix(node):
+                    sites["md5 prefix"].append(f"{module}:{func}")
+            for child in ast.iter_child_nodes(node):
+                visit(child, func)
+
+        visit(ast.parse(path.read_text(), str(path)), None)
+    assert sites == {
+        "arrays_zip": ["operators/dedup.py:tokens_df"],
+        "tok window": [],
+        "md5 prefix": ["operators/dedup.py:md5_uniform"],
+    }
+
+
 # Package definitions that no non-test code uses, each with its reason.
 UNCALLED_ALLOWED = {
     "sources/sinks.py:graph_to_dot": "exports the reference CLI's DOT output format",

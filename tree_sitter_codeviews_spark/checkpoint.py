@@ -21,7 +21,9 @@ Layout:
                                                (job_id, stage, chunk, n_rows,
                                                wall_s, recorded_at)
 
-The bookkeeping runs no Spark job. Lineage is a view, not a table: one
+The bookkeeping runs no Spark job, and neither does reading a committed
+stage back: the read takes the schema Spark recorded in the parquet footers
+at commit instead of inferring it. Lineage is a view, not a table: one
 (stage, chunk, file, n_rows) row per parquet file of every committed stage
 or chunk directory, with ``n_rows`` read from the file's footer. It always
 describes the bytes a resume will read, so a recomputed stage cannot leave
@@ -33,6 +35,7 @@ leaves a partial file for ``metrics()`` to read.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import time
 import uuid
@@ -41,6 +44,7 @@ from collections.abc import Callable, Iterator, Sequence
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from tree_sitter_codeviews_spark.localdf import arrow_local_df
 
@@ -49,10 +53,22 @@ def _complete(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _parquet_files(out_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(glob.escape(out_dir), "*.parquet")))
+
+
 def _footer_rows(out_dir: str) -> list[tuple[str, int]]:
     """(file, n_rows) of each parquet file of an output directory."""
-    return [(f, pq.read_metadata(f).num_rows)
-            for f in sorted(glob.glob(os.path.join(glob.escape(out_dir), "*.parquet")))]
+    return [(f, pq.read_metadata(f).num_rows) for f in _parquet_files(out_dir)]
+
+
+def _committed_schema(out_dir: str) -> T.StructType:
+    """The Spark schema a committed output directory was written with, from
+    the row metadata Spark stores in every parquet footer. Reading with it
+    skips the schema-inference job a bare ``spark.read.parquet`` runs."""
+    meta = pq.read_metadata(_parquet_files(out_dir)[0]).metadata
+    return T.StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"]))
 
 
 class Pipeline:
@@ -105,7 +121,7 @@ class Pipeline:
             compute().write.mode("overwrite").parquet(out)
             self._record(name, "", out, time.monotonic() - t0)
             self.recomputed.append(name)
-        return self.spark.read.parquet(out)
+        return self.spark.read.schema(_committed_schema(out)).parquet(out)
 
     def chunked_stage(
         self,
@@ -114,7 +130,8 @@ class Pipeline:
         compute_chunk: Callable[[str], DataFrame],
     ) -> DataFrame:
         """Stage split into independently-committed chunks (e.g. Hilbert
-        key ranges). Resume recomputes only pending chunks."""
+        key ranges). Resume recomputes only pending chunks. The ``chunk``
+        partition column comes from the chunk directory names."""
         base = self._stage_dir(name)
         pending = [c for c in chunks if not _complete(os.path.join(base, f"chunk={c}"))]
         for c in pending:
@@ -123,8 +140,10 @@ class Pipeline:
             compute_chunk(c).write.mode("overwrite").parquet(out)
             self._record(name, c, out, time.monotonic() - t0)
             self.recomputed.append(f"{name}/{c}")
-        return self.spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, f"chunk={c}") for c in chunks]
+        paths = [os.path.join(base, f"chunk={c}") for c in chunks]
+        return (
+            self.spark.read.schema(_committed_schema(paths[0]))
+            .option("basePath", base).parquet(*paths)
         )
 
     def lineage(self) -> DataFrame:

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..localdf import arrow_local_df
 
-from .dedup import shingles_df
+from .dedup import md5_uniform, shingles_df, tokens_df
 
 # simple, RE2-compatible patterns evaluated identically by Spark
 # (java.util.regex) and DuckDB (RE2): no lookaround, no lazy quantifiers.
@@ -191,7 +191,7 @@ def strip_boilerplate(
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document (Rae et al. 2021 §A1.1:
     'fraction of characters in the most common n-gram' / duplicate-n-gram
     filters — the standard web-corpus quality gate alongside length and
@@ -206,25 +206,10 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     uniform (no corpus-wide hot key; a single pathological giant doc is
     bounded upstream by ingest length caps). Docs with <2 words have no
     2-gram and drop out, matching the oracle's empty generate_series."""
-    # 2-gram formation array-side with non-lambda native ops (the
-    # shingles_df idiom): arrays_zip of two staggered slices of the token
-    # array, explode, concat_ws — whole-stage codegen with NO per-doc
-    # window sort. Same gram multiset: slice length clamps to zero for
-    # docs with <2 words. (transform/element_at HOF lambdas would be
-    # interpreted expression-eval — still avoided.)
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    wtok = F.split(F.col(text_col), " ")
-    ln2 = F.greatest(F.size(wtok) - F.lit(1), F.lit(0))
-    z2 = F.arrays_zip(F.slice(wtok, 1, ln2).alias("t0"),
-                      F.slice(wtok, 2, ln2).alias("t1"))
-    grams = (
-        docs.repartition(n_part, "doc_id")
-        .select("doc_id", F.explode(z2).alias("z"))
-        .select("doc_id", F.concat_ws(
-            " ", F.col("z").getField("t0"), F.col("z").getField("t1")
-        ).alias("gram"))
-    )
-    per_gram = grams.groupBy("doc_id", "gram").agg(F.count("*").alias("cnt"))
+    # the 2-grams of the one n-gram build (``dedup.tokens_df``): its doc
+    # exchange feeds both per-doc aggregates
+    grams = tokens_df(docs, 2).filter(F.col("shingle").isNotNull())
+    per_gram = grams.groupBy("doc_id", "shingle").agg(F.count("*").alias("cnt"))
     return per_gram.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_grams"),
         F.expr("max(cnt) * 1000000 div sum(cnt)").alias("top_gram_ppm"),
@@ -303,7 +288,7 @@ def source_mix(
     )
 
 
-def familiarity_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def familiarity_stats(docs: DataFrame) -> DataFrame:
     """Corpus-LM familiarity scoring — the integer-exact stand-in for
     CCNet's perplexity buckets (Wenzek et al. 2020 §4.3: score each doc
     with an LM trained on the corpus/reference distribution, bucket by
@@ -328,9 +313,8 @@ def familiarity_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     deterministic) — a window over an aggregate dim, not the corpus: no
     skew funnel.
     """
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = tokens_df(docs, by_doc=False).select("doc_id", "tok").filter(
+        F.col("tok") != "")
     vocab = toks.groupBy("tok").agg(F.count("*").alias("freq"))
     w = Window.orderBy(F.col("freq").desc(), F.col("tok").asc())
     model = vocab.withColumn("zipf_rank", F.row_number().over(w))
@@ -531,16 +515,15 @@ def dsir_weights(
     docs: DataFrame,
     target_lang: str = "en",
     buckets: int = 1024,
-    text_col: str = "text",
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, arXiv:2302.03169):
     score each doc by how much its hashed-n-gram features look like a
     TARGET distribution relative to the raw corpus, for importance
     resampling toward the target.
 
-    Features are word bigrams hashed into ``buckets`` (md5 28-bit prefix —
-    the engine↔oracle-portable hasher, as in ``textstats``); the per-bucket
-    log-ratio uses the BIT-LENGTH log2 proxy ``bitlen(count+1)`` =
+    Features are word bigrams hashed into ``buckets`` (``md5_uniform``,
+    the engine↔oracle-portable hasher); the per-bucket log-ratio uses the
+    BIT-LENGTH log2 proxy ``bitlen(count+1)`` =
     ``length(bin(count+1))`` — exact integer, identical in Spark and DuckDB,
     monotone in the count, so bucket ratios rank the same way the float
     ``log p_target/p_raw`` would at the resolution that matters for
@@ -552,33 +535,17 @@ def dsir_weights(
     (uniform by hashing), and scoring is one broadcast join + one per-doc
     rollup. Nothing collects.
     """
-    # Bigram features array-side with non-lambda native ops (the
-    # shingles_df / repetition_stats idiom): arrays_zip of two staggered
-    # slices, explode, concat_ws — codegen, no per-doc window sort,
-    # identical bigram multiset (slice length clamps to zero for docs
-    # with <2 words). ``bg`` feeds THREE consumers (raw dist, target
-    # dist, scoring join) — materialize it once; recomputing the
+    # Bigram features are the 2-grams of ``dedup.tokens_df``, with
+    # ``lang`` riding along. ``bg`` feeds THREE consumers (raw dist,
+    # target dist, scoring join) — materialize it once; recomputing the
     # explode+md5 pass per consumer profiled as 3 single-task ~600 ms
     # stages (at cluster scale this is a checkpoint stage table, the
     # minhash ``sh`` discipline).
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    wtok = F.split(F.col("text"), " ")
-    lnb = F.greatest(F.size(wtok) - F.lit(1), F.lit(0))
-    zb = F.arrays_zip(F.slice(wtok, 1, lnb).alias("t0"),
-                      F.slice(wtok, 2, lnb).alias("t1"))
     bg = (
-        docs.select("doc_id", "lang", F.col(text_col).alias("text"))
-        .repartition(n_part, "doc_id")
-        .select("doc_id", "lang", F.explode(zb).alias("z"))
-        .select("doc_id", "lang", F.concat_ws(
-            " ", F.col("z").getField("t0"), F.col("z").getField("t1")
-        ).alias("g"))
-        .withColumn(
-            "b",
-            F.conv(F.substring(F.md5(F.col("g")), 1, 7), 16, 10).cast("long")
-            % buckets,
-        )
-        .select("doc_id", "lang", "b")
+        tokens_df(docs, 2)
+        .filter(F.col("shingle").isNotNull())
+        .select("doc_id", "lang",
+                (md5_uniform(F.col("shingle")) % buckets).alias("b"))
         .localCheckpoint()
     )
     raw = bg.groupBy("b").agg(F.count(F.lit(1)).alias("rc"))

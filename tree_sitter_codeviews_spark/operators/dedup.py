@@ -33,59 +33,69 @@ LSH_BANDS = 16
 LSH_ROWS = 4  # bands * rows == perms
 
 
-def tokens_df(docs: DataFrame, by_doc: bool = True) -> DataFrame:
-    """(doc_id, pos, tok) — native split + posexplode.
+def tokens_df(docs: DataFrame, n: int = 1, by_doc: bool = True) -> DataFrame:
+    """The engine's one token and word-n-gram build: every token position
+    of every document as ``(pos, tok, shingle)`` after the other columns of
+    ``docs`` (``text`` is consumed). ``shingle`` is the ``n``-gram that
+    starts at ``pos`` (its tokens joined by one space), NULL in the last
+    ``n - 1`` positions, where fewer than ``n`` tokens remain; with
+    ``n = 1`` it is the token itself.
 
-    With ``by_doc`` (the default — every doc-keyed consumer) the
-    documents are hash-repartitioned on doc_id BEFORE the explode: the
-    consumer's window/aggregate needs that exchange anyway, so placing it
-    first means the one shuffle carries each doc's text bytes once
-    instead of its exploded (doc_id, pos, tok) rows (guide: explode after
-    the shuffle, shuffle fewer bytes), and the split/posexplode work
-    parallelizes even when the scan is a single row group (one map task
-    otherwise). Token-keyed consumers (BPE's word-count pass) pass
-    ``by_doc=False`` — a doc exchange would be pure overhead there."""
+    One ``posexplode`` over a full-length staggered ``arrays_zip``: slice
+    ``i < n`` of the ``split`` token array starts at token ``i``, and
+    ``arrays_zip`` pads the shorter slices with NULL (with ``n = 1`` the
+    token array itself is exploded). ``slice`` and ``arrays_zip`` are not
+    lambdas, so the build stays in whole-stage codegen, and no consumer
+    needs a per-doc window sort to see the next ``n - 1`` tokens (a window
+    ``lead`` chain profiled as the dominant CPU of every shingle consumer;
+    a lambda HOF formulation measured 30 s against ~2 s on 2.5M tokens).
+    A NULL text has no rows; an empty text is one empty token.
+
+    With ``by_doc`` (every doc-keyed consumer) the documents are
+    hash-repartitioned on doc_id BEFORE the explode: the consumer's
+    window or aggregate needs that exchange anyway, so the one shuffle
+    carries each doc's text bytes once instead of its exploded rows, and
+    the explode parallelizes even when the scan is a single row group.
+    Token-keyed consumers (BPE's word counts, the bigram LM, the unigram
+    familiarity model) pass ``by_doc=False``: a doc exchange would be pure
+    overhead there."""
     if by_doc:
         n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         docs = docs.repartition(n_part, "doc_id")
-    return docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok")
+    rest = [c for c in docs.columns if c != "text"]
+    w = F.split(F.col("text"), " ")
+    if n == 1:  # a zip of one array would only box each token in a struct
+        gen, grams = F.posexplode(w).alias("pos", "t0"), [F.col("t0")]
+    else:  # split once, in its own projection, rather than once per slice
+        docs, w = docs.select(*rest, w.alias("_w")), F.col("_w")
+        z = F.arrays_zip(w.alias("t0"), *[
+            F.slice(w, i + 1, F.size(w)).alias(f"t{i}") for i in range(1, n)])
+        gen = F.posexplode(z).alias("pos", "z")
+        grams = [F.col(f"z.t{i}") for i in range(n)]
+    return (
+        docs.select(*rest, gen)
+        .select(
+            *rest, "pos", grams[0].alias("tok"),
+            F.when(grams[-1].isNotNull(), F.concat_ws(" ", *grams)).alias("shingle"),
+        )
     )
+
+
+def md5_uniform(s: F.Column) -> F.Column:
+    """The md5-uniform hash of an already-salted string: its md5's first 7
+    hex digits as a long in [0, 16^7), a 28-bit value DuckDB recomputes
+    bit-for-bit. Content-addressed, so every decision drawn from it is
+    identical across partitionings, retries and engines."""
+    return F.conv(F.substring(F.md5(s.cast("binary")), 1, 7), 16, 10).cast("long")
 
 
 def shingle_multiset_df(docs: DataFrame, n: int = 3) -> DataFrame:
     """Positional word n-gram shingle MULTISET per doc: (doc_id, shingle),
-    one row per occurrence. Consumers that count occurrences (dup-ngram
-    fraction, the count-min calibration) use this; set consumers use
-    ``shingles_df``.
-
-    Built array-side with NON-lambda native ops — ``arrays_zip`` of ``n``
-    staggered ``slice``s of the token array, explode, ``concat_ws`` — so
-    the whole build stays in whole-stage codegen with NO window: the
-    former posexplode -> window ``lead`` formulation paid a per-doc sort
-    (plus the doc_id exchange feeding it) that profiled as the dominant
-    CPU of every shingle consumer. Bit-identical rows: slice handles
-    short/empty/null texts (length clamps to 0 -> no rows), and the token
-    stream is the same ``split``. (A transform/element_at HOF formulation
-    also produced the same rows but lambda HOFs are interpreted
-    expression-eval: measured 30s vs ~2s on 2.5M tokens — slice and
-    arrays_zip are not lambdas and codegen.) The repartition keeps the
-    explode parallel off single-row-group scans and pre-clusters by
-    doc_id for the downstream per-doc aggregates."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    w = F.split(F.col("text"), " ")
-    ln = F.greatest(F.size(w) - F.lit(n - 1), F.lit(0))
-    z = F.arrays_zip(*[F.slice(w, i + 1, ln).alias(f"t{i}") for i in range(n)])
-    return (
-        docs.repartition(n_part, "doc_id")
-        .select("doc_id", F.explode(z).alias("z"))
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ", *[F.col("z").getField(f"t{i}") for i in range(n)]
-            ).alias("shingle"),
-        )
-    )
+    one row per occurrence: the non-NULL shingles of ``tokens_df``.
+    Consumers that count occurrences (dup-ngram fraction, the count-min
+    calibration) use this; set consumers use ``shingles_df``."""
+    return tokens_df(docs, n).filter(F.col("shingle").isNotNull()).select(
+        "doc_id", "shingle")
 
 
 def shingles_df(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -289,24 +299,16 @@ def minhash_lsh_dups(
     return cross.unionByName(within)
 
 
-def simhash_df(docs: DataFrame, hasher: str = "xxhash64") -> DataFrame:
+def simhash_df(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): 64-bit SimHash over tokens, fully native.
 
     Per bit i: sum over tokens of ±1 by bit i of hash(token); bit set if
-    sum > 0. 64 sums in one groupBy (single shuffle).
-
-    hasher: 'xxhash64' (fastest, engine-specific — the production path) or
-    'md5' (first 64 bits of md5, bit-identical in DuckDB — the
-    oracle-checkable path; same algorithm, different token hash)."""
-    if hasher == "xxhash64":
-        h = F.xxhash64(F.col("tok"))
-    elif hasher == "md5":
-        # first 16 hex chars -> two's-complement signed 64-bit: conv with a
-        # NEGATIVE target base emits the signed decimal string (ANSI-safe to
-        # cast), matching DuckDB's explicit unsigned->signed wrap
-        h = F.conv(F.substring(F.md5(F.col("tok")), 1, 16), 16, -10).cast("long")
-    else:
-        raise ValueError(f"unknown hasher: {hasher}")
+    sum > 0. 64 sums in one groupBy (single shuffle). The token hash is the
+    first 64 bits of md5, so DuckDB mirrors every simhash bit-for-bit."""
+    # first 16 hex chars -> two's-complement signed 64-bit: conv with a
+    # NEGATIVE target base emits the signed decimal string (ANSI-safe to
+    # cast), matching DuckDB's explicit unsigned->signed wrap
+    h = F.conv(F.substring(F.md5(F.col("tok")), 1, 16), 16, -10).cast("long")
     toks = tokens_df(docs).select("doc_id", h.alias("h"))
     # The 64 per-bit sign sums and the 64-term OR fold are built as SQL
     # text (one F.expr per aggregate / one for the fold) instead of
@@ -332,20 +334,18 @@ def simhash_df(docs: DataFrame, hasher: str = "xxhash64") -> DataFrame:
     return sums.select("doc_id", sim.alias("simhash"))
 
 
-def simhash_near_dups(
-    docs: DataFrame, max_hamming: int = 3, hasher: str = "xxhash64",
-) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Pairs with hamming(simhash) <= max_hamming via 4x16-bit band blocking.
 
     Pigeonhole: hamming <= 3 over 64 bits => at least one of the 4 16-bit
     bands is identical, so the blocking join is *exact* (no recall loss),
-    unlike MinHash-LSH. Verify = native bit_count(xor). With hasher='md5'
-    the whole pipeline (hash -> 64 sign sums -> band blocking -> hamming
-    verify) is mirrored bit-for-bit by the DuckDB oracle."""
+    unlike MinHash-LSH. Verify = native bit_count(xor). The whole pipeline
+    (hash -> 64 sign sums -> band blocking -> hamming verify) is mirrored
+    bit-for-bit by the DuckDB oracle."""
     # sims feeds BOTH sides of the band-blocking self-join; materialize it
     # once (no common-subplan reuse: the 64-aggregate pass would execute
     # twice otherwise, and the duplicated subtree doubles analysis time)
-    sims = simhash_df(docs, hasher=hasher).localCheckpoint()
+    sims = simhash_df(docs).localCheckpoint()
     bands = F.array(*[
         F.struct(
             F.lit(bi).alias("band_idx"),
@@ -748,8 +748,9 @@ def dup_span_scrub(docs: DataFrame, n: int = 3) -> DataFrame:
     shared with ``dup_ngram_stats``).
 
     Engine shape:
-      1. positional n-grams per doc (window ``lead`` over token pos — the
-         ``shingles_df`` codegen-friendly form, multiplicity kept);
+      1. positional n-grams per doc: ``tokens_df(docs, n)``, whose row at
+         token ``pos`` carries the n-gram starting there (multiplicity
+         kept, no per-doc window);
       2. duplicated-shingle dim: per-doc distinct -> df -> ``df >= 2``
          (two aggregates on the shingle key);
       3. flag start positions via one equi-join on the shingle key
@@ -761,8 +762,9 @@ def dup_span_scrub(docs: DataFrame, n: int = 3) -> DataFrame:
       5. per-doc rollup: counts + ordered reassembly of surviving tokens
          (collect_list of (pos, tok) structs, array_sort, join with ' ').
 
-    Shuffles: doc window, shingle agg x2, shingle join, doc rollup — all
-    on the two natural keys; the per-doc windows/rollups partition by
+    Shuffles: the build's doc exchange, shingle agg x2, shingle join, the
+    coverage window's doc exchange (the rollup reuses it) — all on the two
+    natural keys; the per-doc windows/rollups partition by
     doc_id so no single-partition stage appears at any corpus size. The
     reassembled text is byte-deterministic, hence gate-hashable.
 
@@ -770,15 +772,7 @@ def dup_span_scrub(docs: DataFrame, n: int = 3) -> DataFrame:
     when every token of the doc sits under a duplicated span."""
     from pyspark.sql import Window
 
-    toks = tokens_df(docs)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, n)]
-    pos_sh = toks.select(
-        "doc_id", "pos", "tok",
-        F.when(
-            F.lead("tok", n - 1).over(w).isNotNull(), F.concat_ws(" ", *parts)
-        ).alias("shingle"),
-    )
+    pos_sh = tokens_df(docs, n)
     per_doc = (
         pos_sh.filter(F.col("shingle").isNotNull())
         .groupBy("doc_id", "shingle")
@@ -868,7 +862,7 @@ def bloom_prefilter(
     construction, so ``n_bloom_hit >= n_seen_exact`` always (pinned in
     pytest alongside a planted-FP case).
 
-    Determinism: positions are md5-uniform (``_uniform_col`` discipline
+    Determinism: positions are md5-uniform (``md5_uniform`` discipline
     — content-addressed, engine-independent), so the entire audit is
     bit-exact and gate-hashable; the DuckDB oracle rebuilds the identical
     filter. ``m`` is FIXED for oracle parity; production sizes m from the
@@ -880,11 +874,7 @@ def bloom_prefilter(
     side); the exact leg is the one hash-partitioned join, and the output
     is a single aggregate row."""
     def _pos(col: F.Column, i: int) -> F.Column:
-        s = F.concat(F.lit(f"bloom{i}:"), col.cast("string"))
-        return (
-            F.conv(F.substring(F.md5(s.cast("binary")), 1, 7), 16, 10)
-            .cast("long") % m
-        )
+        return md5_uniform(F.concat(F.lit(f"bloom{i}:"), col.cast("string"))) % m
 
     from pyspark.sql.functions import broadcast
 
@@ -969,10 +959,14 @@ def cdc_chunk_stats(
     documents (the df >= 2 rule of the shingle family).
 
     Engine shape (all standard relational moves):
-      1. rolling window hash per position (the ``shingles_df`` lead
-         chain + the md5-uniform discipline) -> boundary flag;
-      2. chunk index = exclusive prefix sum of boundary flags (one
-         per-doc window, ``rowsBetween(unboundedPreceding, -1)``);
+      1. window hash per position: ``md5_uniform`` of the w-gram that
+         ``tokens_df(docs, w)`` emits at its START row ``s`` -> boundary
+         flag on ``s`` for the boundary after the window's last token
+         ``s + w - 1`` (no per-doc window to form it);
+      2. chunk index = prefix sum of the boundary flags that precede
+         token ``p``: a boundary after ``s + w - 1`` precedes ``p``
+         exactly when ``s <= p - w``, so one per-doc window
+         ``rowsBetween(unboundedPreceding, -w)`` counts them;
       3. chunk content = ordered reassembly per (doc, chunk_idx) (the
          ``dup_span_scrub`` collect/sort/join move), keyed by md5;
       4. chunk-hash document frequency -> per-doc rollup in integer ppm.
@@ -984,31 +978,21 @@ def cdc_chunk_stats(
     leave the executors except as hashes."""
     from pyspark.sql import Window
 
-    toks = tokens_df(docs)
-    wn = Window.partitionBy("doc_id").orderBy("pos")
-    # trailing w-token window ENDING at pos: [pos-w+1 .. pos] via lag
-    parts = [F.lag("tok", w - 1 - j).over(wn) for j in range(w)]
-    win = F.when(
-        F.lag("tok", w - 1).over(wn).isNotNull(), F.concat_ws(" ", *parts)
-    )
-    hsh = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("cdc:"), win).cast("binary")),
-                           1, 7), 16, 10).cast("long") % mod
-    )
-    flagged = toks.select(
-        "doc_id", "pos", "tok",
-        F.when(win.isNotNull() & (hsh == 0), 1).otherwise(0).alias("bnd"),
+    # a NULL shingle (fewer than w tokens left) hashes to NULL: no flag
+    hsh = md5_uniform(F.concat(F.lit("cdc:"), F.col("shingle"))) % mod
+    flagged = tokens_df(docs, w).select(
+        "doc_id", "pos", "tok", F.when(hsh == 0, 1).otherwise(0).alias("bnd"),
     )
     cw = (
         Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
+        .rowsBetween(Window.unboundedPreceding, -w)
     )
     idx = flagged.withColumn(
         "chunk_idx", F.coalesce(F.sum("bnd").over(cw), F.lit(0))
     )
     # chunks feeds BOTH the df aggregate and the final join — Spark has no
     # common-subplan reuse, so without the checkpoint the whole upstream
-    # (token explode -> two per-doc windows -> chunk reassembly groupBy)
+    # (token explode -> per-doc window -> chunk reassembly groupBy)
     # executes twice (at cluster scale: a checkpoint stage table)
     chunks = (
         idx.groupBy("doc_id", "chunk_idx")
@@ -1074,11 +1058,8 @@ def countmin_calibration(
     counts = pos_sh.groupBy("shingle").agg(F.count("*").alias("exact_cnt"))
 
     def _pos(sh_col: F.Column, i_col: F.Column) -> F.Column:
-        s = F.concat(F.lit("cm"), i_col.cast("string"), F.lit(":"), sh_col)
-        return (
-            F.conv(F.substring(F.md5(s.cast("binary")), 1, 7), 16, 10)
-            .cast("long") % w
-        )
+        return md5_uniform(
+            F.concat(F.lit("cm"), i_col.cast("string"), F.lit(":"), sh_col)) % w
 
     ivals = F.explode(F.array(*[F.lit(i) for i in range(d)])).alias("i")
     grid = (
@@ -1166,7 +1147,7 @@ def split_leakage_audit(
     same-host copies together by construction, so only cross-host
     duplication can straddle.
 
-    Both split decisions use the deterministic md5-uniform of
+    Both split decisions use the deterministic ``md5_uniform`` through
     ``textstats._uniform_col`` (content-addressed — reproducible across
     partitioning/retries/engines, the same discipline as
     ``stratified_sample``; the DuckDB oracle recomputes the identical

@@ -13,8 +13,9 @@ whole cells away along some axis, i.e. at planar-degree distance
 ``>= t * (180 / 2^res)`` (the smaller of the two cell extents). So once a
 query holds k candidates whose worst distance is within that bound, no
 outside point can displace them — the query is resolved. Unresolved queries
-expand the annulus; stragglers (empty regions) fall back to a brute-force
-pass, which at that point involves only a tiny remainder.
+expand the annulus, doubling its radius until it covers the whole grid, so
+the last ring's candidates are complete for every query left: no
+brute-force pass exists.
 
 Distance = squared planar degrees (deterministic: *,+,- only), ties broken by
 neighbor id — bit-reproducible against the DuckDB brute-force oracle.
@@ -28,7 +29,9 @@ from ..localdf import arrow_local_df
 
 from .. import cells, driver_arm, layers
 
-DEFAULT_SCHEDULE = (1, 2, 4, 8, 16)
+# Largest ring radius in cells: the driver-built offset table of a ring has
+# (2t+1)^2 rows, so a grid wider than RING_CAP + 1 cells is refused.
+RING_CAP = 128
 # Driver-arm cap in points: the arm is O(N²) (blocked distance matrices),
 # and 20k² double ops stay sub-second in numpy.
 DRIVER_POINTS_CAP = 20_000
@@ -55,7 +58,6 @@ def knn_ring(
     k: int = 5,
     res: int = 5,
     id_col: str = "doc_id",
-    schedule: tuple[int, ...] = DEFAULT_SCHEDULE,
     grid_res: int = layers.GRID_RES,
 ) -> DataFrame:
     """points(id, gx, gy, lon, lat) -> (id, neighbor_id, rank, dist_sq).
@@ -69,9 +71,16 @@ def knn_ring(
     stages at sf0.1). The arm mirrors ``_dist_sq``'s exact IEEE expression
     and the (dist_sq asc, nid asc) tie order, so rows are bit-identical
     (pinned by test); above the cap (e.g. the sf2 bench point) the ring
-    loop below runs unchanged."""
+    loop below runs unchanged.
+
+    Raises ``ValueError`` when the ``res`` grid is wider than
+    ``RING_CAP + 1`` cells (``res >= 8``): its rings could not cover it."""
     shift = grid_res - res
     n = 1 << res
+    if n - 1 > RING_CAP:
+        raise ValueError(
+            f"knn_ring: res {res} grid is {n} cells wide; the rings reach "
+            f"at most {RING_CAP} cells (res <= 7)")
     min_cell_deg = 180.0 / n
 
     base = points.select(
@@ -102,23 +111,11 @@ def knn_ring(
 
     w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(), F.col("nid").asc())
 
-    # dynamic schedule (round-1 watch item: the old fallback crossJoined the
-    # unresolved set against the whole index with no cap). After the fixed
-    # rings, keep doubling the radius until the annulus covers the whole grid
-    # (t = n-1 reaches every cell from any query position) or hits RING_CAP
-    # (beyond which the driver-side offset table would explode — (2t+1)^2
-    # rows). If coverage becomes total in-ring, every candidate set is
-    # complete and NO brute-force pass exists at all; only on grids finer
-    # than RING_CAP does a final complete round run, and then only over the
-    # provably-straggler queries that found <k neighbors within RING_CAP
-    # cells (logged via their count, see below).
-    ring_cap = 128
-    ts = [t for t in schedule if t < n - 1]
-    t_last = ts[-1] if ts else 0
-    while t_last < min(ring_cap, n - 1):
-        t_last = min(2 * t_last if t_last else 1, ring_cap, n - 1)
-        ts.append(t_last)
-    covers_grid = ts[-1] >= n - 1
+    # ring radii 1, 2, 4, ... doubling up to n-1, the radius that reaches
+    # every cell from any query position
+    ts = [1]
+    while ts[-1] < n - 1:
+        ts.append(min(2 * ts[-1], n - 1))
 
     prev_t = -1  # ring 0 (own cell) included in first annulus
     for t in ts:
@@ -162,33 +159,12 @@ def knn_ring(
             break
         prev_t = t
 
-    if best is not None and covers_grid:
-        # rings covered the entire grid, so the surviving topk-so-far is
-        # complete by construction (these are only queries on a corpus with
-        # fewer than k+1 points) — accept it, no extra scan
+    if best is not None:
+        # the last ring covered the entire grid, so the surviving
+        # topk-so-far is complete by construction (these are only queries
+        # on a corpus with fewer than k+1 points) — accept it, no extra scan
         resolved_parts.append(
             best.withColumn("rank", F.row_number().over(w))
-            .select("qid", "nid", "rank", "dist_sq")
-            .localCheckpoint()
-        )
-    elif best is not None:
-        # grid finer than ring_cap: final complete round over the straggler
-        # queries only. Work = n_stragglers × index size — measured and
-        # bounded by construction (each straggler provably has <k neighbors
-        # within ring_cap cells, so this tail IS the data's sparsity).
-        n_strag = unresolved.count()
-        print(f"knn_ring: final complete round over {n_strag} straggler queries")
-        all_pairs = (
-            unresolved.crossJoin(idx.drop("cell"))
-            .filter(F.col("qid") != F.col("nid"))
-            .select(
-                "qid", "nid",
-                _dist_sq(F.col("qlon"), F.col("qlat"), F.col("nlon"), F.col("nlat")).alias("dist_sq"),
-            )
-        )
-        resolved_parts.append(
-            all_pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
             .select("qid", "nid", "rank", "dist_sq")
             .localCheckpoint()
         )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from .. import driver_arm
 from ..localdf import arrow_local_df
 from . import graph_iter
+from .dedup import md5_uniform
 
 # PageRank in micro-units: damping 0.85 as the exact rational 85/100,
 # teleport mass 0.15 * 1e6 = 150000. All divisions are integer `div` with
@@ -639,11 +640,7 @@ def label_propagation(
     und = w.select("src", "dst", "n").unionAll(
         w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "n")
     ).localCheckpoint()
-    lbl = nodes.select(
-        "host",
-        F.conv(F.substring(F.md5(F.col("host")), 1, 7), 16, 10)
-        .cast("long").alias("lbl"),
-    )
+    lbl = nodes.select("host", md5_uniform(F.col("host")).alias("lbl"))
     for _ in range(iterations):
         cnt = (
             und.join(lbl.withColumnRenamed("host", "src"), "src")

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .dedup import md5_uniform, tokens_df
+
 STOPWORDS = ("the", "a")
 
 
@@ -125,9 +127,8 @@ _FP_MOD = (1 << 31) - 1
 
 def fingerprint_col(text: F.Column) -> F.Column:
     """Native order-sensitive rolling hash: md5 per token + int64 fold."""
-    th = lambda t: F.conv(F.substring(F.md5(t.cast("binary")), 1, 7), 16, 10).cast("long")  # noqa: E731
     return F.aggregate(
-        F.transform(F.split(text, " "), th),
+        F.transform(F.split(text, " "), md5_uniform),
         F.lit(0).cast("long"),
         lambda acc, v: (acc * _FP_BASE + v) % _FP_MOD,
     )
@@ -147,8 +148,8 @@ def fingerprints(docs: DataFrame) -> DataFrame:
 # Content-hash sampling, NOT rand()/sample(): the decision for a document is
 # a pure function of its id, so it is identical across partitionings, retries
 # and engines (rand-based sample() is partitioning-dependent and can't be
-# oracle-checked). u(doc) = first 7 md5 hex digits of the id string -> uniform
-# int in [0, 16^7); the same idiom the fingerprint column uses.
+# oracle-checked). u(doc) = ``md5_uniform`` of the salted id string -> uniform
+# int in [0, 16^7); the same hash the fingerprint column uses per token.
 
 SAMPLE_RATES = {"en": 0.5, "de": 0.3, "fr": 0.3}   # per-language keep rates
 SAMPLE_DEFAULT_RATE = 0.1
@@ -159,8 +160,7 @@ _U_MAX = 16 ** 7
 
 def _uniform_col(key: F.Column, salt: str) -> F.Column:
     """Deterministic uniform int in [0, 16^7) from (salt, key)."""
-    s = F.concat(F.lit(salt), key.cast("string"))
-    return F.conv(F.substring(F.md5(s.cast("binary")), 1, 7), 16, 10).cast("long")
+    return md5_uniform(F.concat(F.lit(salt), key.cast("string")))
 
 
 def stratified_sample(docs: DataFrame) -> DataFrame:
@@ -207,7 +207,7 @@ def normalized_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def bigram_lm(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
+def bigram_lm(docs: DataFrame, k: int = 3) -> DataFrame:
     """Count-based bigram LM induction: per token the top-``k`` next-token
     continuations with exact integer conditional probability
     (``cnt * 1e6 div first_cnt`` ppm) — the n-gram LM backbone of corpus
@@ -215,24 +215,20 @@ def bigram_lm(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
     the familiarity operator consumes unigram stats, this is the order-2
     table).
 
-    Positional bigrams via slice-pair zip (no self-join), one
-    (token, next) aggregate, the first-token marginal derived FROM the
+    Positional bigrams are the 2-grams of ``tokens_df`` (no self-join, no
+    doc exchange: every aggregate here is token-keyed), one (token, next)
+    aggregate, the first-token marginal derived FROM the
     bigram table (sum over continuations — the proper conditional
     denominator), and a per-token row_number window whose partitions are
     bounded by vocabulary fan-out, not corpus size."""
-    toks = docs.select(
-        F.split(F.col(text_col), " ").alias("w")
-    ).filter(F.size("w") >= 2)
-    # arrays_zip (native, codegen) instead of a zip_with struct lambda —
-    # HOF lambdas are interpreted expression-eval; same pair multiset
-    pairs = toks.select(
-        F.explode(
-            F.arrays_zip(
-                F.slice(F.col("w"), 1, F.size("w") - 1).alias("token"),
-                F.slice(F.col("w"), 2, F.size("w") - 1).alias("next_token"),
-            )
-        ).alias("p")
-    ).select("p.token", "p.next_token")
+    # a token never holds a space, so the 2-gram's one space ends ``tok``
+    # and the next token is the text after it
+    pairs = tokens_df(docs, 2, by_doc=False).filter(
+        F.col("shingle").isNotNull()
+    ).select(
+        F.col("tok").alias("token"),
+        F.substring_index("shingle", " ", -1).alias("next_token"),
+    )
     bg = pairs.groupBy("token", "next_token").agg(F.count("*").alias("cnt"))
     first = bg.groupBy("token").agg(F.sum("cnt").alias("first_cnt"))
     w = Window.partitionBy("token").orderBy(

@@ -931,11 +931,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole pipeline (hash -> 64 sign sums -> pigeonhole band blocking ->
     hamming verify) is oracle-checked against the SEMANTIC predicate
     (quadratic bit_count(xor) <= 3 over the same simhashes), which also
-    proves the 4x16-bit blocking is lossless. The xxhash64 production
-    hasher stays available (engine-specific, determinism pytest-pinned)."""
+    proves the 4x16-bit blocking is lossless. md5 is the one token hasher:
+    an engine-only hasher would have no oracle to check it against."""
     from .operators import dedup
 
-    return dedup.simhash_near_dups(_docs(spark, sf_dir), max_hamming=3, hasher="md5")
+    return dedup.simhash_near_dups(_docs(spark, sf_dir), max_hamming=3)
 
 
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
