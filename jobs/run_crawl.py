@@ -41,6 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from tree_sitter_codeviews_spark import queries
 from tree_sitter_codeviews_spark.checkpoint import Pipeline
 from tree_sitter_codeviews_spark.operators import curation, linkgraph, webtext
 from tree_sitter_codeviews_spark.session import get_spark
@@ -50,12 +51,10 @@ def _fetched_pages(spark, sf_dir: str):
     """Deterministic fetched-page table (doc_id, url, html) — the linked-
     page fixture shared with the webtext gate queries (absolute +
     root-relative anchors, droppable hrefs, nested markup)."""
-    from tree_sitter_codeviews_spark.queries import _linked_pages
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", "text"
     )
-    return _linked_pages(docs)
+    return queries._linked_pages(docs)
 
 
 def _rank(hg, iterations: int):
@@ -113,39 +112,9 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
     pages = pipe.stage("pages", lambda: _fetched_pages(spark, args.sf_dir))
 
-    rec = F.format_string(
-        "WARC/1.0\nWARC-Target-URI: %s\nContent-Length: %d\n\n%s\n\n",
-        F.col("url"), F.length("html"), F.col("html"),
-    )
-    blobs = pipe.stage(
-        "blobs",
-        lambda: pages.select(
-            F.expr("doc_id div 5").alias("blob_id"),
-            F.struct("doc_id", rec.alias("rec")).alias("s"),
-        )
-        .groupBy("blob_id")
-        .agg(
-            F.array_join(
-                F.transform(F.array_sort(F.collect_list("s")),
-                            lambda s: s["rec"]),
-                "",
-            ).alias("payload")
-        ),
-    )
-
+    blobs = pipe.stage("blobs", lambda: queries.crawl_blobs(pages))
     records = pipe.stage("records", lambda: webtext.warc_split(blobs))
-
-    extracted = pipe.stage(
-        "extracted",
-        lambda: webtext.html_extract(
-            records.select(
-                (F.col("blob_id") * 8 + F.col("rec_idx")).alias("doc_id"),
-                "uri",
-                F.col("body").alias("html"),
-            ),
-            keep=("uri",),
-        ),
-    )
+    extracted = pipe.stage("extracted", lambda: queries.crawl_extract(records))
 
     pipe.stage(
         "quality",

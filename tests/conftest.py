@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import contextlib
+import itertools
 
 import pytest
 from pyspark.sql import SparkSession
@@ -45,12 +46,15 @@ def distributed_arm(monkeypatch):
 @pytest.fixture
 def spark_jobs(spark):
     """Context manager that lists the Spark jobs started inside it:
-    ``with spark_jobs() as ids: ...``, then ``assert ids == []``."""
+    ``with spark_jobs() as ids: ...``, then ``assert ids == []``. Each
+    block has its own job group, so two blocks in one test never share
+    jobs."""
+    seq = itertools.count()
 
     @contextlib.contextmanager
     def started():
         sc = spark.sparkContext
-        group = f"test-jobs-{id(started)}"
+        group = f"test-jobs-{id(started)}-{next(seq)}"
         ids: list[int] = []
         sc.setJobGroup(group, "jobs started by the test block")
         try:

@@ -59,7 +59,9 @@ def test_lineage_rows_cover_every_file_and_sum_to_total(spark, tmp_path):
 
 def test_bookkeeping_starts_no_spark_job(spark, spark_jobs, tmp_path):
     """The metrics row and the lineage view come from the driver and the
-    parquet footers: neither ``_record`` nor ``lineage()`` runs a job."""
+    parquet footers: neither ``_record`` nor ``lineage()`` runs a job, and
+    ``metrics()`` reads with the fixed metrics schema instead of inferring
+    one."""
     p = _mk(spark, tmp_path)
     out = p._stage_dir("s")  # a committed stage written outside ``stage``
     spark.range(100).repartition(3).write.parquet(out)
@@ -67,12 +69,12 @@ def test_bookkeeping_starts_no_spark_job(spark, spark_jobs, tmp_path):
         p._record("s", "", out, 0.5)
         lin = p.lineage()
         rows = lin.collect()
+        met = p.metrics()
     assert ids == []
     assert sum(r["n_rows"] for r in rows) == 100
     assert {(r["job_id"], r["stage"], r["chunk"]) for r in rows} == {("j1", "s", "")}
     assert lin.schema.simpleString() == (
         "struct<job_id:string,stage:string,chunk:string,file:string,n_rows:bigint>")
-    met = p.metrics()
     assert met.schema.simpleString() == (
         "struct<job_id:string,stage:string,chunk:string,n_rows:bigint,"
         "wall_s:double,recorded_at:double>")

@@ -22,7 +22,7 @@ def test_kmeans_assignment_is_exact_argmin(spark, sf_tiny):
     (ties to the lowest id), recomputed independently in numpy."""
     embs = load_table(spark, sf_tiny, "embeddings")
     cmat = reference_impl.kmeans_fit(embs, k=8, iters=2)
-    got = cluster.kmeans_assign(embs, k=8, iters=2).orderBy("vec_id").collect()
+    got = cluster.kmeans_assign(embs).orderBy("vec_id").collect()
     q = np.array(
         [r["qv"] for r in dedup.quantized_df(embs).orderBy("vec_id").collect()],
         dtype=np.int64,
@@ -58,7 +58,7 @@ def test_semantic_dups_subset_of_brute_near_dups(spark, sf_tiny):
     embs = load_table(spark, sf_tiny, "embeddings")
     sem = {
         (r["vec_id_a"], r["vec_id_b"]): r["cos_q"]
-        for r in cluster.semantic_dups(embs, k=8, iters=2, threshold=0.4).collect()
+        for r in cluster.semantic_dups(embs).collect()
     }
     brute = {
         (r["vec_id_a"], r["vec_id_b"]): r["cos_q"]
@@ -76,11 +76,11 @@ def test_semantic_dups_complete_within_clusters(spark, sf_tiny):
     embs = load_table(spark, sf_tiny, "embeddings")
     sem = {
         (r["vec_id_a"], r["vec_id_b"])
-        for r in cluster.semantic_dups(embs, k=8, iters=2, threshold=0.4).collect()
+        for r in cluster.semantic_dups(embs).collect()
     }
     asg = {
         r["vec_id"]: r["cluster"]
-        for r in cluster.kmeans_assign(embs, k=8, iters=2).collect()
+        for r in cluster.kmeans_assign(embs).collect()
     }
     brute_same_cluster = {
         (r["vec_id_a"], r["vec_id_b"])
@@ -120,7 +120,7 @@ def test_rect_overlay_matches_brute_force_each_pair_once(spark):
     b = spark.createDataFrame(b_rows, "b_id long, bx0 long, by0 long, bx1 long, by1 long")
     got = [
         (r["a_id"], r["b_id"], r["ix0"], r["iy0"], r["ix1"], r["iy1"], r["area"])
-        for r in overlay.rect_overlay(a, b, shift=6).collect()
+        for r in overlay.rect_overlay(a, b).collect()
     ]
     want = _brute_overlay(a_rows, b_rows)
     assert len(got) == len(set(got)), "a pair was reported more than once"
@@ -151,7 +151,7 @@ def test_rect_overlay_exact_beyond_double_precision(spark):
     b = spark.createDataFrame(b_rows, "b_id long, bx0 long, by0 long, bx1 long, by1 long")
     got = sorted(
         (r["a_id"], r["b_id"], r["area"])
-        for r in overlay.rect_overlay(a, b, shift=6).collect()
+        for r in overlay.rect_overlay(a, b).collect()
     )
     want = sorted(
         (ai, bi, (min(ax1, bx1) - max(ax0, bx0)) * (min(ay1, by1) - max(ay0, by0)))
@@ -210,7 +210,7 @@ def test_dsir_weights_favor_target_language(spark, sf_tiny):
     from tree_sitter_codeviews_spark.operators import curation
 
     docs = load_table(spark, sf_tiny, "documents")
-    scored = curation.dsir_weights(docs, target_lang="en").join(
+    scored = curation.dsir_weights(docs).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
     means = {

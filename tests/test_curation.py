@@ -27,14 +27,14 @@ def test_pack_sequences_is_partitioning_invariant(spark, sf_tiny):
     """bin assignment must be a pure function of the doc_id order — the
     same result at any parallelism (the retry/cluster-resize contract)."""
     docs = _docs(spark, sf_tiny)
-    a = curation.pack_sequences(docs, budget=512).collect()
-    b = curation.pack_sequences(docs.repartition(37), budget=512).collect()
+    a = curation.pack_sequences(docs).collect()
+    b = curation.pack_sequences(docs.repartition(37)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_pack_sequences_matches_serial_prefix_sum(spark, sf_tiny):
     docs = _docs(spark, sf_tiny)
-    rows = curation.pack_sequences(docs, budget=512).collect()
+    rows = curation.pack_sequences(docs).collect()
     got = {r["doc_id"]: (r["bin_id"], r["offset_in_bin"]) for r in rows}
     serial = sorted((r["doc_id"], r["n_tokens"]) for r in rows)
     cum = 0
@@ -46,7 +46,7 @@ def test_pack_sequences_matches_serial_prefix_sum(spark, sf_tiny):
 def test_pack_sequences_plan_has_no_single_partition_exchange(spark, sf_tiny):
     """The whole point vs ``Window.orderBy`` packing: no stage funnels the
     corpus through one partition."""
-    out = curation.pack_sequences(_docs(spark, sf_tiny), budget=512)
+    out = curation.pack_sequences(_docs(spark, sf_tiny))
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
@@ -78,13 +78,13 @@ def test_strip_boilerplate_removes_frequent_segments_only(spark, sf_tiny):
     from pyspark.sql import functions as F
 
     docs = _docs(spark, sf_tiny)
-    out = curation.strip_boilerplate(docs, seg_len=8, max_docs=2)
+    out = curation.strip_boilerplate(docs, max_docs=2)
     assert out.count() == docs.count()          # every doc keeps a row
     assert out.filter("n_kept < n_segs").count() > 0   # something stripped
     assert out.filter("n_kept > n_segs").count() == 0  # never invents segs
     # with the cut disabled (max_docs >= corpus size) nothing is stripped
     # and the reassembly round-trips the original text hash exactly
-    intact = curation.strip_boilerplate(docs, seg_len=8, max_docs=10**9)
+    intact = curation.strip_boilerplate(docs, max_docs=10**9)
     joined = intact.join(docs.select("doc_id", F.md5("text").alias("h")), "doc_id")
     assert joined.filter(F.col("clean_hash") != F.col("h")).count() == 0
 
@@ -138,8 +138,8 @@ def test_source_mix_targets_and_determinism(spark):
     selection is deterministic across runs."""
     rows = [(i, "big") for i in range(100)] + [(1000 + i, "small") for i in range(4)]
     docs = spark.createDataFrame(rows, ["doc_id", "source"])
-    out1 = {r.source: r for r in curation.source_mix(docs, scale=4).collect()}
-    out2 = {r.source: r for r in curation.source_mix(docs, scale=4).collect()}
+    out1 = {r.source: r for r in curation.source_mix(docs).collect()}
+    out2 = {r.source: r for r in curation.source_mix(docs).collect()}
     assert out1["big"].target_n == 40 and out1["small"].target_n == 8
     assert out1["big"].n_selected < 100        # genuinely down-sampled
     assert out1["small"].n_selected == 4       # small source fully kept

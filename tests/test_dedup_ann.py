@@ -37,7 +37,7 @@ def test_simhash_blocking_is_complete(spark, sf_tiny):
     sims = dedup.simhash_df(docs)
     blocked = {
         (r.doc_id_a, r.doc_id_b, r.hamming)
-        for r in dedup.simhash_near_dups(docs, max_hamming=3).collect()
+        for r in dedup.simhash_near_dups(docs).collect()
     }
     a = sims.select(F.col("doc_id").alias("da"), F.col("simhash").alias("sa"))
     b = sims.select(F.col("doc_id").alias("db"), F.col("simhash").alias("sb"))
@@ -119,7 +119,7 @@ def test_ivf_topk_recall_vs_brute_force(spark, sf_tiny):
     cells (the oracle proves that exactly); here: recall vs UNRESTRICTED
     brute force stays above a floor, and ranks are consecutive from 1."""
     embs = load_table(spark, sf_tiny, "embeddings")
-    got = ann.ivf_topk(embs, k=10, every=50).toPandas()
+    got = ann.ivf_topk(embs).toPandas()
 
     # consecutive ranks per query
     for _, g in got.groupby("query_id"):
@@ -326,16 +326,16 @@ def test_ann_recall_floors_at_gate_scale(spark, sf_small):
     # production-default gate rows
     assert recall(ann.lsh_bucketed_topk(embs, k=10, every=50)) >= 0.15
     assert recall(ann.pq_topk(embs, k=10, every=50)) >= 0.20
-    assert recall(ann.ivfpq_topk(embs, k=10, every=50)) >= 0.20
+    assert recall(ann.ivfpq_topk(embs)) >= 0.20
     # residual encoding lifts the code-quantization ceiling (measured r5:
     # 0.31 vs 0.26 raw-code at the default nprobe)
-    assert recall(ann.ivfpq_residual_topk(embs, k=10, every=50)) >= 0.25
-    r4 = recall(ann.ivf_topk(embs, k=10, every=50, nprobe=4))
+    assert recall(ann.ivfpq_residual_topk(embs)) >= 0.25
+    r4 = recall(ann.ivf_topk(embs, nprobe=4))
     assert r4 >= 0.60
     # the nprobe knob buys recall monotonically and clears 0.95 well
     # before a full scan (~12 sampled cells at this scale)
-    r8 = recall(ann.ivf_topk(embs, k=10, every=50, nprobe=8))
-    r12 = recall(ann.ivf_topk(embs, k=10, every=50, nprobe=12))
+    r8 = recall(ann.ivf_topk(embs, nprobe=8))
+    r12 = recall(ann.ivf_topk(embs, nprobe=12))
     assert r8 >= 0.80 and r12 >= 0.95
     assert r4 <= r8 <= r12
 
@@ -402,7 +402,7 @@ def test_dup_span_scrub_hand_computed(spark):
         "doc_id long, text string",
     )
     got = {r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
-           for r in dedup.dup_span_scrub(df, n=3).collect()}
+           for r in dedup.dup_span_scrub(df).collect()}
     assert got == {1: (5, 3, "d e"), 2: (5, 3, "x y"),
                    3: (5, 0, "q r s t u")}
 
@@ -415,7 +415,7 @@ def test_dup_span_scrub_whole_doc_and_short_doc(spark):
         "doc_id long, text string",
     )
     got = {r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
-           for r in dedup.dup_span_scrub(df, n=3).collect()}
+           for r in dedup.dup_span_scrub(df).collect()}
     assert got == {1: (3, 3, ""), 2: (3, 3, ""), 3: (2, 0, "z z")}
 
 
@@ -448,7 +448,7 @@ def test_countmin_never_underestimates(spark):
         [(1, "a b c d e a b c"), (2, "a b c x y z w"), (3, "p q r s t")],
         "doc_id long, text string",
     )
-    rows = dedup.countmin_calibration(df, n=3, w=4, d=2, top=50).collect()
+    rows = dedup.countmin_calibration(df, w=4, d=2, top=50).collect()
     assert len(rows) > 0
     assert all(r.est_cnt >= r.exact_cnt for r in rows)
     assert all(r.over_ppm >= 0 for r in rows)
@@ -461,7 +461,7 @@ def test_countmin_exact_at_collision_free_width(spark):
         [(1, "a b c d e"), (2, "a b c f g")],
         "doc_id long, text string",
     )
-    rows = dedup.countmin_calibration(df, n=3, w=65536, d=3, top=50).collect()
+    rows = dedup.countmin_calibration(df, w=65536, d=3, top=50).collect()
     assert {(r.shingle, r.exact_cnt) for r in rows} == {
         ("a b c", 2), ("b c d", 1), ("c d e", 1), ("b c f", 1),
         ("c f g", 1)}
@@ -479,7 +479,7 @@ def test_cdc_identical_spans_chunk_identically(spark):
         "doc_id long, text string",
     )
     rows = {r.doc_id: r for r in
-            dedup.cdc_chunk_stats(df, w=3, mod=4).collect()}
+            dedup.cdc_chunk_stats(df, mod=4).collect()}
     assert rows[1].n_dup_chunks >= 1 and rows[2].n_dup_chunks >= 1
 
 
@@ -493,7 +493,7 @@ def test_cdc_unique_and_short_docs(spark):
         "doc_id long, text string",
     )
     rows = {r.doc_id: r for r in
-            dedup.cdc_chunk_stats(df, w=3, mod=4).collect()}
+            dedup.cdc_chunk_stats(df, mod=4).collect()}
     assert all(r.n_dup_chunks == 0 and r.dup_chunk_ppm == 0
                for r in rows.values())
     assert rows[3].n_chunks == 1
@@ -559,4 +559,4 @@ def test_ivf_topk_without_centroids_is_empty(spark, sf_tiny):
     """No centroid (no ``vec_id % 40 == 0`` row) routes nothing: zero rows,
     not a numpy shape error in the centroid-scoring worker."""
     embs = load_table(spark, sf_tiny, "embeddings").filter("vec_id % 40 != 0")
-    assert ann.ivf_topk(embs, k=10, every=50).count() == 0
+    assert ann.ivf_topk(embs).count() == 0

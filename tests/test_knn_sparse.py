@@ -82,14 +82,14 @@ def test_distance_join_hand_graph_and_lossless_blocking(spark):
         pd.DataFrame(rows, columns=["doc_id", "gx", "gy", "lon", "lat"])
     )
     got = {(r.id_a, r.id_b): r.dist_sq
-           for r in knn.distance_join(pts, eps=2.0, res=5).collect()}
+           for r in knn.distance_join(pts, eps=2.0).collect()}
     assert (1, 3) in got and got[(1, 3)] == 0.0
     assert (1, 2) in got and (2, 3) in got  # cross-border pair found
     assert all(4 not in p for p in got)
     import pytest
 
     with pytest.raises(ValueError):
-        knn.distance_join(pts, eps=10.0, res=5)  # eps > cell extent refused
+        knn.distance_join(pts, eps=10.0)  # eps > cell extent refused
 
 
 def test_pq_degrades_gracefully_on_tiny_corpus(spark, sf_tiny):

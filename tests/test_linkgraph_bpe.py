@@ -71,12 +71,12 @@ def test_containment_catches_subset_dup(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e f g"), (2, "a b c d")], ["doc_id", "text"]
     )
-    rows = dedup.containment_pairs_exact(docs, n=3, threshold_ppm=900_000).collect()
+    rows = dedup.containment_pairs_exact(docs, threshold_ppm=900_000).collect()
     assert [(r.doc_id_a, r.doc_id_b, r.containment_ppm) for r in rows] == [
         (1, 2, 1_000_000)
     ]
     # the Jaccard twin at 0.5 misses exactly this pair
-    j = dedup.jaccard_pairs_exact(docs, n=3, threshold=0.5).collect()
+    j = dedup.jaccard_pairs_exact(docs, threshold=0.5).collect()
     assert j == []
 
 
@@ -231,7 +231,7 @@ def test_cocitation_hand_computed(spark):
     edges = spark.createDataFrame(
         [("a", "x"), ("a", "y"), ("a", "z"), ("b", "x"), ("b", "y"),
          ("c", "x")], ["src", "dst"])
-    rows = linkgraph.cocitation(edges, min_common=2).collect()
+    rows = linkgraph.cocitation(edges).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.host_a, r.host_b, r.common, r.cocite_ppm) == (
@@ -244,7 +244,7 @@ def test_cocitation_multiedges_count_once(spark):
     edges = spark.createDataFrame(
         [("a", "x"), ("a", "x"), ("b", "x"), ("b", "x"),
          ("a", "y"), ("b", "y")], ["src", "dst"])
-    rows = linkgraph.cocitation(edges, min_common=2).collect()
+    rows = linkgraph.cocitation(edges).collect()
     assert len(rows) == 1 and rows[0].common == 2
     assert rows[0].cocite_ppm == 1_000_000  # identical target sets
 

@@ -91,7 +91,7 @@ def _rows(df: DataFrame):
 
 def test_collapse_matches_reference_no_prune(spark):
     docs = _fixture(spark)
-    got = _rows(dedup.minhash_lsh_dups(docs, n=3, threshold=0.5))
+    got = _rows(dedup.minhash_lsh_dups(docs, threshold=0.5))
     exp = _rows(_reference_lsh_dups(docs, n=3, threshold=0.5))
     assert got == exp
     # non-vacuous: within-group AND cross-group pairs both present
@@ -108,7 +108,7 @@ def test_collapse_matches_reference_weighted_prune(spark):
     text carries them)."""
     docs = _fixture(spark)
     for max_df in (2, 3, 4, 100):
-        got = _rows(dedup.minhash_lsh_dups(docs, n=3, threshold=0.5,
+        got = _rows(dedup.minhash_lsh_dups(docs, threshold=0.5,
                                            max_df=max_df))
         exp = _rows(_reference_lsh_dups(docs, n=3, threshold=0.5,
                                         max_df=max_df))
@@ -120,7 +120,7 @@ def test_collapse_matches_reference_weighted_prune(spark):
 
 def test_collapse_matches_reference_threshold_1(spark):
     docs = _fixture(spark)
-    got = _rows(dedup.minhash_lsh_dups(docs, n=3, threshold=1.0))
+    got = _rows(dedup.minhash_lsh_dups(docs, threshold=1.0))
     exp = _rows(_reference_lsh_dups(docs, n=3, threshold=1.0))
     assert got == exp
     assert got, "threshold=1.0 must still keep exact-dup pairs"

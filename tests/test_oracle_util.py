@@ -142,16 +142,20 @@ def _repeated_block_lines(path, window=5, min_chars=60) -> int:
     return len(hit)
 
 
-def test_queries_and_oracle_write_each_block_once():
-    """Each recurring composition in the engine's query surface and in its
-    DuckDB oracle is one helper, not a pasted block."""
+def test_package_and_jobs_write_each_block_once():
+    """Each recurring composition in every package module (the query
+    surface and its DuckDB oracle included) and in every ``jobs/`` file is
+    one helper, not a pasted block."""
     import pathlib
 
-    from tree_sitter_codeviews_spark import oracle, queries
+    from tree_sitter_codeviews_spark import queries
 
-    for mod in (queries, oracle):
-        path = pathlib.Path(mod.__file__)
-        assert _repeated_block_lines(path) == 0, path.name
+    pkg = pathlib.Path(queries.__file__).parent
+    paths = sorted(pkg.rglob("*.py")) + sorted((pkg.parent / "jobs").glob("*.py"))
+    assert len(paths) > 30
+    repeated = {p.relative_to(pkg.parent).as_posix(): _repeated_block_lines(p)
+                for p in paths}
+    assert {p: n for p, n in repeated.items() if n} == {}
 
 
 def test_text_family_writes_ngram_build_and_md5_hash_once():
@@ -256,3 +260,74 @@ def test_every_package_definition_has_a_non_test_user():
         if name not in used and not name.startswith("__")
     )
     assert unused == sorted(UNCALLED_ALLOWED), unused
+
+
+# Defaulted parameters no call site varies, each with its reason.
+FIXED_OPTION_ALLOWED = {
+    "queries.py:web_ingest_stages:only": (
+        "bench.py's stage children call it through a dict with only=<stage>"
+    ),
+    "queries.py:webtext_domain_reputation_stages:only": (
+        "bench.py's stage children call it through a dict with only=<stage>"
+    ),
+}
+
+
+def test_every_defaulted_parameter_is_varied_by_some_caller():
+    """Every defaulted parameter of a top-level function in a package
+    module (``oracle.py`` aside: it is the DuckDB reference, not an engine API) is
+    passed a value other than its default by some call site in the
+    repository, tests included: positionally or by keyword, any
+    non-literal argument counting as a varied value and a ``*``/``**``
+    spread as varying every parameter. A parameter no caller varies is
+    its default written at its use, not an option."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "tree_sitter_codeviews_spark"
+    files = [f for f in sorted(root.rglob("*.py"))
+             if not any(p.startswith(".") for p in f.relative_to(root).parts)]
+    trees = {f: ast.parse(f.read_text(), str(f)) for f in files}
+
+    def defaulted(fn):
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        out = [(p.arg, d, i) for i, (p, d) in enumerate(
+            zip(pos[len(pos) - len(a.defaults):], a.defaults),
+            start=len(pos) - len(a.defaults))]
+        return out + [(p.arg, d, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                      if d is not None]
+
+    def same(value, default) -> bool:
+        try:
+            v, d = ast.literal_eval(value), ast.literal_eval(default)
+            return v == d and type(v) is type(d)
+        except ValueError:
+            return ast.dump(value) == ast.dump(default)
+
+    options: dict[str, list[tuple[str, ast.expr, int | None, str]]] = {}
+    for f, tree in trees.items():
+        if f.is_relative_to(pkg) and f.name != "oracle.py":
+            for n in tree.body:
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    key = f"{f.relative_to(pkg).as_posix()}:{n.name}"
+                    options.setdefault(n.name, []).extend(
+                        (p, d, i, f"{key}:{p}") for p, d, i in defaulted(n))
+    varied: set[str] = set()
+    for tree in trees.values():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            spread = (any(isinstance(a, ast.Starred) for a in call.args)
+                      or any(k.arg is None for k in call.keywords))
+            kw = {k.arg: k.value for k in call.keywords}
+            for p, d, i, key in options.get(name, ()):
+                v = kw.get(p, call.args[i] if i is not None and i < len(call.args) else None)
+                if spread or (v is not None and not same(v, d)):
+                    varied.add(key)
+    fixed = sorted(key for opts in options.values() for *_, key in opts
+                   if key not in varied)
+    assert fixed == sorted(FIXED_OPTION_ALLOWED), fixed

@@ -183,7 +183,7 @@ def test_crossing_join_vs_quadratic(spark):
     got = (
         segments.segment_crossing_join(
             spark.createDataFrame(pr), spark.createDataFrame(ln),
-            id_cols=["pid"], shift=6,
+            id_cols=["pid"],
         )
         .toPandas()
     )
@@ -204,7 +204,7 @@ def test_tile_diameter_matches_quadratic(spark):
         "gy": rng.randint(0, 128, 800).astype(np.int64),
     })
     got = (
-        segments.tile_diameter(spark.createDataFrame(pdf), shift=5)
+        segments.tile_diameter(spark.createDataFrame(pdf))
         .toPandas()
         .set_index(["tx", "ty"])
         .sort_index()
@@ -293,8 +293,7 @@ def test_snap_to_lines_vs_quadratic(spark):
     })
     raster = rasterize_segments(spark.createDataFrame(ln))
     got = (
-        snap_to_lines(spark.createDataFrame(pr), raster,
-                      id_cols=["pid"], radius=16)
+        snap_to_lines(spark.createDataFrame(pr), raster, id_cols=["pid"])
         .toPandas().set_index("pid").sort_index()
     )
     # scalar reference: DDA-sample each line with the same truncated

@@ -90,20 +90,13 @@ def test_drain_restores_conf_when_start_raises(spark, sf_tiny):
     assert spark.conf.get(SHUFFLE) == before
 
 
-def test_stream_sources_infer_schema_once(spark, sf_tiny):
+def test_stream_sources_infer_schema_once(spark, spark_jobs, sf_tiny):
     streaming.stream_events(spark, sf_tiny)
     streaming.stream_documents(spark, sf_tiny)
-    sc = spark.sparkContext
-    group = "test-stream-sources-schema-once"
-    sc.setJobGroup(group, "second stream source calls")
-    try:
+    with spark_jobs() as ids:
         streaming.stream_events(spark, sf_tiny)
         streaming.stream_documents(spark, sf_tiny)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert ids == []
 
 
 def _tiny_graph(spark):
@@ -157,7 +150,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
             spark.readStream.schema(schema).parquet(str(d) + "/*")
             .withColumn("ts", F.col("ts").cast("timestamp"))
         )
-        agg = streaming.windowed_event_counts(src, window="1 hour", watermark="2 hours")
+        agg = streaming.windowed_event_counts(src)
         q = (
             agg.writeStream.format("parquet").option("path", out)
             .option("checkpointLocation", ckpt)

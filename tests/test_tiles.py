@@ -57,19 +57,14 @@ def test_tile_counts_equals_eager_rollup(spark, sf_tiny, res_lo, res_hi, empty):
         assert {r[0] for r in rows} == set(range(res_lo, res_hi + 1))
 
 
-def test_tile_counts_issues_no_job_until_forced(spark, sf_tiny):
-    sc = spark.sparkContext
+def test_tile_counts_issues_no_job_until_forced(spark, spark_jobs, sf_tiny):
     pts = doc_points_df(spark, sf_tiny)
-    group = "test-tile-counts-lazy"
-    sc.setJobGroup(group, "tile_counts build")
-    try:
+    with spark_jobs() as built:
         out = tiles.tile_counts(pts)
-        built = list(sc.statusTracker().getJobIdsForGroup(group))
+    with spark_jobs() as forced:
         out.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert built == []
-    assert list(sc.statusTracker().getJobIdsForGroup(group))
+    assert forced
 
 
 def test_tile_counts_plan_is_one_expand_no_union(spark, sf_tiny):

@@ -181,7 +181,7 @@ def test_embedding_lsh_subset_of_exact_and_no_crossjoin(spark, sf_tiny):
     import plan_util as plans
 
     embs = load_table(spark, sf_tiny, "embeddings")
-    lsh = dedup.embedding_lsh_dups(embs, threshold=0.4)
+    lsh = dedup.embedding_lsh_dups(embs)
     exact = dedup.embedding_near_dups(embs, threshold=0.4)
     lsh_pairs = {(r.vec_id_a, r.vec_id_b, r.cos_q) for r in lsh.collect()}
     exact_pairs = {(r.vec_id_a, r.vec_id_b, r.cos_q) for r in exact.collect()}
@@ -206,10 +206,10 @@ def test_max_df_bounds_pair_space_keeps_informative_pairs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     # stop-shingle blows up the uncut join: every doc pairs with every doc
-    uncut_pairs = dedup.jaccard_pairs_exact(docs, 3, threshold=0.0)
+    uncut_pairs = dedup.jaccard_pairs_exact(docs, threshold=0.0)
     assert uncut_pairs.count() == 20 * 19 // 2  # all pairs share "the big stop"
     # the minhash path's stop-shingle cut keeps the informative pair
-    assert dedup.minhash_lsh_dups(docs, 3, threshold=0.3, max_df=5).count() >= 1
+    assert dedup.minhash_lsh_dups(docs, threshold=0.3, max_df=5).count() >= 1
 
 
 def test_feature_extract_matches_scalar(spark, sf_tiny):

@@ -73,7 +73,7 @@ def test_bpe_apply_matches_python_reference(spark, sf_tiny):
 
 def test_novelty_bounds_and_first_doc_fully_novel(spark, sf_tiny):
     docs = load_table(spark, sf_tiny, "documents")
-    res = dedup.novelty_stats(docs, n=3)
+    res = dedup.novelty_stats(docs)
     rows = res.collect()
     assert all(0 <= r["n_novel"] <= r["n_shingles"] for r in rows)
     assert all(0 <= r["novelty_ppm"] <= 1_000_000 for r in rows)
@@ -255,7 +255,7 @@ def test_minhash_calibration_estimator_is_close(spark, sf_tiny):
     from tree_sitter_codeviews_spark.operators import dedup
 
     docs = load_table(spark, sf_tiny, "documents")
-    rows = dedup.minhash_md5_calibration(docs, n=3, threshold_ppm=300_000).collect()
+    rows = dedup.minhash_md5_calibration(docs).collect()
     assert rows
     errs = []
     for r in rows:

@@ -209,7 +209,7 @@ def test_dup_ngram_stats_hand_corpus(spark):
     )
     got = {
         r.doc_id: (r.total_ngrams, r.dup_ngrams, r.dup_ppm)
-        for r in dedup.dup_ngram_stats(docs, n=3).collect()
+        for r in dedup.dup_ngram_stats(docs).collect()
     }
     # 'a b c' is the only cross-doc gram: doc1 has it twice (both positions
     # count — multiplicity preserved), doc2 once, doc3 untouched.

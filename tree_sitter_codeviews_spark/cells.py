@@ -125,10 +125,10 @@ def cell_sql(lon: str, lat: str, res: int) -> str:
 GEOHASH_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
-def geohash_char_sql(g_expr: str, k: int, precision: int = 4) -> str:
-    """SQL for the k-th base32 char of a (5*precision)-bit interleave —
+def geohash_char_sql(g_expr: str, k: int) -> str:
+    """SQL for the k-th base32 char of a 20-bit (4-char) interleave —
     identical text under Spark SQL and DuckDB (both substr() 1-based)."""
-    shift = 5 * (precision - 1 - k)
+    shift = 5 * (3 - k)
     return f"substr('{GEOHASH_B32}', CAST(({g_expr} >> {shift}) % 32 AS INT) + 1, 1)"
 
 

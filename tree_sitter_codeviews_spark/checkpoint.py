@@ -45,8 +45,17 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from tree_sitter_codeviews_spark.localdf import arrow_local_df
+
+
+# One metrics row per stage/chunk run: ``_record`` writes with it and
+# ``metrics()`` reads with it, so the read infers nothing.
+METRICS_SCHEMA = pa.schema([
+    ("job_id", pa.string()), ("stage", pa.string()), ("chunk", pa.string()),
+    ("n_rows", pa.int64()), ("wall_s", pa.float64()), ("recorded_at", pa.float64()),
+])
 
 
 def _complete(path: str) -> bool:
@@ -98,11 +107,11 @@ class Pipeline:
                 yield stage, chunk, f, n
 
     def _record(self, stage: str, chunk: str, out_dir: str, wall_s: float) -> None:
-        row = pa.table({  # string x3, int64, double x2: the metrics schema
+        row = pa.table({
             "job_id": [self.job_id], "stage": [stage], "chunk": [chunk],
             "n_rows": [sum(n for _, n in _footer_rows(out_dir))],
             "wall_s": [float(wall_s)], "recorded_at": [time.time()],
-        })
+        }, schema=METRICS_SCHEMA)
         metrics = os.path.join(self.base, "metrics")
         os.makedirs(metrics, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.parquet"
@@ -161,4 +170,6 @@ class Pipeline:
         return n
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.base, "metrics"))
+        """One row per stage/chunk run, read with ``METRICS_SCHEMA``."""
+        return self.spark.read.schema(from_arrow_schema(METRICS_SCHEMA)).parquet(
+            os.path.join(self.base, "metrics"))

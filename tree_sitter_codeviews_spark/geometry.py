@@ -141,19 +141,17 @@ def cross_sql(ox: str, oy: str, px: str, py: str, qx: str, qy: str) -> str:
     )
 
 
-def seg_cross_exprs(
-    ax0: str = "ax0", ay0: str = "ay0", ax1: str = "ax1", ay1: str = "ay1",
-    bx0: str = "bx0", by0: str = "by0", bx1: str = "bx1", by1: str = "by1",
-) -> dict[str, str]:
+def seg_cross_exprs() -> dict[str, str]:
     """The four orientation determinants of the classic segment-intersection
-    test: d1/d2 orient A's endpoints against segment B, d3/d4 orient B's
+    test over segment A (ax0, ay0)-(ax1, ay1) and segment B (bx0, by0)-(bx1,
+    by1): d1/d2 orient A's endpoints against segment B, d3/d4 orient B's
     endpoints against segment A. Computed ONCE as columns/CTE fields (each
     is consumed 2-3x by the predicate below)."""
     return {
-        "d1": cross_sql(bx0, by0, bx1, by1, ax0, ay0),
-        "d2": cross_sql(bx0, by0, bx1, by1, ax1, ay1),
-        "d3": cross_sql(ax0, ay0, ax1, ay1, bx0, by0),
-        "d4": cross_sql(ax0, ay0, ax1, ay1, bx1, by1),
+        "d1": cross_sql("bx0", "by0", "bx1", "by1", "ax0", "ay0"),
+        "d2": cross_sql("bx0", "by0", "bx1", "by1", "ax1", "ay1"),
+        "d3": cross_sql("ax0", "ay0", "ax1", "ay1", "bx0", "by0"),
+        "d4": cross_sql("ax0", "ay0", "ax1", "ay1", "bx1", "by1"),
     }
 
 
@@ -165,10 +163,7 @@ def _onseg_sql(sx0: str, sy0: str, sx1: str, sy1: str, px: str, py: str) -> str:
     )
 
 
-def seg_intersect_pred_sql(
-    ax0: str = "ax0", ay0: str = "ay0", ax1: str = "ax1", ay1: str = "ay1",
-    bx0: str = "bx0", by0: str = "by0", bx1: str = "bx1", by1: str = "by1",
-) -> str:
+def seg_intersect_pred_sql() -> str:
     """Boolean SQL over precomputed d1..d4 columns (seg_cross_exprs) + the
     raw coords: segments A and B intersect (touching endpoints and
     collinear overlap INCLUDED — closed-segment semantics). Integer-exact;
@@ -178,10 +173,10 @@ def seg_intersect_pred_sql(
         "((d3 > 0 AND d4 < 0) OR (d3 < 0 AND d4 > 0)))"
     )
     touch = " OR ".join([
-        f"(d1 = 0 AND {_onseg_sql(bx0, by0, bx1, by1, ax0, ay0)})",
-        f"(d2 = 0 AND {_onseg_sql(bx0, by0, bx1, by1, ax1, ay1)})",
-        f"(d3 = 0 AND {_onseg_sql(ax0, ay0, ax1, ay1, bx0, by0)})",
-        f"(d4 = 0 AND {_onseg_sql(ax0, ay0, ax1, ay1, bx1, by1)})",
+        f"(d1 = 0 AND {_onseg_sql('bx0', 'by0', 'bx1', 'by1', 'ax0', 'ay0')})",
+        f"(d2 = 0 AND {_onseg_sql('bx0', 'by0', 'bx1', 'by1', 'ax1', 'ay1')})",
+        f"(d3 = 0 AND {_onseg_sql('ax0', 'ay0', 'ax1', 'ay1', 'bx0', 'by0')})",
+        f"(d4 = 0 AND {_onseg_sql('ax0', 'ay0', 'ax1', 'ay1', 'bx1', 'by1')})",
     ])
     return f"({general} OR {touch})"
 

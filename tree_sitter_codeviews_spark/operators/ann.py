@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import (
-    _driver_matrix, _id_matrix, cos_cut, cos_np, cos_q_col, embedding_bucket_udf,
+    EMB_DIM, _driver_matrix, _id_matrix, cos_cut, cos_np, cos_q_col, embedding_bucket_udf,
     exact_gemm, int_dot_col, int_dot_udf, quantized_df, sq_norm_col,
 )
 
@@ -46,9 +46,12 @@ from .dedup import (
 # int64[64] is ~100 MB; |C| ~ sqrt(N) centroids on a real corpus.
 QUERY_CAP = 200_000
 CENTROID_CAP = 100_000
+# The IVF legs' fixed shape: top-K of every IVF_EVERY-th vector as a query,
+# every IVF_CENTROID_EVERY-th vector a centroid, IVF_NPROBE cells probed.
+IVF_K, IVF_EVERY, IVF_CENTROID_EVERY, IVF_NPROBE = 10, 50, 40, 4
 
 
-def _query_set(embs: DataFrame, every: int = 50) -> DataFrame:
+def _query_set(embs: DataFrame, every: int) -> DataFrame:
     return embs.filter(F.col("vec_id") % every == 0)
 
 
@@ -67,6 +70,29 @@ def _rank_per_query(
     )
 
 
+def _map_queries(
+    q: DataFrame, every: int, who: str, why: str, fields, kernel,
+) -> DataFrame:
+    """The exact legs' ``mapInPandas`` over the quantized corpus ``q``: the
+    query set (``_query_set``) is collected once under ``QUERY_CAP``
+    (``who`` and ``why`` word the refusal), and each non-empty Arrow batch
+    yields ``kernel(qids, qmat, ids, m)``, a dict of the bigint columns
+    ``fields``."""
+    qids, qmat = _driver_matrix(
+        _query_set(q, every), QUERY_CAP,
+        f"{who}: query set exceeds {QUERY_CAP} rows; {why}",
+    )
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0 or len(qids) == 0:  # no queries: no rows
+                continue
+            yield pd.DataFrame(kernel(qids, qmat, *_id_matrix(pdf)))
+
+    schema = T.StructType([T.StructField(f, T.LongType()) for f in fields])
+    return q.mapInPandas(score, schema)
+
+
 def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
     """(query_id, neighbor_id, rank, dot_q): exact top-k by integer dot.
 
@@ -79,40 +105,28 @@ def topk_quantized(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
     beat a row locally they beat it globally), so the closing window over
     ~k·|queries| rows per batch is bit-identical to a window over every
     pair."""
-    q = quantized_df(embs)
-    qids, qmat = _driver_matrix(
-        _query_set(q, every), QUERY_CAP,
-        f"topk_quantized: query set exceeds {QUERY_CAP} rows; "
+    def kernel(qids, qmat, ids, m):
+        dots = exact_gemm(qmat, m.T)  # (Q, B)
+        out_q, out_n, out_d = [], [], []
+        for qi in range(len(qids)):
+            keep = ids != qids[qi]
+            cids, cdots = ids[keep], dots[qi][keep]
+            order = np.lexsort((cids, -cdots))[:k]
+            out_q.append(np.full(len(order), qids[qi], dtype=np.int64))
+            out_n.append(cids[order])
+            out_d.append(cdots[order])
+        return {
+            "query_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            "dot_q": np.concatenate(out_d),
+        }
+
+    cand = _map_queries(
+        quantized_df(embs), every, "topk_quantized",
         "use the bucketed ANN family for dense query sides",
+        ("query_id", "neighbor_id", "dot_q"), kernel,
     )
-
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("dot_q", T.LongType()),
-    ])
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:  # no queries: no rows
-                continue
-            ids, m = _id_matrix(pdf)
-            dots = exact_gemm(qmat, m.T)  # (Q, B)
-            out_q, out_n, out_d = [], [], []
-            for qi in range(len(qids)):
-                keep = ids != qids[qi]
-                cids, cdots = ids[keep], dots[qi][keep]
-                order = np.lexsort((cids, -cdots))[:k]
-                out_q.append(np.full(len(order), qids[qi], dtype=np.int64))
-                out_n.append(cids[order])
-                out_d.append(cdots[order])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "dot_q": np.concatenate(out_d),
-            })
-
-    return _rank_per_query(q.mapInPandas(score, out_schema), k, "dot_q")
+    return _rank_per_query(cand, k, "dot_q")
 
 
 def exact_cosine_gt_candidates(
@@ -126,39 +140,24 @@ def exact_cosine_gt_candidates(
     so the cut is lossless. dot/norms are exact int64 (identical to the
     SQL aggregates); ``cosine_topk`` derives cos with ``cos_q_col`` and
     runs the exact global window, so the final rows are bit-identical."""
-    q = quantized_df(embs)
-    qids, qmat = _driver_matrix(
-        _query_set(q, every), QUERY_CAP,
-        f"exact_cosine_gt_candidates: query set exceeds {QUERY_CAP} "
-        "rows; the GT leg is an offline eval on a bounded query sample",
+    def kernel(qids, qmat, ids, m):
+        qnorm = (qmat * qmat).sum(axis=1)
+        bnorm = (m * m).sum(axis=1)
+        dots = exact_gemm(qmat, m.T)  # (Q, B)
+        cos = cos_np(dots, qnorm, bnorm)
+        self_pair = qids[:, None] == ids[None, :]
+        cos[self_pair] = -np.inf  # never a neighbor, never a cut rank
+        qi, j = np.nonzero(cos_cut(cos, k) & ~self_pair)
+        return {
+            "query_id": qids[qi], "neighbor_id": ids[j], "dot": dots[qi, j],
+            "norm_a": qnorm[qi], "norm_b": bnorm[j],
+        }
+
+    return _map_queries(
+        quantized_df(embs), every, "exact_cosine_gt_candidates",
+        "the GT leg is an offline eval on a bounded query sample",
+        ("query_id", "neighbor_id", "dot", "norm_a", "norm_b"), kernel,
     )
-    qnorm = (qmat * qmat).sum(axis=1)
-
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("dot", T.LongType()),
-        T.StructField("norm_a", T.LongType()),
-        T.StructField("norm_b", T.LongType()),
-    ])
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:  # no queries: no rows
-                continue
-            ids, m = _id_matrix(pdf)
-            bnorm = (m * m).sum(axis=1)
-            dots = exact_gemm(qmat, m.T)  # (Q, B)
-            cos = cos_np(dots, qnorm, bnorm)
-            self_pair = qids[:, None] == ids[None, :]
-            cos[self_pair] = -np.inf  # never a neighbor, never a cut rank
-            qi, j = np.nonzero(cos_cut(cos, k) & ~self_pair)
-            yield pd.DataFrame({
-                "query_id": qids[qi], "neighbor_id": ids[j], "dot": dots[qi, j],
-                "norm_a": qnorm[qi], "norm_b": bnorm[j],
-            })
-
-    return q.mapInPandas(score, out_schema)
 
 
 def cosine_topk(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
@@ -242,17 +241,12 @@ def _ivf_route(
     return assign, qprobe
 
 
-def ivf_topk(
-    embs: DataFrame,
-    k: int = 10,
-    every: int = 50,
-    centroid_every: int = 40,
-    nprobe: int = 4,
-) -> DataFrame:
+def ivf_topk(embs: DataFrame, nprobe: int = IVF_NPROBE) -> DataFrame:
     """IVF (inverted-file) ANN: coarse-quantize the corpus into cells, score
-    each query only against its ``nprobe`` nearest cells' vectors.
+    each query (every ``IVF_EVERY``-th vector) only against its ``nprobe``
+    nearest cells' vectors for its ``IVF_K`` best.
 
-    Centroids are a deterministic 1/``centroid_every`` sample of the corpus
+    Centroids are a deterministic 1/``IVF_CENTROID_EVERY`` sample of the corpus
     itself (no iterative k-means — a fixed, oracle-reproducible coarse
     quantizer). Build: one broadcast of the centroid table, map-side scoring,
     ``max_by`` assignment (partial-aggregated, so the pre-shuffle width is one
@@ -262,12 +256,12 @@ def ivf_topk(
     contract); the output itself is deterministic, so the gate oracle mirrors
     it exactly (quantized integer dots, round-6 cosine, id tie-breaks).
 
-    At 10^12 rows: |C| = N/centroid_every overflows a broadcast — swap the
+    At 10^12 rows: |C| = N/IVF_CENTROID_EVERY overflows a broadcast — swap the
     sampled centroids for trained ones (fixed |C| ~ sqrt(N)) and the same
     plan holds; nothing else changes shape.
     """
     qn = _with_norm(quantized_df(embs))
-    assign, qprobe = _ivf_route(qn, every, centroid_every, nprobe)
+    assign, qprobe = _ivf_route(qn, IVF_EVERY, IVF_CENTROID_EVERY, nprobe)
     nbrs = assign.join(qn, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), "cent_id",
         F.col("qv").alias("qb"), F.col("norm").alias("norm_b"),
@@ -282,15 +276,13 @@ def ivf_topk(
         .withColumn("dot", int_dot_col("qa", "qb"))
         .withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
     )
-    return _rank_per_query(pairs, k, "cos_q")
+    return _rank_per_query(pairs, IVF_K, "cos_q")
 
 
 N_PLANES = 12  # 4096 buckets
 
 
-def lsh_bucketed_topk(
-    embs: DataFrame, k: int = 10, every: int = 50, dim: int = 64,
-) -> DataFrame:
+def lsh_bucketed_topk(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
     """Hyperplane-LSH bucketed ANN — the 10^12-row path, and oracle-checkable.
 
     The planes are the DETERMINISTIC integer hyperplanes shared with
@@ -307,7 +299,7 @@ def lsh_bucketed_topk(
     int norms, round 6) over candidates only. A (query, neighbor) pair
     matches via exactly one probe (mask = xor of buckets), so no dedup
     pass is needed."""
-    bucketize = embedding_bucket_udf(dim, N_PLANES)
+    bucketize = embedding_bucket_udf(EMB_DIM, N_PLANES)
     qn = (
         _with_norm(quantized_df(embs))
         .withColumn("bucket", bucketize(F.col("qv")))
@@ -455,15 +447,10 @@ def pq_topk(embs: DataFrame, k: int = 10, every: int = 50) -> DataFrame:
     return _rank_per_query(pairs, k, "adist", desc=False)
 
 
-def ivfpq_topk(
-    embs: DataFrame,
-    k: int = 10,
-    every: int = 50,
-    centroid_every: int = 40,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF routing + PQ/ADC scoring — the faiss-``IVFPQ`` composition, the
-    shape production vector stores actually deploy: the coarse quantizer
+def ivfpq_topk(embs: DataFrame) -> DataFrame:
+    """IVF routing (``ivf_topk``'s fixed ``IVF_*`` shape) + PQ/ADC scoring
+    — the faiss-``IVFPQ`` composition, the shape production vector stores
+    actually deploy: the coarse quantizer
     bounds WHICH vectors each query touches (nprobe inverted lists instead
     of the whole corpus), PQ bounds WHAT each touch costs (one packed long
     per corpus vector — 8 bytes instead of 512 — and 8 LUT adds per pair).
@@ -481,13 +468,14 @@ def ivfpq_topk(
     the companion recall eval; the output itself is fully deterministic.
     """
     q = quantized_df(embs)
-    assign, qprobe = _ivf_route(_with_norm(q), every, centroid_every, nprobe)
+    assign, qprobe = _ivf_route(
+        _with_norm(q), IVF_EVERY, IVF_CENTROID_EVERY, IVF_NPROBE)
     cb = _pq_codebook_from(_pq_sample(q))
     corpus = q.select(
         F.col("vec_id").alias("neighbor_id"),
         pq_udf(cb, lut=False)(F.col("qv")).alias("pqcode"),
     ).join(assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-    queries = _query_set(q, every).select(
+    queries = _query_set(q, IVF_EVERY).select(
         F.col("vec_id").alias("query_id"),
         pq_udf(cb, lut=True)(F.col("qv")).alias("lut"),
     )
@@ -499,16 +487,10 @@ def ivfpq_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("adist", _adc_expr(cb.shape[1]))
     )
-    return _rank_per_query(pairs, k, "adist", desc=False)
+    return _rank_per_query(pairs, IVF_K, "adist", desc=False)
 
 
-def ivfpq_residual_topk(
-    embs: DataFrame,
-    k: int = 10,
-    every: int = 50,
-    centroid_every: int = 40,
-    nprobe: int = 4,
-) -> DataFrame:
+def ivfpq_residual_topk(embs: DataFrame) -> DataFrame:
     """Residual-encoded IVFPQ — faiss's actual IVFPQ: PQ codes quantize
     ``vector - assigned_centroid`` instead of the raw vector, and each
     query builds one ADC lookup table PER PROBED CELL from its own residual
@@ -527,8 +509,8 @@ def ivfpq_residual_topk(
     """
     q = quantized_df(embs)
     qn = _with_norm(q)
-    assign, qprobe = _ivf_route(qn, every, centroid_every, nprobe)
-    cents = qn.filter(F.col("vec_id") % centroid_every == 0).select(
+    assign, qprobe = _ivf_route(qn, IVF_EVERY, IVF_CENTROID_EVERY, IVF_NPROBE)
+    cents = qn.filter(F.col("vec_id") % IVF_CENTROID_EVERY == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("qv").alias("cv")
     )
     assigned = q.join(assign, "vec_id").join(F.broadcast(cents), "cent_id")
@@ -561,4 +543,4 @@ def ivfpq_residual_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("adist", _adc_expr(cb.shape[1]))
     )
-    return _rank_per_query(pairs, k, "adist", desc=False)
+    return _rank_per_query(pairs, IVF_K, "adist", desc=False)

@@ -23,7 +23,6 @@ def cascade_join(
     big: DataFrame,
     levels: list[tuple[str, DataFrame, Column | str, str]],
     out_col: str = "resolved",
-    via_col: str = "via",
     default: Column | None = None,
 ) -> DataFrame:
     """Resolve ``big`` against priority-ordered fallback dims.
@@ -35,7 +34,7 @@ def cascade_join(
     uniquely named (they are projected to ``_cascade_<label>``).
 
     Result: big columns + ``out_col`` (first non-null value, else
-    ``default``) + ``via_col`` (the winning level's label, else 'none').
+    ``default``) + ``via`` (the winning level's label, else 'none').
     """
     joined = big
     val_cols: list[tuple[str, str]] = []
@@ -54,7 +53,7 @@ def cascade_join(
     via = F.lit("none")
     for label, c in reversed(val_cols):
         via = F.when(F.col(c).isNotNull(), F.lit(label)).otherwise(via)
-    return joined.withColumn(out_col, out).withColumn(via_col, via).drop(
+    return joined.withColumn(out_col, out).withColumn("via", via).drop(
         *[c for _, c in val_cols]
     )
 
@@ -64,7 +63,6 @@ def priority_match_join(
     keys: list[str],
     levels: list[tuple[str, DataFrame, Column, Column]],
     out_col: str = "matched",
-    via_col: str = "via",
     default: Column | None = None,
 ) -> DataFrame:
     """First-match-wins join where each level may yield MANY candidates.
@@ -89,7 +87,7 @@ def priority_match_join(
     so it is skew-free by construction.
 
     Result: every ``big`` row, with ``out_col`` (winning value, else
-    ``default``) + ``via_col`` (winning level's label, else 'none').
+    ``default``) + ``via`` (winning level's label, else 'none').
     """
     from pyspark.sql import Window
 
@@ -132,6 +130,6 @@ def priority_match_join(
     fallback = default if default is not None else F.lit(None)
     return (
         out.withColumn(out_col, F.coalesce(F.col("_val"), fallback))
-        .withColumn(via_col, F.coalesce(F.col("_via"), F.lit("none")))
+        .withColumn("via", F.coalesce(F.col("_via"), F.lit("none")))
         .drop("_val", "_via")
     )

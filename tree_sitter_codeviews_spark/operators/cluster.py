@@ -55,6 +55,8 @@ from .dedup import _id_matrix, cos_np, cos_q_col, exact_gemm, quantized_df
 __all__ = ["kmeans_assign", "semantic_dups"]
 
 _PACK = 100  # dist*_PACK + cluster argmin packing; requires k <= _PACK
+# The k-means shape of both consumers: K_CLUSTERS centroids, ITERS rounds.
+K_CLUSTERS, ITERS = 8, 2
 
 
 def _trunc_div(s: np.ndarray, n: int) -> np.ndarray:
@@ -166,13 +168,13 @@ def _fit(q: DataFrame, k: int, iters: int) -> np.ndarray:
     return cmat
 
 
-def kmeans_assign(embs: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
+def kmeans_assign(embs: DataFrame) -> DataFrame:
     """(vec_id, cluster, dist_q): final assignment against the trained
     centroids. ``dist_q`` is the exact int64 squared quantized distance.
     The quantized frame is materialized once and reused by training AND
     the final assignment pass."""
     q = quantized_df(embs).localCheckpoint()
-    return _assign(q, _fit(q, k, iters))
+    return _assign(q, _fit(q, K_CLUSTERS, ITERS))
 
 
 def _pair_partials(q: DataFrame, cmat: np.ndarray, margin: float) -> DataFrame:
@@ -233,21 +235,19 @@ def _pair_partials(q: DataFrame, cmat: np.ndarray, margin: float) -> DataFrame:
     return tagged.groupBy("cluster").applyInPandas(_go, schema)
 
 
-def semantic_dups(
-    embs: DataFrame, k: int = 8, iters: int = 2, threshold: float = 0.4,
-) -> DataFrame:
-    """SemDeDup: (vec_id_a, vec_id_b, cluster, cos_q) near-dup pairs WITHIN
-    k-means clusters — the cluster equi-grouping bounds the candidate space
-    at Σ|cluster|² (pick k ~ N/1000 at corpus scale for ~constant cluster
-    size), generated by one ``exact_gemm`` per cluster, then the exact
-    quantized cosine (Spark SQL round/divide, unchanged) publishes. Recall
-    vs the brute pair scan is the SemDeDup contract (cross-cluster
-    near-dups are forfeit by design); the output itself is deterministic,
-    so the gate oracle mirrors it exactly."""
+def semantic_dups(embs: DataFrame) -> DataFrame:
+    """SemDeDup: (vec_id_a, vec_id_b, cluster, cos_q) near-dup pairs at
+    cos_q >= 0.4 WITHIN k-means clusters — the cluster equi-grouping
+    bounds the candidate space at Σ|cluster|² (pick k ~ N/1000 at corpus
+    scale for ~constant cluster size), generated by one ``exact_gemm`` per
+    cluster, then the exact quantized cosine (Spark SQL round/divide,
+    unchanged) publishes. Recall vs the brute pair scan is the SemDeDup
+    contract (cross-cluster near-dups are forfeit by design); the output
+    itself is deterministic, so the gate oracle mirrors it exactly."""
     q = quantized_df(embs).localCheckpoint()  # one scan: fit + tag + GEMM
-    pairs = _pair_partials(q, _fit(q, k, iters), threshold - 1e-6)
+    pairs = _pair_partials(q, _fit(q, K_CLUSTERS, ITERS), 0.4 - 1e-6)
     return (
         pairs.withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
-        .filter(F.col("cos_q") >= threshold)
+        .filter(F.col("cos_q") >= 0.4)
         .select("vec_id_a", "vec_id_b", "cluster", "cos_q")
     )

@@ -20,24 +20,27 @@ from .dedup import md5_uniform, shingles_df, tokens_df
 # (java.util.regex) and DuckDB (RE2): no lookaround, no lazy quantifiers.
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 LONG_DIGITS_RE = "[0-9]{7,}"
+# The held-out benchmark slice of the decontamination operators
+# (doc_id % BENCH_MOD == BENCH_REM) and their word n-gram width.
+BENCH_MOD, BENCH_REM = 50, 7
+DECON_N = 5
 
 
-def decontaminate(
-    docs: DataFrame, n: int = 5, bench_mod: int = 50, bench_rem: int = 7,
-) -> DataFrame:
+def decontaminate(docs: DataFrame, n: int = DECON_N) -> DataFrame:
     """Benchmark decontamination: flag training docs sharing any word
-    ``n``-gram with the held-out benchmark slice (doc_id % mod == rem).
+    ``n``-gram with the held-out benchmark slice
+    (doc_id % BENCH_MOD == BENCH_REM).
 
     The canonical pre-training hygiene step (don't train on your eval set).
     Engine shape: the benchmark shingle dim is a small fraction of the
-    corpus (1/mod of docs), so the overlap test is a semi-join against a
+    corpus (1/BENCH_MOD of docs), so the overlap test is a semi-join against a
     dim that is broadcastable at any corpus size where the benchmark itself
     is bounded; the per-doc hit count is one aggregate on the train shingle
     table. Returns (doc_id, n_hits, contaminated) for every NON-benchmark
     doc (zero-hit docs included — the keep-list is the point).
     """
     sh = shingles_df(docs, n)
-    is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == bench_rem
+    is_bench = F.pmod(F.col("doc_id"), F.lit(BENCH_MOD)) == BENCH_REM
     bench_sh = sh.filter(is_bench).select("shingle").distinct()
     hits = (
         sh.filter(~is_bench)
@@ -57,11 +60,11 @@ def decontaminate(
     )
 
 
-def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Sequence packing: assign each doc (in doc_id order) a training-batch
-    bin of ``budget`` tokens via a DISTRIBUTED prefix sum.
+    bin of 512 tokens via a DISTRIBUTED prefix sum.
 
-    bin_id = floor(cum_tokens_before / budget); offset_in_bin = the doc's
+    bin_id = floor(cum_tokens_before / 512); offset_in_bin = the doc's
     start offset inside its bin (docs straddling a boundary spill into the
     next bin — the standard pack-then-split semantics).
 
@@ -108,18 +111,18 @@ def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
         .select(
             "doc_id",
             F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.floor(cum_before / budget).cast("long").alias("bin_id"),
-            F.pmod(cum_before, F.lit(budget)).cast("long").alias("offset_in_bin"),
+            F.floor(cum_before / 512).cast("long").alias("bin_id"),
+            F.pmod(cum_before, F.lit(512)).cast("long").alias("offset_in_bin"),
         )
     )
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """PII scrubbing: replace emails and long digit runs with typed tokens;
     emit per-doc redaction counts + the post-scrub content hash (the
     deterministic lineage key downstream stages join on, same discipline as
     ``textstats.normalized_docs``). One projection, zero shuffles."""
-    t = F.col(text_col)
+    t = F.col("text")
     scrubbed = F.regexp_replace(
         F.regexp_replace(t, EMAIL_RE, "<EMAIL>"), LONG_DIGITS_RE, "<NUM>"
     )
@@ -131,11 +134,9 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def strip_boilerplate(
-    docs: DataFrame, seg_len: int = 8, max_docs: int = 20,
-) -> DataFrame:
+def strip_boilerplate(docs: DataFrame, max_docs: int = 20) -> DataFrame:
     """Boilerplate removal (the CCNet-style paragraph-dedup step): split
-    each doc into fixed ``seg_len``-token segments, drop segments that occur
+    each doc into fixed 8-token segments, drop segments that occur
     in more than ``max_docs`` distinct documents (headers/footers/navigation
     boilerplate at web scale), reassemble the survivors in order.
 
@@ -150,6 +151,7 @@ def strip_boilerplate(
     Returns (doc_id, n_segs, n_kept, clean_hash) — every doc gets a row,
     even if everything was stripped (clean_hash of the empty string).
     """
+    seg_len = 8
     toks = F.split(F.col("text"), " ")
     n_segs = F.ceil(F.size(toks) / seg_len).cast("long")
     segs = docs.select(
@@ -235,7 +237,7 @@ def canonicalize_url(url):
     return F.regexp_replace(u, "/+$", "")                      # trailing /
 
 
-def url_canonical_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_canonical_dedup(pages: DataFrame) -> DataFrame:
     """Canonical-URL dedup groups: canonicalize, then one hash aggregate —
     (canonical_url, n_dups, keep_doc_id = min lineage id). Identical shape
     to content dedup_exact but on the URL key, which at crawl scale runs
@@ -245,7 +247,7 @@ def url_canonical_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
     stop-shingle cut of dedup.minhash_lsh_dups."""
     return (
         pages.select(
-            canonicalize_url(F.col(url_col)).alias("canonical_url"), "doc_id"
+            canonicalize_url(F.col("url")).alias("canonical_url"), "doc_id"
         )
         .groupBy("canonical_url")
         .agg(
@@ -255,11 +257,9 @@ def url_canonical_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def source_mix(
-    docs: DataFrame, source_col: str = "source", scale: int = 4
-) -> DataFrame:
+def source_mix(docs: DataFrame) -> DataFrame:
     """Temperature-weighted source mixing (the Pile / multilingual-sampling
-    alpha=0.5 rule): per-source target = floor(sqrt(n_source) * scale) —
+    alpha=0.5 rule): per-source target = floor(sqrt(n_source) * 4) —
     up-weights small sources, tempers the head — then DETERMINISTIC
     hash-rate selection: keep doc iff
     ``((doc_id*1103515245 + 12345) % 2^31) % n_source < target``.
@@ -267,23 +267,22 @@ def source_mix(
     The selection is a pure map-side filter against a broadcast per-source
     dim — NO per-source row_number window (a per-group window would funnel
     each source through one partition: the exact skew trap at corpus
-    scale). sqrt is IEEE-correctly-rounded so floor(sqrt(n)*scale) is
+    scale). sqrt is IEEE-correctly-rounded so floor(sqrt(n)*4) is
     bit-identical in Spark and DuckDB; the LCG hash is exact BIGINT
     arithmetic (doc_id*1103515245 < 2^63 for any realistic id).
 
     Returns the per-source mix summary (n_total, target_n, n_selected)."""
-    counts = docs.groupBy(source_col).agg(F.count("*").alias("n_total"))
+    counts = docs.groupBy("source").agg(F.count("*").alias("n_total"))
     targets = counts.withColumn(
-        "target_n",
-        F.expr("cast(floor(sqrt(n_total) * " + str(scale) + ") as bigint)"),
+        "target_n", F.expr("cast(floor(sqrt(n_total) * 4) as bigint)"),
     )
-    hashed = docs.join(F.broadcast(targets), source_col).withColumn(
+    hashed = docs.join(F.broadcast(targets), "source").withColumn(
         "_sel",
         F.expr(
             "((doc_id * 1103515245 + 12345) % 2147483648) % n_total"
         ) < F.col("target_n"),
     )
-    return hashed.groupBy(source_col, "n_total", "target_n").agg(
+    return hashed.groupBy("source", "n_total", "target_n").agg(
         F.sum(F.col("_sel").cast("long")).alias("n_selected")
     )
 
@@ -328,11 +327,9 @@ def familiarity_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def decontaminate_score(
-    docs: DataFrame, n: int = 5, bench_mod: int = 50, bench_rem: int = 7,
-) -> DataFrame:
+def decontaminate_score(docs: DataFrame) -> DataFrame:
     """Fractional benchmark-contamination scoring: for every non-benchmark
-    doc, the share of its DISTINCT word ``n``-grams that appear anywhere in
+    doc, the share of its DISTINCT word ``DECON_N``-grams that appear anywhere in
     the held-out benchmark slice, in exact integer ppm.
 
     Extends ``decontaminate``'s binary flag to the graded overlap the
@@ -347,8 +344,8 @@ def decontaminate_score(
     doc_id (uniform shuffle). Zero-hit docs are kept with score 0 — the
     keep-list is the point.
     """
-    sh = shingles_df(docs, n)  # distinct (doc_id, shingle)
-    is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == bench_rem
+    sh = shingles_df(docs, DECON_N)  # distinct (doc_id, shingle)
+    is_bench = F.pmod(F.col("doc_id"), F.lit(BENCH_MOD)) == BENCH_REM
     bench_sh = sh.filter(is_bench).select("shingle").distinct()
     train = sh.filter(~is_bench)
     totals = train.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
@@ -371,19 +368,13 @@ def decontaminate_score(
 
 
 def gopher_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_len: int = 3,
-    max_mean_len: int = 10,
-    max_symbol_ppm: int = 100_000,
-    min_stopwords: int = 2,
+    docs: DataFrame, min_words: int = 50, min_stopwords: int = 2,
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, App. A —
     the filter battery every pre-training corpus applies before dedup):
-    word-count bounds, mean-word-length bounds, symbol-to-word ratio cap,
-    and a minimum distinct-stopword requirement. Emits per doc the raw
+    word-count bounds (``min_words`` to 100,000), mean-word-length bounds
+    (3 to 10 characters), a symbol-to-word ratio cap (100,000 ppm), and a
+    minimum distinct-stopword requirement. Emits per doc the raw
     measurements, a REASONS BITMASK (1=wordcount, 2=meanlen, 4=symbols,
     8=stopwords) and the keep verdict — pipelines filter on ``keep`` but
     audit on the bitmask (which rule fired where is the tuning signal).
@@ -393,7 +384,7 @@ def gopher_filter(
     no float division anywhere, so the oracle is bit-exact. One map-side
     pass over the corpus: zero shuffle, fused with the scan; the stopword
     set is a 6-element array literal evaluated per row (no join)."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     stop = F.array(*[F.lit(s) for s in ("the", "a", "of", "and", "to", "in")])
     m = docs.select(
         "doc_id",
@@ -406,13 +397,12 @@ def gopher_filter(
         ).cast("long").alias("n_symbols"),
         F.size(F.array_intersect(stop, words)).cast("long").alias("n_stopwords"),
     )
-    r_words = ~F.col("n_words").between(min_words, max_words)
+    r_words = ~F.col("n_words").between(min_words, 100_000)
     r_len = ~F.col("sum_len").between(
-        F.lit(min_mean_len) * F.col("n_words"),
-        F.lit(max_mean_len) * F.col("n_words"),
+        F.lit(3) * F.col("n_words"), F.lit(10) * F.col("n_words"),
     )
     r_sym = (F.col("n_symbols") * F.lit(1_000_000)) > (
-        F.lit(max_symbol_ppm) * F.col("n_words")
+        F.lit(100_000) * F.col("n_words")
     )
     r_stop = F.col("n_stopwords") < min_stopwords
     reasons = (
@@ -426,16 +416,12 @@ def gopher_filter(
     )
 
 
-def apportion_budget(
-    weights: DataFrame,
-    budget: int,
-    key_col: str = "host",
-    weight_col: str = "n_tokens",
-) -> DataFrame:
+def apportion_budget(weights: DataFrame, budget: int) -> DataFrame:
     """Largest-remainder (Hamilton) apportionment of an integer sampling
-    budget across sources — the mixture-quota step of corpus building
-    (allocate B training tokens across domains/sources proportional to
-    their size, exactly: ``sum(alloc) == budget`` with no float drift).
+    budget across the (host, n_tokens) ``weights`` — the mixture-quota
+    step of corpus building (allocate B training tokens across
+    domains/sources proportional to their size, exactly:
+    ``sum(alloc) == budget`` with no float drift).
 
     base_i = B * w_i div W; the leftover B - sum(base) units go one each
     to the largest (B * w_i) mod W remainders, (remainder desc, key asc)
@@ -450,15 +436,15 @@ def apportion_budget(
     broadcast back): at web scale the "dim" is tens of millions of
     registered domains, so the rank must be distributed.
     """
-    raw_total = weights.agg(F.sum(weight_col).cast("long")).first()[0]  # bound: one row
+    raw_total = weights.agg(F.sum("n_tokens").cast("long")).first()[0]  # bound: one row
     if raw_total is None or raw_total <= 0:
         # empty frontier / all-zero weights: nothing to apportion — return
         # an empty zero-alloc frame with the contract schema instead of
         # crashing on int(None) or folding a `div 0` into the plan (a
         # crawl round that discovers no new hosts must not kill the job)
         return weights.select(
-            F.col(key_col),
-            F.col(weight_col).cast("long").alias(weight_col),
+            F.col("host"),
+            F.col("n_tokens").cast("long").alias("n_tokens"),
             F.lit(0).cast("long").alias("base_quota"),
             F.lit(0).cast("long").alias("rem"),
             F.lit(0).cast("long").alias("extra"),
@@ -466,12 +452,12 @@ def apportion_budget(
         ).limit(0)
     w_total = int(raw_total)
     j = weights.select(
-        F.col(key_col).alias("key"),
-        F.col(weight_col).cast("long").alias("weight"),
-        F.expr(f"CAST({budget} AS BIGINT) * {weight_col} div {w_total}")
+        F.col("host").alias("key"),
+        F.col("n_tokens").cast("long").alias("weight"),
+        F.expr(f"CAST({budget} AS BIGINT) * n_tokens div {w_total}")
         .cast("long")
         .alias("base_quota"),
-        F.expr(f"(CAST({budget} AS BIGINT) * {weight_col}) % {w_total}")
+        F.expr(f"(CAST({budget} AS BIGINT) * n_tokens) % {w_total}")
         .cast("long")
         .alias("rem"),
     ).localCheckpoint()  # three consumers (leftover agg, counts, final)
@@ -501,8 +487,8 @@ def apportion_budget(
         .withColumn("_rank", rank)
         .withColumn("extra", (F.col("_rank") <= leftover).cast("long"))
         .select(
-            F.col("key").alias(key_col),
-            F.col("weight").alias(weight_col),
+            F.col("key").alias("host"),
+            F.col("weight").alias("n_tokens"),
             "base_quota",
             "rem",
             "extra",
@@ -511,17 +497,13 @@ def apportion_budget(
     )
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target_lang: str = "en",
-    buckets: int = 1024,
-) -> DataFrame:
+def dsir_weights(docs: DataFrame) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, arXiv:2302.03169):
-    score each doc by how much its hashed-n-gram features look like a
-    TARGET distribution relative to the raw corpus, for importance
-    resampling toward the target.
+    score each doc by how much its hashed-n-gram features look like the
+    TARGET distribution (``lang = 'en'``) relative to the raw corpus, for
+    importance resampling toward the target.
 
-    Features are word bigrams hashed into ``buckets`` (``md5_uniform``,
+    Features are word bigrams hashed into 1024 buckets (``md5_uniform``,
     the engine↔oracle-portable hasher); the per-bucket log-ratio uses the
     BIT-LENGTH log2 proxy ``bitlen(count+1)`` =
     ``length(bin(count+1))`` — exact integer, identical in Spark and DuckDB,
@@ -530,7 +512,7 @@ def dsir_weights(
     resampling tiers (no ``ln``: float transcendentals are not bit-identical
     across engines and the gate hashes values).
 
-    Scale shape: the feature dim is bounded by ``buckets`` (broadcast), both
+    Scale shape: the feature dim is bounded by the 1024 buckets (broadcast), both
     distribution passes are partial-aggregated groupBys on the bucket key
     (uniform by hashing), and scoring is one broadcast join + one per-doc
     rollup. Nothing collects.
@@ -545,12 +527,12 @@ def dsir_weights(
         tokens_df(docs, 2)
         .filter(F.col("shingle").isNotNull())
         .select("doc_id", "lang",
-                (md5_uniform(F.col("shingle")) % buckets).alias("b"))
+                (md5_uniform(F.col("shingle")) % 1024).alias("b"))
         .localCheckpoint()
     )
     raw = bg.groupBy("b").agg(F.count(F.lit(1)).alias("rc"))
     tgt = (
-        bg.filter(F.col("lang") == target_lang)
+        bg.filter(F.col("lang") == "en")
         .groupBy("b").agg(F.count(F.lit(1)).alias("tc"))
     )
     llr = raw.join(tgt, "b", "left").select(

@@ -31,6 +31,8 @@ from .. import driver_arm
 MINHASH_PERMS = 64
 LSH_BANDS = 16
 LSH_ROWS = 4  # bands * rows == perms
+# The word n-gram width of every shingle consumer in this module.
+SHINGLE_N = 3
 
 
 def tokens_df(docs: DataFrame, n: int = 1, by_doc: bool = True) -> DataFrame:
@@ -89,7 +91,7 @@ def md5_uniform(s: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(s.cast("binary")), 1, 7), 16, 10).cast("long")
 
 
-def shingle_multiset_df(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingle_multiset_df(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """Positional word n-gram shingle MULTISET per doc: (doc_id, shingle),
     one row per occurrence: the non-NULL shingles of ``tokens_df``.
     Consumers that count occurrences (dup-ngram fraction, the count-min
@@ -98,7 +100,7 @@ def shingle_multiset_df(docs: DataFrame, n: int = 3) -> DataFrame:
         "doc_id", "shingle")
 
 
-def shingles_df(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingles_df(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """Distinct word n-gram shingles per doc: (doc_id, shingle)."""
     return shingle_multiset_df(docs, n).distinct()
 
@@ -129,28 +131,37 @@ def pair_candidates(sh: DataFrame) -> DataFrame:
         .groupBy("doc_id_a", "doc_id_b")
         .agg(F.count("*").alias("inter"))
     )
+    return _with_counts(inter, cnt)
+
+
+def _with_counts(inter: DataFrame, cnt: DataFrame) -> DataFrame:
+    """(doc_id_a, doc_id_b, inter) pairs with both docs' shingle counts
+    from ``cnt`` (doc_id, n_sh) as ``na`` and ``nb``."""
     ca = cnt.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("na"))
     cb = cnt.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("nb"))
     return inter.join(ca, "doc_id_a").join(cb, "doc_id_b")
 
 
-def jaccard_pairs_exact(
-    docs: DataFrame, n: int = 3, threshold: float = 0.5,
-) -> DataFrame:
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_id_a, doc_id_b, jaccard) of the counted ``pairs`` whose
+    Jaccard, |A∩B| / (|A|+|B|-|A∩B|) rounded to 6 places, is at least
+    ``threshold``."""
+    j = (F.col("inter") * F.lit(1.0)) / (F.col("na") + F.col("nb") - F.col("inter"))
+    return (
+        pairs.withColumn("jaccard", F.round(j, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_id_a", "doc_id_b", "jaccard")
+    )
+
+
+def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing >= 1 shingle.
 
     Inverted-index self-join (shingle as join key) -> per-pair intersection
     count -> |A∪B| = |A|+|B|-|A∩B|. No stop-shingle cut: exact textbook
     Jaccard, the value the oracle gate checks. The pair space is
     Σ df(shingle)²; ``minhash_lsh_dups`` is the path with a ``max_df`` cut."""
-    sh = shingles_df(docs, n)
-    j = (F.col("inter") * F.lit(1.0)) / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        pair_candidates(sh.localCheckpoint())
-        .withColumn("jaccard", F.round(j, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
+    return _jaccard_at_least(pair_candidates(shingles_df(docs).localCheckpoint()), threshold)
 
 
 def minhash_signatures_from(sh: DataFrame, with_count: bool = False) -> DataFrame:
@@ -197,8 +208,7 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
 
 
 def minhash_lsh_dups(
-    docs: DataFrame, n: int = 3, threshold: float = 0.5,
-    max_df: int | None = None,
+    docs: DataFrame, threshold: float = 0.5, max_df: int | None = None,
 ) -> DataFrame:
     """LSH candidates -> exact-Jaccard verify. Returns (doc_id_a, doc_id_b,
     jaccard >= threshold). Prefilter is probabilistic (recall < 1 for pairs
@@ -243,7 +253,7 @@ def minhash_lsh_dups(
     # the shingle table feeds three consumers (signatures + both sides of
     # the verify join); materialize it once — Spark has no common-subplan
     # reuse (at cluster scale this is a checkpoint stage table)
-    sh = shingles_df(reps, n)
+    sh = shingles_df(reps)
     if max_df is not None:
         w = g.select(F.col("_rep").alias("doc_id"), "_sz")
         dfc = sh.join(w, "doc_id").groupBy("shingle").agg(
@@ -253,7 +263,6 @@ def minhash_lsh_dups(
     sh = sh.localCheckpoint()
     sigs = minhash_signatures_from(sh, with_count=True)
     cand = lsh_candidate_pairs(sigs)
-    cnt = sigs.select("doc_id", "n_sh")
     pa = cand.join(sh.select(F.col("doc_id").alias("doc_id_a"), "shingle"), "doc_id_a")
     inter = (
         pa.join(
@@ -263,22 +272,16 @@ def minhash_lsh_dups(
         .groupBy("doc_id_a", "doc_id_b")
         .agg(F.count("*").alias("inter"))
     )
-    ca = cnt.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("na"))
-    cb = cnt.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("nb"))
-    j = (F.col("inter") * F.lit(1.0)) / (F.col("na") + F.col("nb") - F.col("inter"))
-    rep_pairs = (
-        inter.join(ca, "doc_id_a").join(cb, "doc_id_b")
-        .withColumn("jaccard", F.round(j, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
-    # expand rep-level pairs back to doc level (broadcast the small group
-    # table, explode member ids — no second corpus scan anywhere)
+    rep_pairs = _jaccard_at_least(
+        _with_counts(inter, sigs.select("doc_id", "n_sh")), threshold)
+    # expand rep-level pairs back to doc level (explode member ids — no
+    # second corpus scan anywhere). The group table is corpus-sized (one
+    # row per distinct text), so the join strategy is AQE's, not a hint.
     ga = g.select(F.col("_rep").alias("doc_id_a"), F.col("_ids").alias("_ia"))
     gb = g.select(F.col("_rep").alias("doc_id_b"), F.col("_ids").alias("_ib"))
     cross = (
-        rep_pairs.join(F.broadcast(ga), "doc_id_a")
-        .join(F.broadcast(gb), "doc_id_b")
+        rep_pairs.join(ga, "doc_id_a")
+        .join(gb, "doc_id_b")
         .select(F.explode("_ia").alias("_da"), "_ib", "jaccard")
         .select("_da", F.explode("_ib").alias("_db"), "jaccard")
         .select(
@@ -290,7 +293,7 @@ def minhash_lsh_dups(
     shingled = sh.select(F.col("doc_id").alias("_rep")).distinct()
     within = (
         g.filter(F.col("_sz") >= 2)
-        .join(F.broadcast(shingled), "_rep")
+        .join(shingled, "_rep")
         .select(F.explode("_ids").alias("doc_id_a"), "_ids")
         .select("doc_id_a", F.explode("_ids").alias("doc_id_b"))
         .filter(F.col("doc_id_a") < F.col("doc_id_b"))
@@ -334,8 +337,8 @@ def simhash_df(docs: DataFrame) -> DataFrame:
     return sums.select("doc_id", sim.alias("simhash"))
 
 
-def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Pairs with hamming(simhash) <= max_hamming via 4x16-bit band blocking.
+def simhash_near_dups(docs: DataFrame) -> DataFrame:
+    """Pairs with hamming(simhash) <= 3 via 4x16-bit band blocking.
 
     Pigeonhole: hamming <= 3 over 64 bits => at least one of the 4 16-bit
     bands is identical, so the blocking join is *exact* (no recall loss),
@@ -365,7 +368,7 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
         a.join(b, ["band_idx", "band_val"])
         .filter(F.col("doc_id_a") < F.col("doc_id_b"))
         .select("doc_id_a", "doc_id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .distinct()
     )
 
@@ -515,6 +518,7 @@ def _driver_matrix(
 # exact quantized cosine as ``embedding_near_dups``.
 
 EMB_PLANES = 12
+EMB_DIM = 64  # embedding width of the fixture corpus
 
 
 def _plane_coeff(p: int, d: int, dim: int) -> int:
@@ -558,21 +562,15 @@ def int_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series((ma * mb).sum(axis=1), dtype="int64")
 
 
-def embedding_lsh_dups(
-    embs: DataFrame,
-    threshold: float = 0.4,
-    dim: int = 64,
-    n_planes: int = EMB_PLANES,
-    max_hamming: int = 2,
-) -> DataFrame:
+def embedding_lsh_dups(embs: DataFrame) -> DataFrame:
     """Bucketed embedding near-dup: multi-probe hyperplane LSH candidates ->
-    exact quantized-cosine verify. Same output contract as
-    ``embedding_near_dups`` restricted to bucket-hamming <= max_hamming
+    exact quantized-cosine verify at cos_q >= 0.4. Same output contract as
+    ``embedding_near_dups`` restricted to bucket-hamming <= 2
     candidates — deterministic (fixed integer planes), so oracle-checkable,
     unlike recall-probabilistic LSH. One equi-join shuffle, never all
     pairs."""
     qn = quantized_df(embs).withColumn("norm", sq_norm_col("qv")).withColumn(
-        "bucket", embedding_bucket_udf(dim, n_planes)(F.col("qv")))
+        "bucket", embedding_bucket_udf(EMB_DIM)(F.col("qv")))
     # the bucketed table feeds the probe sides AND two array-fetch joins;
     # materialize once (at cluster scale: a checkpoint stage table). The
     # repartition fixes the materialized frame's parallelism: off a
@@ -581,7 +579,7 @@ def embedding_lsh_dups(
     # (profiled: 2 tasks, 1.35 s).
     n_part = int(embs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     qn = qn.repartition(n_part, "vec_id").localCheckpoint()
-    masks = [m for m in range(1 << n_planes) if bin(m).count("1") <= max_hamming]
+    masks = [m for m in range(1 << EMB_PLANES) if bin(m).count("1") <= 2]
     probe = F.explode(F.array(*[F.lit(m) for m in masks])).alias("mask")
     # the probe explode is NARROW (ids + buckets only): replicating the
     # 64-slot arrays 79x through the bucket shuffle measured ~2x slower at
@@ -605,7 +603,7 @@ def embedding_lsh_dups(
         cand.join(va, "vec_id_a").join(vb, "vec_id_b")
         .withColumn("dot", int_dot_col("qa", "qb"))
         .withColumn("cos_q", cos_q_col("dot", "norm_a", "norm_b"))
-        .filter(F.col("cos_q") >= threshold)
+        .filter(F.col("cos_q") >= 0.4)
         .select("vec_id_a", "vec_id_b", "cos_q")
     )
 
@@ -658,9 +656,7 @@ def embedding_near_dups(embs: DataFrame, threshold: float = 0.95) -> DataFrame:
     )
 
 
-def containment_pairs_exact(
-    docs: DataFrame, n: int = 3, threshold_ppm: int = 500_000,
-) -> DataFrame:
+def containment_pairs_exact(docs: DataFrame, threshold_ppm: int = 500_000) -> DataFrame:
     """Exact n-gram CONTAINMENT over candidate pairs sharing >= 1 shingle:
     ``containment(A,B) = |A∩B| / min(|A|,|B|)`` in exact integer ppm.
 
@@ -677,9 +673,8 @@ def containment_pairs_exact(
     one per-pair intersection aggregate, broadcast-size per-doc count dim
     joins. Integer ppm via ``* 1e6 div`` — no float division, so the gate
     hash is order-exact."""
-    sh = shingles_df(docs, n)
     return (
-        pair_candidates(sh.localCheckpoint())
+        pair_candidates(shingles_df(docs).localCheckpoint())
         .withColumn(
             "containment_ppm",
             F.expr("inter * 1000000 div least(na, nb)"),
@@ -689,7 +684,7 @@ def containment_pairs_exact(
     )
 
 
-def dup_ngram_stats(docs: DataFrame, n: int = 3) -> DataFrame:
+def dup_ngram_stats(docs: DataFrame) -> DataFrame:
     """Per-document duplicated-n-gram fraction — the ExactSubstr-style
     signal (Lee et al. 2022, "Deduplicating Training Data Makes Language
     Models Better") that pairwise dedup cannot express: what share of a
@@ -713,7 +708,7 @@ def dup_ngram_stats(docs: DataFrame, n: int = 3) -> DataFrame:
 
     Integer ppm (``* 1e6 div``), no float division. Returns
     (doc_id, total_ngrams, dup_ngrams, dup_ppm)."""
-    pos_sh = shingle_multiset_df(docs, n)
+    pos_sh = shingle_multiset_df(docs)
     per_doc = pos_sh.groupBy("doc_id", "shingle").agg(
         F.count("*").alias("cnt")
     )
@@ -736,14 +731,14 @@ def dup_ngram_stats(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def dup_span_scrub(docs: DataFrame, n: int = 3) -> DataFrame:
+def dup_span_scrub(docs: DataFrame) -> DataFrame:
     """ExactSubstr REMOVAL (the act-on-it counterpart to
     ``dup_ngram_stats``): delete every token whose position is covered by
     a corpus-duplicated n-gram (Lee et al. 2022 remove the duplicated
     spans themselves rather than whole documents — cross-doc boilerplate,
     licence blocks and syndicated passages vanish while the unique
     remainder of each page survives). A token at position t is removed
-    when ANY of the n windows covering it (start positions t-n+1 .. t)
+    when ANY of the n = ``SHINGLE_N`` windows covering it (start positions t-n+1 .. t)
     is an n-gram seen in >= 2 distinct documents (the ``df >= 2`` rule
     shared with ``dup_ngram_stats``).
 
@@ -772,6 +767,7 @@ def dup_span_scrub(docs: DataFrame, n: int = 3) -> DataFrame:
     when every token of the doc sits under a duplicated span."""
     from pyspark.sql import Window
 
+    n = SHINGLE_N
     pos_sh = tokens_df(docs, n)
     per_doc = (
         pos_sh.filter(F.col("shingle").isNotNull())
@@ -813,15 +809,10 @@ def dup_span_scrub(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def incremental_new_hashes(
-    new: DataFrame,
-    old_hashes: DataFrame,
-    text_col: str = "text",
-    hash_col: str = "text_hash",
-) -> DataFrame:
+def incremental_new_hashes(new: DataFrame, old_hashes: DataFrame) -> DataFrame:
     """Incremental cross-snapshot dedup: the content rows of the NEW crawl
-    snapshot that enter the corpus — not seen in the previous snapshot's
-    hash set (left ANTI join) and first-seen within the new batch
+    snapshot that enter the corpus — ``md5(text)`` not seen in the previous
+    snapshot's ``text_hash`` set (left ANTI join) and first-seen within the new batch
     (min doc_id per hash, the same first-fetch-wins argmin as
     ``url_canonical_dedup``). The only-new-content-trains step of a
     continuously refreshed corpus: the old corpus never re-reads, only
@@ -832,19 +823,18 @@ def incremental_new_hashes(
     hash-only projection orders smaller than the corpus and both sides
     partition on the same key."""
     nh = new.select(
-        F.md5(F.col(text_col)).alias(hash_col), F.col("doc_id")
+        F.md5(F.col("text")).alias("text_hash"), F.col("doc_id")
     )
     fresh = nh.join(
-        old_hashes.select(hash_col), hash_col, "left_anti"
+        old_hashes.select("text_hash"), "text_hash", "left_anti"
     )
-    return fresh.groupBy(hash_col).agg(
+    return fresh.groupBy("text_hash").agg(
         F.min("doc_id").cast("long").alias("first_doc_id")
     )
 
 
 def bloom_prefilter(
-    candidates: DataFrame, seen: DataFrame, key_col: str = "url",
-    m: int = 8192, k: int = 2,
+    candidates: DataFrame, seen: DataFrame, m: int = 8192, k: int = 2,
 ) -> DataFrame:
     """Bloom-filter pre-filter audit for crawl-frontier dedup — the
     canonical 100 TB pattern: before shuffling a trillion frontier URLs
@@ -878,9 +868,8 @@ def bloom_prefilter(
 
     from pyspark.sql.functions import broadcast
 
-    key = F.col(key_col)
-    cand = candidates.select(key.alias("url")).distinct()
-    seen_keys = seen.select(key.alias("url")).distinct()
+    cand = candidates.select("url").distinct()
+    seen_keys = seen.select("url").distinct()
     flagged = cand
     for i in range(k):
         bits_i = (
@@ -914,7 +903,7 @@ def bloom_prefilter(
     )
 
 
-def novelty_stats(docs: DataFrame, n: int = 3) -> DataFrame:
+def novelty_stats(docs: DataFrame) -> DataFrame:
     """Per-doc shingle NOVELTY against the whole corpus: the share of a
     doc's distinct n-gram shingles whose globally-first occurrence (min
     doc_id — ingestion order) is this doc. The dedup-monitoring curve a
@@ -926,7 +915,7 @@ def novelty_stats(docs: DataFrame, n: int = 3) -> DataFrame:
     same key (both uniform by hashing; the first-occurrence dim is
     vocab-sized — shuffle join, deliberately not broadcast), then a
     per-doc rollup."""
-    sh = shingles_df(docs, n)
+    sh = shingles_df(docs)
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     return (
         sh.join(first, "shingle")
@@ -944,13 +933,11 @@ def novelty_stats(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def cdc_chunk_stats(
-    docs: DataFrame, w: int = 3, mod: int = 16
-) -> DataFrame:
+def cdc_chunk_stats(docs: DataFrame, mod: int = 16) -> DataFrame:
     """Content-defined chunking (CDC) dedup stats — the rsync/LBFS
     boundary trick (Muthitacharoen et al., SOSP 2001) applied to the
     token stream: a chunk boundary falls AFTER every position whose
-    trailing w-token window hashes to 0 mod ``mod`` (expected chunk
+    trailing w-token window (w = 3) hashes to 0 mod ``mod`` (expected chunk
     length ≈ mod tokens), so identical text spans produce identical
     chunks NO MATTER WHERE they sit in their documents — the alignment
     robustness fixed-offset blocking lacks, and the reason crawl-snapshot
@@ -978,6 +965,7 @@ def cdc_chunk_stats(
     leave the executors except as hashes."""
     from pyspark.sql import Window
 
+    w = 3
     # a NULL shingle (fewer than w tokens left) hashes to NULL: no flag
     hsh = md5_uniform(F.concat(F.lit("cdc:"), F.col("shingle"))) % mod
     flagged = tokens_df(docs, w).select(
@@ -1029,7 +1017,7 @@ def cdc_chunk_stats(
 
 
 def countmin_calibration(
-    docs: DataFrame, n: int = 3, w: int = 1024, d: int = 3, top: int = 100,
+    docs: DataFrame, w: int = 1024, d: int = 3, top: int = 100,
 ) -> DataFrame:
     """Count-min sketch frequency estimation with MEASURED over-estimate
     error (Cormode & Muthukrishnan 2005) — the heavy-hitter counterpart
@@ -1054,7 +1042,7 @@ def countmin_calibration(
     materialization), and d broadcast probes. At 100 TB the counter grid
     is what ships to the planner/monitor instead of a trillion-row
     frequency table; this op is the error bound that justifies it."""
-    pos_sh = shingle_multiset_df(docs, n)
+    pos_sh = shingle_multiset_df(docs)
     counts = pos_sh.groupBy("shingle").agg(F.count("*").alias("exact_cnt"))
 
     def _pos(sh_col: F.Column, i_col: F.Column) -> F.Column:
@@ -1090,14 +1078,13 @@ def countmin_calibration(
     )
 
 
-def minhash_md5_calibration(
-    docs: DataFrame, n: int = 3, threshold_ppm: int = 300_000,
-) -> DataFrame:
-    """MinHash ESTIMATOR CALIBRATION: for every candidate pair above an
-    exact-Jaccard floor, both the 64-permutation MinHash estimate and the
-    exact Jaccard, in integer ppm — the eval query that tells you what
-    band/row LSH settings actually buy on YOUR corpus (est_ppm ~ the
-    match probability the banding formula plugs in).
+def minhash_md5_calibration(docs: DataFrame) -> DataFrame:
+    """MinHash ESTIMATOR CALIBRATION: for every candidate pair at or above
+    an exact-Jaccard floor of 300,000 ppm, both the 64-permutation
+    MinHash estimate and the exact Jaccard, in integer ppm — the eval
+    query that tells you what band/row LSH settings actually buy on YOUR
+    corpus (est_ppm ~ the match probability the banding formula plugs
+    in).
 
     Hasher is the md5-28..60-bit salted prefix so DuckDB mirrors it
     bit-for-bit (same twin discipline as dedup_simhash's md5 leg);
@@ -1105,11 +1092,11 @@ def minhash_md5_calibration(
     est_ppm = matching coordinates * 15625 (= 1e6/64, exact).
     Scale: candidate pairs come from the shingle inverted index (never
     all-pairs); signatures are one min-aggregate per doc."""
-    sh = shingles_df(docs, n).localCheckpoint()  # pairs + signatures + counts
+    sh = shingles_df(docs).localCheckpoint()  # pairs + signatures + counts
     cand = (
         pair_candidates(sh)
         .withColumn("jaccard_ppm", F.expr("inter * 1000000 div (na + nb - inter)"))
-        .filter(F.col("jaccard_ppm") >= threshold_ppm)
+        .filter(F.col("jaccard_ppm") >= 300_000)
         .select("doc_id_a", "doc_id_b", "jaccard_ppm")
     )
     def _h(i: int):
@@ -1132,13 +1119,10 @@ def minhash_md5_calibration(
     )
 
 
-def split_leakage_audit(
-    docs: DataFrame, n: int = 3, threshold_ppm: int = 500_000,
-    val_pct: int = 10, n_hosts: int = 100,
-) -> DataFrame:
+def split_leakage_audit(docs: DataFrame) -> DataFrame:
     """Train/val leakage audit: how many NEAR-DUPLICATE pairs (n-gram
-    Jaccard >= threshold, the same pair population as ``dedup_jaccard``)
-    straddle the train/val boundary under (a) the naive per-doc hash split
+    Jaccard >= 500,000 ppm, the same pair population as ``dedup_jaccard``)
+    straddle the 10% val / 90% train boundary under (a) the naive per-doc hash split
     and (b) a group-aware per-HOST hash split. Splitting by document lets
     one copy of a duplicated page land in train and its near-twin in val —
     the classic contamination that inflates eval scores (the reason
@@ -1152,7 +1136,7 @@ def split_leakage_audit(
     partitioning/retries/engines, the same discipline as
     ``stratified_sample``; the DuckDB oracle recomputes the identical
     hashes). The host key is the crawl-host fixture shared with the link
-    graph (``queries._host_edges``): ``(doc_id div 3) % n_hosts``.
+    graph (``queries._host_edges``): ``(doc_id div 3) % 100``.
     Jaccard is integer ppm (``inter * 1e6 div union``) so the threshold
     cut is bit-identical in both engines.
 
@@ -1169,23 +1153,23 @@ def split_leakage_audit(
     """
     from .textstats import _U_MAX, _uniform_col
 
-    thr = (_U_MAX * val_pct) // 100
+    thr = (_U_MAX * 10) // 100
 
     def _v_doc(c: str) -> F.Column:
         return (_uniform_col(F.col(c), "split:") < thr).cast("int")
 
     def _v_host(c: str) -> F.Column:
-        h = F.expr(f"({c} div 3) % {n_hosts}")
+        h = F.expr(f"({c} div 3) % 100")
         return (_uniform_col(h, "hsplit:") < thr).cast("int")
 
-    sh = shingles_df(docs, n).localCheckpoint()
+    sh = shingles_df(docs).localCheckpoint()
     pairs = (
         pair_candidates(sh)
         .withColumn(
             "jaccard_ppm",
             F.expr("inter * 1000000 div (na + nb - inter)"),
         )
-        .filter(F.col("jaccard_ppm") >= threshold_ppm)
+        .filter(F.col("jaccard_ppm") >= 500_000)
     )
     flagged = pairs.select(
         (_v_doc("doc_id_a") != _v_doc("doc_id_b"))

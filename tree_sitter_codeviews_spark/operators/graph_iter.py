@@ -163,13 +163,11 @@ def _components_driver(und: DataFrame, pdf) -> DataFrame:
 def reach(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     seed_col: str = "node",
     max_iter: int = 50,
 ) -> DataFrame:
     """(node, hops): min directed-BFS distance from any seed, seeds at 0,
-    up to ``max_iter`` hops.
+    up to ``max_iter`` hops along the (src, dst) ``edges``.
 
     SIZE-ADAPTIVE like ``connected_components``: up to
     ``driver_arm.ROW_CAP`` edges the BFS runs driver-side over the
@@ -179,7 +177,7 @@ def reach(
     materialized edge frame. Both arms return identical (node, hops) sets
     (pinned by test). The two arms are this module's one BFS: linkgraph's
     crawl depth and bowtie waves call them too."""
-    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("nxt"))
+    e = edges.select(F.col("src").alias("node"), F.col("dst").alias("nxt"))
     s = seeds.select(F.col(seed_col).alias("node"))
     pdf = driver_arm.collect_if_small(e, driver_arm.ROW_CAP)
     seed_pdf = None if pdf is None else driver_arm.collect_if_small(
@@ -224,17 +222,27 @@ def reach_loop(e: DataFrame, seeds: DataFrame, max_iter: int) -> DataFrame:
     anti-joins the visited set — work per round is proportional to the
     frontier, not the graph. Stops when the frontier empties (or at
     ``max_iter``)."""
-    visited = seeds.distinct().withColumn("hops", F.lit(0)).localCheckpoint()
-    frontier = visited
-    for h in range(1, max_iter + 1):
-        nxt = (
+    return _frontier_loop(
+        seeds.distinct().withColumn("hops", F.lit(0)).localCheckpoint(),
+        lambda frontier, visited, h: (
             frontier.join(e, "node")
             .select(F.col("nxt").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
             .withColumn("hops", F.lit(h))
-            .localCheckpoint()
-        )
+        ),
+        range(1, max_iter + 1),
+    )
+
+
+def _frontier_loop(visited: DataFrame, step, rounds) -> DataFrame:
+    """The frontier fixpoint of ``reach_loop`` and
+    ``reaching_definitions``: for each round ``r`` of ``rounds``, the new
+    facts ``step(frontier, visited, r)`` are materialized and appended to
+    ``visited`` and become the next frontier; an empty round stops."""
+    frontier = visited
+    for r in rounds:
+        nxt = step(frontier, visited, r).localCheckpoint()
         if nxt.isEmpty():
             break
         visited = visited.unionByName(nxt).localCheckpoint()
@@ -245,13 +253,10 @@ def reach_loop(e: DataFrame, seeds: DataFrame, max_iter: int) -> DataFrame:
 def reaching_definitions(
     edges: DataFrame,
     defs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
-    var_col: str = "var",
     max_iter: int = 60,
 ) -> DataFrame:
-    """(node, var, def_node): definitions live at each node's entry — the
+    """(node, var, def_node): definitions live at each node's entry of the
+    (src, dst) ``edges`` from the (node, var) ``defs`` — the
     reference's core analysis (``codeviews/DFG/DFG_RDA.py`` via
     ``SDFG_c.py``'s gen/kill propagation): def d of ``var`` reaches node n
     iff a directed path d -> ... -> n exists with no intermediate
@@ -272,8 +277,8 @@ def reaching_definitions(
     graph_sdfg_interproc at sf0.1), with a ``DRIVER_FACT_CAP`` escape back
     to the distributed loop if the fact set explodes. Identical fact sets
     (pinned by test), including the max_iter depth bound."""
-    d = defs.select(F.col(node_col).alias("node"), F.col(var_col).alias("var")).distinct()
-    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("_dst"))
+    d = defs.select("node", "var").distinct()
+    e = edges.select(F.col("src").alias("node"), F.col("dst").alias("_dst"))
     pdf = driver_arm.collect_if_small(e, driver_arm.ROW_CAP)
     if pdf is not None:
         out = _rda_driver(e, pdf, d, max_iter)
@@ -290,21 +295,17 @@ def reaching_definitions(
         .distinct()
         .localCheckpoint()
     )
-    frontier = visited
-    for _ in range(max_iter):
-        nxt = (
+    return _frontier_loop(
+        visited,
+        lambda frontier, visited, _: (
             frontier.join(d, ["node", "var"], "left_anti")  # kill at node
             .join(e, "node")
             .select(F.col("_dst").alias("node"), "var", "def_node")
             .distinct()
             .join(visited, ["node", "var", "def_node"], "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
+        ),
+        range(max_iter),
+    )
 
 
 def _rda_driver(
@@ -352,18 +353,14 @@ def _rda_driver(
     )
 
 
-def transitive_closure(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """All (src, dst) pairs connected by a directed path: the reference's
+def transitive_closure(edges: DataFrame) -> DataFrame:
+    """All (src, dst) pairs connected by a directed path of the (src, dst)
+    ``edges``: the reference's
     inheritance/overload closure (``codeviews/CFG/CFG_cpp.py:407-438``
     closes the derived-class hierarchy; ``:2426-2534`` the overload set).
 
     Path doubling: P_{k+1} = P_k ∪ (P_k ∘ P_k), so paths up to length
-    2^max_iter close in max_iter rounds — log(longest path) shuffles, the
+    2^20 close in the loop's 20 rounds — log(longest path) shuffles, the
     right shape for deep hierarchies on a cluster. Output excludes the
     trivial (v, v) pairs unless the input has cycles through v.
 
@@ -373,13 +370,16 @@ def transitive_closure(
     are dim-sized), with a hard ``DRIVER_FACT_CAP`` escape back to the
     distributed loop if the closure explodes (deep chains square). Both
     return identical pair sets (pinned by test)."""
-    paths = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct().localCheckpoint()
+    paths = (
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .distinct().localCheckpoint()
+    )
     pdf = driver_arm.collect_if_small(paths, CLOSURE_ROW_CAP)
     if pdf is not None:
         out = _closure_driver(paths, pdf)
         if out is not None:
-            return out.select(F.col("a").alias(src), F.col("b").alias(dst))
-    for _ in range(max_iter):
+            return out.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    for _ in range(20):
         before = paths.count()
         comp = (
             paths.alias("p")
@@ -389,7 +389,7 @@ def transitive_closure(
         paths = paths.unionByName(comp).distinct().localCheckpoint()
         if paths.count() == before:
             break
-    return paths.select(F.col("a").alias(src), F.col("b").alias(dst))
+    return paths.select(F.col("a").alias("src"), F.col("b").alias("dst"))
 
 
 def _closure_driver(paths: DataFrame, pdf) -> DataFrame | None:
@@ -418,13 +418,9 @@ def _closure_driver(paths: DataFrame, pdf) -> DataFrame | None:
     return arrow_local_df(paths.sparkSession, rows, f"a {t}, b {t}")
 
 
-def resolve_chains(
-    mapping: DataFrame,
-    alias_col: str = "alias",
-    target_col: str = "target",
-    max_iter: int = 8,
-) -> DataFrame:
-    """(alias, target, depth): follow alias→target chains to their terminal.
+def resolve_chains(mapping: DataFrame, max_iter: int = 8) -> DataFrame:
+    """(alias, target, depth): follow the (alias, target) ``mapping``'s
+    chains to their terminal.
 
     Pointer doubling: each round left-joins the current mapping's target side
     against itself and jumps non-terminal targets one full resolution step —
@@ -432,11 +428,7 @@ def resolve_chains(
     ``depth`` counts original hops. Cycles never terminate a row; the
     max_iter backstop leaves them at their last state (callers that need
     cycle detection compare depth against 2^max_iter)."""
-    cur = mapping.select(
-        F.col(alias_col).alias("alias"),
-        F.col(target_col).alias("target"),
-        F.lit(1).alias("depth"),
-    ).localCheckpoint()
+    cur = mapping.select("alias", "target", F.lit(1).alias("depth")).localCheckpoint()
     for _ in range(max_iter):
         jump = cur.select(
             F.col("alias").alias("target"),
@@ -455,59 +447,44 @@ def resolve_chains(
         cur = nxt.drop("_chg")
         if changed == 0:
             break
-    return cur.select(
-        F.col("alias").alias(alias_col),
-        F.col("target").alias(target_col),
-        "depth",
-    )
+    return cur
 
 
-def last_definition(
-    rda: DataFrame,
-    node_col: str = "node_id",
-    var_col: str = "var",
-    def_col: str = "def_node",
-    order_col: str | None = None,
-) -> DataFrame:
+def last_definition(rda: DataFrame) -> DataFrame:
     """The reference CLI's ``--last-def`` semantics (cli.py:35: 'adds last
     definition information to the DFG') as a REUSABLE operator: from a
     reaching-definitions fixpoint, keep only the NEAREST preceding
-    definition per (node, var) — argmax over the reaching set.
+    definition per (node_id, var) — argmax over the reaching set.
 
-    ``order_col`` names the column that ranks definitions by control-flow
-    proximity (later = nearer); default is ``def_col`` itself, which is
+    Definitions rank by ``def_node`` itself (later = nearer), which is
     exact whenever node ids are control-flow-ordered (the chain fixture,
     any topologically-numbered CFG). One partial-aggregating groupBy —
     map-side combine makes it a near-free pass at any scale."""
-    order = order_col or def_col
-    return rda.groupBy(node_col, var_col).agg(
-        F.max_by(F.col(def_col), F.col(order)).alias("last_def")
+    return rda.groupBy("node_id", "var").agg(
+        F.max_by(F.col("def_node"), F.col("def_node")).alias("last_def")
     )
 
 
 def last_use(
     rda: DataFrame,
     uses: DataFrame,
-    node_col: str = "node_id",
-    var_col: str = "var",
-    def_col: str = "def_node",
     order_col: str | None = None,
 ) -> DataFrame:
     """The reference CLI's ``--last-use`` flag (cli.py:36) as a reusable
     operator: for each definition, the LAST use it reaches. ``uses`` is an
-    arbitrary (node, var) relation — NOT a baked-in fixture formula — joined
-    against the fixpoint on (node_col, var_col), then argmax'd per
-    (def, var) by ``order_col`` (default: the use node id, exact under
+    arbitrary (node_id, var) relation — NOT a baked-in fixture formula —
+    joined against the fixpoint on (node_id, var), then argmax'd per
+    (def_node, var) by ``order_col`` (default: the use node id, exact under
     control-flow-ordered numbering). The join key is (node, var), the same
     key the fixpoint is already hashed on, so no extra shuffle of the big
     side."""
-    use_cols = {node_col, var_col}
+    use_cols = {"node_id", "var"}
     assert use_cols <= set(uses.columns), (
         f"uses relation must carry {sorted(use_cols)}, has {uses.columns}"
     )
-    order = order_col or node_col
+    order = order_col or "node_id"
     return (
-        rda.join(uses.select(*sorted(use_cols)).distinct(), [node_col, var_col])
-        .groupBy(def_col, var_col)
-        .agg(F.max_by(F.col(node_col), F.col(order)).alias("last_use"))
+        rda.join(uses.select(*sorted(use_cols)).distinct(), ["node_id", "var"])
+        .groupBy("def_node", "var")
+        .agg(F.max_by(F.col("node_id"), F.col(order)).alias("last_use"))
     )

@@ -80,16 +80,16 @@ def _one_graph(pdf: pd.DataFrame) -> pd.DataFrame:
     })
 
 
-def graph_metrics(edges: DataFrame, graph_col: str = "graph_id") -> DataFrame:
+def graph_metrics(edges: DataFrame) -> DataFrame:
     """edges(graph_id, src, dst) -> one metrics row per graph.
 
     One shuffle on graph_id, then per-group pandas. Diameter is the exact
     tree diameter via double-BFS sweep (the graphs this engine feeds it are
     forests of chain segments); on cyclic graphs it is the standard
     double-sweep lower bound."""
-    e = edges.select(graph_col, "src", "dst")
+    e = edges.select("graph_id", "src", "dst")
     # pin grouped-map parallelism (the tile_diameter discipline): AQE
     # coalesces the small edge shuffle to 1-2 partitions, serializing the
     # per-graph pandas work through one Python worker
-    e = e.repartition(e.sparkSession.sparkContext.defaultParallelism, graph_col)
-    return e.groupBy(graph_col).applyInPandas(_one_graph, METRICS_SCHEMA)
+    e = e.repartition(e.sparkSession.sparkContext.defaultParallelism, "graph_id")
+    return e.groupBy("graph_id").applyInPandas(_one_graph, METRICS_SCHEMA)

@@ -31,19 +31,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _token_tf(docs: DataFrame, text_col: str) -> DataFrame:
-    """(token, doc_id, tf) — whitespace tokenization, empty tokens
-    dropped; one map-side-combined aggregate."""
+def _token_tf(docs: DataFrame) -> DataFrame:
+    """(token, doc_id, tf) — whitespace tokenization of ``text``, empty
+    tokens dropped; one map-side-combined aggregate."""
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.col(text_col), " ")).alias("token"),
+        F.explode(F.split(F.col("text"), " ")).alias("token"),
     ).filter(F.col("token") != "")
     return toks.groupBy("token", "doc_id").agg(F.count("*").alias("tf"))
 
 
-def inverted_index(
-    docs: DataFrame, text_col: str = "text", top_postings: int = 5
-) -> DataFrame:
+def inverted_index(docs: DataFrame, top_postings: int = 5) -> DataFrame:
     """Build the token-level inverted index: per token its document
     frequency, total term frequency, and the top-``top_postings`` posting
     doc ids by (tf desc, doc_id asc) as a comma-joined string (a bounded
@@ -61,7 +59,7 @@ def inverted_index(
     (rank <= k within token) are collected; everything else contributes
     to df/total_tf via the cheap scalar aggregates only.
     """
-    tf = _token_tf(docs, text_col)
+    tf = _token_tf(docs)
     # Rank-prefilter the collect side so no token ever collects more than
     # top_postings rows (stop-word lists would otherwise be unbounded).
     w = Window.partitionBy("token").orderBy(
@@ -95,10 +93,8 @@ def inverted_index(
     return scalars.join(previews, "token")
 
 
-def tfidf_topk(
-    docs: DataFrame, text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Top-``k`` characteristic terms per document by integer tf-idf.
+def tfidf_topk(docs: DataFrame) -> DataFrame:
+    """Top-3 characteristic terms per document by integer tf-idf.
 
     score = tf * idf_ppm with idf_ppm = ``N * 1e6 div df`` (exact integer
     inverse document frequency; monotone in log(N/df) for fixed N, so the
@@ -111,7 +107,7 @@ def tfidf_topk(
     handled shuffle join otherwise), one corpus-count scalar crossed in,
     then a per-doc row_number window. No per-row Python anywhere.
     """
-    tf = _token_tf(docs, text_col)
+    tf = _token_tf(docs)
     df_dim = tf.groupBy("token").agg(F.count("*").alias("df"))
     n_docs = docs.select(
         F.count("*").cast("long").alias("n_docs")
@@ -130,7 +126,7 @@ def tfidf_topk(
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= 3)
         .select(
             "doc_id",
             F.col("rnk").cast("int").alias("rnk"),

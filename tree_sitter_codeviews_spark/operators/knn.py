@@ -57,12 +57,10 @@ def knn_ring(
     spark: SparkSession,
     k: int = 5,
     res: int = 5,
-    id_col: str = "doc_id",
-    grid_res: int = layers.GRID_RES,
 ) -> DataFrame:
-    """points(id, gx, gy, lon, lat) -> (id, neighbor_id, rank, dist_sq).
+    """points(doc_id, gx, gy, lon, lat) -> (doc_id, neighbor_id, rank, dist_sq).
 
-    gx/gy are grid coords at ``grid_res``; the kNN index grid is ``res``.
+    gx/gy are grid coords at ``layers.GRID_RES``; the kNN index grid is ``res``.
 
     SIZE-ADAPTIVE (``driver_arm``, with the lower ``DRIVER_POINTS_CAP``
     because the driver arm is O(N²)): up to that many points the exact kNN
@@ -75,7 +73,7 @@ def knn_ring(
 
     Raises ``ValueError`` when the ``res`` grid is wider than
     ``RING_CAP + 1`` cells (``res >= 8``): its rings could not cover it."""
-    shift = grid_res - res
+    shift = layers.GRID_RES - res
     n = 1 << res
     if n - 1 > RING_CAP:
         raise ValueError(
@@ -84,7 +82,7 @@ def knn_ring(
     min_cell_deg = 180.0 / n
 
     base = points.select(
-        F.col(id_col).alias("pid"),
+        F.col("doc_id").alias("pid"),
         F.shiftright(F.col("gx"), shift).alias("px"),
         F.shiftright(F.col("gy"), shift).alias("py"),
         F.col("lon").alias("plon"),
@@ -93,7 +91,7 @@ def knn_ring(
     pdf = driver_arm.collect_if_small(
         base.select("pid", "plon", "plat"), DRIVER_POINTS_CAP)
     if pdf is not None:
-        return _knn_driver(spark, pdf, k, id_col)
+        return _knn_driver(spark, pdf, k)
     idx = base.select(
         F.col("pid").alias("nid"),
         F.expr(cells.morton_sql("px", "py", res)).alias("cell"),
@@ -176,16 +174,14 @@ def knn_ring(
     for part in resolved_parts[1:]:
         out = out.unionByName(part)
     return out.select(
-        F.col("qid").alias(id_col),
+        F.col("qid").alias("doc_id"),
         F.col("nid").alias("neighbor_id"),
         "rank",
         "dist_sq",
     )
 
 
-def _knn_driver(
-    spark: SparkSession, pdf, k: int, id_col: str
-) -> DataFrame:
+def _knn_driver(spark: SparkSession, pdf, k: int) -> DataFrame:
     """Blocked exact kNN on the driver — the small-corpus arm of
     ``knn_ring``. Distances use the same IEEE double expression as
     ``_dist_sq`` ((a-b)*(a-b) + (c-d)*(c-d), correctly rounded per op, so
@@ -219,20 +215,16 @@ def _knn_driver(
                 )
     return arrow_local_df(
         spark, rows,
-        f"{id_col} long, neighbor_id long, rank int, dist_sq double",
+        "doc_id long, neighbor_id long, rank int, dist_sq double",
     )
 
 
-def distance_join(
-    points: DataFrame,
-    eps: float = 2.0,
-    res: int = 5,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """All pairs within planar-degree distance ``eps``: (id_a, id_b,
-    dist_sq) — the spatial range self-join (DBSCAN's neighborhood step).
+def distance_join(points: DataFrame, eps: float = 2.0) -> DataFrame:
+    """All pairs of the (doc_id, gx, gy, lon, lat) ``points`` within
+    planar-degree distance ``eps``: (id_a, id_b, dist_sq) — the spatial
+    range self-join (DBSCAN's neighborhood step).
 
-    Cell blocking at ``res``: side A probes its cell plus the 8 neighbors,
+    Cell blocking at ``res`` 5: side A probes its cell plus the 8 neighbors,
     side B sits in its home cell — an equi-join on the probe cell, never
     all-pairs. Lossless by construction: ``eps`` must not exceed the cell
     extent (lat extent 180/2^res; asserted), so any pair within eps differs
@@ -240,11 +232,12 @@ def distance_join(
     (dx, dy) offset, so no dedupe shuffle is needed. The oracle is the pure
     quadratic distance predicate — this plan must reproduce the *semantic*,
     not its own blocking."""
+    res = 5
     if eps > 180.0 / (1 << res):
         raise ValueError("distance_join: eps exceeds the blocking cell extent")
     shift = layers.GRID_RES - res
     pts = points.select(
-        F.col(id_col).alias("_id"), "lon", "lat",
+        F.col("doc_id").alias("_id"), "lon", "lat",
         F.shiftright(F.col("gx"), shift).alias("_cx"),
         F.shiftright(F.col("gy"), shift).alias("_cy"),
     )

@@ -281,13 +281,9 @@ def hits_integer(
     )
 
 
-def host_graph(
-    links: DataFrame,
-    src_col: str = "src_host",
-    dst_url_col: str = "dst_url",
-    keep_self: bool = False,
-) -> DataFrame:
-    """Aggregate page-level outlinks into the weighted host->host graph —
+def host_graph(links: DataFrame, keep_self: bool = False) -> DataFrame:
+    """Aggregate page-level (src_host, dst_url) outlinks into the weighted
+    host->host graph —
     the CommonCrawl host/domain-graph product (what ``pagerank_integer``
     and ``hits_integer`` consume): (src_host, dst_host, n_links).
 
@@ -300,8 +296,8 @@ def host_graph(
     smaller than the page-level link table (partial aggregation collapses
     per-partition duplicates before the shuffle). No window, no join."""
     e = links.select(
-        F.col(src_col).alias("src_host"),
-        F.regexp_extract(F.col(dst_url_col), "^https?://([^/]+)", 1).alias(
+        "src_host",
+        F.regexp_extract(F.col("dst_url"), "^https?://([^/]+)", 1).alias(
             "dst_host"
         ),
     )
@@ -521,7 +517,7 @@ def bowtie(
     )
 
 
-def cocitation(edges: DataFrame, min_common: int = 2) -> DataFrame:
+def cocitation(edges: DataFrame) -> DataFrame:
     """Bibliographic-coupling host similarity (the Dean & Henzinger
     "related pages" move, WWW 1998, at host granularity): two hosts are
     related in proportion to their SHARED OUT-TARGETS — an endorsement
@@ -539,8 +535,8 @@ def cocitation(edges: DataFrame, min_common: int = 2) -> DataFrame:
     corpus scale hot universal targets are pruned by a max in-degree cut
     first (the stop-shingle cut of ``dedup.minhash_lsh_dups``: a target
     half the web links to carries no similarity information), keeping the
-    join df-bounded rather than quadratic. ``min_common`` drops the common=1
-    noise floor before the degree joins."""
+    join df-bounded rather than quadratic. Pairs with fewer than 2 common
+    targets (the common=1 noise floor) drop before the degree joins."""
     from pyspark.sql.functions import broadcast
 
     ed = edges.select("src", "dst").distinct()
@@ -556,7 +552,7 @@ def cocitation(edges: DataFrame, min_common: int = 2) -> DataFrame:
             F.col("a.src").alias("host_a"), F.col("b.src").alias("host_b")
         )
         .agg(F.count("*").alias("common"))
-        .filter(F.col("common") >= min_common)
+        .filter(F.col("common") >= 2)
     )
     return (
         pairs.join(

@@ -83,11 +83,13 @@ def _hash_windows_np(wins: list[bytes]) -> np.ndarray:
     return h
 
 
-def frame_sample(payloads: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Fake frame sampler: n_frames evenly spaced 64-byte windows per payload,
+def frame_sample(payloads: DataFrame) -> DataFrame:
+    """Fake frame sampler: 4 evenly spaced 64-byte windows per payload,
     each hashed deterministically (numpy-vectorized Horner; the real thing
     swaps the hash for a codec call — the explode/partition/batch shape is
     identical). Oracle-checked: ``oracle.multimodal_frames_sql``."""
+    n_frames = 4
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads_b = [bytes(p) for p in pdf["payload"]]
@@ -117,12 +119,14 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def feature_extract(payloads: DataFrame, bins: int = 64) -> DataFrame:
-    """Fake feature extraction: per-payload byte histogram (byte % bins),
+def feature_extract(payloads: DataFrame) -> DataFrame:
+    """Fake feature extraction: per-payload byte histogram (byte % 64),
     emitted as (doc_id, bin, n) rows — the plumbing a real embedding
     extractor uses (mapInPandas over binary, one numpy pass per batch; the
     real thing swaps the histogram for a model forward). Fully vectorized:
     one concatenated frombuffer + bincount per Arrow batch."""
+    bins = 64
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             bs = [bytes(p) for p in pdf["payload"]]

@@ -22,15 +22,16 @@ from pyspark.sql import functions as F
 __all__ = ["rect_overlay"]
 
 
-def rect_overlay(a: DataFrame, b: DataFrame, shift: int = 6) -> DataFrame:
+def rect_overlay(a: DataFrame, b: DataFrame) -> DataFrame:
     """Overlay of two half-open integer rect tables.
 
     ``a``: (a_id, ax0, ay0, ax1, ay1); ``b``: (b_id, bx0, by0, bx1, by1).
     Returns (a_id, b_id, ix0, iy0, ix1, iy1, area) for every intersecting
-    pair, each exactly once. ``shift`` sets the cover-cell size (2^shift
-    grid cells); pick it near the median rect size so the per-rect cover
-    stays O(1) and no cell becomes a hot key.
+    pair, each exactly once. Cover cells are 2^6 grid cells (``shift``),
+    near the median rect size, so the per-rect cover stays O(1) and no
+    cell becomes a hot key.
     """
+    shift = 6
     # cover cells via arithmetic shift, not float floor-division: >> by a
     # power of two IS floor division on int64 (negatives included) and never
     # round-trips through double, so coordinates beyond 2^53 keep the exact-

@@ -73,11 +73,10 @@ def _d(x: float) -> str:
 
 
 @functools.cache
-def pip_refine_sql(lon: str = "lon", lat: str = "lat",
-                   polygon_id: str = "polygon_id") -> str:
-    """Exact ray-cast refine as the SQL text of a PURE JVM expression
-    (whole-stage codegen, zero Python on the hot path), built once per
-    argument tuple.
+def pip_refine_sql() -> str:
+    """Exact ray-cast refine of the (lon, lat, polygon_id) columns as the
+    SQL text of a PURE JVM expression (whole-stage codegen, zero Python on
+    the hot path), built once per process.
 
     The polygon layer is small and literal, so the crossing parity unrolls
     into a CASE over polygon_id of XOR-chained (boolean !=) edge tests with
@@ -94,7 +93,7 @@ def pip_refine_sql(lon: str = "lon", lat: str = "lat",
     operators: the Column-builder construction was ~6,300 py4j round trips
     = ~1.1 s of DRIVER time per plan build (profiled via cProfile on
     geo_region_centroids — the same finding as simhash_df's SQL-text
-    rewrite), identical operators either way. Args are column NAMES."""
+    rewrite), identical operators either way."""
     result = "false"
     for p in layers.POLYGONS:
         ring = p["ring"]
@@ -103,12 +102,12 @@ def pip_refine_sql(lon: str = "lon", lat: str = "lat",
         for k in range(nv):
             x1, y1 = float(ring[k][0]), float(ring[k][1])
             x2, y2 = float(ring[(k + 1) % nv][0]), float(ring[(k + 1) % nv][1])
-            straddle = f"(({_d(y1)} > {lat}) != ({_d(y2)} > {lat}))"
-            xint = (f"(({_d(x2 - x1)} * ({lat} - {_d(y1)}) / {_d(y2 - y1)})"
+            straddle = f"(({_d(y1)} > lat) != ({_d(y2)} > lat))"
+            xint = (f"(({_d(x2 - x1)} * (lat - {_d(y1)}) / {_d(y2 - y1)})"
                     f" + {_d(x1)})")
-            cross = f"({straddle} AND ({lon} < {xint}))"
+            cross = f"({straddle} AND (lon < {xint}))"
             parity = cross if parity is None else f"({parity} != {cross})"
-        result = (f"CASE WHEN ({polygon_id} = {p['polygon_id']}L) "
+        result = (f"CASE WHEN (polygon_id = {p['polygon_id']}L) "
                   f"THEN {parity} ELSE {result} END")
     return result
 
@@ -132,7 +131,7 @@ def pip_join(
     cand = pts.join(F.broadcast(cover_df(spark)), "cover_cell", "inner")
     # interior cells short-circuit the exact test (cell ⊆ polygon); only
     # boundary candidates evaluate the ray-cast
-    refined = cand.filter(f"full OR {pip_refine_sql('lon', 'lat', 'polygon_id')}")
+    refined = cand.filter(f"full OR {pip_refine_sql()}")
     return refined.selectExpr(*keys, "cell as cell_id", "polygon_id", "admin_level")
 
 

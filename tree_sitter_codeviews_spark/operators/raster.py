@@ -47,10 +47,10 @@ def rasterize_polygons(spark: SparkSession, res: int = 7) -> DataFrame:
     )
 
 
-def overlay_stats(spark: SparkSession, res: int = 7) -> DataFrame:
+def overlay_stats(spark: SparkSession) -> DataFrame:
     """Pairwise polygon-overlay statistics via raster intersection:
     (polygon_a, polygon_b, n_shared_cells, overlap_deg2) for every polygon
-    pair sharing at least one res-cell (center-inside semantics, so a shared
+    pair sharing at least one res-7 cell (center-inside semantics, so a shared
     cell is a witness point in BOTH interiors — the pair provably overlaps).
     overlap_deg2 = shared-cell count x cell area: the raster-GIS overlay
     estimate, exact-arithmetic reproducible against the SQL oracle.
@@ -59,6 +59,7 @@ def overlay_stats(spark: SparkSession, res: int = 7) -> DataFrame:
     bounded by raster size (grid x polygons), never by the data tables; the
     same plan runs the 10^12-page case unchanged because no page row is
     involved at all."""
+    res = 7
     r = rasterize_polygons(spark, res=res).select("cell_id", "polygon_id")
     a = r.select("cell_id", F.col("polygon_id").alias("polygon_a"))
     b = r.select("cell_id", F.col("polygon_id").alias("polygon_b"))

@@ -46,19 +46,18 @@ def segment_crossing_join(
     probes: DataFrame,
     lines: DataFrame,
     id_cols: list[str],
-    line_id: str = "line_id",
-    shift: int = 6,
 ) -> DataFrame:
     """Exact crossing join: ``probes`` (short segments: id_cols +
     ax0/ay0/ax1/ay1) x ``lines`` (a dim of long segments: line_id +
     bx0/by0/bx1/by1). Returns distinct (id_cols..., line_id) for every
     intersecting pair (closed-segment semantics).
 
-    ``shift`` sets the cover-cell size (2^shift grid px). Probe bboxes
+    Cover cells are 2^6 grid px (``shift``). Probe bboxes
     should be O(cell)-sized (split longer probes upstream — the DDA
     pattern in ``geo_route_cells``); lines may be arbitrarily long thanks
     to the corridor cover.
     """
+    shift = 6
     cheb = F.greatest(
         F.abs(F.col("bx1") - F.col("bx0")),
         F.abs(F.col("by1") - F.col("by0")),
@@ -72,14 +71,14 @@ def segment_crossing_join(
     ch = ln.withColumn(
         "c", F.explode(F.sequence(F.lit(0), F.col("k_chunks") - 1))
     ).select(
-        line_id, "bx0", "by0", "bx1", "by1",
+        "line_id", "bx0", "by0", "bx1", "by1",
         F.expr("bx0 + ((bx1 - bx0) * c) div k_chunks").alias("cx0"),
         F.expr("by0 + ((by1 - by0) * c) div k_chunks").alias("cy0"),
         F.expr("bx0 + ((bx1 - bx0) * (c + 1)) div k_chunks").alias("cx1"),
         F.expr("by0 + ((by1 - by0) * (c + 1)) div k_chunks").alias("cy1"),
     )
     line_cover = ch.select(
-        line_id, "bx0", "by0", "bx1", "by1",
+        "line_id", "bx0", "by0", "bx1", "by1",
         F.explode(
             F.sequence(
                 F.shiftright(F.least("cx0", "cx1") - F.lit(1), shift),
@@ -89,7 +88,7 @@ def segment_crossing_join(
         F.least("cy0", "cy1").alias("lo_y"),
         F.greatest("cy0", "cy1").alias("hi_y"),
     ).select(
-        line_id, "bx0", "by0", "bx1", "by1", "ccx",
+        "line_id", "bx0", "by0", "bx1", "by1", "ccx",
         F.explode(
             F.sequence(
                 F.shiftright(F.col("lo_y") - F.lit(1), shift),
@@ -122,11 +121,33 @@ def segment_crossing_join(
         .withColumns({k: F.expr(v) for k, v in d.items()})
         .filter(F.expr(geometry.seg_intersect_pred_sql()))
     )
-    return refined.select(*id_cols, line_id).distinct()
+    return refined.select(*id_cols, "line_id").distinct()
 
 
-def tile_diameter(pts: DataFrame, shift: int = 5) -> DataFrame:
-    """Per-tile point-set diameter: for each 2^shift x 2^shift grid tile,
+# Side of the per-tile statistics' tiles: 2^TILE_SHIFT grid px.
+TILE_SHIFT = 5
+
+
+def _per_tile(pts: DataFrame, fn, schema: str) -> DataFrame:
+    """``applyInPandas(fn, schema)`` over each 2^TILE_SHIFT tile's
+    DISTINCT (tx, ty, gx, gy) points of ``pts``: the distinct bounds every
+    group by the tile's pixel count (<= 2^(2*TILE_SHIFT) = 1024)."""
+    d = pts.select(
+        F.shiftright("gx", TILE_SHIFT).alias("tx"),
+        F.shiftright("gy", TILE_SHIFT).alias("ty"),
+        "gx", "gy",
+    ).distinct()
+    # pin the grouped-map parallelism: the distinct tile-point table is
+    # KB-sized, so AQE coalesces it to one partition and every tile's
+    # kernel runs serially through a single Python worker (profiled: 1
+    # task, ~1s run, 31ms JVM cpu). An explicit core-count repartition on
+    # the group key keeps the pandas stage parallel; groupBy reuses it.
+    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "tx", "ty")
+    return d.groupBy("tx", "ty").applyInPandas(fn, schema)
+
+
+def tile_diameter(pts: DataFrame) -> DataFrame:
+    """Per-tile point-set diameter: for each 2^TILE_SHIFT x 2^TILE_SHIFT grid tile,
     the number of DISTINCT point locations and the exact max squared
     pairwise distance (int64) — computed per group as convex hull
     (monotone chain, exact python-int cross products) + brute force over
@@ -134,16 +155,10 @@ def tile_diameter(pts: DataFrame, shift: int = 5) -> DataFrame:
     O(n^2) quadratic self-join.
 
     Scale shape: one distinct on the (tile, point) key bounds every group
-    by the tile's pixel count (<= 2^(2*shift)); the grouped-map batch is
+    by the tile's pixel count (``_per_tile``); the grouped-map batch is
     tile-sized, never corpus-sized. Skewed hot cells collapse under the
     distinct (identical coordinates are one location).
     """
-    d = pts.select(
-        F.shiftright("gx", shift).alias("tx"),
-        F.shiftright("gy", shift).alias("ty"),
-        "gx", "gy",
-    ).distinct()
-
     def _diam(pdf: pd.DataFrame) -> pd.DataFrame:
         xs = pdf["gx"].to_numpy(dtype=np.int64)
         ys = pdf["gy"].to_numpy(dtype=np.int64)
@@ -154,18 +169,10 @@ def tile_diameter(pts: DataFrame, shift: int = 5) -> DataFrame:
             "diam_sq": [geometry.diameter_sq_np(xs, ys)],
         })
 
-    # pin the grouped-map parallelism: the distinct tile-point table is
-    # KB-sized, so AQE coalesces it to one partition and every tile's hull
-    # runs serially through a single Python worker (profiled: 1 task,
-    # ~1s run, 31ms JVM cpu). An explicit core-count repartition on the
-    # group key keeps the pandas stage parallel; groupBy reuses it.
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "tx", "ty")
-    return d.groupBy("tx", "ty").applyInPandas(
-        _diam, "tx long, ty long, n_pts long, diam_sq long"
-    )
+    return _per_tile(pts, _diam, "tx long, ty long, n_pts long, diam_sq long")
 
 
-def rasterize_segments(lines: DataFrame, line_id: str = "line_id") -> DataFrame:
+def rasterize_segments(lines: DataFrame) -> DataFrame:
     """Exact-integer DDA rasterization of a segment dim: one distinct
     (line_id, px, py) row per integer sample point — the same truncated-
     division sampling rule as ``geo_route_cells`` (xt = x0 + (dx*t) div L,
@@ -181,12 +188,12 @@ def rasterize_segments(lines: DataFrame, line_id: str = "line_id") -> DataFrame:
     )
     return (
         ln.select(
-            line_id,
+            "line_id",
             F.explode(F.sequence(F.lit(0), F.col("L"))).alias("t"),
             "bx0", "by0", "bx1", "by1", "L",
         )
         .select(
-            line_id,
+            "line_id",
             F.expr("bx0 + ((bx1 - bx0) * t) div L").alias("px"),
             F.expr("by0 + ((by1 - by0) * t) div L").alias("py"),
         )
@@ -198,16 +205,14 @@ def snap_to_lines(
     probes: DataFrame,
     raster: DataFrame,
     id_cols: list[str],
-    radius: int = 16,
-    line_id: str = "line_id",
 ) -> DataFrame:
     """Map-matching: snap each probe point (id_cols + ex/ey) to the nearest
-    rasterized line point within euclidean ``radius`` (dist_sq <= radius^2);
-    probes with no line in range are dropped. Deterministic argmin via the
-    repo's integer packing idiom: pack = dist_sq * 1024 + line_id (min
-    dist_sq first, then min line_id on ties) — requires line_id < 1024 and
-    radius <= 22 (dist_sq < 2^9 keeps the pack < 2^19, far inside int64;
-    the engine asserts the radius bound, callers own the line_id bound).
+    rasterized line point within euclidean ``radius`` 16 px (dist_sq <=
+    radius^2); probes with no line in range are dropped. Deterministic
+    argmin via the repo's integer packing idiom: pack = dist_sq * 1024 +
+    line_id (min dist_sq first, then min line_id on ties) — requires
+    line_id < 1024 (callers own that bound); dist_sq <= 256 keeps the pack
+    far inside int64.
 
     Scale shape: the raster dim explodes to its 3x3 neighbor cells at
     shift = floor(log2(radius)) + 1 BEFORE the join (cells >= radius px, so
@@ -216,17 +221,16 @@ def snap_to_lines(
     explodes and never shuffles before the broadcast equi-join; the only
     probe-keyed aggregate is the final argmin.
     """
-    if radius > 22:
-        raise ValueError("snap_to_lines: radius > 22 breaks the pack bound")
+    radius = 16
     # minimal cell size 2^shift >= radius: any point within euclidean
     # radius of a probe is at most 1 cell away on each axis, and the
     # smallest admissible cell minimizes candidates per probe (the ring
     # covers (2*2^shift + 2^shift)px; halving an oversized cell cuts the
     # candidate area ~4x while the dim-side ring stays 3x3)
-    shift = (max(radius, 1) - 1).bit_length()
+    shift = (radius - 1).bit_length()
     ring = (
         raster.select(
-            line_id, "px", "py",
+            "line_id", "px", "py",
             F.explode(
                 F.sequence(
                     F.shiftright("px", shift) - 1, F.shiftright("px", shift) + 1
@@ -234,7 +238,7 @@ def snap_to_lines(
             ).alias("cx"),
         )
         .select(
-            line_id, "px", "py", "cx",
+            "line_id", "px", "py", "cx",
             F.explode(
                 F.sequence(
                     F.shiftright("py", shift) - 1, F.shiftright("py", shift) + 1
@@ -259,16 +263,16 @@ def snap_to_lines(
         cand.withColumn("d2", d2)
         .filter(F.col("d2") <= radius * radius)
         .groupBy(*id_cols)
-        .agg(F.min(F.col("d2") * 1024 + F.col(line_id)).alias("pack"))
+        .agg(F.min(F.col("d2") * 1024 + F.col("line_id")).alias("pack"))
         .select(
             *id_cols,
-            (F.col("pack") % 1024).alias(line_id),
+            (F.col("pack") % 1024).alias("line_id"),
             F.expr("pack div 1024").alias("snap_dist_sq"),
         )
     )
 
 
-def tile_closest_pair(pts: DataFrame, shift: int = 5) -> DataFrame:
+def tile_closest_pair(pts: DataFrame) -> DataFrame:
     """Per-tile CLOSEST pair (exact min squared distance over distinct
     locations) — the crowding/duplicate-location stat complementing
     ``tile_diameter``'s extent. Tiles with a single distinct location are
@@ -276,17 +280,11 @@ def tile_closest_pair(pts: DataFrame, shift: int = 5) -> DataFrame:
 
     Engine: vectorized int64 numpy over each tile's distinct points in a
     grouped Arrow batch. The distinct on (tile, point) bounds every group
-    by the tile's pixel count (<= 2^(2*shift) = 1024 at shift 5), so the
+    by the tile's pixel count (``_per_tile``), so the
     per-group pair scan is CONSTANT-bounded however large the corpus —
     the grid cap, not an algorithmic trick, is the scale argument (the
     oracle runs the same quadratic as SQL, making the pairing a
     same-math/different-engine check rather than smart-vs-brute)."""
-    d = pts.select(
-        F.shiftright("gx", shift).alias("tx"),
-        F.shiftright("gy", shift).alias("ty"),
-        "gx", "gy",
-    ).distinct()
-
     def _closest(pdf: pd.DataFrame) -> pd.DataFrame:
         xs = pdf["gx"].to_numpy(dtype=np.int64)
         ys = pdf["gy"].to_numpy(dtype=np.int64)
@@ -306,9 +304,4 @@ def tile_closest_pair(pts: DataFrame, shift: int = 5) -> DataFrame:
             "min_d2": [int(d2.min())],
         })
 
-    # same grouped-map parallelism pin as tile_diameter (AQE would
-    # coalesce the KB-sized tile-point shuffle to one Python worker)
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "tx", "ty")
-    return d.groupBy("tx", "ty").applyInPandas(
-        _closest, "tx long, ty long, n_pts long, min_d2 long"
-    )
+    return _per_tile(pts, _closest, "tx long, ty long, n_pts long, min_d2 long")

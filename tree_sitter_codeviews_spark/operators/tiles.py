@@ -42,7 +42,6 @@ def tile_counts(
     res_lo: int = 7,
     res_hi: int = 10,
     grid_res: int = 10,
-    count_col: str = "n_docs",
 ) -> DataFrame:
     """points(gx, gy at grid_res) -> (res, cell_id, n_docs) for res_lo..res_hi.
 
@@ -58,8 +57,7 @@ def tile_counts(
         .agg(F.expr("count(*) as n"))
     )
     if res_lo == res_hi:  # the finest aggregate is the whole answer
-        return agg.selectExpr(f"{res_hi} as res", f"{levels[0]} as cell_id",
-                              f"n as {count_col}")
+        return agg.selectExpr(f"{res_hi} as res", f"{levels[0]} as cell_id", "n as n_docs")
     finest = agg.selectExpr(*(f"shiftright({levels[0]}, {2 * i}) as {c}"
                               for i, c in enumerate(levels)), "n")
     res = " ".join(f"WHEN grouping({c}) = 0 THEN {res_hi - i}"
@@ -67,22 +65,22 @@ def tile_counts(
     return finest.groupingSets([[c] for c in levels], *levels).agg(
         F.expr(f"CASE {res} END as res"),
         F.expr(f"coalesce({', '.join(levels)}) as cell_id"),
-        F.expr(f"sum(n) as {count_col}"),
-    ).select("res", "cell_id", count_col)
+        F.expr("sum(n) as n_docs"),
+    ).select("res", "cell_id", "n_docs")
 
 
-def compact_tiles(tiles_at_res: DataFrame, res: int, min_res: int = 0) -> DataFrame:
+def compact_tiles(tiles_at_res: DataFrame, res: int) -> DataFrame:
     """Fold complete 4-sibling sets into parents, recursively.
 
     Input: (cell_id, <measure cols...>) at a single ``res``. Output:
     (res, cell_id, measures...) where measures of merged children are summed.
-    Iterative driver loop, converges in <= res - min_res rounds (delta-counted,
+    Iterative driver loop, converges in <= res rounds (delta-counted,
     cf. SURVEY.md §4.1 fixpoint discipline)."""
     measures = [c for c in tiles_at_res.columns if c != "cell_id"]
     out_parts: list[DataFrame] = []
     cur = tiles_at_res.withColumn("res", F.lit(res))
     r = res
-    while r > min_res:
+    while r > 0:
         parents = (
             cur.select(cells.parent_col(F.col("cell_id")).alias("p"), "cell_id", *measures)
             .groupBy("p")
@@ -107,15 +105,11 @@ def compact_tiles(tiles_at_res: DataFrame, res: int, min_res: int = 0) -> DataFr
     return reduce(lambda a, b: a.unionByName(b), out_parts)
 
 
-def tile_smooth(
-    points: DataFrame,
-    res: int = 7,
-    grid_res: int = 10,
-) -> DataFrame:
+def tile_smooth(points: DataFrame, grid_res: int = 10) -> DataFrame:
     """Raster 3x3 box convolution over the per-tile doc counts — the
     focal-statistics / heatmap-smoothing step of a raster GIS stack.
 
-    Engine shape: the res-``res`` count raster is built once (one shuffle),
+    Engine shape: the res-7 count raster is built once (one shuffle),
     then each cell EXPLODES its 9 neighbor contributions (narrow, x9 on the
     small raster — never on the points) and the convolution is a second
     groupBy on the target cell. Absent neighbors contribute 0; output keeps
@@ -125,6 +119,7 @@ def tile_smooth(
     """
     from .. import cells
 
+    res = 7
     shift = grid_res - res
     n = 1 << res
     base = (

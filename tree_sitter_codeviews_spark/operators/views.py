@@ -2,8 +2,8 @@
 
 The reference materializes per-document multigraphs and transforms them
 imperatively; the engine represents a graph as two DataFrames —
-``nodes(graph_key..., node_id, label, ...)`` and
-``edges(graph_key..., src, dst, edge_type)`` — and each transform is a join
+``nodes(graph_id, node_id, label, node_type, ...)`` and
+``edges(graph_id, src, dst, edge_type)`` — and each transform is a join
 shape (cf. SURVEY.md §2.2 rows "Collapse"/"Blacklist minimize" and §2.3 row
 "Combined-view union"):
 
@@ -31,11 +31,11 @@ from pyspark.sql import functions as F
 def combine_views(
     nodes_views: list[DataFrame],
     edges_views: list[DataFrame],
-    node_key: tuple[str, ...] = ("graph_id", "node_id"),
 ) -> tuple[DataFrame, DataFrame]:
     from functools import reduce
 
-    nodes = reduce(lambda a, b: a.unionByName(b), nodes_views).dropDuplicates(list(node_key))
+    nodes = reduce(lambda a, b: a.unionByName(b), nodes_views).dropDuplicates(
+        ["graph_id", "node_id"])
     edges = reduce(lambda a, b: a.unionByName(b), edges_views)
     return nodes, edges
 
@@ -43,40 +43,38 @@ def combine_views(
 def collapse_nodes(
     nodes: DataFrame,
     edges: DataFrame,
-    graph_col: str = "graph_id",
-    label_col: str = "label",
 ) -> tuple[DataFrame, DataFrame]:
     """Merge same-label nodes per graph into the min node_id; rewrite edges.
 
     Self-loops created by the merge are kept (matching the reference, which
     redirects edges without filtering loops, ``AST.py:60-80``)."""
-    mapping = nodes.groupBy(graph_col, label_col).agg(
+    mapping = nodes.groupBy("graph_id", "label").agg(
         F.min("node_id").alias("rep_id")
     )
     new_nodes = (
-        nodes.join(mapping, [graph_col, label_col])
-        .select(graph_col, F.col("rep_id").alias("node_id"), label_col)
-        .dropDuplicates([graph_col, "node_id"])
+        nodes.join(mapping, ["graph_id", "label"])
+        .select("graph_id", F.col("rep_id").alias("node_id"), "label")
+        .dropDuplicates(["graph_id", "node_id"])
     )
-    node_map = nodes.join(mapping, [graph_col, label_col]).select(
-        graph_col, "node_id", "rep_id"
+    node_map = nodes.join(mapping, ["graph_id", "label"]).select(
+        "graph_id", "node_id", "rep_id"
     )
     src_map = node_map.select(
-        F.col(graph_col), F.col("node_id").alias("src"), F.col("rep_id").alias("new_src")
+        "graph_id", F.col("node_id").alias("src"), F.col("rep_id").alias("new_src")
     )
     dst_map = node_map.select(
-        F.col(graph_col), F.col("node_id").alias("dst"), F.col("rep_id").alias("new_dst")
+        "graph_id", F.col("node_id").alias("dst"), F.col("rep_id").alias("new_dst")
     )
     new_edges = (
-        edges.join(src_map, [graph_col, "src"])
-        .join(dst_map, [graph_col, "dst"])
+        edges.join(src_map, ["graph_id", "src"])
+        .join(dst_map, ["graph_id", "dst"])
         .select(
-            graph_col,
+            "graph_id",
             F.col("new_src").alias("src"),
             F.col("new_dst").alias("dst"),
             "edge_type",
         )
-        .dropDuplicates([graph_col, "src", "dst", "edge_type"])
+        .dropDuplicates(["graph_id", "src", "dst", "edge_type"])
     )
     return new_nodes, new_edges
 
@@ -85,34 +83,32 @@ def minimize_nodes(
     nodes: DataFrame,
     edges: DataFrame,
     blacklist: list[str],
-    graph_col: str = "graph_id",
-    type_col: str = "node_type",
 ) -> tuple[DataFrame, DataFrame]:
     """Drop blacklisted-type nodes; rewire pred→succ around each (one hop)."""
-    dead = nodes.filter(F.col(type_col).isin(blacklist)).select(
-        graph_col, F.col("node_id").alias("mid")
+    dead = nodes.filter(F.col("node_type").isin(blacklist)).select(
+        "graph_id", F.col("node_id").alias("mid")
     )
     keep_nodes = nodes.join(
-        dead.withColumnRenamed("mid", "node_id"), [graph_col, "node_id"], "left_anti"
+        dead.withColumnRenamed("mid", "node_id"), ["graph_id", "node_id"], "left_anti"
     )
     into_dead = edges.join(
-        dead, (edges[graph_col] == dead[graph_col]) & (edges["dst"] == dead["mid"])
-    ).select(edges[graph_col].alias(graph_col), "src", F.col("mid"), "edge_type")
+        dead, (edges["graph_id"] == dead["graph_id"]) & (edges["dst"] == dead["mid"])
+    ).select(edges["graph_id"].alias("graph_id"), "src", F.col("mid"), "edge_type")
     out_of_dead = edges.join(
-        dead, (edges[graph_col] == dead[graph_col]) & (edges["src"] == dead["mid"])
-    ).select(edges[graph_col].alias(graph_col), F.col("mid").alias("mid2"), "dst")
+        dead, (edges["graph_id"] == dead["graph_id"]) & (edges["src"] == dead["mid"])
+    ).select(edges["graph_id"].alias("graph_id"), F.col("mid").alias("mid2"), "dst")
     bypass = into_dead.join(
         out_of_dead,
-        (into_dead[graph_col] == out_of_dead[graph_col])
+        (into_dead["graph_id"] == out_of_dead["graph_id"])
         & (into_dead["mid"] == out_of_dead["mid2"]),
-    ).select(into_dead[graph_col].alias(graph_col), "src", "dst", "edge_type")
+    ).select(into_dead["graph_id"].alias("graph_id"), "src", "dst", "edge_type")
     dead_src = dead.withColumnRenamed("mid", "src")
     dead_dst = dead.withColumnRenamed("mid", "dst")
     kept_edges = (
-        edges.join(dead_src, [graph_col, "src"], "left_anti")
-        .join(dead_dst, [graph_col, "dst"], "left_anti")
+        edges.join(dead_src, ["graph_id", "src"], "left_anti")
+        .join(dead_dst, ["graph_id", "dst"], "left_anti")
     )
     new_edges = kept_edges.unionByName(bypass).dropDuplicates(
-        [graph_col, "src", "dst", "edge_type"]
+        ["graph_id", "src", "dst", "edge_type"]
     )
     return keep_nodes, new_edges

@@ -46,10 +46,8 @@ _ENTITIES = [
 ]
 
 
-def html_extract(
-    pages: DataFrame, html_col: str = "html", keep: tuple = ()
-) -> DataFrame:
-    """HTML -> text extraction (trafilatura/jusText-lite): drop
+def html_extract(pages: DataFrame, keep: tuple = ()) -> DataFrame:
+    """``html`` -> text extraction (trafilatura/jusText-lite): drop
     script/style subtrees, pull the <title>, strip remaining tags, decode
     the six entities that dominate web text, collapse whitespace.
 
@@ -65,7 +63,7 @@ def html_extract(
     carries extra input columns through (e.g. the fetch URI) so callers
     never need a re-attach join against the pre-extraction table.
     """
-    u = F.regexp_replace(F.col(html_col), "(?s)<script[^>]*>.*?</script>", " ")
+    u = F.regexp_replace(F.col("html"), "(?s)<script[^>]*>.*?</script>", " ")
     u = F.regexp_replace(u, "(?s)<style[^>]*>.*?</style>", " ")
     title = F.regexp_extract(u, "(?s)<title>(.*?)</title>", 1)
     body = F.regexp_replace(u, "<[^>]+>", " ")
@@ -82,7 +80,7 @@ def html_extract(
     )
 
 
-def warc_split(blobs: DataFrame, blob_col: str = "payload") -> DataFrame:
+def warc_split(blobs: DataFrame) -> DataFrame:
     """Split concatenated WARC-style crawl chunks into records.
 
     Input rows are (blob_id, payload) where payload is a concatenation of
@@ -99,7 +97,7 @@ def warc_split(blobs: DataFrame, blob_col: str = "payload") -> DataFrame:
     """
     recs = blobs.select(
         "blob_id",
-        F.posexplode(F.split(F.col(blob_col), "WARC/1\\.0\\n")).alias(
+        F.posexplode(F.split(F.col("payload"), "WARC/1\\.0\\n")).alias(
             "pos", "rec"
         ),
     ).filter(F.col("rec") != "")
@@ -119,9 +117,7 @@ def warc_split(blobs: DataFrame, blob_col: str = "payload") -> DataFrame:
     )
 
 
-def domain_stats(
-    pages: DataFrame, blocklist: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def domain_stats(pages: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Per-registered-host curation stats + blocklist flag (the UT1/URL-
     blocklist shape every crawl pipeline applies before content work).
 
@@ -135,9 +131,7 @@ def domain_stats(
     boundedness argument as ``url_canonical_dedup``), then one broadcast
     left join for the flag. No window, no skew funnel.
     """
-    canon = pages.select(
-        canonicalize_url(F.col(url_col)).alias("canonical_url")
-    )
+    canon = pages.select(canonicalize_url(F.col("url")).alias("canonical_url"))
     hosts = canon.select(
         F.regexp_extract(F.col("canonical_url"), "^https?://([^/]+)", 1).alias(
             "host"
@@ -162,9 +156,7 @@ def domain_stats(
     )
 
 
-def robots_filter(
-    pages: DataFrame, rules: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def robots_filter(pages: DataFrame, rules: DataFrame) -> DataFrame:
     """Robots/blocklist PATH-PREFIX filtering: drop any page whose
     canonical URL's host has a rule whose ``path_prefix`` prefixes the
     page's path (the robots.txt ``Disallow:`` semantics, also the shape of
@@ -178,7 +170,7 @@ def robots_filter(
     pages (doc_id, canonical_url, host, path).
     """
     canon = pages.select(
-        "doc_id", canonicalize_url(F.col(url_col)).alias("canonical_url")
+        "doc_id", canonicalize_url(F.col("url")).alias("canonical_url")
     ).select(
         "doc_id",
         "canonical_url",
@@ -196,17 +188,12 @@ def robots_filter(
     return canon.join(r, cond, "left_anti")
 
 
-def outlink_extract(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    with_src_host: bool = False,
-) -> DataFrame:
+def outlink_extract(pages: DataFrame, with_src_host: bool = False) -> DataFrame:
     """Outlink + anchor-text extraction: the web-graph edge source every
     crawl pipeline derives (CommonCrawl publishes exactly this as its
     host/domain graph inputs; anchor text is a classic relevance signal).
 
-    Per page: pull every ``<a ... href="...">...</a>`` element with
+    Per page (``url``, ``html``): pull every ``<a ... href="...">...</a>`` element with
     ``regexp_extract_all``, posexplode for a stable in-page link index,
     then per element extract the href and the TAG-STRIPPED, whitespace-
     collapsed anchor text (nested ``<b>``/``<i>`` markup inside anchors is
@@ -227,9 +214,9 @@ def outlink_extract(
     # 'HTTPS://HOST' variants — a lowercase-only pattern yields base=''
     # and root-relative hrefs would "resolve" to bare '/path' strings),
     # normalized to lowercase for stable host keys downstream
-    base = F.lower(F.regexp_extract(F.col(url_col), "(?i)^https?://[^/]+", 0))
+    base = F.lower(F.regexp_extract(F.col("url"), "(?i)^https?://[^/]+", 0))
     elems = F.regexp_extract_all(
-        F.col(html_col),
+        F.col("html"),
         F.lit('(?s)<a [^>]*href="[^"]*"[^>]*>.*?</a>'),
         F.lit(0),
     )
@@ -285,9 +272,7 @@ def outlink_extract(
     )
 
 
-def snapshot_diff(
-    old: DataFrame, new: DataFrame, key: str = "url", fp_col: str = "fp"
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Crawl snapshot diffing: classify every URL across two crawl
     snapshots as added / removed / changed / unchanged — the re-crawl
     scheduling + incremental-corpus primitive (only 'added'+'changed'
@@ -298,10 +283,10 @@ def snapshot_diff(
     CASE over fingerprint presence/equality. At 100 TB both sides are
     url-keyed page tables of the same corpus — the join keys are unique
     per side (canonical urls), so there is no fan-out and no skew funnel;
-    AQE handles residual partition imbalance. Returns
-    (key, status, old_fp, new_fp)."""
-    o = old.select(F.col(key).alias("k"), F.col(fp_col).alias("old_fp"))
-    n = new.select(F.col(key).alias("k"), F.col(fp_col).alias("new_fp"))
+    AQE handles residual partition imbalance. Both sides carry (url, fp);
+    returns (url, status, old_fp, new_fp)."""
+    o = old.select(F.col("url").alias("k"), F.col("fp").alias("old_fp"))
+    n = new.select(F.col("url").alias("k"), F.col("fp").alias("new_fp"))
     st = (
         F.when(F.col("old_fp").isNull(), F.lit("added"))
         .when(F.col("new_fp").isNull(), F.lit("removed"))
@@ -309,15 +294,11 @@ def snapshot_diff(
         .otherwise(F.lit("changed"))
     )
     return o.join(n, "k", "full_outer").select(
-        F.col("k").alias(key), st.alias("status"), "old_fp", "new_fp"
+        F.col("k").alias("url"), st.alias("status"), "old_fp", "new_fp"
     )
 
 
-def anchor_text_index(
-    links: DataFrame,
-    dst_col: str = "dst_url",
-    anchor_col: str = "anchor_text",
-) -> DataFrame:
+def anchor_text_index(links: DataFrame) -> DataFrame:
     """Anchor-text aggregation per link target — the classic anchor index
     (how OTHER pages describe a URL: a relevance/description signal search
     and corpus-labeling pipelines both consume): per dst_url the inbound
@@ -332,10 +313,7 @@ def anchor_text_index(
     join. At crawl scale the hot keys are mega-linked URLs; they collapse
     to one row per distinct anchor in pass 1, bounding pass-2 fan-in by
     anchor vocabulary, not inbound degree."""
-    per = links.groupBy(
-        F.col(dst_col).alias("dst_url"),
-        F.col(anchor_col).alias("anchor_text"),
-    ).agg(F.count("*").alias("cnt"))
+    per = links.groupBy("dst_url", "anchor_text").agg(F.count("*").alias("cnt"))
     return per.groupBy("dst_url").agg(
         F.sum("cnt").alias("n_links"),
         F.count("*").alias("n_anchors"),
@@ -346,14 +324,7 @@ def anchor_text_index(
     )
 
 
-def crawl_schedule(
-    frontier: DataFrame,
-    budget: int = 5,
-    base_delay_ms: int = 1000,
-    url_col: str = "url",
-    priority_col: str = "priority",
-    delay_col: str = "delay_ms",
-) -> DataFrame:
+def crawl_schedule(frontier: DataFrame, budget: int = 5) -> DataFrame:
     """Politeness-aware crawl-frontier scheduling: per host, keep the top
     ``budget`` URLs by (priority desc, url asc) and assign each a fetch
     offset on the host's own clock — ``(rank - 1) * delay`` — so no host
@@ -363,7 +334,7 @@ def crawl_schedule(
 
     ``frontier`` carries (url, priority) and optionally a per-host
     ``delay_ms`` (e.g. from robots.txt ``Crawl-delay``); missing delays
-    fall back to ``base_delay_ms``. The host is derived from the URL
+    fall back to 1000 ms. The host is derived from the URL
     map-side — no join against a page table.
 
     One window per host (rank) + a filter: the shuffle is keyed by host,
@@ -371,7 +342,7 @@ def crawl_schedule(
     ``n_hosts * budget`` regardless of frontier size — the frontier can
     be billions of URLs; the schedule is dim-sized. Skewed mega-hosts
     cost one partition's top-k, not a cross-host straggler."""
-    host = F.regexp_extract(F.col(url_col), "^https?://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), "^https?://([^/]+)", 1)
     # the delay is a property of the HOST, not of the frontier row: rows
     # of one host can carry different delay_ms (stale robots snapshots,
     # per-path hints), and using each row's own value lets a low-delay row
@@ -380,12 +351,12 @@ def crawl_schedule(
     # choice) over the same host window the rank already shuffles on —
     # no extra exchange.
     delay_row = (
-        F.coalesce(F.col(delay_col), F.lit(base_delay_ms))
-        if delay_col in frontier.columns
-        else F.lit(base_delay_ms)
+        F.coalesce(F.col("delay_ms"), F.lit(1000))
+        if "delay_ms" in frontier.columns
+        else F.lit(1000)
     )
     w = Window.partitionBy("host").orderBy(
-        F.col(priority_col).desc(), F.col(url_col).asc()
+        F.col("priority").desc(), F.col("url").asc()
     )
     whost = Window.partitionBy("host")
     return (
@@ -396,41 +367,36 @@ def crawl_schedule(
         .select(
             "host",
             F.col("rnk").cast("int").alias("rnk"),
-            F.col(url_col).alias("url"),
-            F.col(priority_col).cast("long").alias("priority"),
+            "url",
+            F.col("priority").cast("long").alias("priority"),
             ((F.col("rnk") - 1) * F.col("host_delay")).cast("long").alias("fetch_offset_ms"),
         )
     )
 
 
-def recrawl_priority(
-    fetches: DataFrame,
-    key_col: str = "url",
-    snap_col: str = "snap",
-    fp_col: str = "fp",
-) -> DataFrame:
+def recrawl_priority(fetches: DataFrame) -> DataFrame:
     """Change-rate estimation across k crawl snapshots — the freshness
     model behind recrawl scheduling (Cho & Garcia-Molina 2003's change-
     frequency estimator, reduced to its integer core): per URL, compare
-    each fetch's fingerprint to the previous snapshot's via ``lag`` and
-    report observed transitions, changes, and the change rate in exact
-    integer ppm (``changes * 1e6 div transitions``). URLs that change
-    every snapshot rank first for re-crawl; never-changed URLs decay to
-    the bottom.
+    each (url, snap, fp) fetch's fingerprint to the previous snapshot's
+    via ``lag`` and report observed transitions, changes, and the change
+    rate in exact integer ppm (``changes * 1e6 div transitions``). URLs
+    that change every snapshot rank first for re-crawl; never-changed
+    URLs decay to the bottom.
 
     One window (lag over snap within url) + one aggregate — both keyed
     by url, one shuffle reused across the two (the window's hash
     partitioning satisfies the aggregate's distribution). At crawl scale
     k is small (snapshot count), so rows-per-key is bounded and there is
     no skew funnel."""
-    w = Window.partitionBy(key_col).orderBy(F.col(snap_col).asc())
-    lagged = fetches.withColumn("prev_fp", F.lag(fp_col).over(w))
+    w = Window.partitionBy("url").orderBy(F.col("snap").asc())
+    lagged = fetches.withColumn("prev_fp", F.lag("fp").over(w))
     chg = F.when(
         F.col("prev_fp").isNull(), F.lit(None).cast("int")
-    ).otherwise((F.col("prev_fp") != F.col(fp_col)).cast("int"))
+    ).otherwise((F.col("prev_fp") != F.col("fp")).cast("int"))
     return (
         lagged.withColumn("chg", chg)
-        .groupBy(F.col(key_col).alias("url"))
+        .groupBy("url")
         .agg(
             F.count("*").cast("long").alias("n_fetches"),
             F.count("chg").cast("long").alias("n_transitions"),
@@ -446,16 +412,11 @@ def recrawl_priority(
     )
 
 
-def host_templates(
-    pages: DataFrame,
-    min_share_ppm: int = 500_000,
-    min_pages: int = 2,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def host_templates(pages: DataFrame) -> DataFrame:
     """Host-scoped template (boilerplate) detection — the per-domain
-    paragraph-dedup CCNet applies before global dedup: a sentence that
-    appears on at least ``min_share_ppm``/1e6 of a host's pages is chrome
+    paragraph-dedup CCNet applies before global dedup: a sentence of the
+    (url, text) ``pages`` that appears on at least half of a host's pages
+    (hosts of 2 pages or more) is chrome
     (nav, footer, cookie banner), not content. Global df-cuts miss this
     (a template is rare globally but universal within its host).
 
@@ -469,26 +430,23 @@ def host_templates(
     sized — broadcastable). The per-(host, hash) aggregate collapses
     template repetition before the rollup, so hot template sentences on
     mega-hosts cost one row each downstream."""
-    host = F.regexp_extract(F.col(url_col), "^https?://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), "^https?://([^/]+)", 1)
     sent = pages.select(
         host.alias("host"),
-        F.col(url_col).alias("u"),
-        F.explode(F.split(F.col(text_col), "\\. ")).alias("s"),
+        F.col("url").alias("u"),
+        F.explode(F.split(F.col("text"), "\\. ")).alias("s"),
     ).filter(F.col("s") != "")
     per = sent.groupBy("host", F.xxhash64("s").alias("sh")).agg(
         F.count_distinct("u").alias("n_pages_with"),
         F.count("*").alias("n_occ"),
     )
     hp = pages.groupBy(host.alias("host")).agg(
-        F.count_distinct(F.col(url_col)).alias("n_pages")
+        F.count_distinct(F.col("url")).alias("n_pages")
     )
     flagged = per.join(F.broadcast(hp), "host").withColumn(
         "is_template",
-        (F.col("n_pages") >= min_pages)
-        & (
-            F.expr("n_pages_with * 1000000 div n_pages")
-            >= F.lit(min_share_ppm)
-        ),
+        (F.col("n_pages") >= 2)
+        & (F.expr("n_pages_with * 1000000 div n_pages") >= F.lit(500_000)),
     )
     return (
         flagged.groupBy("host")
@@ -509,11 +467,7 @@ def host_templates(
     )
 
 
-def wet_export(
-    recs: DataFrame,
-    blob_col: str = "blob_id",
-    idx_col: str = "rec_idx",
-) -> DataFrame:
+def wet_export(recs: DataFrame) -> DataFrame:
     """WET-style chunk serialization — the inverse of ``warc_split``: each
     record re-framed as ``WARC/1.0\\nWARC-Target-URI: <uri>\\n
     Content-Length: <n>\\n\\n<body>\\n\\n`` and concatenated per chunk in
@@ -536,7 +490,7 @@ def wet_export(
         F.transform(
             F.array_sort(
                 F.collect_list(
-                    F.struct(F.col(idx_col).alias("i"), frame.alias("rec"))
+                    F.struct(F.col("rec_idx").alias("i"), frame.alias("rec"))
                 )
             ),
             lambda s: s["rec"],
@@ -544,7 +498,7 @@ def wet_export(
         "",
     )
     return (
-        recs.groupBy(F.col(blob_col).alias("blob_id"))
+        recs.groupBy("blob_id")
         .agg(
             F.count("*").cast("long").alias("n_records"),
             payload.alias("_payload"),
@@ -558,7 +512,7 @@ def wet_export(
     )
 
 
-def url_templates(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_templates(pages: DataFrame) -> DataFrame:
     """URL path-template mining: strip scheme/host/query/fragment, split
     the path into segments, replace purely-numeric segments with ``{n}``,
     and count pages + distinct URLs per (host, template) — the sitemap-
@@ -570,9 +524,9 @@ def url_templates(pages: DataFrame, url_col: str = "url") -> DataFrame:
     java.util.regex and RE2/DuckDB agree. Map-side projection + one
     (host, template)-keyed aggregate; output is bounded by the site's
     template vocabulary, not its URL count."""
-    host = F.regexp_extract(F.col(url_col), "^https?://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), "^https?://([^/]+)", 1)
     path = F.regexp_replace(
-        F.regexp_extract(F.col(url_col), "^https?://[^/]+(/[^?#]*)", 1),
+        F.regexp_extract(F.col("url"), "^https?://[^/]+(/[^?#]*)", 1),
         "/+$", "",
     )
     template = F.array_join(
@@ -585,14 +539,14 @@ def url_templates(pages: DataFrame, url_col: str = "url") -> DataFrame:
     return pages.select(
         host.alias("host"),
         template.alias("template"),
-        F.col(url_col).alias("u"),
+        F.col("url").alias("u"),
     ).groupBy("host", "template").agg(
         F.count("*").cast("long").alias("n_pages"),
         F.count_distinct("u").cast("long").alias("n_urls"),
     )
 
 
-def robots_parse(robots: DataFrame, payload_col: str = "payload") -> DataFrame:
+def robots_parse(robots: DataFrame) -> DataFrame:
     """robots.txt parsing into the (host, agent, rule_type, value) rules
     dim that ``robots_filter`` applies — the parse side of the crawl-
     politeness pair. Implements the core of RFC 9309 grouping: lines
@@ -611,7 +565,7 @@ def robots_parse(robots: DataFrame, payload_col: str = "payload") -> DataFrame:
     corpus-sized."""
     lines = robots.select(
         "host",
-        F.posexplode(F.split(F.col(payload_col), "\n")).alias("line_no", "ln"),
+        F.posexplode(F.split(F.col("payload"), "\n")).alias("line_no", "ln"),
     ).select(
         "host", "line_no",
         F.trim(F.regexp_replace("ln", "#.*$", "")).alias("ln"),

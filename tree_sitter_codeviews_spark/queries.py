@@ -155,7 +155,7 @@ def geo_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import knn
 
     pts = pages_src.doc_points_df(spark, sf_dir)
-    return knn.distance_join(pts, eps=2.0, res=5)
+    return knn.distance_join(pts, eps=2.0)
 
 def geo_tiles_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-tile EXACT distinct-host counts at res 7 (the per-tile
@@ -206,7 +206,7 @@ def geo_raster_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cell_id")
         .agg(F.count("*").alias("n_docs"))
     )
-    return tiles.compact_tiles(finest, res=layers.GRID_RES, min_res=0)
+    return tiles.compact_tiles(finest, res=layers.GRID_RES)
 
 
 def geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,7 +219,7 @@ def geo_tile_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the res-7 doc-count raster — the convolution runs on the SMALL
     raster (9x narrow explode + one groupBy), never on the point table."""
     pts = pages_src.doc_points_df(spark, sf_dir)
-    return tiles.tile_smooth(pts, res=7, grid_res=layers.GRID_RES)
+    return tiles.tile_smooth(pts, grid_res=layers.GRID_RES)
 
 
 def events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,7 +240,7 @@ def geo_overlay_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     area. Touches no data table at all — pure grid x layer work."""
     from .operators import raster
 
-    return raster.overlay_stats(spark, res=7)
+    return raster.overlay_stats(spark)
 
 def geo_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(url, text_out) — the byte-identical extraction invariant, checked
@@ -538,7 +538,7 @@ def doc_groups(docs: DataFrame) -> DataFrame:
     the exact 3-gram Jaccard >= 0.5 pair graph."""
     from .operators import dedup
 
-    pairs = dedup.jaccard_pairs_exact(docs, n=3, threshold=0.5)
+    pairs = dedup.jaccard_pairs_exact(docs, threshold=0.5)
     return component_groups(docs, pairs, "doc_id")
 
 
@@ -547,7 +547,7 @@ def emb_groups(embs: DataFrame) -> DataFrame:
     multi-probe hyperplane-LSH cosine >= 0.4 pair graph."""
     from .operators import dedup
 
-    return component_groups(embs, dedup.embedding_lsh_dups(embs, threshold=0.4), "vec_id")
+    return component_groups(embs, dedup.embedding_lsh_dups(embs), "vec_id")
 
 
 def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,7 +567,7 @@ def dedup_groups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup
 
     docs = _docs(spark, sf_dir)
-    pairs = dedup.minhash_lsh_dups(docs, n=3, threshold=0.5, max_df=200)
+    pairs = dedup.minhash_lsh_dups(docs, threshold=0.5, max_df=200)
     return component_groups(docs, pairs, "doc_id")
 
 
@@ -621,7 +621,6 @@ def geo_cascade_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("prefix", dim_prefix, cond2, "prefix_id"),
         ],
         out_col="resolved_id",
-        via_col="via",
         default=F.lit(-1).cast("bigint"),
     )
     return out.select("url", "entity_id", "surface",
@@ -688,7 +687,6 @@ def geo_template_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
              kinds["template_id"]),
         ],
         out_col="template_id",
-        via_col="via",
     )
     return out.select("url", "entity_id", "surface",
                       F.col("template_id").cast("long").alias("template_id"), "via")
@@ -745,7 +743,6 @@ def graph_catch_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             dim["catch"]["catch_prio"],
         )],
         out_col="catch",
-        via_col="via",
         default=F.struct(
             F.lit(-1).cast("long").alias("catch_prio"),
             F.lit(-1).cast("long").alias("catch_class"),
@@ -810,7 +807,7 @@ def train_set_from(docs: DataFrame, groups: DataFrame) -> DataFrame:
     # measured 9.7 s vs ~6 s at sf0.1. Same discipline as pack_sequences'
     # own internal checkpoint.
     clean = surv.join(keep, "doc_id").localCheckpoint()
-    packed = curation.pack_sequences(clean, budget=512)
+    packed = curation.pack_sequences(clean)
     scrub = curation.pii_scrub(clean)
     return packed.join(scrub.select("doc_id", "clean_hash"), "doc_id")
 
@@ -904,7 +901,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup
 
-    return dedup.jaccard_pairs_exact(_docs(spark, sf_dir), n=3, threshold=0.5)
+    return dedup.jaccard_pairs_exact(_docs(spark, sf_dir), threshold=0.5)
 
 
 def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,7 +920,7 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup
 
-    return dedup.minhash_lsh_dups(_docs(spark, sf_dir), n=3, threshold=0.5)
+    return dedup.minhash_lsh_dups(_docs(spark, sf_dir), threshold=0.5)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,7 +932,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     an engine-only hasher would have no oracle to check it against."""
     from .operators import dedup
 
-    return dedup.simhash_near_dups(_docs(spark, sf_dir), max_hamming=3)
+    return dedup.simhash_near_dups(_docs(spark, sf_dir))
 
 
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -958,7 +955,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic on both engines."""
     from .operators import dedup
 
-    return dedup.embedding_lsh_dups(_embs(spark, sf_dir), threshold=0.4)
+    return dedup.embedding_lsh_dups(_embs(spark, sf_dir))
 
 
 def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -993,7 +990,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-probabilistic hyperplane LSH row above)."""
     from .operators import ann
 
-    return ann.ivf_topk(_embs(spark, sf_dir), k=10, every=50)
+    return ann.ivf_topk(_embs(spark, sf_dir))
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1013,7 +1010,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit (see operators/ann.ivfpq_topk)."""
     from .operators import ann
 
-    return ann.ivfpq_topk(_embs(spark, sf_dir), k=10, every=50)
+    return ann.ivfpq_topk(_embs(spark, sf_dir))
 
 
 def ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,7 +1021,7 @@ def ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-mirrored bit-for-bit (see operators/ann.ivfpq_residual_topk)."""
     from .operators import ann
 
-    return ann.ivfpq_residual_topk(_embs(spark, sf_dir), k=10, every=50)
+    return ann.ivfpq_residual_topk(_embs(spark, sf_dir))
 
 def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import textstats
@@ -1074,7 +1071,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase prefix sum (no unpartitioned window anywhere)."""
     from .operators import curation
 
-    return curation.pack_sequences(_docs(spark, sf_dir), budget=512)
+    return curation.pack_sequences(_docs(spark, sf_dir))
 
 
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,7 +1101,7 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassemble and hash the cleaned text."""
     from .operators import curation
 
-    return curation.strip_boilerplate(_docs(spark, sf_dir), seg_len=8, max_docs=2)
+    return curation.strip_boilerplate(_docs(spark, sf_dir), max_docs=2)
 
 
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1386,22 +1383,10 @@ def web_ingest_stages(
     from .operators import curation, webtext
 
     docs = _docs(spark, sf_dir)
-    pages = _html_pages(docs).join(_crawl_pages(docs), "doc_id")
-    rec = F.format_string(
-        "WARC/1.0\nWARC-Target-URI: %s\nContent-Length: %d\n\n%s\n\n",
-        F.col("url"), F.length("html"), F.col("html"),
-    )
-    blobs = _blob_payloads(pages, rec)
+    blobs = crawl_blobs(_html_pages(docs).join(_crawl_pages(docs), "doc_id"))
     # ---- the engine pipeline proper: sees only (blob_id, payload) ------
     recs = webtext.warc_split(blobs)
-    ext = webtext.html_extract(
-        recs.select(
-            (F.col("blob_id") * 8 + F.col("rec_idx")).alias("doc_id"),
-            "uri",
-            F.col("body").alias("html"),
-        ),
-        keep=("uri",),
-    )
+    ext = crawl_extract(recs)
     rep = curation.repetition_stats(
         ext.select("doc_id", F.col("body").alias("text"))
     )
@@ -1476,9 +1461,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     index + stop-shingle-prunable shape as dedup_jaccard."""
     from .operators import dedup
 
-    return dedup.containment_pairs_exact(
-        _docs(spark, sf_dir), n=3, threshold_ppm=500_000
-    )
+    return dedup.containment_pairs_exact(_docs(spark, sf_dir), threshold_ppm=500_000)
 
 
 def _host_edges(docs: DataFrame):
@@ -1612,7 +1595,7 @@ def text_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, one doc rollup."""
     from .operators import dedup
 
-    return dedup.dup_ngram_stats(_docs(spark, sf_dir), n=3)
+    return dedup.dup_ngram_stats(_docs(spark, sf_dir))
 
 
 def webtext_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1657,7 +1640,7 @@ def webtext_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number window with (score desc, token asc) tie-break."""
     from .operators import ir
 
-    return ir.tfidf_topk(_docs(spark, sf_dir), k=3)
+    return ir.tfidf_topk(_docs(spark, sf_dir))
 
 
 def webtext_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,7 +1664,7 @@ def webtext_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
             hostnum % 2 == 0, F.lit(600) + (hostnum % 4) * 200
         ).alias("delay_ms"),
     )
-    return webtext.crawl_schedule(frontier, budget=5, base_delay_ms=1000)
+    return webtext.crawl_schedule(frontier, budget=5)
 
 
 def webtext_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1734,7 +1717,7 @@ def webtext_host_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
             hostnum, F.col("text"),
         ).alias("text"),
     )
-    return webtext.host_templates(pages, min_share_ppm=500_000, min_pages=2)
+    return webtext.host_templates(pages)
 
 
 def webtext_geo_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1794,6 +1777,33 @@ def text_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(text, F.lit(" "), F.expr("repeat('z', 1500)")),
     ).otherwise(text)
     return curation.gopher_filter(docs.select("doc_id", text.alias("text")))
+
+
+def crawl_blobs(pages: DataFrame) -> DataFrame:
+    """(blob_id, payload): the (doc_id, url, html) ``pages`` framed as
+    WARC/1.0 records and chunked by ``_blob_payloads`` — the fetched-chunk
+    stand-in of ``web_ingest`` and ``jobs/run_crawl.py``."""
+    rec = F.format_string(
+        "WARC/1.0\nWARC-Target-URI: %s\nContent-Length: %d\n\n%s\n\n",
+        F.col("url"), F.length("html"), F.col("html"),
+    )
+    return _blob_payloads(pages, rec)
+
+
+def crawl_extract(recs: DataFrame) -> DataFrame:
+    """``html_extract`` over ``warc_split`` records, keyed doc_id =
+    blob_id * 8 + rec_idx (a chunk holds at most five records) and
+    keeping each record's uri."""
+    from .operators import webtext
+
+    return webtext.html_extract(
+        recs.select(
+            (F.col("blob_id") * 8 + F.col("rec_idx")).alias("doc_id"),
+            "uri",
+            F.col("body").alias("html"),
+        ),
+        keep=("uri",),
+    )
 
 
 def _blob_payloads(rows: DataFrame, rec: Column) -> DataFrame:
@@ -2195,7 +2205,7 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     two iterations (assignment / truncated-div centroid update) in SQL."""
     from .operators import cluster
 
-    return cluster.kmeans_assign(_embs(spark, sf_dir), k=8, iters=2)
+    return cluster.kmeans_assign(_embs(spark, sf_dir))
 
 
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2205,7 +2215,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same exact quantized cosine as dedup_embedding."""
     from .operators import cluster
 
-    return cluster.semantic_dups(_embs(spark, sf_dir), k=8, iters=2, threshold=0.4)
+    return cluster.semantic_dups(_embs(spark, sf_dir))
 
 
 def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2216,7 +2226,7 @@ def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINT on both engines."""
     from .operators import curation
 
-    return curation.dsir_weights(_docs(spark, sf_dir), target_lang="en")
+    return curation.dsir_weights(_docs(spark, sf_dir))
 
 
 def geo_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2259,7 +2269,7 @@ def geo_rect_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b_id long, bx0 long, by0 long, bx1 long, by1 long",
     )
     return (
-        overlay.rect_overlay(parcels, zones, shift=6)
+        overlay.rect_overlay(parcels, zones)
         .select(
             F.col("a_id").alias("doc_id"), F.col("b_id").alias("zone_id"),
             "ix0", "iy0", "ix1", "iy1", "area",
@@ -2447,7 +2457,7 @@ def text_dup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including the reassembled strings) against the oracle."""
     from .operators import dedup
 
-    return dedup.dup_span_scrub(_docs(spark, sf_dir), n=3)
+    return dedup.dup_span_scrub(_docs(spark, sf_dir))
 
 
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2459,7 +2469,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the fixture: 297 of 2,161 chunks duplicated at sf0.001."""
     from .operators import dedup
 
-    return dedup.cdc_chunk_stats(_docs(spark, sf_dir), w=3, mod=16)
+    return dedup.cdc_chunk_stats(_docs(spark, sf_dir), mod=16)
 
 
 def text_countmin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2473,9 +2483,7 @@ def text_countmin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision-free width are pytest-pinned."""
     from .operators import dedup
 
-    return dedup.countmin_calibration(
-        _docs(spark, sf_dir), n=3, w=1024, d=3, top=100
-    )
+    return dedup.countmin_calibration(_docs(spark, sf_dir), w=1024, d=3, top=100)
 
 
 def webtext_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2486,9 +2494,7 @@ def webtext_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic; pair space dim-bounded on the host graph."""
     from .operators import linkgraph
 
-    return linkgraph.cocitation(
-        _host_edges(_docs(spark, sf_dir)), min_common=2
-    )
+    return linkgraph.cocitation(_host_edges(_docs(spark, sf_dir)))
 
 
 def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2509,7 +2515,7 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl-health dedup-monitoring curve."""
     from .operators import dedup
 
-    return dedup.novelty_stats(_docs(spark, sf_dir), n=3)
+    return dedup.novelty_stats(_docs(spark, sf_dir))
 
 
 def text_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2722,7 +2728,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     hasher so the oracle mirrors it; production stays on xxhash64)."""
     from .operators import dedup
 
-    return dedup.minhash_md5_calibration(_docs(spark, sf_dir), n=3, threshold_ppm=300_000)
+    return dedup.minhash_md5_calibration(_docs(spark, sf_dir))
 
 
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2808,9 +2814,7 @@ def geo_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     lines = _transit_lines(spark)
-    return segments.segment_crossing_join(
-        seg, lines, id_cols=["user_id", "seg_id"], shift=6
-    )
+    return segments.segment_crossing_join(seg, lines, id_cols=["user_id", "seg_id"])
 
 
 def geo_tile_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2822,9 +2826,7 @@ def geo_tile_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     smart-algorithm-vs-brute-force correctness pairing."""
     from .operators import segments
 
-    return segments.tile_diameter(
-        pages_src.doc_points_df(spark, sf_dir).select("gx", "gy"), shift=5
-    )
+    return segments.tile_diameter(pages_src.doc_points_df(spark, sf_dir).select("gx", "gy"))
 
 
 def geo_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2890,9 +2892,7 @@ def geo_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lines = _transit_lines(spark)
     raster = segments.rasterize_segments(lines)
-    return segments.snap_to_lines(
-        ev, raster, id_cols=["user_id", "event_id"], radius=16
-    )
+    return segments.snap_to_lines(ev, raster, id_cols=["user_id", "event_id"])
 
 
 # one synchronous Visvalingam pass: a ping survives if it is a trajectory
@@ -4088,9 +4088,7 @@ def geo_tile_closest_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's quadratic self-join."""
     from .operators import segments
 
-    return segments.tile_closest_pair(
-        pages_src.doc_points_df(spark, sf_dir).select("gx", "gy"), shift=5
-    )
+    return segments.tile_closest_pair(pages_src.doc_points_df(spark, sf_dir).select("gx", "gy"))
 
 
 def events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

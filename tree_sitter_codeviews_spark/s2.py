@@ -129,8 +129,8 @@ def with_hilbert_col(
     )
 
 
-def hilbert_at_level_col(h_finest: Column, level: int, finest: int = S2_RES) -> Column:
-    return F.shiftright(h_finest, 2 * (finest - level))
+def hilbert_at_level_col(h_finest: Column, level: int) -> Column:
+    return F.shiftright(h_finest, 2 * (S2_RES - level))
 
 
 def hilbert_coarse_col(x: Column, y: Column, res: int) -> Column:
@@ -175,21 +175,20 @@ def upscale_grid_col(g: Column, from_res: int, to_res: int) -> Column:
 
 def zorder_repartition(
     df: DataFrame,
-    gx_col: str = "gx",
-    gy_col: str = "gy",
     grid_res: int = 10,
     num_partitions: int | None = None,
     keep_key: bool = False,
 ) -> DataFrame:
-    """Hilbert (z-order) range repartitioning of a points/pages table.
+    """Hilbert (z-order) range repartitioning of a points/pages table by
+    its (gx, gy) grid coordinates at ``grid_res``.
 
     The north rule's layout step: after this, each partition covers a
     contiguous stretch of the Hilbert curve — a compact spatial tile.
     The key is computed by the branchless JVM transform (no Python).
     """
     keyed = df.withColumns({
-        "_zx": upscale_grid_col(F.col(gx_col), grid_res, S2_RES),
-        "_zy": upscale_grid_col(F.col(gy_col), grid_res, S2_RES),
+        "_zx": upscale_grid_col(F.col("gx"), grid_res, S2_RES),
+        "_zy": upscale_grid_col(F.col("gy"), grid_res, S2_RES),
     })
     keyed = with_hilbert_col(keyed, "_zx", "_zy", S2_RES, out="_hilbert").drop("_zx", "_zy")
     out = (
@@ -210,13 +209,12 @@ def hilbert_cte_chain_sql(
     x_expr: str,
     y_expr: str,
     res: int,
-    out_cte: str = "hfin",
 ) -> str:
     """CTE chain computing the same Hilbert index as ``with_hilbert_col``,
     by the iterative transform (the tests' ``hilbert_np``).
 
     ``src_cte`` must expose ``key_cols`` plus expressions ``x_expr``/``y_expr``
-    (grid coords at ``res``). The final CTE ``out_cte`` has (key_cols, d).
+    (grid coords at ``res``). The final CTE ``hfin`` has (key_cols, d).
     One CTE per level keeps every expression bounded (no exponential
     expression-tree blowup — the reason the Spark side uses the numpy UDF).
     """
@@ -236,7 +234,7 @@ def hilbert_cte_chain_sql(
         yf = f"(CASE WHEN {flip} THEN {n - 1} - y ELSE y END)"
         newx = f"(CASE WHEN {ry} = 0 THEN {yf} ELSE x END)"
         newy = f"(CASE WHEN {ry} = 0 THEN {xf} ELSE y END)"
-        name = f"h{i}" if i > 0 else out_cte
+        name = f"h{i}" if i > 0 else "hfin"
         parts.append(
             f"{name} AS (SELECT {key_cols}, {newx} AS x, {newy} AS y, "
             f"d + {term} AS d FROM {prev})"

@@ -17,23 +17,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def graph_to_dot(
-    nodes: DataFrame,
-    edges: DataFrame,
-    graph_col: str = "graph_id",
-    label_col: str = "label",
-) -> DataFrame:
+def graph_to_dot(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(graph_id, dot): a Graphviz digraph per graph, deterministic member
     order (sort_array), built entirely from native string aggregation."""
-    node_lines = nodes.groupBy(graph_col).agg(
+    node_lines = nodes.groupBy("graph_id").agg(
         F.array_join(
             F.sort_array(F.collect_list(
-                F.format_string('  n%s [label="%s"];', F.col("node_id"), F.col(label_col))
+                F.format_string('  n%s [label="%s"];', F.col("node_id"), F.col("label"))
             )),
             "\n",
         ).alias("_nodes")
     )
-    edge_lines = edges.groupBy(graph_col).agg(
+    edge_lines = edges.groupBy("graph_id").agg(
         F.array_join(
             F.sort_array(F.collect_list(
                 F.format_string('  n%s -> n%s [label="%s"];',
@@ -42,29 +37,25 @@ def graph_to_dot(
             "\n",
         ).alias("_edges")
     )
-    return node_lines.join(edge_lines, graph_col, "left").select(
-        graph_col,
+    return node_lines.join(edge_lines, "graph_id", "left").select(
+        "graph_id",
         F.concat(
-            F.format_string("digraph g%s {\n", F.col(graph_col)),
+            F.format_string("digraph g%s {\n", F.col("graph_id")),
             F.col("_nodes"), F.lit("\n"),
             F.coalesce(F.col("_edges"), F.lit("")), F.lit("\n}"),
         ).alias("dot"),
     )
 
 
-def graph_to_json(
-    nodes: DataFrame,
-    edges: DataFrame,
-    graph_col: str = "graph_id",
-) -> DataFrame:
+def graph_to_json(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(graph_id, json): the reference's node/edge-list JSON per graph."""
-    nl = nodes.groupBy(graph_col).agg(
+    nl = nodes.groupBy("graph_id").agg(
         F.sort_array(F.collect_list(F.struct("node_id", "label"))).alias("nodes")
     )
-    el = edges.groupBy(graph_col).agg(
+    el = edges.groupBy("graph_id").agg(
         F.sort_array(F.collect_list(F.struct("src", "dst", "edge_type"))).alias("links")
     )
-    return nl.join(el, graph_col, "left").select(
-        graph_col,
+    return nl.join(el, "graph_id", "left").select(
+        "graph_id",
         F.to_json(F.struct("nodes", "links")).alias("json"),
     )

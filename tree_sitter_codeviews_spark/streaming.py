@@ -53,12 +53,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling event-time windows with late-data watermark:
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time windows with a 2-hour late-data watermark:
     (window_start, event_type, n_events, sum_value_micro).
 
     The value sum is quantized to integer micro-units BEFORE aggregating
@@ -67,8 +63,8 @@ def windowed_event_counts(
     the 6th decimal on large per-group double sums, which would make the
     gate row flaky at larger scale factors. Integer sums are order-exact."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.round(F.col("value") * 1e6).cast("bigint")).alias(
@@ -147,9 +143,9 @@ def stream_dedup_hashes(docs: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_stream(events: DataFrame, gap_s: int = 1800) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Custom stateful streaming operator (``applyInPandasWithState``):
-    per-user session count with a >gap_s inactivity boundary. State per
+    per-user session count with a >``gap_s`` (1800 s) inactivity boundary. State per
     user = (last event ts, sessions so far) — O(1) per key. Emits one
     (user_id, n_sessions, n_events) row per user per micro-batch (update
     mode); on a single bounded batch the emission equals the batch
@@ -168,6 +164,7 @@ def sessionize_stream(events: DataFrame, gap_s: int = 1800) -> DataFrame:
         T.StructField("n_sessions", T.LongType()),
         T.StructField("n_events", T.LongType()),
     ])
+    gap_s = 1800
 
     def fn(key, pdf_iter, state: GroupState):
         import numpy as np
